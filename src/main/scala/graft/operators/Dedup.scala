@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{HashFunctions => H, TextFunctions => T}
 
@@ -438,102 +442,249 @@ object Dedup {
     * under-delete transitive duplicates (a~b, b~c must drop TWO of
     * {a,b,c}, not one per pair).
     *
-    * Algorithm: alternating large-star / small-star contraction (the
-    * MapReduce connected-components construction of Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * each round rewires every edge toward its neighborhood minimum,
-    * so components contract to min-rooted stars in O(log²) rounds
-    * REGARDLESS of diameter. One-hop min-label propagation (the
-    * obvious formulation, and what this method used first) needs
-    * O(diameter) rounds: fine for dense bucket cliques, fatal for the
-    * long near-dup CHAINS a crawl corpus actually contains — the 10×
-    * scale-stress harness found exactly that (a >20-hop component at
-    * 10× sf0.1). Per round only (id, id) edges shuffle — no per-node
-    * neighbor lists are ever collected, so a giant star (one doc
-    * near-dup'd a million times) is agg/join skew that AQE splits,
-    * never an executor OOM. `maxIter` bounds the rounds and the
-    * method fails loudly rather than return a half-merged labeling
-    * (2^20-diameter graphs do not occur). Every round's edge frame is
-    * `localCheckpoint`ed — iterative self-joins otherwise stack an
-    * exponentially growing lineage that kills the planner long before
-    * the data hurts.
+    * Algorithm: distributed contraction while the live edge set is
+    * big, then a driver-side finish once it fits (the sketch-then-
+    * finish-locally shape of "Approximation Algorithms for Large Scale
+    * Data Analysis", PODS'21).
+    *
+    *  - Distributed rounds: alternating large-star / small-star
+    *    contraction (the MapReduce connected-components construction
+    *    of Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC 2014) — each round rewires every edge toward its
+    *    neighborhood minimum, so components contract to min-rooted
+    *    stars in O(log²) rounds REGARDLESS of diameter. One-hop
+    *    min-label propagation (what this method used first) needs
+    *    O(diameter) rounds: fatal for the long near-dup CHAINS a crawl
+    *    corpus actually contains (the 10× scale-stress harness found a
+    *    >20-hop component at 10× sf0.1). Per round only (id, id) edges
+    *    shuffle — no per-node neighbor lists are ever collected, so a
+    *    giant star is agg/join skew that AQE splits, never an executor
+    *    OOM. Every round's edge frame is `localCheckpoint`ed — iterative
+    *    self-joins otherwise stack an exponentially growing lineage.
+    *  - Hand-off: the job that materializes the canonical edge set, and
+    *    each round's edge set, also counts its rows (a pass-through
+    *    accumulator, no extra job). Once that count is at most the
+    *    driver bound, the rounds stop: the edges are collected once and
+    *    a min-label union-find labels every node. The labels and the
+    *    output schema are the distributed path's — the component
+    *    minimum is the root either way — and the result is a local
+    *    frame plus the same singleton anti-join, so no further job
+    *    runs. Small graphs (every bench and test corpus) skip the
+    *    rounds entirely; a graph over the bound keeps contracting
+    *    until its residue fits.
+    *  - The bound is derived from the driver heap
+    *    (`Runtime.maxMemory` / 4096, ~5·10^5 edges at 2 GiB; see
+    *    [[driverEdgeBound]]). No setting tunes it.
+    *  - Driver labels compare with the id type's own Spark ordering:
+    *    integral ids numerically, default-collation strings in UTF-8
+    *    binary order (NOT `String.compareTo`: Spark orders U+FFFD
+    *    before U+1F600, UTF-16 code units the other way). Any other id
+    *    type (binary, decimal, collated strings, ...) stays on the
+    *    distributed path to convergence.
+    *
+    * `maxIter` bounds the distributed rounds, and the method fails
+    * loudly rather than return a half-merged labeling (2^20-diameter
+    * graphs do not occur). Every eager job carries a Spark job
+    * description naming its step (edge set, round i stats / edges,
+    * driver finish); the caller's description is restored on return.
+    * Output columns `id` and `cluster_id` are always nullable.
     */
   def duplicateClusters(nodes: DataFrame, idCol: String,
-      pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+      pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    duplicateClustersBounded(nodes, idCol, pairs, maxIter,
+      driverEdgeBound)
+
+  /** Largest live edge set [[duplicateClusters]] finishes on the
+    * driver. A collected edge costs ~0.5 KiB of driver heap with
+    * integral ids: its decoded row and two boxed ids (~80 B), the
+    * union-find's map entry, key and parent slot for up to two new
+    * nodes (~200 B), and one output row per node in both the Row and
+    * the local relation form (~250 B). Budgeting 1 KiB per edge leaves
+    * room for string ids of ~100 bytes; a quarter of the heap for the
+    * whole finish gives maxMemory / 4096 — 524,288 edges at 2 GiB.
+    */
+  private def driverEdgeBound: Long =
+    Runtime.getRuntime.maxMemory / 4096L
+
+  /** [[duplicateClusters]] with an explicit driver bound. Tests only:
+    * `driverBound` = 0 runs every round distributed. */
+  private[graft] def duplicateClustersBounded(nodes: DataFrame,
+      idCol: String, pairs: DataFrame, maxIter: Int,
+      driverBound: Long): DataFrame = {
     val sc = nodes.sparkSession.sparkContext
-    // canonical undirected edge set (a < b), self-loops dropped
-    var e = pairs
-      .select(least(col("id_a"), col("id_b")).as("a"),
-        greatest(col("id_a"), col("id_b")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val b = e.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      // per-node neighborhood min + the fixpoint test, in ONE agg:
-      // the graph is a min-rooted star forest (= converged) iff no
-      // node has both a smaller and a larger neighbor (large-star is
-      // then the identity) and no node has two smaller neighbors
-      // (small-star is then the identity).
-      val statsPlan = b.groupBy("u").agg(
-        min("v").as("__mn"),
-        ((min(col("v")) < col("u") && max(col("v")) > col("u")) ||
-          count(when(col("v") < col("u"), 1)) >= 2).as("__bad"))
-      // convergence comes out of the SAME job that materializes the
-      // stats: an accumulator fed by a pass-through map stage inside
-      // the checkpointed plan. Task retries can only inflate a
-      // NONZERO count (a retried stable partition re-adds 0), so
-      // `== 0` stays exact. (The r19 optimization round tried fusing
-      // this job into the edge-production job — one job per round —
-      // and measured it SLOWER: the materialized stats frame gives
-      // the rewiring join a size-known build side AQE broadcasts,
-      // where the fused plan recomputes the stats subtree inside a
-      // size-unknown join. Two small materialized jobs beat one deep
-      // one here; kept.)
-      val unstable = sc.longAccumulator(s"graft_cc_unstable_$iter")
-      val stats = statsPlan.mapPartitions { it =>
-        it.map { r => if (r.getBoolean(2)) unstable.add(1L); r }
-      }(org.apache.spark.sql.Encoders.row(statsPlan.schema))
+    val descKey = "spark.job.description"
+    val callerDesc = sc.getLocalProperty(descKey)
+    def step(what: String): Unit =
+      sc.setJobDescription(s"Dedup.duplicateClusters: $what")
+    // materialize `df` AND count its rows matching `hit` in the same
+    // job: a pass-through map feeding an accumulator inside the
+    // checkpointed plan. A task retry can only inflate a count.
+    def checkpointCounted(df: DataFrame, name: String,
+        hit: Row => Boolean): (DataFrame, Long) = {
+      val n = sc.longAccumulator(name)
+      val out = df.mapPartitions { it =>
+        it.map { r => if (hit(r)) n.add(1L); r }
+      }(Encoders.row(df.schema))
         .localCheckpoint() // eager: fires the job, fills the counter
-      if (unstable.value == 0L) converged = true
-      else {
-        // large-star: every edge to a LARGER neighbor of u rewires to
-        // u's neighborhood min m ≤ u < v (canonical order free).
-        val ls = b.join(stats, Seq("u"))
-          .filter(col("v") > col("u"))
-          .select(least(col("__mn"), col("u")).as("a"),
-            col("v").as("b"))
-        // small-star on the large-star output: every SMALLER neighbor
-        // of u (and u itself) rewires to the min of that set.
-        val b2 = ls.select(col("a").as("u"), col("b").as("v"))
-          .unionByName(ls.select(col("b").as("u"), col("a").as("v")))
-        val mins = b2.groupBy("u").agg(min("v").as("__mn"))
-        val ss = b2.join(mins, Seq("u"))
-          .filter(col("v") < col("u") && col("v") =!= col("__mn"))
-          .select(col("__mn").as("a"), col("v").as("b"))
-          .unionByName(mins.filter(col("__mn") < col("u"))
-            .select(col("__mn").as("a"), col("u").as("b")))
-        e = ss.distinct().localCheckpoint()
-      }
-      iter += 1
+      (out, n.value)
     }
-    require(converged,
-      s"duplicateClusters did not converge in $maxIter rounds - " +
-      "graph is adversarially deep for large-star/small-star; " +
-      "raise maxIter")
-    // converged edge set IS the answer: stars (root=component min,
-    // leaf) in canonical (a=root, b=leaf) order
-    val labels = e.select(col("b").as("id"), col("a").as("cluster_id"))
-      .unionByName(
-        e.select(col("a").as("id"), col("a").as("cluster_id")))
-      .distinct()
-    val singletons = nodes.select(col(idCol).as("id"))
-      .join(labels.select("id"), Seq("id"), "left_anti")
-      .withColumn("cluster_id", col("id"))
-    labels.unionByName(singletons)
+    try {
+      // canonical undirected edge set (a < b), self-loops dropped
+      step("edge set")
+      var (e, live) = checkpointCounted(pairs
+        .select(least(col("id_a"), col("id_b")).as("a"),
+          greatest(col("id_a"), col("id_b")).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct(), "graft_cc_edges", _ => true)
+      val idType = e.schema("a").dataType
+      val wire = driverKey(idType).filter(_ => driverBound > 0)
+      def fits = wire.isDefined && live <= driverBound
+      var iter = 0
+      var converged = false
+      while (!converged && !fits && iter < maxIter) {
+        val b = e.select(col("a").as("u"), col("b").as("v"))
+          .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+        // per-node neighborhood min + the fixpoint test, in ONE agg:
+        // the graph is a min-rooted star forest (= converged) iff no
+        // node has both a smaller and a larger neighbor (large-star is
+        // then the identity) and no node has two smaller neighbors
+        // (small-star is then the identity).
+        val statsPlan = b.groupBy("u").agg(
+          min("v").as("__mn"),
+          ((min(col("v")) < col("u") && max(col("v")) > col("u")) ||
+            count(when(col("v") < col("u"), 1)) >= 2).as("__bad"))
+        // convergence comes out of the SAME job that materializes the
+        // stats. Task retries can only inflate a NONZERO count (a
+        // retried stable partition re-adds 0), so `== 0` stays exact.
+        // (The r19 optimization round tried fusing this job into the
+        // edge-production job — one job per round — and measured it
+        // SLOWER: the materialized stats frame gives
+        // the rewiring join a size-known build side AQE broadcasts,
+        // where the fused plan recomputes the stats subtree inside a
+        // size-unknown join. Two small materialized jobs beat one deep
+        // one here; kept.)
+        step(s"round $iter stats")
+        val (stats, unstable) = checkpointCounted(statsPlan,
+          s"graft_cc_unstable_$iter", _.getBoolean(2))
+        if (unstable == 0L) converged = true
+        else {
+          // large-star: every edge to a LARGER neighbor of u rewires to
+          // u's neighborhood min m ≤ u < v (canonical order free).
+          val ls = b.join(stats, Seq("u"))
+            .filter(col("v") > col("u"))
+            .select(least(col("__mn"), col("u")).as("a"),
+              col("v").as("b"))
+          // small-star on the large-star output: every SMALLER
+          // neighbor of u (and u itself) rewires to the min of that set.
+          val b2 = ls.select(col("a").as("u"), col("b").as("v"))
+            .unionByName(ls.select(col("b").as("u"), col("a").as("v")))
+          val mins = b2.groupBy("u").agg(min("v").as("__mn"))
+          val ss = b2.join(mins, Seq("u"))
+            .filter(col("v") < col("u") && col("v") =!= col("__mn"))
+            .select(col("__mn").as("a"), col("v").as("b"))
+            .unionByName(mins.filter(col("__mn") < col("u"))
+              .select(col("__mn").as("a"), col("u").as("b")))
+          step(s"round $iter edges")
+          val (next, n) = checkpointCounted(ss.distinct(),
+            s"graft_cc_edges_$iter", _ => true)
+          e = next
+          live = n
+        }
+        iter += 1
+      }
+      val labels =
+        if (converged) {
+          // converged edge set IS the answer: stars (root=component
+          // min, leaf) in canonical (a=root, b=leaf) order
+          e.select(asNullable(col("b")).as("id"),
+              asNullable(col("a")).as("cluster_id"))
+            .unionByName(e.select(asNullable(col("a")).as("id"),
+              asNullable(col("a")).as("cluster_id")))
+            .distinct()
+        } else {
+          require(fits,
+            s"duplicateClusters did not converge in $maxIter rounds - " +
+            "graph is adversarially deep for large-star/small-star; " +
+            "raise maxIter")
+          step(s"driver finish with $live edges")
+          driverLabels(e, idType, wire.get)
+        }
+      val singletons = nodes.select(col(idCol).as("id"))
+        .join(labels.select("id"), Seq("id"), "left_anti")
+        .withColumn("cluster_id", col("id"))
+      labels.unionByName(singletons)
+    } finally sc.setLocalProperty(descKey, callerDesc)
+  }
+
+  // CASE WHEN without ELSE is always nullable: pins the output schema
+  // so it does not depend on how many rounds ran (a round's `a` is an
+  // aggregate min, nullable; the input edge set may not be)
+  private def asNullable(c: Column): Column = when(c.isNotNull, c)
+
+  /** The type the driver finish collects ids as, when it can order
+    * them exactly like Spark: integral ids widen to long (numeric
+    * order); default-collation strings travel as their UTF-8 bytes
+    * (binary order, compared as [[UTF8String]]). */
+  private def driverKey(idType: DataType): Option[DataType] =
+    idType match {
+      case ByteType | ShortType | IntegerType | LongType => Some(LongType)
+      case StringType => Some(BinaryType) // equal only at UTF8_BINARY
+      case _ => None
+    }
+
+  /** Driver finish: collect the live edges once as `wire` (see
+    * [[driverKey]]), label every node with its component minimum by
+    * union-find, and return the labels as a local `(id, cluster_id)`
+    * frame of `idType`. */
+  private def driverLabels(e: DataFrame, idType: DataType,
+      wire: DataType): DataFrame = {
+    val rows = e.select(col("a").cast(wire), col("b").cast(wire))
+      .collect()
+    val out: Seq[Row] =
+      if (wire == LongType)
+        minLabels[Long](rows.map(r => (r.getLong(0), r.getLong(1))),
+            _ < _).map { case (k, root) => Row(k, root) }
+      else
+        minLabels[UTF8String](rows.map(r =>
+            (UTF8String.fromBytes(r.getAs[Array[Byte]](0)),
+              UTF8String.fromBytes(r.getAs[Array[Byte]](1)))),
+            _.binaryCompare(_) < 0)
+          .map { case (k, root) => Row(k.getBytes, root.getBytes) }
+    val schema = StructType(Seq(StructField("id", wire),
+      StructField("cluster_id", wire)))
+    e.sparkSession.createDataFrame(out.asJava, schema)
+      .select(col("id").cast(idType).as("id"),
+        col("cluster_id").cast(idType).as("cluster_id"))
+  }
+
+  /** Min-label union-find: every node of `edges` with the smallest node
+    * of its component under `lt`. Roots are always component minima
+    * (a union hangs the larger root under the smaller). */
+  private def minLabels[K](edges: Array[(K, K)],
+      lt: (K, K) => Boolean): Seq[(K, K)] = {
+    val index = new java.util.HashMap[K, Integer]()
+    val keys = scala.collection.mutable.ArrayBuffer.empty[K]
+    def slot(k: K): Int = {
+      val i = index.putIfAbsent(k, keys.length)
+      if (i != null) i else { keys += k; keys.length - 1 }
+    }
+    val ends = edges.map { case (a, b) => (slot(a), slot(b)) }
+    val parent = Array.tabulate(keys.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) {
+        parent(r) = parent(parent(r)) // path halving
+        r = parent(r)
+      }
+      r
+    }
+    ends.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (lt(keys(ra), keys(rb))) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    keys.indices.map(i => (keys(i), keys(find(i))))
   }
 
   /** The delete itself: given near-dup pairs, keep exactly ONE document
@@ -667,7 +818,8 @@ object Dedup {
     * engine-independent.
     *
     * Scale shape: only PAIR MEMBER ids flow through the clustering
-    * (the [[duplicateClusters]] O(log n) star contraction); the corpus
+    * ([[duplicateClusters]]: star contraction, then the driver
+    * finish once the edges fit); the corpus
     * contributes quality values through one join against that small
     * member set (AQE broadcasts it — the corpus never shuffles), and
     * the final delete is the same small-side anti join as

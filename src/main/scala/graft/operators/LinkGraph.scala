@@ -163,14 +163,16 @@ object LinkGraph {
     * lands in one component, so per-component work never crosses
     * shards).
     *
-    * Rides [[Dedup.duplicateClusters]]' large-star/small-star
-    * contraction unchanged — O(log n) rounds, only the edge list
-    * shuffles — because an undirected duplicate graph and a
-    * direction-ignored link graph are the same object. Labels compare
-    * with the column type's own ordering (binary for strings on both
-    * engines). Isolated nodes only exist here if self-linked rows
-    * were dropped upstream; every node appearing in `edges` gets a
-    * component.
+    * Rides [[Dedup.duplicateClusters]] unchanged, because an
+    * undirected duplicate graph and a direction-ignored link graph are
+    * the same object: large-star/small-star rounds (only the edge list
+    * shuffles) while the live edge set is over the driver-heap bound,
+    * then one collect and a union-find on the driver — a graph that
+    * fits from the start runs no round at all. Labels compare with the
+    * column type's own ordering on both paths (UTF-8 binary for
+    * strings, as in the oracle). Isolated nodes only exist here if
+    * self-linked rows were dropped upstream; every node appearing in
+    * `edges` gets a component.
     */
   def weakComponents(edges: DataFrame, srcCol: String,
       dstCol: String, maxIter: Int = 20): DataFrame = {

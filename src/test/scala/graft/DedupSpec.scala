@@ -123,11 +123,14 @@ class DedupSpec extends SparkSpec {
 
   test("duplicateClusters fails loudly when maxIter is too small") {
     // a path graph needs O(diameter) rounds; with maxIter = 1 the
-    // labeling is incomplete and the op must throw, not return it
+    // labeling is incomplete and the op must throw, not return it.
+    // Driver bound 0 keeps the rounds distributed: the default bound
+    // would finish this 5-edge graph on the driver before round 1.
     val nodes = (1L to 6L).toDF("id")
     val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalArgumentException] {
-      Dedup.duplicateClusters(nodes, "id", pairs, maxIter = 1)
+      Dedup.duplicateClustersBounded(nodes, "id", pairs, maxIter = 1,
+        driverBound = 0L)
     }
   }
 

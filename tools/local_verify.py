@@ -2,7 +2,14 @@
 """Local approximation of the driver's correctness gate: run each
 SparkEntry query result (parquet written by graft.Verify) against its
 DuckDB oracle on the same testdata tables. Build-time tool only — the
-Scala library never depends on this."""
+Scala library never depends on this.
+
+    python3 tools/local_verify.py SF_DIR OUT_DIR [q_a,q_b,...]
+
+The optional third argument restricts the compare to the named queries,
+matching graft.Verify's own third argument for a targeted dump. Every
+query listed in OUT_DIR/failed.json (it threw in Verify) counts as a
+failure."""
 import json, sys, glob, os
 import duckdb
 import pandas as pd
@@ -25,7 +32,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, only=None) -> int:
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -33,8 +40,21 @@ def main(sf_dir: str, out_dir: str) -> int:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if only is not None:
+        unknown = sorted(only - oracle.keys())
+        if unknown:
+            print(f"unknown queries: {', '.join(unknown)}")
+            return 2
+        oracle = {k: v for k, v in oracle.items() if k in only}
+    failed_path = f"{out_dir}/failed.json"
+    threw = json.load(open(failed_path)) if os.path.exists(failed_path) \
+        else {}
     failures = 0
     for name, sql in sorted(oracle.items()):
+        if name in threw:
+            print(f"FAIL {name}: threw in Verify: {threw[name][:500]}")
+            failures += 1
+            continue
         qdir = f"{out_dir}/{name}"
         files = glob.glob(f"{qdir}/*.parquet") or glob.glob(f"{qdir}")
         if not os.path.isdir(qdir):
@@ -71,4 +91,5 @@ def main(sf_dir: str, out_dir: str) -> int:
 if __name__ == "__main__":
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
-    sys.exit(main(sf, out))
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    sys.exit(main(sf, out, only))
