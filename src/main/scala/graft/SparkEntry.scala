@@ -3971,8 +3971,8 @@ object SparkEntry {
     // ----- zstd container walk (RFC 8878 frame layer): per doc a
     // skippable frame (odd docs) + a content frame in a cycling
     // header layout (single-segment / fcs widths / dict-id widths /
-    // checksum flag) + one pure-RLE frame — every field read back,
-    // raw+RLE blocks decoded; FSE/Huffman stays honestly unsupported
+    // checksum flag) + one pure-RLE frame — every field read back
+    // by the container walk, nothing decoded
     "q_zstd_meta" -> ((s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"),
         coalesce(col("text"), lit("")).as("__t"),
@@ -4098,11 +4098,11 @@ object SparkEntry {
     // blocks, RFC 8878): each doc's text — padded with planted
     // repetition so the LZ77 stage emits real sequences — goes
     // through the entropy ENCODER (canonical Huffman literals +
-    // predefined-FSE-coded sequences, XXH64 checksum verified on
-    // decode) and must come back byte-identical. Layouts cycle
-    // block size, 1-/4-stream literals, single-segment headers and
-    // the checksum flag; the same decoder is pinned against
-    // reference-CLI frames in ZstdEntropySpec.
+    // predefined-FSE-coded sequences) and must come back
+    // byte-identical through zstd-jni, XXH64 checksum verified.
+    // Layouts cycle block size, 1-/4-stream literals,
+    // single-segment headers and the checksum flag; the same decode
+    // path is pinned against reference-CLI frames in ZstdEntropySpec.
     "q_zstd_codec" -> ((s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"),
         concat(coalesce(col("text"), lit("")), lit(" "),

@@ -705,7 +705,8 @@ object Archive {
     * trailer-verified); a zstd magic — normal or skippable frame —
     * routes to [[Zstd.decompress]], which likewise walks
     * CONCATENATED frames (the frame-per-record seekability layout)
-    * with checksum verification. None for any other magic or any
+    * and decodes each through zstd-jni (or copies a raw/RLE-only
+    * frame) with checksum verification. None for any other magic or any
     * corrupt member, so one bad file classifies instead of killing
     * the task.
     */

@@ -173,7 +173,7 @@ object Http {
     // fold), so when we see it the framing has NOT been removed yet —
     // passthrough would leak raw hex chunk-size lines into the body
     case "chunked" => dechunk(b)
-    case _ => None // br and friends: honest refusal
+    case _ => None // compress, unknown tokens: honest refusal
   }
 
   /** Fully decoded body bytes: chunked de-framing (when declared in

@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   * Surfaced: codec name, total rows, stripe count and their summed
   * row counts, type-tree size, root column names and their kinds —
   * the triage facts a lake census needs without launching a reader
-  * per blob. Chunk decompression rides the house codecs: raw
-  * DEFLATE (zlib), [[Snappy]], [[Zstd]], and [[Lz4.decodeRawBlock]]
-  * — LZO refuses honestly (no house decoder).
+  * per blob. Chunk decompression rides the codec objects: raw
+  * DEFLATE (zlib), [[Snappy]] (snappy-java), [[Zstd]] (zstd-jni) and
+  * [[Lz4.decodeRawBlock]] (the in-repo block decoder) — LZO refuses
+  * honestly (no decoder on the classpath).
   *
   * Pinning: the fixtures are written by Spark's own ORC writer —
   * the reference implementation on this classpath — across five

@@ -427,8 +427,8 @@ object ParquetMeta {
   // ColumnMetaData 14/15 bloom_filter_offset/length; the filter
   // itself is a compact-protocol BloomFilterHeader followed by the
   // raw bitset; membership is the spec's split-block check over
-  // xxHash64(plain-encoded value, seed 0) — the hash rides the
-  // in-repo [[Zstd.xxhash64]].
+  // xxHash64(plain-encoded value, seed 0) — the hash rides
+  // [[Zstd.xxhash64]] (lz4-java's XXH64).
   // ---------------------------------------------------------------
 
   final case class PqBloomCol(path: String, ptype: String,

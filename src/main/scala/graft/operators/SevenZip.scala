@@ -14,12 +14,14 @@ import org.apache.spark.sql.types._
   * Reference behavior mirrored: trousse has no archive layer at all
   * (its CSV reader is `src/trousse/dataset.py:60`); this is the
   * crawl-ingest unwrap tier a 100 TB curation run needs before any
-  * text operator can see bytes. Coders ride the codecs this repo
-  * already implements from spec: Copy, LZMA (Xz.lzma1Raw), LZMA2
-  * (Xz.lzma2Raw), Deflate (`java.util.zip.Inflater`), BZip2
-  * (Bzip2.decompress), and x86-BCJ filter CHAINS (bind-pair
-  * pipelines through Xz's reference-pinned x86 filter — the form
-  * executable-heavy archives use). Validation boundary, stated
+  * text operator can see bytes. Coders ride the codec objects: Copy,
+  * LZMA (Xz.lzma1Raw), LZMA2 (Xz.lzma2Raw), Deflate
+  * (`java.util.zip.Inflater`), BZip2 (Bzip2.decompress), and x86-BCJ
+  * filter CHAINS (bind-pair pipelines through Xz's reference-pinned
+  * x86 filter — the form executable-heavy archives use). The LZMA,
+  * LZMA2 and BZip2 decoders are the repo's own (the jars on the
+  * classpath ran slower per small stream, see [[Xz]], [[Bzip2]]);
+  * the x86 filter is xz-java's `simple.X86`. Validation boundary, stated
   * honestly: the x86 TRANSFORM is pinned bit-exactly against
   * xz-CLI fixtures, and the bind-pair chain framing follows
   * 7zFormat.txt plus writer/reader round-trips — but no reference

@@ -1,107 +1,32 @@
 package graft.operators
 
-/** Snappy block-format codec (the public format description that
-  * ships with google/snappy: `format_description.txt`) — the codec
-  * Avro and many Hadoop-era interchange files declare. From-spec:
-  * a varint uncompressed length, then a tag stream of literals and
-  * three copy forms (1/2/4-byte offsets, overlap allowed).
-  *
-  * The decoder is pinned in SnappySpec against the snappy-java
-  * implementation that ships on Spark's classpath (an independent
-  * reference encoder: its copy-rich output must decode byte-exactly,
-  * and random payloads round-trip both ways). The in-repo encoder
+/** Snappy block format (the public `format_description.txt` that
+  * ships with google/snappy) — the codec Avro, ORC, Parquet and many
+  * Hadoop-era interchange files declare. Decoding is snappy-java,
+  * the implementation on Spark's classpath; the in-repo encoder
   * emits literal-only streams (always valid, used by fixture
   * writers) — compression ratio is not its job.
   *
-  * Totality: None for malformed tags, offsets outside the written
-  * window, length mismatches, or output-cap trips; never throws.
+  * Totality ([[CodecGuard]]): None for malformed tags, offsets
+  * outside the written window, length mismatches, or a declared
+  * length past the output cap; never throws.
   */
 object Snappy {
 
-  private val MaxOut = 64 << 20
+  import CodecGuard.MaxOut
 
-  /** Decompress a raw snappy block. None for structural damage. */
+  /** Decompress a raw snappy block. None for structural damage. The
+    * declared length is checked against `maxOut` before snappy-java
+    * allocates it.
+    */
   def decompress(b: Array[Byte], maxOut: Int = MaxOut)
-      : Option[Array[Byte]] = {
-    if (b == null || b.length == 0) return None
-    try {
-      var p = 0
-      // varint uncompressed length
-      var ulen = 0L
-      var shift = 0
-      var more = true
-      while (more) {
-        if (p >= b.length || shift > 35) return None
-        val v = b(p) & 0xff
-        p += 1
-        ulen |= (v & 0x7fL) << shift
-        shift += 7
-        more = (v & 0x80) != 0
-      }
-      if (ulen < 0 || ulen > maxOut) return None
-      val out = new Array[Byte](ulen.toInt)
-      var o = 0
-      while (p < b.length) {
-        val tag = b(p) & 0xff
-        p += 1
-        (tag & 3) match {
-          case 0 => // literal
-            var len = (tag >> 2) + 1
-            if (len > 60) {
-              val extra = len - 60 // 1..4 length bytes (LE)
-              if (p + extra > b.length) return None
-              var v = 0L
-              var i = 0
-              while (i < extra) {
-                v |= (b(p + i) & 0xffL) << (8 * i); i += 1
-              }
-              p += extra
-              if (v < 0 || v > maxOut) return None
-              len = v.toInt + 1
-            }
-            if (p + len > b.length || o + len > out.length)
-              return None
-            System.arraycopy(b, p, out, o, len)
-            p += len; o += len
-          case 1 => // copy, 1-byte offset: len 4..11, offset 11 bits
-            if (p >= b.length) return None
-            val len = ((tag >> 2) & 7) + 4
-            val off = ((tag >> 5) << 8) | (b(p) & 0xff)
-            p += 1
-            if (!copy(out, o, off, len)) return None
-            o += len
-          case 2 => // copy, 2-byte LE offset
-            if (p + 2 > b.length) return None
-            val len = (tag >> 2) + 1
-            val off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-            p += 2
-            if (!copy(out, o, off, len)) return None
-            o += len
-          case _ => // copy, 4-byte LE offset
-            if (p + 4 > b.length) return None
-            val len = (tag >> 2) + 1
-            val off4 = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-              ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-            p += 4
-            if (off4 > Int.MaxValue) return None
-            if (!copy(out, o, off4.toInt, len)) return None
-            o += len
-        }
-      }
-      if (o != out.length) None else Some(out)
-    } catch {
-      case _: ArrayIndexOutOfBoundsException => None
-      case _: NegativeArraySizeException => None
+      : Option[Array[Byte]] = CodecGuard.guard {
+    if (b == null || b.length == 0) None
+    else {
+      val n = org.xerial.snappy.Snappy.uncompressedLength(b)
+      if (n < 0 || n > math.min(maxOut, MaxOut)) None
+      else Some(org.xerial.snappy.Snappy.uncompress(b))
     }
-  }
-
-  /** Overlap-correct back-reference copy; false = invalid offset. */
-  @inline private def copy(out: Array[Byte], o: Int, off: Int,
-      len: Int): Boolean = {
-    if (off <= 0 || off > o || o + len > out.length) return false
-    var i = 0
-    while (i < len) { out(o + i) = out(o + i - off); i += 1 }
-    true
   }
 
   /** Literal-only snappy stream (always valid; fixture side). */

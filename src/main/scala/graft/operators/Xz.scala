@@ -15,13 +15,24 @@ package graft.operators
   * containers with uncompressed LZMA2 chunks, themselves verified
   * by the reference tool at generation time.
   *
-  * Refusal contract as everywhere: structural damage, any CRC/hash
-  * mismatch, an unfinished range coder, or an unsupported filter
-  * chain → None, never silently-wrong bytes. Output capped.
+  * Why not xz-java (`org.tukaani.xz`, on Spark's classpath): it
+  * decodes every golden bit-exactly, but in a same-JVM, interleaved
+  * A/B on q_xz_roundtrip's 500 streams (median of 9 reps, 4-core
+  * host) `XZInputStream` took ~11 ms per pass (~5 ms with a
+  * `BasicArrayCache`) against ~0.9 ms here: it allocates ~100 KiB
+  * per stream (a 64 KiB range-decoder buffer plus the dictionary;
+  * measured on a ~370-byte text). A codec whose jar decode is
+  * slower keeps its from-spec decoder.
+  *
+  * Refusal contract as everywhere ([[CodecGuard]]): structural
+  * damage, any CRC/hash mismatch, an unfinished range coder, or an
+  * unsupported filter chain → None, never silently-wrong bytes.
+  * Output capped; the declared dictionary is never allocated, so
+  * its size alone refuses nothing.
   * Supported chains (round 15): bare LZMA2, and the delta (0x03) or
-  * x86-BCJ (0x04) pre-filters in front of it — the forms real
-  * tar.xz executable/sample drops carry, both pinned bit-exactly
-  * against reference-CLI fixtures.
+  * x86-BCJ (0x04, xz-java's `simple.X86`) pre-filters in front of
+  * it — the forms real tar.xz executable/sample drops carry, both
+  * pinned bit-exactly against reference-CLI fixtures.
   *
   * Reference behavior studied: pytrousse has no compression layer
   * (/root/reference/src/trousse/dataset.py:1); beyond-parity
@@ -29,7 +40,7 @@ package graft.operators
   */
 object Xz {
 
-  private val MaxOut = 64 << 20
+  import CodecGuard.MaxOut
 
   private final case class XzFail(why: String)
     extends RuntimeException(why, null, false, false)
@@ -562,10 +573,6 @@ object Xz {
     pos + 12
   }
 
-  /** Raw LZMA1 stream with explicit props and a known output size —
-    * the form ZIP method 14 and other embedded uses carry. `end`
-    * bounds the compressed bytes; trailing end markers are accepted.
-    */
   /** Inverse delta filter (xz filter 0x03): byte-wise running sum
     * at the declared distance.
     */
@@ -579,81 +586,18 @@ object Xz {
     // the first `dist` bytes are stored verbatim
   }
 
-  /** Inverse x86 BCJ filter (xz filter 0x04): converts the
-    * absolute-ized E8/E9 call/jump targets back to relative, with
-    * the reference tool's 5-byte proximity mask — semantics pinned
-    * by xz-CLI goldens in XzSpec (a wrong mask bit breaks them).
+  /** Inverse x86 BCJ filter (xz filter 0x04), in place: converts
+    * the absolute-ized E8/E9 call/jump targets back to relative.
+    * xz-java's `simple.X86`; the xz-CLI goldens in XzSpec pin it.
     */
   private[operators] def x86Decode(b: Array[Byte], from: Int,
-      until: Int): Unit = x86Code(b, from, until, encode = false)
+      until: Int): Unit =
+    new org.tukaani.xz.simple.X86(false, 0).code(b, from, until - from)
 
   /** Forward x86 BCJ (fixture writers): relative→absolute. */
   private[operators] def x86Encode(b: Array[Byte], from: Int,
-      until: Int): Unit = x86Code(b, from, until, encode = true)
-
-  private def x86Code(b: Array[Byte], from: Int, until: Int,
-      encode: Boolean): Unit = {
-    val size = until - from
-    if (size < 5) return
-    val allowed = Array(true, true, true, false, true, false, false,
-      false)
-    val bitNum = Array(0, 1, 2, 2, 3, 3, 3, 3)
-    def msb(v: Int): Boolean = v == 0 || v == 0xff
-    var prevMask = 0
-    var prevPos = -5L // fresh-stream init (uint32 -5 in the ref)
-    val limit = size - 5
-    var bp = 0
-    while (bp <= limit) {
-      val b0 = b(from + bp) & 0xff
-      if (b0 != 0xe8 && b0 != 0xe9) bp += 1
-      else {
-        val offset = bp - prevPos
-        prevPos = bp
-        if (offset > 5) prevMask = 0
-        else {
-          var i = 0L
-          while (i < offset) {
-            prevMask &= 0x77
-            prevMask <<= 1
-            i += 1
-          }
-        }
-        val b4 = b(from + bp + 4) & 0xff
-        if (msb(b4) && allowed((prevMask >> 1) & 0x7) &&
-            (prevMask >> 1) < 0x10) {
-          var src = ((b4.toLong << 24) |
-            ((b(from + bp + 3) & 0xffL) << 16) |
-            ((b(from + bp + 2) & 0xffL) << 8) |
-            (b(from + bp + 1) & 0xffL)) & 0xffffffffL
-          var dest = 0L
-          var loop = true
-          while (loop) {
-            dest =
-              if (encode) (src + (bp.toLong + 5)) & 0xffffffffL
-              else (src - (bp.toLong + 5)) & 0xffffffffL
-            if (prevMask == 0) loop = false
-            else {
-              val i = bitNum(prevMask >> 1)
-              val bb = ((dest >> (24 - i * 8)) & 0xff).toInt
-              if (!msb(bb)) loop = false
-              else src = dest ^ ((1L << (32 - i * 8)) - 1)
-            }
-          }
-          b(from + bp + 4) =
-            (if (((dest >> 24) & 1) != 0) 0xff else 0x00).toByte
-          b(from + bp + 3) = ((dest >> 16) & 0xff).toByte
-          b(from + bp + 2) = ((dest >> 8) & 0xff).toByte
-          b(from + bp + 1) = (dest & 0xff).toByte
-          bp += 5
-          prevMask = 0
-        } else {
-          prevMask |= 1
-          if (msb(b4)) prevMask |= 0x10
-          bp += 1
-        }
-      }
-    }
-  }
+      until: Int): Unit =
+    new org.tukaani.xz.simple.X86(true, 0).code(b, from, until - from)
 
   /** Decode one bare LZMA2 chunk sequence (as stored by a 7z
     * folder's 0x21 coder: control bytes through the 0x00 terminator,
@@ -672,7 +616,11 @@ object Xz {
     }
   }
 
-  private[operators] def lzma1Raw(b: Array[Byte], pos: Int, end: Int,
+  /** Raw LZMA1 stream with explicit props and a known output size —
+    * the form ZIP method 14 and other embedded uses carry. `end`
+    * bounds the compressed bytes; trailing end markers are accepted.
+    */
+  private[graft] def lzma1Raw(b: Array[Byte], pos: Int, end: Int,
       props: Int, outLen: Int): Option[Array[Byte]] = {
     try {
       if (props >= 9 * 5 * 5) fail("bad props")
@@ -808,11 +756,15 @@ object Xz {
       out.write('Y'); out.write('Z')
       return out.toByteArray
     }
-    // one block: header (LZMA2, dict size byte 40 = max)
+    // one block: header (LZMA2 with the smallest dictionary that
+    // covers the data: byte d declares (2 | d & 1) << (d / 2 + 11))
+    var dict = 0
+    while (((2L | (dict & 1)) << (dict / 2 + 11)) < data.length)
+      dict += 1
     val bh = new java.io.ByteArrayOutputStream()
     bh.write(0) // size placeholder
     bh.write(0) // flags: 1 filter, no sizes
-    bh.write(0x21); bh.write(1); bh.write(40)
+    bh.write(0x21); bh.write(1); bh.write(dict)
     while ((bh.size() + 4) % 4 != 0) bh.write(0)
     val bhBytes = bh.toByteArray
     bhBytes(0) = ((bhBytes.length + 4) / 4 - 1).toByte

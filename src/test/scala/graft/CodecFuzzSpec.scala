@@ -40,6 +40,12 @@ class CodecFuzzSpec extends SparkSpec {
     flips ++ truncs ++ splices
   }
 
+  private def resource(path: String): Array[Byte] = {
+    val in = getClass.getResourceAsStream(path)
+    assert(in != null, s"missing $path")
+    try in.readAllBytes() finally in.close()
+  }
+
   private def assertTotal[T](name: String, valid: Array[Byte],
       decode: Array[Byte] => Option[T], n: Int = 60): Unit = {
     assert(decode(valid).isDefined, s"$name: valid input must decode")
@@ -204,6 +210,13 @@ class CodecFuzzSpec extends SparkSpec {
     val in = getClass.getResourceAsStream("/zstd/text_l19.zst")
     val golden = in.readAllBytes(); in.close()
     assertTotal("zstd/entropy-golden", golden,
+      graft.operators.Zstd.decompress)
+    // zstd-jni's stream writer declares no content size
+    val bos = new java.io.ByteArrayOutputStream()
+    val zos = new com.github.luben.zstd.ZstdOutputStream(bos, 3)
+    zos.write(text)
+    zos.close()
+    assertTotal("zstd/entropy-sizeless", bos.toByteArray,
       graft.operators.Zstd.decompress)
   }
 
@@ -432,6 +445,17 @@ class CodecFuzzSpec extends SparkSpec {
     assertTotal("bzip2",
       graft.operators.Bzip2.compress(text.getBytes("UTF-8")),
       graft.operators.Bzip2.decompress(_: Array[Byte]))
+    // a reference-encoder golden: multi-table Huffman and runs the
+    // own encoder never writes
+    assertTotal("bzip2/golden", resource("/bzip2/runs_l9.bz2"),
+      graft.operators.Bzip2.decompress(_: Array[Byte]))
+  }
+
+  test("unix .Z decoder is total under own-encoder mutation") {
+    val text = ("compress fuzz content with words words words " +
+      "é→Ω ") * 40
+    assertTotal("Z", graft.operators.UnixZ.compress(
+      text.getBytes("UTF-8")), graft.operators.UnixZ.decompress)
   }
 
   test("snappy and complex-avro decoders are total under mutation") {
@@ -474,6 +498,16 @@ class CodecFuzzSpec extends SparkSpec {
     assertTotal("xz/container",
       graft.operators.Xz.compress(text.getBytes("UTF-8")),
       graft.operators.Xz.decompress(_: Array[Byte]))
+    // the own encoder writes uncompressed chunks only: a reference
+    // golden puts the LZMA range decoder in front of the mutants
+    assertTotal("xz/golden", resource("/xz/text_p9e_crc64.xz"),
+      graft.operators.Xz.decompress(_: Array[Byte]))
+    // raw LZMA1 (ZIP method 14 / 7z): the .lzma golden's stream
+    // after its 13-byte header, end marker included
+    val alone = resource("/xz/text_alone.lzma")
+    val n = resource("/xz/text.bin").length
+    assertTotal("xz/lzma1-raw", alone, (b: Array[Byte]) =>
+      graft.operators.Xz.lzma1Raw(b, 13, b.length, b(0) & 0xff, n))
   }
 
   test("lz4 frame decoder is total under own-encoder mutation") {
@@ -482,6 +516,93 @@ class CodecFuzzSpec extends SparkSpec {
     assertTotal("lz4/frame",
       graft.operators.Lz4.encodeFrame(text.getBytes("UTF-8")),
       graft.operators.Lz4.decodeFrame(_: Array[Byte]))
+    assertTotal("lz4/legacy", resource("/lz4/ref_legacy.lz4"),
+      graft.operators.Lz4.decodeFrame(_: Array[Byte]))
+    assertTotal("lz4/linked", resource("/lz4/ref_biglinked.lz4"),
+      graft.operators.Lz4.decodeFrame(_: Array[Byte]))
+    // a raw block with real matches, as ORC/Parquet embed it
+    val plain = text.getBytes("UTF-8")
+    val block = net.jpountz.lz4.LZ4Factory.safeInstance()
+      .fastCompressor().compress(plain)
+    assertTotal("lz4/raw-block", block, (b: Array[Byte]) =>
+      graft.operators.Lz4.decodeRawBlock(b, 0, b.length, plain.length))
+  }
+
+  /** `body`'s result and the heap bytes this thread allocated in it. */
+  private def allocating[T](body: => T): (T, Long) = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val id = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(id)
+    val r = body
+    (r, mx.getThreadAllocatedBytes(id) - before)
+  }
+
+  test("headers declaring sizes past the output cap allocate none of " +
+    "them") {
+    val cap = 64 << 20
+    // every declared size below is ≥ 64 MiB; the decodes need < 1 MiB
+    def lean[T](name: String, body: => Option[T]): Option[T] = {
+      val (r, bytes) = allocating(body)
+      assert(bytes < (8L << 20), s"$name allocated $bytes bytes")
+      r
+    }
+    def le32(b: Array[Byte], at: Int, v: Long): Unit =
+      for (i <- 0 until 4) b(at + i) = ((v >> (8 * i)) & 0xff).toByte
+    // xz: the LZMA2 dictionary byte 40 (4 GiB − 1) the own encoder
+    // used to write; the block header sits at 12, its CRC32 at 20.
+    // The decoder never allocates a dictionary, so it still decodes
+    val text = ("dictionary bound " * 20).getBytes("UTF-8")
+    val xz = graft.operators.Xz.compress(text)
+    assert(graft.operators.Xz.decompress(xz).exists(_.sameElements(text)))
+    val dict40 = xz.clone()
+    dict40(16) = 40
+    val crc = new java.util.zip.CRC32
+    crc.update(dict40, 12, 8)
+    le32(dict40, 20, crc.getValue)
+    assert(lean("xz dict 40", graft.operators.Xz.decompress(dict40))
+      .exists(_.sameElements(text)), "xz dict 40")
+    // .lzma alone: a 4 GiB − 1 dictionary in the header
+    val alone = resource("/xz/text_alone.lzma")
+    val plain = resource("/xz/text.bin")
+    val bigDict = alone.clone()
+    le32(bigDict, 1, 0xffffffffL)
+    assert(lean("lzma dict", graft.operators.Xz.decompressAlone(bigDict))
+      .exists(_.sameElements(plain)), "lzma dict")
+    // zstd: a 2^27 window (descriptor byte 5) over a compressed block
+    // decodes one-shot, no window allocated; a declared content size
+    // (bytes 6..9) of 4 GiB − 1, or of the cap itself, passes the
+    // block walk's bound and refuses before the buffer is made
+    val zText = ("window bound " * 200).getBytes("UTF-8")
+    val zs = graft.operators.Zstd.encodeEntropyFrame(zText)
+    assert(graft.operators.Zstd.decompress(zs).isDefined)
+    val wide = zs.clone()
+    wide(5) = ((27 - 10) << 3).toByte
+    assert(lean("zstd window", graft.operators.Zstd.decompress(wide))
+      .exists(_.sameElements(zText)), "zstd window")
+    for (size <- Seq(0xffffffffL, cap.toLong)) {
+      val lie = zs.clone()
+      le32(lie, 6, size)
+      assert(lean(s"zstd size $size",
+        graft.operators.Zstd.decompress(lie)).isEmpty, s"zstd size $size")
+    }
+    // snappy: a varint length one past the cap, and past `maxOut`
+    val varint = Iterator.iterate((cap + 1).toLong)(_ >>> 7)
+      .takeWhile(_ > 0).map(_ & 0x7f).toArray
+    val lie = varint.init.map(v => (v | 0x80).toByte) :+
+      varint.last.toByte
+    assert(lean("snappy length", graft.operators.Snappy.decompress(lie ++
+      Array[Byte](0, 'x'))).isEmpty, "snappy length")
+    val snap = org.xerial.snappy.Snappy.compress(text)
+    assert(graft.operators.Snappy.decompress(snap).isDefined)
+    assert(graft.operators.Snappy.decompress(snap,
+      maxOut = text.length - 1).isEmpty, "snappy maxOut")
+    // lz4 legacy: one block claiming 8 MiB + 1 compressed bytes
+    val legacy = Array[Byte](0x02, 0x21, 0x4c, 0x18) ++
+      new Array[Byte](4) ++ Array.fill[Byte](16)(0x11)
+    le32(legacy, 4, (8 << 20) + 1)
+    assert(lean("lz4 legacy", graft.operators.Lz4.decodeFrame(legacy))
+      .isEmpty, "lz4 legacy block")
   }
 
   test("brotli decoder is total under own-encoder mutation") {

@@ -169,4 +169,21 @@ class ZstdEntropySpec extends SparkSpec {
     assert(Zstd.frameMeta(patched).get.head.dictId == 42L)
     assert(Zstd.decompress(patched).isEmpty)
   }
+
+  test("frames that declare no content size decode") {
+    // zstd-jni's stream writer (what Parquet's zstd codec uses) leaves
+    // the size out: the decode buffer comes from the block walk
+    for (name <- Seq("text.bin", "long.bin")) {
+      val want = resource(name)
+      val bos = new java.io.ByteArrayOutputStream()
+      val zos = new com.github.luben.zstd.ZstdOutputStream(bos, 3)
+      zos.write(want)
+      zos.close()
+      val zst = bos.toByteArray
+      val meta = Zstd.frameMeta(zst).get
+      assert(meta.map(_.contentSize) == Seq(-1L), s"$name sized")
+      assert(meta.head.nCompressed > 0, s"$name holds no entropy block")
+      assert(Zstd.decompress(zst).exists(_.sameElements(want)), name)
+    }
+  }
 }
