@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.sources.Io.jstr
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is FULLY evaluated through a noop
@@ -267,18 +268,9 @@ object BenchGate {
       hostOffset: Option[Double],
       stalls: Map[String, Double] = Map.empty,
       compact: Boolean = false): String = {
-    // full JSON string escaping: a quote/backslash/control char in
-    // the sf path or a query name must not yield an unparseable
+    // full JSON string escaping (jstr): a quote/backslash/control char
+    // in the sf path or a query name must not yield an unparseable
     // artifact line — that would defeat the kill-safety goal
-    def jstr(s: String) = s.foldLeft(new StringBuilder("\"")) {
-      case (b, '"')           => b.append("\\\"")
-      case (b, '\\')          => b.append("\\\\")
-      case (b, '\n')          => b.append("\\n")
-      case (b, '\r')          => b.append("\\r")
-      case (b, '\t')          => b.append("\\t")
-      case (b, c) if c < 0x20 => b.append(f"\\u${c.toInt}%04x")
-      case (b, c)             => b.append(c)
-    }.append('"').toString
     val qs = results.map { case (k, v) => jstr(k) + ":" + v.min }
       .mkString("{", ",", "}")
     // per-rep timings: lets a reader separate plan cost (stable min)
@@ -378,12 +370,9 @@ object Bench {
     def overBudget: Boolean =
       (System.nanoTime() - sweepT0) / 1e9 > wallBudget
     // optional comma-separated query filter for single-query forensics
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names(q._1))
-      case None        => SparkEntry.queries
-    }
+    val selected = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(o => SparkEntry.select(SparkEntry.names(o)))
+      .getOrElse(SparkEntry.registry)
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
       val t0 = System.nanoTime()
@@ -416,7 +405,7 @@ object Bench {
     }
     val failures = Seq.newBuilder[String]
     val done = Seq.newBuilder[(String, Seq[Double])]
-    val names = selected.toSeq.sortBy(_._1)
+    val names = selected.map(q => q.name -> q.build).sortBy(_._1)
     names.foreach { case (name, fn) =>
       val effReps = if (overBudget) 1 else reps
       try {
@@ -451,7 +440,7 @@ object Bench {
       f"[bench] HOST OFFSET: sweep is a uniform $o%.2fx of history " +
       "(machine state, not code) — judging best/offset"))
     val scale = hostOff.getOrElse(1.0)
-    val fnByName = selected
+    val fnByName = names.toMap
     // GATE PHASE BUDGET: the r17 driver run was killed HERE — the
     // sweep itself finished (kill-safe partial had all 286 queries)
     // but a ragged 2.6×-slow host turned dozens of queries suspect

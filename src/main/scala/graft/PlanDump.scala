@@ -14,9 +14,9 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val names = if (args.length > 3)
-      args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    else SparkEntry.queries.keys.toSeq.sorted
+    val selected = if (args.length > 3)
+      SparkEntry.select(SparkEntry.names(args(3)))
+    else SparkEntry.registry.sortBy(_.name)
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -26,9 +26,10 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir))
-    names.foreach { n =>
+    selected.foreach { q =>
+      val n = q.name
       try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val df = q.build(spark, sfDir)
         val qe = df.queryExecution
         val txt = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)

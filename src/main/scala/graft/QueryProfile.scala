@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Temporary debug main (like [[PlanAudit]]): runs named queries and
-  * prints a per-job wall/stage/task breakdown so the optimization
-  * rounds can see WHERE a multi-job operator spends its time (the
-  * bench only reports one number per query). Not part of the library
-  * surface.
+/** Debug main: runs named queries and prints a per-job
+  * wall/stage/task breakdown so the optimization rounds can see WHERE a
+  * multi-job operator spends its time (the bench only reports one
+  * number per query). Not part of the library surface.
   *
   * Usage: runMain graft.QueryProfile <sfDir> <cpus> <q1,q2,...> [reps]
   */
@@ -15,7 +14,7 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val cpus = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    val selected = SparkEntry.select(SparkEntry.names(args(2)))
     val reps = if (args.length > 3) args(3).toInt else 2
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -35,13 +34,21 @@ object QueryProfile {
       var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L,
       var input: Long = 0L, desc: String)
     val jobs = new scala.collection.mutable.LinkedHashMap[Int, JobRec]
+    // stage -> the job whose JobStart listed it; when several running
+    // jobs list a stage (the concurrent fits share scans), the earliest
+    // keeps it
+    val owner = scala.collection.mutable.HashMap.empty[Int, JobRec]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.synchronized {
-          jobs(j.jobId) = JobRec(j.jobId, j.time,
+          val r = JobRec(j.jobId, j.time,
             desc = Option(j.properties)
               .flatMap(p => Option(p.getProperty(
                 "spark.job.description"))).getOrElse(""))
+          jobs(j.jobId) = r
+          j.stageIds.foreach { st =>
+            if (!owner.get(st).exists(_.t1 == 0L)) owner(st) = r
+          }
         }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
         jobs.synchronized {
@@ -49,9 +56,8 @@ object QueryProfile {
         }
       override def onStageCompleted(s: SparkListenerStageCompleted)
           : Unit = jobs.synchronized {
-        // attribute the stage to the newest job that contains it
         val m = s.stageInfo.taskMetrics
-        jobs.values.lastOption.foreach { r =>
+        owner.get(s.stageInfo.stageId).foreach { r =>
           r.stages += 1
           r.tasks += s.stageInfo.numTasks
           if (m != null) {
@@ -62,10 +68,10 @@ object QueryProfile {
         }
       }
     }
-    names.foreach { n =>
-      val fn = SparkEntry.queries(n)
+    selected.foreach { q =>
+      val (n, fn) = (q.name, q.build)
       (1 to reps).foreach { rep =>
-        jobs.synchronized(jobs.clear())
+        jobs.synchronized { jobs.clear(); owner.clear() }
         spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -264,10 +264,11 @@ object ScaleStress {
 
     println(f"${"pipeline"}%-22s ${"scale"}%5s ${"wall_s"}%8s " +
       f"${"shuf_write"}%12s ${"shuf_read"}%12s")
-    // SPARK_GRAFT_STRESS_ONLY=name,name runs a subset (new-pipeline
+    // SPARK_GRAFT_ONLY=name,name runs a subset (new-pipeline
     // iteration without re-measuring the whole table)
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY")
-      .map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(o => SparkEntry
+      .checked(SparkEntry.names(o),
+        Pipelines.map(_._1) :+ "ivfpq_auto_build").toSet)
     val rows = Pipelines
       .filter { case (p, _) => only.forall(_.contains(p)) }
       .map { case (p, fn) =>

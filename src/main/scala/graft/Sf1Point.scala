@@ -171,8 +171,8 @@ object Sf1Point {
     catch { case _: Throwable => () }
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (new-tier points
     // without re-measuring the whole heavy set)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(o => SparkEntry
+      .checked(SparkEntry.names(o), Heavy.map(_._1)).toSet)
     val rows = Heavy.filter { case (q, _) =>
       only.forall(_.contains(q))
     }.flatMap { case (q, fn) =>

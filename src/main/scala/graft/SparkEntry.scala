@@ -1,10935 +1,56 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{GraftDataset, Inference}
-import graft.functions.{HashFunctions => H, TextFunctions => T}
-import graft.operators._
-import graft.streaming.StreamingOps
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every query runs a REAL library operator over the driver's parquet
-  * tables and has a DuckDB-equivalent oracle in [[oracleSql]]. Column
-  * names are aligned on both sides (the driver's compare sorts columns
-  * by name before hashing). Floating-point outputs are made engine-
-  * portable by exact integer/decimal quantization — never raw
-  * accumulation-order-dependent double sums.
+/** The index of every declared query. Each [[queries.QuerySpec]] keeps
+  * a query's Spark build and its DuckDB oracle in one entry; the
+  * entries live in one object per area under `graft/queries/`, and
+  * adding a query is one entry there.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Every declared query, area by area. */
+  lazy val registry: Seq[QuerySpec] = index(Seq(Wrangling.specs,
+    TextCuration.specs, Vectors.specs, Media.specs, Formats.specs,
+    Lakehouse.specs))
 
-  /** [[t]] plus a fan-out for queries whose cost is a per-row KERNEL
-    * (synth+decode, signatures, text scoring), not the scan itself.
-    *
-    * The bench tables are single-row-group parquet files — ONE scan
-    * split — so a map-only kernel tier would otherwise run on one core
-    * regardless of the master's core count (measured: q_pdf_encrypted
-    * spent 13.8 s in a single task on local[32]; with the fan-out the
-    * same work runs as 32 tasks in 1.2 s). Guarded by input size so it
-    * is scale-adaptive, not a local-mode constant: when the file is
-    * large enough that the scan itself yields at least
-    * defaultParallelism splits (any real at-scale input), this is a
-    * plain [[t]] — the exchange exists exactly when the input
-    * under-fills the cluster. The round-robin exchange carries only
-    * the narrow columns the query projects (Catalyst prunes through
-    * it), never synthesized payloads — the guide-§8 discipline of
-    * shuffling light rows and fanning the heavy kernel out.
-    */
-  private def tp(s: SparkSession, dir: String, name: String): DataFrame = {
-    val base = t(s, dir, name)
-    val p = s.sparkContext.defaultParallelism
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bytes = fs.getFileStatus(path).getLen
-    val maxSplit = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(s.conf.get(
-        "spark.sql.files.maxPartitionBytes", "128m"))
-    if (bytes / maxSplit >= p) base else base.repartition(p)
+  /** Concatenates area lists. A name declared twice throws: a map
+    * literal would silently keep the last of two equal keys. */
+  private[graft] def index(areas: Seq[Seq[QuerySpec]]): Seq[QuerySpec] = {
+    val all = areas.flatten
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty,
+      s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    all
   }
 
-  /** Shared entity-name synthesis for the entity-resolution queries:
-    * 200 md5-derived base names, four deterministic typo variants
-    * (deletion / insertion / substitution / clean) keyed by
-    * doc_id % 7. Both DuckDB oracles replay this construction
-    * verbatim — change it in all four places or the pair/cluster
-    * queries diverge.
-    */
-  private def entityNames(docs: DataFrame): DataFrame = {
-    val b = concat(lit("e-"),
-      substring(md5((col("doc_id") % 200).cast("string")), 1, 8))
-    val name = when(col("doc_id") % 7 === 0, substring(b, 1, 9))
-      .when(col("doc_id") % 7 === 1, concat(b, lit("x")))
-      .when(col("doc_id") % 7 === 2,
-        concat(substring(b, 1, 4), lit("z"), substring(b, 6, 5)))
-      .otherwise(b)
-    docs.select(col("doc_id"), name.as("name"))
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
+
+  /** The named queries in the given order; an unknown name throws. */
+  def select(names: Seq[String]): Seq[QuerySpec] = {
+    val byName = registry.map(q => q.name -> q).toMap
+    checked(names, registry.map(_.name)).map(byName)
   }
 
-  /** Shared synthesized-WAV frame for the audio queries: per-doc
-    * PCM16 WAV with planted LCG samples —
-    * u(i) = (doc_id·7919 + i·104729 + 32768) % 65536, the unsigned
-    * two's-complement form of s(i) = (… % 65536) − 32768 — channels
-    * doc_id%2+1, rate 8000+(doc_id%8)·4000, frames doc_id%100+1, all
-    * written little-endian by hex construction, no binary literal
-    * anywhere. Returns (doc_id, content).
-    */
-  private def synthWavs(docs: DataFrame): DataFrame = {
-    def le16(c: Column) = {
-      val h = lpad(hex(c), 4, "0")
-      concat(substring(h, 3, 2), substring(h, 1, 2))
-    }
-    def le32(c: Column) = {
-      val h = lpad(hex(c), 8, "0")
-      concat(substring(h, 7, 2), substring(h, 5, 2),
-        substring(h, 3, 2), substring(h, 1, 2))
-    }
-    val d = docs.select(col("doc_id"),
-        (col("doc_id") % 2 + 1).cast("int").as("__ch"),
-        (lit(8000) + (col("doc_id") % 8) * 4000).cast("int")
-          .as("__rt"),
-        (col("doc_id") % 100 + 1).cast("int").as("__fr"))
-      .withColumn("__ba", col("__ch") * 2)
-      .withColumn("__ns", col("__fr") * col("__ch"))
-      .withColumn("__dl", col("__ns") * 2)
-    val dataHex = array_join(
-      transform(sequence(lit(0), col("__ns") - 1), i => {
-        val u = (col("doc_id") * 7919 + i.cast("long") * 104729
-          + 32768) % 65536
-        val h = lpad(hex(u), 4, "0")
-        concat(substring(h, 3, 2), substring(h, 1, 2))
-      }), "")
-    val wav = unhex(concat(
-      lit("52494646"), le32(col("__dl") + 36), lit("57415645"),
-      lit("666D7420"), lit("10000000"), lit("0100"),
-      le16(col("__ch")), le32(col("__rt")),
-      le32(col("__rt") * col("__ba")), le16(col("__ba")),
-      lit("1000"),
-      lit("64617461"), le32(col("__dl")), dataHex))
-    d.select(col("doc_id"), wav.as("content"))
+  /** `names`, unchanged, once each is one of `known`: an unknown name
+    * throws, so a typo cannot select nothing and exit 0. */
+  def checked(names: Seq[String], known: Seq[String]): Seq[String] = {
+    val unknown = names.filterNot(known.toSet)
+    require(unknown.isEmpty, s"unknown name: ${unknown.mkString(", ")}")
+    names
   }
 
-  /** Derived eval set for the semantic-decontamination queries: every
-    * 50th vector is an eval item; every 100th swaps in its
-    * SUCCESSOR's embedding — a train-side member, so those eval items
-    * are planted exact-copy contamination (cosine exactly 1.0: the
-    * quantized dot and both norms are the same integer, and the
-    * norm product stays under 2^53 so its sqrt is exact).
-    */
-  private def semanticEvalSet(emb: DataFrame): DataFrame = {
-    val ids = emb.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("eval_id"),
-        when(col("vec_id") % 100 === 0, col("vec_id") + 1)
-          .otherwise(col("vec_id")).as("__src"))
-    ids.join(emb, ids("__src") === emb("vec_id"))
-      .select(col("eval_id"), col("embedding"))
-  }
-
-  /** Schema-adaptive events reader. The driver has shipped
-    * events.parquet with `ts` as both TIMESTAMP(NANOS) — unreadable by
-    * vanilla Spark, so routed through Io.readNanosAsLong which yields a
-    * raw int64 nanos column — and TIMESTAMP(MICROS), which Spark reads
-    * natively (as TIMESTAMP_NTZ under the default NTZ inference).
-    * Branch on the actual `ts` type: a long gets the nanos → micros
-    * conversion; any timestamp flavor is cast to session-local
-    * TimestampType (identity wall-clock under the UTC session tz all
-    * entry points pin) so every downstream event operator sees one
-    * stable type regardless of how the data was generated.
-    */
-  private[graft] def readEvents(s: SparkSession, dir: String): DataFrame = {
-    val df = graft.sources.Io.readNanosAsLong(s, s"$dir/events.parquet")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case _ =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
-
-  /** Exact, portable sum of a double column with 2-decimal content. */
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(18,2)")).cast("double")
-
-  /** Exact, portable sum of an arbitrary double column at 1e-6. */
-  private def qsum(c: Column): Column =
-    (sum(round(c * 1e6, 0).cast("long")).cast("double") / 1e6)
+  /** A comma-separated name list, as the mains take one. */
+  def names(csv: String): Seq[String] =
+    csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
-
-  // Deterministic nonce for the anonymization query (seed pinned like
-  // the reference's tests, anonymize_database.py:181).
-  private val (noncePre, nonceSuf) = Anonymize.nonce(42L)
-
-  // Pinned BPE merge table for q_bpe_encode (order IS the rank;
-  // later merges consume earlier ones' outputs — "t"+"h" → "th",
-  // then "th"+"e" → "the"; the final merge's space-bearing token
-  // pins whitespace handling on both engines).
-  private val BpeFixedMerges: Seq[(String, String)] = Seq(
-    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("r", "e"),
-    ("o", "n"), ("e", "r"), ("a", "t"), ("e", "n"), ("o", "r"),
-    ("an", "d"), ("in", "g"), ("t", "o"), ("i", "t"), ("i", "s"),
-    ("e", "s"), ("a", "l"), ("o", "u"), ("s", "t"), ("the", " "))
-
-  // Overlapped bins for q_overlap_binning: equal-width [0,120k) in 3
-  // bins widened by 10% of a neighbor width (Binning.overlappingRanges)
-  // — computed once here so the oracle embeds the identical literals.
-  private val OverlapRanges: Seq[(Int, Double, Double)] =
-    Binning.overlappingRanges(
-      Seq((0, 0.0, 40000.0), (1, 40000.0, 80000.0), (2, 80000.0, 120000.0)),
-      0.1)
-
-  /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ----- A1-A8 aggregations / flagship
-    "q1_pricing_summary" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      li.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          round(dsum(col("l_quantity")) / count(lit(1)), 6).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // ----- multi-way star join: fact scanned once, all dims broadcast
-    "q_revenue_by_nation" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val su = t(s, dir, "supplier")
-      val na = t(s, dir, "nation")
-      val re = t(s, dir, "region")
-      li.join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(na), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(re), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(
-          qsum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .as("revenue"),
-          count(lit(1)).as("n_items"))
-    }),
-
-    // ----- JSON property extraction over the event stream table
-    "q_events_props" -> ((s, dir) => {
-      val ev = readEvents(s, dir)
-      // ONE Jackson parse per row via from_json + schema — with several
-      // extracted fields, per-field get_json_object would re-parse the
-      // document per field
-      ev.select(col("event_type"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
-            .getField("k").as("k"))
-        .groupBy("event_type")
-        .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
-    }),
-
-    // ----- §1.2/§2.4: the classification pass as a queryable frame
-    "q_classify" -> ((s, dir) => {
-      val li  = tp(s, dir, "lineitem")
-      val cls = Inference.classify(li, exact = true)
-      val rows = li.columns.toSeq.sorted.map { c =>
-        val st = cls.stats(c)
-        (c, st.nRows, st.nNull, st.nDistinct, st.isConstant)
-      }
-      import s.implicits._
-      rows.toDF("column_name", "n_total", "n_null", "n_distinct",
-        "is_constant")
-    }),
-
-    // ----- O1 FillNA
-    "q_fillna" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        when(col("l_orderkey") % 7 === 0, lit(null).cast("string"))
-          .otherwise(col("l_returnflag")).as("flag"))
-      FillNA(Seq("flag"), "X")(li)
-    }),
-
-    // ----- O3 ReplaceStrings (whole-value)
-    "q_replace_strings" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_returnflag").as("flag"))
-      ReplaceStrings(Seq("flag"),
-        Seq("A" -> "ACCEPTED", "R" -> "RETURNED"))(li)
-    }),
-
-    // ----- O2 ReplaceSubstrings (sequential, order-sensitive)
-    "q_replace_substrings" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_type").as("ptype"))
-      ReplaceSubstrings(Seq("ptype"),
-        Seq("BRUSHED" -> "B", "B" -> "X"))(p)
-    }),
-
-    // ----- O5 OrdinalEncoder (sorted-distinct codes)
-    "q_ordinal_encode" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      OrdinalEncoder(Seq("o_orderpriority"), Seq("prio_code"))(o)
-    }),
-
-    // ----- O4 OneHotEncoder (sorted categories, null-preserving)
-    "q_onehot_encode" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        when(col("l_orderkey") % 7 === 0, lit(null).cast("string"))
-          .otherwise(col("l_returnflag")).as("flag"))
-      OneHotEncoder(Seq("flag"), "_enc")(li)
-    }),
-
-    // ----- R1-R7 repair cascade on a deterministically corrupted column
-    "q_rowfix" -> ((s, dir) => {
-      val li  = t(s, dir, "lineitem")
-      val raw = col("l_quantity").cast("string")
-      val corrupted = when(col("l_orderkey") % 11 === 0,
-          regexp_replace(raw, "\\.", ","))
-        .when(col("l_orderkey") % 13 === 0, concat(lit(">"), raw))
-        .when(col("l_orderkey") % 17 === 0, lit("---"))
-        .when(col("l_orderkey") % 19 === 0, concat(raw, lit("%")))
-        .when(col("l_orderkey") % 23 === 0, lit("NV"))
-        .otherwise(raw)
-      val df = li.select(col("l_orderkey"), col("l_linenumber"),
-        corrupted.as("qty_raw"))
-      df.select(col("l_orderkey"), col("l_linenumber"),
-        RowFix.fixExpr(col("qty_raw")).as("qty_fixed"))
-    }),
-
-    // ----- A9/R5/R8: repair audit counters as a frame
-    "q_rowfix_audit" -> ((s, dir) => {
-      val li  = t(s, dir, "lineitem")
-      val raw = col("l_quantity").cast("string")
-      val corrupted = when(col("l_orderkey") % 11 === 0,
-          regexp_replace(raw, "\\.", ","))
-        .when(col("l_orderkey") % 17 === 0, lit("---"))
-        .when(col("l_orderkey") % 23 === 0, lit("junk!"))
-        .otherwise(raw)
-      val df = li.select(corrupted.as("qty_raw"))
-      RowFix.fixTypos(df, Seq("qty_raw"))._2
-    }),
-
-    // ----- A6: lost-value sets (values a plain cast would null)
-    "q_lost_values" -> ((s, dir) => {
-      val li  = t(s, dir, "lineitem")
-      val raw = col("l_quantity").cast("string")
-      val corrupted = when(col("l_orderkey") % 11 === 0,
-          regexp_replace(raw, "\\.", ","))
-        .when(col("l_orderkey") % 17 === 0, lit("---"))
-        .otherwise(raw)
-      RowFix.lostValues(li.select(corrupted.as("qty_raw")), "qty_raw")
-    }),
-
-    // ----- near-exact dedup via normalized fingerprint GROUPING
-    "q_dedup_fingerprint" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Dedup.byFingerprint(d, "text", "doc_id")
-        .select(col("doc_id"), col("n_dups"))
-    }),
-
-    // ----- dedup: incremental batch-vs-corpus (every-5th doc plays the
-    // incoming crawl increment; the rest is the standing corpus)
-    "q_dedup_increment" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Dedup.dedupIncrement(
-        d.filter(col("doc_id") % 5 === 0),
-        d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // ----- dedup: exact substring (repeated-span) exposure — positional
-    // 8-gram inverted index, cross-doc repeats only
-    "q_substring_rep" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      SubstringDedup.repeatedSpanStats(d, "doc_id", "text", n = 8)
-    }),
-
-    // ----- dedup: the span DELETE — scrub every cross-doc repeated
-    // 8-gram from all but the smallest-id (keeper) document
-    "q_substring_scrub" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      SubstringDedup.removeRepeatedSpans(d, "doc_id", "text", n = 8)
-    }),
-
-    // ----- B3: one combo column per prefix (third categorical derived
-    // from the quantity band — lineitem has only two string categoricals)
-    "q_multi_combine" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_returnflag"), col("l_linestatus"),
-        floor(col("l_quantity") / 10).cast("long").cast("string")
-          .as("qband"))
-      MultipleCombinations(
-        Seq("l_returnflag", "l_linestatus", "qband"))(li)
-    }),
-
-    // ----- O8-O10 + J1: anonymization (nonce pinned at seed 42)
-    "q_anonymize" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val (anonym, _) = Anonymize.anonymize(c, Seq("c_name"),
-        Seq("c_name"), 42L)
-      anonym.select(col("c_custkey"), col("c_mktsegment"),
-        col("ID_OWNER"))
-    }),
-
-    // ----- B7 encode_single_categorical_column: Nan category joins the
-    // dictionary, initcap case folding, original nulls restored
-    "q_encode_categorical" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"),
-        when(col("c_custkey") % 7 === 0, lit(null).cast("string"))
-          .otherwise(col("c_mktsegment")).as("seg"))
-      EncodeSingleCategorical("seg", "ordinal")(c)
-    }),
-
-    // ----- B8: multi-column categorical encode through the dataset
-    // orchestrator (classification gates the requested columns, then
-    // B7 runs per column — one fit each, both recorded in history)
-    "q_encode_multi" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_returnflag"), col("l_linestatus"))
-      FeatureFix.encodeMultiCategorical(GraftDataset(li),
-        Seq("l_returnflag", "l_linestatus")).data
-    }),
-
-    // ----- B1 threshold binning
-    "q_binning" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_extendedprice"))
-      SplitIntoBins(Seq("l_extendedprice"),
-        Seq(1000.0, 10000.0, 50000.0))(li)
-    }),
-
-    // ----- B2 categorical combination (itertools.product order)
-    "q_combine_categorical" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_returnflag"), col("l_linestatus"))
-      CombineCategoricalColumns(Seq("l_returnflag", "l_linestatus"))(li)
-    }),
-
-    // ----- B6 per-group binning (breed-specific generalized)
-    "q_grouped_binning" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_returnflag"),
-        col("l_extendedprice"))
-      GroupedBinning("l_returnflag", "l_extendedprice", 5)(li)
-    }),
-
-    // ----- B4+B6: per-group GEOMETRIC binning (ratio 2 → threshold
-    // arithmetic is exact powers of two, portable across engines)
-    "q_grouped_binning_geo" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_returnflag"),
-        col("l_extendedprice"))
-      GroupedGeometricBinning("l_returnflag", "l_extendedprice", 5)(li)
-    }),
-
-    // ----- B5: row-duplicating overlapped-bins range join
-    "q_overlap_binning" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_extendedprice"))
-      OverlappingBinning(Seq("l_extendedprice"), OverlapRanges)(li)
-    }),
-
-    // ----- O7 bool→binary
-    "q_bool_to_binary" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"),
-        (col("l_quantity") > 25.0).as("high_qty"))
-      BoolToBinary(Seq("high_qty"))(li)
-    }),
-
-    // ----- streaming-shape windowed aggregation (batch parity form)
-    "q_events_window" -> ((s, dir) => {
-      val ev = readEvents(s, dir)
-      StreamingOps.windowedEventStats(ev, "1 hour")
-        .select(col("win_start"), col("event_type"), col("n_events"))
-    }),
-
-    // ----- per-user event-rate spikes: daily counts vs 2.0× the
-    // user's own exact lower-median active day, all-integer flag
-    "q_rate_spikes" -> ((s, dir) => {
-      val ev = readEvents(s, dir)
-      EventOps.rateSpikes(ev, "user_id", "ts", "day",
-        factorDeci = 20L)
-    }),
-
-    // ----- curation: mix the corpus to a target source recipe
-    // (50/30/20 over three sources, downsampling-only)
-    "q_mix_corpus" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Sampling.mixToTarget(d, "doc_id", "source",
-        scala.collection.immutable.ListMap(
-          "src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // ----- curation: quality-weighted Bernoulli downsampling — each
-    // doc keeps with its own probability (here a length-derived weight),
-    // deterministically by id
-    "q_weighted_sample" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("w", least(greatest(
-          col("n_chars").cast("double") / 1000.0, lit(0.1)), lit(1.0)))
-      Sampling.weightedSampleByHash(d, "doc_id", "w")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // ----- absolute token budgets per source: hash-priority admission
-    // until each source's budget is met (crossing doc included)
-    "q_budget_sample" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Sampling.budgetSample(d, "doc_id", "n_chars", "source",
-          budgetSampleBudgets)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // ----- temperature mixing (α=½): sources are artificially
-    // imbalanced 1:20 by the doc_id-vs-suffix filter, then sampled
-    // under sqrt-mass budgets — small sources keep proportionally
-    // more than their mass share
-    "q_temperature_mix" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("doc_id") % 20 <=
-          expr("CAST(substring(source, 4) AS INT)"))
-      Sampling.temperatureMix(d, "doc_id", "n_chars", "source",
-          totalBudget = 30000L, alphaQuarters = 2)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // ----- big-x-big range join: which parts' ±1 retail-price band
-    // contains each lineitem's unit price (chunked candidate equi-join)
-    "q_range_join" -> ((s, dir) => {
-      val pts = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"),
-        (col("l_extendedprice") / col("l_quantity")).as("unit_price"))
-      val iv = t(s, dir, "part").select(col("p_partkey"),
-        (col("p_retailprice") - 1.0).as("lo"),
-        (col("p_retailprice") + 1.0).as("hi"))
-      RangeJoin.pointInInterval(pts, iv, "unit_price", "lo", "hi",
-          chunkWidth = 2.0)
-        .select("l_orderkey", "l_linenumber", "p_partkey", "unit_price")
-    }),
-
-    // ----- interval-overlap join: even parts' ±1.0 price bands vs
-    // odd parts' ±0.5 bands — chunked equi-join, each overlapping
-    // pair emitted once (in its overlap-start chunk)
-    "q_interval_overlap" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-      val a = p.filter(col("p_partkey") % 2 === 0)
-        .select(col("p_partkey").as("a_key"),
-          (col("p_retailprice") - 1.0).as("a_lo"),
-          (col("p_retailprice") + 1.0).as("a_hi"))
-      val b = p.filter(col("p_partkey") % 2 === 1)
-        .select(col("p_partkey").as("b_key"),
-          (col("p_retailprice") - 0.5).as("b_lo"),
-          (col("p_retailprice") + 0.5).as("b_hi"))
-      RangeJoin.intervalOverlap(a, b, "a_lo", "a_hi", "b_lo", "b_hi",
-          chunkWidth = 2.0)
-        .select("a_key", "b_key")
-    }),
-
-    // ----- as-of join: each click matched with the user's latest
-    // at-or-before purchase (point-in-time lookup; epoch micros keep
-    // both engines' comparisons exact)
-    "q_asof_join" -> ((s, dir) => {
-      val ev = readEvents(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("tsu"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("ptsu"),
-          unix_micros(col("ts")).as("purchase_tsu"),
-          col("value").as("purchase_value"))
-      AsofJoin.asof(clicks, purchases, Seq("user_id"), "tsu", "ptsu",
-        Seq("purchase_tsu", "purchase_value"))
-    }),
-
-    // ----- per-group exact quantiles (window partitioned by group —
-    // the scale-safe grouped companion to q_quantiles)
-    "q_grouped_quantiles" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.groupedExactQuantiles(li, "l_returnflag",
-          "l_quantity", Seq(0.25, 0.5, 0.9))
-        .withColumnRenamed("l_returnflag", "flag")
-    }),
-
-    // ----- per-group describe(): fused grouped base stats + grouped
-    // exact medians
-    "q_grouped_describe" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.groupedDescribe(li, "l_returnflag",
-          Seq("l_quantity", "l_discount"))
-        .withColumnRenamed("l_returnflag", "flag")
-    }),
-
-    // ----- forward-fill over the event stream (nulls planted per
-    // event_id, filled per user in (ts, event_id) order)
-    "q_forward_fill" -> ((s, dir) => {
-      val ev = readEvents(s, dir).select(col("event_id"),
-        col("user_id"), unix_micros(col("ts")).as("tsu"),
-        when(col("event_id") % 7 === 0, lit(null).cast("double"))
-          .otherwise(col("value")).as("value"))
-      EventOps.forwardFill(ev, Seq("user_id"),
-        Seq("tsu", "event_id"), Seq("value"))
-    }),
-
-    // ----- resample: per-user daily grid, last observation at or
-    // before each tick carried forward (null value = no measurement)
-    "q_resample" -> ((s, dir) => {
-      val day = 86400000000L
-      val ev = readEvents(s, dir).select(col("event_id"),
-        col("user_id"), unix_micros(col("ts")).as("tsu"),
-        when(col("event_id") % 7 === 0, lit(null).cast("double"))
-          .otherwise(col("value")).as("value"))
-      EventOps.resample(ev, Seq("user_id"), "tsu", "event_id",
-        "value", stepMicros = day)
-    }),
-
-    // ----- event analytics: weekly cohort retention matrix
-    "q_retention" -> ((s, dir) => {
-      val ev = readEvents(s, dir)
-      EventOps.cohortRetention(ev, "user_id", "ts", "week")
-    }),
-
-    // ----- event analytics: ordered funnel (view -> click -> purchase),
-    // times compared as epoch micros for engine portability
-    "q_funnel" -> ((s, dir) => {
-      val ev = readEvents(s, dir).select(col("user_id"),
-        col("event_type"), unix_micros(col("ts")).as("tsu"))
-      EventOps.funnel(ev, Seq("view", "click", "purchase"),
-        "user_id", "tsu")
-    }),
-
-    // ----- the same funnel under a 1-day per-step conversion
-    // deadline (first-touch greedy — see EventOps.funnel)
-    "q_funnel_windowed" -> ((s, dir) => {
-      val ev = readEvents(s, dir).select(col("user_id"),
-        col("event_type"), unix_micros(col("ts")).as("tsu"))
-      EventOps.funnel(ev, Seq("view", "click", "purchase"),
-        "user_id", "tsu", maxStepGap = 86400000000L)
-    }),
-
-    // ----- dedup: exact on the documents table
-    "q_dedup_exact" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Dedup.exact(d, Seq("text"), "doc_id")
-        .select(col("doc_id"), col("n_dups"))
-    }),
-
-    // ----- text analysis: token counting
-    "q_token_count" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(col("doc_id"), T.tokenCount(col("text")).as("n_tokens"))
-    }),
-
-    // ----- composite language ID: marker words where they speak,
-    // else und-<Script> from script detection (same plants as
-    // q_script_id so every branch is exercised)
-    "q_lang_full" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val sample = when(col("doc_id") % 7 === 1,
-          lit("Привет мир, это проверка кириллицы"))
-        .when(col("doc_id") % 7 === 2, lit("你好世界这是中文测试文本"))
-        .when(col("doc_id") % 7 === 3,
-          lit("こんにちは世界 カタカナ テスト"))
-        .when(col("doc_id") % 7 === 4,
-          lit("안녕하세요 세계 한국어 텍스트"))
-        .when(col("doc_id") % 7 === 5,
-          lit("नमस्ते दुनिया यह हिंदी परीक्षण है"))
-        .when(col("doc_id") % 7 === 6,
-          lit("สวัสดีชาวโลก นี่คือข้อความภาษาไทย"))
-        .otherwise(col("text"))
-      d.select(col("doc_id"), T.langIdFull(sample).as("lang_full"))
-    }),
-
-    // ----- feature hashing: model-free text embedding, nonzero
-    // coordinates exploded so the oracle replays buckets and signs
-    "q_hash_vectorize" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      d.select(col("doc_id"),
-          posexplode(T.hashingVector(col("text"), 256))
-            .as(Seq("__b", "__w")))
-        .filter(col("__w") =!= 0)
-        .select(col("doc_id"), col("__b").cast("long").as("bucket"),
-          col("__w").as("weight"))
-    }),
-
-    // ----- text analysis: quality scoring
-    "q_text_quality" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(col("doc_id"),
-        T.charLen(col("text")).as("n_chars_m"),
-        round(T.punctRatio(col("text")), 6).as("punct_ratio"),
-        round(T.stopwordRatio(col("text")), 6).as("stopword_ratio"))
-    }),
-
-    // ----- text analysis: document fingerprint
-    "q_fingerprint" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(col("doc_id"), T.fingerprint(col("text")).as("fp"))
-    }),
-
-    // ----- batch sessionization (gap-based, window-lag formulation)
-    "q_sessionize" -> ((s, dir) => {
-      val ev = readEvents(s, dir)
-      StreamingOps.finalizeSessions(s, ev, gapMs = 30 * 60 * 1000)
-        .select(col("user_id"),
-          unix_micros(col("session_start")).as("start_us"),
-          unix_micros(col("session_end")).as("end_us"),
-          col("n_events"))
-    }),
-
-    // ----- text analysis: n-gram-heuristic language ID
-    "q_lang_id" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(col("doc_id"), T.langId(col("text")).as("lang_id"))
-    }),
-
-    // ----- text analysis: composite quality score
-    "q_quality_score" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      d.select(col("doc_id"),
-        T.qualityScore(col("text")).as("quality"))
-    }),
-
-    // ----- operating-point selection: exact confusion counts for
-    // the rule label vs the quality score at pinned thresholds
-    "q_threshold_metrics" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val scored = d.select(
-        T.qualityScore(col("text")).as("score"),
-        T.qualityKeep(col("text")).cast("double").as("label"))
-      Classifier.thresholdMetrics(scored, "score", "label",
-        Seq(0.2, 0.45, 0.7, 0.95))
-    }),
-
-    // ----- text curation: canonical normalization (control chars ->
-    // space, whitespace collapse, trim); tabs/newlines planted per-row
-    "q_normalize_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val messy = concat(lit("\t "), col("text"), lit("\u0001\n"),
-        col("source"), lit("  end "))
-      d.select(col("doc_id"), T.normalizeText(messy).as("norm"))
-    }),
-
-    // ----- text curation: Unicode NFC composition. Decomposed accents
-    // (combining U+0301/U+0308) planted per-row; the kernel must
-    // compose them so the fingerprint of composed and decomposed
-    // spellings agrees. DuckDB nfc_normalize is the oracle.
-    "q_nfc_normalize" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val messy = concat(substring(col("text"), 1, 40),
-        lit(" cafe\u0301 touche\u0301 u\u0308ber")) // decomposed accents
-      d.select(col("doc_id"),
-        T.nfcNormalize(messy).as("norm"),
-        T.fingerprintNfc(messy).as("fp_nfc"))
-    }),
-
-    // ----- text curation: URL -> registrable domain + blocklist flag
-    // (URLs planted engine-identically from doc_id, like q_pii_redact)
-    "q_url_domains" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val withUrls = concat(col("text"),
-        lit(" see https://sub"), col("doc_id") % 7,
-        lit(".site"), col("doc_id") % 13,
-        lit(".org/page/"), col("doc_id"),
-        lit(" and http://ads"), col("doc_id") % 3,
-        lit(".example.net/x"),
-        lit(" plus https://shop.brand"), col("doc_id") % 5,
-        lit(".co.uk/p"), // exercises the 2-label public-suffix path
-        lit(" or https://www.dist"), col("doc_id") % 4,
-        lit(".k12.ca.us/home")) // 3-label suffix: registers at label 4
-      d.select(col("doc_id"),
-          posexplode(T.urlDomains(withUrls))
-            .as(Seq("url_idx", "domain")))
-        .select(col("doc_id"), col("url_idx").cast("long"),
-          col("domain"),
-          col("domain").isin("site3.org", "site7.org").as("blocked"))
-    }),
-
-    // ----- URL canonicalization: mixed-case scheme/host, default
-    // ports, fragments and tracking params planted engine-identically
-    // from doc_id, then normalized to the dedup key form
-    "q_url_normalize" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val url = concat(
-        when(col("doc_id") % 2 === 0, lit("HTTP://Sub"))
-          .otherwise(lit("HTTPS://Sub")),
-        col("doc_id") % 7, lit(".Example.COM"),
-        when(col("doc_id") % 2 === 0, lit(":80")).otherwise(lit(":443")),
-        lit("/Article/"), col("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(lit("?utm_source=news&id="), col("doc_id") % 13,
-            lit("&fbclid=abc")))
-          .when(col("doc_id") % 3 === 1, lit("?utm_campaign=x"))
-          .otherwise(lit("")),
-        lit("#Section"), col("doc_id") % 5)
-      d.select(col("doc_id"), url.as("url"),
-        T.normalizeUrl(url).as("canonical"))
-    }),
-
-    // ----- crawl politeness: RFC 9309 robots.txt — real files
-    // through three formatting layouts (comments/CRLF/case noise,
-    // decisions mode-invariant): group selection by agent
-    // specificity, longest-pattern rule precedence, the $-anchored
-    // wildcard, crawl-delay millis and the sitemap pointer all
-    // replay closed-form
-    "q_robots" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val r = Robots.synthRobots(d, "doc_id", "__m", "content")
-      Multimodal.decodeBatches(r, "content",
-          Robots.robotsSchema)(Robots.decodeRobots)
-        .select(col("doc_id"), col("n_groups"), col("n_rules"),
-          col("crawl_delay_ms"), col("sitemap"),
-          col("graft_private"), col("graft_ok"), col("graft_pdf"),
-          col("graft_pdfx"), col("graft_public"), col("other_public"))
-    }),
-
-    // ----- the crawl chain END-TO-END for politeness: robots.txt
-    // bodies arrive inside WARC records under the full HTTP framing
-    // cycle (identity/chunked/gzip/deflate/zstd/BROTLI, doc_id%8) —
-    // WARC walk → framing decode → RFC 9309 evaluation, decisions
-    // replayed closed-form like q_robots
-    "q_crawl_robots" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        concat(lit("User-agent: GraftBot\nDisallow: /private/\n" +
-          "Allow: /private/ok\nDisallow: /*.pdf$\nCrawl-delay: "),
-          (col("doc_id") % 7 + 1).cast("string"),
-          lit("\nUser-agent: *\nDisallow: /\n" +
-            "Sitemap: https://example.org/sm"),
-          col("doc_id"), lit(".xml\n")).as("__b"),
-        (col("doc_id") % 8).cast("int").as("__f"),
-        lit(0).cast("int").as("__c"))
-      val warcs = Archive.synthHttpWarcs(d, "doc_id", "__b", "__f",
-        "__c", "content")
-      val bodies = Archive.warcRecordRowsAuto(warcs, "doc_id",
-          "content")
-        .filter(col("warc_type") === "response")
-        .select(col("doc_id"),
-          encode(col("body_text"), "UTF-8").as("robots_bytes"))
-      Multimodal.decodeBatches(bodies, "robots_bytes",
-          Robots.robotsSchema)(Robots.decodeRobots)
-        .select(col("doc_id"), col("n_groups"), col("n_rules"),
-          col("crawl_delay_ms"), col("sitemap"),
-          col("graft_private"), col("graft_ok"), col("graft_pdf"),
-          col("graft_pdfx"), col("graft_public"), col("other_public"))
-    }),
-
-    // ----- crawl frontier: sitemaps.org XML — urlset (plain and
-    // namespace-prefixed/CDATA layouts) and sitemapindex through the
-    // shared XML scanner; lastmod parses to exact epoch days,
-    // priority to exact milli, and the per-doc aggregates replay
-    // closed-form from the planted arithmetic
-    "q_sitemap" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 5 + 2).cast("int").as("__n"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val sm = Sitemap.synthSitemaps(d, "doc_id", "__n", "__m",
-        "content")
-      Multimodal.decodeBatches(sm, "content",
-          Sitemap.sitemapSchema)(Sitemap.decodeSitemap)
-        .select(col("doc_id"), col("kind"), col("n_urls"),
-          col("first_loc"), col("lastmod_day_sum"),
-          col("priority_milli_sum"), col("n_daily"))
-    }),
-
-    // ----- IDN hosts: the synthesizer converts a Unicode host to
-    // its ACE (xn--) form with the JDK's OWN IDN implementation (an
-    // independent reference), the operator decodes it back via the
-    // from-spec RFC 3492 bootstring, and ALSO re-encodes — so both
-    // directions pin against the reference inside the oracle
-    "q_idn_hosts" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("bücher"), col("doc_id") % 50,
-          lit(".ärger"), col("doc_id") % 7,
-          lit(".例え.org")).as("__uni"))
-      val ace = Idn.synthAceHosts(d, "__uni", "content")
-      Multimodal.decodeBatches(ace, "content",
-          Idn.idnSchema)(Idn.decodeIdnHost)
-        .select(col("doc_id"), col("uni_host"), col("ace_roundtrip"))
-    }),
-
-    // ----- text curation: PII redaction. The synthetic corpus has no
-    // PII, so the query plants engine-identically-constructed PII
-    // (derived from doc_id) and asserts the redaction chain strips it.
-    "q_pii_redact" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val withPii = concat(col("text"),
-        lit(" reach user"), col("doc_id"),
-        lit("@mail.example.org or host "),
-        (col("doc_id") % 200) + 10,
-        lit(".20.30.40, tel +1 (555) 010-"),
-        lpad((col("doc_id") % 10000).cast("string"), 4, "0"))
-      d.select(col("doc_id"), T.redactPii(withPii).as("clean"))
-    }),
-
-    // ----- Luhn-validated card redaction: industry test numbers
-    // (checksum-valid) must become <CARD>; the one-digit-off
-    // near-miss must NOT — it falls through to the phone pass, which
-    // is exactly the claimed semantic (regexes can't tell cards from
-    // long numbers; the checksum can)
-    "q_redact_cards" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = concat(col("text"),
-        when(col("doc_id") % 3 === 0,
-          lit(" pay 4111 1111 1111 1111 now"))
-          .when(col("doc_id") % 3 === 1,
-            lit(" amex 378282246310005 ok"))
-          .otherwise(lit(" card 5555-5555-5555-4444 used")),
-        lit(" order 4111 1111 1111 1112 kept," +
-          " ip 10.1.2.3, mail a@b.io"))
-      d.select(col("doc_id"), T.redactPiiFull(planted).as("clean"))
-    }),
-
-    // ----- mod-97-validated IBAN redaction: real (checksum-valid)
-    // IBANs — compact and print-spaced, one followed by a shaped
-    // uppercase token the greedy regex swallows (the prefix search
-    // must still redact the IBAN and keep REF7) — become <IBAN>; the
-    // one-digit-off near-miss and the short invoice code survive
-    "q_redact_iban" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = concat(col("text"),
-        when(col("doc_id") % 4 === 0,
-          lit(" acct DE89370400440532013000 eom"))
-          .when(col("doc_id") % 4 === 1,
-            lit(" acct GB29 NWBK 6016 1331 9268 19 REF7 eom"))
-          .when(col("doc_id") % 4 === 2,
-            lit(" near DE89370400440532013001 eom"))
-          .otherwise(lit(" wire FR1420041010050500013M02606 eom")),
-        lit(" ref AB12CDEF kept"))
-      d.select(col("doc_id"), T.redactIbans(planted).as("clean"))
-    }),
-
-    // ----- text curation: repetition signals. Docs are single-line, so
-    // the line-dup signals run over a two-line doc built per-row (even
-    // ids repeat their text; odd ids append a unique tail) while the
-    // bigram signal runs over the raw text.
-    "q_repetition" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val doc = concat(col("text"), lit("\n"),
-        when(col("doc_id") % 2 === 0, col("text")).otherwise(lit("tail")))
-      d.select(col("doc_id"),
-        round(T.duplicateLineFraction(doc), 6).as("dup_line_frac"),
-        round(T.duplicateLineCharFraction(doc), 6).as("dup_char_frac"),
-        round(T.topBigramCharFraction(col("text")), 6)
-          .as("top_bigram_frac"))
-    }),
-
-    // ----- text curation: composite keep/drop filter with per-rule
-    // reasons (Gopher-style heuristics)
-    "q_quality_filter" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      d.select(col("doc_id"),
-        T.qualityKeep(col("text")).as("keep"),
-        T.qualityReasons(col("text")).as("reasons"))
-    }),
-
-    // ----- corpus rebalancing: per-language deterministic sampling
-    "q_stratified_sample" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Sampling.stratifiedSampleByHash(d, "doc_id", "lang",
-          Map("en" -> 0.5, "es" -> 0.25, "zh" -> 0.75), default = 1.0)
-        .select("doc_id", "lang")
-    }),
-
-    // ----- quality selection: best k docs per source (rank filter →
-    // WindowGroupLimit: per-task top-k heaps BEFORE the shuffle)
-    "q_topk_per_group" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Sampling.topKPerGroup(d.select("doc_id", "source", "n_chars"),
-        "source", "n_chars", "doc_id", k = 5)
-    }),
-
-    // ----- benchmark decontamination: flag docs sharing a 5-gram with
-    // the simulated eval set (every 50th doc)
-    "q_decontaminate" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 50 === 0)
-      Decontaminate.flagContaminated(d, "doc_id", "text",
-        bench, "text", n = 5)
-    }),
-
-    // ----- bloom-prefiltered decontamination: bit-identical to
-    // q_decontaminate (bloom has no false negatives; exact verify
-    // kills the false positives) but corpus grams are pruned MAP-SIDE
-    // before any exchange — the big-benchmark scale path
-    "q_bloom_decontaminate" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 50 === 0)
-      Decontaminate.flagContaminatedBloom(d, "doc_id", "text",
-        bench, "text", n = 5, expectedGrams = 1L << 16)
-    }),
-
-    // ----- corpus-wide boilerplate scrub: drop segments occurring
-    // more than maxRepeats times across the WHOLE corpus (word-level
-    // here — the synthetic docs are single-paragraph)
-    "q_corpus_scrub" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      CorpusScrub.removeRepeatedSegments(d, "doc_id", "text",
-        sep = " ", maxRepeats = 1000L)
-    }),
-
-    // ----- corpus vocabulary: exact top-50 terms
-    "q_top_terms" -> ((s, dir) =>
-      CorpusScrub.topTerms(t(s, dir, "documents"), "text", 50)),
-
-    // ----- sketch-based heavy hitters: one mergeable frequent-items
-    // state per partition instead of a term-keyed shuffle; EXACT while
-    // distinct terms fit the tracked capacity (they do here), so the
-    // oracle is the exact top-k
-    "q_top_terms_approx" -> ((s, dir) =>
-      Sketches.topTermsApprox(t(s, dir, "documents"), "text", 50)),
-
-    // ----- per-doc language mix over paragraph segments: planted
-    // second paragraphs in fr/de/es; dominance ties (1 seg vs 1 seg)
-    // break to the lexicographically smallest tag
-    "q_lang_mix" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = concat(col("text"),
-        when(col("doc_id") % 4 === 0,
-          lit("\n\nle chat est sur une table et les autres"))
-          .when(col("doc_id") % 4 === 1,
-            lit("\n\nder hund und die katze ist nicht ein zu"))
-          .when(col("doc_id") % 4 === 2,
-            lit("\n\nel perro y la casa de los del que"))
-          .otherwise(lit("")))
-      CorpusScrub.langMix(d.withColumn("text", planted), "doc_id",
-        "text")
-    }),
-
-    // ----- templated-ness: every 6th doc gains a common boilerplate
-    // tail, so its grams' corpus df jumps; originals stay near
-    // df 1 — mean-df and shared-fraction in exact integer milli
-    "q_template_score" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = concat(col("text"),
-        when(col("doc_id") % 6 === 0,
-          lit(" standard footer boilerplate block common to many" +
-            " pages")).otherwise(lit("")))
-      CorpusScrub.templateScore(
-        d.withColumn("text", planted), "doc_id", "text", n = 3)
-    }),
-
-    // ----- per-doc OOV rate vs the corpus's own df>=50 vocabulary:
-    // word-salad/off-domain screen, exact integer milli fraction
-    "q_oov_rate" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      CorpusScrub.oovRate(d, "doc_id", "text", minDf = 50L)
-    }),
-
-    // ----- per-doc characteristic terms (exact-rational idf variant —
-    // ln's last ulp is libm-specific, see topTfidfTerms)
-    "q_tfidf_terms" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      CorpusScrub.topTfidfTerms(d, "doc_id", "text", k = 3,
-        logIdf = false)
-    }),
-
-    // ----- ranked retrieval: fixed-point BM25 (rational idf — see
-    // Retrieval), queries = first 6 tokens of docs 0-2, top 10 docs
-    // per query; the source doc itself must surface
-    "q_bm25_topk" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val qs = d.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(
-            graft.functions.TextFunctions.tokens(col("text")), 1, 6))
-            .as("qtext"))
-      Retrieval.bm25TopK(d, "doc_id", "text", qs, "query_id",
-        "qtext", k = 10)
-    }),
-
-    // ----- the same retrieval through the PERSISTENT inverted index
-    // (build bucketed-by-term postings, then serve): the oracle is
-    // q_bm25_topk's VERBATIM — the hash match proves serve == scan
-    "q_text_index_topk" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      TextIndex.build(d, "doc_id", "text", "g_q_text_index",
-        buckets = 16)
-      val qs = d.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(
-            graft.functions.TextFunctions.tokens(col("text")), 1, 6))
-            .as("qtext"))
-      TextIndex.query(s, "g_q_text_index", qs, "query_id", "qtext",
-        k = 10)
-    }),
-
-    // ----- exact order statistics with engine-controlled interpolation
-    "q_quantiles" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.exactQuantiles(li, "l_extendedprice", QuantilePs)
-    }),
-
-    // ----- describe(): per-measure-column exact summary row
-    "q_describe" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.describeNumeric(li,
-        Seq("l_quantity", "l_extendedprice", "l_discount"))
-    }),
-
-    // ----- Pearson correlation matrix: one aggregation, exact
-    // decimal sums, one exact int->double conversion per sum
-    "q_feature_corr" -> ((s, dir) => {
-      val li = tp(s, dir, "lineitem")
-      ColumnStats.correlationMatrix(li, corrCols)
-    }),
-
-    // ----- the same exact-sum correlations PER GROUP (one keyed
-    // aggregation; cells explode from each group's row)
-    "q_grouped_corr" -> ((s, dir) => {
-      val li = tp(s, dir, "lineitem")
-      ColumnStats.groupedCorrelationMatrix(li, "l_returnflag",
-        corrCols)
-    }),
-
-    // ----- winsorize: clip l_extendedprice to its exact [p05, p95];
-    // thresholds from the distributed quantile path, map-only clip
-    "q_winsorize" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.winsorize(li, "l_extendedprice", 0.05, 0.95)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_extendedprice").as("w_price"))
-    }),
-
-    // ----- per-group winsorize: each return-flag's prices clip to
-    // that group's own exact [p05, p95]
-    "q_grouped_winsorize" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.groupedWinsorize(li, "l_returnflag",
-          "l_extendedprice", 0.05, 0.95)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_returnflag"), col("l_extendedprice").as("w_price"))
-    }),
-
-    // ----- robust z-score: (x - median) / MAD, both thresholds from
-    // the exact quantile path (heavy-tail-safe outlier score)
-    "q_robust_z" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.robustZScore(li, "l_extendedprice")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("robust_z"))
-    }),
-
-    // ----- drift report between two corpus snapshots (split by ship
-    // date): one fused agg per side, exact-decimal-sum means
-    "q_drift_report" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val cut = "1998-06-01"
-      ColumnStats.driftReport(
-        li.filter(col("l_shipdate") < lit(cut)),
-        li.filter(col("l_shipdate") >= lit(cut)),
-        Seq("l_quantity", "l_extendedprice", "l_discount"))
-    }),
-
-    // ----- categorical drift: per-(column, category) frequency
-    // shift across the same ship-date split
-    "q_cat_drift" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val cut = "1998-06-01"
-      ColumnStats.categoricalDriftReport(
-        li.filter(col("l_shipdate") < lit(cut)),
-        li.filter(col("l_shipdate") >= lit(cut)),
-        Seq("l_returnflag", "l_linestatus"))
-    }),
-
-    // ----- row-level snapshot content diff: old = all but doc_id%10
-    // == 3, new = all but %10 == 7 with every %5 == 0 text amended —
-    // so added/removed/changed/unchanged all appear; the operator
-    // compares 8-byte fingerprints, the oracle compares raw text
-    "q_snapshot_diff" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Snapshot.contentDiff(
-        d.filter(col("doc_id") % 10 =!= 3),
-        d.filter(col("doc_id") % 10 =!= 7)
-          .withColumn("text", when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(" v2"))).otherwise(col("text"))),
-        "doc_id", Seq("text"))
-    }),
-    "q_snapshot_diff_summary" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Snapshot.contentDiffSummary(
-        d.filter(col("doc_id") % 10 =!= 3),
-        d.filter(col("doc_id") % 10 =!= 7)
-          .withColumn("text", when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(" v2"))).otherwise(col("text"))),
-        "doc_id", Seq("text"))
-    }),
-
-    // ----- exact percentile rank (cume_dist semantics) from the
-    // range-partitioned cumulative frame — no global window
-    "q_pct_rank" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.percentileRank(li, "l_extendedprice")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("pct_rank"))
-    }),
-
-    // ----- Tukey fences: outliers outside [Q1-1.5*IQR, Q3+1.5*IQR];
-    // prices are near-uniform (no tail), so spikes are planted on
-    // 1-in-997 rows — the flag must catch exactly those
-    "q_iqr_outliers" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").withColumn("__v",
-        when(col("l_orderkey") % 997 === 0,
-          col("l_extendedprice") * 50).otherwise(col("l_extendedprice")))
-      ColumnStats.iqrOutliers(li, "__v", k = 1.5)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("is_outlier"))
-    }),
-
-    // ----- per-group robust z: each flag's prices score against
-    // that flag's own median/MAD
-    "q_grouped_robust_z" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      ColumnStats.groupedRobustZScore(li, "l_returnflag",
-          "l_extendedprice")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_returnflag"), col("robust_z"))
-    }),
-
-    // ----- equal-frequency binning: exact quartile thresholds, the
-    // same <=-upper bin chain as q_binning
-    "q_eqfreq_binning" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      Binning.equalFrequencyBins(li, "l_extendedprice", bins = 4)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("bin_id").cast("int").as("bin_id"))
-    }),
-
-    // ----- sequence packing: chunks -> ~256-token training packs,
-    // shard-parallel deterministic contiguous fill
-    "q_pack_chunks" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val chunks = Chunking.chunkByTokens(d, "doc_id", "text",
-        maxTokens = 32)
-      Chunking.packChunks(chunks, "doc_id", "chunk_id",
-          "chunk_tokens", budgetTokens = 256, nShards = 8)
-        .select(col("doc_id"), col("chunk_id").cast("long"),
-          col("shard"), col("pack_id"))
-    }),
-
-    // ----- embedding stats: exact per-label centroids (long form)
-    "q_group_centroids" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      VectorStats.groupCentroids(e, "label", "embedding")
-    }),
-
-    // ----- embedding-space drift between two pseudo-snapshots (the
-    // vec_id parity halves): per-dimension exact mean shift
-    "q_embedding_drift" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      VectorStats.embeddingDrift(
-        e.filter(col("vec_id") % 2 === 0),
-        e.filter(col("vec_id") % 2 === 1), "embedding")
-    }),
-
-    // ----- embedding outliers: vectors far from their own label's
-    // centroid, thresholded at the label's p95 distance quantile
-    "q_centroid_outliers" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      VectorStats.centroidOutliers(e, "label", "embedding", p = 0.95)
-    }),
-
-    // ----- the distributed half of PCA: the corpus reduces to ONE
-    // d(d+1)/2-long gram buffer (all-integer, partitioning-proof);
-    // the eigen solve on it is driver-trivial (PcaSpec)
-    "q_gram_matrix" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      VectorStats.gramMatrix(e, "embedding")
-    }),
-
-    // ----- tokenizer prep: overlapped token-window chunking
-    "q_chunk_tokens" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      Chunking.chunkByTokens(d, "doc_id", "text",
-          maxTokens = 64, overlap = 16)
-        .select(col("doc_id"), col("chunk_id").cast("long"),
-          col("chunk_text"), col("chunk_tokens").cast("long"))
-    }),
-
-    // ----- multimodal: media wrap + content features (byte length +
-    // sha-256 content id; the crc32 stubs have no DuckDB analog and
-    // are covered by unit tests instead)
-    "q_media_features" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val m = Multimodal.mediaFromText(d, "doc_id", "text")
-      m.select(col("media_id"),
-        length(col("content")).cast("long").as("byte_len"),
-        sha2(col("content"), 256).as("content_id"))
-    }),
-
-    // ----- near-dup: MinHash + LSH banding over char shingles
-    "q_minhash_pairs" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Dedup.minhashDupPairs(d, "doc_id", "text")
-    }),
-
-    // ----- near-dup INCREMENT: persistent band index over the standing
-    // corpus (doc_id % 5 != 0), new batch matched against it without
-    // recomputing a single corpus signature
-    "q_neardup_increment" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      BandIndex.build(d.filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", "graft_band_idx")
-      BandIndex.neardupIncrement(s, "graft_band_idx",
-        d.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-    }),
-
-    // ----- dedup cluster collapse: minhash pairs -> connected
-    // components -> one representative per document (the key a
-    // "keep one per cluster" delete actually uses)
-    "q_dedup_components" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val pairs = Dedup.minhashDupPairs(d, "doc_id", "text")
-        .select("id_a", "id_b")
-      Dedup.duplicateClusters(d.select("doc_id"), "doc_id", pairs)
-        .select(col("id").as("doc_id"), col("cluster_id"))
-    }),
-
-    // ----- the delete itself: minhash pairs -> clusters -> keep the
-    // smallest id per cluster, drop the rest
-    "q_dedup_clean" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val pairs = Dedup.minhashDupPairs(d, "doc_id", "text")
-        .select("id_a", "id_b")
-      Dedup.dedupCorpus(d, "doc_id", pairs)
-        .select("doc_id", "source", "n_chars")
-    }),
-
-    // ----- cross-source contamination matrix: every 17th doc's text
-    // becomes one of 7 shared boilerplate variants, so sources
-    // mirror each other through those fingerprints; natural text
-    // never collides across sources at this SF
-    "q_source_overlap" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = when(col("doc_id") % 17 === 0,
-          concat(lit("Shared boilerplate block "),
-            (col("doc_id") % 7).cast("string")))
-        .otherwise(col("text"))
-      Dedup.fingerprintOverlap(
-        d.withColumn("text", planted), "source", "text")
-    }),
-
-    // ----- edit-distance entity resolution: 200 md5-derived entity
-    // names, four deterministic typo variants (deletion / insertion /
-    // substitution / clean) — within-entity variants pair at ed ≤ 2,
-    // cross-entity names don't; trigram blocking is recall-complete
-    // here (len ≥ 9 > 3·2+2, no gram over the cap)
-    "q_edit_pairs" -> ((s, dir) =>
-      Dedup.editDistancePairs(entityNames(t(s, dir, "documents")),
-        "doc_id", "name", maxDist = 2)),
-
-    // ----- the full entity-resolution compose: edit-distance pairs
-    // → star-contraction components → every record labeled with its
-    // entity cluster (the same machinery as document dedup, on a
-    // field)
-    "q_entity_clusters" -> ((s, dir) => {
-      val named = entityNames(t(s, dir, "documents"))
-      val pairs = Dedup.editDistancePairs(named, "doc_id", "name",
-        maxDist = 2).select("id_a", "id_b")
-      Dedup.duplicateClusters(named.select("doc_id"), "doc_id", pairs)
-        .select(col("id").as("doc_id"), col("cluster_id"))
-    }),
-
-    // ----- quality-ranked canonical selection: same minhash
-    // clusters, but keep the LONGEST member (n_chars, ties → smallest
-    // doc_id) instead of the arbitrary smallest id
-    "q_dedup_keep_best" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val pairs = Dedup.minhashDupPairs(d, "doc_id", "text")
-        .select("id_a", "id_b")
-      Dedup.dedupCorpusKeepBest(d, "doc_id", "n_chars", pairs)
-        .select("doc_id", "source", "n_chars")
-    }),
-
-    // ----- leakage-safe split: near-dup cluster members always land
-    // in the SAME split (a per-id split contaminates eval)
-    "q_leakage_safe_split" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val pairs = Dedup.minhashDupPairs(d, "doc_id", "text")
-        .select("id_a", "id_b")
-      Sampling.leakageSafeSplit(d, "doc_id", pairs,
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split")
-    }),
-
-    // ----- cross-doc boilerplate removal: segments present in >= 50
-    // distinct docs (the planted footer hits every 3rd / 4th doc)
-    // vanish from ALL docs; text rebuilt in original order
-    "q_boilerplate_scrub" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = d.select(col("doc_id"), concat(
-        regexp_replace(col("text"), " table ", "|"),
-        when(col("doc_id") % 3 === 0,
-          lit("|SUBSCRIBE NOW - weekly newsletter footer"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 4 === 1,
-          lit("|(c) example corp - all rights reserved"))
-          .otherwise(lit(""))).as("t2"))
-      SegmentDedup.removeBoilerplate(planted, "doc_id", "t2", "|",
-        minDocs = 50L)
-    }),
-
-    // ----- corpus-wide keep-first segment dedup: only the globally
-    // first occurrence (by doc_id, then position) of each segment
-    // survives
-    "q_segment_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = d.select(col("doc_id"),
-        regexp_replace(col("text"), " value ", "|").as("t2"))
-      SegmentDedup.dedupSegments(planted, "doc_id", "t2", "|")
-    }),
-
-    // ----- deterministic train/val/test split by id hash (stable
-    // across engines, partitionings and corpus growth)
-    "q_det_split" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Sampling.deterministicSplit(d,
-          "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split")
-    }),
-
-    // ----- near-dup: 60-bit SimHash, pigeonhole blocking on
-    // maxDist+1 = 4 chunks of 15 bits (recall-lossless for hamming
-    // <= 3). Larger radii are supported but each extra chunk narrows
-    // every chunk's width — at maxDist = 8 the 6-7-bit chunks leave
-    // only ~100 buckets each and candidate generation inflates ~25x,
-    // so the headline query keeps the tight radius.
-    "q_simhash_pairs" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      Dedup.simhashDupPairs(d, "doc_id", "text", maxDist = 3)
-    }),
-
-    // ----- near-dup: word-3-gram Jaccard, df-capped inverted index
-    "q_ngram_jaccard" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3,
-        threshold = 0.8)
-    }),
-
-    // ----- asymmetric containment: |A∩B|/min(|A|,|B|) — the
-    // short-doc-quoted-in-long-doc catch Jaccard misses
-    "q_ngram_containment" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      Dedup.ngramContainmentPairs(d, "doc_id", "text", n = 3,
-        threshold = 0.8)
-    }),
-
-    // ----- the delete half: drop each pair's CONTAINED side
-    "q_scrub_contained" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Dedup.scrubContained(d, "doc_id", "text", n = 3,
-          threshold = 0.8)
-        .select("doc_id")
-    }),
-
-    // ----- ANN: brute-force quantized-cosine top-10 over embeddings
-    "q_ann_topk" -> ((s, dir) => {
-      val emb = tp(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ----- exact Euclidean top-k: the whole ranking in int64 (no
-    // doubles at all — squared distances are exact)
-    "q_l2_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopKL2(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ----- ANN: IVF inverted lists, 4-of-16 probes, exact rerank
-    "q_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10, nCentroids = 16, nProbe = 4)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ----- SQ8: per-dimension uniform byte grid fitted on the exact
-    // milli-unit representation — all-integer fit + encode, one byte
-    // per dimension
-    "q_sq8_encode" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val m = ScalarQuant.fit(emb, "embedding")
-      ScalarQuant.encode(emb, "vec_id", "embedding", m)
-        .select(col("vec_id"),
-          posexplode(col("codes")).as(Seq("__d", "__c")))
-        .select(col("vec_id"),
-          (col("__d") + 1).cast("long").as("dim"),
-          col("__c").as("code"))
-    }),
-
-    // ----- SQ8 serving: integer code-dot candidate scan, exact
-    // quantized-cosine rerank over the candidate set only
-    "q_sq8_topk" -> ((s, dir) => {
-      val emb = tp(s, dir, "embeddings")
-      val m = ScalarQuant.fit(emb, "embedding")
-      ScalarQuant.topK(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", m, k = 10, rerank = 50)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ----- PQ: compress each vector to 4 subspace codes (pinned
-    // codebook so the oracle replays the argmin), exploded to one
-    // (vec_id, subspace, code) row per cell
-    "q_pq_encode" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      ProductQuant.pqEncode(emb, "vec_id", "embedding", pinnedPq)
-        .select(col("vec_id"),
-          posexplode(col("codes")).as(Seq("__s", "__c")))
-        .select(col("vec_id"),
-          (col("__s") + 1).cast("long").as("subspace"),
-          col("__c").cast("long").as("code"))
-    }),
-
-    // ----- PQ: asymmetric-distance top-10 — full-precision queries
-    // against the code-compressed corpus, exact int64 distances
-    "q_pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      ProductQuant.pqTopK(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", pinnedPq, k = 10)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ----- IVF-PQ: coarse-list pruning (same deterministic k-means
-    // as q_ivf_topk) + ADC scoring over the probed lists' codes
-    "q_ivf_pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      ProductQuant.ivfPqTopK(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", pinnedPq, k = 10, nCentroids = 16,
-          nProbe = 4, kmeansIters = 2)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ----- near-dup: banded hyperplane-LSH cosine pairs (recall-tuned
-    // band shape for this corpus; scale defaults documented on the op)
-    "q_cosine_dup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.cosineDupPairs(emb, "vec_id", "embedding", dim = 64,
-        threshold = 0.4, bands = 8, planesPerBand = 4)
-    }),
-
-    // ----- semantic dedup (SemDeDup): k-means-cluster-scoped exact
-    // cosine pairs, then keep one id per connected component
-    // ----- kNN graph: every vector's 5 nearest by exact quantized
-    // cosine, IVF-probe-scoped self-join (pinned k-means, oracle
-    // replays the fit + probes + ranking)
-    "q_knn_graph" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.knnGraph(emb, "vec_id", "embedding", k = 5,
-        nCentroids = 16, nProbe = 2)
-    }),
-
-    // explicit nCentroids: the DuckDB oracle replays the k-means fit
-    // bit-exactly, so k is part of the contract here (the operator's
-    // default is corpus-scaled auto-k)
-    "q_semantic_pairs" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SemanticDedup.semanticDupPairs(emb, "vec_id", "embedding",
-        threshold = 0.4, nCentroids = 16)
-    }),
-    "q_semantic_dedup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SemanticDedup.semanticDedup(emb, "vec_id", "embedding",
-        threshold = 0.4, nCentroids = 16).select("vec_id")
-    }),
-
-    // ----- semantic decontamination: eval = every 50th vector, with
-    // every 100th eval item REPLACED by its successor's embedding (a
-    // train member → planted cosine exactly 1.0); natural eval-train
-    // max cosines sit at 0.33-0.43 on this corpus, so threshold 0.8
-    // flags exactly the plants. Oracle replays the brute-force scan.
-    "q_semantic_decontaminate" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Decontaminate.semanticOverlap(
-        emb.filter(col("vec_id") % 50 =!= 0), "vec_id",
-        semanticEvalSet(emb), "eval_id", "embedding", threshold = 0.8)
-    }),
-    "q_semantic_scrub" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Decontaminate.semanticScrubTrain(
-        emb.filter(col("vec_id") % 50 =!= 0), "vec_id",
-        semanticEvalSet(emb), "eval_id", "embedding", threshold = 0.8)
-        .select("vec_id")
-    }),
-
-    // ----- Unicode script detection: non-Latin rows planted per
-    // doc_id class; the oracle counts the same \x{...} ranges and
-    // replays the first-match dominance chain
-    "q_script_id" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val sample = when(col("doc_id") % 7 === 1,
-          lit("Привет мир, это проверка кириллицы"))
-        .when(col("doc_id") % 7 === 2, lit("你好世界这是中文测试文本"))
-        .when(col("doc_id") % 7 === 3,
-          lit("こんにちは世界 カタカナ テスト"))
-        .when(col("doc_id") % 7 === 4,
-          lit("안녕하세요 세계 한국어 텍스트"))
-        .when(col("doc_id") % 7 === 5,
-          lit("नमस्ते दुनिया यह हिंदी परीक्षण है"))
-        .when(col("doc_id") % 7 === 6,
-          lit("สวัสดีชาวโลก นี่คือข้อความภาษาไทย"))
-        .otherwise(col("text"))
-      d.select(col("doc_id"),
-        T.scriptCount(sample, "latin").cast("long").as("n_latin"),
-        T.scriptCount(sample, "han").cast("long").as("n_han"),
-        T.dominantScript(sample).as("script"))
-    }),
-
-    // ----- encoding damage: plant U+FFFD / UTF-8-as-Latin-1
-    // digraphs on some docs, clean accents on others (must NOT
-    // count); oracle replays the strip-and-measure fraction
-    "q_mojibake" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = when(col("doc_id") % 6 === 1,
-          concat(col("text"), lit(MojiPlants(0))))
-        .when(col("doc_id") % 6 === 2,
-          concat(col("text"), lit(MojiPlants(1))))
-        .when(col("doc_id") % 6 === 3,
-          concat(col("text"), lit(MojiPlants(2))))
-        .when(col("doc_id") % 6 === 4,
-          concat(col("text"), lit(MojiPlants(3))))
-        .when(col("doc_id") % 6 === 5,
-          concat(col("text"), lit(MojiPlants(4))))
-        .otherwise(col("text"))
-      d.select(col("doc_id"),
-        round(T.mojibakeCharFraction(planted), 9).as("moji_frac"))
-    }),
-
-    // ----- encoding REPAIR (the fix to q_mojibake's detect): damage
-    // is DERIVED from the clean probe by the same byte mapping the
-    // repair table inverts — the oracle asserts the semantic result
-    // (fixed == clean) rather than replaying the replace chain, so a
-    // wrong repair pair cannot cancel out on both sides
-    "q_fix_encoding" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val damaged = concat(col("text"), lit(FixProbeDamaged))
-      val fixed = T.fixEncoding(damaged)
-      d.select(col("doc_id"), fixed.as("fixed"),
-        round(T.mojibakeCharFraction(damaged), 9).as("frac_before"),
-        round(T.mojibakeCharFraction(fixed), 9).as("frac_after"))
-    }),
-
-    // ----- domain link-graph PageRank: a 37-node graph synthesized
-    // from doc_id arithmetic — sources span d0..d30 only, so d31..d36
-    // exercise the dangling/no-out-edge path; 5 exact-integer
-    // iterations, every one unrolled as a CTE on the oracle side
-    "q_domain_pagerank" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      def node(c: Column) = concat(lit("d"), c.cast("string"))
-      val e1 = d.select(node(col("doc_id") % 31).as("src"),
-        node((col("doc_id") * 13 + 5) % 37).as("dst"))
-      val e2 = d.select(node(col("doc_id") % 31).as("src"),
-        node((col("doc_id") * 29 + 11) % 37).as("dst"))
-      val edges = e1.union(e2).filter(col("src") =!= col("dst"))
-      LinkGraph.pageRank(edges, "src", "dst", iterations = 5)
-    }),
-
-    // ----- TrustRank: the same 37-node graph with all teleport mass
-    // on seeds d0/d5 — unreachable nodes decay to exactly 0
-    "q_trust_rank" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      def node(c: Column) = concat(lit("d"), c.cast("string"))
-      val e1 = d.select(node(col("doc_id") % 31).as("src"),
-        node((col("doc_id") * 13 + 5) % 37).as("dst"))
-      val e2 = d.select(node(col("doc_id") % 31).as("src"),
-        node((col("doc_id") * 29 + 11) % 37).as("dst"))
-      val edges = e1.union(e2).filter(col("src") =!= col("dst"))
-      LinkGraph.trustRank(edges, "src", "dst", Seq("d0", "d5"),
-        iterations = 5)
-    }),
-
-    // ----- weak components over a deliberately DISCONNECTED link
-    // graph: 10 islands of ≤4 nodes each from doc_id arithmetic —
-    // no cross-island edges by construction, so the component map
-    // must recover exactly the islands' internal connectivity
-    "q_domain_components" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      def node(c: Column) = concat(lit("n"), c.cast("string"))
-      val g = col("doc_id") % 10
-      val edges = d.select(
-          node(g * 4 + col("doc_id") % 4).as("src"),
-          node(g * 4 + expr("doc_id DIV 4") % 4).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      LinkGraph.weakComponents(edges, "src", "dst")
-    }),
-
-    // ----- collocation mining: integer counts, one fixed-shape
-    // double ratio (no logs), deterministic top-k by total order
-    "q_collocations" -> ((s, dir) =>
-      Collocations.collocations(t(s, dir, "documents"), "text",
-        minCount = 5L, topK = 100)),
-
-    // ----- mergeable histogram quantile sketch: the query fits TWO
-    // disjoint half-sketches and merges them — the oracle computes
-    // the single-pass full histogram, so the hash match IS the proof
-    // that increment-merge == full recompute
-    "q_hist_quantile" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").withColumn("v",
-        expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
-      val width = 100000L // $1,000 buckets on the cent grid
-      val sk = HistogramSketch.merge(Seq(
-        HistogramSketch.fit(li.filter(col("l_orderkey") % 2 === 0),
-          "v", Seq("l_returnflag"), width),
-        HistogramSketch.fit(li.filter(col("l_orderkey") % 2 === 1),
-          "v", Seq("l_returnflag"), width)), Seq("l_returnflag"))
-      HistogramSketch.quantileEstimate(sk, Seq("l_returnflag"), width,
-        Seq(500000L, 900000L, 990000L))
-    }),
-
-    // ----- crawl HTML -> text/title/links: pages synthesized by
-    // concatenation around each document (script with a bare '<',
-    // style, comments, entities, one double- and one single-quoted
-    // href — the link pattern must harvest BOTH quote styles)
-    "q_html_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val html = concat(
-        lit("<html><head><title> Doc "), col("doc_id"),
-        lit(" </title><script>var x=1; if (x<2) {}</script>" +
-          "<style>p { color: red; }</style></head><body>" +
-          "<!-- hidden --><p class=\"main\">"), col("text"),
-        lit("</p><a href=\"https://ex.com/"), col("doc_id"),
-        lit("?u=1\">one</a> <a href='https://ex.com/b'>two</a> " +
-          "&amp; &lt;tail&gt; &#39;q&#39; &nbsp;</body></html>"))
-      d.select(col("doc_id"),
-        T.htmlTitle(html).as("title"),
-        T.htmlToText(html).as("text"),
-        size(T.htmlLinks(html)).cast("long").as("n_links"),
-        element_at(T.htmlLinks(html), 1).as("first_link"))
-    }),
-
-    // ----- REAL image-header decode: PNG bytes are synthesized by hex
-    // CONCATENATION (signature + IHDR with planted dims — independent
-    // of the parser), decoded back via the batch-decode plumbing; the
-    // oracle recomputes the planted dims arithmetically, so the round
-    // trip proves the parser reads genuine PNG structure
-    "q_media_dims" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val w = (col("doc_id") % 1920 + 1).cast("int")
-      val h = (col("doc_id") % 1080 + 1).cast("int")
-      val wHex = lpad(hex(w), 8, "0")
-      val hHex = lpad(hex(h), 8, "0")
-      val png = concat(
-        lit("89504E470D0A1A0A"),   // PNG signature
-        lit("0000000D49484452"),   // IHDR length 13 + type
-        wHex, hHex,                // width, height (BE u32)
-        lit("0802000000"),         // depth 8, color RGB, comp/filt/ilace
-        lit("00000000"))           // CRC (not validated by readers)
-      def le16hex(c: Column) = {
-        val x = lpad(hex(c), 4, "0")
-        concat(substring(x, 3, 2), substring(x, 1, 2))
-      }
-      val gif = concat(
-        lit("474946383961"),       // "GIF89a"
-        le16hex(w), le16hex(h),    // logical screen (LE u16)
-        lit("000000"))             // packed/bg/aspect (no GCT needed)
-      // VP8L header: 0x2f then 28 bits LSB-first: (w-1) | (h-1)<<14,
-      // alpha 0, version 0 — assembled as a LE u32
-      val v = (w - 1).cast("long") +
-        (h - 1).cast("long") * lit(16384L)
-      val vHex = {
-        val x = lpad(hex(v), 8, "0")
-        concat(substring(x, 7, 2), substring(x, 5, 2),
-          substring(x, 3, 2), substring(x, 1, 2))
-      }
-      val webp = concat(
-        lit("52494646"), lit("12000000"), // RIFF, size 18 LE
-        lit("57454250"),                  // WEBP
-        lit("5650384C"), lit("06000000"), // VP8L, len 6 LE
-        lit("2F"), vHex, lit("00"))       // sig, header, pad
-      def le32hex(c: Column) = {
-        val x = lpad(hex(c), 8, "0")
-        concat(substring(x, 7, 2), substring(x, 5, 2),
-          substring(x, 3, 2), substring(x, 1, 2))
-      }
-      val bmp = concat(
-        lit("424D"), lit("36000000"), lit("00000000"),
-        lit("36000000"),                  // data offset
-        lit("28000000"),                  // BITMAPINFOHEADER
-        le32hex(w), le32hex(h),
-        lit("0100"), lit("1800"),         // planes, 24 bpp
-        lit("00000000"),                  // BI_RGB
-        lit("00000000"), lit("00000000"), lit("00000000"),
-        lit("00000000"), lit("00000000")) // sizes/res/colors
-      val tiff = concat(
-        lit("49492A00"), lit("08000000"), // II, magic, IFD at 8
-        lit("0300"),                      // 3 entries
-        lit("0001"), lit("0400"), lit("01000000"), le32hex(w),
-        lit("0101"), lit("0300"), lit("01000000"), le16hex(h),
-        lit("0000"),
-        lit("1501"), lit("0300"), lit("01000000"), lit("0300"),
-        lit("0000"),
-        lit("00000000"))                  // next-IFD terminator
-      val media = d.select(col("doc_id"), unhex(
-        when(col("doc_id") % 5 === 0, png)
-          .when(col("doc_id") % 5 === 1, gif)
-          .when(col("doc_id") % 5 === 2, webp)
-          .when(col("doc_id") % 5 === 3, bmp)
-          .otherwise(tiff)).as("content"))
-      Multimodal.decodeBatches(media, "content",
-          Multimodal.imageDimsSchema)(Multimodal.decodeImageDims)
-        .select(col("doc_id"), col("format"), col("width"),
-          col("height"), col("channels"))
-    }),
-
-    // ----- HEIF/AVIF dims triage over the ISO-BMFF walk: per doc a
-    // meta/iprp/ipco/ipma container with a DECOY thumbnail ispe at
-    // property index 1 — dims must resolve through pitm+ipma to the
-    // primary item's ispe or every aspect filter downstream is
-    // poisoned; brand alternates heic/avif by doc_id%2
-    "q_heif_dims" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 3840 + 1).cast("int").as("__w"),
-        (col("doc_id") % 2160 + 1).cast("int").as("__h"),
-        (col("doc_id") % 2).cast("int").as("__b"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val heifs = Heif.synthHeifs(d, "__w", "__h", "__b", "__n",
-        "content")
-      Multimodal.decodeBatches(heifs, "content",
-          Heif.heifSchema)(Heif.decodeHeif)
-        .select(col("doc_id"), col("brand"), col("item_type"),
-          col("width"), col("height"), col("n_channels"),
-          col("n_items"))
-    }),
-
-    // ----- REAL PNG PIXEL decode: per doc a genuine zlib-compressed
-    // grayscale PNG (Sub+Up filtered rows) is encoded with a planted
-    // checkerboard whose cells align with the 8x8 average-hash grid,
-    // then fully decoded (inflate + unfilter) and hashed. With cell
-    // colors a < b, exactly the b-parity cells exceed the mean, so the
-    // oracle predicts the 64-bit hash analytically — a plain-SQL check
-    // of a real pixel pipeline
-    // ----- image near-dup end to end: each doc pair (2g, 2g+1) gets
-    // pattern PNGs whose planted perceptual hashes differ by g%5 bits
-    // (md5-spread base pattern, so hash bands stay small); the real
-    // decode+hash feeds banded candidate generation, and the oracle
-    // brute-forces popcount hamming over the same planted hashes —
-    // banding must find EXACTLY the brute-force pairs (pigeonhole
-    // completeness, g%5 = 4 pairs excluded)
-    "q_image_dup" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        expr("doc_id DIV 2").as("__g"))
-      val base = graft.functions.HashFunctions
-        .stableHash60(col("__g").cast("string")).bitwiseOR(lit(1L))
-      val mask = expr(
-        "shiftleft(shiftleft(CAST(1 AS BIGINT), CAST(__g % 5 AS INT))" +
-          " - 1, CAST(__g % 50 + 1 AS INT))")
-      val patt = when(col("doc_id") % 2 === 1, base.bitwiseXOR(mask))
-        .otherwise(base)
-      val params = d.select(col("doc_id"),
-        lit(32).as("__w"), lit(32).as("__h"),
-        (lit(40) + col("doc_id") % 60).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 60).cast("int").as("__b"),
-        patt.as("__patt"))
-      val png = Multimodal.synthPatternPng(params, "__w", "__h",
-        "__a", "__b", "__patt", "content")
-      val hashes = Multimodal.decodeBatches(png, "content",
-        Multimodal.aHashSchema)(Multimodal.decodeAHash)
-      Multimodal.imageDupPairs(hashes, "doc_id", "ahash",
-        maxHamming = 3)
-    }),
-
-    "q_phash" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 100).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 100 + col("doc_id") % 50)
-          .cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"))
-      val png = Multimodal.synthCheckerPng(d, "__w", "__h", "__a",
-        "__b", "__p", "content")
-      Multimodal.decodeBatches(png, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- dHash (gradient signature): 9-band stripe PNGs whose
-    // bands coincide with the 9-column cell grid — analytic hash,
-    // phase 0 → 0x5555…55, phase 1 → 0xAAAA…AA (a < b always)
-    "q_dhash" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(9) * (lit(2) + col("doc_id") % 5)).cast("int").as("__w"),
-        (lit(8) + (col("doc_id") % 3) * 4).cast("int").as("__h"),
-        (lit(40) + col("doc_id") % 50).cast("int").as("__a"),
-        (lit(120) + col("doc_id") % 80).cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"))
-      val png = Multimodal.synthStripePng(d, "__w", "__h", "__a",
-        "__b", "__p", "content")
-      Multimodal.decodeBatches(png, "content",
-          Multimodal.dHashSchema)(Multimodal.decodeDHash)
-        .select(col("doc_id"), col("dhash"))
-    }),
-
-    // ----- REAL JPEG pixel decode: 64×64 baseline JPEGs whose 8×8
-    // blocks plant an md5-derived 64-bit pattern (uniform blocks ->
-    // every AC quantizes to 0 -> EXACT decode), the container layout
-    // (gray / 4:4:4 / 4:2:0, restart intervals 0-3) cycling per row
-    // so one query drives every supported Huffman+IDCT path; the
-    // oracle replays the planted pattern arithmetically
-    "q_jpeg_phash" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (lit(40) + col("doc_id") % 60).cast("int").as("__a"),
-        (lit(120) + col("doc_id") % 100).cast("int").as("__b"),
-        graft.functions.HashFunctions
-          .stableHash60(col("doc_id").cast("string"))
-          .bitwiseOR(lit(1L)).as("__patt"),
-        (col("doc_id") % 3).cast("int").as("__mode"),
-        (col("doc_id") % 4).cast("int").as("__ri"))
-      val jpg = Multimodal.synthPatternJpeg(d, "__a", "__b",
-        "__patt", "__mode", "__ri", "content")
-      Multimodal.decodeBatches(jpg, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- REAL PROGRESSIVE JPEG pixel decode: the same planted
-    // 64-bit patterns as q_jpeg_phash but emitted as multi-scan SOF2
-    // streams (DC + spectral-selection AC + successive-approximation
-    // refinement scans), so the hash only matches if the full
-    // progressive coefficient accumulation is bit-exact
-    "q_progressive_phash" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (lit(35) + col("doc_id") % 70).cast("int").as("__a"),
-        (lit(115) + col("doc_id") % 110).cast("int").as("__b"),
-        graft.functions.HashFunctions
-          .stableHash60(concat(lit("prog:"),
-            col("doc_id").cast("string")))
-          .bitwiseOR(lit(1L)).as("__patt"),
-        (col("doc_id") % 3).cast("int").as("__mode"))
-      val jpg = Multimodal.synthPatternJpegProgressive(d, "__a",
-        "__b", "__patt", "__mode", "content")
-      Multimodal.decodeBatches(jpg, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- REAL pixel resize: checker PNGs (multiple-of-8 dims, so
-    // the 8×8 nearest-neighbor result is an exact 8×8 checkerboard)
-    // -> decode+resample+re-encode -> RE-decode the resized bytes ->
-    // average hash; the oracle predicts the two parity constants
-    // analytically, the same bit construction as q_phash
-    "q_media_resize" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 100).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 100 + col("doc_id") % 50)
-          .cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"))
-      val png = Multimodal.synthCheckerPng(d, "__w", "__h", "__a",
-        "__b", "__p", "content")
-      val resized = Multimodal.pngResize(png, "content", 8, 8)
-        .select(col("doc_id"), col("resized").as("content"),
-          col("resized_width"), col("resized_height"))
-      Multimodal.decodeBatches(resized, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"),
-          col("resized_width").cast("long").as("rw"),
-          col("resized_height").cast("long").as("rh"),
-          col("ahash"))
-    }),
-
-    // ----- REAL audio-header decode: WAV bytes synthesized by hex
-    // concatenation (RIFF/WAVE + fmt/data chunks, little-endian
-    // fields planted from doc_id), parsed back via the batch-decode
-    // plumbing; the oracle recomputes the planted values
-    // ----- real greedy BPE encode with a pinned merge table: the
-    // whole pass is one codegen'd projection of chained literal
-    // replaces over the SEP-bracketed stream (Bpe.scala) — the
-    // oracle rebuilds the identical stream with DuckDB's replace
-    "q_bpe_encode" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"), col("text"))
-      Bpe.encode(d, "text", BpeFixedMerges)
-        .select(col("doc_id"), col("token_stream"), col("n_tokens"))
-    }),
-
-    // ----- duplicate-frame detection ACROSS videos: per-group base
-    // patterns with one distinct high-bit flip per frame, so every
-    // same-group frame pair sits within hamming 2 and cross-group
-    // pairs are md5-far; the full chain runs sample-table walk ->
-    // JPEG decode -> aHash -> banded near-dup pairing
-    "q_video_frame_dup" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        lit(40).as("__a"), lit(200).as("__b"),
-        expr("""transform(sequence(0, CAST(doc_id % 3 AS INT)), f ->
-          (CAST(conv(substring(md5(concat('vd:',
-             CAST(doc_id DIV 2 AS STRING))), 1, 15), 16, 10)
-             AS BIGINT) | 1)
-          ^ shiftleft(CAST(1 AS BIGINT),
-              50 + CAST(doc_id % 2 AS INT) * 3 + f))""")
-          .as("__patterns"))
-      val mp4 = Multimodal.synthMjpeg(d, "__patterns", "__a", "__b",
-        "content")
-      val hashes = Multimodal.mp4FrameHashes(mp4, "doc_id", "content")
-        .select((col("doc_id") * 4 + col("frame_idx")).as("fid"),
-          col("ahash"))
-      Multimodal.imageDupPairs(hashes, "fid", "ahash", maxHamming = 3)
-    }),
-
-    // ----- token-budgeted chunking: documents split into windows of
-    // at most 64 BPE tokens — the unit a training pipeline actually
-    // packs by; chunk text is the exact token concatenation
-    "q_bpe_chunk" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"), col("text"))
-      Bpe.chunk(d, "doc_id", "text", BpeFixedMerges, maxTokens = 64)
-        .select(col("doc_id"), col("chunk_id"), col("chunk_text"),
-          col("n_tokens"))
-    }),
-
-    // ----- sliding-window chunking: 64-token windows every 48
-    // tokens — consecutive chunks share 16 tokens of context
-    "q_bpe_chunk_overlap" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"), col("text"))
-      Bpe.chunkOverlap(d, "doc_id", "text", BpeFixedMerges,
-          maxTokens = 64, stride = 48)
-        .select(col("doc_id"), col("chunk_id"), col("chunk_text"),
-          col("n_tokens"), col("start_token"))
-    }),
-
-    // ----- per-source token budget: the mixture-design accounting
-    // report — BPE token mass, document count and character mass per
-    // source, one map-only encode + one small aggregation
-    "q_token_budget" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("text"))
-      Bpe.encode(d, "text", BpeFixedMerges)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"),
-          sum(length(regexp_replace(col("text"), Bpe.Sep, ""))
-            .cast("long")).as("total_chars"))
-    }),
-
-    // ----- corpus-fitted char-bigram LM quality score: the fit is
-    // one alphabet-bounded aggregation, the scoring pass is map-only
-    // with the counts broadcast — integer micro-probabilities keep
-    // it bit-replayable (no cross-libm ln)
-    "q_char_lm_score" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val model = CharLm.fit(d, "text")
-      CharLm.score(d.select(col("doc_id"), col("text")), "doc_id",
-          "text", model)
-        .withColumn("avg_p",
-          round(col("sum_micro_p") / col("n_positions") / 1e9, 9))
-        .select(col("doc_id"), col("n_positions"),
-          col("sum_micro_p"), col("avg_p"))
-    }),
-
-    // ----- REAL MP4 container parse: per-row synthesized ISO-BMFF
-    // boxes (ftyp + moov/mvhd + tkhd tracks, genuine lengths and
-    // 16.16 fixed-point dims; every other doc gets a 0×0 audio-style
-    // lead track the walk must skip) -> mp4Meta box walk; the oracle
-    // replays the planted fields arithmetically
-    "q_video_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, lit("isom"))
-          .when(col("doc_id") % 3 === 1, lit("mp42"))
-          .otherwise(lit("avc1")).as("__brand"),
-        (lit(160) + (col("doc_id") % 12) * 160).cast("int").as("__w"),
-        (lit(90) + (col("doc_id") % 12) * 90).cast("int").as("__h"),
-        ((col("doc_id") % 600 + 1) * 1000).cast("long").as("__dur"),
-        (col("doc_id") % 2 + 1).cast("int").as("__nt"),
-        // SPS triage plant: profile cycles Baseline/Main/High (66/
-        // 77/100 — High writes the chroma branch), level 10..50; the
-        // encoder plants mb-aligned dims + exact bottom crop (90-
-        // multiple heights are never mb-aligned), so only a correct
-        // Exp-Golomb walk + crop arithmetic reads __w/__h back
-        when(col("doc_id") % 3 === 0, lit(66))
-          .when(col("doc_id") % 3 === 1, lit(77))
-          .otherwise(lit(100)).cast("int").as("__prof"),
-        (lit(10) + (col("doc_id") % 5) * 10).cast("int").as("__lvl"))
-      val mp4 = Multimodal.synthMp4(d, "__brand", "__w", "__h",
-        "__dur", "__nt", "content", "__prof", "__lvl")
-      Multimodal.decodeBatches(mp4, "content",
-          Multimodal.videoMetaSchema)(Multimodal.decodeVideoMeta)
-        .select(col("doc_id"), col("format"), col("brand"),
-          col("width"), col("height"), col("duration_ms"),
-          col("n_tracks"), col("codec"), col("sps_profile"),
-          col("sps_level"), col("sps_width"), col("sps_height"))
-    }),
-
-    // ----- REAL VIDEO FRAME decode (MJPEG-in-MP4): per-row synthetic
-    // containers with genuine stsc×stco×stsz sample tables (one chunk
-    // per frame) whose frames are planted pattern JPEGs; the operator
-    // walks the table, slices each frame, runs the real JPEG decoder
-    // and hashes — one row per frame, map-only
-    "q_video_frames" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        lit(40).as("__a"), lit(200).as("__b"),
-        transform(
-          sequence(lit(0), (col("doc_id") % 3).cast("int")),
-          i => graft.functions.HashFunctions.stableHash60(
-            concat(lit("vf:"), col("doc_id").cast("string"),
-              lit(":"), i.cast("string"))).bitwiseOR(lit(1L)))
-          .as("__patterns"))
-      val mp4 = Multimodal.synthMjpeg(d, "__patterns", "__a", "__b",
-        "content")
-      Multimodal.mp4FrameHashes(mp4, "doc_id", "content")
-        .select(col("doc_id"), col("frame_idx"), col("width"),
-          col("height"), col("ahash"))
-    }),
-
-    "q_audio_meta" -> ((s, dir) => {
-      def le16(c: Column) = {
-        val h = lpad(hex(c), 4, "0")
-        concat(substring(h, 3, 2), substring(h, 1, 2))
-      }
-      def le32(c: Column) = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
-      }
-      val d = t(s, dir, "documents").select(col("doc_id"),
-          (col("doc_id") % 2 + 1).cast("int").as("__ch"),
-          (lit(8000) + (col("doc_id") % 8) * 4000).cast("int")
-            .as("__rt"),
-          (col("doc_id") % 50 + 1).cast("int").as("__fr"))
-        .withColumn("__ba", col("__ch") * 2)
-        .withColumn("__dl", col("__fr") * col("__ba"))
-      val wav = unhex(concat(
-        lit("52494646"), le32(col("__dl") + 36), lit("57415645"),
-        lit("666D7420"), lit("10000000"), lit("0100"),
-        le16(col("__ch")), le32(col("__rt")),
-        le32(col("__rt") * col("__ba")), le16(col("__ba")),
-        lit("1000"), // 16 bits per sample, LE
-        lit("64617461"), le32(col("__dl")),
-        expr("repeat('00', __dl)")))
-      val media = d.select(col("doc_id"), wav.as("content"))
-      Multimodal.decodeBatches(media, "content",
-          Multimodal.audioMetaSchema)(Multimodal.decodeAudioMeta)
-        .select(col("doc_id"), col("format"), col("channels"),
-          col("sample_rate"), col("bits_per_sample"), col("n_frames"))
-    }),
-
-    // ----- PCM16 signal features: the WAV data chunk carries REAL
-    // samples — u(i) = (doc_id·7919 + i·104729 + 32768) % 65536, the
-    // unsigned two's-complement form of s(i) = (…% 65536) − 32768 —
-    // written LE by the same hex construction as q_audio_meta. The
-    // kernel decodes the samples and produces exact integer
-    // energy/silence/clip sums; the oracle recomputes them
-    // arithmetically from the same formula — no WAV on the SQL side
-    "q_audio_features" -> ((s, dir) => {
-      val media = synthWavs(tp(s, dir, "documents"))
-      Multimodal.decodeBatches(media, "content",
-          Multimodal.audioFeatureSchema)(Multimodal.decodeAudioFeatures)
-        .select(col("doc_id"), col("n_samples"), col("sum_abs"),
-          col("sum_sq"), col("peak"), col("n_silence"),
-          col("n_clipped"), col("n_zero_cross"), col("duration_us"))
-    }),
-
-    // ----- EXIF orientation: real APP1/TIFF parse over synthesized
-    // pattern JPEGs with a spliced orientation tag — both byte
-    // orders exercised; every 9th doc carries NO EXIF → null
-    "q_exif_orientation" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (lit(40) + col("doc_id") % 60).cast("int").as("__a"),
-        (lit(120) + col("doc_id") % 100).cast("int").as("__b"),
-        graft.functions.HashFunctions
-          .stableHash60(col("doc_id").cast("string"))
-          .bitwiseOR(lit(1L)).as("__patt"),
-        (col("doc_id") % 3).cast("int").as("__mode"),
-        (col("doc_id") % 4).cast("int").as("__ri"),
-        when(col("doc_id") % 9 =!= 0,
-          (col("doc_id") % 8 + 1).cast("int")).as("__or"),
-        (col("doc_id") % 2).cast("int").as("__be"))
-      val jpg = Multimodal.synthPatternJpeg(d, "__a", "__b",
-        "__patt", "__mode", "__ri", "content")
-      val withExif = Multimodal.spliceExif(jpg, "content", "__or",
-        "__be")
-      Multimodal.decodeBatches(withExif, "content",
-          Multimodal.exifSchema)(Multimodal.decodeExifOrientation)
-        .select(col("doc_id"), col("orientation"))
-    }),
-
-    // ----- 60-bit windowed energy-profile signature over the SAME
-    // synthesized WAVs: 15 windows × 4-bit volume-normalized levels,
-    // the first-pass audio dedup key; oracle recomputes the LCG
-    // samples arithmetically — no WAV on the SQL side
-    "q_audio_signature" -> ((s, dir) => {
-      val media = synthWavs(tp(s, dir, "documents"))
-      Multimodal.decodeBatches(media, "content",
-          Multimodal.audioSignatureSchema)(
-          Multimodal.decodeAudioSignature)
-        .select(col("doc_id"), col("audio_sig"))
-    }),
-
-    // ----- REAL FLAC decode to PCM: the same planted LCG samples as
-    // the WAV fixtures, re-encoded through genuinely compressed
-    // frames (fixed/LPC predictors + Rice residuals, stereo
-    // decorrelation cycled by doc_id) — the decoded stream must sign
-    // IDENTICALLY to the WAV, so the q_audio_signature oracle
-    // arithmetic transfers verbatim
-    "q_flac_signature" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 100 + 1).cast("int").as("__f"),
-        (col("doc_id") % 2 + 1).cast("int").as("__c"),
-        (lit(8000) + (col("doc_id") % 8) * 4000).cast("int")
-          .as("__r"),
-        (col("doc_id") % 5).cast("int").as("__v"),
-        (col("doc_id") % 4).cast("int").as("__m"))
-      val flacs = Flac.synthFlacs(d, "doc_id", "__f", "__c", "__r",
-        "__v", "__m", "content")
-      Multimodal.decodeBatches(flacs, "content",
-          Flac.flacSignatureSchema)(Flac.decodeFlacSignature)
-        .select(col("doc_id"), col("audio_sig"))
-    }),
-
-    // ----- Z-order clustered write, read back: the layout must be
-    // content-preserving (LayoutSpec separately proves the per-file
-    // range narrowing that makes the layout worth writing)
-    // ----- skew mitigation: two-stage salted aggregation — row- and
-    // value-identical to the plain groupBy (the salt only changes the
-    // partitioning), so the oracle IS the plain aggregate
-    // ----- pre-shuffle skew diagnosis: heaviest order keys in
-    // lineitem with exact counts and milli shares — the report that
-    // decides whether a key needs salting before the job hot-spots
-    "q_skew_profile" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      Skew.keyProfile(li, Seq("l_suppkey"), k = 20)
-    }),
-
-    "q_salted_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      Skew.saltedAgg(li, Seq("l_returnflag"), salt = 16,
-        partials = Seq(
-          (count(lit(1)), "__pc"),
-          (sum(col("l_quantity").cast("decimal(18,2)")), "__ps")),
-        merges = Seq(
-          ((c: Column) => sum(c).cast("long"), "n_rows"),
-          ((c: Column) => sum(c).cast("double"), "sum_qty")))
-    }),
-
-    // ----- bucketed write + read-back: the co-location surface gets a
-    // value oracle on top of BucketingSpec's zero-Exchange plan proof
-    // (10% slice — like q_zorder, this is deliberately write-bound)
-    "q_bucketed_readback" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 10 === 0)
-        .select("l_orderkey", "l_quantity", "l_extendedprice")
-      graft.sources.Io.writeBucketed(li, "g_q_bucketed",
-        "l_orderkey", buckets = 8, sortCol = Some("l_orderkey"))
-      s.table("g_q_bucketed").groupBy("l_orderkey")
-        .agg(count(lit(1)).cast("long").as("n_items"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-            .as("sum_qty"))
-    }),
-
-    // ----- persistent IVF index: build (inverted lists bucketed by
-    // list id + centroid table) then serve — the reader must
-    // reproduce ivfTopK exactly, so the oracle is the same fit+probe
-    // replay as q_ivf_topk
-    "q_ivf_index" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      IvfIndex.build(emb, "vec_id", "embedding", "g_q_ivf_index",
-        nCentroids = 16, kmeansIters = 2, buckets = 16)
-      IvfIndex.query(s, "g_q_ivf_index",
-          emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          k = 10, nProbe = 4)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ----- lineage-tracked curation ops composed as ONE Pipeline
-    // (RedactPii -> AnnotateQuality -> AssignSplit): the ops fold into
-    // a single Catalyst plan, and the oracle is the three ops'
-    // existing replays joined on doc_id
-    "q_curation_pipeline" -> ((s, dir) => {
-      val d = tp(s, dir, "documents")
-      val withPii = d.withColumn("pii_text", concat(col("text"),
-        lit(" reach user"), col("doc_id"),
-        lit("@mail.example.org or host "),
-        (col("doc_id") % 200) + 10,
-        lit(".20.30.40, tel +1 (555) 010-"),
-        lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-      val pipe = Pipeline(
-        RedactPii(Seq("pii_text"), Seq("clean")),
-        AnnotateQuality(Seq("text")),
-        AssignSplit(Seq("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)))
-      pipe(withPii).select(col("doc_id"), col("clean"),
-        col("text_keep"), col("text_reasons"), col("split"))
-    }),
-
-    "q_zorder" -> ((s, dir) => {
-      // a 10% slice: the row set is still range-shuffled, z-sorted,
-      // written and read back in full — writing ALL of sf0.1 made this
-      // one WRITE benchmark 16% of the whole suite's wall
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 10 === 0)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_q_zorder"
-      Layout.zorderWrite(li, Seq("l_partkey", "l_suppkey"), path,
-        outPartitions = 8)
-      s.read.parquet(path)
-    }),
-
-    // ----- REAL GIF decode: checkerboard GIFs (LZW-compressed, every
-    // 3rd doc interlaced) through the full palette+LZW decode to the
-    // same analytic average-hash constants as the PNG checkerboards —
-    // a third real image codec behind one oracle family
-    "q_gif_phash" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 100).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 100 + col("doc_id") % 50)
-          .cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"),
-        (col("doc_id") % 3 === 0).cast("int").as("__il"))
-      val gif = Multimodal.synthCheckerGif(d, "__w", "__h", "__a",
-        "__b", "__p", "__il", "content")
-      Multimodal.decodeBatches(gif, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- REAL ZIP central-directory walk: per doc a genuine ZIP
-    // (local headers + central dir + EOCD, true CRC32s, stored and
-    // deflated members mixed) listed back entry by entry — the
-    // archive-unwrap step crawl ingest needs before text ops can run
-    "q_zip_entries" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val zips = Archive.synthZips(d, "doc_id", "__t", "__n",
-        "content")
-      Archive.zipEntryRows(zips, "doc_id", "content")
-        .select(col("doc_id"), col("entry_name"), col("method"),
-          col("u_size"))
-    }),
-
-    // ----- REAL 7z container walk: per doc a genuine .7z (signature
-    // + CRC-checked headers, one folder per member, true member
-    // CRC32s, store/LZMA2/deflate coders mixed) listed back entry by
-    // entry, with `ok` proving extraction reproduced the declared
-    // CRC — the second archive-unwrap tier after ZIP
-    "q_7z_entries" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val szs = SevenZip.synthSevenZips(d, "doc_id", "__t", "__n",
-        "content")
-      SevenZip.sevenZipEntryRows(szs, "doc_id", "content")
-        .select(col("doc_id"), col("entry_name"), col("method"),
-          col("u_size"), col("ok"))
-    }),
-
-    // ----- REAL AVI RIFF walk (the OpenDML/Microsoft AVI spec):
-    // per doc a genuine container — avih timing/dims, vids + auds
-    // strl pairs, codec fourcc cycling — with the video stream
-    // clock as the duration authority; movi payload never parsed
-    "q_avi_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(160) + (col("doc_id") % 8) * 16).cast("int").as("__w"),
-        (lit(120) + (col("doc_id") % 6) * 16).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 500).cast("int").as("__n"))
-      val avis = Avi.synthAvis(d, "doc_id", "__w", "__h", "__n",
-        "content")
-      Multimodal.decodeBatches(avis, "content",
-          Avi.aviSchema)(Avi.decodeAvi)
-        .select(col("doc_id"), col("duration_ms"), col("width"),
-          col("height"), col("n_streams"), col("video_codec"),
-          col("audio_channels"), col("audio_rate"))
-    }),
-
-    // ----- NumPy .npy triage (the public NEP-1 / numpy
-    // lib/format.py layout): six planted array kinds cycling by
-    // doc — i8/f8-matrix/bool/big-endian-i4-v2/fortran-u2/scalar —
-    // replayed with exact integer sums; NpySpec pins the parser
-    // against fixtures numpy 1.26.4 itself wrote
-    "q_npy_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ns = Npy.synthNpys(d, "doc_id", "content")
-      Multimodal.decodeBatches(ns, "content",
-          Npy.npySchema)(Npy.decodeNpy)
-        .select(col("doc_id"), col("npy_version"), col("descr"),
-          col("fortran"), col("ndim"), col("shape"),
-          col("n_elems"), col("item_size"), col("int_sum"))
-    }),
-
-    // ----- .npz member walk (a ZIP of .npy members — numpy stores
-    // for savez, deflates for savez_compressed; the synth plants
-    // both by doc parity): three members per doc, facts replayed
-    // per member through the shared ZIP reader + the npy parser
-    "q_npz_entries" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val zs = Npy.synthNpzs(d, "doc_id", "content")
-      Npy.npzEntryRows(zs, "doc_id", "content")
-        .select(col("doc_id"), col("member"), col("descr"),
-          col("shape"), col("n_elems"), col("int_sum"))
-    }),
-
-    // ----- ICO/CUR favicon triage (the public ICONDIR format —
-    // a crawler fetches one per host): BMP and PNG-embedded
-    // entries cycling, cursors every fifth doc; embedded PNG dims
-    // ride the existing PNG parser
-    "q_ico_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val is = Ico.synthIcos(d, "doc_id", "content")
-      Multimodal.decodeBatches(is, "content",
-          Ico.icoSchema)(Ico.decodeIco)
-        .select(col("doc_id"), col("is_cursor"), col("n_entries"),
-          col("max_width"), col("max_height"), col("n_png"),
-          col("bpps"))
-    }),
-
-    // ----- packet-capture triage (the public libpcap format +
-    // the pcapng block grammar): classic/ng cycling by parity,
-    // one truncated packet planted per doc so the truncation
-    // census fires
-    "q_pcap_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ps = Pcap.synthPcaps(d, "doc_id", "content")
-      Multimodal.decodeBatches(ps, "content",
-          Pcap.pcapSchema)(Pcap.decodePcap)
-        .select(col("doc_id"), col("container"),
-          col("little_endian"), col("nanos"), col("linktype"),
-          col("n_packets"), col("cap_bytes"), col("orig_bytes"),
-          col("n_truncated"), col("n_interfaces"))
-    }),
-
-    // ----- X.509 certificate triage (RFC 5280 over strict DER,
-    // pinned against OpenSSL-generated fixtures in X509Spec):
-    // planted identities cycling RSA/EC, SANs every third doc,
-    // PEM armor every fourth
-    "q_x509_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val cs = X509.synthCerts(d, "doc_id", "content")
-      Multimodal.decodeBatches(cs, "content",
-          X509.certSchema)(X509.decodeCert)
-        .select(col("doc_id"), col("version"), col("serial_hex"),
-          col("sig_alg"), col("pubkey_alg"), col("subject_cn"),
-          col("subject_o"), col("self_signed"), col("not_before"),
-          col("not_after"), col("n_san_dns"), col("san_dns"))
-    }),
-
-    // ----- HDF5 superblock triage (the public HDF5 file-format
-    // spec; lookup3 pinned on the vectors published in lookup3.c):
-    // v0/v3 superblocks cycling by parity, every fifth doc torn so
-    // the EOF-address integrity fact fires
-    "q_hdf5_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val hs = Hdf5.synthH5s(d, "doc_id", "content")
-      Multimodal.decodeBatches(hs, "content",
-          Hdf5.h5Schema)(Hdf5.decodeH5)
-        .select(col("doc_id"), col("sb_version"),
-          col("offset_size"), col("length_size"),
-          col("eof_matches"), col("checksum_ok"))
-    }),
-
-    // ----- RPM triage (the public rpm.org/LSB package format —
-    // C209's deb sibling): lead + signature/main tag headers, the
-    // payload cpio walked through whichever house codec the header
-    // itself declares (gzip/xz/zstd cycling by doc)
-    "q_rpm_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val rs = Rpm.synthRpms(d, "doc_id", "content")
-      Multimodal.decodeBatches(rs, "content",
-          Rpm.rpmSchema)(Rpm.decodeRpm)
-        .select(col("doc_id"), col("pkg_name"), col("version"),
-          col("release"), col("arch"), col("compressor"),
-          col("n_entries"), col("entry_names"))
-    }),
-
-    // ----- Python .pyc census (the public importlib pyc layout +
-    // the CPython 3.11 marshal grammar, tiered honestly: full
-    // census only for the version this environment's CPython can
-    // pin, version-only triage for other known magics): planted
-    // name/const shapes with both invalidation modes cycling
-    "q_pyc_census" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ps = Pyc.synthPycs(d, "doc_id", "content")
-      Multimodal.decodeBatches(ps, "content",
-          Pyc.pycSchema)(Pyc.decodePyc)
-        .select(col("doc_id"), col("py_version"),
-          col("invalidation"), col("source_size"), col("n_code"),
-          col("top_name"), col("names_csv"), col("n_consts"))
-    }),
-
-    // ----- Mach-O triage (Apple's public loader.h ABI — the
-    // macOS half of the executable matrix): thin executables and
-    // dylibs cycling cpu/segment/dylib shapes, every third doc a
-    // two-arch FAT binary; the CAFEBABE collision with Java
-    // classes resolves by file(1)'s nfat_arch rule (MachOSpec)
-    "q_macho_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ms = MachO.synthMachs(d, "doc_id", "content")
-      Multimodal.decodeBatches(ms, "content",
-          MachO.machSchema)(MachO.decodeMach)
-        .select(col("doc_id"), col("container"), col("is64"),
-          col("cpu"), col("file_type"), col("n_cmds"),
-          col("n_segments"), col("dylibs"), col("has_uuid"),
-          col("n_archs"), col("archs"))
-    }),
-
-    // ----- parquet ZONE-MAP census (the thrift Statistics field
-    // of the public parquet-format spec): per (row group, leaf
-    // column) min/max/null-count — the facts file-skipping at
-    // 100 TB lives on — replayed against what Spark's parquet-mr
-    // planted in the committed fixtures, footer-only
-    "q_parquet_stats" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ps = ParquetMeta.synthStatsParquets(d, "doc_id",
-        "content")
-      ParquetMeta.statsRows(ps, "doc_id", "content")
-        .select(col("doc_id"), col("rg"), col("col_path"),
-          col("ptype"), col("num_values"), col("null_count"),
-          col("min_long"), col("max_long"), col("min_str"),
-          col("max_str"))
-    }),
-
-    // ----- JAR triage (the public JAR file specification over the
-    // shared ZIP walk): manifest main attributes with 72-byte line
-    // folding, class/package censuses — executable-vs-library and
-    // toolchain facts for a code-lake census
-    "q_jar_meta" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val js = Jar.synthJars(d, "doc_id", "content")
-      Multimodal.decodeBatches(js, "content",
-          Jar.jarSchema)(Jar.decodeJar)
-        .select(col("doc_id"), col("has_manifest"),
-          col("manifest_version"), col("main_class"),
-          col("created_by"), col("n_classes"), col("n_packages"),
-          col("n_members"))
-    }),
-
-    // ----- git LOOSE objects (gitformat-loose: zlib over
-    // "type size NUL content", id = SHA-1 of that span): the raw
-    // .git/objects files crawls carry next to C219's packfiles;
-    // GitLooseSpec pins ids against git hash-object
-    "q_git_loose" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val ls = GitLoose.synthLooses(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(ls, "content",
-          GitLoose.looseSchema)(GitLoose.decodeLoose)
-        .select(col("doc_id"), col("obj_type"), col("u_size"),
-          col("blob_text"))
-    }),
-
-    // ----- Delta Lake commit-log census (the public Delta
-    // transaction protocol): planted commits with adds/removes/
-    // metaData replayed closed-form; corrupt lines refuse — Delta
-    // readers cannot skip bad commit lines
-    "q_delta_log" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ds = DeltaLog.synthDeltas(d, "doc_id", "content")
-      Multimodal.decodeBatches(ds, "content",
-          DeltaLog.deltaSchema)(DeltaLog.decodeDelta)
-        .select(col("doc_id"), col("n_actions"), col("n_add"),
-          col("n_remove"), col("n_other"), col("add_bytes"),
-          col("n_partition_cols"), col("min_reader"),
-          col("min_writer"), col("provider"))
-    }),
-
-    // ----- Delta CHECKPOINT parquet (round 18 — how a reader
-    // actually scales past thousands of commits): a planted
-    // checkpointed table is written (JSON commits + a checkpoint
-    // parquet + _last_checkpoint), then the checkpoint-rooted
-    // snapshot (_last_checkpoint → parquet scan → JSON tail) is
-    // reconciled against the full raw-JSON replay with a full
-    // outer join — every file must land in BOTH with equal sizes,
-    // and the oracle replays the planted live set closed-form
-    "q_delta_checkpoint" -> ((s, dir) => {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_q_delta_ckpt"
-      DeltaLog.writeCheckpointedTable(s, path)
-      val ckpt = DeltaLog.snapshotFiles(s, path)
-        .withColumnRenamed("size", "size_ckpt")
-      val json = DeltaLog.replayFiles(s, path)
-        .withColumnRenamed("size", "size_json")
-      ckpt.join(json, Seq("path"), "full_outer")
-        .select(col("path"), col("size_ckpt"), col("size_json"),
-          when(col("size_ckpt").isNotNull &&
-              col("size_json").isNotNull, lit("both"))
-            .when(col("size_ckpt").isNotNull, lit("ckpt_only"))
-            .otherwise(lit("json_only")).as("status"))
-    }),
-
-    // ----- Delta DELETION VECTORS (round 18 — row-level deletes
-    // without rewriting data files): the stored DV blob (version +
-    // BE size + CRC32 frame) wraps a 64-bit RoaringBitmapArray in
-    // the portable format; all three 32-bit container kinds
-    // (array / bitmap / run) are planted and censused, and the
-    // live probes ARE the MOR filter decision — a deleted row must
-    // test present, a kept row absent, and live_0_40 counts the
-    // survivors of the table's first 40 positions
-    "q_delta_dv" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      DeletionVectors.dvRows(d, "doc_id")
-        .select(col("doc_id"), col("n_high_keys"),
-          col("cardinality"), col("n_array"), col("n_bitmap"),
-          col("n_run"), col("dv_min"), col("dv_max"),
-          col("member_hit"), col("absent_hit"), col("live_0_40"))
-    }),
-
-    // ----- Delta TIME TRAVEL (round 18): the table state AS OF
-    // every version — removes resolve their sizes against the add
-    // records (one join, as a real reader does), then ONE
-    // cumulative window over the per-version deltas; the window
-    // frame is log-length (versions), metadata-sized at any data
-    // scale
-    "q_delta_time_travel" -> ((s, dir) => {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_q_delta_ckpt"
-      DeltaLog.writeCheckpointedTable(s, path)
-      DeltaLog.timeTravel(s, path)
-        .select(col("version"), col("n_live"), col("live_bytes"))
-    }),
-
-    // ----- VACUUM planning (round 18): remove tombstones older
-    // than the retention cutoff are physically deletable; younger
-    // ones must stay for time travel — the split a vacuum job
-    // computes before touching storage
-    "q_vacuum_plan" -> ((s, dir) => {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_q_delta_ckpt"
-      DeltaLog.writeCheckpointedTable(s, path)
-      DeltaLog.vacuumPlan(s, path, cutoffMs = 1700000005500L)
-        .select(col("deletable"), col("n_files"), col("bytes"))
-    }),
-
-    // ----- JSON-Lines census (training corpora ship as .jsonl):
-    // shape mix, malformed-line rate, key vocabulary — a quality
-    // measure that never refuses, garbage IS its signal
-    "q_jsonl_census" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val js = Jsonl.synthJsonls(d, "doc_id", "content")
-      Multimodal.decodeBatches(js, "content",
-          Jsonl.jsonlSchema)(Jsonl.decodeJsonl)
-        .select(col("doc_id"), col("n_lines"), col("n_valid"),
-          col("n_invalid"), col("n_objects"), col("n_arrays"),
-          col("n_scalars"), col("n_distinct_keys"))
-    }),
-
-    // ----- TFRecord triage (TensorFlow's public record framing —
-    // THE classic training-data container): per-doc framed streams
-    // mixing tf.Example-style protos with NUL-led raw payloads;
-    // both masked CRC32Cs verified per record (any lie refuses the
-    // blob, as TF's reader does); the JDK's own CRC32C is the pin
-    "q_tfrecord_census" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ts = TfRecord.synthTfs(d, "doc_id", "content")
-      Multimodal.decodeBatches(ts, "content",
-          TfRecord.tfSchema)(TfRecord.decodeTf)
-        .select(col("doc_id"), col("n_records"), col("data_bytes"),
-          col("max_record"), col("n_proto"))
-    }),
-
-    // ----- the ML-ARTIFACT omni compose (the model/array analog
-    // of q_artifact_omni): seven kinds cycling by doc — npy, npz
-    // (routed by the zip walk proving every member is an npy),
-    // pickle, safetensors (validation-routed; no magic), GGUF,
-    // ORC, Arrow — each to its pinned extractor, one (label, fact,
-    // measure) shape; a misroute anywhere breaks the hash
-    "q_ml_omni" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ms = MlOmni.synthMl(d, "doc_id", "content")
-      Multimodal.decodeBatches(ms, "content",
-          MlOmni.mlSchema)(MlOmni.decodeMl)
-        .select(col("doc_id"), col("label"), col("fact"),
-          col("measure"))
-    }),
-
-    // ----- CBOR census (RFC 8949, pinned in CborSpec against the
-    // standard's own Appendix A vectors): four planted shapes
-    // cycling by doc — map / nested arrays / tagged text /
-    // indefinite-length array — structure-only facts
-    "q_cbor_census" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val cs = Cbor.synthCbors(d, "doc_id", "content")
-      Multimodal.decodeBatches(cs, "content",
-          Cbor.cborSchema)(Cbor.decodeCbor)
-        .select(col("doc_id"), col("top_kind"), col("n_items"),
-          col("n_nodes"), col("max_depth"), col("n_tags"),
-          col("has_indefinite"))
-    }),
-
-    // ----- MessagePack census (the public msgpack spec): three
-    // planted shapes cycling by doc — map / nested arrays / a
-    // fixext timestamp — structure-only facts
-    "q_msgpack_census" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ms = MsgPack.synthMps(d, "doc_id", "content")
-      Multimodal.decodeBatches(ms, "content",
-          MsgPack.mpSchema)(MsgPack.decodeMp)
-        .select(col("doc_id"), col("top_kind"), col("n_items"),
-          col("n_nodes"), col("max_depth"), col("n_exts"))
-    }),
-
-    // ----- SafeTensors triage (the public huggingface spec — the
-    // format model weights ship in BECAUSE pickles execute): three
-    // planted manifest shapes cycling by doc, validated exactly as
-    // the reference loader validates (bounds, sizes, gap-free
-    // tiling), facts closed-form
-    "q_safetensors_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ss = SafeTensors.synthSts(d, "doc_id", "content")
-      Multimodal.decodeBatches(ss, "content",
-          SafeTensors.stSchema)(SafeTensors.decodeSt)
-        .select(col("doc_id"), col("n_tensors"),
-          col("total_params"), col("total_bytes"), col("dtypes"),
-          col("max_rank"), col("has_metadata"))
-    }),
-
-    // ----- GGUF triage (the public ggml spec — quantized LLM
-    // distribution files): planted architectures, layer counts and
-    // quant types cycling by doc; exact parameter totals
-    "q_gguf_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val gs = Gguf.synthGgufs(d, "doc_id", "content")
-      Multimodal.decodeBatches(gs, "content",
-          Gguf.ggufSchema)(Gguf.decodeGguf)
-        .select(col("doc_id"), col("version"), col("n_tensors"),
-          col("n_kv"), col("arch"), col("model_name"),
-          col("total_params"), col("qtypes"))
-    }),
-
-    // ----- Arrow IPC (Feather v2) triage (the public Arrow
-    // columnar spec, flatbuffers walked from the wire format):
-    // the committed fixtures are written by pyarrow itself across
-    // nested, dictionary-encoded and zstd-compressed layouts; rows
-    // are read from record-batch HEADERS, never the bodies
-    "q_arrow_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val as = ArrowIpc.synthArrows(d, "doc_id", "content")
-      Multimodal.decodeBatches(as, "content",
-          ArrowIpc.arrowSchema)(ArrowIpc.decodeArrow)
-        .select(col("doc_id"), col("version"), col("field_names"),
-          col("field_types"), col("n_batches"), col("n_dicts"),
-          col("total_rows"))
-    }),
-
-    // ----- ORC footer triage from raw bytes (the public Apache
-    // ORC spec): the committed fixtures are written by Spark's own
-    // ORC writer across five codecs (none/zlib/snappy/zstd/lz4), a
-    // nested schema and a multi-stripe file; the walk must replay
-    // what the reference writer planted, footer-only
-    "q_orc_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val os = Orc.synthOrcs(d, "doc_id", "content")
-      Multimodal.decodeBatches(os, "content",
-          Orc.orcSchema)(Orc.decodeOrc)
-        .select(col("doc_id"), col("codec"), col("num_rows"),
-          col("n_stripes"), col("stripe_rows"), col("n_types"),
-          col("col_names"), col("kinds"))
-    }),
-
-    // ----- compaction planning (round 17 — the small-files problem
-    // every streaming-ingested 100 TB table has): next-fit
-    // bin-packing of a file census into target-sized rewrite
-    // groups, as ONE windowed cumulative sum PARTITIONED by the
-    // table partition (parallel across partitions, never a global
-    // sort) + a hash aggregate
-    "q_compaction_plan" -> ((s, dir) => {
-      val files = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("p"), (col("doc_id") % 7)).as("part"),
-        ((col("doc_id") * 37) % 900 + 100).cast("bigint")
-          .as("size"))
-      Maintenance.compactionPlan(files, "part", "size", "doc_id",
-          target = 1024L)
-        .select(col("part"), col("bin"), col("n_files"),
-          col("bytes"), col("undersized"))
-    }),
-
-    // ----- compaction EXECUTION (round 18 — plan→act, like
-    // Layout.zorderWrite did for Z-order): the per-file bin
-    // assignment rides a broadcast join onto the data (the census
-    // is metadata-sized at any data scale), ONE hash shuffle
-    // co-locates each (partition, bin), and the partitioned write
-    // makes every bin exactly one file. The read-back proves BOTH
-    // content preservation (row counts and quantity sums per
-    // partition survive the rewrite) and the physical claim
-    // (files written == bins planned, via input_file_name) — the
-    // oracle replays the bin arithmetic in SQL
-    "q_compaction_apply" -> ((s, dir) => {
-      val d = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 10 === 0)
-        .select(col("l_returnflag").as("part"),
-          (col("l_orderkey") % 37).cast("bigint").as("file_id"),
-          col("l_quantity"))
-      val census = d.groupBy(col("part"), col("file_id"))
-        .agg(count(lit(1)).cast("bigint").as("n_rows"))
-      val assign = Maintenance.compactionAssign(census, "part",
-        "n_rows", "file_id", target = 5000L)
-      val path = s"${System.getProperty("java.io.tmpdir")}" +
-        "/graft_q_compaction_apply"
-      Maintenance.compactionApply(d, "part", "file_id", assign, path)
-      s.read.parquet(path)
-        .withColumn("__file", input_file_name())
-        .groupBy(col("part"))
-        .agg(count(lit(1)).cast("long").as("n_rows"),
-          sum(col("l_quantity").cast("decimal(18,2)"))
-            .cast("double").as("sum_qty"),
-          countDistinct(col("bin")).cast("int").as("n_bins"),
-          countDistinct(col("__file")).cast("int").as("n_files"))
-        .withColumn("files_eq_bins", col("n_files") === col("n_bins"))
-    }),
-
-    // ----- orphan-file sweep (round 17): storage listing LEFT ANTI
-    // joined against the paths the Iceberg manifests actually
-    // reference (decoded from the Avro tier, exploded engine-side)
-    // — failed writes and expired snapshots surface as per-table
-    // orphan counts/bytes; the anti join shuffles on the path, no
-    // per-file driver loop anywhere
-    "q_orphan_files" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val mf = Iceberg.synthManifests(d, "doc_id", "content")
-      val refPaths = Multimodal.decodeBatches(mf, "content",
-          Iceberg.manifestPathsSchema)(Iceberg.decodeManifestPaths)
-        .select(explode(split(col("paths_csv"), ","))
-          .as("ref_path"))
-      val listing = d.select(col("doc_id"),
-          explode(sequence(lit(0),
-            (col("doc_id") % 5).cast("int"))).as("e"))
-        .select(col("doc_id"),
-          concat(lit("s3://lake/data/f"), col("doc_id"), lit("-"),
-            col("e"), lit(".parquet")).as("path"),
-          (lit(1000) + col("e")).cast("bigint").as("size"))
-      Maintenance.orphanFiles(listing, "path", "size", "doc_id",
-          refPaths, "ref_path")
-        .select(col("doc_id"), col("n_orphans"),
-          col("orphan_bytes"))
-    }),
-
-    // ----- clustering depth (round 17 — the read-amplification
-    // metric behind Z-order/OPTIMIZE decisions): per partition, the
-    // max number of files a point lookup must read given each
-    // file's [min,max] zone map, via a distributed boundary sweep —
-    // union of +1/-1 events, ONE partitioned-window cumulative sum,
-    // and the exact depth integral kept as two integers so the
-    // result is engine-exact
-    // ----- OPTIMIZE planner (round 18 — the maintenance DECISION,
-    // composing the file-size census with the clustering-depth
-    // sweep): per partition, too many undersized files → compact;
-    // healthy sizes but deep zone-map overlap → recluster; else
-    // nothing. The decision a table service makes before spending
-    // a rewrite — both inputs are existing plans, one broadcast
-    // join (7 partition rows) stitches them
-    "q_optimize_plan" -> ((s, dir) => {
-      val files = t(s, dir, "documents").select(
-        concat(lit("p"), col("doc_id") % 7).as("part"),
-        ((col("doc_id") * 37) % 900 + 100 +
-          (col("doc_id") % 7) * 80).as("size"),
-        ((col("doc_id") * 13) % 1000).as("lo"),
-        ((col("doc_id") * 13) % 1000 + (col("doc_id") * 7) % 200)
-          .as("hi"))
-      val sizes = files.groupBy(col("part"))
-        .agg(count(lit(1)).cast("int").as("n_files"),
-          sum(when(col("size") < 512, 1).otherwise(0)).cast("int")
-            .as("n_small"))
-      val depth = Maintenance.clusteringDepth(files, "part", "lo",
-          "hi")
-        .select(col("part"), col("max_depth"))
-      sizes.join(depth, Seq("part"))
-        .select(col("part"), col("n_files"), col("n_small"),
-          col("max_depth"),
-          when(col("n_small") * 3 > col("n_files"), lit("compact"))
-            .when(col("max_depth") > 8, lit("recluster"))
-            .otherwise(lit("none")).as("action"))
-    }),
-
-    "q_clustering_depth" -> ((s, dir) => {
-      val files = t(s, dir, "documents").select(
-        (col("doc_id") % 5).as("part"),
-        ((col("doc_id") * 13) % 1000).as("lo"),
-        ((col("doc_id") * 13) % 1000 + (col("doc_id") * 7) % 200)
-          .as("hi"))
-      Maintenance.clusteringDepth(files, "part", "lo", "hi")
-        .select(col("part"), col("max_depth"), col("depth_area"),
-          col("span_len"), col("n_boundaries"))
-    }),
-
-    // ----- parquet split-block BLOOM filters (round 17 — the third
-    // skipping mechanism after row-group zone maps and ORC stripe
-    // stats): the skipping-machinery census (bloom + page-index
-    // offsets) plus LIVE membership probes — the filter parses once
-    // per partition, then per-row xxHash64 split-block checks; a
-    // member probe must hit (no false negatives), the absent probe
-    // rides the committed fixture's golden zero-FP range, so a
-    // single hash or salt-table slip breaks 500 rows
-    "q_parquet_bloom" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      ParquetMeta.bloomRows(d, "doc_id")
-        .select(col("doc_id"), col("bloom_cols"),
-          col("n_index_cols"), col("bloom_nbytes"), col("algo"),
-          col("member_hit"), col("s_member_hit"),
-          col("absent_hit"), col("s_absent_hit"))
-    }),
-
-    // ----- the LAKEHOUSE-metadata omni compose (round 17): one
-    // sniff-routed dispatch over the scan-planning tier — Delta
-    // commit logs (full action-by-action JSON census, never a
-    // text guess), both Iceberg Avro tiers (told apart by their
-    // spec field names after the Avro magic routes them), and
-    // parquet/ORC footers — flattened to one (label, fact,
-    // measure) shape; the oracle replays every planted fact, so a
-    // misroute anywhere breaks the hash
-    "q_lakehouse_omni" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val lh = LakehouseOmni.synthLakehouse(d, "doc_id", "content")
-      Multimodal.decodeBatches(lh, "content",
-          LakehouseOmni.lakehouseSchema)(
-          LakehouseOmni.decodeLakehouse)
-        .select(col("doc_id"), col("label"), col("fact"),
-          col("measure"))
-    }),
-
-    // ----- Iceberg MANIFEST LIST census (the public Iceberg table
-    // spec v2; round 17): the snapshot's scan-planning tier — Avro
-    // manifest_file records with nested field_summary arrays,
-    // nullable unions and bound bytes — decoded end-to-end through
-    // the in-house Avro surface; every planted count/sequence/spec
-    // fact replays closed-form, so a mis-decode anywhere in the
-    // nested tree breaks the hash
-    "q_iceberg_manifests" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ml = Iceberg.synthManifestLists(d, "doc_id", "content")
-      Multimodal.decodeBatches(ml, "content",
-          Iceberg.manifestListSchema)(Iceberg.decodeManifestList)
-        .select(col("doc_id"), col("n_manifests"),
-          col("total_added_files"), col("total_added_rows"),
-          col("total_deleted_files"), col("max_seq"),
-          col("min_seq"), col("spec_ids"),
-          col("n_null_partitions"), col("n_summaries"),
-          col("n_contains_null"), col("n_missing_upper"),
-          col("first_path"))
-    }),
-
-    // ----- Iceberg MANIFEST FILE census: manifest_entry records
-    // with the nested data_file record, partition tuple, and the
-    // spec's array-of-key/value int-keyed stats maps
-    "q_iceberg_entries" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val mf = Iceberg.synthManifests(d, "doc_id", "content")
-      Multimodal.decodeBatches(mf, "content",
-          Iceberg.manifestSchema)(Iceberg.decodeManifest)
-        .select(col("doc_id"), col("n_entries"), col("n_existing"),
-          col("n_added"), col("n_deleted"), col("n_null_snap"),
-          col("rows_sum"), col("bytes_sum"), col("formats"),
-          col("bucket_sum"), col("colsize_sum"))
-    }),
-
-    // ----- Iceberg v2 SEQUENCE-NUMBER pairing (round 18 — the
-    // rule that decides which delete manifests APPLY to which data
-    // manifests at scan time: a delete applies to data at or below
-    // its own sequence number): per-manifest (content, seq) pairs
-    // from the manifest list, the pairing count computed
-    // engine-side with nested array lambdas — zero UDFs, zero
-    // joins (the per-table manifest list is array-sized)
-    "q_iceberg_seq_pairing" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val ml = Iceberg.synthManifestLists(d, "doc_id", "content")
-      val dec = Multimodal.decodeBatches(ml, "content",
-          Iceberg.manifestPairsSchema)(Iceberg.decodeManifestPairs)
-      val pairs = split(col("pairs_csv"), ",")
-      val dataSeqs = transform(
-        filter(pairs, p => substring_index(p, ":", 1) === "0"),
-        p => substring_index(p, ":", -1).cast("bigint"))
-      val delSeqs = transform(
-        filter(pairs, p => substring_index(p, ":", 1) === "1"),
-        p => substring_index(p, ":", -1).cast("bigint"))
-      dec.select(col("doc_id"),
-        size(pairs).as("n_manifests"),
-        size(dataSeqs).as("n_data"),
-        size(delSeqs).as("n_delete"),
-        aggregate(dataSeqs, lit(0),
-          (acc, s) => acc + size(filter(delSeqs, dd => dd >= s)))
-          .as("applied_pairs"))
-    }),
-
-    // ----- Iceberg TABLE-LEVEL metadata census (round 18 — the
-    // entry point of scan planning the manifest tiers root on):
-    // vN.metadata.json with the current-snapshot pointer, the
-    // parent-chain ancestry walk (broken/cyclic chains refuse), the
-    // snapshot log's monotonicity, schema evolution and partition
-    // specs — every planted fact replayed closed-form
-    "q_iceberg_snapshots" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val mj = Iceberg.synthMetadataJsons(d, "doc_id", "content")
-      Multimodal.decodeBatches(mj, "content",
-          Iceberg.metadataJsonSchema)(Iceberg.decodeMetadataJson)
-        .select(col("doc_id"), col("format_version"),
-          col("n_snapshots"), col("current_snapshot_id"),
-          col("ancestry_depth"), col("n_log_entries"),
-          col("log_monotonic"), col("ops_csv"),
-          col("added_records_sum"), col("current_manifest_list"),
-          col("n_schemas"), col("current_schema_fields"),
-          col("n_spec_fields"), col("last_sequence_number"),
-          col("format_default"))
-    }),
-
-    // ----- Iceberg v2 POSITION DELETES + merge-on-read (round 18):
-    // the delete payload (an Avro file of (file_path, pos) records)
-    // is decoded through the house Avro surface, exploded into join
-    // rows, and the MOR read path is the real thing — a left-anti
-    // join of the planted data rows on (file_path, pos), the exact
-    // shuffle a 100 TB MOR scan does; live counts and value sums
-    // replay closed-form
-    "q_iceberg_mor" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val pd = Iceberg.synthPosDeletes(d, "doc_id", "content")
-      val deletes = Multimodal.decodeBatches(pd, "content",
-          Iceberg.posDeleteSchema)(Iceberg.decodePosDeletes)
-        .select(explode(split(col("deletes_csv"), ",")).as("kv"))
-        .select(substring_index(col("kv"), "|", 1).as("file_path"),
-          substring_index(col("kv"), "|", -1).cast("bigint")
-            .as("pos"))
-      val data = d
-        .select(col("doc_id"), explode(sequence(lit(0),
-          (col("doc_id") % 4).cast("int"))).as("e"))
-        .select(col("doc_id"),
-          concat(lit("s3://lake/data/f"), col("doc_id"), lit("-"),
-            col("e"), lit(".parquet")).as("file_path"))
-        .select(col("doc_id"), col("file_path"),
-          explode(sequence(lit(0L), lit(9L))).as("pos"))
-      data.join(deletes, Seq("file_path", "pos"), "left_anti")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_live"),
-          sum(col("doc_id") * 10 + col("pos")).cast("bigint")
-            .as("live_value_sum"))
-    }),
-
-    // ----- Iceberg EQUALITY deletes (round 18 — v2's second
-    // row-level delete kind): a file of VALUES on the declared
-    // equality columns, applied as an anti join on (table, key) —
-    // where position deletes key on (file, pos). Same planted data
-    // rows as the MOR query, different delete algebra
-    "q_iceberg_eqdelete" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ed = Iceberg.synthEqDeletes(d, "doc_id", "content")
-      val deletes = Multimodal.decodeBatches(ed, "content",
-          Iceberg.eqDeleteSchema)(Iceberg.decodeEqDeletes)
-        .select(col("doc_id"),
-          explode(split(col("eq_csv"), ",").cast("array<bigint>"))
-            .as("k"))
-      val data = d
-        .select(col("doc_id"), explode(sequence(lit(0),
-          (col("doc_id") % 4).cast("int"))).as("e"))
-        .select(col("doc_id"), col("e"),
-          explode(sequence(lit(0L), lit(9L))).as("k"))
-      data.join(deletes, Seq("doc_id", "k"), "left_anti")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_live"),
-          sum(col("k")).cast("bigint").as("live_key_sum"))
-    }),
-
-    // ----- snapshot EXPIRY planning (round 18 — the retention job
-    // every lake schedules): which snapshots fall before the
-    // cutoff, how much history survives, and the invariant that
-    // the CURRENT snapshot is never expirable — the decision
-    // computed engine-side with codegen'd array functions over the
-    // census's timestamp list, zero UDFs
-    "q_snapshot_expire" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val mj = Iceberg.synthMetadataJsons(d, "doc_id", "content")
-      val dec = Multimodal.decodeBatches(mj, "content",
-          Iceberg.metadataJsonSchema)(Iceberg.decodeMetadataJson)
-      val ts = split(col("snapshot_ts_csv"), ",")
-        .cast("array<bigint>")
-      val cutoff = lit(1700000000000L) + col("doc_id") * 1000 +
-        (col("doc_id") % col("n_snapshots")) * 7
-      dec.select(col("doc_id"), col("n_snapshots"),
-        cutoff.as("cutoff_ms"),
-        size(filter(ts, x => x < cutoff)).as("n_expired"),
-        (col("n_snapshots") -
-          size(filter(ts, x => x < cutoff))).as("n_retained"),
-        (element_at(ts, -1) < cutoff).as("current_expirable"))
-    }),
-
-    // ----- Avro SCHEMA RESOLUTION (round 18 — the spec's "Schema
-    // Resolution" rules: schema EVOLUTION on read): old-schema
-    // files consumed through today's reader — a dropped field, a
-    // long→double promotion, a defaulted new field — with
-    // narrowing / cross-domain promotions and missing-without-
-    // default fields refusing; the resolved rows replay closed-form
-    "q_avro_evolution" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val av = Avro.synthEvolves(d, "doc_id", "content")
-      Multimodal.decodeBatches(av, "content",
-          Avro.evolveSchema)(Avro.decodeEvolve)
-        .select(col("doc_id"), col("n_rows"), col("b_first"),
-          col("c_sum"), col("d_sum"))
-    }),
-
-    // ----- Hudi TIMELINE census (round 18 — the third lakehouse
-    // format, completing the big three): `.hoodie/` instants with
-    // the state encoded in the FILE NAME (bare action = completed;
-    // .inflight/.requested ignored by readers), completed commit
-    // bodies' partitionToWriteStats parsed distributed and
-    // censused per partition — every planted fact closed-form
-    "q_hudi_timeline" -> ((s, dir) => {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_q_hudi"
-      Hudi.writeTimeline(path)
-      Hudi.timelineCensus(s, path)
-        .select(col("partition"), col("n_commits"), col("writes"),
-          col("bytes"), col("n_inflight"), col("n_cleans"),
-          col("latest_ts"))
-    }),
-
-    // ----- Iceberg REFS + partition-spec application (round 19):
-    // named branches/tags resolve to snapshot ids (main must be a
-    // branch at the current snapshot; a dangling ref refuses), and
-    // the default spec's partition transforms apply to the
-    // manifest entries' partition tuples so the census answers
-    // "which files does partition P touch at branch B" engine-side
-    "q_iceberg_refs" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val mj = Iceberg.synthMetadataJsons(d, "doc_id", "content")
-      val refs = Multimodal.decodeBatches(mj, "content",
-        Iceberg.refsSchema)(Iceberg.decodeRefs)
-      val mf = Iceberg.synthManifests(d, "doc_id", "content")
-      val bks = Multimodal.decodeBatches(mf, "content",
-          Iceberg.bucketsSchema)(Iceberg.decodeManifestBuckets)
-        .select(col("doc_id"), split(col("buckets_csv"), ",")
-          .cast("array<bigint>").as("buckets"))
-      refs.join(bks, Seq("doc_id"))
-        .select(col("doc_id"), col("n_refs"), col("n_branches"),
-          col("n_tags"), col("main_is_current"),
-          col("b1_snapshot"), col("t1_snapshot"),
-          col("spec_transforms"),
-          ((col("doc_id") + 1) % 8).cast("int").as("probe_bucket"),
-          size(filter(col("buckets"),
-            b => b === (col("doc_id") + 1) % 8))
-            .as("files_at_probe"))
-    }),
-
-    // ----- Hudi MOR FILE GROUPS + log blocks (round 19 — the
-    // read depth Hudi lacked while Delta/Iceberg got theirs): per
-    // file group the LATEST completed base file (a base at an
-    // inflight instant is ignored; older versions counted stale),
-    // its ordered HoodieLogFormat log files walked block by block
-    // (magic / block length / version / type / header map /
-    // content), data vs delete blocks censused and records
-    // counted — with a stale log rooted at a replaced base that
-    // must NOT attach
-    "q_hudi_filegroups" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}" +
-        "/graft_q_hudi_mor"
-      Hudi.writeMorTable(path)
-      Hudi.fileGroups(s, path)
-        .select(col("file_group"), col("partition"),
-          col("base_instant"), col("n_stale_bases"),
-          col("n_logs"), col("n_data_blocks"),
-          col("n_delete_blocks"), col("n_corrupt_blocks"),
-          col("log_records"))
-    }),
-
-    // ----- Iceberg INCREMENTAL scan (round 18 — the CDC read
-    // pattern: "what changed since snapshot X?"): from the
-    // metadata census's ordered snapshot facts, the engine slices
-    // the per-snapshot added-records between the from-snapshot and
-    // the current one and folds them with codegen'd array
-    // functions — the planning arithmetic of an incremental
-    // consumer, zero UDFs
-    "q_iceberg_incremental" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val mj = Iceberg.synthMetadataJsons(d, "doc_id", "content")
-      val dec = Multimodal.decodeBatches(mj, "content",
-          Iceberg.metadataJsonSchema)(Iceberg.decodeMetadataJson)
-      val added = split(col("added_records_csv"), ",")
-        .cast("array<bigint>")
-      val n = col("n_snapshots")
-      val from = col("doc_id") % n // snapshot index consumed so far
-      val inc = slice(added, (from + 2).cast("int"),
-        (n - from - 1).cast("int"))
-      dec.select(col("doc_id"), n.as("n_snapshots"),
-        from.cast("int").as("from_idx"),
-        (n - from - 1).cast("int").as("n_incremental"),
-        aggregate(inc, lit(0L), (acc, x) => acc + x)
-          .as("inc_added_records"))
-    }),
-
-    // ----- ORC stripe/column STATISTICS census (round 17 — the
-    // facts that drive stripe skipping at 100 TB): file-level
-    // min/max/sum/nulls from the footer, per-stripe min/max from the
-    // Metadata section, and the PRUNING DECISION ITSELF computed
-    // engine-side with codegen'd array functions (zip_with + filter
-    // over the stripe intervals — zero UDFs): a point probe must hit
-    // exactly one of the five known 1024-row stripes and a planted
-    // 1500-wide range probe a doc-dependent count, both replayed
-    // closed-form by the oracle
-    "q_orc_stats" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val os = Orc.synthOrcStats(d, "content")
-      val dec = Multimodal.decodeBatches(os, "content",
-        Orc.orcStatsSchema)(Orc.decodeOrcStats)
-      val mins = split(col("stripe_mins"), ",")
-        .cast("array<bigint>")
-      val maxs = split(col("stripe_maxs"), ",")
-        .cast("array<bigint>")
-      val probe = col("doc_id") % 5000
-      val lo = col("doc_id") % 4000
-      val hi = lo + 1500
-      dec.select(col("doc_id"), col("n_stripes_stats"),
-        col("file_min"), col("file_max"), col("file_sum"),
-        col("file_nvals"), col("has_null"), col("str_min"),
-        col("str_max"), col("str_len_sum"),
-        probe.as("probe"),
-        size(filter(zip_with(mins, maxs,
-            (mn, mx) => mn <= probe && mx >= probe), x => x))
-          .as("n_hit"),
-        size(filter(zip_with(mins, maxs,
-            (mn, mx) => mn <= hi && mx >= lo), x => x))
-          .as("n_range_hit"))
-    }),
-
-    // ----- ORC stripe DATA decode (round 19 — the read-path
-    // parity the metadata tier lacked): house code reads VALUES
-    // from ORC stripes — present streams, integer RLEv2, string
-    // dictionaries — across the 5-stripe stats fixture and the
-    // nullable fixture; per doc a LIVE point lookup
-    // (value[doc_id % n]) makes every doc prove a different slice
-    // of the decode, exactly the q_parquet_read pattern
-    "q_orc_read" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      OrcRead.orcReadRows(d, "doc_id")
-        .select(col("doc_id"), col("n_values"), col("n_stripes"),
-          col("id_sum"), col("id_probe"), col("s_probe"),
-          col("s_dict"), col("t_n_nulls"), col("t_probe"),
-          col("d_probe"))
-    }),
-
-    // ----- ORC row-group indexes + BLOOM streams (round 18 — the
-    // intra-stripe skipping tier, parquet-bloom parity): the
-    // committed Spark-written fixture's ROW_INDEX gives per-group
-    // zone maps (pruning counts computed engine-side, zero UDFs)
-    // and the BLOOM_FILTER_UTF8 streams are probed LIVE per doc —
-    // member probes (Thomas-Wang for the long column, Murmur3
-    // hash64 over UTF-8 for the string column) must hit their own
-    // row group; absent probes come from verified zero-FP windows,
-    // so every bloom verdict is deterministic for the oracle
-    "q_orc_bloom" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val dec = Orc.orcBloomRows(d, "doc_id")
-      val mins = split(col("ri_mins"), ",").cast("array<bigint>")
-      val maxs = split(col("ri_maxs"), ",").cast("array<bigint>")
-      val probe = col("doc_id") % 5000
-      val lo = col("doc_id") % 4000
-      val hi = lo + 1500
-      dec.select(col("doc_id"), col("n_row_groups"),
-        col("n_hash"), col("bitset_bytes"),
-        col("ri_mins"), col("ri_maxs"),
-        col("member_hit"), col("s_member_hit"),
-        col("absent_hit"), col("s_absent_hit"),
-        probe.as("probe"),
-        size(filter(zip_with(mins, maxs,
-            (mn, mx) => mn <= probe && mx >= probe), x => x))
-          .as("ri_n_hit"),
-        size(filter(zip_with(mins, maxs,
-            (mn, mx) => mn <= hi && mx >= lo), x => x))
-          .as("ri_range_hit"))
-    }),
-
-    // ----- parquet PAGE-level column indexes (round 18 — the
-    // intra-row-group skipping tier, PARQUET-1201; ORC row-group
-    // parity): per-page [min,max] from the ColumnIndex and
-    // first_row_index from the OffsetIndex of the committed
-    // parquet-mr fixture, with the page-prune decision computed
-    // engine-side over the decoded bounds — the step a reader
-    // takes before decompressing ANY page
-    "q_parquet_pages" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val dec = ParquetMeta.pageIndexRows(d, "doc_id")
-      val mins = split(col("page_mins"), ",").cast("array<bigint>")
-      val maxs = split(col("page_maxs"), ",").cast("array<bigint>")
-      val probe = col("doc_id") % 5000
-      val lo = col("doc_id") % 4000
-      val hi = lo + 1500
-      dec.select(col("doc_id"), col("n_pages"),
-        col("boundary_order"), col("n_null_pages"),
-        col("page_mins"), col("page_maxs"), col("first_rows"),
-        col("s_first_min"), col("s_last_max"),
-        probe.as("probe"),
-        size(filter(zip_with(mins, maxs,
-            (mn, mx) => mn <= probe && mx >= probe), x => x))
-          .as("pg_n_hit"),
-        size(filter(zip_with(mins, maxs,
-            (mn, mx) => mn <= hi && mx >= lo), x => x))
-          .as("pg_range_hit"))
-    }),
-
-    // ----- parquet DATA-PAGE decode (round 18 — actually reading
-    // VALUES with house code end-to-end: page headers, all five
-    // fixture codecs, the PLAIN and RLE_DICTIONARY encodings): the
-    // committed page fixture's id column decodes fully (cross-
-    // verified against its own footer statistics) and the
-    // low-cardinality grp column exercises the dictionary +
-    // RLE/bit-packed hybrid path; per doc a LIVE point lookup —
-    // value[doc_id % n] — makes every doc prove a different slice
-    // of the decode
-    "q_parquet_read" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      ParquetMeta.pageReadRows(d, "doc_id")
-        .select(col("doc_id"), col("n_values"),
-          col("n_data_pages"), col("n_dict_entries"),
-          col("values_sum"), col("v_min"), col("v_max"),
-          col("sum_matches_stats"), col("probe_value"),
-          col("g_n_dict"), col("g_sum"), col("g_probe_value"),
-          col("s_probe_value"), col("t_n_nulls"),
-          col("t_n_dict"), col("t_probe_value"))
-    }),
-
-    // ----- END-TO-END Iceberg table READ (round 19 — the
-    // composition of every lakehouse tier): metadata.json →
-    // current snapshot → manifest list → manifest entries → typed
-    // parquet data-page decode → sequence-gated position-delete
-    // anti join → row values, on a planted multi-file table. The
-    // planted seams: a stale snapshot whose manifest list must NOT
-    // be read, and a position delete at sequence 3 carrying rows
-    // against a sequence-4 data file that the gate must drop
-    "q_iceberg_scan" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}" +
-        "/graft_q_ice_scan"
-      TableScan.plantIcebergTable(s, path)
-      TableScan.icebergScan(s, path)
-    }),
-
-    // ----- END-TO-END Delta table READ (round 19 — the DV twin):
-    // _last_checkpoint → checkpoint parquet → JSON tail
-    // (last-action-wins with the deletionVector descriptor) →
-    // typed parquet decode → DV bitmap probe INSIDE the scan task
-    // (no join — the reason deletion vectors win at 100 TB) →
-    // row values
-    "q_delta_scan" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}" +
-        "/graft_q_delta_scan"
-      TableScan.plantDeltaTable(s, path)
-      TableScan.deltaScan(s, path)
-    }),
-
-    // ----- Delta COLUMN MAPPING (round 19): a column-mapped
-    // table's parquet files carry PHYSICAL names; the logical
-    // schema lives only in metaData.schemaString's
-    // delta.columnMapping annotations. The scan resolves
-    // logical→physical before decoding, and the planted mapped
-    // table must census identically to its unmapped twin — a
-    // reader that ignores the mapping reads wrong columns
-    "q_delta_colmap" -> ((s, dir) => {
-      val mapped = s"${System.getProperty("java.io.tmpdir")}" +
-        "/graft_q_delta_colmap"
-      val twin = s"${System.getProperty("java.io.tmpdir")}" +
-        "/graft_q_delta_colmap_twin"
-      TableScan.plantDeltaMappedTable(s, mapped, "name")
-      TableScan.plantDeltaMappedTable(s, twin, "plain")
-      val m = TableScan.deltaScan(s, mapped)
-      val t = TableScan.deltaScan(s, twin)
-        .withColumnRenamed("n_live", "twin_n_live")
-        .withColumnRenamed("sum_val", "twin_sum_val")
-      m.join(t, Seq("file_k"))
-        .select(col("file_k"), col("n_live"), col("sum_val"),
-          col("twin_n_live"), col("twin_sum_val"),
-          (col("n_live") === col("twin_n_live") &&
-            col("sum_val") === col("twin_sum_val"))
-            .as("mapped_matches_twin"))
-    }),
-
-    // ----- parquet TYPED data-page decode (round 19 — the FULL
-    // physical-type matrix: bool/int32/int64/float/double/
-    // byte_array/FLBA-decimal/date/timestamp, v1 AND v2 pages,
-    // PLAIN + dictionary + RLE booleans + the three delta
-    // encodings, def levels driven by the footer schema's declared
-    // repetition): the same planted 3000-row table is read back
-    // through three wire paths (v1+dict+snappy, v2+delta+zstd,
-    // v1+PLAIN) and every per-doc probe must replay closed-form —
-    // the gate on the end-to-end lakehouse table read
-    "q_parquet_typed" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      ParquetTyped.typedReadRows(d, "doc_id")
-    }),
-
-    // ----- Python pickle census (the public pickletools opcode
-    // grammar): five planted shapes cycling by doc — proto-2 dict /
-    // proto-4 framed list / tuple3 / a REDUCE with its global /
-    // proto-0 ASCII dict — replayed as structure-only facts (the
-    // machine never constructs objects); PickleSpec pins the census
-    // against fixtures CPython's own pickle wrote at protocols 0-5
-    "q_pickle_census" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ps = Pickle.synthPickles(d, "doc_id", "content")
-      Multimodal.decodeBatches(ps, "content",
-          Pickle.pickleSchema)(Pickle.decodePickle)
-        .select(col("doc_id"), col("protocol"), col("n_ops"),
-          col("top_kind"), col("n_items"), col("globals_csv"),
-          col("n_memo"), col("n_frames"))
-    }),
-
-    // ----- the ARTIFACT omni compose (the binary analog of
-    // q_crawl_omni): eight artifact kinds cycling by doc —
-    // ELF/PE/class/wasm/fonts(3 containers)/parquet/torrent/
-    // git-pack — each magic-sniffed and routed to its reference-
-    // pinned extractor, flattened to one (label, fact, measure)
-    // row shape; a misroute anywhere breaks the oracle
-    "q_artifact_omni" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val as = ArtifactOmni.synthArtifacts(d, "doc_id", "content")
-      Multimodal.decodeBatches(as, "content",
-          ArtifactOmni.artifactSchema)(ArtifactOmni.decodeArtifact)
-        .select(col("doc_id"), col("label"), col("fact"),
-          col("measure"))
-    }),
-
-    // ----- font triage (OpenType/sfnt + WOFF + WOFF2): planted
-    // family/style/glyph facts replayed through all three
-    // containers (WOFF2's brotli layer rides the reference-pinned
-    // codec); the system DejaVu Serif pins the decode against
-    // fc-scan's facts in FontSpec
-    "q_font_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val fs = Font.synthFonts(d, "doc_id", "content")
-      Multimodal.decodeBatches(fs, "content",
-          Font.fontSchema)(Font.decodeFont)
-        .select(col("doc_id"), col("container"), col("family"),
-          col("style"), col("n_tables"), col("n_glyphs"),
-          col("units_per_em"))
-    }),
-
-    // ----- PE/COFF triage (the public Microsoft PE spec — the
-    // Windows half of the executable tier): planted arch/dll/
-    // section shapes replayed; binutils' independent BFD backend
-    // reads the writer's images (PeSpec + PePinGen)
-    "q_pe_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 4 + 1).cast("int").as("__n"))
-      val pes = Pe.synthPes(d, "doc_id", "__n", "content")
-      Multimodal.decodeBatches(pes, "content",
-          Pe.peSchema)(Pe.decodePe)
-        .select(col("doc_id"), col("machine"), col("is64"),
-          col("is_dll"), col("n_sections"), col("section_names"))
-    }),
-
-    // ----- Java .class triage (the JVMS ClassFile grammar): the
-    // full constant-pool walk with planted class/method/field
-    // shapes replayed; javac fixtures pinned against javap in
-    // JavaClassSpec, and javap disassembles the writer's output
-    // (JavaClassPinGen)
-    "q_class_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 4 + 1).cast("int").as("__n"))
-      val cs = JavaClass.synthClasses(d, "doc_id", "__n", "content")
-      Multimodal.decodeBatches(cs, "content",
-          JavaClass.classSchema)(JavaClass.decodeClass)
-        .select(col("doc_id"), col("major"), col("class_name"),
-          col("super_name"), col("n_fields"), col("n_methods"),
-          col("method_names"))
-    }),
-
-    // ----- WASM module triage (the public wasm binary spec):
-    // planted section/export/custom census replayed; the writer's
-    // modules are validated by Node's production WebAssembly
-    // engine (WasmSpec + WasmPinGen record the pin)
-    "q_wasm_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 4 + 1).cast("int").as("__n"))
-      val ws = Wasm.synthWasms(d, "doc_id", "__n", "content")
-      Multimodal.decodeBatches(ws, "content",
-          Wasm.wasmSchema)(Wasm.decodeWasm)
-        .select(col("doc_id"), col("version"), col("n_sections"),
-          col("section_ids"), col("n_exports"),
-          col("export_names"), col("custom_names"))
-    }),
-
-    // ----- ELF binary triage (elf(5)/gABI): planted class/machine/
-    // section census replayed; the committed gcc fixtures pin the
-    // decode against readelf's facts in ElfSpec
-    "q_elf_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 4 + 1).cast("int").as("__n"))
-      val elfs = Elf.synthElfs(d, "doc_id", "__n", "content")
-      Multimodal.decodeBatches(elfs, "content",
-          Elf.elfSchema)(Elf.decodeElf)
-        .select(col("doc_id"), col("is64"), col("e_type"),
-          col("machine"), col("n_sections"), col("section_names"))
-    }),
-
-    // ----- REAL git packfile walk (gitformat-pack; code corpora
-    // ship as git repos and the pack is where the bytes live):
-    // per doc a pack of planted blobs — odd docs as genuine
-    // OFS_DELTA chains — with the trailing pack SHA-1 AND every
-    // reconstructed object id verified; pinned BOTH directions
-    // against git 2.39 (its packs walk to its own ids here; our
-    // packs pass `git index-pack --strict` — GitPackPinGen)
-    "q_git_pack" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val packs = GitPack.synthPacks(d, "doc_id", "__t", "__n",
-        "content")
-      GitPack.packObjectRows(packs, "doc_id", "content")
-        .select(col("doc_id"), col("obj_type"), col("u_size"),
-          col("delta_depth"), col("blob_text"))
-    }),
-
-    // ----- parquet FOOTER triage from raw bytes (thrift compact
-    // protocol from the public parquet-format spec): the committed
-    // fixtures are written by Spark's own parquet-mr — the
-    // reference implementation — across five codecs, a nested
-    // schema and a 151-row-group file; the walk must replay what
-    // the reference writer planted, footer-only, never page data
-    "q_parquet_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ps = ParquetMeta.synthParquets(d, "doc_id", "content")
-      Multimodal.decodeBatches(ps, "content",
-          ParquetMeta.pqSchema)(ParquetMeta.decodePq)
-        .select(col("doc_id"), col("pq_version"), col("num_rows"),
-          col("n_row_groups"), col("n_leaf_columns"),
-          col("leaf_names"), col("codecs"))
-    }),
-
-    // ----- schema-less protobuf wire-format census (the public
-    // encoding spec): planted varint/string/repeated/nested/fixed64
-    // fields replay per (field, wire type) with occurrence counts,
-    // payload bytes, varint sums and the every-occurrence nested
-    // flag; the free-text payload is NUL-prefixed so the flag stays
-    // deterministic (a NUL key is field 0 — never a valid message)
-    "q_proto_census" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val ps = Proto.synthProtos(d, "doc_id", "__t", "__n",
-        "content")
-      Proto.protoCensusRows(ps, "doc_id", "content")
-        .select(col("doc_id"), col("field_no"), col("wire_type"),
-          col("n_occ"), col("n_bytes"), col("varint_sum"),
-          col("nested"))
-    }),
-
-    // ----- REAL .torrent parse (BEP 3 bencode, canonical form
-    // demanded): planted single-/multi-file metainfo replayed
-    // arithmetically; the infohash (SHA-1 of the info dict's exact
-    // source span) is exercised by q_torrent_dedup and pinned
-    // against a hashlib reference literal in TorrentSpec
-    "q_torrent_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val ts = Torrent.synthTorrents(d, "doc_id", "content")
-      Multimodal.decodeBatches(ts, "content",
-          Torrent.torrentSchema)(Torrent.decodeTorrent)
-        .select(col("doc_id"), col("t_name"), col("piece_length"),
-          col("n_pieces"), col("n_files"), col("total_length"))
-    }),
-
-    // ----- infohash dedup: the canonical torrent identity — docs
-    // cycling over 97 planted seeds must cluster exactly by seed
-    // (any infohash nondeterminism or span slip breaks the counts)
-    "q_torrent_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 97).cast("int").as("__seed"))
-      val ts = Torrent.synthTorrents(d, "__seed", "content")
-      Multimodal.decodeBatches(ts, "content",
-          Torrent.torrentSchema)(Torrent.decodeTorrent)
-        .select(col("doc_id"), col("infohash"))
-        .groupBy(col("infohash"))
-        .agg(min(col("doc_id")).as("doc_id"),
-          count(lit(1)).as("n_dups"))
-        .select(col("doc_id"), col("n_dups"))
-    }),
-
-    // ----- REAL Matroska/WebM EBML walk (RFC 8794 + the public
-    // Matroska element tables): per doc a genuine container —
-    // webm/matroska, sized/streamed (unknown-size Segment) and both
-    // Duration float widths cycling by doc — decoded to doc type,
-    // duration, dims, codecs; clusters skipped, never parsed
-    "q_mkv_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(160) + (col("doc_id") % 8) * 16).cast("int").as("__w"),
-        (lit(120) + (col("doc_id") % 6) * 16).cast("int").as("__h"),
-        (lit(1000) + col("doc_id") % 9000).cast("int").as("__d"))
-      val mkvs = Mkv.synthMkvs(d, "doc_id", "__w", "__h", "__d",
-        "content")
-      Multimodal.decodeBatches(mkvs, "content",
-          Mkv.mkvSchema)(Mkv.decodeMkv)
-        .select(col("doc_id"), col("doc_type"), col("duration_ms"),
-          col("n_tracks"), col("video_codec"), col("width"),
-          col("height"), col("audio_codec"), col("sample_rate"),
-          col("channels"))
-    }),
-
-    // ----- REAL ISO 9660 walk (ECMA-119 + Rock Ridge NM + Joliet
-    // fallback): per doc a genuine image — PVD, L/M path tables,
-    // SUSP SP/ER announcements, RR-named records, odd files in a
-    // subdirectory — listed back with extraction verified; bsdtar
-    // reads the writer's images with real names byte-exactly
-    // (IsoSpec + IsoPinGen record the pin)
-    "q_iso_entries" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val isos = Iso.synthIsos(d, "doc_id", "__t", "__n", "content")
-      Iso.isoEntryRows(isos, "doc_id", "content")
-        .select(col("doc_id"), col("entry_path"), col("u_size"),
-          col("ok"))
-    }),
-
-    // ----- REAL RAR5 walk (the public rarlab block grammar):
-    // stored members with verified data CRC32s; libarchive's
-    // independent rar5 reader lists/extracts the writer's archives
-    // byte-exactly (RarSpec + RarPinGen record the pin; no rar
-    // binary exists here — probe recorded)
-    "q_rar_entries" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val rars = Rar.synthRars(d, "doc_id", "__t", "__n", "content")
-      Rar.rarEntryRows(rars, "doc_id", "content")
-        .select(col("doc_id"), col("entry_name"), col("method"),
-          col("u_size"), col("ok"))
-    }),
-
-    // ----- REAL cpio walk (odc + newc + newc-CRC cycling by doc):
-    // the initramfs/rpm payload dialects, the CRC dialect's data
-    // sum verified; bsdtar reads the writer's output byte-exactly
-    // (CpioSpec + CpioPinGen record the pin)
-    "q_cpio_entries" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val cps = Cpio.synthCpios(d, "doc_id", "__t", "__n", "content")
-      Cpio.cpioEntryRows(cps, "doc_id", "content")
-        .select(col("doc_id"), col("entry_name"), col("format"),
-          col("u_size"), col("ok"))
-    }),
-
-    // ----- REAL deb(5)/ar walk: per doc a genuine .deb (GNU ar
-    // framing, control+data tars through gzip/xz/zstd cycling by
-    // doc) listed back through the nested codec route; binutils ar
-    // and bsdtar both read the writer's output byte-exactly
-    // (ArSpec + ArPinGen record the pin)
-    "q_deb_entries" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val debs = Ar.synthDebs(d, "doc_id", "__t", "__n", "content")
-      Ar.debEntryRows(debs, "doc_id", "content")
-        .select(col("doc_id"), col("member"), col("codec"),
-          col("entry_name"), col("u_size"))
-    }),
-
-    // ----- REAL CAB walk ([MS-CAB]): per doc a genuine cabinet
-    // (header, folder directory, CFFILE records, per-block XOR-fold
-    // checksums, stored + MSZIP folders with the cross-block deflate
-    // window) listed back with extraction verified per member; the
-    // writer's output is extracted byte-exactly by libarchive at
-    // fixture-generation time (CabSpec pins it)
-    "q_cab_entries" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"))
-      val cabs = Cab.synthCabs(d, "doc_id", "__t", "__n", "content")
-      Cab.cabEntryRows(cabs, "doc_id", "content")
-        .select(col("doc_id"), col("entry_name"),
-          col("compression"), col("u_size"), col("ok"))
-    }),
-
-    // ----- REAL gzip member decode: header flag walk (FNAME), raw
-    // inflate, CRC32 + ISIZE trailer verification — the text must
-    // come back byte-identical or the row nulls
-    "q_gzip_roundtrip" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val gz = Archive.synthGzips(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(gz, "content",
-          Archive.gunzipTextSchema)(Archive.decodeGunzipText)
-        .select(col("doc_id"), col("gz_text"))
-    }),
-
-    // ----- REAL BMP decode: paletted 8-bit checkerboards with true
-    // 4-byte row padding, every 3rd doc top-down (negative height) —
-    // a fifth raster codec behind the same analytic constants
-    "q_bmp_phash" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 100).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 100 + col("doc_id") % 50)
-          .cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"),
-        (col("doc_id") % 3 === 0).cast("int").as("__td"))
-      val bmp = Multimodal.synthCheckerBmp(d, "__w", "__h", "__a",
-        "__b", "__p", "__td", "content")
-      Multimodal.decodeBatches(bmp, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- ANIMATED GIF frame walk: per doc a multi-frame GIF whose
-    // checkerboard phase advances each frame (every 3rd doc
-    // interlaced) — graphic-control parsing + per-frame LZW +
-    // compositing snapshots behind the same analytic hash constants
-    "q_gif_frames" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 100).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 100 + col("doc_id") % 50)
-          .cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"),
-        (col("doc_id") % 3 === 0).cast("int").as("__il"))
-      val gif = Multimodal.synthCheckerAnimGif(d, "__w", "__h",
-        "__a", "__b", "__p", "__n", "__il", "content")
-      Multimodal.gifFrameHashes(gif, "doc_id", "content")
-        .select(col("doc_id"), col("frame_idx"), col("ahash"))
-    }),
-
-    // ----- duplicate-frame detection ACROSS animated GIFs: the
-    // q_video_frame_dup construction (per-group base pattern, one
-    // distinct high-bit flip per frame) through the GIF container —
-    // meme near-dup pairing, banding vs brute-force hamming oracle
-    "q_gif_frame_dup" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        lit(40).as("__a"), lit(200).as("__b"),
-        expr("""transform(sequence(0, CAST(doc_id % 3 AS INT)), f ->
-          (CAST(conv(substring(md5(concat('gd:',
-             CAST(doc_id DIV 2 AS STRING))), 1, 15), 16, 10)
-             AS BIGINT) | 1)
-          ^ shiftleft(CAST(1 AS BIGINT),
-              50 + CAST(doc_id % 2 AS INT) * 3 + f))""")
-          .as("__patterns"))
-      val gif = Multimodal.synthAnimGif(d, "__patterns", "__a",
-        "__b", "content")
-      val hashes = Multimodal.gifFrameHashes(gif, "doc_id", "content")
-        .select((col("doc_id") * 4 + col("frame_idx")).as("fid"),
-          col("ahash"))
-      Multimodal.imageDupPairs(hashes, "fid", "ahash", maxHamming = 3)
-    }),
-
-    // ----- REAL TIFF strip decode: the same checkerboards through
-    // strips (none/LZW-with-predictor/PackBits cycled, both byte
-    // orders, multi-strip layout, one WhiteIsZero variant) — the
-    // sixth raster codec behind the same analytic hash constants
-    "q_tiff_phash" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 100).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 100 + col("doc_id") % 50)
-          .cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"),
-        (col("doc_id") % 3).cast("int").as("__c"),
-        (col("doc_id") % 2).cast("int").as("__be"))
-      val tif = Tiff.synthCheckerTiff(d, "__w", "__h", "__a", "__b",
-        "__p", "__c", "__be", "content")
-      Multimodal.decodeBatches(tif, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- REAL MP3 frame walk: valid MPEG-1 Layer III headers
-    // behind an ID3v2 tag — every frame's sync/bitrate/rate checked,
-    // frame count and exact integer duration read back
-    "q_mp3_meta" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 20 + 5).cast("int").as("__a"),
-        (col("doc_id") % 14 + 1).cast("int").as("__b"),
-        (col("doc_id") % 3).cast("int").as("__c"),
-        (col("doc_id") % 2).cast("int").as("__d"),
-        concat(lit("T-"), substring(md5(col("doc_id")
-          .cast("string")), 1, 6)).as("__t"),
-        concat(lit("A-"), substring(md5(col("doc_id")
-          .cast("string")), 7, 6)).as("__ar"),
-        concat(lit("L-"), substring(md5(col("doc_id")
-          .cast("string")), 13, 6)).as("__al"),
-        (col("doc_id") % 4).cast("int").as("__e"))
-      val mp3 = Multimodal.synthMp3Tagged(d, "__a", "__b", "__c",
-        "__d", "__t", "__ar", "__al", "__e", "content")
-      Multimodal.decodeBatches(mp3, "content",
-          Multimodal.mp3MetaTagsSchema)(Multimodal.decodeMp3MetaTags)
-        .select(col("doc_id"), col("n_frames"), col("sample_rate"),
-          col("kbps"), col("mono"), col("duration_us"),
-          col("title"), col("artist"), col("album"))
-    }),
-
-    // ----- REAL Ogg container walk (Vorbis + Opus): page CRCs
-    // verified with the spec's unreflected 0x04C11DB7 CRC-32, header
-    // packets reassembled across a page boundary on the vorbis leg
-    // (255-lacing continuation), ident fields + VorbisComment/
-    // OpusTags TITLE/ARTIST read back, and the exact duration from
-    // the EOS granule (PCM samples for vorbis; 48 kHz minus pre-skip
-    // for opus, RFC 7845)
-    "q_ogg_meta" -> ((s, dir) => {
-      val h = md5(col("doc_id").cast("string"))
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (col("doc_id") % 2).cast("int").as("__o"),
-        (lit(8000) + (col("doc_id") % 100) * 441).cast("int")
-          .as("__r"),
-        (col("doc_id") % 8 + 1).cast("int").as("__ch"),
-        (lit(312) + col("doc_id") % 100).cast("int").as("__k"),
-        ((col("doc_id") % 50 + 2) * 960 + lit(312) +
-          col("doc_id") % 100).cast("long").as("__g"),
-        concat(lit("T-"), substring(h, 1, 6)).as("__t"),
-        concat(lit("A-"), substring(h, 7, 6)).as("__a"))
-      val ogg = Ogg.synthOggs(d, "__o", "__r", "__ch", "__k", "__g",
-        "__t", "__a", "content")
-      Multimodal.decodeBatches(ogg, "content",
-          Ogg.oggMetaSchema)(Ogg.decodeOggMeta)
-        .select(col("doc_id"), col("codec"), col("sample_rate"),
-          col("channels"), col("pre_skip"), col("duration_us"),
-          col("n_pages"), col("title"), col("artist"))
-    }),
-
-    // ----- REAL FLAC STREAMINFO parse: 20/3/5/36-bit field layout
-    // straight off the bytes — rate/channels/bits/samples planted
-    "q_flac_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        lit(1).cast("int").as("__f"),
-        (col("doc_id") % 100).cast("int").as("__a"),
-        (col("doc_id") % 8 + 1).cast("int").as("__b"),
-        (col("doc_id") % 9).cast("int").as("__c"),
-        (col("doc_id") % 50 + 1).cast("int").as("__d"))
-      val flac = Multimodal.synthAudioMeta(d, "__f", "__a", "__b",
-        "__c", "__d", "content")
-      Multimodal.decodeBatches(flac, "content",
-          Multimodal.flacMetaSchema)(Multimodal.decodeFlacMeta)
-        .select(col("doc_id"), col("sample_rate"), col("channels"),
-          col("bits_per_sample"), col("total_samples"),
-          col("duration_us"))
-    }),
-
-    // ----- one-row corpus health report: the summary a curation run
-    // opens with — doc/null/token counts, language count, near-exact
-    // duplicate mass, quality-fail rate — all exact integers in ONE
-    // aggregation pass, so two runs diff meaningfully
-    "q_corpus_report" -> ((s, dir) => {
-      CorpusScrub.corpusReport(t(s, dir, "documents"), "doc_id",
-        "text", "lang")
-    }),
-
-    // ----- end-to-end crawl ingest: WARC unwrap → HTTP body → the
-    // Gopher-style quality filter → fingerprint dedup — the wrapped
-    // bytes must feed the text stack LOSSLESSLY (the oracle runs the
-    // same filter + grouping on the documents table directly, so any
-    // byte damage in the unwrap breaks the hash)
-    "q_crawl_curate" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 2).cast("int").as("__gz"))
-      val warcs = Archive.synthWarcs(d, "doc_id", "__t", "__gz",
-        "content")
-      val rows = Archive.warcRecordRows(
-          warcs.filter(col("__gz") === 0), "doc_id", "content",
-          gzipped = false)
-        .unionByName(Archive.warcRecordRows(
-          warcs.filter(col("__gz") === 1), "doc_id", "content",
-          gzipped = true))
-        .filter(col("warc_type") === "response")
-        .select(col("doc_id"), col("body_text").as("text"))
-      val kept = rows.filter(T.qualityKeep(col("text")))
-      Dedup.byFingerprint(kept, "text", "doc_id")
-        .select(col("doc_id"), col("n_dups"))
-    }),
-
-    // ----- REAL PDF text extraction: per doc a genuine PDF (xref
-    // table / xref stream / compressed-ObjStm layouts cycled, content
-    // streams through none/Flate/ASCIIHex/ASCII85/chained/LZW/
-    // RunLength filters, literal+hex strings, TJ kerning spaces) —
-    // the extracted text must equal the planted documents.text byte
-    // for byte
-    "q_pdf_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 7).cast("int").as("__v"),
-        (col("doc_id") % 3).cast("int").as("__x"))
-      val pdfs = Pdf.synthPdfs(d, "__t", "__v", "__x", "content")
-      Multimodal.decodeBatches(pdfs, "content",
-          Pdf.pdfTextSchema)(Pdf.decodePdfText)
-        .select(col("doc_id"), col("pdf_text"), col("n_pages"))
-    }),
-
-    // ----- crawl ingest for PDF payloads: WARC response bodies with
-    // Content-Type application/pdf (every 2nd doc .warc.gz) → HTTP
-    // body split → the full PDF extractor → quality filter →
-    // fingerprint dedup — the path q_crawl_curate used to drop on
-    // the floor; the oracle runs the same filter + grouping over
-    // documents.text directly, so ANY byte damage through
-    // warc→gzip→http→pdf breaks the hash
-    "q_crawl_pdf" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 7).cast("int").as("__v"),
-        (col("doc_id") % 3).cast("int").as("__x"),
-        (col("doc_id") % 2).cast("int").as("__gz"))
-      val pdfs = Pdf.synthPdfs(d, "__t", "__v", "__x", "__pdf")
-      val warcs = Pdf.synthPdfWarcs(pdfs, "doc_id", "__pdf", "__gz",
-        "content")
-      val rows = Multimodal.decodeBatches(warcs, "content",
-          Pdf.warcPdfTextSchema)(Pdf.decodeWarcPdfText)
-        .select(col("doc_id"), col("pdf_text").as("text"))
-      val kept = rows.filter(T.qualityKeep(col("text")))
-      Dedup.byFingerprint(kept, "text", "doc_id")
-        .select(col("doc_id"), col("n_dups"))
-    }),
-
-    // ----- the OMNI crawl compose: FOURTEEN formats cycling by
-    // doc_id%14 — six direct (html/pdf/docx/rtf/epub/markdown) and
-    // eight ARCHIVE-NESTED (zip-of-pdf, tar.gz-of-rtf, 7z-of-docx,
-    // cab-of-pdf, deb-of-rtf, cpio-of-pdf, iso-of-rtf, lz4-of-pdf:
-    // the recursive unwrap tier) — each wrapped as an HTTP response
-    // in a WARC (odd docs .warc.gz), with LYING declared
-    // Content-Types on every 5th doc; the pipeline must route by
-    // magic-byte sniff at BOTH levels, extract, quality-filter, and
-    // fingerprint-dedup in ONE query; any byte damage or misroute
-    // anywhere breaks the oracle's hash
-    "q_crawl_omni" -> ((s, dir) => {
-      // plain read ON PURPOSE (A/B'd r19): the 14 format branches
-      // below each re-materialize a tp() fan-out (Catalyst pushes the
-      // branch filter under the exchange — 14 exchanges, 448 confetti
-      // tasks, 1.5 s → 2.9 s); unfanned, the 14 single-task branch
-      // stages run CONCURRENTLY inside the one union job and fill the
-      // cores by themselves (1.53 s vs 1.75 s for a p/14 fan-out).
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 14).cast("int").as("__f"),
-        (col("doc_id") % 3).cast("int").as("__m"),
-        (col("doc_id") % 7).cast("int").as("__v"),
-        (col("doc_id") % 2).cast("int").as("__gz"))
-      val keep = Seq(col("doc_id"), col("__gz"), col("content"),
-        col("__ct"))
-      // html is built in-column (entity-escaped so extraction is
-      // exactly the whitespace-normalized source text)
-      val esc = regexp_replace(regexp_replace(regexp_replace(
-        col("__t"), lit("&"), lit("&amp;")),
-        lit("<"), lit("&lt;")), lit(">"), lit("&gt;"))
-      val html = d.filter(col("__f") === 0)
-        .withColumn("content", encode(concat(
-          lit("<html><body><p>"), esc, lit("</p></body></html>")),
-          "UTF-8"))
-        .withColumn("__ct", lit("text/html")).select(keep: _*)
-      val pdf = Pdf.synthPdfs(d.filter(col("__f") === 1), "__t",
-          "__v", "__m", "content")
-        .withColumn("__ct", lit("application/pdf")).select(keep: _*)
-      val docx = Docx.synthDocx(d.filter(col("__f") === 2), "__t",
-          "__m", "content")
-        .withColumn("__ct", lit("application/msword-wrong"))
-        .select(keep: _*)
-      val rtf = Rtf.synthRtf(d.filter(col("__f") === 3), "__t",
-          "__m", "content")
-        .withColumn("__ct", lit("application/rtf")).select(keep: _*)
-      val epub = Docx.synthEpub(d.filter(col("__f") === 4),
-          "doc_id", "__t", "__m", "content")
-        .withColumn("__ct", lit("application/epub+zip"))
-        .select(keep: _*)
-      val md = Markdown.synthMd(d.filter(col("__f") === 5),
-          "doc_id", "__t", "content")
-        .withColumn("__ct", lit("text/markdown")).select(keep: _*)
-      // the archive-nested tier: document bytes wrapped one level
-      // down (zip/tar.gz/7z/cab) — the kernel must unwrap, re-sniff
-      // the member, and route again
-      def nested(f: Int, kind: Int,
-          inner: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-        val base = inner(d.filter(col("__f") === f))
-          .withColumnRenamed("content", "__inner")
-          .withColumn("__k", lit(kind).cast("int"))
-        OmniCrawl.wrapArchive(base, "__inner", "__k",
-            s"member$f.bin", "content")
-          .withColumn("__ct", lit("application/octet-stream"))
-          .select(keep: _*)
-      }
-      val zipPdf = nested(6, 0,
-        dd => Pdf.synthPdfs(dd, "__t", "__v", "__m", "content"))
-      val tgzRtf = nested(7, 1,
-        dd => Rtf.synthRtf(dd, "__t", "__m", "content"))
-      val szDocx = nested(8, 2,
-        dd => Docx.synthDocx(dd, "__t", "__m", "content"))
-      val cabPdf = nested(9, 3,
-        dd => Pdf.synthPdfs(dd, "__t", "__v", "__m", "content"))
-      val debRtf = nested(10, 4,
-        dd => Rtf.synthRtf(dd, "__t", "__m", "content"))
-      val cpioPdf = nested(11, 5,
-        dd => Pdf.synthPdfs(dd, "__t", "__v", "__m", "content"))
-      val isoRtf = nested(12, 6,
-        dd => Rtf.synthRtf(dd, "__t", "__m", "content"))
-      val lz4Pdf = nested(13, 7,
-        dd => Pdf.synthPdfs(dd, "__t", "__v", "__m", "content"))
-      val payloads = html.unionByName(pdf).unionByName(docx)
-        .unionByName(rtf).unionByName(epub).unionByName(md)
-        .unionByName(zipPdf).unionByName(tgzRtf)
-        .unionByName(szDocx).unionByName(cabPdf)
-        .unionByName(debRtf).unionByName(cpioPdf)
-        .unionByName(isoRtf).unionByName(lz4Pdf)
-        // every 5th doc's declared type LIES; routing must not care
-        .withColumn("__ct", when(col("doc_id") % 5 === 0,
-          lit("application/octet-stream")).otherwise(col("__ct")))
-      val warcs = OmniCrawl.synthHttpWarcs(payloads, "doc_id",
-        "content", "__ct", "__gz", "warc")
-      val rows = Multimodal.decodeBatches(warcs, "warc",
-          OmniCrawl.omniSchema)(OmniCrawl.decodeOmni)
-        .select(col("doc_id"),
-          when(col("is_html"), T.htmlToText(col("payload")))
-            .otherwise(col("payload")).as("text"))
-      val kept = rows.filter(T.qualityKeep(col("text")))
-      Dedup.byFingerprint(kept, "text", "doc_id")
-        .select(col("doc_id"), col("n_dups"))
-    }),
-
-    // ----- zstd container walk (RFC 8878 frame layer): per doc a
-    // skippable frame (odd docs) + a content frame in a cycling
-    // header layout (single-segment / fcs widths / dict-id widths /
-    // checksum flag) + one pure-RLE frame — every field read back
-    // by the container walk, nothing decoded
-    "q_zstd_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 4).cast("int").as("__s"),
-        (col("doc_id") % 2).cast("int").as("__k"),
-        (col("doc_id") % 60 + 8).cast("int").as("__r"))
-      val z = Zstd.synthZstd(d, "doc_id", "__t", "__s", "__k", "__r",
-        "content")
-      // the stored checksum VALUE is no longer projected: synthZstd
-      // now plants the true XXH64 (verified by the decode path and
-      // pinned by q_zstd_roundtrip/q_zstd_codec + ZstdEntropySpec),
-      // which DuckDB cannot replay arithmetically
-      Zstd.zstdFrameRows(z, "doc_id", "content")
-        .select(col("doc_id"), col("frame_idx"), col("skippable"),
-          col("content_size"), col("dict_id"), col("n_blocks"),
-          col("n_raw"), col("n_rle"), col("has_checksum"))
-    }),
-
-    // ----- zstd raw/RLE-subset decompression: the stored-block
-    // stream must hand back text ++ the planted RLE run exactly
-    // ----- FULL brotli decode (RFC 7932): each doc's text — padded
-    // with its own head + repetition so the LZ77 stage emits real
-    // copy commands — goes through the entropy ENCODER (canonical
-    // Huffman literal/command/distance codes via complex prefix-code
-    // descriptions) on even docs and the stored framing on odd, and
-    // must come back byte-identical; the same decoder is pinned
-    // against reference-encoder goldens incl. dictionary-transform
-    // streams in BrotliSpec
-    "q_brotli_roundtrip" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(" "),
-          substring(coalesce(col("text"), lit("")), 1, 64),
-          repeat(lit("pad "), (col("doc_id") % 17).cast("int")))
-          .as("__t"),
-        (col("doc_id") % 2).cast("int").as("__m"))
-      val b = Brotli.synthBrotli(d, "doc_id", "__t", "__m", "content")
-      Multimodal.decodeBatches(b, "content",
-          Brotli.brotliTextSchema)(Brotli.decodeBrotliText)
-        .select(col("doc_id"), col("brotli_text"))
-    }),
-
-    // ----- xz container round-trip: the repo's own encoder (real
-    // xz container, uncompressed LZMA2 chunks — reference-verified
-    // at generation) through the full decoder with the CRC32 check
-    // verified; the LZMA entropy layer itself is pinned by the
-    // reference-liblzma goldens in XzSpec
-    "q_xz_roundtrip" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(" xz "),
-          substring(coalesce(col("text"), lit("")), 1, 32))
-          .as("__t"))
-      val x = Xz.synthXz(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(x, "content",
-          Xz.xzTextSchema)(Xz.decodeXzText)
-        .select(col("doc_id"), col("xz_text"))
-    }),
-
-    // ----- LZ4 frame codec (the fast-tier dump/cache format):
-    // padded doc text through the repo's greedy block encoder —
-    // whose frames the reference lz4 CLI extracted byte-exactly at
-    // fixture-generation time (Lz4Spec + Lz4PinGen) — and back
-    // through the from-spec frame decoder with the header HC and
-    // XXH32 content checksum verified
-    "q_lz4_roundtrip" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(" lz4 "),
-          substring(coalesce(col("text"), lit("")), 1, 40))
-          .as("__t"))
-      val z = Lz4.synthLz4(d, "__t", "content")
-      Multimodal.decodeBatches(z, "content",
-          Lz4.lz4TextSchema)(Lz4.decodeLz4Text)
-        .select(col("doc_id"), col("lz4_text"))
-    }),
-
-    // ----- Unix compress .Z (LZW, the FTP-era dump format): padded
-    // doc text through the repo's LZW encoder — whose streams the
-    // system uncompress decoded byte-exactly across every code-
-    // width crossing at generation time (UnixZSpec + UnixZPinGen)
-    // — and back through the from-spec decoder with the segment-
-    // relative 8-code-group realignment
-    "q_z_roundtrip" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(" Z "),
-          substring(coalesce(col("text"), lit("")), 1, 36))
-          .as("__t"))
-      val z = UnixZ.synthZ(d, "__t", "content")
-      Multimodal.decodeBatches(z, "content",
-          UnixZ.zTextSchema)(UnixZ.decodeZText)
-        .select(col("doc_id"), col("z_text"))
-    }),
-
-    // ----- FULL bzip2 codec (the dump-distribution format): padded
-    // doc text through the repo's own BWT+MTF+RLE+Huffman encoder —
-    // whose output the reference bzip2 tool decoded bit-exactly at
-    // generation time (Bzip2Spec pins regeneration) — and back
-    // through the from-spec decoder with both CRC layers verified
-    "q_bzip2_roundtrip" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(" "),
-          repeat(lit("z"), (col("doc_id") % 60 + 8).cast("int")),
-          substring(coalesce(col("text"), lit("")), 1, 48))
-          .as("__t"))
-      val b = Bzip2.synthBzip2(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(b, "content",
-          Bzip2.bzip2TextSchema)(Bzip2.decodeBzip2Text)
-        .select(col("doc_id"), col("bzip2_text"))
-    }),
-
-    "q_zstd_roundtrip" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 4).cast("int").as("__s"),
-        (col("doc_id") % 2).cast("int").as("__k"),
-        (col("doc_id") % 60 + 8).cast("int").as("__r"))
-      val z = Zstd.synthZstd(d, "doc_id", "__t", "__s", "__k", "__r",
-        "content")
-      Multimodal.decodeBatches(z, "content",
-          Zstd.zstdTextSchema)(Zstd.decodeZstdText)
-        .select(col("doc_id"), col("zstd_text"))
-    }),
-
-    // ----- FULL zstd entropy decode (FSE + Huffman compressed
-    // blocks, RFC 8878): each doc's text — padded with planted
-    // repetition so the LZ77 stage emits real sequences — goes
-    // through the entropy ENCODER (canonical Huffman literals +
-    // predefined-FSE-coded sequences) and must come back
-    // byte-identical through zstd-jni, XXH64 checksum verified.
-    // Layouts cycle block size, 1-/4-stream literals,
-    // single-segment headers and the checksum flag; the same decode
-    // path is pinned against reference-CLI frames in ZstdEntropySpec.
-    "q_zstd_codec" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(" "),
-          substring(coalesce(col("text"), lit("")), 1, 64),
-          repeat(lit("pad "), (col("doc_id") % 17).cast("int")))
-          .as("__t"),
-        (col("doc_id") % 30).cast("int").as("__s"))
-      val z = Zstd.synthZstdEntropy(d, "doc_id", "__t", "__s",
-        "content")
-      Multimodal.decodeBatches(z, "content",
-          Zstd.zstdTextSchema)(Zstd.decodeZstdText)
-        .select(col("doc_id"), col("zstd_text"))
-    }),
-
-    // ----- REAL ustar walk: per-doc tar (checksum-verified 512-byte
-    // headers, two-zero-block terminator), every 2nd doc shipped as
-    // .tar.gz through the gzip composition — both layouts against
-    // one arithmetic oracle
-    "q_tar_entries" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3 + 1).cast("int").as("__n"),
-        (col("doc_id") % 2).cast("int").as("__gz"))
-      val tars = Archive.synthTars(d, "doc_id", "__t", "__n", "__gz",
-        "content")
-      val plain = Archive.tarEntryRows(
-        tars.filter(col("__gz") === 0), "doc_id", "content",
-        gzipped = false)
-      val gz = Archive.tarEntryRows(
-        tars.filter(col("__gz") === 1), "doc_id", "content",
-        gzipped = true)
-      plain.unionByName(gz)
-        .select(col("doc_id"), col("entry_name"), col("typeflag"),
-          col("u_size"))
-    }),
-
-    // ----- REAL WARC parse (ISO 28500, the web-crawl interchange
-    // format): request+response record pairs per doc — version line,
-    // header block, Content-Length-delimited payload — with the
-    // response's HTTP envelope split into status + body; every 2nd
-    // doc ships as .warc.gz (one gzip member per record, the
-    // seekability layout), so the concatenated-member splitter runs
-    // against the same oracle
-    "q_warc_records" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 2).cast("int").as("__gz"))
-      val warcs = Archive.synthWarcs(d, "doc_id", "__t", "__gz",
-        "content")
-      val plain = Archive.warcRecordRows(
-        warcs.filter(col("__gz") === 0), "doc_id", "content",
-        gzipped = false)
-      val gz = Archive.warcRecordRows(
-        warcs.filter(col("__gz") === 1), "doc_id", "content",
-        gzipped = true)
-      plain.unionByName(gz)
-        .select(col("doc_id"), col("rec_idx"), col("warc_type"),
-          col("target_uri"), col("content_length"),
-          col("http_status"), col("body_text"))
-    }),
-
-    // ----- .warc.zst + per-row compression SNIFFING: the same
-    // planted record structure with doc_id%3 cycling plain /
-    // gzip-member-per-record / zstd-ENTROPY-frame-per-record
-    // payloads through ONE reader call — the mixed-batch reality of
-    // a crawl ingest now that Common Crawl is moving to zstd; the
-    // zstd leg exercises the full Huffman/FSE decode + XXH64
-    // verification per record
-    "q_warc_zst" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__c"))
-      val warcs = Archive.synthWarcsComp(d, "doc_id", "__t", "__c",
-        "content")
-      Archive.warcRecordRowsAuto(warcs, "doc_id", "content")
-        .select(col("doc_id"), col("rec_idx"), col("warc_type"),
-          col("target_uri"), col("content_length"),
-          col("http_status"), col("body_text"))
-    }),
-
-    // ----- REAL HTTP payload decode: response bodies framed through
-    // identity/chunked/gzip/chunked+gzip/zlib-deflate/raw-deflate/
-    // zstd/BROTLI Content- and Transfer-Encodings (doc_id%8 cycles),
-    // with a multi-byte UTF-8 marker so chunk boundaries that split
-    // a code point surface; since round 14 the br row (f=5) carries
-    // a real entropy-coded brotli body that must decode exactly
-    "q_warc_http" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(" Ωμé→"))
-          .as("__b"),
-        (col("doc_id") % 8).cast("int").as("__f"),
-        lit(0).cast("int").as("__c"))
-      val warcs = Archive.synthHttpWarcs(d, "doc_id", "__b", "__f",
-        "__c", "content")
-      Archive.warcRecordRowsAuto(warcs, "doc_id", "content")
-        .filter(col("warc_type") === "response")
-        .select(col("doc_id"), col("http_status"),
-          col("content_mime"), col("charset"), col("body_text"))
-    }),
-
-    // ----- charset sniffing: windows-1251 via the Content-Type
-    // charset param, Shift_JIS via <meta charset>, EUC-KR via the
-    // http-equiv form, UTF-8 via BOM (stripped) and via explicit
-    // param — each over identity/chunked/gzip framing (doc_id%3);
-    // non-ASCII markers make a wrong-charset decode hash-diverge
-    "q_crawl_charset" -> ((s, dir) => {
-      val ascii = regexp_replace(coalesce(col("text"), lit("")),
-        "[^ -~]", "")
-      val mode = (col("doc_id") % 5).cast("int")
-      val body = when(mode === 0, concat(ascii, lit(" Ωé")))
-        .when(mode === 1, concat(ascii, lit(" Яблоко")))
-        .when(mode === 2, concat(lit("<meta charset=\"shift_jis\">"),
-          ascii, lit(" 日本語")))
-        .when(mode === 3, concat(ascii, lit(" Ωé")))
-        .otherwise(concat(lit("<meta http-equiv=\"Content-Type\" " +
-          "content=\"text/html; charset=euc-kr\">"),
-          ascii, lit(" 한국어")))
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        body.as("__b"),
-        (col("doc_id") % 3).cast("int").as("__f"),
-        mode.as("__c"))
-      val warcs = Archive.synthHttpWarcs(d, "doc_id", "__b", "__f",
-        "__c", "content")
-      Archive.warcRecordRowsAuto(warcs, "doc_id", "content")
-        .filter(col("warc_type") === "response")
-        .select(col("doc_id"), col("content_mime"), col("charset"),
-          col("body_text"))
-    }),
-
-    // ----- PDF font-encoding decode: the show-string bytes are
-    // deliberately code-shifted (Type0/ToUnicode, /Differences over
-    // uniXXXX names, single-byte ToUnicode — doc_id%3), so a
-    // raw-byte decode provably mojibakes; only the font machinery
-    // recovers the planted text byte-for-byte
-    "q_pdf_fonts" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val pdfs = Pdf.synthFontPdfs(d, "__t", "__m", "content")
-      Multimodal.decodeBatches(pdfs, "content",
-          Pdf.pdfTextSchema)(Pdf.decodePdfText)
-        .select(col("doc_id"), col("pdf_text").as("text"))
-    }),
-
-    // ----- encrypted-PDF extraction (standard security handler,
-    // EMPTY user password — the owner-password-only class any reader
-    // may open): doc_id%4 cycles RC4-40 / RC4-128 / AES-128-CBC /
-    // AES-256-R6 (ISO 32000-2 Algorithm 2.B hardened hash); correct
-    // key derivation + decrypt-then-inflate is the only way the
-    // planted text comes back
-    "q_pdf_encrypted" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 4).cast("int").as("__m"))
-      val pdfs = Pdf.synthPdfsEncrypted(d, "doc_id", "__t", "__m",
-        "content")
-      Multimodal.decodeBatches(pdfs, "content",
-          Pdf.pdfTextSchema)(Pdf.decodePdfText)
-        .select(col("doc_id"), col("pdf_text").as("text"))
-    }),
-
-    // ----- DOCX text extraction: real OOXML zips (central-dir +
-    // CRC-verified local headers) whose word/document.xml plants the
-    // doc text across paragraph runs — doc_id%3 cycles one-run/
-    // stored, split-runs/deflated, and tab+comment+instrText-decoy
-    // layouts; the w:t walk must hand the text back exactly
-    "q_docx_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val docx = Docx.synthDocx(d, "__t", "__m", "content")
-      Multimodal.decodeBatches(docx, "content",
-          Docx.docxTextSchema)(Docx.decodeDocxText)
-        .select(col("doc_id"), col("docx_text").as("text"),
-          col("n_paras"))
-    }),
-
-    // ----- XLSX shared strings: xl/sharedStrings.xml through plain,
-    // rich-run, and phonetic-decoy layouts — items = the doc text
-    // split on spaces, so the si walk replays as a string transform
-    "q_xlsx_strings" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val xlsx = Docx.synthXlsx(d, "__t", "__m", "content")
-      Multimodal.decodeBatches(xlsx, "content",
-          Docx.xlsxStringsSchema)(Docx.decodeXlsxStrings)
-        .select(col("doc_id"), col("xlsx_text"), col("n_strings"))
-    }),
-
-    // ----- XLSX worksheet cells: shared refs + inline strings +
-    // exact centi-unit numerics through sheet XML (the modern-format
-    // sibling of the BIFF8 RK path). Values are identical across the
-    // three layout modes (plain/rich-run+t="n"/two-sheet+formula-
-    // decoy), so the oracle replays them closed-form from doc_id
-    "q_xlsx_cells" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val xlsx = Docx.synthXlsxCells(d, "doc_id", "__t", "__m",
-        "content")
-      Multimodal.decodeBatches(xlsx, "content",
-          Docx.xlsxCellsSchema)(Docx.decodeXlsxCells)
-        .select(col("doc_id"), col("cell_text"), col("n_cells"),
-          col("num_centi_sum"))
-    }),
-
-    // ----- PPTX slide text: DrawingML a:t/a:p/a:br through one-run,
-    // split-run, and br-routed layouts; slide 2 carries a footer so
-    // numeric slide ordering is verified too
-    "q_pptx_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val pptx = Docx.synthPptx(d, "doc_id", "__t", "__m", "content")
-      Multimodal.decodeBatches(pptx, "content",
-          Docx.pptxTextSchema)(Docx.decodePptxText)
-        .select(col("doc_id"), col("pptx_text"), col("n_slides"))
-    }),
-
-    // ----- ODT text: OpenDocument content.xml through plain,
-    // heading+annotation-decoy, and tab/space-element layouts
-    "q_odt_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val odt = Docx.synthOdt(d, "__t", "__m", "content")
-      Multimodal.decodeBatches(odt, "content",
-          Docx.odtTextSchema)(Docx.decodeOdtText)
-        .select(col("doc_id"), col("odt_text").as("text"),
-          col("n_paras"))
-    }),
-
-    // ----- legacy Office (MS-CFB) container walk: planted streams
-    // through BOTH the miniFAT (even docs) and FAT (odd docs,
-    // NUL-padded past the 4096 cutoff) paths; WordDocument bytes
-    // must round-trip and the msword label must classify
-    "q_cfb_streams" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val cfb = Cfb.synthCfb(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(cfb, "content",
-          Cfb.cfbSchema)(Cfb.decodeCfb)
-        .select(col("doc_id"), col("cfb_label"), col("n_streams"),
-          col("stream_names"), col("word_text").as("text"))
-    }),
-
-    // ----- legacy .doc TEXT through the real Word 97 piece table:
-    // FIB → 1Table clx → PlcPcd pieces, cp1252-compressed AND
-    // UTF-16LE paths both exercised by the half-split fixture
-    "q_doc_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val docs = Cfb.synthDoc(d, "__t", "content")
-      Multimodal.decodeBatches(docs, "content",
-          Cfb.docTextSchema)(Cfb.decodeDocText)
-        .select(col("doc_id"), col("doc_text").as("text"))
-    }),
-
-    // ----- legacy .xls (BIFF8) cells through the real record walk:
-    // SST shared strings with a Continue-straddled string (fresh
-    // fHighByte per fragment — widths can switch mid-string),
-    // LABELSST text identity, and every numeric encoding (RK int,
-    // RK x100, MULRK, NUMBER) summed in exact centi-units
-    "q_xls_cells" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val xls = Xls.synthXls(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(xls, "content",
-          Xls.xlsSchema)(Xls.decodeXls)
-        .select(col("doc_id"), col("xls_text").as("text"),
-          col("sheet_names"), col("rk_centi_sum"))
-    }),
-
-    // ----- legacy .ppt through the real record-tree walk: text
-    // atoms out of the document's SlideListWithText (bytes-atom for
-    // slide 1's latin-1 text, UTF-16LE chars-atom for the fixed
-    // slide-2 closer), slide census from Slide containers, honest
-    // encryption refusal via the Current User headerToken
-    "q_ppt_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val ppt = Ppt.synthPpt(d, "__t", "content")
-      Multimodal.decodeBatches(ppt, "content",
-          Ppt.pptSchema)(Ppt.decodePpt)
-        .select(col("doc_id"), col("ppt_text").as("text"),
-          col("n_slides"), col("n_text_atoms"))
-    }),
-
-    // ----- Jupyter notebooks through the real nbformat structure:
-    // markdown + code sources (string and list-of-lines spellings,
-    // v3 worksheets/input and v4 cells), outputs excluded, language
-    // from language_info/kernelspec — layout rotating on doc_id%3
-    "q_ipynb_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val nb = Ipynb.synthIpynb(d, "doc_id", "__t", "content",
-        "x = 6 * 7\nprint(x)  # Ω")
-      Multimodal.decodeBatches(nb, "content",
-          Ipynb.ipynbSchema)(Ipynb.decodeIpynb)
-        .select(col("doc_id"), col("nb_text").as("text"),
-          col("n_cells"), col("n_code_cells"), col("language"))
-    }),
-
-    // ----- SRT subtitles through the real block parser: index /
-    // timing / text blocks, exact summed cue duration in ms
-    "q_srt_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val srt = Subtitles.synthSubs(d, "doc_id", "__t", "content",
-        vtt = false)
-      Multimodal.decodeBatches(srt, "content",
-          Subtitles.subSchema)(Subtitles.decodeSrt)
-        .select(col("doc_id"), col("sub_text").as("text"),
-          col("n_cues"), col("duration_ms"))
-    }),
-
-    // ----- WebVTT through the real parser: NOTE/STYLE exclusion,
-    // cue identifiers + settings, voice/italic tag stripping and
-    // entity unescape on the way out
-    "q_vtt_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val vtt = Subtitles.synthSubs(d, "doc_id", "__t", "content",
-        vtt = true)
-      Multimodal.decodeBatches(vtt, "content",
-          Subtitles.subSchema)(Subtitles.decodeVtt)
-        .select(col("doc_id"), col("sub_text").as("text"),
-          col("n_cues"), col("duration_ms"))
-    }),
-
-    // ----- RSS/Atom feeds over the shared XML scanner: dialect by
-    // root element (namespace-prefix-stripped), feed title only from
-    // the channel/feed's IMMEDIATE child (image/source title traps
-    // planted), item title+body in document order, CDATA bodies raw
-    "q_feed_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val feed = Feed.synthFeed(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(feed, "content",
-          Feed.feedSchema)(Feed.decodeFeed)
-        .select(col("doc_id"), col("feed_title"),
-          col("feed_text").as("text"), col("n_items"), col("kind"))
-    }),
-
-    // ----- Outlook .msg through the [MS-OXMSG] property streams:
-    // subject/body/sender via __substg1.0_PPPPTTTT with both the
-    // UTF-16LE (001F) and 8-bit (001E) forms rotating on doc_id%3,
-    // the non-latin-1 sender forcing per-field fallback in narrow
-    // modes; properties/decoy streams excluded
-    "q_msg_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val msg = Msg.synthMsg(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(msg, "content",
-          Msg.msgSchema)(Msg.decodeMsg)
-        .select(col("doc_id"), col("subject"),
-          col("msg_body").as("text"), col("sender"),
-          col("rtf_text"))
-    }),
-
-    // ----- .msg ATTACHMENTS ([MS-OXMSG] __attach storages over the
-    // CFB directory-tree walk): per message two nested documents —
-    // a text file and a gzip — listed with sniffed formats, sizes,
-    // and the gzip's INNER format after unwrapping
-    "q_msg_attach" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val msg = Msg.synthMsgAttach(d, "doc_id", "__t", "content")
-      Msg.msgAttachRows(msg, "doc_id", "content")
-        .select(col("doc_id"), col("attach_name"), col("label"),
-          col("u_size"), col("inner_label"))
-    }),
-
-    // ----- iCalendar through the real content-line parser: line
-    // unfolding (folds land inside escape sequences in mode 1),
-    // TEXT unescape, VALARM/parameter decoys, exact summed
-    // DTSTART→DTEND durations in seconds
-    "q_ics_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val ics = Vobject.synthIcs(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(ics, "content",
-          Vobject.icsSchema)(Vobject.decodeIcs)
-        .select(col("doc_id"), col("cal_text").as("text"),
-          col("n_events"), col("duration_s"))
-    }),
-
-    // ----- vCard (4.0 plain / folded / 2.1 quoted-printable)
-    "q_vcf_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val vcf = Vobject.synthVcf(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(vcf, "content",
-          Vobject.vcfSchema)(Vobject.decodeVcf)
-        .select(col("doc_id"), col("card_text").as("text"),
-          col("n_cards"))
-    }),
-
-    // ----- SQLite databases through the real b-tree walk: schema
-    // discovery on page 1, interior→leaf traversal, an overflow
-    // chain on row 3's long body, exact integer-column sums
-    "q_sqlite_rows" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val db = Sqlite.synthSqlite(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(db, "content",
-          Sqlite.sqliteSchema)(Sqlite.decodeSqlite)
-        .select(col("doc_id"), col("db_text").as("text"),
-          col("n_rows"), col("n_tables"), col("int_sum"))
-    }),
-
-    // ----- dBase .dbf tables through the real fixed-width layout:
-    // field descriptors, deleted-row exclusion, trailing-pad trims,
-    // exact integer numerics
-    "q_dbf_rows" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val dbf = Dbf.synthDbf(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(dbf, "content",
-          Dbf.dbfSchema)(Dbf.decodeDbf)
-        .select(col("doc_id"), col("dbf_text").as("text"),
-          col("n_rows"), col("n_deleted"), col("int_sum"))
-    }),
-
-    // ----- Avro object-container files from the public spec: the
-    // metadata map, zigzag varints, null + deflate codecs rotating
-    // on doc_id%2, the nullable-union idiom, per-block sync checks
-    "q_avro_rows" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val av = Avro.synthAvro(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(av, "content",
-          Avro.avroSchema)(Avro.decodeAvro)
-        .select(col("doc_id"), col("avro_text").as("text"),
-          col("n_records"), col("n_blocks"), col("long_sum"),
-          col("n_null_notes"))
-    }),
-
-    // ----- Avro COMPLEX schemas (closes the C184 refusal): nested
-    // record, array split across item blocks (the NEGATIVE
-    // count+byte-size form on odd ids), map, enum, fixed(8), a
-    // 3-branch union — with the codec cycling null/deflate/SNAPPY
-    // (from-spec decoder + the Avro big-endian CRC32 trailer)
-    "q_avro_complex" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val av = Avro.synthAvroComplex(d, "doc_id", "content")
-      Multimodal.decodeBatches(av, "content",
-          Avro.avroComplexSchema)(Avro.decodeAvroComplex)
-        .select(col("doc_id"), col("n_records"), col("meta_a_sum"),
-          col("meta_b"), col("vals_sum"), col("n_vals"),
-          col("tags_sum"), col("kind"), col("fp_sum"),
-          col("u_repr"))
-    }),
-
-    // ----- Avro NAMED-TYPE references (round 17): the `pt` record
-    // defined once and reused by two more fields plus the array
-    // items (one reference namespace-qualified), enum and fixed
-    // reuse — over the FULL six-codec matrix (null/deflate/snappy/
-    // zstandard/BZIP2/XZ, the last two through the in-repo coders
-    // both directions); the codec string is an output column so
-    // every codec's decode is oracle-proven
-    "q_avro_named" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val av = Avro.synthAvroNamed(d, "doc_id", "content")
-      Multimodal.decodeBatches(av, "content",
-          Avro.avroNamedSchema)(Avro.decodeAvroNamed)
-        .select(col("doc_id"), col("codec"), col("n_records"),
-          col("px_sum"), col("py_sum"), col("c_pair"),
-          col("h_sum"), col("pts_n"), col("pts_x_sum"),
-          col("pts_y_sum"))
-    }),
-
-    // ----- Avro LOGICAL types (round 17): the spec's annotations
-    // interpreted, not just carried — decimal(10,2) from two's-
-    // complement bytes with the scale read from the annotation,
-    // date/timestamp-micros/time-millis as ISO strings, uuid
-    // validity, the duration fixed(12) triple — plus the schema's
-    // logical-type inventory; every value closed-form
-    "q_avro_logical" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val av = Avro.synthAvroLogical(d, "doc_id", "content")
-      Multimodal.decodeBatches(av, "content",
-          Avro.avroLogicalSchema)(Avro.decodeAvroLogical)
-        .select(col("doc_id"), col("logical_csv"), col("dec_str"),
-          col("date_iso"), col("ts_iso"), col("time_str"),
-          col("uuid_str"), col("uuid_ok"), col("dur_str"))
-    }),
-
-    // ----- EXIF over JPEG APP1: orientation/timestamp as curation
-    // signals, GPS in exact centi-arc-seconds, and the PII strip
-    // proven per-row (metadata gone, entropy bytes identical)
-    "q_exif_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val img = Exif.synthExif(d, "doc_id", "content")
-      Multimodal.decodeBatches(img, "content",
-          Exif.exifSchema)(Exif.decodeExif)
-        .select(col("doc_id"), col("orientation"),
-          col("date_time"), col("lat_centisec"),
-          col("lon_centisec"), col("strip_clean"))
-    }),
-
-    // ----- Markdown → plain text (a CommonMark subset): heading/
-    // emphasis/link/list/quote unwrapping with escape handling,
-    // fences verbatim, thematic-break/ref-definition/html decoys
-    "q_md_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val md = Markdown.synthMd(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(md, "content",
-          Markdown.mdSchema)(Markdown.decodeMd)
-        .select(col("doc_id"), col("md_text").as("text"),
-          col("n_headings"), col("n_links"), col("n_code_blocks"),
-          col("fm_title"), col("n_fm_keys"))
-    }),
-
-    // ----- PNG ancillary metadata: tEXt/zTXt/iTXt captions (the
-    // iTXt rides deflate on odd densities), pHYs density, tIME —
-    // every chunk CRC-verified
-    "q_png_meta" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"))
-      val img = PngMeta.synthPngMeta(d, "doc_id", "__t", "content")
-      Multimodal.decodeBatches(img, "content",
-          PngMeta.pngMetaSchema)(PngMeta.decodePngMeta)
-        .select(col("doc_id"), col("png_text").as("text"),
-          col("n_texts"), col("ppm_x"), col("ppm_y"),
-          col("png_time"))
-    }),
-
-    // ----- two-layer dispatch: gzip/zstd wrappers unwrapped through
-    // the REAL decoders (member walk / entropy decode) and the
-    // interior re-sniffed — tar.gz and json.zst route by what they
-    // carry, not by their wrapper
-    "q_sniff_deep" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 6).cast("int").as("__m"))
-      val payloads = Sniff.synthDeep(d, "doc_id", "__t", "__m",
-        "content")
-      Multimodal.decodeBatches(payloads, "content",
-          Sniff.sniffDeepSchema)(Sniff.decodeSniffDeep)
-        .select(col("doc_id"), col("outer_format"),
-          col("inner_format"))
-    }),
-
-    // ----- GPS traces (GPX + KML) over the shared XML scanner:
-    // exact micro-degree decimal parsing (never a float
-    // round-trip), point censuses, file-level name decoys excluded
-    "q_gpx_trace" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val gpx = Gpx.synthGeo(d, "doc_id", "content", kml = false)
-      Multimodal.decodeBatches(gpx, "content",
-          Gpx.traceSchema)(Gpx.decodeGpx)
-        .select(col("doc_id"), col("trace_name"), col("n_points"),
-          col("lat_micro_sum"), col("lon_micro_sum"))
-    }),
-
-    "q_kml_trace" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val kml = Gpx.synthGeo(d, "doc_id", "content", kml = true)
-      Multimodal.decodeBatches(kml, "content",
-          Gpx.traceSchema)(Gpx.decodeKml)
-        .select(col("doc_id"), col("trace_name"), col("n_points"),
-          col("lat_micro_sum"), col("lon_micro_sum"))
-    }),
-
-    // ----- format sniffing by magic bytes (the dispatch layer —
-    // declared content-types lie at scale): 22 formats through the
-    // repo's own writers, incl. the zip-interior disambiguation of
-    // docx/xlsx/pptx/odt/epub vs plain zip, the CFB legacy-Office
-    // subtype walk, feed-dialect XML roots, and the magic-less
-    // SRT/notebook shape checks
-    "q_sniff_format" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 22).cast("int").as("__m"))
-      val payloads = Sniff.synthFormats(d, "doc_id", "__t", "__m",
-        "content")
-      Multimodal.decodeBatches(payloads, "content",
-          Sniff.sniffSchema)(Sniff.decodeSniff)
-        .select(col("doc_id"), col("format"))
-    }),
-
-    // ----- email (RFC 5322 + MIME): planted text through single-part
-    // quoted-printable, multipart/mixed base64 (+ ignored html
-    // sibling), and nested multipart/alternative (last-wins) —
-    // subject through RFC 2047 B/Q encoded-words
-    "q_eml_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val eml = Mime.synthEml(d, "doc_id", "__t", "__m", "content")
-      Multimodal.decodeBatches(eml, "content",
-          Mime.emlTextSchema)(Mime.decodeEmlText)
-        .select(col("doc_id"), col("subject"),
-          col("eml_text").as("text"), col("n_parts"))
-    }),
-
-    // ----- EPUB text: the container.xml → OPF → spine navigation
-    // chain in READING order (mode 1 stores chapters in reverse zip
-    // order + script/style decoys — spine order must win)
-    "q_epub_text" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val epub = Docx.synthEpub(d, "doc_id", "__t", "__m", "content")
-      Multimodal.decodeBatches(epub, "content",
-          Docx.epubTextSchema)(Docx.decodeEpubText)
-        .select(col("doc_id"), col("epub_text"), col("n_docs"))
-    }),
-
-    // ----- RTF text extraction: control-word parse through plain
-    // \uN escapes, \'hh cp1252 bytes + font/color/style tables, and
-    // starred/pict decoys with \uc2 double-fallback — doc_id%3
-    "q_rtf_text" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        coalesce(col("text"), lit("")).as("__t"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val rtf = Rtf.synthRtf(d, "__t", "__m", "content")
-      Multimodal.decodeBatches(rtf, "content",
-          Rtf.rtfTextSchema)(Rtf.decodeRtfText)
-        .select(col("doc_id"), col("rtf_text").as("text"),
-          col("n_paras"))
-    }),
-
-    // ----- lossy VP8 frame-header metadata (the table-free scope —
-    // see WebP.scala's honest-tables note): planted dims/quantizer/
-    // filter fields ride the real boolean-coded first partition and
-    // must replay arithmetically; pixel decode stays refused
-    "q_vp8_meta" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 100) * 16).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 64) * 16).cast("int").as("__h"),
-        (col("doc_id") % 128).cast("int").as("__q"),
-        (col("doc_id") % 64).cast("int").as("__f"),
-        (col("doc_id") % 8).cast("int").as("__s"),
-        (col("doc_id") % 4).cast("int").as("__p"))
-      val webp = WebP.synthVp8(d, "__w", "__h", "__q", "__f", "__s",
-        "__p", "content")
-      Multimodal.decodeBatches(webp, "content",
-          WebP.vp8MetaSchema)(WebP.decodeVp8Meta)
-        .select(col("doc_id"), col("vp8_width"), col("vp8_height"),
-          col("filter_level"), col("sharpness"), col("n_partitions"),
-          col("y_ac_qi"), col("segmentation"))
-    }),
-
-    // ----- FULL lossy VP8 PIXEL decode (RFC 6386): the 18 committed
-    // reference fixtures (encoded by libwebp across pattern/size/
-    // quality/filter/segmentation space) cycle by doc_id; each
-    // decodes through the complete keyframe pipeline — boolean
-    // decoder, prob updates, B_PRED/16x16 modes, tokens, IWHT+IDCT,
-    // all intra predictors, both loop filters — and the Y-plane
-    // average hash must equal the literal the REFERENCE decoder's
-    // own YUV output produced at generation time (Vp8Spec pins all
-    // three planes byte-for-byte)
-    "q_vp8_pixels" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"))
-      val webp = Vp8.synthVp8(d, "doc_id", "content")
-      Multimodal.decodeBatches(webp, "content",
-          Vp8.vp8Schema)(Vp8.decodeVp8AHash)
-        .select(col("doc_id"), col("vp8_w"), col("vp8_h"),
-          col("y_ahash"))
-    }),
-
-    // ----- REAL WebP (VP8L) decode: the same checkerboards through
-    // the lossless-WebP bitstream — doc_id%3 cycles the encoder
-    // layout (subtract-green / predictor transform / delta-coded
-    // palette with sub-byte pixel bundling), so the full huffman +
-    // transform decode chain faces one analytic oracle
-    "q_webp_phash" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("__w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("__h"),
-        (lit(50) + col("doc_id") % 100).cast("int").as("__a"),
-        (lit(90) + col("doc_id") % 100 + col("doc_id") % 50)
-          .cast("int").as("__b"),
-        (col("doc_id") % 2).cast("int").as("__p"),
-        (col("doc_id") % 3).cast("int").as("__m"))
-      val webp = Multimodal.synthCheckerWebp(d, "__w", "__h", "__a",
-        "__b", "__p", "__m", "content")
-      Multimodal.decodeBatches(webp, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- EXIF orientation APPLIED: pattern JPEGs tagged with all 8
-    // orientations (every 9th doc untagged); the hash path must
-    // rotate/flip the decoded luma before hashing, so the oracle is
-    // the planted pattern PERMUTED by the display transform — the
-    // correctness-of-intent gap the r9 verdict ranked #1
-    "q_oriented_phash" -> ((s, dir) => {
-      val d = tp(s, dir, "documents").select(col("doc_id"),
-        (lit(40) + col("doc_id") % 60).cast("int").as("__a"),
-        (lit(120) + col("doc_id") % 100).cast("int").as("__b"),
-        H.stableHash60(concat(lit("orient:"),
-            col("doc_id").cast("string")))
-          .bitwiseOR(lit(1L)).as("__patt"),
-        (col("doc_id") % 3).cast("int").as("__mode"),
-        (col("doc_id") % 4).cast("int").as("__ri"),
-        when(col("doc_id") % 9 =!= 0,
-          (col("doc_id") % 8 + 1).cast("int")).as("__or"),
-        (col("doc_id") % 2).cast("int").as("__be"))
-      val jpg = Multimodal.synthPatternJpeg(d, "__a", "__b",
-        "__patt", "__mode", "__ri", "content")
-      val tagged = Multimodal.spliceExif(jpg, "content", "__or",
-        "__be")
-      Multimodal.decodeBatches(tagged, "content",
-          Multimodal.aHashSchema)(Multimodal.decodeAHash)
-        .select(col("doc_id"), col("ahash"))
-    }),
-
-    // ----- rotated-copy near-dup: doc pairs (2g, 2g+1) are the SAME
-    // displayed photo (odd docs STORED rotated with the matching EXIF
-    // tag, plus a g%5-bit pattern perturbation); orientation
-    // normalization must land each pair within hamming 3, and the
-    // oracle brute-forces the display hashes — without the
-    // normalization every rotated pair would be invisible
-    "q_oriented_dup" -> ((s, dir) => {
-      val d0 = tp(s, dir, "documents").select(col("doc_id"),
-        expr("doc_id DIV 2").as("__g"))
-      val base = H.stableHash60(concat(lit("odup:"),
-          col("__g").cast("string"))).bitwiseOR(lit(1L))
-      val mask = expr(
-        "shiftleft(shiftleft(CAST(1 AS BIGINT), CAST(__g % 5 AS INT))" +
-          " - 1, CAST(__g % 50 + 1 AS INT))")
-      val display = when(col("doc_id") % 2 === 1,
-        base.bitwiseXOR(mask)).otherwise(base)
-      val d1 = d0.withColumn("__disp", display)
-      // odd docs: store the inverse-display-transformed pattern and
-      // tag it with the orientation that rotates it back
-      val ori = when(col("__g") % 3 === 0, 3)
-        .when(col("__g") % 3 === 1, 6).otherwise(8)
-      val stored = when(col("doc_id") % 2 === 0, col("__disp"))
-        .otherwise(
-          when(col("__g") % 3 === 0,
-            permutePatternBits(col("__disp"), 3))
-          .when(col("__g") % 3 === 1,
-            permutePatternBits(col("__disp"), 6))
-          .otherwise(permutePatternBits(col("__disp"), 8)))
-      val params = d1.select(col("doc_id"),
-        (lit(45) + col("doc_id") % 55).cast("int").as("__a"),
-        (lit(125) + col("doc_id") % 95).cast("int").as("__b"),
-        stored.as("__patt"),
-        (col("doc_id") % 3).cast("int").as("__mode"),
-        (col("doc_id") % 4).cast("int").as("__ri"),
-        when(col("doc_id") % 2 === 1, ori.cast("int")).as("__or"),
-        (col("doc_id") % 2).cast("int").as("__be"))
-      val jpg = Multimodal.synthPatternJpeg(params, "__a", "__b",
-        "__patt", "__mode", "__ri", "content")
-      val tagged = Multimodal.spliceExif(jpg, "content", "__or",
-        "__be")
-      val hashes = Multimodal.decodeBatches(tagged, "content",
-        Multimodal.aHashSchema)(Multimodal.decodeAHash)
-      Multimodal.imageDupPairs(hashes, "doc_id", "ahash",
-        maxHamming = 3)
-    }),
-
-    // ----- MP4 timing/keyframe metadata: stts run-length sums, stss
-    // sync-sample walk (absent box => every sample is a keyframe),
-    // mdhd timescale, codec fourcc — the sample-table triage that
-    // keeps the generic-codec pixel stub honest while making
-    // container metadata genuinely useful (fps, keyframe density)
-    "q_video_timing" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        (lit(1000) + (col("doc_id") % 5) * 200).cast("int").as("__ts"),
-        (lit(10) + col("doc_id") % 20).cast("int").as("__n1"),
-        (lit(1) + col("doc_id") % 3).cast("int").as("__d1"),
-        (lit(5) + col("doc_id") % 10).cast("int").as("__n2"),
-        (lit(2) + col("doc_id") % 4).cast("int").as("__d2"),
-        when(col("doc_id") % 3 === 0, 0)
-          .otherwise(lit(2) + col("doc_id") % 5).cast("int").as("__kf"),
-        (col("doc_id") % 4).cast("int").as("__ci"),
-        (col("doc_id") % 5 === 0).cast("int").as("__bare"))
-      val mp4 = Multimodal.synthTimedMp4(d, "__ts", "__n1", "__d1",
-        "__n2", "__d2", "__kf", "__ci", "__bare", "content")
-      Multimodal.decodeBatches(mp4, "content",
-          Multimodal.videoTimingSchema)(Multimodal.decodeVideoTiming)
-        .select(col("doc_id"), col("codec"), col("n_samples"),
-          col("timescale"), col("duration_ticks"), col("fps_milli"),
-          col("n_keyframes"), col("first_keyframe"), col("sync_all"))
-    }),
-
-    // ----- audio near-dup: pair-seeded WAVs (odd docs exact copy /
-    // x2 volume / last-window bump by g%3) through the REAL PCM16
-    // signature decode, banded pairing vs a brute-force oracle over
-    // the replayed signatures — the consumer the r9 verdict said the
-    // audio signature was missing
-    "q_audio_dup" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-          expr("doc_id DIV 2").as("__g"),
-          (col("doc_id") % 2).cast("int").as("__odd"))
-        .withColumn("__ch", (col("__g") % 2 + 1).cast("int"))
-        .withColumn("__fr", (lit(60) + col("__g") % 40).cast("int"))
-        .withColumn("__ns", col("__fr") * col("__ch"))
-        .withColumn("__ba", col("__ch") * 2)
-        .withColumn("__dl", col("__ns") * 2)
-        .withColumn("__pert", (col("__g") % 3).cast("int"))
-      def le16(c: Column) = {
-        val h = lpad(hex(c), 4, "0")
-        concat(substring(h, 3, 2), substring(h, 1, 2))
-      }
-      def le32(c: Column) = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
-      }
-      // nonneg samples with PER-WINDOW amplitude (gg+w)%4 — varied
-      // window levels give the 60-bit signatures real entropy, so
-      // band buckets stay tiny (flat ~level-8 profiles once made the
-      // banding quadratic: 4.8 s at sf0.1). All divisions are on
-      // nonnegative ints, so Spark's truncation == DuckDB's floor.
-      val dataHex = array_join(
-        transform(sequence(lit(0), col("__ns") - 1), i => {
-          val w = floor(i.cast("long") * 15 / col("__ns"))
-          val base = (col("__g") * 7919 + i.cast("long") * 104729) %
-            8000
-          val s0 = floor(base * (lit(1) + (col("__g") + w) % 4) / 4)
-          val sv = when(col("__odd") === 1 && col("__pert") === 1,
-              s0 * 2)
-            .when(col("__odd") === 1 && col("__pert") === 2 &&
-              w === 14, s0 + 4000)
-            .otherwise(s0)
-          val h = lpad(hex(sv), 4, "0")
-          concat(substring(h, 3, 2), substring(h, 1, 2))
-        }), "")
-      val wav = unhex(concat(
-        lit("52494646"), le32(col("__dl") + 36), lit("57415645"),
-        lit("666D7420"), lit("10000000"), lit("0100"),
-        le16(col("__ch")), le32(lit(8000)),
-        le32(lit(8000) * col("__ba")), le16(col("__ba")),
-        lit("1000"),
-        lit("64617461"), le32(col("__dl")), dataHex))
-      val media = d.select(col("doc_id"), wav.as("content"))
-      val sigs = Multimodal.decodeBatches(media, "content",
-        Multimodal.audioSignatureSchema)(
-        Multimodal.decodeAudioSignature)
-      Multimodal.audioDupPairs(sigs, "doc_id", "audio_sig",
-        maxHamming = 4)
-    })
-  )
-
-  /** Bit permutation of a 64-bit pattern column for the oriented-dup
-    * fixtures: returns the STORED pattern whose displayed image (after
-    * EXIF orientation `o`'s display transform) equals `patt` — i.e.
-    * stored[cellOf(f_o(d))] = patt[d] with f_o the display transform's
-    * source-cell map on the 8×8 hash grid. Pure shift/or expression
-    * tree (64 terms), codegen-friendly.
-    */
-  private def permutePatternBits(patt: Column, o: Int): Column =
-    (0 until 64).map { d =>
-      val dx = d % 8; val dy = d / 8
-      val (sx, sy) = o match {
-        case 1 => (dx, dy)
-        case 2 => (7 - dx, dy)
-        case 3 => (7 - dx, 7 - dy)
-        case 4 => (dx, 7 - dy)
-        case 5 => (dy, dx)
-        case 6 => (dy, 7 - dx)
-        case 7 => (7 - dy, 7 - dx)
-        case 8 => (7 - dy, dx)
-      }
-      shiftleft(shiftrightunsigned(patt, d).bitwiseAND(lit(1L)),
-        8 * sy + sx)
-    }.reduce(_ bitwiseOR _)
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
-         COUNT(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-
-    "q_revenue_by_nation" ->
-      """SELECT r_name, n_name,
-         SUM(CAST(ROUND((l_extendedprice * (1 - l_discount)) * 1000000, 0) AS BIGINT))::DOUBLE / 1000000 AS revenue,
-         COUNT(*) AS n_items
-         FROM lineitem
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation ON s_nationkey = n_nationkey
-           JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-
-    "q_events_props" ->
-      """SELECT event_type,
-         CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-         COUNT(*) AS n
-         FROM events GROUP BY event_type""",
-
-    "q_classify" ->
-      """SELECT column_name, n_total, n_null, n_distinct, is_constant
-         FROM (
-           SELECT 'l_orderkey' AS column_name, COUNT(*) AS n_total,
-             COUNT(*) - COUNT(l_orderkey) AS n_null,
-             COUNT(DISTINCT l_orderkey) AS n_distinct,
-             (COUNT(DISTINCT l_orderkey) = 1 AND COUNT(*) = COUNT(l_orderkey)) OR COUNT(l_orderkey) = 0 AS is_constant
-           FROM lineitem
-           UNION ALL SELECT 'l_partkey', COUNT(*), COUNT(*) - COUNT(l_partkey), COUNT(DISTINCT l_partkey), (COUNT(DISTINCT l_partkey) = 1 AND COUNT(*) = COUNT(l_partkey)) OR COUNT(l_partkey) = 0 FROM lineitem
-           UNION ALL SELECT 'l_suppkey', COUNT(*), COUNT(*) - COUNT(l_suppkey), COUNT(DISTINCT l_suppkey), (COUNT(DISTINCT l_suppkey) = 1 AND COUNT(*) = COUNT(l_suppkey)) OR COUNT(l_suppkey) = 0 FROM lineitem
-           UNION ALL SELECT 'l_linenumber', COUNT(*), COUNT(*) - COUNT(l_linenumber), COUNT(DISTINCT l_linenumber), (COUNT(DISTINCT l_linenumber) = 1 AND COUNT(*) = COUNT(l_linenumber)) OR COUNT(l_linenumber) = 0 FROM lineitem
-           UNION ALL SELECT 'l_quantity', COUNT(*), COUNT(*) - COUNT(l_quantity), COUNT(DISTINCT l_quantity), (COUNT(DISTINCT l_quantity) = 1 AND COUNT(*) = COUNT(l_quantity)) OR COUNT(l_quantity) = 0 FROM lineitem
-           UNION ALL SELECT 'l_extendedprice', COUNT(*), COUNT(*) - COUNT(l_extendedprice), COUNT(DISTINCT l_extendedprice), (COUNT(DISTINCT l_extendedprice) = 1 AND COUNT(*) = COUNT(l_extendedprice)) OR COUNT(l_extendedprice) = 0 FROM lineitem
-           UNION ALL SELECT 'l_discount', COUNT(*), COUNT(*) - COUNT(l_discount), COUNT(DISTINCT l_discount), (COUNT(DISTINCT l_discount) = 1 AND COUNT(*) = COUNT(l_discount)) OR COUNT(l_discount) = 0 FROM lineitem
-           UNION ALL SELECT 'l_tax', COUNT(*), COUNT(*) - COUNT(l_tax), COUNT(DISTINCT l_tax), (COUNT(DISTINCT l_tax) = 1 AND COUNT(*) = COUNT(l_tax)) OR COUNT(l_tax) = 0 FROM lineitem
-           UNION ALL SELECT 'l_returnflag', COUNT(*), COUNT(*) - COUNT(l_returnflag), COUNT(DISTINCT l_returnflag), (COUNT(DISTINCT l_returnflag) = 1 AND COUNT(*) = COUNT(l_returnflag)) OR COUNT(l_returnflag) = 0 FROM lineitem
-           UNION ALL SELECT 'l_linestatus', COUNT(*), COUNT(*) - COUNT(l_linestatus), COUNT(DISTINCT l_linestatus), (COUNT(DISTINCT l_linestatus) = 1 AND COUNT(*) = COUNT(l_linestatus)) OR COUNT(l_linestatus) = 0 FROM lineitem
-           UNION ALL SELECT 'l_shipdate', COUNT(*), COUNT(*) - COUNT(l_shipdate), COUNT(DISTINCT l_shipdate), (COUNT(DISTINCT l_shipdate) = 1 AND COUNT(*) = COUNT(l_shipdate)) OR COUNT(l_shipdate) = 0 FROM lineitem
-         ) s""",
-
-    "q_fillna" ->
-      """SELECT l_orderkey, l_linenumber,
-         COALESCE(CASE WHEN l_orderkey % 7 = 0 THEN NULL
-                       ELSE l_returnflag END, 'X') AS flag
-         FROM lineitem""",
-
-    "q_replace_strings" ->
-      """SELECT l_orderkey, l_linenumber,
-         CASE WHEN l_returnflag = 'R' THEN 'RETURNED'
-              WHEN l_returnflag = 'A' THEN 'ACCEPTED'
-              ELSE l_returnflag END AS flag
-         FROM lineitem""",
-
-    "q_replace_substrings" ->
-      """SELECT p_partkey,
-         replace(replace(p_type, 'BRUSHED', 'B'), 'B', 'X') AS ptype
-         FROM part""",
-
-    "q_ordinal_encode" ->
-      """SELECT o_orderkey, o_orderpriority,
-         DENSE_RANK() OVER (ORDER BY o_orderpriority) - 1 AS prio_code
-         FROM orders""",
-
-    "q_onehot_encode" ->
-      """SELECT l_orderkey, l_linenumber, flag,
-         CASE WHEN flag IS NULL THEN NULL ELSE flag = 'A' END AS "flag_A_enc",
-         CASE WHEN flag IS NULL THEN NULL ELSE flag = 'N' END AS "flag_N_enc",
-         CASE WHEN flag IS NULL THEN NULL ELSE flag = 'R' END AS "flag_R_enc"
-         FROM (SELECT l_orderkey, l_linenumber,
-           CASE WHEN l_orderkey % 7 = 0 THEN NULL ELSE l_returnflag END AS flag
-           FROM lineitem) s""",
-
-    "q_rowfix" ->
-      """SELECT l_orderkey, l_linenumber,
-         CASE WHEN l_orderkey % 11 = 0 THEN l_quantity
-              WHEN l_orderkey % 13 = 0 THEN l_quantity * 1.02
-              WHEN l_orderkey % 17 = 0 THEN NULL
-              WHEN l_orderkey % 19 = 0 THEN NULL
-              WHEN l_orderkey % 23 = 0 THEN NULL
-              ELSE l_quantity END AS qty_fixed
-         FROM lineitem""",
-
-    "q_rowfix_audit" ->
-      """WITH src AS (SELECT
-           CASE WHEN l_orderkey % 11 = 0 THEN replace(CAST(l_quantity AS VARCHAR), '.', ',')
-                WHEN l_orderkey % 17 = 0 THEN '---'
-                WHEN l_orderkey % 23 = 0 THEN 'junk!'
-                ELSE CAST(l_quantity AS VARCHAR) END AS c
-           FROM lineitem)
-         SELECT 'qty_raw' AS "column",
-           COUNT(CASE WHEN c IS NOT NULL
-             AND TRY_CAST(c AS DOUBLE) IS NULL THEN 1 END) AS errors_before,
-           COUNT(CASE WHEN c IS NOT NULL
-             AND TRY_CAST(c AS DOUBLE) IS NULL
-             AND TRY_CAST(translate(c, ',°', '.') AS DOUBLE) IS NULL
-             AND strpos(translate(c, ',°', '.'), '%') = 0
-             AND strpos(translate(c, ',°', '.'), '>') = 0
-             AND strpos(translate(c, ',°', '.'), '<') = 0
-             AND trim(translate(c, ',°', '.')) NOT IN
-               ('---', '.', 'ASSENTI', 'PRESENTI', 'non disponibile',
-                'NV', '-', 'Error', 'None', 'NAN')
-             THEN 1 END) AS errors_after
-         FROM src""",
-
-    "q_lost_values" ->
-      """WITH src AS (SELECT
-           CASE WHEN l_orderkey % 11 = 0 THEN replace(CAST(l_quantity AS VARCHAR), '.', ',')
-                WHEN l_orderkey % 17 = 0 THEN '---'
-                ELSE CAST(l_quantity AS VARCHAR) END AS c
-           FROM lineitem)
-         SELECT c AS value, COUNT(*) AS n FROM src
-         WHERE c IS NOT NULL AND TRY_CAST(c AS DOUBLE) IS NULL
-         GROUP BY c""",
-
-    "q_dedup_fingerprint" ->
-      """SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_dups
-         FROM documents
-         GROUP BY md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))""",
-
-    "q_dedup_increment" ->
-      """WITH np AS (SELECT doc_id, source, n_chars,
-           md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-         FROM documents WHERE doc_id % 5 = 0),
-       known AS (SELECT DISTINCT
-           md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-         FROM documents WHERE doc_id % 5 <> 0)
-       SELECT doc_id, source, n_chars
-       FROM np ANTI JOIN known USING (fp)
-       QUALIFY row_number() OVER (PARTITION BY fp ORDER BY doc_id) = 1""",
-
-    // full recompute over corpus∪batch, restricted to batch-touching
-    // pairs — exactly what the incremental index must reproduce
-    "q_neardup_increment" ->
-      s"""SELECT id_a, id_b, est_jaccard FROM ($minhashOracle)
-         WHERE id_a % 5 = 0 OR id_b % 5 = 0""",
-
-    "q_substring_rep" -> substringRepOracle,
-    "q_substring_scrub" -> substringScrubOracle,
-
-    "q_multi_combine" ->
-      """WITH src AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-           l_linestatus,
-           CAST(CAST(FLOOR(l_quantity / 10) AS BIGINT) AS VARCHAR) AS qband
-         FROM lineitem)
-         SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus, qband,
-           (DENSE_RANK() OVER (ORDER BY l_returnflag) - 1)
-             * (SELECT COUNT(DISTINCT l_linestatus) FROM src)
-             + DENSE_RANK() OVER (ORDER BY l_linestatus) - 1
-             AS "l_returnflag-l_linestatus_enc",
-           (DENSE_RANK() OVER (ORDER BY l_returnflag) - 1)
-             * ((SELECT COUNT(DISTINCT l_linestatus) FROM src)
-                * (SELECT COUNT(DISTINCT qband) FROM src))
-             + (DENSE_RANK() OVER (ORDER BY l_linestatus) - 1)
-               * (SELECT COUNT(DISTINCT qband) FROM src)
-             + DENSE_RANK() OVER (ORDER BY qband) - 1
-             AS "l_returnflag-l_linestatus-qband_enc"
-         FROM src""",
-
-    "q_anonymize" ->
-      s"""SELECT c_custkey, c_mktsegment,
-         sha256('$noncePre' || c_name || '$nonceSuf') AS "ID_OWNER"
-         FROM customer""",
-
-    // Dictionary = sorted distinct of the title-cased values plus the
-    // 'Nan' placeholder (single-word values: initcap ==
-    // upper(first)||lower(rest)); originally-null rows restore to null.
-    // mirrors FeatureFix.encodeMultiCategorical: per-column initcap
-    // normalization (single-word values, so DuckDB's first-letter
-    // formula equals Spark initcap), independent sorted dictionaries
-    "q_encode_multi" ->
-      """WITH norm AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-           l_linestatus,
-           concat(upper(substring(l_returnflag, 1, 1)),
-                  lower(substring(l_returnflag, 2))) AS tr,
-           concat(upper(substring(l_linestatus, 1, 1)),
-                  lower(substring(l_linestatus, 2))) AS tl
-         FROM lineitem),
-       dr AS (SELECT tr, ROW_NUMBER() OVER (ORDER BY tr) - 1 AS cr
-         FROM (SELECT DISTINCT tr FROM norm) u),
-       dl AS (SELECT tl, ROW_NUMBER() OVER (ORDER BY tl) - 1 AS cl
-         FROM (SELECT DISTINCT tl FROM norm) u)
-       SELECT n.l_orderkey, n.l_linenumber, n.l_returnflag,
-         n.l_linestatus, dr.cr AS l_returnflag_enc,
-         dl.cl AS l_linestatus_enc
-       FROM norm n JOIN dr ON n.tr = dr.tr JOIN dl ON n.tl = dl.tl""",
-
-    "q_encode_categorical" ->
-      """WITH src AS (
-           SELECT c_custkey,
-             CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS seg
-           FROM customer),
-         norm AS (
-           SELECT c_custkey, seg,
-             CASE WHEN seg IS NULL THEN 'Nan'
-                  ELSE concat(upper(substring(seg, 1, 1)),
-                              lower(substring(seg, 2))) END AS t
-           FROM src),
-         dict AS (
-           SELECT t, ROW_NUMBER() OVER (ORDER BY t) - 1 AS code
-           FROM (SELECT DISTINCT t FROM norm) u)
-         SELECT c_custkey, seg,
-           CASE WHEN seg IS NULL THEN NULL ELSE code END AS seg_enc
-         FROM norm JOIN dict USING (t)""",
-
-    "q_binning" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice,
-         CASE WHEN l_extendedprice IS NULL THEN NULL
-              WHEN l_extendedprice <= 1000 THEN 0
-              WHEN l_extendedprice <= 10000 THEN 1
-              WHEN l_extendedprice <= 50000 THEN 2
-              ELSE 3 END AS l_extendedprice_bin_id
-         FROM lineitem""",
-
-    "q_combine_categorical" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus,
-         (DENSE_RANK() OVER (ORDER BY l_returnflag) - 1)
-           * (SELECT COUNT(DISTINCT l_linestatus) FROM lineitem)
-           + DENSE_RANK() OVER (ORDER BY l_linestatus) - 1
-           AS "l_returnflag-l_linestatus_enc"
-         FROM lineitem""",
-
-    // Models the operator exactly: per-group [min,max] with the
-    // minGroupSize=20 fallback to the GLOBAL range, w=0 groups -> bin 0,
-    // null value or null group -> null bin id.
-    "q_grouped_binning" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_extendedprice,
-         CASE WHEN l_extendedprice IS NULL OR l_returnflag IS NULL THEN NULL
-              WHEN w = 0 THEN 0
-              ELSE CAST(LEAST(GREATEST(FLOOR((l_extendedprice - lo) / w), 0), 4) AS INT)
-         END AS l_extendedprice_bin_id
-         FROM (
-           SELECT *, CASE WHEN cnt < 20 THEN gmn ELSE mn END AS lo,
-             (CASE WHEN cnt < 20 THEN gmx ELSE mx END
-              - CASE WHEN cnt < 20 THEN gmn ELSE mn END) / 5 AS w
-           FROM (
-             SELECT *,
-               MIN(l_extendedprice) OVER (PARTITION BY l_returnflag) AS mn,
-               MAX(l_extendedprice) OVER (PARTITION BY l_returnflag) AS mx,
-               COUNT(l_extendedprice) OVER (PARTITION BY l_returnflag) AS cnt,
-               MIN(l_extendedprice) OVER () AS gmn,
-               MAX(l_extendedprice) OVER () AS gmx
-             FROM lineitem) s1) s2""",
-
-    // Geometric (ratio-2) per-group bins: w0 = range/31 (2^5−1), bin =
-    // Σ (v > t_i) with thresholds built by the SAME left-associated
-    // accumulation as the driver (t_{i+1} = t_i + 2^i·w0) so the
-    // doubles match bit-for-bit.
-    "q_grouped_binning_geo" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_extendedprice,
-         CASE WHEN l_extendedprice IS NULL OR l_returnflag IS NULL THEN NULL
-              ELSE (CASE WHEN l_extendedprice > lo + w THEN 1 ELSE 0 END
-                  + CASE WHEN l_extendedprice > lo + w + 2*w THEN 1 ELSE 0 END
-                  + CASE WHEN l_extendedprice > lo + w + 2*w + 4*w THEN 1 ELSE 0 END
-                  + CASE WHEN l_extendedprice > lo + w + 2*w + 4*w + 8*w THEN 1 ELSE 0 END)
-         END AS l_extendedprice_bin_id
-         FROM (
-           SELECT *, CASE WHEN cnt < 20 THEN gmn ELSE mn END AS lo,
-             (CASE WHEN cnt < 20 THEN gmx ELSE mx END
-              - CASE WHEN cnt < 20 THEN gmn ELSE mn END) * 1.0 / 31 AS w
-           FROM (
-             SELECT *,
-               MIN(l_extendedprice) OVER (PARTITION BY l_returnflag) AS mn,
-               MAX(l_extendedprice) OVER (PARTITION BY l_returnflag) AS mx,
-               COUNT(l_extendedprice) OVER (PARTITION BY l_returnflag) AS cnt,
-               MIN(l_extendedprice) OVER () AS gmn,
-               MAX(l_extendedprice) OVER () AS gmx
-             FROM lineitem) s1) s2""",
-
-    "q_overlap_binning" -> {
-      val values = OverlapRanges.map { case (id, lo, hi) =>
-        s"($id, ${lo}, ${hi})"
-      }.mkString(", ")
-      s"""SELECT l_orderkey, l_linenumber, l_extendedprice,
-         r.bin_id AS l_extendedprice_bin_id
-         FROM lineitem l JOIN (VALUES $values) r(bin_id, lo, hi)
-         ON l.l_extendedprice >= r.lo AND l.l_extendedprice <= r.hi"""
-    },
-
-    "q_bool_to_binary" ->
-      """SELECT l_orderkey, l_linenumber,
-         CAST(l_quantity > 25.0 AS INT) AS high_qty
-         FROM lineitem""",
-
-    "q_events_window" ->
-      """SELECT date_trunc('hour', ts) AS win_start, event_type,
-         COUNT(*) AS n_events
-         FROM events GROUP BY 1, 2""",
-
-    // rate-spike replay: the lower median is the rank-⌈n/2⌉ count in
-    // sorted order — value is tie-order-independent; integer flag
-    "q_rate_spikes" ->
-      """WITH b AS (SELECT user_id,
-           date_trunc('day', ts) AS bucket_start,
-           COUNT(*)::BIGINT AS n_events
-         FROM events GROUP BY 1, 2),
-       m AS (SELECT user_id, n_events,
-           ROW_NUMBER() OVER (PARTITION BY user_id
-             ORDER BY n_events, bucket_start) AS rn,
-           COUNT(*) OVER (PARTITION BY user_id) AS cnt
-         FROM b),
-       med AS (SELECT user_id, n_events AS median_n FROM m
-         WHERE rn = (cnt + 1) // 2)
-       SELECT b.user_id, b.bucket_start, b.n_events, med.median_n,
-         b.n_events * 10 > 20 * med.median_n AS spike
-       FROM b JOIN med ON b.user_id = med.user_id""",
-
-    // the chunking is internal candidate generation only — the oracle
-    // is the raw range predicate
-    "q_range_join" ->
-      """WITH pts AS (SELECT l_orderkey, l_linenumber,
-           l_extendedprice / l_quantity AS unit_price FROM lineitem),
-       iv AS (SELECT p_partkey, p_retailprice - 1.0 AS lo,
-           p_retailprice + 1.0 AS hi FROM part)
-       SELECT l_orderkey, l_linenumber, p_partkey, unit_price
-       FROM pts JOIN iv ON unit_price >= lo AND unit_price <= hi""",
-
-    // chunking + start-chunk dedup are internal; the oracle is the
-    // raw closed-interval overlap predicate
-    "q_interval_overlap" ->
-      """WITH a AS (SELECT p_partkey AS a_key,
-           p_retailprice - 1.0 AS a_lo, p_retailprice + 1.0 AS a_hi
-         FROM part WHERE p_partkey % 2 = 0),
-       b AS (SELECT p_partkey AS b_key,
-           p_retailprice - 0.5 AS b_lo, p_retailprice + 0.5 AS b_hi
-         FROM part WHERE p_partkey % 2 = 1)
-       SELECT a_key, b_key FROM a JOIN b
-         ON a_lo <= b_hi AND b_lo <= a_hi""",
-
-    // DuckDB's native ASOF JOIN is the oracle for the union+window form
-    "q_asof_join" ->
-      """WITH c AS (SELECT event_id, user_id,
-           epoch_ns(ts) // 1000 AS tsu FROM events
-         WHERE event_type = 'click'),
-       p AS (SELECT user_id, epoch_ns(ts) // 1000 AS ptsu, value
-         FROM events WHERE event_type = 'purchase')
-       SELECT c.event_id, c.user_id, c.tsu,
-         p.ptsu AS purchase_tsu, p.value AS purchase_value
-       FROM c ASOF LEFT JOIN p
-         ON c.user_id = p.user_id AND c.tsu >= p.ptsu""",
-
-    // same rank/interpolation CTE as q_quantiles, partitioned by group
-    "q_grouped_quantiles" -> groupedQuantilesSqlFor("lineitem",
-      "l_returnflag", "l_quantity", Seq(0.25, 0.5, 0.9),
-      "lov.g AS flag, p, " +
-      "v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE) AS quantile, n"),
-
-    "q_grouped_describe" -> groupedDescribeOracle,
-
-    // last_value IGNORE NULLS over the same (ts, event_id) frame
-    "q_forward_fill" ->
-      """WITH e AS (SELECT event_id, user_id,
-           epoch_ns(ts) // 1000 AS tsu,
-           CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-         FROM events)
-       SELECT event_id, user_id, tsu,
-         last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
-           ORDER BY tsu, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-       FROM e""",
-
-    // bucket arg-max via QUALIFY (ties ts desc, id desc), grid via
-    // generate_series over per-user bounds, IGNORE NULLS carry
-    "q_resample" ->
-      """WITH e AS (SELECT event_id, user_id,
-           epoch_ns(ts) // 1000 AS tsu,
-           CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-         FROM events
-         WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-       b AS (SELECT user_id, tsu // 86400000000 AS tick, v AS bv
-         FROM e QUALIFY row_number() OVER (
-           PARTITION BY user_id, tsu // 86400000000
-           ORDER BY tsu DESC, event_id DESC) = 1),
-       bounds AS (SELECT user_id, MIN(tsu // 86400000000) AS lo,
-           MAX(tsu // 86400000000) AS hi
-         FROM e GROUP BY user_id),
-       g AS (SELECT user_id, unnest(generate_series(lo, hi)) AS tick
-         FROM bounds)
-       SELECT g.user_id, g.tick,
-         last_value(b.bv IGNORE NULLS) OVER (PARTITION BY g.user_id
-           ORDER BY g.tick
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-       FROM g LEFT JOIN b
-         ON g.user_id = b.user_id AND g.tick = b.tick""",
-
-    // distinct user-weeks, first-seen week per user, integer week offset
-    "q_retention" ->
-      """WITH a AS (SELECT DISTINCT user_id AS u,
-           date_trunc('week', ts) AS p FROM events
-         WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-       f AS (SELECT u, MIN(p) AS cohort FROM a GROUP BY u)
-       SELECT cohort,
-         CAST(date_diff('day', cohort, p) / 7 AS BIGINT) AS "offset",
-         COUNT(DISTINCT u) AS n_users
-       FROM a JOIN f USING (u) GROUP BY 1, 2""",
-
-    // greedy minimal-completion funnel over per-user sorted time lists;
-    // epoch micros (= the engine's ts DIV 1000) keep comparisons exact
-    "q_funnel" ->
-      """WITH e AS (SELECT user_id AS u, event_type,
-           epoch_ns(ts) // 1000 AS tsu FROM events
-         WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-       pu AS (SELECT u,
-         list_sort(list(tsu) FILTER (WHERE event_type = 'view')) AS a0,
-         list_sort(list(tsu) FILTER (WHERE event_type = 'click')) AS a1,
-         list_sort(list(tsu) FILTER (WHERE event_type = 'purchase'))
-           AS a2
-         FROM e GROUP BY u),
-       t0s AS (SELECT u, a1, a2, list_min(a0) AS t0 FROM pu),
-       t1s AS (SELECT u, a2, t0,
-         list_min(list_filter(a1, x -> x > t0)) AS t1 FROM t0s),
-       t2s AS (SELECT u, t0, t1,
-         list_min(list_filter(a2, x -> x > t1)) AS t2 FROM t1s),
-       c AS (SELECT COUNT(t0) AS n0, COUNT(t1) AS n1, COUNT(t2) AS n2
-         FROM t2s)
-       SELECT 0 AS step_idx, 'view' AS step, n0 AS n_users FROM c
-       UNION ALL
-       SELECT 1, 'click', n1 FROM c
-       UNION ALL
-       SELECT 2, 'purchase', n2 FROM c""",
-
-    // windowed replay: the same greedy ladder with the 1-day (in
-    // micros) deadline folded into each step's filter
-    "q_funnel_windowed" ->
-      """WITH e AS (SELECT user_id AS u, event_type,
-           epoch_ns(ts) // 1000 AS tsu FROM events
-         WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-       pu AS (SELECT u,
-         list_sort(list(tsu) FILTER (WHERE event_type = 'view')) AS a0,
-         list_sort(list(tsu) FILTER (WHERE event_type = 'click')) AS a1,
-         list_sort(list(tsu) FILTER (WHERE event_type = 'purchase'))
-           AS a2
-         FROM e GROUP BY u),
-       t0s AS (SELECT u, a1, a2, list_min(a0) AS t0 FROM pu),
-       t1s AS (SELECT u, a2, t0,
-         list_min(list_filter(a1, x -> x > t0
-           AND x <= t0 + 86400000000)) AS t1 FROM t0s),
-       t2s AS (SELECT u, t0, t1,
-         list_min(list_filter(a2, x -> x > t1
-           AND x <= t1 + 86400000000)) AS t2 FROM t1s),
-       c AS (SELECT COUNT(t0) AS n0, COUNT(t1) AS n1, COUNT(t2) AS n2
-         FROM t2s)
-       SELECT 0 AS step_idx, 'view' AS step, n0 AS n_users FROM c
-       UNION ALL
-       SELECT 1, 'click', n1 FROM c
-       UNION ALL
-       SELECT 2, 'purchase', n2 FROM c""",
-
-    "q_dedup_exact" ->
-      """SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_dups
-         FROM documents GROUP BY text""",
-
-    "q_token_count" ->
-      """SELECT doc_id,
-         length(regexp_split_to_array(trim(text), '\s+')) AS n_tokens
-         FROM documents""",
-
-    // plants injected from the SAME MojiPlants constants; RE2 reads
-    // the \x{...} pattern identically to Java regex
-    "q_mojibake" -> {
-      val p = graft.functions.TextFunctions.MojibakePattern
-      s"""SELECT doc_id,
-         round((length(t2) - length(regexp_replace(t2, '$p', '', 'g')))
-             ::DOUBLE / greatest(length(t2), 1), 9) AS moji_frac
-         FROM (SELECT doc_id, text ||
-             CASE WHEN doc_id % 6 = 1 THEN '${MojiPlants(0)}'
-                  WHEN doc_id % 6 = 2 THEN '${MojiPlants(1)}'
-                  WHEN doc_id % 6 = 3 THEN '${MojiPlants(2)}'
-                  WHEN doc_id % 6 = 4 THEN '${MojiPlants(3)}'
-                  WHEN doc_id % 6 = 5 THEN '${MojiPlants(4)}'
-                  ELSE '' END AS t2
-           FROM documents) z"""
-    },
-
-    // fixed == text + the CLEAN probe (semantic assertion); both
-    // fractions replay the shared strip-and-measure regex on the
-    // damaged / repaired strings
-    "q_fix_encoding" -> {
-      val p = graft.functions.TextFunctions.MojibakePattern
-      def frac(x: String) =
-        s"""round((length($x) - length(regexp_replace($x, '$p', '',
-           'g')))::DOUBLE / greatest(length($x), 1), 9)"""
-      s"""SELECT doc_id, t3 AS fixed,
-         ${frac("t2")} AS frac_before,
-         ${frac("t3")} AS frac_after
-         FROM (SELECT doc_id, text || '$FixProbeDamaged' AS t2,
-             text || '$FixProbeFixed' AS t3
-           FROM documents) z"""
-    },
-
-    // the exact-integer PageRank recurrence unrolled: one CTE per
-    // iteration, '//' (floor) == Spark's DIV on the all-positive ranks
-    "q_domain_pagerank" -> {
-      val iters = (1 to 5).map { k =>
-        s"""r$k AS (SELECT n.node,
-             150000 + (85 * COALESCE(c.s, 0)) // 100 AS r
-           FROM n LEFT JOIN (
-             SELECT e.dst AS node, SUM(p.r // od.od) AS s
-             FROM e JOIN od ON e.src = od.src
-                    JOIN r${k - 1} p ON p.node = e.src
-             GROUP BY e.dst) c ON n.node = c.node)"""
-      }.mkString(",\n         ")
-      s"""WITH e AS (
-           SELECT src, dst FROM (
-             SELECT 'd' || CAST(doc_id % 31 AS VARCHAR) AS src,
-                    'd' || CAST((doc_id * 13 + 5) % 37 AS VARCHAR)
-                      AS dst FROM documents
-             UNION
-             SELECT 'd' || CAST(doc_id % 31 AS VARCHAR),
-                    'd' || CAST((doc_id * 29 + 11) % 37 AS VARCHAR)
-             FROM documents) u
-           WHERE src <> dst),
-         n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         od AS (SELECT src, COUNT(*) AS od FROM e GROUP BY src),
-         r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM n),
-         $iters
-         SELECT node, CAST(r AS BIGINT) AS rank_micro FROM r5"""
-    },
-
-    // TrustRank replay: the pagerank CTE ladder with the seed-gated
-    // base term — r0 and every iteration's teleport mass CASE on the
-    // seed set
-    "q_trust_rank" -> {
-      val seedIn = "IN ('d0', 'd5')"
-      val iters = (1 to 5).map { k =>
-        s"""r$k AS (SELECT n.node,
-             CASE WHEN n.node $seedIn THEN 150000 ELSE 0 END
-               + (85 * COALESCE(c.s, 0)) // 100 AS r
-           FROM n LEFT JOIN (
-             SELECT e.dst AS node, SUM(p.r // od.od) AS s
-             FROM e JOIN od ON e.src = od.src
-                    JOIN r${k - 1} p ON p.node = e.src
-             GROUP BY e.dst) c ON n.node = c.node)"""
-      }.mkString(",\n         ")
-      s"""WITH e AS (
-           SELECT src, dst FROM (
-             SELECT 'd' || CAST(doc_id % 31 AS VARCHAR) AS src,
-                    'd' || CAST((doc_id * 13 + 5) % 37 AS VARCHAR)
-                      AS dst FROM documents
-             UNION
-             SELECT 'd' || CAST(doc_id % 31 AS VARCHAR),
-                    'd' || CAST((doc_id * 29 + 11) % 37 AS VARCHAR)
-             FROM documents) u
-           WHERE src <> dst),
-         n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         od AS (SELECT src, COUNT(*) AS od FROM e GROUP BY src),
-         r0 AS (SELECT node,
-           CAST(CASE WHEN node $seedIn THEN 1000000 ELSE 0 END
-             AS BIGINT) AS r FROM n),
-         $iters
-         SELECT node, CAST(r AS BIGINT) AS rank_micro FROM r5"""
-    },
-
-    // weak-component replay: same doc_id-arithmetic edges, recursive
-    // reachability over the symmetric closure, label = MIN reachable
-    // node (binary string ordering on both engines)
-    "q_domain_components" ->
-      """WITH RECURSIVE e0 AS (
-           SELECT 'n' || CAST((doc_id % 10) * 4 +
-               doc_id % 4 AS VARCHAR) AS src,
-             'n' || CAST((doc_id % 10) * 4 +
-               (doc_id // 4) % 4 AS VARCHAR) AS dst
-           FROM documents),
-         e1 AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-         e AS (SELECT src, dst FROM e1
-               UNION SELECT dst, src FROM e1),
-         n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         reach(node, lab) AS (
-           SELECT node, node FROM n
-           UNION
-           SELECT e.dst, r.lab FROM reach r JOIN e ON e.src = r.node)
-         SELECT node, MIN(lab) AS component
-         FROM reach GROUP BY node""",
-
-    // same \s+ token discipline as the hashing oracles; adjacency via
-    // 1-based list indexing; the lift ratio is the identical fixed
-    // shape of exact-int→double conversions and IEEE ops
-    "q_collocations" ->
-      """WITH toksarr AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+')
-             AS a
-           FROM documents),
-         uni AS (
-           SELECT tok, COUNT(*) AS c
-           FROM (SELECT unnest(a) AS tok FROM toksarr) z GROUP BY tok),
-         bg AS (
-           SELECT a[i] AS w1, a[i + 1] AS w2, COUNT(*) AS pair_count
-           FROM toksarr,
-             LATERAL unnest(generate_series(1, len(a) - 1)) AS t(i)
-           GROUP BY 1, 2),
-         sc AS (
-           SELECT bg.w1, bg.w2, bg.pair_count, u1.c AS c1, u2.c AS c2,
-             CAST(bg.pair_count AS DOUBLE) * 1e12 /
-               (CAST(u1.c AS DOUBLE) * CAST(u2.c AS DOUBLE))
-               AS lift_score
-           FROM bg JOIN uni u1 ON bg.w1 = u1.tok
-                   JOIN uni u2 ON bg.w2 = u2.tok
-           WHERE bg.pair_count >= 5)
-         SELECT w1, w2, CAST(pair_count AS BIGINT) AS pair_count,
-           CAST(c1 AS BIGINT) AS c1, CAST(c2 AS BIGINT) AS c2,
-           lift_score
-         FROM sc ORDER BY lift_score DESC, w1, w2 LIMIT 100""",
-
-    // single-pass full histogram + ceil-rank pick — the Spark side
-    // built it as two merged half-sketches, so equality proves the
-    // merge path; '//' == DIV on the all-positive cent grid
-    "q_hist_quantile" ->
-      """WITH q AS (
-           SELECT l_returnflag,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT) // 100000
-               AS bucket
-           FROM lineitem),
-         h AS (SELECT l_returnflag, bucket, COUNT(*) AS cnt
-               FROM q GROUP BY 1, 2),
-         c AS (SELECT l_returnflag, bucket,
-                 SUM(cnt) OVER (PARTITION BY l_returnflag
-                   ORDER BY bucket) AS cum,
-                 SUM(cnt) OVER (PARTITION BY l_returnflag) AS n
-               FROM h),
-         x AS (SELECT l_returnflag, p.p_micro, bucket
-               FROM c CROSS JOIN (VALUES (500000), (900000),
-                 (990000)) p(p_micro)
-               WHERE cum >= (p.p_micro * n + 999999) // 1000000)
-         SELECT l_returnflag, CAST(p_micro AS BIGINT) AS p_micro,
-           CAST(min(bucket) * 100000 AS BIGINT) AS est_micro
-         FROM x GROUP BY 1, 2""",
-
-    // same trim + \s+ token discipline as the simhash oracle; bucket
-    // and sign replay the hash60 arithmetic exactly
-    "q_hash_vectorize" -> {
-      val h = sqlHash60("tok")
-      s"""WITH toks AS (SELECT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-           FROM documents),
-         hb AS (SELECT doc_id, ($h) AS h FROM toks),
-         w AS (SELECT doc_id, h % 256 AS bucket,
-             SUM(CASE WHEN (h // 256) % 2 = 1 THEN -1 ELSE 1 END)
-               AS weight
-           FROM hb GROUP BY 1, 2)
-         SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
-           CAST(weight AS BIGINT) AS weight
-         FROM w WHERE weight <> 0"""
-    },
-
-    "q_text_quality" ->
-      """SELECT doc_id, length(text) AS n_chars_m,
-         ROUND(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
-           / GREATEST(length(text), 1), 6) AS punct_ratio,
-         ROUND(CAST(len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-             t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','from','this','be'], t))) AS DOUBLE)
-           / GREATEST(len(regexp_split_to_array(trim(lower(text)), '\s+')), 1), 6) AS stopword_ratio
-         FROM documents""",
-
-    "q_fingerprint" ->
-      """SELECT doc_id,
-         md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-         FROM documents""",
-
-    // entity clusters: recursive reachability over the brute-force
-    // edit-pair graph, label = min reachable doc_id, singletons self
-    "q_entity_clusters" ->
-      """WITH RECURSIVE nm AS (SELECT doc_id,
-           CASE WHEN doc_id % 7 = 0 THEN substr(b, 1, 9)
-                WHEN doc_id % 7 = 1 THEN b || 'x'
-                WHEN doc_id % 7 = 2
-                  THEN substr(b, 1, 4) || 'z' || substr(b, 6, 5)
-                ELSE b END AS name
-         FROM (SELECT doc_id,
-             'e-' || substr(md5(CAST(doc_id % 200 AS VARCHAR)), 1, 8)
-               AS b
-           FROM documents) z),
-       pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM nm a JOIN nm b ON a.doc_id < b.doc_id
-         WHERE levenshtein(a.name, b.name) <= 2),
-       e AS (SELECT id_a AS src, id_b AS dst FROM pr
-             UNION SELECT id_b, id_a FROM pr),
-       reach(id, lab) AS (
-         SELECT doc_id, doc_id FROM documents
-         UNION
-         SELECT e.dst, r.lab FROM reach r JOIN e ON e.src = r.id)
-       SELECT id AS doc_id, MIN(lab) AS cluster_id
-       FROM reach GROUP BY id""",
-
-    // blocking is internal candidate generation (recall-complete at
-    // this length/cap); the oracle is the brute-force DP predicate
-    "q_edit_pairs" ->
-      """WITH nm AS (SELECT doc_id,
-           CASE WHEN doc_id % 7 = 0 THEN substr(b, 1, 9)
-                WHEN doc_id % 7 = 1 THEN b || 'x'
-                WHEN doc_id % 7 = 2
-                  THEN substr(b, 1, 4) || 'z' || substr(b, 6, 5)
-                ELSE b END AS name
-         FROM (SELECT doc_id,
-             'e-' || substr(md5(CAST(doc_id % 200 AS VARCHAR)), 1, 8)
-               AS b
-           FROM documents) z)
-       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         CAST(levenshtein(a.name, b.name) AS INT) AS edit_dist
-       FROM nm a JOIN nm b ON a.doc_id < b.doc_id
-       WHERE levenshtein(a.name, b.name) <= 2""",
-
-    // overlap replay: same plant, distinct (fingerprint, source),
-    // pairwise count by fingerprint self-join (== the sorted-set
-    // pair explosion: both enumerate a<b source pairs per shared fp)
-    "q_source_overlap" ->
-      """WITH pl AS (SELECT source,
-           CASE WHEN doc_id % 17 = 0
-             THEN 'Shared boilerplate block ' ||
-               CAST(doc_id % 7 AS VARCHAR)
-             ELSE text END AS text
-         FROM documents),
-       fp AS (SELECT DISTINCT
-           md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))
-             AS f, source
-         FROM pl)
-       SELECT a.source AS group_a, b.source AS group_b,
-         COUNT(*)::BIGINT AS n_shared
-       FROM fp a JOIN fp b ON a.f = b.f AND a.source < b.source
-       GROUP BY 1, 2"""
-  ) ++ Map(
-    // Gap math in whole SECONDS on both sides (Spark's timestamp→long
-    // cast truncates to seconds; epoch_ns // 1e9 is the exact mirror);
-    // session bounds output as epoch micros so ns-vs-us precision can
-    // never skew the hash.
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, ts,
-           epoch_ns(ts) // 1000 AS us FROM events),
-         w AS (SELECT *, lag(us) OVER
-           (PARTITION BY user_id ORDER BY ts) AS prev_us FROM e),
-         f AS (SELECT *, CASE WHEN prev_us IS NULL
-             OR (us - prev_us) > 1800000000
-           THEN 1 ELSE 0 END AS new_s FROM w),
-         g AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id
-           ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid FROM f)
-         SELECT user_id, MIN(us) AS start_us, MAX(us) AS end_us,
-           COUNT(*) AS n_events
-         FROM g GROUP BY user_id, sid""",
-
-    "q_lang_id" -> langIdOracle,
-    "q_lang_mix" -> langMixOracle,
-    "q_lang_full" -> langFullOracle,
-
-    // Mirrors TextFunctions.qualityScore: four 0/1 gates × weights,
-    // summed left-to-right. Every literal is cast to DOUBLE — a bare
-    // 1.0 is DECIMAL in DuckDB and decimal arithmetic would not
-    // reproduce Spark's double partial sums bit-for-bit.
-    "q_quality_score" -> qualityScoreOracle,
-
-    "q_media_features" ->
-      """SELECT doc_id AS media_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-         sha256(text) AS content_id
-         FROM documents""",
-
-    "q_minhash_pairs" -> minhashOracle,
-
-    "q_dedup_components" -> dedupComponentsOracle,
-
-    "q_dedup_clean" ->
-      s"""SELECT d.doc_id, d.source, d.n_chars
-         FROM documents d JOIN ($dedupComponentsOracle) c
-           ON c.doc_id = d.doc_id AND c.doc_id = c.cluster_id""",
-
-    // keep-best replay: per-component argmax on (n_chars DESC NULLS
-    // LAST, doc_id ASC) over the same component labels
-    "q_dedup_keep_best" ->
-      s"""WITH comp AS ($dedupComponentsOracle),
-         memb AS (SELECT c.doc_id, c.cluster_id, d.n_chars
-           FROM comp c JOIN documents d ON d.doc_id = c.doc_id),
-         keep AS (SELECT doc_id FROM (
-             SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY cluster_id
-               ORDER BY n_chars DESC NULLS LAST, doc_id) AS rn
-             FROM memb) z WHERE rn = 1)
-         SELECT d.doc_id, d.source, d.n_chars
-         FROM documents d JOIN keep k ON k.doc_id = d.doc_id""",
-
-    "q_det_split" -> detSplitOracle,
-
-    // same planted separators + footers; DF count over distinct
-    // (seg, doc) pairs; zipped unnests give (seg, 1-based pos)
-    "q_boilerplate_scrub" ->
-      """WITH m AS (SELECT doc_id,
-           replace(text, ' table ', '|')
-           || CASE WHEN doc_id % 3 = 0
-                THEN '|SUBSCRIBE NOW - weekly newsletter footer'
-                ELSE '' END
-           || CASE WHEN doc_id % 4 = 1
-                THEN '|(c) example corp - all rights reserved'
-                ELSE '' END AS t2
-         FROM documents),
-         segs AS (SELECT doc_id,
-           unnest(string_split(t2, '|')) AS seg,
-           unnest(generate_series(1, len(string_split(t2, '|'))))
-             AS pos
-         FROM m),
-         boiler AS (SELECT seg FROM (
-           SELECT seg, count(DISTINCT doc_id) AS df FROM segs
-           GROUP BY 1) WHERE df >= 50),
-         kept AS (SELECT * FROM segs
-           WHERE seg NOT IN (SELECT seg FROM boiler)),
-         rec AS (SELECT doc_id,
-           string_agg(seg, '|' ORDER BY pos) AS scrubbed
-         FROM kept GROUP BY 1)
-         SELECT d.doc_id, coalesce(r.scrubbed, '') AS scrubbed
-         FROM documents d LEFT JOIN rec r ON d.doc_id = r.doc_id""",
-
-    // keep-first = row_number() 1 over (segment, ordered by doc, pos)
-    "q_segment_dedup" ->
-      """WITH m AS (SELECT doc_id,
-           replace(text, ' value ', '|') AS t2 FROM documents),
-         segs AS (SELECT doc_id,
-           unnest(string_split(t2, '|')) AS seg,
-           unnest(generate_series(1, len(string_split(t2, '|'))))
-             AS pos
-         FROM m),
-         kept AS (SELECT doc_id, pos, seg FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY seg ORDER BY doc_id, pos) AS rn FROM segs)
-           WHERE rn = 1),
-         rec AS (SELECT doc_id,
-           string_agg(seg, '|' ORDER BY pos) AS deduped
-         FROM kept GROUP BY 1)
-         SELECT d.doc_id, coalesce(r.deduped, '') AS deduped
-         FROM documents d LEFT JOIN rec r ON d.doc_id = r.doc_id""",
-    "q_leakage_safe_split" -> leakageSafeSplitOracle,
-    "q_pii_redact" -> piiRedactOracle,
-    "q_redact_cards" -> redactCardsOracle,
-    "q_redact_iban" -> redactIbanOracle,
-    // every decision/field replays closed-form: the planted rules
-    // are fixed, only delay and the sitemap pointer carry the seed
-    "q_robots" ->
-      """SELECT doc_id,
-         CAST(2 AS INT) AS n_groups, CAST(4 AS INT) AS n_rules,
-         CAST((doc_id % 7 + 1) * 1000 AS BIGINT) AS crawl_delay_ms,
-         'https://example.org/sm' || doc_id || '.xml' AS sitemap,
-         FALSE AS graft_private, TRUE AS graft_ok,
-         FALSE AS graft_pdf, TRUE AS graft_pdfx,
-         TRUE AS graft_public, FALSE AS other_public
-         FROM documents""",
-
-    // identical decisions to q_robots — the WARC + framing chain in
-    // between must be transparent
-    "q_crawl_robots" ->
-      """SELECT doc_id,
-         CAST(2 AS INT) AS n_groups, CAST(4 AS INT) AS n_rules,
-         CAST((doc_id % 7 + 1) * 1000 AS BIGINT) AS crawl_delay_ms,
-         'https://example.org/sm' || doc_id || '.xml' AS sitemap,
-         FALSE AS graft_private, TRUE AS graft_ok,
-         FALSE AS graft_pdf, TRUE AS graft_pdfx,
-         TRUE AS graft_public, FALSE AS other_public
-         FROM documents""",
-
-    // per-doc aggregates from the planted arithmetic: lastmod day
-    // 18262 + (seed+i)%1000, priority milli ((seed+i)%10)*100,
-    // daily on even (seed+i); sitemapindex rows carry dates only
-    "q_sitemap" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5 + 2 AS n,
-           doc_id % 3 AS m FROM documents),
-         e AS (SELECT doc_id, n, m, t.i AS i
-           FROM p, LATERAL unnest(generate_series(0, n - 1)) AS t(i))
-         SELECT p.doc_id,
-           CASE WHEN p.m = 2 THEN 'sitemapindex' ELSE 'urlset' END
-             AS kind,
-           CAST(p.n AS INT) AS n_urls,
-           CASE WHEN p.m = 2 THEN 'https://example.org/sm' ||
-               p.doc_id || '_0.xml'
-             ELSE 'https://example.org/p' || p.doc_id || '_0'
-             END AS first_loc,
-           CAST((SELECT SUM(18262 + (e.doc_id + e.i) % 1000) FROM e
-             WHERE e.doc_id = p.doc_id) AS BIGINT) AS lastmod_day_sum,
-           CAST((SELECT CASE WHEN p.m = 2 THEN 0
-             ELSE SUM(((e.doc_id + e.i) % 10) * 100) END FROM e
-             WHERE e.doc_id = p.doc_id) AS BIGINT)
-             AS priority_milli_sum,
-           CAST((SELECT CASE WHEN p.m = 2 THEN 0
-             ELSE SUM(CASE WHEN (e.doc_id + e.i) % 2 = 0 THEN 1
-               ELSE 0 END) END FROM e
-             WHERE e.doc_id = p.doc_id) AS INT) AS n_daily
-         FROM p""",
-
-    // decode is the JDK-encoded ACE back to the planted Unicode
-    // host; ace_roundtrip pins our ENCODER against the JDK's too
-    "q_idn_hosts" ->
-      """SELECT doc_id,
-         'bücher' || (doc_id % 50) || '.ärger' || (doc_id % 7) ||
-           '.例え.org' AS uni_host,
-         TRUE AS ace_roundtrip
-         FROM documents""",
-
-    "q_url_domains" -> urlDomainsOracle,
-
-    // same plant, same RE2-compatible regexp chain (DuckDB backrefs
-    // are \1-style and need the 'g' flag for global replacement)
-    "q_url_normalize" ->
-      """WITH m AS (SELECT doc_id,
-           (CASE WHEN doc_id % 2 = 0 THEN 'HTTP://Sub'
-                 ELSE 'HTTPS://Sub' END)
-           || (doc_id % 7)::VARCHAR || '.Example.COM'
-           || (CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END)
-           || '/Article/' || doc_id::VARCHAR
-           || (CASE WHEN doc_id % 3 = 0
-                 THEN '?utm_source=news&id=' || (doc_id % 13)::VARCHAR
-                      || '&fbclid=abc'
-               WHEN doc_id % 3 = 1 THEN '?utm_campaign=x'
-               ELSE '' END)
-           || '#Section' || (doc_id % 5)::VARCHAR AS url
-         FROM documents),
-         n AS (SELECT doc_id, url,
-           regexp_replace(url, '#.*$', '', 'g') AS nofrag FROM m),
-         l AS (SELECT doc_id, url,
-           lower(regexp_extract(nofrag,
-             '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1))
-           || regexp_replace(nofrag,
-             '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', '') AS low FROM n),
-         p AS (SELECT doc_id, url,
-           regexp_replace(regexp_replace(low,
-             '^(http://[^/?#:]*):80([/?#].*)?$', '\1\2'),
-             '^(https://[^/?#:]*):443([/?#].*)?$', '\1\2') AS noport
-         FROM l),
-         s AS (SELECT doc_id, url,
-           regexp_replace(regexp_replace(regexp_replace(noport,
-             '([?&])(?:utm_[^=&]*|gclid|fbclid)=[^&]*', '\1', 'g'),
-             '([?&])&+', '\1', 'g'),
-             '[?&]+$', '', 'g') AS canonical
-         FROM p)
-         SELECT doc_id, url, canonical FROM s""",
-
-    // same regex chain, RE2 dialect-compatible by construction
-    "q_normalize_text" ->
-      """SELECT doc_id, trim(regexp_replace(regexp_replace(
-           chr(9) || ' ' || text || chr(1) || chr(10) || source
-             || '  end ',
-           '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g')) AS norm
-         FROM documents""",
-    // same decomposed plant via chr(); nfc_normalize = the kernel's
-    // canonical composition, then the standard fingerprint strip
-    "q_nfc_normalize" ->
-      """WITH m AS (SELECT doc_id,
-           substr(text, 1, 40) || ' cafe' || chr(769) || ' touche' ||
-             chr(769) || ' u' || chr(776) || 'ber' AS messy
-         FROM documents)
-         SELECT doc_id, nfc_normalize(messy) AS norm,
-           md5(regexp_replace(lower(nfc_normalize(messy)),
-             '[^a-z0-9]', '', 'g')) AS fp_nfc
-         FROM m""",
-    "q_repetition" -> repetitionOracle,
-    "q_quality_filter" -> qualityFilterOracle,
-    "q_threshold_metrics" -> thresholdMetricsOracle,
-    "q_stratified_sample" -> stratifiedSampleOracle,
-    "q_weighted_sample" ->
-      s"""SELECT doc_id, source, n_chars FROM documents
-         WHERE ${hashScoreSql("doc_id")} <
-           least(greatest(CAST(n_chars AS DOUBLE) / 1000.0, 0.1), 1.0)""",
-
-    "q_budget_sample" -> budgetSampleOracle,
-    "q_temperature_mix" -> temperatureMixOracle,
-
-    // replays mixToTarget's arithmetic in the SAME IEEE operation
-    // order (share = w/total, nstar = min(n/share), frac =
-    // share*nstar/n) so the per-stratum cut doubles are bit-identical
-    "q_mix_corpus" ->
-      s"""WITH t AS (SELECT * FROM (VALUES
-           ('src0', 0.5::DOUBLE), ('src1', 0.3::DOUBLE),
-           ('src2', 0.2::DOUBLE)) v(src, w)),
-       sh AS (SELECT src,
-           w / (0.5::DOUBLE + 0.3::DOUBLE + 0.2::DOUBLE) AS share
-         FROM t),
-       c AS (SELECT source AS src, CAST(COUNT(*) AS DOUBLE) AS n
-         FROM documents WHERE source IN ('src0', 'src1', 'src2')
-         GROUP BY source),
-       ns AS (SELECT MIN(n / share) AS nstar
-         FROM c JOIN sh USING (src)),
-       f AS (SELECT src,
-           least(share * (SELECT nstar FROM ns) / n, 1.0::DOUBLE)
-             AS frac
-         FROM c JOIN sh USING (src))
-       SELECT doc_id, source FROM documents
-       JOIN f ON source = f.src
-       WHERE ${hashScoreSql("doc_id")} < frac""",
-
-    // rank-filter top-k; DuckDB's QUALIFY is the same window predicate
-    "q_topk_per_group" ->
-      """SELECT doc_id, source, n_chars FROM documents
-         QUALIFY row_number() OVER (PARTITION BY source
-           ORDER BY n_chars DESC, doc_id ASC) <= 5""",
-
-    "q_chunk_tokens" -> chunkTokensOracle,
-    "q_pack_chunks" -> packChunksOracle,
-    "q_corpus_scrub" -> corpusScrubOracle,
-    "q_decontaminate" -> decontaminateOracle,
-    // the bloom prefilter provably cannot change the result (no false
-    // negatives + exact verify), so the oracle IS the plain one
-    "q_bloom_decontaminate" -> decontaminateOracle,
-    "q_group_centroids" -> groupCentroidsOracle,
-    "q_embedding_drift" -> embeddingDriftOracle,
-    "q_centroid_outliers" -> centroidOutliersOracle,
-
-    // exact integer gram over the quantized vectors, upper triangle
-    "q_gram_matrix" ->
-      s"""WITH q AS (SELECT ${sqlQuantize("embedding")} AS qv
-           FROM embeddings)
-         SELECT i, j, CAST(SUM(qv[i] * qv[j]) AS BIGINT) AS s
-         FROM q
-           CROSS JOIN generate_series(1, 64) t1(i)
-           CROSS JOIN generate_series(1, 64) t2(j)
-         WHERE j >= i GROUP BY i, j""",
-    "q_quantiles" -> quantilesOracle,
-    "q_describe" -> describeOracle,
-    "q_feature_corr" -> featureCorrOracle,
-    "q_grouped_corr" -> groupedCorrOracle,
-
-    // thresholds replay through the exact-quantile CTEs; the clip is
-    // comparisons only, so no new float arithmetic to match
-    "q_winsorize" -> {
-      val qcte = quantilesSqlFor("lineitem", "l_extendedprice",
-        Seq(0.05, 0.95),
-        "p, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE) AS quantile")
-      s"""WITH qs AS ($qcte),
-         lo AS (SELECT quantile AS lo_v FROM qs WHERE p = 0.05),
-         hi AS (SELECT quantile AS hi_v FROM qs WHERE p = 0.95)
-         SELECT l_orderkey, l_linenumber,
-           CASE WHEN l_extendedprice IS NULL THEN NULL
-             ELSE least(greatest(l_extendedprice::DOUBLE, lo_v), hi_v)
-           END AS w_price
-         FROM lineitem CROSS JOIN lo CROSS JOIN hi"""
-    },
-
-    // per-group thresholds replay through the grouped-quantile CTEs;
-    // both engines' least/greatest skip nulls, so null-group rows
-    // pass through unclipped identically
-    "q_grouped_winsorize" -> {
-      val qcte = groupedQuantilesSqlFor("lineitem", "l_returnflag",
-        "l_extendedprice", Seq(0.05, 0.95),
-        "lov.g AS g, p, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE)" +
-          " AS quantile")
-      s"""WITH qs AS ($qcte),
-         th AS (SELECT g,
-           MIN(CASE WHEN p = 0.05 THEN quantile END) AS lo_v,
-           MIN(CASE WHEN p = 0.95 THEN quantile END) AS hi_v
-           FROM qs GROUP BY g)
-         SELECT l_orderkey, l_linenumber, l_returnflag,
-           CASE WHEN l_extendedprice IS NULL THEN NULL
-             ELSE least(greatest(l_extendedprice::DOUBLE, lo_v), hi_v)
-           END AS w_price
-         FROM lineitem LEFT JOIN th ON l_returnflag = th.g"""
-    },
-
-    // median and MAD both replay through the exact-quantile CTEs; the
-    // deviation table derives from the bit-identical median, so the
-    // second quantile chain replays too
-    "q_robust_z" -> {
-      val medSql = quantilesSqlFor("lineitem", "l_extendedprice",
-        Seq(0.5),
-        "v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE) AS quantile")
-      val devTable = "(SELECT abs(l_extendedprice::DOUBLE - " +
-        "(SELECT med_v FROM med)) AS dev FROM lineitem " +
-        "WHERE l_extendedprice IS NOT NULL) dt"
-      val madSql = quantilesSqlFor(devTable, "dev", Seq(0.5),
-        "v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE) AS quantile")
-      s"""WITH med AS (SELECT quantile AS med_v FROM ($medSql) z),
-         mad AS (SELECT quantile AS mad_v FROM ($madSql) z)
-         SELECT l_orderkey, l_linenumber,
-           CASE WHEN l_extendedprice IS NOT NULL AND mad_v > 0
-             THEN (l_extendedprice::DOUBLE - med_v) / mad_v
-           END AS robust_z
-         FROM lineitem CROSS JOIN med CROSS JOIN mad"""
-    },
-
-    // snapshot diff replay: same derived old/new sides, status from
-    // raw-text comparison (the operator compares xxhash64
-    // fingerprints — equal iff the text is, modulo 2^-64 collisions)
-    "q_snapshot_diff" -> s"""WITH $snapshotDiffCtes
-       SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-         CASE WHEN o.doc_id IS NULL THEN 'added'
-              WHEN n.doc_id IS NULL THEN 'removed'
-              WHEN o.text IS DISTINCT FROM n.text THEN 'changed'
-              ELSE 'unchanged' END AS status
-       FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""",
-
-    "q_snapshot_diff_summary" -> s"""WITH $snapshotDiffCtes,
-       st AS (SELECT
-           CASE WHEN o.doc_id IS NULL THEN 'added'
-                WHEN n.doc_id IS NULL THEN 'removed'
-                WHEN o.text IS DISTINCT FROM n.text THEN 'changed'
-                ELSE 'unchanged' END AS status
-         FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
-       SELECT count(CASE WHEN status = 'added' THEN 1 END) AS n_added,
-         count(CASE WHEN status = 'removed' THEN 1 END) AS n_removed,
-         count(CASE WHEN status = 'changed' THEN 1 END) AS n_changed,
-         count(CASE WHEN status = 'unchanged' THEN 1 END)
-           AS n_unchanged
-       FROM st""",
-
-    // same decimal-sum mean shape as the describe oracle, one divide
-    // per ratio, delta as one subtraction
-    "q_drift_report" -> {
-      def sideSql(pred: String, tag: String): String = {
-        val cells = Seq("l_quantity", "l_extendedprice", "l_discount")
-          .map { c =>
-            s"""SELECT '$c' AS column_name, n AS n_$tag,
-              (n - nn_$c)::DOUBLE / greatest(n, 1) AS null_frac_$tag,
-              s_$c::DOUBLE / nn_$c AS mean_$tag FROM agg_$tag"""
-          }.mkString(" UNION ALL ")
-        s"""agg_$tag AS (SELECT COUNT(*) AS n,
-             ${Seq("l_quantity", "l_extendedprice", "l_discount").map(c =>
-               s"COUNT($c) AS nn_$c, " +
-               s"SUM(CAST($c AS DECIMAL(28,6))) AS s_$c").mkString(", ")}
-           FROM lineitem WHERE $pred),
-           side_$tag AS ($cells)"""
-      }
-      s"""WITH ${sideSql("l_shipdate < '1998-06-01'", "old")},
-         ${sideSql("l_shipdate >= '1998-06-01'", "new")}
-         SELECT o.column_name, o.n_old, o.null_frac_old, o.mean_old,
-           nn.n_new, nn.null_frac_new, nn.mean_new,
-           nn.mean_new - o.mean_old AS mean_delta
-         FROM side_old o JOIN side_new nn USING (column_name)"""
-    },
-
-    // per-category counts and single-divide frequencies, full outer
-    // across sides with absent categories at frequency 0
-    "q_cat_drift" -> {
-      def sideSql(pred: String, tag: String): String =
-        s"""c_$tag AS (
-           SELECT column_name, category, COUNT(*) AS cnt_$tag
-           FROM (SELECT unnest([
-               {'column_name': 'l_returnflag',
-                'category': l_returnflag::VARCHAR},
-               {'column_name': 'l_linestatus',
-                'category': l_linestatus::VARCHAR}],
-             recursive := true)
-             FROM lineitem WHERE $pred) z
-           GROUP BY 1, 2),
-         t_$tag AS (SELECT column_name, SUM(cnt_$tag) AS tot_$tag
-           FROM c_$tag GROUP BY 1),
-         s_$tag AS (SELECT c.column_name, c.category, c.cnt_$tag,
-             c.cnt_$tag::DOUBLE / t.tot_$tag::DOUBLE AS freq_$tag
-           FROM c_$tag c JOIN t_$tag t USING (column_name))"""
-      s"""WITH ${sideSql("l_shipdate < '1998-06-01'", "old")},
-         ${sideSql("l_shipdate >= '1998-06-01'", "new")}
-         SELECT COALESCE(o.column_name, nn.column_name) AS column_name,
-           COALESCE(o.category, nn.category) AS category,
-           COALESCE(o.cnt_old, 0) AS cnt_old,
-           COALESCE(nn.cnt_new, 0) AS cnt_new,
-           COALESCE(o.freq_old, 0.0) AS freq_old,
-           COALESCE(nn.freq_new, 0.0) AS freq_new,
-           COALESCE(nn.freq_new, 0.0) - COALESCE(o.freq_old, 0.0)
-             AS freq_delta
-         FROM s_old o FULL OUTER JOIN s_new nn
-           ON o.column_name = nn.column_name
-             AND o.category IS NOT DISTINCT FROM nn.category"""
-    },
-
-    // cume_dist = count(<=)/n, replayed through the same
-    // distinct-value cumulative construction the operator uses (a
-    // value join — row-key joins would multiply on non-unique keys)
-    "q_pct_rank" ->
-      """WITH n AS (SELECT COUNT(l_extendedprice) AS nn
-           FROM lineitem),
-         counts AS (SELECT l_extendedprice AS v, COUNT(*) AS c
-           FROM lineitem WHERE l_extendedprice IS NOT NULL
-           GROUP BY 1),
-         cumv AS (SELECT v, SUM(c) OVER (ORDER BY v
-           ROWS UNBOUNDED PRECEDING) AS cum FROM counts)
-         SELECT l.l_orderkey, l.l_linenumber,
-           cumv.cum::DOUBLE / n.nn AS pct_rank
-         FROM lineitem l
-           LEFT JOIN cumv ON l.l_extendedprice = cumv.v
-           CROSS JOIN n""",
-
-    // quartiles through the quantile CTEs over the SAME planted
-    // column; fences and flags are single IEEE ops / comparisons on
-    // bit-identical quartiles
-    "q_iqr_outliers" -> {
-      val planted = "(SELECT l_orderkey, l_linenumber, " +
-        "CASE WHEN l_orderkey % 997 = 0 THEN l_extendedprice * 50 " +
-        "ELSE l_extendedprice END AS v FROM lineitem) pl"
-      val qcte = quantilesSqlFor(planted, "v",
-        Seq(0.25, 0.75),
-        "p, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE) AS quantile")
-      s"""WITH qs AS ($qcte),
-         f AS (SELECT
-           (SELECT quantile FROM qs WHERE p = 0.25) AS q1,
-           (SELECT quantile FROM qs WHERE p = 0.75) AS q3)
-         SELECT l_orderkey, l_linenumber,
-           CASE WHEN v IS NOT NULL THEN
-             v::DOUBLE < q1 - 1.5 * (q3 - q1)
-             OR v::DOUBLE > q3 + 1.5 * (q3 - q1)
-           END AS is_outlier
-         FROM $planted CROSS JOIN f"""
-    },
-
-    // per-group median and MAD through the grouped-quantile CTEs;
-    // the deviation table derives from the bit-identical medians
-    "q_grouped_robust_z" -> {
-      val medSql = groupedQuantilesSqlFor("lineitem", "l_returnflag",
-        "l_extendedprice", Seq(0.5),
-        "lov.g AS g, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE)" +
-          " AS quantile")
-      val devTable = s"""(WITH md AS ($medSql)
-        SELECT l.l_returnflag,
-          abs(l.l_extendedprice::DOUBLE - md.quantile) AS dev
-        FROM lineitem l JOIN md ON l.l_returnflag = md.g
-        WHERE l.l_extendedprice IS NOT NULL) ddt"""
-      val madSql = groupedQuantilesSqlFor(devTable, "l_returnflag",
-        "dev", Seq(0.5),
-        "lov.g AS g, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE)" +
-          " AS quantile")
-      s"""WITH md AS ($medSql), mad AS ($madSql)
-         SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
-           CASE WHEN l.l_extendedprice IS NOT NULL
-               AND mad.quantile > 0
-             THEN (l.l_extendedprice::DOUBLE - md.quantile)
-               / mad.quantile
-           END AS robust_z
-         FROM lineitem l
-           LEFT JOIN md ON l.l_returnflag = md.g
-           LEFT JOIN mad ON l.l_returnflag = mad.g"""
-    },
-
-    // quartile thresholds replay through the quantile CTEs; the bin
-    // chain is the same <=-upper CASE as q_binning
-    "q_eqfreq_binning" -> {
-      val qcte = quantilesSqlFor("lineitem", "l_extendedprice",
-        Seq(0.25, 0.5, 0.75),
-        "p, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE) AS quantile")
-      s"""WITH qs AS ($qcte),
-         t AS (SELECT
-           (SELECT quantile FROM qs WHERE p = 0.25) AS t1,
-           (SELECT quantile FROM qs WHERE p = 0.5)  AS t2,
-           (SELECT quantile FROM qs WHERE p = 0.75) AS t3)
-         SELECT l_orderkey, l_linenumber,
-           CASE WHEN l_extendedprice IS NULL THEN NULL
-                WHEN l_extendedprice::DOUBLE <= t1 THEN 0
-                WHEN l_extendedprice::DOUBLE <= t2 THEN 1
-                WHEN l_extendedprice::DOUBLE <= t3 THEN 2
-                ELSE 3 END AS bin_id
-         FROM lineitem CROSS JOIN t"""
-    },
-
-    "q_top_terms" ->
-      """WITH t AS (SELECT UNNEST(regexp_split_to_array(trim(text),
-           '\s+')) AS term FROM documents)
-         SELECT term, COUNT(*) AS term_count FROM t
-         GROUP BY term ORDER BY term_count DESC, term ASC LIMIT 50""",
-
-    // the sketch is exact under capacity (see Sketches.topTermsApprox),
-    // so the approx query's oracle IS the exact top-k
-    "q_top_terms_approx" ->
-      """WITH t AS (SELECT UNNEST(regexp_split_to_array(trim(text),
-           '\s+')) AS term FROM documents)
-         SELECT term, COUNT(*) AS term_count FROM t
-         GROUP BY term ORDER BY term_count DESC, term ASC LIMIT 50""",
-
-    // template replay: same plant, distinct 3-grams per doc, df over
-    // docs, integer milli ratios
-    "q_template_score" -> {
-      val grams = ngramsSql(tokensSql("text"), 3)
-      s"""WITH pl AS (SELECT doc_id, text ||
-           CASE WHEN doc_id % 6 = 0
-             THEN ' standard footer boilerplate block common to' ||
-               ' many pages'
-             ELSE '' END AS text
-         FROM documents),
-       dg AS (SELECT doc_id, UNNEST(list_distinct($grams)) AS gram
-         FROM pl),
-       dfT AS (SELECT gram, COUNT(*)::BIGINT AS df FROM dg
-         GROUP BY 1)
-       SELECT d.doc_id, COUNT(*)::BIGINT AS n_grams,
-         CAST(SUM(f.df) * 1000 // COUNT(*) AS BIGINT)
-           AS mean_df_milli,
-         CAST(COUNT(CASE WHEN f.df >= 2 THEN 1 END) * 1000
-           // COUNT(*) AS BIGINT) AS shared_frac_milli
-       FROM dg d JOIN dfT f ON d.gram = f.gram
-       GROUP BY d.doc_id"""
-    },
-
-    // OOV replay: vocabulary from distinct (doc, term) df counts,
-    // in-vocab token count joined back, integer milli fraction
-    "q_oov_rate" ->
-      """WITH tokarr AS (SELECT doc_id,
-           regexp_split_to_array(trim(text), '\s+') AS ts
-         FROM documents),
-       tok AS (SELECT doc_id, UNNEST(ts) AS term FROM tokarr),
-       vocab AS (SELECT term FROM (
-           SELECT term, COUNT(DISTINCT doc_id) AS df
-           FROM tok GROUP BY 1) z
-         WHERE df >= 50),
-       inv AS (SELECT t.doc_id, COUNT(*)::BIGINT AS n_inv
-         FROM tok t JOIN vocab v ON v.term = t.term GROUP BY 1)
-       SELECT a.doc_id, len(a.ts)::BIGINT AS n_tokens,
-         len(a.ts)::BIGINT - COALESCE(i.n_inv, 0) AS n_oov,
-         (len(a.ts)::BIGINT - COALESCE(i.n_inv, 0)) * 1000
-           // len(a.ts) AS oov_milli
-       FROM tokarr a LEFT JOIN inv i ON a.doc_id = i.doc_id""",
-
-    // exact-rational tf-idf: long product, ONE double division
-    "q_tfidf_terms" ->
-      """WITH tok AS (SELECT doc_id,
-           UNNEST(regexp_split_to_array(trim(text), '\s+')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, COUNT(*) AS tf_count
-           FROM tok GROUP BY 1, 2),
-         dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-         n AS (SELECT COUNT(*) AS nn FROM documents)
-         SELECT doc_id, term, tf_count,
-           (tf_count * (nn + 1))::DOUBLE / (df_t + 1) AS score
-         FROM tf JOIN dfq USING (term) CROSS JOIN n
-         QUALIFY row_number() OVER (PARTITION BY doc_id
-           ORDER BY score DESC, term ASC) <= 3""",
-    "q_bm25_topk" -> bm25Oracle,
-    // serve == scan: the index query must reproduce the direct
-    // BM25 oracle bit-for-bit
-    "q_text_index_topk" -> bm25Oracle,
-    "q_simhash_pairs" -> simhashOracle,
-    "q_ngram_jaccard" -> ngramJaccardOracle,
-    "q_ngram_containment" -> ngramContainmentOracle,
-
-    // survivors = documents minus the pairs' contained sides
-    "q_scrub_contained" ->
-      s"""SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (
-           SELECT DISTINCT contained_id
-           FROM ($ngramContainmentOracle) z)""",
-    "q_ann_topk"      -> annTopKOracle,
-    "q_sq8_encode"    -> sq8EncodeOracle,
-    "q_sq8_topk"      -> sq8TopKOracle,
-    "q_l2_topk"       -> l2TopKOracle,
-    "q_ivf_topk"      -> ivfTopKOracle,
-    "q_pq_encode"     -> pqEncodeOracle,
-    "q_pq_topk"       -> pqTopKOracle,
-    "q_ivf_pq_topk"   -> ivfPqTopKOracle,
-    "q_cosine_dup"    -> cosineDupOracle,
-    "q_semantic_pairs" -> semanticPairsOracle,
-    "q_semantic_dedup" -> semanticDedupOracle,
-    "q_semantic_decontaminate" -> semanticDeconOracle,
-    "q_semantic_scrub" -> semanticScrubOracle,
-    "q_knn_graph"      -> knnGraphOracle,
-
-    // z-order is a LAYOUT: the read-back content must equal the
-    // unclustered projection row-for-row (the compare sorts rows)
-    "q_zorder" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         l_quantity FROM lineitem WHERE l_orderkey % 10 = 0""",
-
-    // same plants; counts strip-and-measure the same \x{...} ranges;
-    // dominance is the same first-match CASE chain over all 9 scripts
-    "q_script_id" ->
-      """WITH src AS (SELECT doc_id,
-           CASE WHEN doc_id % 7 = 1 THEN 'Привет мир, это проверка кириллицы'
-                WHEN doc_id % 7 = 2 THEN '你好世界这是中文测试文本'
-                WHEN doc_id % 7 = 3 THEN 'こんにちは世界 カタカナ テスト'
-                WHEN doc_id % 7 = 4 THEN '안녕하세요 세계 한국어 텍스트'
-                WHEN doc_id % 7 = 5 THEN 'नमस्ते दुनिया यह हिंदी परीक्षण है'
-                WHEN doc_id % 7 = 6 THEN 'สวัสดีชาวโลก นี่คือข้อความภาษาไทย'
-                ELSE text END AS s
-         FROM documents),
-       cnt AS (SELECT doc_id,
-         length(regexp_replace(s, '[^A-Za-z]', '', 'g')) AS n_latin,
-         length(regexp_replace(s, '[^\x{0400}-\x{04FF}]', '', 'g')) AS n_cyrillic,
-         length(regexp_replace(s, '[^\x{0370}-\x{03FF}]', '', 'g')) AS n_greek,
-         length(regexp_replace(s, '[^\x{0600}-\x{06FF}]', '', 'g')) AS n_arabic,
-         length(regexp_replace(s, '[^\x{0590}-\x{05FF}]', '', 'g')) AS n_hebrew,
-         length(regexp_replace(s, '[^\x{0900}-\x{097F}]', '', 'g')) AS n_devanagari,
-         length(regexp_replace(s, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS n_han,
-         length(regexp_replace(s, '[^\x{AC00}-\x{D7AF}]', '', 'g')) AS n_hangul,
-         length(regexp_replace(s, '[^\x{3040}-\x{30FF}]', '', 'g')) AS n_kana,
-         length(regexp_replace(s, '[^\x{0E00}-\x{0E7F}]', '', 'g')) AS n_thai
-         FROM src)
-       SELECT doc_id, CAST(n_latin AS BIGINT) AS n_latin,
-         CAST(n_han AS BIGINT) AS n_han,
-         CASE WHEN m = 0 THEN 'und'
-              WHEN n_latin = m THEN 'latin'
-              WHEN n_cyrillic = m THEN 'cyrillic'
-              WHEN n_greek = m THEN 'greek'
-              WHEN n_arabic = m THEN 'arabic'
-              WHEN n_hebrew = m THEN 'hebrew'
-              WHEN n_devanagari = m THEN 'devanagari'
-              WHEN n_han = m THEN 'han'
-              WHEN n_hangul = m THEN 'hangul'
-              WHEN n_kana = m THEN 'kana'
-              WHEN n_thai = m THEN 'thai'
-              ELSE 'und' END AS script
-       FROM (SELECT *, GREATEST(n_latin, n_cyrillic, n_greek, n_arabic,
-         n_hebrew, n_devanagari, n_han, n_hangul, n_kana, n_thai) AS m
-         FROM cnt) x""",
-
-    // same page construction via ||; the extraction chain is replayed
-    // operator-for-operator (RE2 inline flags, literal replaces with
-    // &amp; last, then the normalize whitespace canonicalization)
-    "q_html_text" ->
-      """WITH h AS (SELECT doc_id,
-           '<html><head><title> Doc ' || doc_id ||
-           ' </title><script>var x=1; if (x<2) {}</script>' ||
-           '<style>p { color: red; }</style></head><body>' ||
-           '<!-- hidden --><p class="main">' || text ||
-           '</p><a href="https://ex.com/' || doc_id ||
-           '?u=1">one</a> <a href=''https://ex.com/b''>two</a> ' ||
-           '&amp; &lt;tail&gt; &#39;q&#39; &nbsp;</body></html>'
-             AS html
-         FROM documents)
-         SELECT doc_id,
-           trim(regexp_replace(regexp_replace(
-             regexp_extract(html, '(?is)<title[^>]*>([^<]*)</title>', 1),
-             '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g')) AS title,
-           trim(regexp_replace(regexp_replace(
-             replace(replace(replace(replace(replace(replace(
-               regexp_replace(regexp_replace(regexp_replace(
-                 regexp_replace(html,
-                   '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-                 '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-                 '(?s)<!--.*?-->', ' ', 'g'),
-                 '<[^>]+>', ' ', 'g'),
-               '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
-               '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
-             '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g')) AS text,
-           len(regexp_extract_all(html,
-             '(?i)href\s*=\s*("[^"]*"|''[^'']*'')', 1)) AS n_links,
-           list_transform(regexp_extract_all(html,
-             '(?i)href\s*=\s*("[^"]*"|''[^'']*'')', 1),
-             s -> s[2:-2])[1] AS first_link
-         FROM h""",
-
-    // an INDEPENDENT greedy-BPE derivation: token rows + one window
-    // stage per merge rank. Greedy left-to-right pairing = mark
-    // candidate positions (tok=a, next=b), group CONSECUTIVE
-    // candidates into runs (only possible when a=b), take the odd
-    // positions within each run, merge takers and drop their right
-    // partners, renumber. 20 unrolled stages — nothing shared with
-    // the Spark kernel's scan loop.
-    "q_bpe_encode" -> {
-      val (ctes, last) = bpeSqlStages
-      s"""WITH $ctes
-         SELECT d.doc_id, COALESCE(a.stream, '') AS token_stream,
-           CAST(COALESCE(a.n, 0) AS BIGINT) AS n_tokens
-         FROM documents d LEFT JOIN (
-           SELECT doc_id,
-             string_agg(tok, chr(1) ORDER BY pos) AS stream,
-             COUNT(*) AS n
-           FROM $last GROUP BY 1) a ON d.doc_id = a.doc_id"""
-    },
-
-    // the greedy derivation again, aggregated to the per-source
-    // budget report
-    "q_token_budget" -> {
-      val (ctes, last) = bpeSqlStages
-      s"""WITH $ctes,
-         perdoc AS (SELECT doc_id, COUNT(*) AS n
-           FROM $last GROUP BY 1)
-         SELECT d.source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(COALESCE(p.n, 0)) AS BIGINT) AS total_tokens,
-           CAST(SUM(length(replace(COALESCE(d.text, ''), chr(1),
-             ''))) AS BIGINT) AS total_chars
-         FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id
-         GROUP BY d.source"""
-    },
-
-    // brute-force hamming over the arithmetically replayed frame
-    // hashes — banding is recall-complete at maxHamming 3, so the
-    // banded pairs must equal the quadratic reference exactly
-    "q_video_frame_dup" -> {
-      val h60 = sqlHash60(
-        "'vd:' || CAST(doc_id // 2 AS VARCHAR)")
-      s"""WITH fr AS (
-           SELECT CAST(doc_id * 4 + t.f AS BIGINT) AS fid,
-             xor(($h60) | 1, CAST(1 AS BIGINT) <<
-               CAST(50 + (doc_id % 2) * 3 + t.f AS INT)) AS h
-           FROM documents,
-             LATERAL unnest(generate_series(0,
-               CAST(doc_id % 3 AS INT))) AS t(f))
-         SELECT a.fid AS id_a, b.fid AS id_b,
-           CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
-         FROM fr a JOIN fr b ON a.fid < b.fid
-         WHERE bit_count(xor(a.h, b.h)) <= 3"""
-    },
-
-    // the same independent greedy derivation, then windows of 64
-    // tokens: chunk id = (pos-1) // 64, chunk text = in-order token
-    // concatenation
-    "q_bpe_chunk" -> {
-      val (ctes, last) = bpeSqlStages
-      s"""WITH $ctes
-         SELECT doc_id,
-           CAST((pos - 1) // 64 AS INT) AS chunk_id,
-           string_agg(tok, '' ORDER BY pos) AS chunk_text,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens
-         FROM $last
-         GROUP BY doc_id, (pos - 1) // 64"""
-    },
-
-    // overlap replay: token q=pos-1 belongs to window w iff
-    // w·48 ≤ q < w·48+64 → w ∈ [ceil((q−63)/48), q//48]; the ceil is
-    // the floor-division identity (q−63+47)//48, clamped at 0
-    "q_bpe_chunk_overlap" -> {
-      val (ctes, last) = bpeSqlStages
-      s"""WITH $ctes,
-         tw AS (SELECT doc_id, pos, tok, t.w AS w
-           FROM $last,
-           LATERAL unnest(generate_series(
-             GREATEST(0, (pos - 1 - 16) // 48),
-             (pos - 1) // 48)) AS t(w))
-         SELECT doc_id, CAST(w AS INT) AS chunk_id,
-           string_agg(tok, '' ORDER BY pos) AS chunk_text,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           CAST(w * 48 AS BIGINT) AS start_token
-         FROM tw GROUP BY doc_id, w"""
-    },
-
-    // the same add-one-smoothed integer micro-probabilities, built
-    // from scratch in SQL: bigram counts, per-prefix totals, V =
-    // distinct next-chars + 1, truncating integer division
-    "q_char_lm_score" ->
-      """WITH bg AS (
-           SELECT doc_id, substring(text, i, 1) AS p,
-             substring(text, i + 1, 1) AS c
-           FROM documents,
-             LATERAL unnest(generate_series(1, length(text) - 1))
-               AS t(i)
-           WHERE length(text) >= 2),
-         cnt AS (SELECT p, c, COUNT(*) AS n FROM bg GROUP BY 1, 2),
-         tot AS (SELECT p, SUM(n) AS tn FROM cnt GROUP BY 1),
-         v AS (SELECT COUNT(DISTINCT c) + 1 AS vv FROM bg),
-         mp AS (SELECT b.doc_id,
-             ((cnt.n + 1) * 1000000000) // (tot.tn + v.vv) AS m
-           FROM bg b
-           JOIN cnt ON b.p = cnt.p AND b.c = cnt.c
-           JOIN tot ON b.p = tot.p
-           CROSS JOIN v),
-         agg AS (SELECT doc_id,
-             CAST(COUNT(*) AS BIGINT) AS n_positions,
-             CAST(SUM(m) AS BIGINT) AS sum_micro_p
-           FROM mp GROUP BY 1)
-         SELECT d.doc_id, a.n_positions, a.sum_micro_p,
-           ROUND(CAST(a.sum_micro_p AS DOUBLE) / a.n_positions / 1e9,
-             9) AS avg_p
-         FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id""",
-
-    // per-frame hash60 replay: each frame's aHash IS its planted
-    // pattern (uniform blocks decode exactly), cast to BIGINT per the
-    // sqlHash60 emission rule
-    "q_video_frames" -> {
-      val h60 = sqlHash60(
-        "'vf:' || CAST(doc_id AS VARCHAR) || ':' || CAST(f AS VARCHAR)")
-      s"""SELECT doc_id, CAST(f AS INT) AS frame_idx,
-         CAST(64 AS INT) AS width, CAST(64 AS INT) AS height,
-         CAST(($h60) | 1 AS BIGINT) AS ahash
-         FROM documents, LATERAL unnest(generate_series(0,
-           CAST(doc_id % 3 AS INT))) AS t(f)"""
-    },
-
-    // every box length / fixed-point field the synthesizer planted is
-    // recomputed arithmetically — no MP4 bytes anywhere in the oracle
-    "q_video_meta" ->
-      """SELECT doc_id, 'mp4' AS format,
-         CASE WHEN doc_id % 3 = 0 THEN 'isom'
-              WHEN doc_id % 3 = 1 THEN 'mp42' ELSE 'avc1' END AS brand,
-         CAST(160 + (doc_id % 12) * 160 AS INT) AS width,
-         CAST(90 + (doc_id % 12) * 90 AS INT) AS height,
-         CAST((doc_id % 600 + 1) * 1000 AS BIGINT) AS duration_ms,
-         CAST(doc_id % 2 + 1 AS INT) AS n_tracks,
-         'avc1' AS codec,
-         CAST(CASE WHEN doc_id % 3 = 0 THEN 66
-              WHEN doc_id % 3 = 1 THEN 77 ELSE 100 END AS INT)
-           AS sps_profile,
-         CAST(10 + (doc_id % 5) * 10 AS INT) AS sps_level,
-         CAST(160 + (doc_id % 12) * 160 AS INT) AS sps_width,
-         CAST(90 + (doc_id % 12) * 90 AS INT) AS sps_height
-         FROM documents""",
-
-    // the parser must read back exactly the fields the hex
-    // construction planted — recomputed arithmetically, no WAV here
-    "q_audio_meta" ->
-      """SELECT doc_id, 'wav' AS format,
-         CAST(doc_id % 2 + 1 AS INT) AS channels,
-         CAST(8000 + (doc_id % 8) * 4000 AS INT) AS sample_rate,
-         CAST(16 AS INT) AS bits_per_sample,
-         CAST(doc_id % 50 + 1 AS BIGINT) AS n_frames
-         FROM documents""",
-
-    // the PCM16 kernel must recover the exact planted samples
-    // s(i) = ((doc_id*7919 + i*104729) % 65536) - 32768 — every sum
-    // is recomputed here from the formula in exact integer arithmetic
-    "q_audio_features" ->
-      """WITH p AS (
-           SELECT doc_id, doc_id % 100 + 1 AS frames,
-                  doc_id % 2 + 1 AS ch,
-                  8000 + (doc_id % 8) * 4000 AS rate
-           FROM documents),
-         smp AS (
-           SELECT p.doc_id, p.frames, p.rate, p.ch, t.i AS i,
-                  ((p.doc_id * 7919 + t.i * 104729) % 65536) - 32768
-                    AS v
-           FROM p CROSS JOIN generate_series(0, 199) AS t(i)
-           WHERE t.i < p.frames * p.ch),
-         zc AS (
-           SELECT doc_id,
-             SUM(CASE WHEN prev IS NOT NULL AND
-                 ((v >= 0) <> (prev >= 0)) THEN 1 ELSE 0 END) AS nzc
-           FROM (SELECT doc_id, v, lag(v) OVER
-               (PARTITION BY doc_id, i % ch ORDER BY i) AS prev
-             FROM smp) q GROUP BY doc_id)
-         SELECT s.doc_id,
-           CAST(count(*) AS BIGINT) AS n_samples,
-           CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
-           CAST(sum(v * v) AS BIGINT) AS sum_sq,
-           CAST(max(abs(v)) AS INT) AS peak,
-           CAST(sum(CASE WHEN abs(v) <= 327 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_silence,
-           CAST(sum(CASE WHEN abs(v) >= 32760 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_clipped,
-           CAST(zc.nzc AS BIGINT) AS n_zero_cross,
-           CAST(frames * 1000000 // rate AS BIGINT) AS duration_us
-         FROM smp s JOIN zc ON s.doc_id = zc.doc_id
-         GROUP BY s.doc_id, frames, rate, zc.nzc""",
-
-    // the parser must read back exactly the planted orientation —
-    // byte order is transparent to the value; every 9th doc has no
-    // APP1 and must come back null
-    "q_exif_orientation" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 9 = 0 THEN NULL
-              ELSE CAST(doc_id % 8 + 1 AS INT) END AS orientation
-         FROM documents""",
-
-    // signature replay: same LCG samples, floored balanced windows
-    // (i·15)//ns, truncating means, LEAST-15 levels packed at 4-bit
-    // positions — bits stay below 60 so BIGINT shifts cannot overflow
-    "q_audio_signature" ->
-      """WITH p AS (
-           SELECT doc_id, doc_id % 100 + 1 AS frames,
-                  doc_id % 2 + 1 AS ch
-           FROM documents),
-         smp AS (
-           SELECT p.doc_id, p.frames * p.ch AS ns, t.i AS i,
-                  abs(((p.doc_id * 7919 + t.i * 104729) % 65536)
-                    - 32768) AS a
-           FROM p CROSS JOIN generate_series(0, 199) AS t(i)
-           WHERE t.i < p.frames * p.ch),
-         wins AS (
-           SELECT doc_id, ns, (i * 15) // ns AS w,
-                  SUM(a)::BIGINT AS ws, COUNT(*)::BIGINT AS wc
-           FROM smp GROUP BY 1, 2, 3),
-         tot AS (
-           SELECT doc_id, SUM(ws)::BIGINT AS ts, MAX(ns)::BIGINT AS n
-           FROM wins GROUP BY 1),
-         lv AS (
-           SELECT w.doc_id, w.w,
-                  CASE WHEN (t.ts // t.n) = 0 THEN 0
-                       ELSE LEAST(15, ((w.ws // w.wc) * 8)
-                         // (t.ts // t.n)) END AS lvl
-           FROM wins w JOIN tot t ON w.doc_id = t.doc_id)
-         SELECT doc_id,
-           CAST(SUM(lvl * (CAST(1 AS BIGINT)
-             << CAST(4 * w AS INT))) AS BIGINT) AS audio_sig
-         FROM lv GROUP BY doc_id""",
-
-    // the FLAC chain (predictors + Rice + decorrelation) must hand
-    // back the exact planted PCM, so the signature arithmetic is the
-    // SAME as q_audio_signature — lossless means the container
-    // cannot change the answer
-    "q_flac_signature" ->
-      """WITH p AS (
-           SELECT doc_id, doc_id % 100 + 1 AS frames,
-                  doc_id % 2 + 1 AS ch
-           FROM documents),
-         smp AS (
-           SELECT p.doc_id, p.frames * p.ch AS ns, t.i AS i,
-                  abs(((p.doc_id * 7919 + t.i * 104729) % 65536)
-                    - 32768) AS a
-           FROM p CROSS JOIN generate_series(0, 199) AS t(i)
-           WHERE t.i < p.frames * p.ch),
-         wins AS (
-           SELECT doc_id, ns, (i * 15) // ns AS w,
-                  SUM(a)::BIGINT AS ws, COUNT(*)::BIGINT AS wc
-           FROM smp GROUP BY 1, 2, 3),
-         tot AS (
-           SELECT doc_id, SUM(ws)::BIGINT AS ts, MAX(ns)::BIGINT AS n
-           FROM wins GROUP BY 1),
-         lv AS (
-           SELECT w.doc_id, w.w,
-                  CASE WHEN (t.ts // t.n) = 0 THEN 0
-                       ELSE LEAST(15, ((w.ws // w.wc) * 8)
-                         // (t.ts // t.n)) END AS lvl
-           FROM wins w JOIN tot t ON w.doc_id = t.doc_id)
-         SELECT doc_id,
-           CAST(SUM(lvl * (CAST(1 AS BIGINT)
-             << CAST(4 * w AS INT))) AS BIGINT) AS audio_sig
-         FROM lv GROUP BY doc_id""",
-
-    // the parsers must read back exactly the dims the hex construction
-    // planted — recomputed here arithmetically, no image bytes
-    // anywhere; format cycles png/gif/webp/bmp/tiff by doc_id%5
-    // (all five header codecs behind one row)
-    "q_media_dims" ->
-      """SELECT doc_id,
-         CASE doc_id % 5 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
-              WHEN 2 THEN 'webp' WHEN 3 THEN 'bmp'
-              ELSE 'tiff' END AS format,
-         CAST(doc_id % 1920 + 1 AS INT) AS width,
-         CAST(doc_id % 1080 + 1 AS INT) AS height,
-         CAST(3 AS INT) AS channels
-         FROM documents""",
-
-    // dims must come from the PRIMARY item's ispe (index 2), never
-    // the decoy thumbnail ispe planted at ipco index 1
-    "q_heif_dims" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 2 = 1 THEN 'avif' ELSE 'heic' END
-           AS brand,
-         CASE WHEN doc_id % 2 = 1 THEN 'av01' ELSE 'hvc1' END
-           AS item_type,
-         CAST(doc_id % 3840 + 1 AS INT) AS width,
-         CAST(doc_id % 2160 + 1 AS INT) AS height,
-         CAST(3 AS INT) AS n_channels,
-         CAST(doc_id % 3 + 1 AS INT) AS n_items
-         FROM documents""",
-
-    // the checkerboard construction makes the average hash analytic:
-    // colors a < b by >= 40 always, phase doc_id%2 selects which cell
-    // parity carries b, and bit 8*cy+cx is set iff the cell color is b
-    // -> 0x55AA..AA for phase 0, its complement for phase 1
-    "q_phash" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN 6172840429334713770
-              ELSE -6172840429334713771 END AS ahash
-         FROM documents""",
-
-    // stripes align with the 9-column dHash cells (w ≡ 0 mod 9), so
-    // every row compares a<b alternately: phase 0 sets even bit
-    // positions (0x5555…), phase 1 the odd ones (0xAAAA…)
-    "q_dhash" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN 6148914691236517205
-              ELSE -6148914691236517206 END AS dhash
-         FROM documents""",
-
-    // uniform 8x8 blocks decode exactly, so the perceptual hash of
-    // the synthesized JPEG IS the planted md5-derived pattern — the
-    // hash60 mirror replays it without touching a single pixel
-    // CAST AS BIGINT is load-bearing: DuckDB's list_sum returns HUGEINT
-    // and the driver's fetchdf() turns HUGEINT into float64, shredding
-    // the low bits of the 60-bit hash — cast before it leaves SQL
-    "q_jpeg_phash" -> {
-      val h60 = sqlHash60("CAST(doc_id AS VARCHAR)")
-      s"""SELECT doc_id, CAST(($h60) | 1 AS BIGINT) AS ahash FROM documents"""
-    },
-
-    // successive-approximation scans rebuild the planted coefficients
-    // exactly, so the progressive oracle is the same hash60 replay
-    // (distinct 'prog:' salt keeps it independent of q_jpeg_phash)
-    "q_progressive_phash" -> {
-      val h60 = sqlHash60("'prog:' || CAST(doc_id AS VARCHAR)")
-      s"""SELECT doc_id, CAST(($h60) | 1 AS BIGINT) AS ahash FROM documents"""
-    },
-
-    // source dims are multiples of 8, so nearest-neighbor sampling
-    // lands exactly on pattern-cell boundaries: the resized plane IS
-    // the 8x8 checkerboard and its hash is the same parity constant
-    // pair as q_phash (bit 8*cy+cx set iff (cx+cy+phase) odd)
-    "q_media_resize" ->
-      """SELECT doc_id, CAST(8 AS BIGINT) AS rw, CAST(8 AS BIGINT) AS rh,
-         CASE WHEN doc_id % 2 = 0 THEN 6172840429334713770
-              ELSE -6172840429334713771 END AS ahash
-         FROM documents""",
-
-    // skew profile replay: counts + integer milli shares, the same
-    // (count DESC, key ASC) total order, top 20
-    "q_skew_profile" ->
-      """WITH c AS (SELECT l_suppkey, COUNT(*)::BIGINT AS n_rows
-           FROM lineitem GROUP BY 1),
-         t AS (SELECT COUNT(*)::BIGINT AS total FROM lineitem)
-       SELECT l_suppkey, n_rows,
-         n_rows * 1000 // GREATEST(t.total, 1) AS share_milli
-       FROM c, t
-       ORDER BY n_rows DESC, l_suppkey LIMIT 20""",
-
-    // the salt only changes partitioning: the oracle is the plain agg
-    "q_salted_agg" ->
-      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         FROM lineitem GROUP BY 1""",
-
-    // bucketing only changes layout: the oracle aggregates the source
-    "q_bucketed_readback" ->
-      """SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n_items,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         FROM lineitem WHERE l_orderkey % 10 = 0 GROUP BY 1""",
-
-    // the served index must reproduce ivfTopK exactly -> same replay
-    "q_ivf_index" -> ivfTopKOracle,
-
-    // the Pipeline composition = the three ops' replays joined by id
-    "q_curation_pipeline" ->
-      s"""SELECT r.doc_id, r.clean, q.keep AS text_keep,
-           q.reasons AS text_reasons, s.split
-         FROM ($piiRedactOracle) r
-         JOIN ($qualityFilterOracle) q ON r.doc_id = q.doc_id
-         JOIN ($detSplitOracle) s ON r.doc_id = s.doc_id""",
-
-    // brute-force popcount hamming over the same planted hashes; the
-    // md5-based base pattern replays via the hash60 mirror
-    "q_image_dup" -> {
-      val h60 = sqlHash60("CAST(gg AS VARCHAR)")
-      s"""WITH g AS (SELECT doc_id, doc_id // 2 AS gg FROM documents),
-         b AS (SELECT doc_id, gg, ($h60) | 1 AS base FROM g),
-         p AS (SELECT doc_id,
-           CASE WHEN doc_id % 2 = 1
-             THEN xor(base,
-               ((CAST(1 AS BIGINT) << CAST(gg % 5 AS INT)) - 1)
-                 << CAST(gg % 50 + 1 AS INT))
-             ELSE base END AS h
-           FROM b)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
-         FROM p a JOIN p b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.h, b.h)) <= 3"""
-    },
-
-    // the GIF path decodes through palette+LZW to the same uniform
-    // cells as the PNG checkerboards -> identical analytic constants
-    "q_gif_phash" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN 6172840429334713770
-              ELSE -6172840429334713771 END AS ahash
-         FROM documents""",
-
-    // each snapshot's phase advances by one per frame, so the hash
-    // alternates between the two checkerboard constants
-    "q_gif_frames" ->
-      """SELECT doc_id, CAST(t.f AS INT) AS frame_idx,
-         CASE WHEN (doc_id % 2 + t.f) % 2 = 0
-              THEN 6172840429334713770
-              ELSE -6172840429334713771 END AS ahash
-         FROM documents,
-           LATERAL unnest(generate_series(0, doc_id % 3)) AS t(f)""",
-
-    // brute-force hamming over the arithmetically replayed frame
-    // hashes — the GIF twin of q_video_frame_dup's oracle
-    "q_gif_frame_dup" -> {
-      val h60 = sqlHash60(
-        "'gd:' || CAST(doc_id // 2 AS VARCHAR)")
-      s"""WITH fr AS (
-           SELECT CAST(doc_id * 4 + t.f AS BIGINT) AS fid,
-             xor(($h60) | 1, CAST(1 AS BIGINT) <<
-               CAST(50 + (doc_id % 2) * 3 + t.f AS INT)) AS h
-           FROM documents,
-             LATERAL unnest(generate_series(0,
-               CAST(doc_id % 3 AS INT))) AS t(f))
-         SELECT a.fid AS id_a, b.fid AS id_b,
-           CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
-         FROM fr a JOIN fr b ON a.fid < b.fid
-         WHERE bit_count(xor(a.h, b.h)) <= 3"""
-    },
-
-    // the strip walk (LZW early-change, PackBits, predictor, both
-    // byte orders, WhiteIsZero) must land on the same checkerboard
-    // constants as the other five raster codecs
-    "q_tiff_phash" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN 6172840429334713770
-              ELSE -6172840429334713771 END AS ahash
-         FROM documents""",
-
-    // the directory walk must read back exactly the planted entry
-    // set: names, methods (odd deflated), and byte sizes
-    "q_zip_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id,
-           'f' || t.j || '.txt' AS entry_name,
-           CAST(CASE WHEN t.j % 2 = 1 THEN 8 ELSE 0 END AS INT)
-             AS method,
-           CAST(strlen('e' || t.j || ':' || txt) AS BIGINT) AS u_size
-         FROM p, LATERAL unnest(generate_series(0, n - 1)) AS t(j)""",
-
-    // the 7z walk must read back exactly the planted member set —
-    // names, coder chain cycling store/lzma2/deflate by (id+j)%3,
-    // byte sizes — and every extraction must CRC-verify (ok = true)
-    "q_7z_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id,
-           'm' || t.j || '.dat' AS entry_name,
-           CASE (doc_id + t.j) % 3 WHEN 0 THEN 'store'
-             WHEN 1 THEN 'lzma2' ELSE 'deflate' END AS method,
-           CAST(strlen('s' || t.j || ':' || txt) AS BIGINT)
-             AS u_size,
-           TRUE AS ok
-         FROM p, LATERAL unnest(generate_series(0, n - 1)) AS t(j)""",
-
-    // the avi walk must replay the planted header fields with the
-    // stream-clock duration
-    "q_avi_meta" ->
-      """SELECT doc_id,
-           CAST((50 + doc_id % 500) * 40 AS DOUBLE) AS duration_ms,
-           CAST(160 + (doc_id % 8) * 16 AS INT) AS width,
-           CAST(120 + (doc_id % 6) * 16 AS INT) AS height,
-           2 AS n_streams,
-           CASE doc_id % 3 WHEN 0 THEN 'MJPG' WHEN 1 THEN 'XVID'
-             ELSE 'H264' END AS video_codec,
-           2 AS audio_channels,
-           44100 AS audio_rate
-         FROM documents""",
-
-    // the npy walk must replay every planted array kind: version,
-    // descr, order, shape and the exact integer sum
-    "q_npy_meta" ->
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 6 AS INT) AS k
-           FROM documents)
-         SELECT doc_id,
-           CASE k WHEN 3 THEN '2.0' ELSE '1.0' END AS npy_version,
-           CASE k WHEN 0 THEN '<i8' WHEN 1 THEN '<f8'
-             WHEN 2 THEN '|b1' WHEN 3 THEN '>i4'
-             WHEN 4 THEN '<u2' ELSE '<i8' END AS descr,
-           (k = 4) AS fortran,
-           CASE k WHEN 1 THEN 2 WHEN 4 THEN 2 WHEN 5 THEN 0
-             ELSE 1 END::INT AS ndim,
-           CASE k
-             WHEN 0 THEN CAST(doc_id % 7 + 3 AS VARCHAR)
-             WHEN 1 THEN '2x' || CAST(doc_id % 5 + 2 AS VARCHAR)
-             WHEN 2 THEN CAST(doc_id % 9 + 4 AS VARCHAR)
-             WHEN 3 THEN CAST(doc_id % 6 + 2 AS VARCHAR)
-             WHEN 4 THEN '2x3' ELSE '' END AS shape,
-           CASE k WHEN 0 THEN doc_id % 7 + 3
-             WHEN 1 THEN 2 * (doc_id % 5 + 2)
-             WHEN 2 THEN doc_id % 9 + 4
-             WHEN 3 THEN doc_id % 6 + 2
-             WHEN 4 THEN 6 ELSE 1 END::BIGINT AS n_elems,
-           CASE k WHEN 0 THEN 8 WHEN 1 THEN 8 WHEN 2 THEN 1
-             WHEN 3 THEN 4 WHEN 4 THEN 2 ELSE 8 END::INT
-             AS item_size,
-           CASE k
-             WHEN 0 THEN (doc_id % 7 + 3) * doc_id +
-               (doc_id % 7 + 3) * (doc_id % 7 + 2) / 2
-             WHEN 2 THEN (doc_id % 9 + 4) // 2
-             WHEN 3 THEN 3 * (doc_id % 6 + 2) *
-               (doc_id % 6 + 1) / 2 + (doc_id % 6 + 2)
-             WHEN 4 THEN 6 * (doc_id % 100) + 15
-             WHEN 5 THEN doc_id ELSE NULL END::BIGINT AS int_sum
-         FROM p""",
-
-    // every npz member must extract through the zip layer (stored
-    // AND deflated) and parse to its planted facts
-    "q_npz_entries" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5 + 2 AS n
-           FROM documents)
-         SELECT doc_id, 'a.npy' AS member, '<i8' AS descr,
-           CAST(n AS VARCHAR) AS shape, n::BIGINT AS n_elems,
-           (n * doc_id + n * (n - 1))::BIGINT AS int_sum FROM p
-         UNION ALL
-         SELECT doc_id, 'b.npy', '<f4', '2x2', 4, NULL FROM p
-         UNION ALL
-         SELECT doc_id, 'c.npy', '|b1', '3', 3, 2 FROM p""",
-
-    // every directory entry must bounds-check and replay; the
-    // embedded PNG's true dims override the entry bytes
-    "q_ico_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 3 + 1 AS INT) AS n,
-           CAST(doc_id % 2 AS INT) AS k2 FROM documents),
-         q AS (SELECT doc_id, n, k2,
-           CASE n WHEN 1 THEN 16 WHEN 2 THEN 32 ELSE 64 END
-             AS bmp_max FROM p)
-         SELECT doc_id, (doc_id % 5 = 0) AS is_cursor,
-           (n + CASE k2 WHEN 0 THEN 1 ELSE 0 END)::INT
-             AS n_entries,
-           CASE WHEN k2 = 0 THEN GREATEST(bmp_max, 48)
-             ELSE bmp_max END::INT AS max_width,
-           CASE WHEN k2 = 0 THEN GREATEST(bmp_max, 48)
-             ELSE bmp_max END::INT AS max_height,
-           (1 - k2)::INT AS n_png,
-           CASE WHEN n = 1 AND k2 = 1 THEN '4'
-             WHEN n = 1 AND k2 = 0 THEN '4,32'
-             WHEN k2 = 1 THEN '4,24'
-             ELSE '4,24,32' END AS bpps
-         FROM q""",
-
-    // packet counts, byte totals and the truncation census must
-    // replay closed-form for both containers
-    "q_pcap_meta" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5 + 1 AS n,
-           doc_id % 20 AS s FROM documents)
-         SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'pcap' ELSE 'pcapng' END
-             AS container,
-           TRUE AS little_endian, FALSE AS nanos,
-           CASE WHEN doc_id % 3 = 0 THEN 'linux_sll'
-             ELSE 'ethernet' END AS linktype,
-           (n + 1)::BIGINT AS n_packets,
-           (n * (40 + s) + 5 * n * (n - 1) + 60)::BIGINT
-             AS cap_bytes,
-           (n * (40 + s) + 5 * n * (n - 1) + 120)::BIGINT
-             AS orig_bytes,
-           CAST(1 AS BIGINT) AS n_truncated,
-           1 AS n_interfaces
-         FROM p""",
-
-    // every planted identity must replay: serial hex exactly as
-    // openssl prints it, algorithms, names, validity, SANs
-    "q_x509_meta" ->
-      """WITH p AS (SELECT doc_id,
-           1000 + doc_id % 9000 AS serial,
-           2024 + doc_id % 3 AS y,
-           CAST(doc_id % 2 AS INT) AS k2 FROM documents)
-         SELECT doc_id, 3 AS version,
-           lpad(upper(to_hex(serial)), 4, '0') AS serial_hex,
-           CASE k2 WHEN 1 THEN 'ecdsa-with-SHA256'
-             ELSE 'sha256WithRSAEncryption' END AS sig_alg,
-           CASE k2 WHEN 1 THEN 'id-ecPublicKey'
-             ELSE 'rsaEncryption' END AS pubkey_alg,
-           'doc' || CAST(doc_id % 50 AS VARCHAR) || '.example'
-             AS subject_cn,
-           'Org ' || CAST(doc_id % 7 AS VARCHAR) AS subject_o,
-           TRUE AS self_signed,
-           CAST(y AS VARCHAR) || '-03-15T12:00:00Z' AS not_before,
-           CAST(y + 1 + k2 AS VARCHAR) || '-03-15T12:00:00Z'
-             AS not_after,
-           CASE WHEN doc_id % 3 = 0 THEN k2 + 1 ELSE 0 END::INT
-             AS n_san_dns,
-           CASE WHEN doc_id % 3 = 0 THEN
-             (SELECT string_agg('alt' || t.j || '.doc' ||
-                CAST(doc_id % 50 AS VARCHAR) || '.example', ','
-                ORDER BY t.j)
-              FROM unnest(generate_series(0, k2)) AS t(j))
-           ELSE '' END AS san_dns
-         FROM p""",
-
-    // versions, geometry and both integrity facts must replay
-    "q_hdf5_meta" ->
-      """SELECT doc_id,
-           CASE doc_id % 2 WHEN 0 THEN 0 ELSE 3 END::INT
-             AS sb_version,
-           8 AS offset_size, 8 AS length_size,
-           (doc_id % 5 <> 0) AS eof_matches,
-           CASE doc_id % 2 WHEN 0 THEN NULL ELSE TRUE END
-             AS checksum_ok
-         FROM documents""",
-
-    // the tag headers and the codec-declared payload must replay
-    "q_rpm_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id,
-           'pkg' || CAST(doc_id % 20 AS VARCHAR) AS pkg_name,
-           '1.' || CAST(doc_id % 10 AS VARCHAR) AS version,
-           CAST(doc_id % 5 AS VARCHAR) AS release,
-           CASE WHEN doc_id % 2 = 0 THEN 'x86_64' ELSE 'noarch'
-             END AS arch,
-           CASE doc_id % 3 WHEN 0 THEN 'gzip' WHEN 1 THEN 'xz'
-             ELSE 'zstd' END AS compressor,
-           n AS n_entries,
-           (SELECT string_agg('./usr/share/doc/f' || t.j, ','
-              ORDER BY t.j)
-            FROM unnest(generate_series(0, n - 1)) AS t(j))
-             AS entry_names
-         FROM p""",
-
-    // every planted pyc shape must replay: version, invalidation
-    // mode, names, const counts
-    "q_pyc_census" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 4 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id, '3.11' AS py_version,
-           CASE WHEN doc_id % 2 = 1 THEN 'checked_hash'
-             ELSE 'timestamp' END AS invalidation,
-           CASE WHEN doc_id % 2 = 1 THEN NULL
-             ELSE 100 + doc_id % 900 END::BIGINT AS source_size,
-           1 AS n_code, '<module>' AS top_name,
-           (SELECT string_agg('name' || t.j, ',' ORDER BY t.j)
-            FROM unnest(generate_series(0, n - 1)) AS t(j))
-             AS names_csv,
-           (doc_id % 3 + 1)::INT AS n_consts
-         FROM p""",
-
-    // every planted Mach-O shape must replay; a fat doc carries
-    // its slice-0 facts plus the arch list
-    "q_macho_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 3 AS INT) AS k3,
-           doc_id % 3 + 1 AS ns, doc_id % 2 + 1 AS nd
-           FROM documents)
-         SELECT doc_id,
-           CASE WHEN k3 = 0 THEN 'fat' ELSE 'thin' END
-             AS container,
-           TRUE AS is64,
-           CASE WHEN k3 = 0 THEN 'x86_64'
-             WHEN doc_id % 2 = 0 THEN 'x86_64' ELSE 'arm64' END
-             AS cpu,
-           CASE WHEN doc_id % 5 = 0 THEN 'dylib' ELSE 'execute'
-             END AS file_type,
-           (ns + nd + 1)::INT AS n_cmds,
-           ns::INT AS n_segments,
-           CASE nd WHEN 1 THEN '/usr/lib/libfix0.dylib'
-             ELSE '/usr/lib/libfix0.dylib,/usr/lib/libfix1.dylib'
-             END AS dylibs,
-           TRUE AS has_uuid,
-           CASE WHEN k3 = 0 THEN 2 ELSE 0 END::INT AS n_archs,
-           CASE WHEN k3 = 0 THEN 'x86_64,arm64' ELSE '' END
-             AS archs
-         FROM p""",
-
-    // every zone-map fact must replay what parquet-mr planted
-    "q_parquet_stats" ->
-      """WITH p AS (SELECT doc_id, doc_id % 2 AS k
-           FROM documents)
-         SELECT doc_id, 0 AS rg, 'id' AS col_path,
-           'int64' AS ptype,
-           CASE k WHEN 0 THEN 100 ELSE 300 END::BIGINT
-             AS num_values,
-           0::BIGINT AS null_count, 0::BIGINT AS min_long,
-           CASE k WHEN 0 THEN 99 ELSE 299 END::BIGINT
-             AS max_long,
-           CAST(NULL AS VARCHAR) AS min_str,
-           CAST(NULL AS VARCHAR) AS max_str FROM p
-         UNION ALL
-         SELECT doc_id, 0,
-           CASE k WHEN 0 THEN 'name' ELSE 'grp' END,
-           CASE k WHEN 0 THEN 'byte_array' ELSE 'int64' END,
-           CASE k WHEN 0 THEN 100 ELSE 300 END, 0,
-           CASE k WHEN 0 THEN NULL ELSE 0 END,
-           CASE k WHEN 0 THEN NULL ELSE 6 END,
-           CASE k WHEN 0 THEN 'name-0' ELSE NULL END,
-           CASE k WHEN 0 THEN 'name-99' ELSE NULL END FROM p""",
-
-    // the manifest (incl. the folded line) and censuses must
-    // replay closed-form
-    "q_jar_meta" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 + 1 AS np,
-           doc_id % 4 + 1 AS nc FROM documents)
-         SELECT doc_id, TRUE AS has_manifest,
-           '1.0' AS manifest_version,
-           'com.corpus.Main' || CAST(doc_id % 10 AS VARCHAR)
-             AS main_class,
-           'graft-fixture-toolchain-version-' ||
-             CAST(doc_id % 5 AS VARCHAR) ||
-             '-with-a-long-vendor-string' AS created_by,
-           (np * nc)::INT AS n_classes, np::INT AS n_packages,
-           (np * nc + 2)::INT AS n_members
-         FROM p""",
-
-    // loose objects must inflate, validate and replay their
-    // planted type/size/content
-    "q_git_loose" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt
-           FROM documents)
-         SELECT doc_id,
-           CASE WHEN doc_id % 3 = 0 THEN 'commit' ELSE 'blob' END
-             AS obj_type,
-           CASE WHEN doc_id % 3 = 0
-             THEN 84 + strlen(CAST(doc_id AS VARCHAR))
-             ELSE 4 + strlen(txt) END::BIGINT AS u_size,
-           CASE WHEN doc_id % 3 = 0 THEN NULL
-             ELSE 'doc:' || txt END AS blob_text
-         FROM p""",
-
-    // every planted commit must replay its action counts, added
-    // bytes and protocol facts closed-form
-    "q_delta_log" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 + 1 AS a,
-           doc_id % 3 AS r, doc_id % 1000 AS s FROM documents)
-         SELECT doc_id,
-           (3 + a + r)::INT AS n_actions,
-           a::INT AS n_add, r::INT AS n_remove, 1 AS n_other,
-           (a * (100 + s) + a * (a - 1) / 2)::BIGINT AS add_bytes,
-           r::INT AS n_partition_cols,
-           1 AS min_reader, 2 AS min_writer,
-           'parquet' AS provider
-         FROM p""",
-
-    // every planted DV fact replayed closed-form: array card is
-    // count{p<100 : p%7 = doc_id%7}, the run pair always holds
-    // 100, the even-id bitmap holds every even low16 (32768), and
-    // the probes/live counts are pure arithmetic
-    "q_delta_dv" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 AS hi,
-           doc_id % 1000 AS a, doc_id % 7 AS r7,
-           doc_id % 2 AS even FROM documents)
-         SELECT doc_id, 1 AS n_high_keys,
-           CAST((CASE WHEN r7 <= 1 THEN 15 ELSE 14 END) + 100 +
-             CASE WHEN even = 0 THEN 32768 ELSE 0 END AS BIGINT)
-             AS cardinality,
-           1 AS n_array,
-           CASE WHEN even = 0 THEN 1 ELSE 0 END AS n_bitmap,
-           1 AS n_run,
-           CAST(hi * 4294967296 + r7 AS BIGINT) AS dv_min,
-           CAST(hi * 4294967296 + CASE WHEN even = 0
-             THEN 2 * 65536 + 65534
-             ELSE 65536 + a + 149 END AS BIGINT) AS dv_max,
-           TRUE AS member_hit, FALSE AS absent_hit,
-           CAST(40 - CASE WHEN r7 <= 4 THEN 6 ELSE 5 END AS INT)
-             AS live_0_40
-         FROM p""",
-
-    // state-as-of replay: version w adds files j <= w%4 of size
-    // 100(w+1)+j; w >= 2 removes f-(w-2)-0 (size 100(w-1))
-    "q_delta_time_travel" ->
-      """WITH v AS (SELECT t.v FROM
-             unnest(generate_series(0, 9)) AS t(v)),
-         adds AS (SELECT w.v AS w, j.j FROM
-             unnest(generate_series(0, 9)) AS w(v),
-             unnest(generate_series(0, 3)) AS j(j)
-           WHERE j.j <= w.v % 4)
-         SELECT CAST(v.v AS BIGINT) AS version,
-           CAST((SELECT COUNT(*) FROM adds WHERE w <= v.v)
-             - GREATEST(0, v.v - 1) AS BIGINT) AS n_live,
-           CAST((SELECT SUM(100 * (w + 1) + j) FROM adds
-               WHERE w <= v.v)
-             - (SELECT COALESCE(SUM(100 * (r.v - 1)), 0) FROM
-                unnest(generate_series(2, 9)) AS r(v)
-                WHERE r.v <= v.v) AS BIGINT) AS live_bytes
-         FROM v""",
-
-    // retention split at cutoff 1700000005500: removes (versions
-    // 2..9, ts = 1.7e12 + 1000v) from v in 2..5 are deletable —
-    // files f-0-0..f-3-0 of sizes 100..400 — v in 6..9 retained
-    "q_vacuum_plan" ->
-      """SELECT TRUE AS deletable, 4 AS n_files,
-           1000::BIGINT AS bytes
-         UNION ALL
-         SELECT FALSE, 4, 2600::BIGINT""",
-
-    // the planted checkpointed table's live set, closed-form:
-    // version v adds f-v-j (j <= v%4) of size 100*(v+1)+j; v>=2
-    // removes f-(v-2)-0 — so j=0 files of versions 0..7 are dead
-    // after v9, and both reconciliation paths must agree on the
-    // rest ('both', equal sizes)
-    "q_delta_checkpoint" ->
-      """WITH f AS (SELECT v.v, j.j
-           FROM unnest(generate_series(0, 9)) AS v(v),
-                unnest(generate_series(0, 3)) AS j(j)
-           WHERE j.j <= v.v % 4)
-         SELECT 'f-' || v || '-' || j || '.parquet' AS path,
-           CAST(100 * (v + 1) + j AS BIGINT) AS size_ckpt,
-           CAST(100 * (v + 1) + j AS BIGINT) AS size_json,
-           'both' AS status
-         FROM f WHERE NOT (j = 0 AND v <= 7)""",
-
-    // every planted jsonl mix must replay its shape census
-    "q_jsonl_census" ->
-      """WITH p AS (SELECT doc_id, doc_id % 6 + 2 AS n
-           FROM documents)
-         SELECT doc_id, n::INT AS n_lines,
-           (n - 1)::INT AS n_valid, 1 AS n_invalid,
-           ((n + 1) // 2)::INT AS n_objects,
-           (n // 2 - 1)::INT AS n_arrays, 0 AS n_scalars,
-           ((n + 1) // 2 + 1)::INT AS n_distinct_keys
-         FROM p""",
-
-    // every framed record must CRC-verify and replay its planted
-    // sizes and proto flags closed-form
-    "q_tfrecord_census" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5 + 2 AS n,
-           doc_id % 7 AS s7 FROM documents)
-         SELECT doc_id, n::BIGINT AS n_records,
-           (20 * ((n + 1) // 2) + (8 + s7) * (n // 2))::BIGINT
-             AS data_bytes,
-           CAST(20 AS BIGINT) AS max_record,
-           ((n + 1) // 2)::BIGINT AS n_proto
-         FROM p""",
-
-    // every ML-artifact kind must route to its extractor and
-    // replay its planted headline fact and measure
-    "q_ml_omni" ->
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 9 AS INT) AS k,
-           CAST(doc_id % 3 AS INT) AS k3,
-           CAST(doc_id % 5 AS INT) AS k5,
-           CAST(doc_id % 6 AS INT) AS k6,
-           CAST(doc_id % 7 AS INT) AS k7 FROM documents)
-         SELECT doc_id,
-           CASE k
-             WHEN 0 THEN 'application/x-npy'
-             WHEN 1 THEN 'application/x-npz'
-             WHEN 2 THEN 'application/x-python-pickle'
-             WHEN 3 THEN 'application/x-safetensors'
-             WHEN 4 THEN 'application/x-gguf'
-             WHEN 5 THEN 'application/x-orc'
-             WHEN 6 THEN 'application/vnd.apache.arrow.file'
-             WHEN 7 THEN 'application/x-python-bytecode'
-             ELSE 'application/x-hdf5'
-           END AS label,
-           CASE k
-             WHEN 0 THEN '<i8'
-             WHEN 1 THEN '<i8,<f4,|b1'
-             WHEN 2 THEN 'dict'
-             WHEN 3 THEN 'BF16,I64'
-             WHEN 4 THEN CASE k3 WHEN 0 THEN 'llama'
-               WHEN 1 THEN 'gptneox' ELSE 'qwen2' END
-             WHEN 5 THEN CASE k5 WHEN 0 THEN 'none'
-               WHEN 1 THEN 'zlib' WHEN 2 THEN 'snappy'
-               WHEN 3 THEN 'zstd' ELSE 'lz4' END
-             WHEN 6 THEN CASE k5 WHEN 0 THEN 'int64,utf8'
-               WHEN 1 THEN 'float64,bool,timestamp,uint32'
-               WHEN 2 THEN 'list,struct'
-               WHEN 3 THEN 'dict:utf8,int32'
-               ELSE 'binary,int64' END
-             WHEN 7 THEN CASE doc_id % 2 WHEN 1
-               THEN 'checked_hash' ELSE 'timestamp' END
-             ELSE CASE doc_id % 2 WHEN 0 THEN 'v0' ELSE 'v3' END
-           END AS fact,
-           CASE k
-             WHEN 0 THEN k7 + 3
-             WHEN 1 THEN k5 + 2 + 7
-             WHEN 2 THEN 5 + 2 * (k6 + 2)
-             WHEN 3 THEN (k7 + 2) * 8 + (k3 + 1)
-             WHEN 4 THEN (k6 + 2) * 16
-             WHEN 5 THEN CASE k5 WHEN 0 THEN 100 WHEN 1 THEN 250
-               WHEN 2 THEN 50 WHEN 3 THEN 20000 ELSE 300 END
-             WHEN 6 THEN CASE k5 WHEN 0 THEN 100 WHEN 1 THEN 25
-               WHEN 2 THEN 30 WHEN 3 THEN 20 ELSE 150 END
-             WHEN 7 THEN doc_id % 4 + 1
-             ELSE 1
-           END::BIGINT AS measure
-         FROM p""",
-
-    // every planted CBOR shape must replay its structure census
-    "q_cbor_census" ->
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS k,
-           doc_id % 5 + 1 AS n, doc_id % 4 + 1 AS m,
-           doc_id % 3 + 1 AS j FROM documents)
-         SELECT doc_id,
-           CASE k WHEN 0 THEN 'map' WHEN 1 THEN 'array'
-             WHEN 2 THEN 'tag' ELSE 'array' END AS top_kind,
-           CASE k WHEN 0 THEN n WHEN 1 THEN m WHEN 2 THEN NULL
-             ELSE j END::BIGINT AS n_items,
-           CASE k WHEN 0 THEN 1 + 2 * n WHEN 1 THEN 1 + 5 * m
-             WHEN 2 THEN 2 ELSE 1 + j END::BIGINT AS n_nodes,
-           CASE k WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 1
-             ELSE 1 END::INT AS max_depth,
-           CASE k WHEN 2 THEN 1 ELSE 0 END::BIGINT AS n_tags,
-           (k = 3) AS has_indefinite
-         FROM p""",
-
-    // every planted msgpack shape must replay its structure census
-    "q_msgpack_census" ->
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 3 AS INT) AS k,
-           doc_id % 6 + 1 AS n, doc_id % 4 + 1 AS m
-           FROM documents)
-         SELECT doc_id,
-           CASE k WHEN 0 THEN 'map' WHEN 1 THEN 'array'
-             ELSE 'map' END AS top_kind,
-           CASE k WHEN 0 THEN n WHEN 1 THEN m ELSE 1
-             END::BIGINT AS n_items,
-           CASE k WHEN 0 THEN 1 + 2 * n WHEN 1 THEN 1 + 4 * m
-             ELSE 3 END::BIGINT AS n_nodes,
-           CASE k WHEN 1 THEN 2 ELSE 1 END::INT AS max_depth,
-           CASE k WHEN 2 THEN 1 ELSE 0 END::BIGINT AS n_exts
-         FROM p""",
-
-    // every planted manifest shape must validate and replay its
-    // exact tensor/parameter/byte counts
-    "q_safetensors_meta" ->
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 3 AS INT) AS k,
-           doc_id % 4 + 1 AS n, doc_id % 5 + 2 AS d,
-           doc_id % 7 + 2 AS e, doc_id % 3 + 1 AS i,
-           doc_id % 6 + 1 AS m FROM documents)
-         SELECT doc_id,
-           CASE k WHEN 0 THEN 2 * n WHEN 1 THEN 2 ELSE 3
-             END::INT AS n_tensors,
-           CASE k WHEN 0 THEN 5 * d * n WHEN 1 THEN e * 8 + i
-             ELSE 1 + m END::BIGINT AS total_params,
-           CASE k WHEN 0 THEN 18 * d * n
-             WHEN 1 THEN e * 16 + i * 8
-             ELSE 8 + m END::BIGINT AS total_bytes,
-           CASE k WHEN 0 THEN 'F16,F32' WHEN 1 THEN 'BF16,I64'
-             ELSE 'BOOL,F64,U8' END AS dtypes,
-           2 AS max_rank,
-           (k = 1) AS has_metadata
-         FROM p""",
-
-    // planted architectures, layer counts and quant types must
-    // replay with exact parameter totals
-    "q_gguf_meta" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 + 1 AS nl,
-           doc_id % 6 + 2 AS d FROM documents)
-         SELECT doc_id, 3 AS version,
-           (2 * nl)::BIGINT AS n_tensors,
-           (2 + doc_id % 3)::BIGINT AS n_kv,
-           CASE doc_id % 3 WHEN 0 THEN 'llama'
-             WHEN 1 THEN 'gptneox' ELSE 'qwen2' END AS arch,
-           'model-' || CAST(doc_id % 10 AS VARCHAR)
-             AS model_name,
-           (32 * d * nl)::BIGINT AS total_params,
-           CASE doc_id % 4 WHEN 0 THEN 'F32' WHEN 1 THEN 'Q8_0'
-             WHEN 2 THEN 'Q4_K' ELSE 'BF16' END AS qtypes
-         FROM p""",
-
-    // the flatbuffers walk must replay the reference pyarrow
-    // writer's schema and exact row counts
-    "q_arrow_meta" ->
-      """SELECT doc_id, 4 AS version,
-           CASE doc_id % 5 WHEN 0 THEN 'id,name'
-             WHEN 1 THEN 'v,ok,ts,u' WHEN 2 THEN 'xs,st'
-             WHEN 3 THEN 'cat,n' ELSE 'payload,k' END
-             AS field_names,
-           CASE doc_id % 5 WHEN 0 THEN 'int64,utf8'
-             WHEN 1 THEN 'float64,bool,timestamp,uint32'
-             WHEN 2 THEN 'list,struct'
-             WHEN 3 THEN 'dict:utf8,int32'
-             ELSE 'binary,int64' END AS field_types,
-           CASE doc_id % 5 WHEN 0 THEN 2 WHEN 4 THEN 3 ELSE 1
-             END::INT AS n_batches,
-           CASE doc_id % 5 WHEN 3 THEN 1 ELSE 0 END::INT
-             AS n_dicts,
-           CASE doc_id % 5 WHEN 0 THEN 100 WHEN 1 THEN 25
-             WHEN 2 THEN 30 WHEN 3 THEN 20 ELSE 150 END::BIGINT
-             AS total_rows
-         FROM documents""",
-
-    // the footer walk must replay the reference ORC writer's
-    // metadata across all five codec layouts
-    "q_orc_meta" ->
-      """SELECT doc_id,
-           CASE doc_id % 5 WHEN 0 THEN 'none' WHEN 1 THEN 'zlib'
-             WHEN 2 THEN 'snappy' WHEN 3 THEN 'zstd'
-             ELSE 'lz4' END AS codec,
-           CASE doc_id % 5 WHEN 0 THEN 100 WHEN 1 THEN 250
-             WHEN 2 THEN 50 WHEN 3 THEN 20000 ELSE 300 END
-             ::BIGINT AS num_rows,
-           CASE doc_id % 5 WHEN 3 THEN 2 ELSE 1 END::INT
-             AS n_stripes,
-           CASE doc_id % 5 WHEN 0 THEN 100 WHEN 1 THEN 250
-             WHEN 2 THEN 50 WHEN 3 THEN 20000 ELSE 300 END
-             ::BIGINT AS stripe_rows,
-           CASE doc_id % 5 WHEN 0 THEN 3 WHEN 1 THEN 4
-             WHEN 2 THEN 7 WHEN 3 THEN 3 ELSE 4 END::INT
-             AS n_types,
-           CASE doc_id % 5 WHEN 0 THEN 'id,name'
-             WHEN 1 THEN 'id,v,s' WHEN 2 THEN 'id,info,arr'
-             WHEN 3 THEN 'id,txt' ELSE 'id,flag,sm' END
-             AS col_names,
-           CASE doc_id % 5 WHEN 0 THEN 'long,string'
-             WHEN 1 THEN 'long,double,string'
-             WHEN 2 THEN 'long,struct,list'
-             WHEN 3 THEN 'long,string'
-             ELSE 'long,boolean,short' END AS kinds
-         FROM documents""",
-
-    // the identical window arithmetic replayed: next-fit bin =
-    // exclusive-prefix bytes DIV target, then per-bin aggregates
-    "q_compaction_plan" ->
-      """WITH f AS (SELECT doc_id,
-             'p' || CAST(doc_id % 7 AS VARCHAR) AS part,
-             (doc_id * 37) % 900 + 100 AS size FROM documents),
-         c AS (SELECT part, size,
-             SUM(size) OVER (PARTITION BY part ORDER BY doc_id
-               ROWS UNBOUNDED PRECEDING) AS cum FROM f)
-         SELECT part, CAST((cum - size) // 1024 AS BIGINT) AS bin,
-           COUNT(*)::INT AS n_files, SUM(size)::BIGINT AS bytes,
-           SUM(size) < 512 AS undersized
-         FROM c GROUP BY part, (cum - size) // 1024""",
-
-    // the rewrite must preserve content exactly (counts and sums
-    // per partition) and produce one file per planned bin; the bin
-    // count replays via the same next-fit window in SQL
-    "q_compaction_apply" ->
-      """WITH d AS (SELECT l_returnflag AS part,
-             l_orderkey % 37 AS file_id, l_quantity
-           FROM lineitem WHERE l_orderkey % 10 = 0),
-         census AS (SELECT part, file_id, COUNT(*) AS n_rows
-           FROM d GROUP BY 1, 2),
-         a AS (SELECT part, file_id,
-             (SUM(n_rows) OVER (PARTITION BY part ORDER BY file_id
-                ROWS UNBOUNDED PRECEDING) - n_rows) // 5000 AS bin
-           FROM census),
-         bins AS (SELECT part, COUNT(DISTINCT bin)::INT AS n_bins
-           FROM a GROUP BY part)
-         SELECT d.part, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_qty,
-           b.n_bins, b.n_bins AS n_files, TRUE AS files_eq_bins
-         FROM d JOIN bins b ON d.part = b.part
-         GROUP BY d.part, b.n_bins""",
-
-    // listed-but-unreferenced arithmetic: listing carries e in
-    // [0, doc_id%5], the manifests reference e in [0, doc_id%4];
-    // docs with no orphans produce no row (anti-join semantics)
-    "q_orphan_files" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5 AS lmax,
-             doc_id % 4 + 1 AS m FROM documents)
-         SELECT doc_id, CAST(lmax - m + 1 AS INT) AS n_orphans,
-           CAST((SELECT SUM(1000 + t.e)
-             FROM unnest(generate_series(0, 4)) AS t(e)
-             WHERE t.e >= m AND t.e <= lmax) AS BIGINT)
-             AS orphan_bytes
-         FROM p WHERE lmax >= m""",
-
-    // the identical boundary-sweep arithmetic replayed in SQL
-    "q_clustering_depth" ->
-      """WITH f AS (SELECT doc_id % 5 AS part,
-             (doc_id * 13) % 1000 AS lo,
-             (doc_id * 13) % 1000 + (doc_id * 7) % 200 AS hi
-           FROM documents),
-         ev AS (SELECT part, k, SUM(d) AS d FROM (
-             SELECT part, lo AS k, 1 AS d FROM f
-             UNION ALL
-             SELECT part, hi + 1 AS k, -1 AS d FROM f)
-           GROUP BY part, k),
-         c AS (SELECT part, k,
-             SUM(d) OVER (PARTITION BY part ORDER BY k
-               ROWS UNBOUNDED PRECEDING) AS depth,
-             LEAD(k) OVER (PARTITION BY part ORDER BY k) AS nk
-           FROM ev)
-         SELECT part, CAST(MAX(depth) AS INT) AS max_depth,
-           CAST(SUM(CASE WHEN nk IS NULL THEN 0
-             ELSE depth * (nk - k) END) AS BIGINT) AS depth_area,
-           CAST(SUM(CASE WHEN nk IS NULL THEN 0 ELSE nk - k END)
-             AS BIGINT) AS span_len,
-           COUNT(*)::INT AS n_boundaries
-         FROM c GROUP BY part""",
-
-    // the decision replayed: the same size census + boundary
-    // sweep, stitched per partition
-    "q_optimize_plan" ->
-      """WITH f AS (SELECT 'p' || CAST(doc_id % 7 AS VARCHAR)
-             AS part,
-             (doc_id * 37) % 900 + 100 + (doc_id % 7) * 80
-               AS size,
-             (doc_id * 13) % 1000 AS lo,
-             (doc_id * 13) % 1000 + (doc_id * 7) % 200 AS hi
-           FROM documents),
-         sz AS (SELECT part, COUNT(*)::INT AS n_files,
-             SUM(CASE WHEN size < 512 THEN 1 ELSE 0 END)::INT
-               AS n_small
-           FROM f GROUP BY part),
-         ev AS (SELECT part, k, SUM(d) AS d FROM (
-             SELECT part, lo AS k, 1 AS d FROM f
-             UNION ALL
-             SELECT part, hi + 1 AS k, -1 AS d FROM f)
-           GROUP BY part, k),
-         c AS (SELECT part,
-             SUM(d) OVER (PARTITION BY part ORDER BY k
-               ROWS UNBOUNDED PRECEDING) AS depth
-           FROM ev),
-         dp AS (SELECT part, CAST(MAX(depth) AS INT) AS max_depth
-           FROM c GROUP BY part)
-         SELECT sz.part, n_files, n_small, max_depth,
-           CASE WHEN n_small * 3 > n_files THEN 'compact'
-             WHEN max_depth > 8 THEN 'recluster'
-             ELSE 'none' END AS action
-         FROM sz JOIN dp ON sz.part = dp.part""",
-
-    // fixture goldens (8192-byte filters, zero FPs over the probe
-    // range) + the bloom contract (members always hit)
-    "q_parquet_bloom" ->
-      """SELECT doc_id, 'id,s' AS bloom_cols, 2 AS n_index_cols,
-           8192 AS bloom_nbytes,
-           'block/xxhash/uncompressed' AS algo,
-           TRUE AS member_hit, TRUE AS s_member_hit,
-           FALSE AS absent_hit, FALSE AS s_absent_hit
-         FROM documents""",
-
-    // one CASE per routed kind: the delta add-bytes sum, the
-    // iceberg list/manifest aggregates (via per-kind unnest CTEs),
-    // and the parquet/ORC fixture facts keyed by (doc_id//5)%5
-    "q_lakehouse_omni" ->
-      """WITH base AS (SELECT doc_id, doc_id % 8 AS k,
-             (doc_id // 8) % 5 AS fx, doc_id % 3 + 1 AS n,
-             doc_id % 4 + 1 AS m, doc_id % 4 + 1 AS a
-           FROM documents),
-         lst AS (SELECT doc_id,
-             array_to_string(list_sort(list_distinct(
-               list((doc_id + t.j) % 4))), ',') AS spec_ids,
-             SUM(100 * doc_id + t.j)::BIGINT AS added_rows
-           FROM base, unnest(generate_series(0, 2)) AS t(j)
-           WHERE t.j < n AND k = 1 GROUP BY doc_id),
-         mf AS (SELECT doc_id,
-             array_to_string(list_sort(list_distinct(list(
-               CASE (doc_id + t.e) % 3 WHEN 0 THEN 'PARQUET'
-                 WHEN 1 THEN 'ORC' ELSE 'AVRO' END))), ',')
-               AS formats,
-             SUM(50 * doc_id + t.e)::BIGINT AS rows_sum
-           FROM base, unnest(generate_series(0, 3)) AS t(e)
-           WHERE t.e < m AND k = 2 GROUP BY doc_id),
-         pd AS (SELECT doc_id,
-             SUM(3 + CASE WHEN (doc_id + t.e) % 3 = 0 THEN 1
-               ELSE 0 END)::BIGINT AS n_del
-           FROM base, unnest(generate_series(0, 3)) AS t(e)
-           WHERE t.e < m AND k = 7 GROUP BY doc_id)
-         SELECT b.doc_id,
-           CASE k WHEN 0 THEN 'application/x-delta-log'
-             WHEN 1 THEN 'application/x-iceberg-manifest-list'
-             WHEN 2 THEN 'application/x-iceberg-manifest'
-             WHEN 3 THEN 'application/vnd.apache.parquet'
-             WHEN 4 THEN 'application/x-orc'
-             WHEN 5 THEN 'application/x-iceberg-metadata'
-             WHEN 6 THEN 'application/x-delta-dv'
-             ELSE 'application/x-iceberg-pos-delete' END AS label,
-           CASE k WHEN 0 THEN 'parquet'
-             WHEN 1 THEN lst.spec_ids
-             WHEN 2 THEN mf.formats
-             WHEN 3 THEN (CASE fx WHEN 0 THEN 'uncompressed'
-               WHEN 1 THEN 'snappy' WHEN 2 THEN 'gzip'
-               WHEN 3 THEN 'zstd' ELSE 'lz4' END)
-             WHEN 4 THEN (CASE fx WHEN 0 THEN 'none'
-               WHEN 1 THEN 'zlib' WHEN 2 THEN 'snappy'
-               WHEN 3 THEN 'zstd' ELSE 'lz4' END)
-             WHEN 5 THEN (CASE b.doc_id % 3 WHEN 0 THEN 'parquet'
-               WHEN 1 THEN 'orc' ELSE 'avro' END)
-             WHEN 6 THEN 'maps=1'
-             ELSE 'pos-delete' END AS fact,
-           CAST(CASE k
-             WHEN 0 THEN a * 100 * b.doc_id + a * (a - 1) / 2
-             WHEN 1 THEN lst.added_rows
-             WHEN 2 THEN mf.rows_sum
-             WHEN 3 THEN (CASE fx WHEN 0 THEN 100 WHEN 1 THEN 250
-               WHEN 2 THEN 50 WHEN 3 THEN 20000 ELSE 300 END)
-             WHEN 4 THEN (CASE fx WHEN 0 THEN 100 WHEN 1 THEN 250
-               WHEN 2 THEN 50 WHEN 3 THEN 20000 ELSE 300 END)
-             WHEN 5 THEN 1000 * b.doc_id + b.doc_id % 4 + 1
-             WHEN 6 THEN (CASE WHEN b.doc_id % 7 <= 1 THEN 15
-                 ELSE 14 END) + 100 +
-               (CASE WHEN b.doc_id % 2 = 0 THEN 32768 ELSE 0 END)
-             ELSE pd.n_del
-             END AS BIGINT) AS measure
-         FROM base b LEFT JOIN lst USING (doc_id)
-           LEFT JOIN mf USING (doc_id)
-           LEFT JOIN pd USING (doc_id)""",
-
-    // every planted manifest-list fact replayed closed-form over a
-    // two-level unnest (manifests × partition summaries)
-    "q_iceberg_manifests" ->
-      """WITH base AS (SELECT doc_id, doc_id % 3 + 1 AS n,
-             doc_id % 2 + 1 AS np FROM documents),
-         j AS (SELECT doc_id, n, np, t.j FROM base,
-             unnest(generate_series(0, 2)) AS t(j) WHERE t.j < n),
-         jp AS (SELECT doc_id, j.j, u.p FROM j,
-             unnest(generate_series(0, 1)) AS u(p)
-           WHERE u.p < np AND j.j % 3 <> 2),
-         agg_j AS (SELECT doc_id,
-             COUNT(*)::INT AS n_manifests,
-             SUM((doc_id + j) % 10)::BIGINT AS total_added_files,
-             SUM(100 * doc_id + j)::BIGINT AS total_added_rows,
-             SUM((doc_id + j) % 3)::BIGINT AS total_deleted_files,
-             MAX(doc_id + j)::BIGINT AS max_seq,
-             MIN(doc_id)::BIGINT AS min_seq,
-             array_to_string(list_sort(list_distinct(
-               list((doc_id + j) % 4))), ',') AS spec_ids,
-             SUM(CASE WHEN j % 3 = 2 THEN 1 ELSE 0 END)::INT
-               AS n_null_partitions
-           FROM j GROUP BY doc_id),
-         agg_p AS (SELECT doc_id,
-             COUNT(*)::INT AS n_summaries,
-             SUM(CASE WHEN (doc_id + j + p) % 2 = 0 THEN 1 ELSE 0
-               END)::INT AS n_contains_null,
-             SUM(CASE WHEN (doc_id + p) % 3 = 0 THEN 1 ELSE 0
-               END)::INT AS n_missing_upper
-           FROM jp GROUP BY doc_id)
-         SELECT b.doc_id, n_manifests, total_added_files,
-           total_added_rows, total_deleted_files, max_seq, min_seq,
-           spec_ids, n_null_partitions,
-           COALESCE(n_summaries, 0)::INT AS n_summaries,
-           COALESCE(n_contains_null, 0)::INT AS n_contains_null,
-           COALESCE(n_missing_upper, 0)::INT AS n_missing_upper,
-           's3://lake/meta/snap-' || b.doc_id || '-m0.avro'
-             AS first_path
-         FROM base b JOIN agg_j USING (doc_id)
-           LEFT JOIN agg_p USING (doc_id)""",
-
-    // manifest entries: status histogram, nested data_file sums,
-    // the int-keyed stats map total, distinct formats
-    "q_iceberg_entries" ->
-      """WITH base AS (SELECT doc_id, doc_id % 4 + 1 AS m,
-             doc_id % 3 + 1 AS nc FROM documents),
-         e AS (SELECT doc_id, m, nc, t.e FROM base,
-             unnest(generate_series(0, 3)) AS t(e) WHERE t.e < m)
-         SELECT doc_id,
-           COUNT(*)::INT AS n_entries,
-           SUM(CASE WHEN e % 3 = 0 THEN 1 ELSE 0 END)::INT
-             AS n_existing,
-           SUM(CASE WHEN e % 3 = 1 THEN 1 ELSE 0 END)::INT
-             AS n_added,
-           SUM(CASE WHEN e % 3 = 2 THEN 1 ELSE 0 END)::INT
-             AS n_deleted,
-           SUM(CASE WHEN e % 4 = 3 THEN 1 ELSE 0 END)::INT
-             AS n_null_snap,
-           SUM(50 * doc_id + e)::BIGINT AS rows_sum,
-           SUM(1024 * (e + 1))::BIGINT AS bytes_sum,
-           array_to_string(list_sort(list_distinct(list(
-             CASE (doc_id + e) % 3 WHEN 0 THEN 'PARQUET'
-               WHEN 1 THEN 'ORC' ELSE 'AVRO' END))), ',')
-             AS formats,
-           SUM((doc_id + e) % 8)::BIGINT AS bucket_sum,
-           SUM(CASE WHEN e % 2 = 0
-             THEN 10 * doc_id * nc + nc * (nc - 1) / 2
-             ELSE 0 END)::BIGINT AS colsize_sum
-         FROM e GROUP BY doc_id, m, nc""",
-
-    // pairing replay over the planted list: manifest j has
-    // content j%2 and seq doc_id+j, so data js are {0} ∪ {2 if
-    // n=3}, the only delete is j=1 (when n>=2), and it applies
-    // only to data j=0
-    "q_iceberg_seq_pairing" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 + 1 AS n
-           FROM documents)
-         SELECT doc_id, n::INT AS n_manifests,
-           (1 + CASE WHEN n = 3 THEN 1 ELSE 0 END)::INT AS n_data,
-           (CASE WHEN n >= 2 THEN 1 ELSE 0 END)::INT AS n_delete,
-           (CASE WHEN n >= 2 THEN 1 ELSE 0 END)::INT
-             AS applied_pairs
-         FROM p""",
-
-    // every planted table-metadata fact replayed closed-form: the
-    // n-deep parent chain makes ancestry_depth = n, the log is
-    // written monotonic, summary operations cycle by (doc_id+k)%4
-    "q_iceberg_snapshots" ->
-      """WITH base AS (SELECT doc_id, doc_id % 4 + 2 AS n,
-             doc_id % 2 + 1 AS ns FROM documents),
-         k AS (SELECT doc_id, n, ns, t.k FROM base,
-             unnest(generate_series(0, 5)) AS t(k) WHERE t.k < n),
-         agg AS (SELECT doc_id,
-             array_to_string(list_sort(list_distinct(list(
-               CASE (doc_id + k) % 4 WHEN 0 THEN 'append'
-                 WHEN 1 THEN 'overwrite' WHEN 2 THEN 'delete'
-                 ELSE 'replace' END))), ',') AS ops_csv,
-             SUM(10 * doc_id + k)::BIGINT AS added_records_sum
-           FROM k GROUP BY doc_id)
-         SELECT b.doc_id,
-           2 AS format_version,
-           n::INT AS n_snapshots,
-           (1000 * b.doc_id + n - 1)::BIGINT AS current_snapshot_id,
-           n::INT AS ancestry_depth,
-           n::INT AS n_log_entries,
-           TRUE AS log_monotonic,
-           ops_csv,
-           added_records_sum,
-           's3://lake/meta/snap-' || (1000 * b.doc_id + n - 1) ||
-             '.avro' AS current_manifest_list,
-           ns::INT AS n_schemas,
-           (b.doc_id % 3 + ns)::INT AS current_schema_fields,
-           (b.doc_id % 3)::INT AS n_spec_fields,
-           n::BIGINT AS last_sequence_number,
-           CASE b.doc_id % 3 WHEN 0 THEN 'parquet' WHEN 1 THEN 'orc'
-             ELSE 'avro' END AS format_default
-         FROM base b JOIN agg USING (doc_id)""",
-
-    // resolution replay: n = doc_id%3+1 rows; c promoted
-    // long→double sums exactly (integers), d defaults to 7 per row
-    "q_avro_evolution" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 + 1 AS n
-           FROM documents)
-         SELECT doc_id, n::INT AS n_rows,
-           's' || CAST(doc_id % 10 AS VARCHAR) || '-0' AS b_first,
-           CAST(n * 100 * doc_id + n * (n - 1) / 2 AS DOUBLE)
-             AS c_sum,
-           CAST(7 * n AS BIGINT) AS d_sum
-         FROM p""",
-
-    // the refs replay closed-form: main at the head snapshot, b1
-    // parked at snapshot id%n, t1 pinning the first; the default
-    // spec carries id%3 bucket[16] fields; the probe bucket
-    // (doc_id+1)%8 touches one manifest entry iff the table has
-    // at least two
-    "q_iceberg_refs" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 + 2 AS n
-           FROM documents)
-         SELECT doc_id, 3 AS n_refs, 2 AS n_branches, 1 AS n_tags,
-           TRUE AS main_is_current,
-           CAST(1000 * doc_id + doc_id % n AS BIGINT)
-             AS b1_snapshot,
-           CAST(1000 * doc_id AS BIGINT) AS t1_snapshot,
-           CASE CAST(doc_id % 3 AS INT)
-             WHEN 0 THEN ''
-             WHEN 1 THEN 'bucket[16]'
-             ELSE 'bucket[16],bucket[16]' END AS spec_transforms,
-           CAST((doc_id + 1) % 8 AS INT) AS probe_bucket,
-           CASE WHEN doc_id % 4 >= 1 THEN 1 ELSE 0 END
-             AS files_at_probe
-         FROM p""",
-
-    // the planted MOR table replays closed-form: fg-a resolves to
-    // base 5 (base 1 stale, base 9 inflight-ignored) with logs
-    // v1+v2 = 2 data blocks (7+4 records) + 1 delete block; the
-    // stale log rooted at base 1 never attaches
-    "q_hudi_filegroups" ->
-      """SELECT * FROM (VALUES
-           ('fg-a', 'p0', CAST(5 AS BIGINT), 1, 2, 2, 1, 0,
-             CAST(11 AS BIGINT)),
-           ('fg-b', 'p0', CAST(3 AS BIGINT), 0, 1, 1, 0, 0,
-             CAST(5 AS BIGINT)),
-           ('fg-c', 'p1', CAST(5 AS BIGINT), 0, 0, 0, 0, 0,
-             CAST(0 AS BIGINT)))
-         AS t(file_group, partition, base_instant, n_stale_bases,
-           n_logs, n_data_blocks, n_delete_blocks,
-           n_corrupt_blocks, log_records)""",
-
-    // the planted timeline closed-form: completed commits
-    // v in {0,1,3,4,6,7,9} (v%3==2 inflight), p0 in all seven,
-    // p1 only in odd completed commits {1,3,7,9}; cleans at
-    // v%4==0; the latest completed ts is commit v=9
-    "q_hudi_timeline" ->
-      """SELECT 'p0' AS partition, 7 AS n_commits,
-           100::BIGINT AS writes, 30000::BIGINT AS bytes,
-           3 AS n_inflight, 3 AS n_cleans,
-           20240101000009::BIGINT AS latest_ts
-         UNION ALL
-         SELECT 'p1', 4, 64::BIGINT, 20004::BIGINT, 3, 3,
-           20240101000009::BIGINT""",
-
-    // incremental replay: snapshot k adds 10*doc_id+k records; the
-    // consumer at from-index f = doc_id % n reads snapshots
-    // f+1 .. n-1
-    "q_iceberg_incremental" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 + 2 AS n
-           FROM documents),
-         b AS (SELECT doc_id, n, doc_id % n AS f FROM p),
-         inc AS (SELECT b.doc_id,
-             SUM(10 * b.doc_id + t.k) AS s
-           FROM b, unnest(generate_series(0, 5)) AS t(k)
-           WHERE t.k > f AND t.k < n GROUP BY b.doc_id)
-         SELECT b.doc_id, n::INT AS n_snapshots,
-           f::INT AS from_idx,
-           (n - f - 1)::INT AS n_incremental,
-           CAST(COALESCE(s, 0) AS BIGINT) AS inc_added_records
-         FROM b LEFT JOIN inc USING (doc_id)""",
-
-    // merge-on-read replay: file e in 0..doc_id%4 holds positions
-    // 0..9; the delete file removes every pos with
-    // pos % 3 == (doc_id + e) % 3; the anti join keeps the rest
-    "q_iceberg_mor" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 AS emax
-           FROM documents),
-         live AS (SELECT doc_id, e.e, g.p FROM p,
-             unnest(generate_series(0, 3)) AS e(e),
-             unnest(generate_series(0, 9)) AS g(p)
-           WHERE e.e <= emax AND g.p % 3 <> (doc_id + e.e) % 3)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_live,
-           CAST(SUM(10 * doc_id + p) AS BIGINT) AS live_value_sum
-         FROM live GROUP BY doc_id""",
-
-    // equality-delete replay: every k in 0..9 with
-    // k % 3 == doc_id % 3 is deleted from every file of the table
-    "q_iceberg_eqdelete" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 AS emax
-           FROM documents),
-         live AS (SELECT doc_id, e.e, g.k FROM p,
-             unnest(generate_series(0, 3)) AS e(e),
-             unnest(generate_series(0, 9)) AS g(k)
-           WHERE e.e <= emax AND g.k % 3 <> doc_id % 3)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_live,
-           CAST(SUM(k) AS BIGINT) AS live_key_sum
-         FROM live GROUP BY doc_id""",
-
-    // expiry replay: snapshot k has ts = base + doc_id*1000 + 7k;
-    // the cutoff at k = doc_id % n expires exactly the k earlier
-    // snapshots, and the current one (k = n-1) never expires
-    "q_snapshot_expire" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 + 2 AS n
-           FROM documents)
-         SELECT doc_id, n::INT AS n_snapshots,
-           CAST(1700000000000 + doc_id * 1000 + (doc_id % n) * 7
-             AS BIGINT) AS cutoff_ms,
-           (doc_id % n)::INT AS n_expired,
-           (n - doc_id % n)::INT AS n_retained,
-           FALSE AS current_expirable
-         FROM p""",
-
-    // the stripe decode replays the planted data exactly: sorted
-    // ids make value[p] = p (sum 12497500 over 5 stripes), the
-    // dictionary string cycles s0..s9, and the nullable fixture's
-    // planted null cadence (tag %7, dbl %11) must weave back
-    // through the present streams
-    "q_orc_read" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5000 AS p,
-           doc_id % 400 AS q FROM documents)
-         SELECT doc_id, 5000 AS n_values, 5 AS n_stripes,
-           CAST(12497500 AS BIGINT) AS id_sum,
-           CAST(p AS BIGINT) AS id_probe,
-           's' || CAST(p % 10 AS VARCHAR) AS s_probe,
-           TRUE AS s_dict,
-           58 AS t_n_nulls,
-           CASE WHEN q % 7 = 0 THEN NULL
-             ELSE 't' || CAST(q % 5 AS VARCHAR) END AS t_probe,
-           CASE WHEN q % 11 = 0 THEN NULL
-             ELSE q * CAST(0.25 AS DOUBLE) END AS d_probe
-         FROM p""",
-
-    // the stats walk must replay what the reference ORC writer
-    // recorded for the deliberately-striped fixture (the writer
-    // rounds to its 1024-row batches: stripe k =
-    // [1024k, min(1024k+1023, 4999)]); the pruning counts are pure
-    // interval arithmetic over those known stripes
-    "q_orc_stats" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5000 AS probe,
-           doc_id % 4000 AS lo FROM documents)
-         SELECT doc_id,
-           5 AS n_stripes_stats,
-           0::BIGINT AS file_min, 4999::BIGINT AS file_max,
-           12497500::BIGINT AS file_sum, 5000::BIGINT AS file_nvals,
-           FALSE AS has_null,
-           's0' AS str_min, 's9' AS str_max,
-           10000::BIGINT AS str_len_sum,
-           CAST(probe AS BIGINT) AS probe,
-           1 AS n_hit,
-           CAST(LEAST(4, (lo + 1500) // 1024) - lo // 1024 + 1
-             AS INT) AS n_range_hit
-         FROM p""",
-
-    // the decode replays the planted data exactly: sorted ids make
-    // value[k] = k, and the dictionary column is i % 7 over 300
-    // rows (sum 897, 7 dictionary entries)
-    "q_parquet_read" ->
-      """SELECT doc_id, 5000 AS n_values, 5 AS n_data_pages,
-           0 AS n_dict_entries, 12497500::BIGINT AS values_sum,
-           0::BIGINT AS v_min, 4999::BIGINT AS v_max,
-           TRUE AS sum_matches_stats,
-           CAST(doc_id % 5000 AS BIGINT) AS probe_value,
-           7 AS g_n_dict, 897::BIGINT AS g_sum,
-           CAST((doc_id % 300) % 7 AS BIGINT) AS g_probe_value,
-           'v' || CAST(doc_id % 5000 AS VARCHAR) AS s_probe_value,
-           58 AS t_n_nulls, 5 AS t_n_dict,
-           CASE WHEN (doc_id % 400) % 7 = 0 THEN NULL
-             ELSE 't' || CAST((doc_id % 400) % 5 AS VARCHAR)
-             END AS t_probe_value
-         FROM documents""",
-
-    // the end-to-end Iceberg read replays closed-form: file k
-    // holds ids 1000k+j (j<200, val=3*id); pd0 (seq 3) deletes
-    // j%10==0 from k<=4 but only k<=3 pass the sequence gate
-    // (f4 has data seq 4); pd1 (seq 6) deletes j%9==0 from
-    // k in {0,4,5}
-    "q_iceberg_scan" ->
-      """WITH r AS (SELECT k.k, j.j FROM
-             unnest(generate_series(0, 5)) AS k(k),
-             unnest(generate_series(0, 199)) AS j(j)),
-         live AS (SELECT k, j FROM r WHERE NOT (
-           (k <= 3 AND j % 10 = 0) OR
-           (k IN (0, 4, 5) AND j % 9 = 0)))
-         SELECT CAST(k AS INT) AS file_k,
-           CAST(COUNT(*) AS BIGINT) AS n_live,
-           CAST(SUM(3 * (1000 * k + j)) AS BIGINT) AS sum_val
-         FROM live GROUP BY k""",
-
-    // the end-to-end Delta read replays closed-form: live files
-    // k in {0,2,3} hold ids 1000k+j (j<250, val=2*id+1); part-0's
-    // DV deletes j%10==0, part-2's deletes j%7==0, part-1 was
-    // removed at v2 (before the checkpoint)
-    "q_delta_scan" ->
-      """WITH r AS (SELECT k.k, j.j FROM
-             (VALUES (0), (2), (3)) AS k(k),
-             unnest(generate_series(0, 249)) AS j(j)),
-         live AS (SELECT k, j FROM r WHERE NOT (
-           (k = 0 AND j % 10 = 0) OR (k = 2 AND j % 7 = 0)))
-         SELECT CAST(k AS INT) AS file_k,
-           CAST(COUNT(*) AS BIGINT) AS n_live,
-           CAST(SUM(2 * (1000 * k + j) + 1) AS BIGINT) AS sum_val
-         FROM live GROUP BY k""",
-
-    // the column-mapped read replays closed-form: 3 files of 150
-    // rows, id = 1000k+j, val = 5*id+2 — and the mapped census
-    // must equal the unmapped twin's exactly
-    "q_delta_colmap" ->
-      """WITH r AS (SELECT k.k, j.j FROM
-             unnest(generate_series(0, 2)) AS k(k),
-             unnest(generate_series(0, 149)) AS j(j))
-         SELECT CAST(k AS INT) AS file_k,
-           CAST(COUNT(*) AS BIGINT) AS n_live,
-           CAST(SUM(5 * (1000 * k + j) + 2) AS BIGINT) AS sum_val,
-           CAST(COUNT(*) AS BIGINT) AS twin_n_live,
-           CAST(SUM(5 * (1000 * k + j) + 2) AS BIGINT)
-             AS twin_sum_val,
-           TRUE AS mapped_matches_twin
-         FROM r GROUP BY k""",
-
-    // the typed matrix replays closed-form: every probe value is a
-    // pure function of p = doc_id % 3000 (the planted 3000-row
-    // table), identical through all three wire paths; decimals
-    // render at their declared scale, dates as epoch days
-    // (2020-01-01 = 18262), timestamps as epoch micros
-    "q_parquet_typed" ->
-      """WITH q AS (SELECT doc_id, doc_id % 3000 AS p
-           FROM documents)
-         SELECT doc_id,
-           CAST(p % 1000 AS INT) AS a_i32,
-           CASE WHEN p % 7 = 0 THEN NULL
-             ELSE CAST(p % 1000 - 500 AS INT) END AS a_i32n,
-           p * CAST(0.25 AS DOUBLE) AS a_d,
-           (p % 64) * CAST(0.5 AS DOUBLE) AS a_f,
-           p % 3 = 0 AS a_bl,
-           CASE WHEN p % 13 = 0 THEN NULL
-             ELSE 't' || CAST(p % 17 AS VARCHAR) END AS a_sn,
-           CAST(CAST(p AS DECIMAL(9,2)) AS VARCHAR) AS a_dec9,
-           CAST(18262 + p % 700 AS INT) AS a_dt_days,
-           CAST(1600000000000000 + p * 1000 AS BIGINT)
-             AS a_ts_micros,
-           CAST(p % 1000 AS INT) AS b_i32,
-           'x' || CAST(p AS VARCHAR) AS b_s,
-           CAST(CAST(p AS DECIMAL(25,4)) AS VARCHAR) AS b_dec25,
-           CASE WHEN p % 5 = 0 THEN NULL
-             ELSE p % 2 = 1 END AS b_bln,
-           CASE WHEN p % 11 = 0 THEN NULL
-             ELSE (p % 32) * CAST(0.25 AS DOUBLE) END AS b_fn,
-           CAST(p % 1000 AS INT) AS c_i32,
-           p * CAST(0.25 AS DOUBLE) AS c_d,
-           'x' || CAST(p AS VARCHAR) AS c_s,
-           CAST(CAST(p AS DECIMAL(18,3)) AS VARCHAR) AS c_dec18,
-           429 AS n_nulls_i32n,
-           CAST(1498500 AS BIGINT) AS sum_i32,
-           TRUE AS all3_agree
-         FROM q""",
-
-    // the page-index fixture's constants are the committed
-    // parquet-mr writer output (5 exact 1000-row pages, ascending
-    // bounds); the prune counts are interval arithmetic over the
-    // known pages
-    "q_parquet_pages" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5000 AS probe,
-           doc_id % 4000 AS lo FROM documents)
-         SELECT doc_id, 5 AS n_pages, 1 AS boundary_order,
-           0 AS n_null_pages,
-           '0,1000,2000,3000,4000' AS page_mins,
-           '999,1999,2999,3999,4999' AS page_maxs,
-           '0,1000,2000,3000,4000' AS first_rows,
-           'v0' AS s_first_min, 'v4999' AS s_last_max,
-           CAST(probe AS BIGINT) AS probe,
-           1 AS pg_n_hit,
-           CAST(LEAST(4, (lo + 1500) // 1000) - lo // 1000 + 1
-             AS INT) AS pg_range_hit
-         FROM p""",
-
-    // the bloom fixture's constants (5 groups at stride 1000, k=7,
-    // 1200-byte bitsets) are the committed writer output; member
-    // probes must hit (no false negatives) and the absent windows
-    // were exhaustively verified zero-FP per group, so the bloom
-    // verdicts are constants; the row-index prunes are interval
-    // arithmetic over the exact 1000-row groups
-    "q_orc_bloom" ->
-      """WITH p AS (SELECT doc_id, doc_id % 5000 AS probe,
-           doc_id % 4000 AS lo FROM documents)
-         SELECT doc_id,
-           5 AS n_row_groups, 7 AS n_hash, 1200 AS bitset_bytes,
-           '0,1000,2000,3000,4000' AS ri_mins,
-           '999,1999,2999,3999,4999' AS ri_maxs,
-           TRUE AS member_hit, TRUE AS s_member_hit,
-           FALSE AS absent_hit, FALSE AS s_absent_hit,
-           CAST(probe AS BIGINT) AS probe,
-           1 AS ri_n_hit,
-           CAST(LEAST(4, (lo + 1500) // 1000) - lo // 1000 + 1
-             AS INT) AS ri_range_hit
-         FROM p""",
-
-    // the census must replay every planted pickle shape: protocol,
-    // opcode count, top kind, container length, globals, memo,
-    // frames — all closed-form
-    "q_pickle_census" ->
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 5 AS INT) AS k,
-           doc_id % 6 + 2 AS n, doc_id % 4 + 1 AS m,
-           doc_id % 3 + 1 AS n2 FROM documents)
-         SELECT doc_id,
-           CASE k WHEN 1 THEN 4 WHEN 4 THEN 0 ELSE 2 END::INT
-             AS protocol,
-           CASE k WHEN 0 THEN 5 + 2 * n WHEN 1 THEN 7 + m
-             WHEN 2 THEN 6 WHEN 3 THEN 5
-             ELSE 3 + 2 * n2 END::INT AS n_ops,
-           CASE k WHEN 1 THEN 'list' WHEN 2 THEN 'tuple'
-             WHEN 3 THEN 'reduce' ELSE 'dict' END AS top_kind,
-           CASE k WHEN 0 THEN n WHEN 1 THEN m WHEN 2 THEN 3
-             WHEN 3 THEN NULL ELSE n2 END::INT AS n_items,
-           CASE k WHEN 3 THEN 'collections.OrderedDict'
-             ELSE '' END AS globals_csv,
-           CASE k WHEN 1 THEN 1 ELSE 0 END::INT AS n_memo,
-           CASE k WHEN 1 THEN 1 ELSE 0 END::INT AS n_frames
-         FROM p""",
-
-    // every artifact kind must route to its extractor and replay
-    // its planted headline fact and measure
-    "q_artifact_omni" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 13 AS INT) AS kind,
-           CAST(doc_id % 3 AS INT) AS k3,
-           CAST(doc_id % 5 AS INT) AS k5,
-           CAST(doc_id % 2 AS INT) AS k2 FROM documents)
-         SELECT doc_id,
-           CASE kind
-             WHEN 0 THEN 'application/x-elf'
-             WHEN 1 THEN 'application/vnd.microsoft' ||
-               '.portable-executable'
-             WHEN 2 THEN 'application/java-vm'
-             WHEN 3 THEN 'application/wasm'
-             WHEN 4 THEN CASE k3 WHEN 0 THEN 'font/ttf'
-               WHEN 1 THEN 'font/woff' ELSE 'font/woff2' END
-             WHEN 5 THEN 'application/vnd.apache.parquet'
-             WHEN 6 THEN 'application/x-bittorrent'
-             WHEN 7 THEN 'application/x-git-pack'
-             WHEN 8 THEN 'application/x-mach-binary'
-             WHEN 9 THEN 'application/java-archive'
-             WHEN 10 THEN 'application/x-git-loose-object'
-             WHEN 11 THEN 'application/pkix-cert'
-             ELSE 'application/vnd.tcpdump.pcap'
-           END AS label,
-           CASE kind
-             WHEN 0 THEN 'x86_64'
-             WHEN 1 THEN 'x86_64'
-             WHEN 2 THEN 'corpus.Doc' || doc_id
-             WHEN 3 THEN 'meta' || doc_id
-             WHEN 4 THEN 'Family ' || doc_id
-             WHEN 5 THEN CASE k5 WHEN 0 THEN 'uncompressed'
-               WHEN 1 THEN 'snappy' WHEN 2 THEN 'gzip'
-               WHEN 3 THEN 'zstd' ELSE 'lz4' END
-             WHEN 6 THEN 'corpus-' || doc_id
-             WHEN 7 THEN 'blob'
-             WHEN 8 THEN CASE k2 WHEN 0 THEN 'thin:x86_64'
-               ELSE 'fat:x86_64' END
-             WHEN 9 THEN 'com.corpus.Main'
-             WHEN 10 THEN 'blob'
-             WHEN 11 THEN 'doc' || CAST(doc_id % 50 AS VARCHAR)
-               || '.example'
-             ELSE 'ethernet'
-           END AS fact,
-           CAST(CASE kind
-             WHEN 0 THEN k3 + 2
-             WHEN 1 THEN k3 + 1
-             WHEN 2 THEN k3 + 1
-             WHEN 3 THEN k3 + 1
-             WHEN 4 THEN 100 + doc_id % 900
-             WHEN 5 THEN CASE k5 WHEN 0 THEN 100 WHEN 1 THEN 250
-               WHEN 2 THEN 50 WHEN 3 THEN 20000 ELSE 300 END
-             WHEN 6 THEN 10000 + doc_id % 5000
-             WHEN 7 THEN k3 + 1
-             WHEN 8 THEN k3 + 3 + CASE k2 WHEN 0 THEN 0
-               ELSE 2 END
-             WHEN 9 THEN 2 * (k2 + 1)
-             WHEN 10 THEN 10 + strlen(CAST(doc_id AS VARCHAR))
-             WHEN 11 THEN 1000 + doc_id % 9000
-             ELSE 1
-           END AS BIGINT) AS measure
-         FROM p""",
-
-    // the font triage must replay the planted facts through every
-    // container
-    "q_font_meta" ->
-      """SELECT doc_id,
-           CASE doc_id % 3 WHEN 0 THEN 'sfnt' WHEN 1 THEN 'woff'
-             ELSE 'woff2' END AS container,
-           'Family ' || doc_id AS family,
-           CASE doc_id % 2 WHEN 0 THEN 'Regular' ELSE 'Bold' END
-             AS style,
-           3 AS n_tables,
-           CAST(100 + doc_id % 900 AS INT) AS n_glyphs,
-           2048 AS units_per_em
-         FROM documents""",
-
-    // the pe triage must replay the planted header facts
-    "q_pe_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 4 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id,
-           CASE doc_id % 2 WHEN 0 THEN 'x86_64' ELSE 'i386' END
-             AS machine,
-           doc_id % 2 = 0 AS is64,
-           doc_id % 3 = 0 AS is_dll,
-           CAST(n AS INT) AS n_sections,
-           (SELECT string_agg('.s' || t.j, ',' ORDER BY t.j)
-            FROM unnest(generate_series(0, n - 1)) AS t(j))
-             AS section_names
-         FROM p""",
-
-    // the class triage must replay the planted pool/member shape
-    "q_class_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 4 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id, 52 AS major,
-           'corpus.Doc' || doc_id AS class_name,
-           'java.lang.Object' AS super_name,
-           CAST(doc_id % 3 AS INT) AS n_fields,
-           CAST(n AS INT) AS n_methods,
-           (SELECT string_agg('m' || t.j, ',' ORDER BY t.j)
-            FROM unnest(generate_series(0, n - 1)) AS t(j))
-             AS method_names
-         FROM p""",
-
-    // the wasm census must replay the planted module shape
-    "q_wasm_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 4 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id, 1 AS version, 5 AS n_sections,
-           '1,3,7,10,0' AS section_ids,
-           CAST(n AS INT) AS n_exports,
-           (SELECT string_agg('fn' || t.j, ',' ORDER BY t.j)
-            FROM unnest(generate_series(0, n - 1)) AS t(j))
-             AS export_names,
-           'meta' || doc_id AS custom_names
-         FROM p""",
-
-    // the elf triage must replay the planted header facts
-    "q_elf_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 4 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id, doc_id % 2 = 0 AS is64,
-           'REL' AS e_type,
-           CASE doc_id % 3 WHEN 0 THEN 'x86_64'
-             WHEN 1 THEN 'aarch64' ELSE 'riscv' END AS machine,
-           CAST(n + 1 AS INT) AS n_sections,
-           (SELECT string_agg('.sec' || t.j, ',' ORDER BY t.j)
-            FROM unnest(generate_series(0, n - 1)) AS t(j))
-             || ',.shstrtab' AS section_names
-         FROM p""",
-
-    // the pack walk must replay the planted blobs byte-faithfully
-    // with the delta tier engaged exactly when the shared prefix
-    // clears the writer's 16-byte threshold
-    "q_git_pack" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id, 'blob' AS obj_type,
-           CAST(strlen(txt) + 10 AS BIGINT) AS u_size,
-           0 AS delta_depth,
-           'base:' || txt || ' tail' AS blob_text
-         FROM p
-         UNION ALL
-         SELECT doc_id, 'blob',
-           CAST(strlen(txt) + 15 AS BIGINT),
-           CASE WHEN doc_id % 2 = 1 AND strlen(txt) >= 10
-             THEN 1 ELSE 0 END,
-           'base:' || txt || ' variant ' || t.j
-         FROM p, LATERAL unnest(generate_series(1, n - 1))
-           AS t(j)""",
-
-    // the footer walk must replay the reference writer's metadata
-    "q_parquet_meta" ->
-      """SELECT doc_id, 1 AS pq_version,
-           CASE doc_id % 5 WHEN 0 THEN 100 WHEN 1 THEN 250
-             WHEN 2 THEN 50 WHEN 3 THEN 20000 ELSE 300 END
-             ::BIGINT AS num_rows,
-           CASE doc_id % 5 WHEN 3 THEN 151 ELSE 1 END::INT
-             AS n_row_groups,
-           CASE doc_id % 5 WHEN 0 THEN 2 WHEN 1 THEN 3
-             WHEN 2 THEN 4 WHEN 3 THEN 2 ELSE 2 END::INT
-             AS n_leaf_columns,
-           CASE doc_id % 5 WHEN 0 THEN 'id,name'
-             WHEN 1 THEN 'id,v,s' WHEN 2 THEN 'id,_1,_2,element'
-             WHEN 3 THEN 'id,txt' ELSE 'id,grp' END AS leaf_names,
-           CASE doc_id % 5 WHEN 0 THEN 'uncompressed'
-             WHEN 1 THEN 'snappy' WHEN 2 THEN 'gzip'
-             WHEN 3 THEN 'zstd' ELSE 'lz4' END AS codecs
-         FROM documents""",
-
-    // the census must replay every planted field arithmetically
-    // (vlen = protobuf varint byte length)
-    "q_proto_census" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents),
-         f1 AS (SELECT doc_id, 1 AS field_no, 0 AS wire_type,
-           CAST(1 AS BIGINT) AS n_occ,
-           CAST(CASE WHEN doc_id < 128 THEN 1
-             WHEN doc_id < 16384 THEN 2
-             WHEN doc_id < 2097152 THEN 3
-             WHEN doc_id < 268435456 THEN 4 ELSE 5 END AS BIGINT)
-             AS n_bytes,
-           CAST(doc_id AS BIGINT) AS varint_sum, FALSE AS nested
-           FROM p),
-         f2 AS (SELECT doc_id, 2, 2, CAST(1 AS BIGINT),
-           CAST(1 + strlen(txt) AS BIGINT), CAST(0 AS BIGINT),
-           FALSE FROM p),
-         f3 AS (SELECT doc_id, 3, 0, CAST(n AS BIGINT),
-           (SELECT CAST(SUM(CASE WHEN doc_id + t.j < 128 THEN 1
-              WHEN doc_id + t.j < 16384 THEN 2
-              WHEN doc_id + t.j < 2097152 THEN 3
-              WHEN doc_id + t.j < 268435456 THEN 4 ELSE 5 END)
-              AS BIGINT)
-            FROM unnest(generate_series(0, n - 1)) AS t(j)),
-           CAST(n * doc_id + n * (n - 1) / 2 AS BIGINT), FALSE
-           FROM p),
-         f4 AS (SELECT doc_id, 4, 2, CAST(1 AS BIGINT),
-           CAST(14 + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT),
-           CAST(0 AS BIGINT), TRUE FROM p),
-         f5 AS (SELECT doc_id, 5, 1, CAST(1 AS BIGINT),
-           CAST(8 AS BIGINT), CAST(0 AS BIGINT), FALSE FROM p)
-         SELECT doc_id, CAST(field_no AS INT) AS field_no,
-           CAST(wire_type AS INT) AS wire_type, n_occ, n_bytes,
-           varint_sum, nested
-         FROM (SELECT * FROM f1 UNION ALL SELECT * FROM f2
-           UNION ALL SELECT * FROM f3 UNION ALL SELECT * FROM f4
-           UNION ALL SELECT * FROM f5)
-           AS u(doc_id, field_no, wire_type, n_occ, n_bytes,
-             varint_sum, nested)""",
-
-    // the torrent parse must replay the planted metainfo fields
-    "q_torrent_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 1
-             ELSE CAST(doc_id % 4 AS INT) + 1 END AS nf,
-           10000 + doc_id % 5000 AS base
-         FROM documents),
-         q AS (SELECT doc_id, nf,
-           CASE WHEN doc_id % 2 = 0 THEN base
-             ELSE nf * base + 77 * (nf * (nf - 1) / 2) END AS total
-         FROM p)
-         SELECT doc_id, 'corpus-' || doc_id AS t_name,
-           CAST(16384 AS BIGINT) AS piece_length,
-           CAST(CEIL(total / 16384.0) AS INT) AS n_pieces,
-           CAST(nf AS INT) AS n_files,
-           CAST(total AS BIGINT) AS total_length
-         FROM q""",
-
-    // identical seeds must produce identical infohashes and
-    // different seeds distinct ones -> clusters are exactly the
-    // doc_id % 97 classes
-    "q_torrent_dedup" ->
-      """SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_dups
-         FROM documents GROUP BY doc_id % 97""",
-
-    // the ebml walk must recover the planted container metadata in
-    // all four layout variants
-    "q_mkv_meta" ->
-      """SELECT doc_id,
-           CASE doc_id % 2 WHEN 0 THEN 'webm' ELSE 'matroska' END
-             AS doc_type,
-           CAST(1000 + doc_id % 9000 AS DOUBLE) AS duration_ms,
-           2 AS n_tracks,
-           CASE doc_id % 2 WHEN 0 THEN 'V_VP9'
-             ELSE 'V_MPEG4/ISO/AVC' END AS video_codec,
-           CAST(160 + (doc_id % 8) * 16 AS INT) AS width,
-           CAST(120 + (doc_id % 6) * 16 AS INT) AS height,
-           CASE doc_id % 2 WHEN 0 THEN 'A_OPUS' ELSE 'A_AAC' END
-             AS audio_codec,
-           CAST(48000 AS DOUBLE) AS sample_rate,
-           2 AS channels
-         FROM documents""",
-
-    // the iso walk must list the planted paths (odd files nested
-    // in the subdirectory) with Rock Ridge names intact
-    "q_iso_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id,
-           CASE WHEN t.j % 2 = 1 THEN 'sub/f' || t.j || '.txt'
-             ELSE 'f' || t.j || '.txt' END AS entry_path,
-           CAST(strlen('i' || t.j || ':' || txt) AS BIGINT)
-             AS u_size,
-           TRUE AS ok
-         FROM p, LATERAL unnest(generate_series(0, n - 1))
-           AS t(j)""",
-
-    // the rar5 walk must list the planted stored members with
-    // extraction CRC-verified
-    "q_rar_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id, 'r' || t.j || '.txt' AS entry_name,
-           0 AS method,
-           CAST(strlen('v' || t.j || ':' || txt) AS BIGINT)
-             AS u_size,
-           TRUE AS ok
-         FROM p, LATERAL unnest(generate_series(0, n - 1))
-           AS t(j)""",
-
-    // the cpio walk must list the planted members with the dialect
-    // each doc cycled to
-    "q_cpio_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n,
-           CASE doc_id % 3 WHEN 0 THEN 'odc' WHEN 1 THEN 'newc'
-             ELSE 'crc' END AS fmt
-         FROM documents)
-         SELECT doc_id, 'p' || t.j || '.dat' AS entry_name,
-           fmt AS format,
-           CAST(strlen('c' || t.j || ':' || txt) AS BIGINT)
-             AS u_size,
-           TRUE AS ok
-         FROM p, LATERAL unnest(generate_series(0, n - 1))
-           AS t(j)""",
-
-    // the deb walk must list both nested tars' planted members
-    // through the right codec
-    "q_deb_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n,
-           CASE doc_id % 3 WHEN 0 THEN 'gz' WHEN 1 THEN 'xz'
-             ELSE 'zst' END AS ext,
-           CASE doc_id % 3 WHEN 0 THEN 'gzip' WHEN 1 THEN 'xz'
-             ELSE 'zstd' END AS cdc
-         FROM documents)
-         SELECT doc_id, 'control.tar.' || ext AS member,
-           cdc AS codec, './control' AS entry_name,
-           CAST(strlen('Package: p' || doc_id) + 1 AS BIGINT)
-             AS u_size
-         FROM p
-         UNION ALL
-         SELECT doc_id, 'data.tar.' || ext, cdc,
-           './usr/share/d' || t.j || '.txt',
-           CAST(strlen('f' || t.j || ':' || txt) AS BIGINT)
-         FROM p, LATERAL unnest(generate_series(0, n - 1))
-           AS t(j)""",
-
-    // the cabinet walk must read back the planted member set with
-    // the per-member compression choice and real extraction ok
-    "q_cab_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id,
-           'c' || t.j || '.dat' AS entry_name,
-           CASE (doc_id + t.j) % 2 WHEN 0 THEN 'none'
-             ELSE 'mszip' END AS compression,
-           CAST(strlen('k' || t.j || ':' || txt) AS BIGINT)
-             AS u_size,
-           TRUE AS ok
-         FROM p, LATERAL unnest(generate_series(0, n - 1)) AS t(j)""",
-
-    // inflate + trailer verification must reproduce the text exactly
-    "q_gzip_roundtrip" ->
-      """SELECT doc_id, COALESCE(text, '') AS gz_text FROM documents""",
-
-    // both BMP row orders decode to the same uniform cells -> the
-    // PNG checkerboard constants verbatim
-    "q_bmp_phash" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN 6172840429334713770
-              ELSE -6172840429334713771 END AS ahash
-         FROM documents""",
-
-    // the frame walk must read back the planted header fields and
-    // count every frame; duration is the exact integer form
-    "q_mp3_meta" ->
-      """WITH p AS (SELECT doc_id,
-           CAST(doc_id % 20 + 5 AS BIGINT) AS fr,
-           doc_id % 14 + 1 AS bi, doc_id % 3 AS si,
-           doc_id % 2 AS mn FROM documents)
-         SELECT doc_id, fr AS n_frames,
-           CAST(CASE si WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS INT) AS sample_rate,
-           CAST(CASE bi WHEN 1 THEN 32 WHEN 2 THEN 40 WHEN 3 THEN 48
-                WHEN 4 THEN 56 WHEN 5 THEN 64 WHEN 6 THEN 80
-                WHEN 7 THEN 96 WHEN 8 THEN 112 WHEN 9 THEN 128
-                WHEN 10 THEN 160 WHEN 11 THEN 192 WHEN 12 THEN 224
-                WHEN 13 THEN 256 ELSE 320 END AS INT) AS kbps,
-           (mn = 1) AS mono,
-           CAST(fr * 1152 * 1000000 // (CASE si WHEN 0 THEN 44100
-             WHEN 1 THEN 48000 ELSE 32000 END) AS BIGINT)
-             AS duration_us,
-           'T-' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 6)
-             AS title,
-           'A-' || substring(md5(CAST(doc_id AS VARCHAR)), 7, 6)
-             AS artist,
-           'L-' || substring(md5(CAST(doc_id AS VARCHAR)), 13, 6)
-             AS album
-         FROM p""",
-
-    // every planted ident/tag/granule field replayed: vorbis docs
-    // (even) span the comment packet over two pages → 5 pages total,
-    // opus docs (odd) stay at 4; durations are the exact granule
-    // arithmetic of each codec
-    "q_ogg_meta" ->
-      """WITH p AS (SELECT doc_id, doc_id % 2 AS op,
-           8000 + (doc_id % 100) * 441 AS rt,
-           CAST(doc_id % 8 + 1 AS INT) AS ch,
-           312 + doc_id % 100 AS ps,
-           (doc_id % 50 + 2) * 960 + 312 + doc_id % 100 AS gr
-           FROM documents)
-         SELECT doc_id,
-           CASE WHEN op = 1 THEN 'opus' ELSE 'vorbis' END AS codec,
-           CAST(rt AS INT) AS sample_rate,
-           ch AS channels,
-           CAST(CASE WHEN op = 1 THEN ps ELSE 0 END AS INT)
-             AS pre_skip,
-           CAST(CASE WHEN op = 1 THEN (gr - ps) * 1000000 // 48000
-                ELSE gr * 1000000 // rt END AS BIGINT) AS duration_us,
-           CAST(CASE WHEN op = 1 THEN 4 ELSE 5 END AS INT)
-             AS n_pages,
-           'T-' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 6)
-             AS title,
-           'A-' || substring(md5(CAST(doc_id AS VARCHAR)), 7, 6)
-             AS artist
-         FROM p""",
-
-    // the STREAMINFO bit layout must read back the planted fields
-    "q_flac_meta" ->
-      """WITH p AS (SELECT doc_id,
-           8000 + (doc_id % 100) * 100 AS rt,
-           doc_id % 8 + 1 AS ch, doc_id % 9 + 8 AS bps,
-           (doc_id % 50 + 1) * 977 AS smp FROM documents)
-         SELECT doc_id, CAST(rt AS INT) AS sample_rate,
-           CAST(ch AS INT) AS channels,
-           CAST(bps AS INT) AS bits_per_sample,
-           CAST(smp AS BIGINT) AS total_samples,
-           CAST(smp * 1000000 // rt AS BIGINT) AS duration_us
-         FROM p""",
-
-    // report replay: every field recomputed from the same documents
-    // table with the same exact-integer arithmetic
-    "q_corpus_report" -> {
-      s"""WITH q AS (SELECT doc_id, keep
-           FROM ($qualityFilterOracle) z),
-         agg AS (SELECT
-           COUNT(*)::BIGINT AS n_docs,
-           SUM(CASE WHEN d.text IS NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_null_text,
-           COALESCE(SUM(CASE WHEN d.text IS NOT NULL
-             THEN len(${tokensSql("d.text")}) END), 0)::BIGINT
-             AS total_tokens,
-           COUNT(DISTINCT d.lang)::BIGINT AS n_langs,
-           COUNT(DISTINCT md5(regexp_replace(lower(d.text),
-             '[^a-z0-9]', '', 'g')))::BIGINT AS fp,
-           SUM(CASE WHEN q.keep THEN 1 ELSE 0 END)::BIGINT AS nkeep
-           FROM documents d JOIN q ON d.doc_id = q.doc_id)
-         SELECT n_docs, n_null_text, total_tokens, n_langs,
-           n_docs - n_null_text - fp AS dup_docs,
-           (n_docs - n_null_text - fp) * 1000
-             // GREATEST(n_docs - n_null_text, 1) AS dup_frac_milli,
-           (n_docs - nkeep) * 1000 // GREATEST(n_docs, 1)
-             AS quality_fail_milli
-         FROM agg"""
-    },
-
-    // the unwrap must be lossless: the same quality filter +
-    // fingerprint grouping over the documents table directly — any
-    // byte damage through the WARC/gzip path shifts a fingerprint
-    // and breaks the hash
-    "q_crawl_curate" ->
-      s"""WITH k AS (SELECT doc_id FROM ($qualityFilterOracle)
-           WHERE keep),
-         d AS (SELECT doc_id, COALESCE(text, '') AS text
-           FROM documents WHERE doc_id IN (SELECT doc_id FROM k))
-         SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_dups
-         FROM d
-         GROUP BY md5(regexp_replace(lower(text), '[^a-z0-9]', '',
-           'g'))""",
-
-    // the full PDF stack (xref/ObjStm layouts, five content
-    // encodings) must hand back the planted text EXACTLY — the
-    // oracle is the documents table itself
-    "q_pdf_text" ->
-      """SELECT doc_id, COALESCE(text, '') AS pdf_text,
-           CAST(1 AS INT) AS n_pages
-         FROM documents""",
-
-    // pdf-through-warc crawl ingest must be lossless end to end:
-    // same quality filter + fingerprint grouping as q_crawl_curate,
-    // over documents.text directly
-    "q_crawl_pdf" ->
-      s"""WITH k AS (SELECT doc_id FROM ($qualityFilterOracle)
-           WHERE keep),
-         d AS (SELECT doc_id, COALESCE(text, '') AS text
-           FROM documents WHERE doc_id IN (SELECT doc_id FROM k))
-         SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_dups
-         FROM d
-         GROUP BY md5(regexp_replace(lower(text), '[^a-z0-9]', '',
-           'g'))""",
-
-    // the omni compose replayed closed-form: per-format expected
-    // text (html whitespace-normalized, epub's c2 chapter suffix,
-    // markdown's fixed wrapper, pdf/docx/rtf identity), then the
-    // SAME quality filter + fingerprint grouping as q_crawl_curate
-    "q_crawl_omni" ->
-      s"""WITH src AS (SELECT doc_id,
-           CASE CAST(doc_id % 14 AS INT)
-             WHEN 0 THEN trim(regexp_replace(regexp_replace(
-               COALESCE(text, ''), '[\\x00-\\x1F\\x7F]', ' ', 'g'),
-               '\\s+', ' ', 'g'))
-             WHEN 4 THEN COALESCE(text, '') || chr(10) || 'c2 '
-               || doc_id
-             WHEN 5 THEN 'Doc ' || CAST(doc_id % 50 AS VARCHAR)
-               || chr(10) || chr(10) || COALESCE(text, '')
-               || chr(10) || chr(10) || chr(10)
-               || 'val x = 6 * 7 // fixed' || chr(10) || chr(10)
-               || 'html tag stripped' || chr(10)
-             ELSE COALESCE(text, '')
-           END AS text
-           FROM documents),
-         k AS (SELECT doc_id
-           FROM (${qualityFilterOracleFrom("src")}) WHERE keep),
-         d AS (SELECT doc_id, text FROM src
-           WHERE doc_id IN (SELECT doc_id FROM k))
-         SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_dups
-         FROM d
-         GROUP BY md5(regexp_replace(lower(text), '[^a-z0-9]', '',
-           'g'))""",
-
-    // every planted frame field replayed arithmetically: the
-    // skippable row (odd docs), the text frame's layout-dependent
-    // dict-id/checksum fields, and the RLE frame's block counts
-    "q_zstd_meta" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           doc_id % 4 AS sel, doc_id % 2 AS sk,
-           doc_id % 60 + 8 AS rn FROM documents),
-         skipf AS (SELECT doc_id, 0 AS frame_idx, TRUE AS skippable,
-           CAST(8 AS BIGINT) AS content_size,
-           CAST(0 AS BIGINT) AS dict_id, 0 AS n_blocks, 0 AS n_raw,
-           0 AS n_rle, FALSE AS has_checksum
-           FROM p WHERE sk = 1),
-         textf AS (SELECT doc_id, sk AS frame_idx,
-           FALSE AS skippable,
-           CAST(strlen(txt) AS BIGINT) AS content_size,
-           CAST(CASE WHEN sel = 0 THEN 0 ELSE doc_id % 200 + 1 END
-             AS BIGINT) AS dict_id,
-           CAST(GREATEST(1, (strlen(txt) + 95) // 96) AS INT)
-             AS n_blocks,
-           CAST(GREATEST(1, (strlen(txt) + 95) // 96) AS INT)
-             AS n_raw,
-           0 AS n_rle,
-           (sel % 2 = 1) AS has_checksum
-           FROM p),
-         rlef AS (SELECT doc_id, sk + 1 AS frame_idx,
-           FALSE AS skippable, CAST(rn AS BIGINT) AS content_size,
-           CAST(0 AS BIGINT) AS dict_id, 1 AS n_blocks, 0 AS n_raw,
-           1 AS n_rle, FALSE AS has_checksum
-           FROM p)
-         SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx,
-           skippable, content_size, dict_id,
-           CAST(n_blocks AS INT) AS n_blocks,
-           CAST(n_raw AS INT) AS n_raw, CAST(n_rle AS INT) AS n_rle,
-           has_checksum
-         FROM (SELECT * FROM skipf UNION ALL
-               SELECT * FROM textf UNION ALL
-               SELECT * FROM rlef)""",
-
-    // xz container round-trip is lossless
-    "q_xz_roundtrip" ->
-      """SELECT doc_id, COALESCE(text, '') || ' xz ' ||
-           substr(COALESCE(text, ''), 1, 32) AS xz_text
-         FROM documents""",
-
-    // the LZ4 frame round trip must be lossless
-    "q_lz4_roundtrip" ->
-      """SELECT doc_id, COALESCE(text, '') || ' lz4 ' ||
-           substr(COALESCE(text, ''), 1, 40) AS lz4_text
-         FROM documents""",
-
-    // the .Z LZW round trip must be lossless
-    "q_z_roundtrip" ->
-      """SELECT doc_id, COALESCE(text, '') || ' Z ' ||
-           substr(COALESCE(text, ''), 1, 36) AS z_text
-         FROM documents""",
-
-    // full bzip2 codec must be lossless: padded text (the z-run
-    // exercises RLE1 escapes) through BWT+MTF+RLE+Huffman and back
-    "q_bzip2_roundtrip" ->
-      """SELECT doc_id, COALESCE(text, '') || ' ' ||
-           repeat('z', CAST(doc_id % 60 + 8 AS INT)) ||
-           substr(COALESCE(text, ''), 1, 48) AS bzip2_text
-         FROM documents""",
-
-    // full brotli decode must be lossless: the padded text through
-    // LZ77 + Huffman (or the stored framing) and back is the text
-    "q_brotli_roundtrip" ->
-      """SELECT doc_id, COALESCE(text, '') || ' ' ||
-           substr(COALESCE(text, ''), 1, 64) ||
-           repeat('pad ', CAST(doc_id % 17 AS INT)) AS brotli_text
-         FROM documents""",
-
-    // stored-block decode must be lossless: text plus the RLE run
-    "q_zstd_roundtrip" ->
-      """SELECT doc_id, COALESCE(text, '') ||
-           repeat('z', CAST(doc_id % 60 + 8 AS INT)) AS zstd_text
-         FROM documents""",
-
-    // full entropy decode must be lossless: the padded text through
-    // LZ77 + Huffman + FSE and back is the padded text
-    "q_zstd_codec" ->
-      """SELECT doc_id, COALESCE(text, '') || ' ' ||
-           substr(COALESCE(text, ''), 1, 64) ||
-           repeat('pad ', CAST(doc_id % 17 AS INT)) AS zstd_text
-         FROM documents""",
-
-    // the ustar walk must read back the planted member set through
-    // both the plain and the gunzip-composed path
-    "q_tar_entries" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt,
-           CAST(doc_id % 3 + 1 AS INT) AS n FROM documents)
-         SELECT doc_id,
-           'm' || t.j || '.txt' AS entry_name,
-           '0' AS typeflag,
-           CAST(strlen('t' || t.j || ':' || txt) AS BIGINT) AS u_size
-         FROM p, LATERAL unnest(generate_series(0, n - 1)) AS t(j)""",
-
-    // the WARC walk must read back the planted record structure:
-    // request payloads pass through whole (not an HTTP response),
-    // response payloads split at the first CRLFCRLF into 200 + body;
-    // content lengths are the exact synthesized byte counts
-    "q_warc_records" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt
-           FROM documents),
-         req AS (SELECT doc_id,
-           'GET /doc/' || doc_id || ' HTTP/1.1' || chr(13) || chr(10)
-             || 'Host: example.test' || chr(13) || chr(10)
-             || chr(13) || chr(10) AS body
-           FROM p)
-         SELECT p.doc_id, CAST(0 AS INT) AS rec_idx,
-           'request' AS warc_type,
-           'http://example.test/doc/' || p.doc_id AS target_uri,
-           CAST(strlen(req.body) AS BIGINT) AS content_length,
-           CAST(NULL AS INT) AS http_status,
-           req.body AS body_text
-         FROM p JOIN req ON p.doc_id = req.doc_id
-         UNION ALL
-         SELECT doc_id, CAST(1 AS INT), 'response',
-           'http://example.test/doc/' || doc_id,
-           CAST(45 + strlen(txt) AS BIGINT),
-           CAST(200 AS INT), txt
-         FROM p""",
-
-    // the sniffing reader must recover the identical record
-    // structure no matter which of the three compressions wrapped
-    // each row — the oracle is compression-independent by design
-    "q_warc_zst" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt
-           FROM documents),
-         req AS (SELECT doc_id,
-           'GET /doc/' || doc_id || ' HTTP/1.1' || chr(13) || chr(10)
-             || 'Host: example.test' || chr(13) || chr(10)
-             || chr(13) || chr(10) AS body
-           FROM p)
-         SELECT p.doc_id, CAST(0 AS INT) AS rec_idx,
-           'request' AS warc_type,
-           'http://example.test/doc/' || p.doc_id AS target_uri,
-           CAST(strlen(req.body) AS BIGINT) AS content_length,
-           CAST(NULL AS INT) AS http_status,
-           req.body AS body_text
-         FROM p JOIN req ON p.doc_id = req.doc_id
-         UNION ALL
-         SELECT doc_id, CAST(1 AS INT), 'response',
-           'http://example.test/doc/' || doc_id,
-           CAST(45 + strlen(txt) AS BIGINT),
-           CAST(200 AS INT), txt
-         FROM p""",
-
-    // every framing must reproduce the planted body byte-exactly —
-    // except declared-brotli (f=5), which must refuse with NULLs
-    "q_warc_http" ->
-      """SELECT doc_id,
-           CAST(200 AS INT) AS http_status,
-           'text/plain' AS content_mime,
-           'UTF-8' AS charset,
-           COALESCE(text, '') || ' Ωμé→' AS body_text
-         FROM documents""",
-
-    // the sniffed charset must reconstruct the exact planted string
-    // (ASCII-sanitized text + a marker only representable in that
-    // charset); the charset column pins WHICH decoder fired
-    "q_crawl_charset" ->
-      """WITH p AS (SELECT doc_id,
-           regexp_replace(COALESCE(text, ''), '[^ -~]', '', 'g')
-             AS s, doc_id % 5 AS m
-           FROM documents)
-         SELECT doc_id,
-           CASE WHEN m IN (0, 3) THEN 'text/plain'
-                ELSE 'text/html' END AS content_mime,
-           CASE m WHEN 0 THEN 'UTF-8'
-                  WHEN 1 THEN 'windows-1251'
-                  WHEN 2 THEN 'Shift_JIS'
-                  WHEN 3 THEN 'UTF-8'
-                  ELSE 'EUC-KR' END AS charset,
-           CASE m WHEN 0 THEN s || ' Ωé'
-                  WHEN 1 THEN s || ' Яблоко'
-                  WHEN 2 THEN '<meta charset="shift_jis">' || s ||
-                    ' 日本語'
-                  WHEN 3 THEN s || ' Ωé'
-                  ELSE '<meta http-equiv="Content-Type" ' ||
-                    'content="text/html; charset=euc-kr">' || s ||
-                    ' 한국어' END AS body_text
-         FROM p""",
-
-    // the font-decode chain must hand back the planted text exactly;
-    // the oracle replays it verbatim (the code-shifted bytes never
-    // appear — only a correct /ToUnicode//Differences walk matches)
-    "q_pdf_fonts" ->
-      """SELECT doc_id, COALESCE(text, '') AS text FROM documents""",
-
-    // decryption is exact or refused: text identity like q_pdf_text
-    "q_pdf_encrypted" ->
-      """SELECT doc_id, COALESCE(text, '') AS text FROM documents""",
-
-    // paragraphs split on newline and rejoin with one newline —
-    // identity; n_paras = newline count + 1
-    "q_docx_text" ->
-      """SELECT doc_id, COALESCE(text, '') AS text,
-         CAST(length(COALESCE(text, '')) -
-           length(replace(COALESCE(text, ''), chr(10), '')) + 1
-           AS INTEGER) AS n_paras
-         FROM documents""",
-
-    // split on space + join with newline == replace space->newline;
-    // n_strings = space count + 1
-    "q_xlsx_strings" ->
-      """SELECT doc_id,
-         replace(COALESCE(text, ''), ' ', chr(10)) AS xlsx_text,
-         CAST(length(COALESCE(text, '')) -
-           length(replace(COALESCE(text, ''), ' ', '')) + 1
-           AS INTEGER) AS n_strings
-         FROM documents""",
-
-    // string cells = words then the inline plant; numerics replay
-    // closed-form: 100·(7s+1) + (13s+3) + 100·(s+5) + (3s+7)
-    "q_xlsx_cells" ->
-      """SELECT doc_id,
-         replace(COALESCE(text, ''), ' ', chr(10)) || chr(10) ||
-           'inline ' || doc_id AS cell_text,
-         CAST(length(COALESCE(text, '')) -
-           length(replace(COALESCE(text, ''), ' ', '')) + 6
-           AS INTEGER) AS n_cells,
-         CAST(816 * doc_id + 610 AS BIGINT) AS num_centi_sum
-         FROM documents""",
-
-    // slides join with one newline: doc text then the s2 footer
-    "q_pptx_text" ->
-      """SELECT doc_id,
-         COALESCE(text, '') || chr(10) || 's2 ' || doc_id
-           AS pptx_text,
-         CAST(2 AS INTEGER) AS n_slides
-         FROM documents""",
-
-    // paragraph identity like docx
-    "q_odt_text" ->
-      """SELECT doc_id, COALESCE(text, '') AS text,
-         CAST(length(COALESCE(text, '')) -
-           length(replace(COALESCE(text, ''), chr(10), '')) + 1
-           AS INTEGER) AS n_paras
-         FROM documents""",
-
-    // label constant, stream census constant, text identity
-    "q_cfb_streams" ->
-      """SELECT doc_id,
-         'application/msword' AS cfb_label,
-         CAST(2 AS INTEGER) AS n_streams,
-         chr(5) || 'SummaryInformation,WordDocument'
-           AS stream_names,
-         COALESCE(text, '') AS text
-         FROM documents""",
-
-    // identity text through the piece-table reconstruction
-    "q_doc_text" ->
-      """SELECT doc_id, COALESCE(text, '') AS text FROM documents""",
-
-    // identity text through SST straddle + exact centi arithmetic:
-    // (7d+1)*100 + (13d+3) + (d+5)*100 + (d+6)*100 + 2d*100
-    "q_xls_cells" ->
-      """SELECT doc_id, COALESCE(text, '') AS text,
-         'Data,Numbers' AS sheet_names,
-         CAST(1113 * doc_id + 1203 AS BIGINT) AS rk_centi_sum
-         FROM documents""",
-
-    // slide-1 text + '\n' + the fixed slide-2 closer
-    "q_ppt_text" ->
-      """SELECT doc_id,
-         COALESCE(text, '') || chr(10) || 'fin Ω' AS text,
-         2 AS n_slides, 2 AS n_text_atoms
-         FROM documents""",
-
-    // markdown cell (doc text) + '\n' + the fixed code cell
-    "q_ipynb_text" ->
-      """SELECT doc_id,
-         COALESCE(text, '') || chr(10) ||
-           'x = 6 * 7' || chr(10) || 'print(x)  # Ω' AS text,
-         2 AS n_cells, 1 AS n_code_cells, 'python' AS language
-         FROM documents""",
-
-    // flattened doc text as cue 1 + the id-derived closer; duration
-    // replays the writer's timing arithmetic
-    "q_srt_text" ->
-      """SELECT doc_id,
-         replace(COALESCE(text, ''), chr(10), ' ') || chr(10) ||
-           'closing cue ' || CAST(doc_id % 10 AS VARCHAR) AS text,
-         2 AS n_cues,
-         CAST(2 * (1500 + (doc_id % 7) * 10) AS BIGINT) AS duration_ms
-         FROM documents""",
-
-    "q_vtt_text" ->
-      """SELECT doc_id,
-         replace(COALESCE(text, ''), chr(10), ' ') || chr(10) ||
-           'closing cue ' || CAST(doc_id % 10 AS VARCHAR) AS text,
-         2 AS n_cues,
-         CAST(2 * (1500 + (doc_id % 7) * 10) AS BIGINT) AS duration_ms
-         FROM documents""",
-
-    // headline + doc-text body + title-only closer; dialect rotates
-    "q_feed_text" ->
-      """SELECT doc_id,
-         'Feed ' || CAST(doc_id % 10 AS VARCHAR) AS feed_title,
-         'headline' || chr(10) || COALESCE(text, '') || chr(10) ||
-           'closer ' || CAST(doc_id % 5 AS VARCHAR) AS text,
-         2 AS n_items,
-         CASE WHEN doc_id % 3 = 2 THEN 'atom' ELSE 'rss' END AS kind
-         FROM documents""",
-
-    // id-derived subject + doc-text body + the fixed wide sender;
-    // the MELA-wrapped RTF body recovers the same text
-    "q_msg_text" ->
-      """SELECT doc_id,
-         'msg ' || CAST(doc_id % 100 AS VARCHAR) AS subject,
-         COALESCE(text, '') AS text,
-         'Fixture Sender Ω' AS sender,
-         COALESCE(text, '') AS rtf_text
-         FROM documents""",
-
-    // two attachments per message: the plain member's byte size and
-    // the gzip's UNWRAPPED size both replay from the text; labels
-    // come from real sniffing, inner label from a real gunzip
-    "q_msg_attach" ->
-      """WITH p AS (SELECT doc_id, COALESCE(text, '') AS txt
-           FROM documents)
-         SELECT doc_id, 'a0.txt' AS attach_name,
-           'text/plain' AS label,
-           CAST(strlen('a0:' || txt) AS BIGINT) AS u_size,
-           CAST(NULL AS VARCHAR) AS inner_label
-         FROM p
-         UNION ALL
-         SELECT doc_id, 'a1.gz', 'application/gzip',
-           CAST(strlen('a1:' || txt) AS BIGINT), 'text/plain'
-         FROM p""",
-
-    // event 1: first line as summary + full text as description;
-    // event 2: the id-derived closer; durations replay the writer
-    "q_ics_text" ->
-      """SELECT doc_id,
-         split_part(COALESCE(text, ''), chr(10), 1) || chr(10) ||
-           COALESCE(text, '') || chr(10) ||
-           'closing event ' || CAST(doc_id % 9 AS VARCHAR) AS text,
-         2 AS n_events,
-         CAST(2 * (1800 + (doc_id % 11) * 60) AS BIGINT) AS duration_s
-         FROM documents""",
-
-    // FN = flattened doc text, ORG/EMAIL fixed per id
-    "q_vcf_text" ->
-      """SELECT doc_id,
-         replace(COALESCE(text, ''), chr(10), ' ') || chr(10) ||
-           'Org ' || CAST(doc_id % 20 AS VARCHAR) || chr(10) ||
-           'card@example.test' AS text,
-         1 AS n_cards
-         FROM documents""",
-
-    // body cells concatenated (halves + the overflow pad row);
-    // int_sum replays (3d+1)+(3d+2)+(3d+3)
-    "q_sqlite_rows" ->
-      """SELECT doc_id,
-         COALESCE(text, '') || 'pad:' || repeat('x', 600) AS text,
-         3 AS n_rows, 1 AS n_tables,
-         CAST(9 * doc_id + 6 AS BIGINT) AS int_sum
-         FROM documents""",
-
-    // fixed titles + rtrimmed 254-char chunks; int_sum replays
-    // (5d+1)+(5d+2)+(5d+3)
-    "q_dbf_rows" ->
-      """SELECT doc_id,
-         'p1' || rtrim(substr(replace(COALESCE(text, ''), chr(10), ' '), 1, 254)) ||
-         'p2' || rtrim(substr(replace(COALESCE(text, ''), chr(10), ' '), 255, 254)) ||
-         'p3' || rtrim(substr(replace(COALESCE(text, ''), chr(10), ' '), 509, 254)) AS text,
-         3 AS n_rows, 1 AS n_deleted,
-         CAST(15 * doc_id + 6 AS BIGINT) AS int_sum
-         FROM documents""",
-
-    // halves + note string; long_sum replays (2d+1)+(2d+2)+(2d+3)
-    "q_avro_rows" ->
-      """SELECT doc_id,
-         COALESCE(text, '') || 'note ' ||
-           CAST(doc_id % 4 AS VARCHAR) AS text,
-         3 AS n_records, 2 AS n_blocks,
-         CAST(6 * doc_id + 6 AS BIGINT) AS long_sum,
-         2 AS n_null_notes
-         FROM documents""",
-
-    // every planted complex value replayed: nested meta sums, the
-    // array arithmetic series, the map value sum, enum/union cases,
-    // and the mod-251 fixed-byte sum
-    "q_avro_complex" ->
-      """WITH p AS (SELECT doc_id, doc_id % 4 + 1 AS len
-           FROM documents)
-         SELECT doc_id,
-           2 AS n_records,
-           CAST(6 * doc_id + 3 AS BIGINT) AS meta_a_sum,
-           'm' || CAST(doc_id % 100 AS VARCHAR) AS meta_b,
-           CAST(2 * (len * doc_id + len * (len - 1) / 2) AS BIGINT)
-             AS vals_sum,
-           CAST(2 * len AS INT) AS n_vals,
-           CAST(6 * doc_id AS BIGINT) AS tags_sum,
-           CASE doc_id % 3 WHEN 0 THEN 'ALPHA' WHEN 1 THEN 'BETA'
-             ELSE 'GAMMA' END AS kind,
-           CAST((SELECT SUM((doc_id + t.i) % 251)
-             FROM unnest(generate_series(0, 7)) AS t(i)) AS BIGINT)
-             AS fp_sum,
-           CASE doc_id % 3 WHEN 0 THEN NULL
-             WHEN 1 THEN 'l:' || CAST(doc_id * 7 AS VARCHAR)
-             ELSE 's:u' || CAST(doc_id % 10 AS VARCHAR) END AS u_repr
-         FROM p""",
-
-    // named-type reuse + the six-codec matrix: every planted value
-    // replayed closed-form; the codec column pins the rotation so a
-    // bzip2/xz refusal (all-null row) breaks the hash
-    "q_avro_named" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 + 1 AS len
-           FROM documents)
-         SELECT doc_id,
-           CASE doc_id % 6 WHEN 0 THEN 'null' WHEN 1 THEN 'deflate'
-             WHEN 2 THEN 'snappy' WHEN 3 THEN 'zstandard'
-             WHEN 4 THEN 'bzip2' ELSE 'xz' END AS codec,
-           2 AS n_records,
-           CAST(8 * doc_id + 2 AS BIGINT) AS px_sum,
-           CAST(4 * doc_id + 2 * (doc_id % 7) + 2 AS BIGINT)
-             AS py_sum,
-           (CASE doc_id % 3 WHEN 0 THEN 'R' WHEN 1 THEN 'G'
-              ELSE 'B' END) || '/' ||
-           (CASE (doc_id + 1) % 3 WHEN 0 THEN 'R' WHEN 1 THEN 'G'
-              ELSE 'B' END) AS c_pair,
-           CAST((SELECT SUM(2 * ((doc_id + t.i) % 199) +
-               ((2 * doc_id + t.i) % 211) +
-               ((2 * doc_id + t.i + 1) % 211))
-             FROM unnest(generate_series(0, 3)) AS t(i)) AS BIGINT)
-             AS h_sum,
-           CAST(2 * len AS INT) AS pts_n,
-           CAST(2 * (len * doc_id + len * (len - 1) / 2) AS BIGINT)
-             AS pts_x_sum,
-           CAST(2 * (len * doc_id - len * (len - 1) / 2) AS BIGINT)
-             AS pts_y_sum
-         FROM p""",
-
-    // every logical value replayed closed-form: manual decimal
-    // string composition, DuckDB's own date/timestamp rendering
-    // (verified char-equal to java.time's ISO forms)
-    "q_avro_logical" ->
-      """WITH p AS (SELECT doc_id,
-           12345 + doc_id AS a,
-           (doc_id * 37) % 86400000 AS v FROM documents)
-         SELECT doc_id,
-           'date,decimal(10,2),duration,time-millis,' ||
-             'timestamp-micros,uuid' AS logical_csv,
-           (CASE WHEN doc_id % 2 = 0 THEN '' ELSE '-' END) ||
-             CAST(a // 100 AS VARCHAR) || '.' ||
-             lpad(CAST(a % 100 AS VARCHAR), 2, '0') AS dec_str,
-           CAST(DATE '1970-01-01' +
-             CAST(19000 + doc_id % 1000 AS INT) AS VARCHAR)
-             AS date_iso,
-           strftime(make_timestamp(1700000000000000 +
-             doc_id * 1000003), '%Y-%m-%dT%H:%M:%S.%f') || 'Z'
-             AS ts_iso,
-           lpad(CAST(v // 3600000 AS VARCHAR), 2, '0') || ':' ||
-             lpad(CAST(v // 60000 % 60 AS VARCHAR), 2, '0') || ':' ||
-             lpad(CAST(v // 1000 % 60 AS VARCHAR), 2, '0') || '.' ||
-             lpad(CAST(v % 1000 AS VARCHAR), 3, '0') AS time_str,
-           '00000000-0000-4000-8000-' || printf('%012x',
-             doc_id % 281474976710656) AS uuid_str,
-           TRUE AS uuid_ok,
-           CAST(doc_id % 12 AS VARCHAR) || ':' ||
-             CAST(doc_id % 30 AS VARCHAR) || ':' ||
-             CAST(doc_id % 1000 AS VARCHAR) AS dur_str
-         FROM p""",
-
-    // planted orientation/timestamp/GPS replayed arithmetically;
-    // strip_clean proves the PII removal on every row
-    "q_exif_meta" ->
-      """SELECT doc_id,
-         CAST(1 + doc_id % 8 AS INTEGER) AS orientation,
-         '2026:08:15 ' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0')
-           || ':' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0')
-           || ':00' AS date_time,
-         CAST((doc_id % 90) * 360000 + (doc_id % 60) * 6000 +
-           (doc_id % 6000) AS BIGINT) AS lat_centisec,
-         CAST((doc_id % 180) * 360000 + (doc_id % 60) * 6000 +
-           (doc_id % 6000) AS BIGINT) AS lon_centisec,
-         TRUE AS strip_clean
-         FROM documents""",
-
-    // the writer's exact shape replayed: heading + body + break gap
-    // + code + html decoy text; n_links counts the i%4==3 lines
-    "q_md_text" ->
-      """SELECT doc_id,
-         'Doc ' || CAST(doc_id % 50 AS VARCHAR) || chr(10) || chr(10)
-           || COALESCE(text, '') || chr(10) || chr(10) || chr(10)
-           || 'val x = 6 * 7 // fixed' || chr(10) || chr(10)
-           || 'html tag stripped' || chr(10) AS text,
-         1 AS n_headings,
-         CAST((length(COALESCE(text, ''))
-           - length(replace(COALESCE(text, ''), chr(10), ''))
-           + 1) / 4 AS INTEGER) AS n_links,
-         1 AS n_code_blocks,
-         'fm ' || CAST(doc_id % 30 AS VARCHAR) AS fm_title,
-         4 AS n_fm_keys
-         FROM documents""",
-
-    // the planted Title/Description/Comment pairs + density + time
-    "q_png_meta" ->
-      """SELECT doc_id,
-         'Title=' || split_part(COALESCE(text, ''), chr(10), 1)
-           || chr(10) || 'Description=' || COALESCE(text, '')
-           || chr(10) || 'Comment=caption Ω '
-           || CAST(doc_id % 6 AS VARCHAR) AS text,
-         3 AS n_texts,
-         CAST(2834 + doc_id % 100 AS BIGINT) AS ppm_x,
-         CAST(2835 + doc_id % 100 AS BIGINT) AS ppm_y,
-         '2026-08-15 ' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0')
-           || ':' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0')
-           || ':00' AS png_time
-         FROM documents""",
-
-    // wrapper → interior mapping replayed as two CASEs
-    "q_sniff_deep" ->
-      """SELECT doc_id,
-         CASE doc_id % 6
-           WHEN 2 THEN 'application/zstd'
-           WHEN 3 THEN 'application/zstd'
-           WHEN 4 THEN 'application/x-ipynb+json'
-           ELSE 'application/gzip' END AS outer_format,
-         CASE doc_id % 6
-           WHEN 0 THEN 'application/x-tar'
-           WHEN 1 THEN 'application/vnd.openxmlformats-officedocument.wordprocessingml.document'
-           WHEN 2 THEN 'application/rss+xml'
-           WHEN 3 THEN 'application/pdf'
-           WHEN 4 THEN 'application/x-ipynb+json'
-           ELSE 'application/vnd.sqlite3' END AS inner_format
-         FROM documents""",
-
-    // the affine point forms replayed in closed form: GPX has the
-    // 3+d%5 trkpts PLUS one wpt
-    "q_gpx_trace" ->
-      """SELECT doc_id,
-         'route ' || CAST(doc_id % 40 AS VARCHAR) AS trace_name,
-         CAST(4 + doc_id % 5 AS INTEGER) AS n_points,
-         CAST((4 + doc_id % 5) * (10000000 + doc_id % 1000000)
-           + 1000 * ((3 + doc_id % 5) * (4 + doc_id % 5) / 2)
-           AS BIGINT) AS lat_micro_sum,
-         CAST(-((4 + doc_id % 5) * (20000000 + doc_id % 2000000)
-           + 1000 * ((3 + doc_id % 5) * (4 + doc_id % 5) / 2))
-           AS BIGINT) AS lon_micro_sum
-         FROM documents""",
-
-    "q_kml_trace" ->
-      """SELECT doc_id,
-         'route ' || CAST(doc_id % 40 AS VARCHAR) AS trace_name,
-         CAST(3 + doc_id % 5 AS INTEGER) AS n_points,
-         CAST((3 + doc_id % 5) * (10000000 + doc_id % 1000000)
-           + 1000 * ((2 + doc_id % 5) * (3 + doc_id % 5) / 2)
-           AS BIGINT) AS lat_micro_sum,
-         CAST(-((3 + doc_id % 5) * (20000000 + doc_id % 2000000)
-           + 1000 * ((2 + doc_id % 5) * (3 + doc_id % 5) / 2))
-           AS BIGINT) AS lon_micro_sum
-         FROM documents""",
-
-    // the planted mode→label mapping replayed as a CASE
-    "q_sniff_format" ->
-      """SELECT doc_id,
-         CASE doc_id % 22
-           WHEN 0 THEN 'application/pdf'
-           WHEN 1 THEN 'application/vnd.openxmlformats-officedocument.wordprocessingml.document'
-           WHEN 2 THEN 'application/vnd.openxmlformats-officedocument.spreadsheetml.sheet'
-           WHEN 3 THEN 'application/vnd.openxmlformats-officedocument.presentationml.presentation'
-           WHEN 4 THEN 'application/vnd.oasis.opendocument.text'
-           WHEN 5 THEN 'application/epub+zip'
-           WHEN 6 THEN 'application/rtf'
-           WHEN 7 THEN 'message/rfc822'
-           WHEN 8 THEN 'application/gzip'
-           WHEN 9 THEN 'application/x-tar'
-           WHEN 10 THEN 'image/png'
-           WHEN 11 THEN 'image/jpeg'
-           WHEN 12 THEN 'application/zip'
-           WHEN 13 THEN 'application/mbox'
-           WHEN 15 THEN 'application/x-ipynb+json'
-           WHEN 16 THEN 'application/x-subrip'
-           WHEN 17 THEN 'text/vtt'
-           WHEN 18 THEN 'application/rss+xml'
-           WHEN 19 THEN 'application/atom+xml'
-           WHEN 20 THEN 'application/vnd.ms-excel'
-           WHEN 21 THEN 'application/vnd.ms-powerpoint'
-           ELSE 'text/plain' END AS format
-         FROM documents""",
-
-    // subject replays arithmetically; body is identity text;
-    // n_parts = 1 in every mode (alternative picks ONE rendering)
-    "q_eml_text" ->
-      """SELECT doc_id,
-         'Re: doc ' || doc_id || ' résumé' AS subject,
-         COALESCE(text, '') AS text,
-         CAST(1 AS INTEGER) AS n_parts
-         FROM documents""",
-
-    // chapters join in spine order: doc text then the c2 footer
-    "q_epub_text" ->
-      """SELECT doc_id,
-         COALESCE(text, '') || chr(10) || 'c2 ' || doc_id
-           AS epub_text,
-         CAST(2 AS INTEGER) AS n_docs
-         FROM documents""",
-
-    // identity text; n_paras = newline count + 1 (as docx/odt)
-    "q_rtf_text" ->
-      """SELECT doc_id, COALESCE(text, '') AS text,
-         CAST(length(COALESCE(text, '')) -
-           length(replace(COALESCE(text, ''), chr(10), '')) + 1
-           AS INTEGER) AS n_paras
-         FROM documents""",
-
-    // every planted table-free header field replayed arithmetically
-    "q_vp8_meta" ->
-      """SELECT doc_id,
-         CAST(16 + (doc_id % 100) * 16 AS INTEGER) AS vp8_width,
-         CAST(16 + (doc_id % 64) * 16 AS INTEGER) AS vp8_height,
-         CAST(doc_id % 64 AS INTEGER) AS filter_level,
-         CAST(doc_id % 8 AS INTEGER) AS sharpness,
-         CAST(1 << (doc_id % 4) AS INTEGER) AS n_partitions,
-         CAST(doc_id % 128 AS INTEGER) AS y_ac_qi,
-         FALSE AS segmentation
-         FROM documents""",
-
-    // the 18 dims + Y-plane hashes below were computed at fixture
-    // generation from the REFERENCE decoder's own YUV planes (an
-    // independent replay of averageHash64's exact-integer rule) —
-    // matching them proves the full from-spec pixel pipeline
-    "q_vp8_pixels" ->
-      """WITH f(i, w, h, hsh) AS (VALUES
-           (0, 32, 32, CAST(-1130104881152 AS BIGINT)),
-           (1, 32, 32, -6172840429334713771),
-           (2, 32, 32, -2741712144137788797),
-           (3, 48, 32, -1085101488751856976),
-           (4, 17, 13, -1165009879040),
-           (5, 17, 13, -57645415533432013),
-           (6, 64, 48, 8970318305893081312),
-           (7, 33, 33, -7357760474948377973),
-           (8, 16, 16, -3689517697150995661),
-           (9, 80, 64, -1130104881152),
-           (10, 32, 32, -1130104881152),
-           (11, 32, 32, -2741712144137788797),
-           (12, 17, 13, -1130650140672),
-           (13, 64, 48, 8970318305893081312),
-           (14, 33, 33, -7357760474948377973),
-           (15, 16, 16, -1130104881152),
-           (16, 16, 16, -1130104881152),
-           (17, 16, 16, -1130104881152))
-         SELECT d.doc_id, CAST(f.w AS INT) AS vp8_w,
-           CAST(f.h AS INT) AS vp8_h, f.hsh AS y_ahash
-         FROM documents d JOIN f ON f.i = d.doc_id % 18""",
-
-    // three VP8L layouts decode to the same uniform cells -> the PNG
-    // checkerboard constants verbatim
-    "q_webp_phash" ->
-      """SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN 6172840429334713770
-              ELSE -6172840429334713771 END AS ahash
-         FROM documents""",
-
-    // orientation-normalized hash = planted pattern PERMUTED by the
-    // display transform: displayed cell (dx,dy) reads stored cell
-    // f_o(dx,dy). Bit 63 lands via an explicit min-long add — DuckDB
-    // refuses 1<<63
-    "q_oriented_phash" -> {
-      val h60 = sqlHash60("'orient:' || CAST(doc_id AS VARCHAR)")
-      s"""WITH p AS (SELECT doc_id, ($h60) | 1 AS patt,
-           CASE WHEN doc_id % 9 = 0 THEN 1
-                ELSE CAST(doc_id % 8 + 1 AS INT) END AS o
-           FROM documents),
-         b AS (SELECT doc_id, patt, o, t.i AS d,
-                 t.i % 8 AS dx, t.i // 8 AS dy
-               FROM p CROSS JOIN generate_series(0, 63) AS t(i)),
-         s AS (SELECT doc_id, patt, d,
-           CASE WHEN o IN (1,4) THEN dx WHEN o IN (2,3) THEN 7-dx
-                WHEN o IN (5,6) THEN dy ELSE 7-dy END AS sx,
-           CASE WHEN o IN (1,2) THEN dy WHEN o IN (3,4) THEN 7-dy
-                WHEN o IN (5,8) THEN dx ELSE 7-dx END AS sy
-           FROM b),
-         bits AS (SELECT doc_id, d,
-           (patt >> CAST(8*sy+sx AS INT)) & 1 AS bit FROM s)
-         SELECT doc_id,
-           CAST(SUM(CASE WHEN d < 63 THEN bit << CAST(d AS INT)
-                         WHEN bit = 1 THEN -9223372036854775807 - 1
-                         ELSE 0 END) AS BIGINT) AS ahash
-         FROM bits GROUP BY doc_id"""
-    },
-
-    // rotated copies normalize to the SAME display hash, so the
-    // orientations vanish from the oracle: brute-force hamming over
-    // base / base^mask exactly like q_image_dup (odup: salt)
-    "q_oriented_dup" -> {
-      val h60 = sqlHash60("'odup:' || CAST(gg AS VARCHAR)")
-      s"""WITH g AS (SELECT doc_id, doc_id // 2 AS gg FROM documents),
-         b AS (SELECT doc_id, gg, ($h60) | 1 AS base FROM g),
-         p AS (SELECT doc_id,
-           CASE WHEN doc_id % 2 = 1
-             THEN xor(base,
-               ((CAST(1 AS BIGINT) << CAST(gg % 5 AS INT)) - 1)
-                 << CAST(gg % 50 + 1 AS INT))
-             ELSE base END AS h
-           FROM b)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
-         FROM p a JOIN p b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.h, b.h)) <= 3"""
-    },
-
-    // timing replay: the planted stts runs / keyframe stride resolve
-    // to pure arithmetic — the walk must read them back exactly
-    "q_video_timing" ->
-      """WITH p AS (
-           SELECT doc_id,
-             1000 + (doc_id % 5) * 200 AS ts,
-             10 + doc_id % 20 AS n1, 1 + doc_id % 3 AS d1,
-             5 + doc_id % 10 AS n2, 2 + doc_id % 4 AS d2,
-             CASE WHEN doc_id % 3 = 0 THEN 0
-                  ELSE 2 + doc_id % 5 END AS kf,
-             doc_id % 4 AS ci
-           FROM documents)
-         SELECT doc_id,
-           CASE ci WHEN 0 THEN 'jpeg' WHEN 1 THEN 'avc1'
-                   WHEN 2 THEN 'hvc1' ELSE 'vp09' END AS codec,
-           CAST(n1 + n2 AS BIGINT) AS n_samples,
-           CAST(ts AS BIGINT) AS timescale,
-           CAST(n1*d1 + n2*d2 AS BIGINT) AS duration_ticks,
-           CAST((n1 + n2) * ts * 1000 // (n1*d1 + n2*d2) AS BIGINT)
-             AS fps_milli,
-           CAST(CASE WHEN kf = 0 THEN n1 + n2
-                     ELSE 1 + (n1 + n2 - 1) // kf END AS BIGINT)
-             AS n_keyframes,
-           CAST(1 AS BIGINT) AS first_keyframe,
-           (kf = 0) AS sync_all
-         FROM p""",
-
-    // audio near-dup replay: pair-seeded LCG samples with the odd-doc
-    // perturbation, the exact truncating-window signature arithmetic
-    // of q_audio_signature, then brute-force hamming <= 4
-    "q_audio_dup" ->
-      """WITH p AS (
-           SELECT doc_id, doc_id // 2 AS gg, doc_id % 2 AS odd
-           FROM documents),
-         q AS (
-           SELECT doc_id, gg, odd, gg % 3 AS pert,
-                  (60 + gg % 40) * (gg % 2 + 1) AS ns
-           FROM p),
-         smp AS (
-           SELECT doc_id, ns, t.i AS i, odd, pert,
-                  (((gg * 7919 + t.i * 104729) % 8000)
-                    * (1 + (gg + (t.i * 15) // ns) % 4)) // 4 AS s0
-           FROM q CROSS JOIN generate_series(0, 199) AS t(i)
-           WHERE t.i < ns),
-         sp AS (
-           SELECT doc_id, ns, i,
-             CASE WHEN odd = 1 AND pert = 1 THEN s0 * 2
-                  WHEN odd = 1 AND pert = 2 AND (i * 15) // ns = 14
-                    THEN s0 + 4000
-                  ELSE s0 END AS sv
-           FROM smp),
-         wins AS (
-           SELECT doc_id, ns, (i * 15) // ns AS w,
-                  SUM(abs(sv))::BIGINT AS ws, COUNT(*)::BIGINT AS wc
-           FROM sp GROUP BY 1, 2, 3),
-         tot AS (
-           SELECT doc_id, SUM(ws)::BIGINT AS ts, MAX(ns)::BIGINT AS n
-           FROM wins GROUP BY 1),
-         lv AS (
-           SELECT w.doc_id, w.w,
-                  CASE WHEN (t.ts // t.n) = 0 THEN 0
-                       ELSE LEAST(15, ((w.ws // w.wc) * 8)
-                         // (t.ts // t.n)) END AS lvl
-           FROM wins w JOIN tot t ON w.doc_id = t.doc_id),
-         sig AS (
-           SELECT doc_id,
-             CAST(SUM(lvl * (CAST(1 AS BIGINT)
-               << CAST(4 * w AS INT))) AS BIGINT) AS sg
-           FROM lv GROUP BY doc_id)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.sg, b.sg)) AS INT) AS hamming
-         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.sg, b.sg)) <= 4"""
-  )
-
-  // ------------------------------------------------------------------
-  // Generated oracles for the LLM-pipeline queries. The library's
-  // hashing was built on md5 precisely so DuckDB can replicate it; the
-  // permutation/hyperplane constants are generated HERE from the same
-  // deterministic seeds the Spark operators use and embedded as SQL
-  // literals.
-  // ------------------------------------------------------------------
-
-  /** The INDEPENDENT greedy-BPE derivation shared by the q_bpe_*
-    * oracles: per-character token rows, then one window stage per
-    * merge rank (candidate marking, consecutive-run grouping,
-    * odd-parity take, partner drop, renumber). Returns (CTE text,
-    * final-stage name); the final stage holds (doc_id, pos, tok).
-    */
-  private def bpeSqlStages: (String, String) = {
-    def tk(t: String) = "'" + t.replace("'", "''") + "'"
-    val p0 =
-      """p0 AS (SELECT doc_id, CAST(t.i AS BIGINT) AS pos,
-         substring(txt, CAST(t.i AS INT), 1) AS tok
-         FROM (SELECT doc_id, replace(COALESCE(text, ''), chr(1),
-           '') AS txt FROM documents) d,
-         LATERAL unnest(generate_series(1, length(txt))) AS t(i))"""
-    val stages = BpeFixedMerges.zipWithIndex.map {
-      case ((a, b), n) =>
-        s"""c$n AS (SELECT doc_id, pos, tok,
-           CASE WHEN tok = ${tk(a)} AND lead(tok) OVER
-             (PARTITION BY doc_id ORDER BY pos) = ${tk(b)}
-           THEN 1 ELSE 0 END AS cand
-           FROM p$n),
-         g$n AS (SELECT doc_id, pos, tok, cand,
-           pos - ROW_NUMBER() OVER (PARTITION BY doc_id, cand
-             ORDER BY pos) AS grp
-           FROM c$n),
-         k$n AS (SELECT doc_id, pos, tok, cand,
-           CASE WHEN cand = 1 AND ROW_NUMBER() OVER
-             (PARTITION BY doc_id, cand, grp ORDER BY pos) % 2 = 1
-           THEN 1 ELSE 0 END AS tkn
-           FROM g$n),
-         m$n AS (SELECT doc_id, pos,
-           CASE WHEN tkn = 1 THEN ${tk(a + b)} ELSE tok END AS tok,
-           COALESCE(lag(tkn) OVER (PARTITION BY doc_id
-             ORDER BY pos), 0) AS dropped
-           FROM k$n),
-         p${n + 1} AS (SELECT doc_id, ROW_NUMBER() OVER
-             (PARTITION BY doc_id ORDER BY pos) AS pos, tok
-           FROM m$n WHERE dropped = 0)"""
-    }
-    (p0 + ",\n" + stages.mkString(",\n"),
-      s"p${BpeFixedMerges.length}")
-  }
-
-  /** DuckDB mirror of HashFunctions.stableHash60: first 15 md5 hex chars
-    * base-16-decoded, as an expression over lambda variable `v`.
-    *
-    * TYPING RULE: `list_sum` returns HUGEINT, and the driver's pandas
-    * `fetchdf()` converts HUGEINT to float64 — which shreds the low
-    * bits of any value ≥ 2^53. Comparisons, joins and GROUP BYs over
-    * the raw value are safe (they stay inside DuckDB), but any oracle
-    * that EMITS the hash in its SELECT list MUST wrap it in
-    * `CAST(... AS BIGINT)` (see q_jpeg_phash / q_progressive_phash —
-    * the r8 q_jpeg_phash hash_match failure was exactly this).
-    */
-  private def sqlHash60(v: String): String =
-    s"list_sum(list_transform(generate_series(1, 15), q -> " +
-    s"(strpos('0123456789abcdef', substring(md5($v), q, 1)) - 1)::BIGINT" +
-    s" << (4 * (15 - q))))"
-
-  /** Char 5-shingle hashes of `text` (mirrors TextFunctions.charShingles
-    * + stableHash60).
-    */
-  private def sqlShingleHashes: String =
-    "list_transform(list_transform(" +
-    "generate_series(1, greatest(length(text) - 4, 1)), " +
-    "i -> substring(text, i, 5)), s -> " + sqlHash60("s") + ")"
-
-  /** Whitespace-token hashes of `text`. */
-  private def sqlTokenHashes: String =
-    "list_transform(regexp_split_to_array(trim(text), '\\s+'), s -> " +
-      sqlHash60("s") + ")"
-
-  /** Mirrors TextFunctions.langId: per-language stopword hit counts,
-    * argmax with first-wins tiebreak in LangMarkers order. Generated
-    * from the SAME marker table the Spark expression uses.
-    */
-  /** Composite replay: marker scores over the planted sample, script
-    * counts over the same, und-<Subtag> fallback generated from the
-    * SAME ScriptSubtags table the Column API uses.
-    */
-  private def langFullOracle: String = {
-    val scores = T.LangMarkers.map { case (lang, words) =>
-      val list = words.map(w => s"'$w'").mkString("[", ",", "]")
-      lang -> s"len(list_filter(tk, t -> list_contains($list, t)))"
-    }
-    val scoreCols =
-      scores.map { case (l, e) => s"$e AS s_$l" }.mkString(", ")
-    val best = scores.map("s_" + _._1).mkString("greatest(", ", ", ")")
-    val baseCases = scores
-      .map { case (l, _) => s"WHEN s_$l = best THEN '$l'" }
-      .mkString(" ")
-    val cntCols = T.ScriptRanges.map { case (name, range) =>
-      s"length(regexp_replace(s, '[^$range]', '', 'g')) AS n_$name"
-    }.mkString(", ")
-    val m = T.ScriptRanges.map(r => s"n_${r._1}")
-      .mkString("GREATEST(", ", ", ")")
-    val scriptCases = T.ScriptRanges
-      .map { case (name, _) => s"WHEN n_$name = m THEN '$name'" }
-      .mkString(" ")
-    val tagCases = T.ScriptSubtags.filter(_._1 != "latin")
-      .map { case (name, tag) => s"WHEN script = '$name' " +
-        s"THEN 'und-$tag'" }
-      .mkString(" ")
-    s"""WITH src AS (SELECT doc_id,
-         CASE WHEN doc_id % 7 = 1 THEN 'Привет мир, это проверка кириллицы'
-              WHEN doc_id % 7 = 2 THEN '你好世界这是中文测试文本'
-              WHEN doc_id % 7 = 3 THEN 'こんにちは世界 カタカナ テスト'
-              WHEN doc_id % 7 = 4 THEN '안녕하세요 세계 한국어 텍스트'
-              WHEN doc_id % 7 = 5 THEN 'नमस्ते दुनिया यह हिंदी परीक्षण है'
-              WHEN doc_id % 7 = 6 THEN 'สวัสดีชาวโลก นี่คือข้อความภาษาไทย'
-              ELSE text END AS s
-       FROM documents),
-       tkn AS (SELECT doc_id, s,
-         regexp_split_to_array(trim(lower(s)), '\\s+') AS tk FROM src),
-       sc AS (SELECT doc_id, s, $scoreCols FROM tkn),
-       b AS (SELECT *, $best AS best FROM sc),
-       base AS (SELECT doc_id, s,
-         CASE WHEN best <= 0 THEN 'und' $baseCases ELSE 'und' END
-           AS lang FROM b),
-       cnt AS (SELECT doc_id, lang, $cntCols FROM base),
-       scr AS (SELECT doc_id, lang,
-         CASE WHEN m = 0 THEN 'und' $scriptCases ELSE 'und' END
-           AS script
-         FROM (SELECT *, $m AS m FROM cnt) x)
-       SELECT doc_id,
-         CASE WHEN lang <> 'und' THEN lang
-              $tagCases
-              ELSE 'und' END AS lang_full
-       FROM scr"""
-  }
-
-  private def langIdOracle: String = {
-    val scores = T.LangMarkers.map { case (lang, words) =>
-      val list = words.map(w => s"'$w'").mkString("[", ",", "]")
-      lang -> s"len(list_filter(tk, t -> list_contains($list, t)))"
-    }
-    val scoreCols =
-      scores.map { case (l, e) => s"$e AS s_$l" }.mkString(",\n         ")
-    val best = scores.map("s_" + _._1).mkString("greatest(", ", ", ")")
-    val cases = scores
-      .map { case (l, _) => s"WHEN s_$l = best THEN '$l'" }
-      .mkString("\n           ")
-    s"""WITH tk AS (SELECT doc_id,
-         regexp_split_to_array(trim(lower(text)), '\\s+') AS tk
-         FROM documents),
-       sc AS (SELECT doc_id, $scoreCols FROM tk),
-       b AS (SELECT *, $best AS best FROM sc)
-       SELECT doc_id, CASE WHEN best <= 0 THEN 'und'
-           $cases
-           ELSE 'und' END AS lang_id
-       FROM b"""
-  }
-
-  /** Mirrors CorpusScrub.langMix over the planted second paragraphs:
-    * the SAME marker-score CASE as langIdOracle, applied per
-    * `\n\n`-segment, then (doc, lang) counts, dominance by
-    * (count DESC, lang ASC).
-    */
-  private def langMixOracle: String = {
-    val scores = T.LangMarkers.map { case (lang, words) =>
-      val list = words.map(w => s"'$w'").mkString("[", ",", "]")
-      lang -> s"len(list_filter(tk, t -> list_contains($list, t)))"
-    }
-    val scoreCols =
-      scores.map { case (l, e) => s"$e AS s_$l" }.mkString(",\n         ")
-    val best = scores.map("s_" + _._1).mkString("greatest(", ", ", ")")
-    val cases = scores
-      .map { case (l, _) => s"WHEN s_$l = best THEN '$l'" }
-      .mkString("\n           ")
-    s"""WITH base AS (SELECT doc_id, text ||
-         CASE WHEN doc_id % 4 = 0
-             THEN chr(10) || chr(10) ||
-               'le chat est sur une table et les autres'
-           WHEN doc_id % 4 = 1
-             THEN chr(10) || chr(10) ||
-               'der hund und die katze ist nicht ein zu'
-           WHEN doc_id % 4 = 2
-             THEN chr(10) || chr(10) ||
-               'el perro y la casa de los del que'
-           ELSE '' END AS text
-         FROM documents),
-       seg AS (SELECT doc_id, t.s AS seg FROM base,
-         LATERAL unnest(string_split(text, chr(10) || chr(10)))
-           AS t(s)
-         WHERE trim(t.s) <> ''),
-       tkt AS (SELECT doc_id,
-         regexp_split_to_array(trim(lower(seg)), '\\s+') AS tk
-         FROM seg),
-       sc AS (SELECT doc_id, $scoreCols FROM tkt),
-       b AS (SELECT *, $best AS best FROM sc),
-       lid AS (SELECT doc_id, CASE WHEN best <= 0 THEN 'und'
-           $cases
-           ELSE 'und' END AS lang FROM b),
-       pl AS (SELECT doc_id, lang, COUNT(*)::BIGINT AS c
-         FROM lid GROUP BY 1, 2),
-       agg AS (SELECT doc_id, SUM(c)::BIGINT AS n_segments,
-         COUNT(*)::BIGINT AS n_langs FROM pl GROUP BY 1),
-       dom AS (SELECT doc_id, lang AS dominant_lang, c FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-             ORDER BY c DESC, lang) AS rn FROM pl) z
-         WHERE rn = 1)
-       SELECT a.doc_id, a.n_segments, a.n_langs, d.dominant_lang,
-         d.c * 1000 // a.n_segments AS dominant_milli
-       FROM agg a JOIN dom d ON a.doc_id = d.doc_id"""
-  }
-
-  private def minhashOracle: String = {
-    val P = H.Prime
-    val sigEntries = H.permutationSeeds(16, 42L).map { case (a, b) =>
-      s"list_min(list_transform(h, x -> ($a * (x % $P) + $b) % $P))"
-    }.mkString(",\n           ")
-    val bandExprs = (0 until 4).map { bi =>
-      s"md5(array_to_string(sig[${bi * 4 + 1}:${bi * 4 + 4}], ','))"
-    }.mkString(", ")
-    s"""WITH hashes AS (SELECT doc_id, $sqlShingleHashes AS h FROM documents),
-       sigs AS (SELECT doc_id, [$sigEntries] AS sig FROM hashes),
-       banded AS (SELECT doc_id, sig, [$bandExprs] AS bands FROM sigs)
-       SELECT id_a, id_b, est_jaccard FROM (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           list_sum(list_transform(generate_series(1, 16),
-             i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END))::DOUBLE
-             / 16 AS est_jaccard
-         FROM banded a JOIN banded b
-           ON a.doc_id < b.doc_id AND list_has_any(a.bands, b.bands)) p
-       WHERE est_jaccard >= 0.5"""
-  }
-
-  /** Recursive-CTE replay of Dedup.duplicateClusters over the minhash
-    * pairs: cluster_id = smallest doc_id reachable in the (symmetric)
-    * pair graph, singletons label themselves.
-    */
-  private def dedupComponentsOracle: String =
-    s"""WITH RECURSIVE pr AS (SELECT id_a, id_b FROM (
-         $minhashOracle) mp),
-       e AS (SELECT id_a AS src, id_b AS dst FROM pr
-             UNION SELECT id_b, id_a FROM pr),
-       reach(id, lab) AS (
-         SELECT doc_id, doc_id FROM documents
-         UNION
-         SELECT e.dst, r.lab FROM reach r JOIN e ON e.src = r.id)
-       SELECT id AS doc_id, MIN(lab) AS cluster_id
-       FROM reach GROUP BY id"""
-
-  /** Mirror of Sampling.leakageSafeSplit: the component replay's
-    * cluster_id hashed with the same score/cut arithmetic as
-    * q_det_split.
-    */
-  private def leakageSafeSplitOracle: String = {
-    val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-    val total  = splits.map(_._2).sum
-    val cum    = splits.map(_._2 / total).scanLeft(0.0)(_ + _).tail
-    val whens  = splits.init.zip(cum.init).map { case ((n, _), c) =>
-      s"WHEN sc < $c THEN '$n'"
-    }.mkString(" ")
-    s"""WITH comp AS (SELECT doc_id, cluster_id
-         FROM ($dedupComponentsOracle)),
-       scored AS (SELECT doc_id,
-         ${hashScoreSql("cluster_id")} AS sc FROM comp)
-       SELECT doc_id, CASE $whens ELSE '${splits.last._1}' END AS split
-       FROM scored"""
-  }
-
-  /** Mirrors Sampling.deterministicSplit(train .8/val .1/test .1):
-    * score = int value of the first 15 md5 hex digits / 16^15, CASE on
-    * the same cut literals the engine computes (Double.toString embeds
-    * the exact doubles, so the boundary bits cannot drift).
-    */
-  private def detSplitOracle: String = {
-    val hexVal =
-      "list_sum(list_transform(generate_series(1, 15), i -> " +
-      "(strpos('0123456789abcdef', " +
-      "substring(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT" +
-      " * (1::BIGINT << (4 * (15 - i)))))"
-    val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-    val total  = splits.map(_._2).sum
-    val cum    = splits.map(_._2 / total).scanLeft(0.0)(_ + _).tail
-    val whens  = splits.init.zip(cum.init).map { case ((n, _), c) =>
-      s"WHEN sc < $c THEN '$n'"
-    }.mkString(" ")
-    s"""WITH s AS (SELECT doc_id,
-         ($hexVal)::DOUBLE / 1152921504606846976.0 AS sc
-       FROM documents)
-       SELECT doc_id, CASE $whens ELSE '${splits.last._1}' END AS split
-       FROM s"""
-  }
-
-  /** DuckDB replica of HashFunctions.stableHash60 (top 60 md5 bits). */
-  private def hash60Sql(expr: String): String =
-    "list_sum(list_transform(generate_series(1, 15), i -> " +
-    "(strpos('0123456789abcdef', " +
-    s"substring(md5($expr), i, 1)) - 1)::BIGINT" +
-    " * (1::BIGINT << (4 * (15 - i)))))"
-
-  /** Budgets exercised by q_budget_sample: two partial sources, one
-    * single-doc admission (budget 1), one fully-kept source.
-    */
-  private val budgetSampleBudgets: Map[String, Long] = Map(
-    "src0" -> 4000L, "src1" -> 2000L, "src3" -> 1L,
-    "src7" -> 99999999L)
-
-  /** Window-sum replay of Sampling.budgetSample: a doc is kept iff
-    * the token mass strictly before it (hash-priority order within
-    * its source) is under the source's budget. The engine computes
-    * the same exclusive sums via the range-partitioned prefix path —
-    * same integers, different plan shape.
-    */
-  private def budgetSampleOracle: String = {
-    val bs = budgetSampleBudgets.toSeq.sortBy(_._1)
-    val inList = bs.map(b => s"'${b._1}'").mkString(", ")
-    val caseB = bs.map { case (s, b) => s"WHEN '$s' THEN $b" }
-      .mkString(" ")
-    s"""WITH s AS (SELECT doc_id, source, n_chars,
-         ${hashScoreSql("doc_id")} AS sc
-       FROM documents WHERE source IN ($inList)),
-     c AS (SELECT doc_id, source, n_chars,
-         COALESCE(SUM(n_chars) OVER (PARTITION BY source
-           ORDER BY sc, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS excl
-       FROM s)
-     SELECT doc_id, source, n_chars FROM c
-     WHERE excl < CASE source $caseB ELSE 0 END"""
-  }
-
-  /** Mirrors Sampling.temperatureMix(α=½, budget 30000) over the
-    * imbalanced derivation: sqrt-mass weights, Σw as a LEFT fold in
-    * source order (list_reduce == the driver's foldLeft), floor'd
-    * budgets, then the same hashed-prefix-sum selection as
-    * q_budget_sample with the budgets JOINED instead of inlined.
-    */
-  private def temperatureMixOracle: String =
-    s"""WITH d AS (SELECT doc_id, source, n_chars FROM documents
-         WHERE doc_id % 20 <= CAST(substring(source, 4) AS INT)),
-       m AS (SELECT source, SUM(n_chars)::BIGINT AS mm FROM d
-         GROUP BY 1 HAVING SUM(n_chars) > 0),
-       w AS (SELECT source, sqrt(mm::DOUBLE) AS ww FROM m),
-       sw AS (SELECT list_reduce(list(ww ORDER BY source),
-           (a, b) -> a + b) AS s FROM w),
-       b AS (SELECT w.source,
-           CAST(floor(30000 * w.ww / sw.s) AS BIGINT) AS bud
-         FROM w, sw),
-       sdf AS (SELECT doc_id, source, n_chars,
-           ${hashScoreSql("doc_id")} AS sc FROM d),
-       c AS (SELECT doc_id, source, n_chars,
-           COALESCE(SUM(n_chars) OVER (PARTITION BY source
-             ORDER BY sc, doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS excl
-         FROM sdf)
-       SELECT c.doc_id, c.source, c.n_chars
-       FROM c JOIN b ON b.source = c.source WHERE c.excl < b.bud"""
-
-  /** DuckDB replica of [[Sampling.hashScore]] over an id expression. */
-  private def hashScoreSql(idExpr: String): String =
-    s"(${hash60Sql(s"CAST($idExpr AS VARCHAR)")})::DOUBLE" +
-    " / 1152921504606846976.0"
-
-  /** Whitespace tokens, the exact mirror of TextFunctions.tokens. */
-  private def tokensSql(expr: String): String =
-    s"regexp_split_to_array(trim($expr), '\\s+')"
-
-  /** Word-n-gram list from a token-array expression (mirror of
-    * TextFunctions.wordNGrams(_, n), slice-truncation edge included).
-    */
-  private def ngramsSql(ts: String, n: Int): String =
-    s"list_transform(generate_series(1, greatest(len($ts) - ${n - 1}, 1)), " +
-    s"i -> array_to_string(list_slice($ts, i, i + ${n - 1}), ' '))"
-
-  private def bigramsSql(ts: String): String = ngramsSql(ts, 2)
-
-  /** Mirror of Decontaminate.flagContaminated(n=5) with the every-50th
-    * doc as the simulated benchmark; n_hits counts DISTINCT shared
-    * grams (both sides deduplicate their gram lists).
-    */
-  private def decontaminateOracle: String = {
-    val grams = ngramsSql(tokensSql("text"), 5)
-    s"""WITH bg AS (SELECT DISTINCT UNNEST(list_distinct($grams)) AS gram
-         FROM documents WHERE doc_id % 50 = 0),
-       dg AS (SELECT doc_id, UNNEST(list_distinct($grams)) AS gram
-         FROM documents)
-       SELECT doc_id, COUNT(*) AS n_hits
-       FROM dg JOIN bg USING (gram) GROUP BY doc_id"""
-  }
-
-  /** Positional 8-gram hash index over documents — mirror of
-    * SubstringDedup.positionalGrams(n=8): 0-based pos, slice-truncation
-    * edge for short docs, hash60 of the gram string.
-    */
-  private def substringGramsSql: String = {
-    val ts = tokensSql("text")
-    s"""SELECT doc_id, pos, ${hash60Sql("gram")} AS h FROM (
-         SELECT doc_id, UNNEST(list_transform(
-           generate_series(1, greatest(len(ts) - 7, 1)),
-           j -> {'pos': CAST(j - 1 AS BIGINT),
-                 'gram': array_to_string(list_slice(ts, j, j + 7), ' ')}),
-           recursive := true)
-         FROM (SELECT doc_id, $ts AS ts FROM documents))"""
-  }
-
-  /** Mirror of SubstringDedup.repeatedSpanStats(n=8, minDocs=2). */
-  private def substringRepOracle: String = {
-    val ts = tokensSql("text")
-    s"""WITH g AS ($substringGramsSql),
-       rep AS (SELECT h FROM g GROUP BY h
-         HAVING COUNT(DISTINCT doc_id) >= 2),
-       r AS (SELECT doc_id, COUNT(*) AS n_rep
-         FROM g JOIN rep USING (h) GROUP BY doc_id),
-       tot AS (SELECT doc_id,
-         CAST(greatest(len($ts) - 7, 1) AS BIGINT) AS n_grams
-         FROM documents)
-       SELECT tot.doc_id, n_grams,
-         CAST(COALESCE(n_rep, 0) AS BIGINT) AS n_rep,
-         COALESCE(n_rep, 0)::DOUBLE / n_grams AS rep_frac
-       FROM tot LEFT JOIN r USING (doc_id)"""
-  }
-
-  /** Mirror of SubstringDedup.removeRepeatedSpans(n=8, minDocs=2). */
-  private def substringScrubOracle: String = {
-    val ts = tokensSql("text")
-    s"""WITH t AS (SELECT doc_id, $ts AS ts FROM documents),
-       g AS ($substringGramsSql),
-       rep AS (SELECT h, MIN(doc_id) AS keeper FROM g GROUP BY h
-         HAVING COUNT(DISTINCT doc_id) >= 2),
-       cov AS (SELECT DISTINCT doc_id, tp FROM (
-         SELECT g.doc_id,
-           UNNEST(generate_series(g.pos, g.pos + 7)) AS tp
-         FROM g JOIN rep USING (h) WHERE g.doc_id <> rep.keeper)),
-       tok AS (SELECT doc_id, UNNEST(list_transform(
-           generate_series(1, len(ts)),
-           j -> {'tp': CAST(j - 1 AS BIGINT), 'tok': ts[j]}),
-         recursive := true) FROM t),
-       kept AS (SELECT doc_id,
-           string_agg(tok, ' ' ORDER BY tp) AS clean_text,
-           COUNT(*) AS n_kept
-         FROM tok ANTI JOIN cov USING (doc_id, tp)
-         GROUP BY doc_id),
-       tot AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS total FROM t)
-       SELECT tot.doc_id, COALESCE(clean_text, '') AS clean_text,
-         CAST(COALESCE(n_kept, 0) AS BIGINT) AS n_kept,
-         CAST(total - COALESCE(n_kept, 0) AS BIGINT) AS n_removed
-       FROM tot LEFT JOIN kept USING (doc_id)"""
-  }
-
-  /** max over distinct repeated bigrams of count·len, 0 when nothing
-    * repeats (mirror of TextFunctions.topBigramCharFraction's
-    * numerator).
-    */
-  private def topBigramBestSql(grams: String): String =
-    s"list_max(list_transform(list_distinct($grams), " +
-    s"g -> CASE WHEN len(list_filter($grams, x -> x = g)) > 1 " +
-    s"THEN len(list_filter($grams, x -> x = g))::BIGINT * length(g) " +
-    s"ELSE 0::BIGINT END))"
-
-  private def stopwordsArraySql: String =
-    graft.functions.TextFunctions.Stopwords
-      .map(w => s"'$w'").mkString("[", ",", "]")
-
-  /** The redaction chain is folded from [[graft.functions.TextFunctions
-    * .PiiPatterns]] itself — the oracle regexes cannot drift from the
-    * operator's (the patterns avoid every Java-vs-RE2 divergence:
-    * no backrefs, no lookarounds, no shorthand classes).
-    */
-  private def piiRedactOracle: String = {
-    val base =
-      "text || ' reach user' || CAST(doc_id AS VARCHAR) || " +
-      "'@mail.example.org or host ' || " +
-      "CAST((doc_id % 200) + 10 AS VARCHAR) || " +
-      "'.20.30.40, tel +1 (555) 010-' || " +
-      "lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')"
-    val redacted = graft.functions.TextFunctions.PiiPatterns
-      .foldLeft(base) { case (e, (pat, tag)) =>
-        s"regexp_replace($e, '$pat', '$tag', 'g')"
-      }
-    s"SELECT doc_id, $redacted AS clean FROM documents"
-  }
-
-  /** Mirror of TextFunctions.redactPiiFull: email pass, then the
-    * Luhn-filtered candidate replace fold (list_prepend + list_reduce
-    * replays Spark's aggregate-with-init), then IPv4 + phone. The
-    * candidate pattern and chain order come from the operator's own
-    * constants.
-    */
-  private def redactCardsOracle: String = {
-    val pats = graft.functions.TextFunctions.PiiPatterns
-    val cardPat = graft.functions.TextFunctions.CardCandidatePattern
-    val base =
-      """text ||
-        CASE WHEN doc_id % 3 = 0 THEN ' pay 4111 1111 1111 1111 now'
-             WHEN doc_id % 3 = 1 THEN ' amex 378282246310005 ok'
-             ELSE ' card 5555-5555-5555-4444 used' END ||
-        ' order 4111 1111 1111 1112 kept, ip 10.1.2.3, mail a@b.io'"""
-    val t1 =
-      s"regexp_replace($base, '${pats(0)._1}', '${pats(0)._2}', 'g')"
-    val dg = "regexp_replace(x, '[^0-9]', '', 'g')"
-    def digit(i: String) =
-      s"CAST(substr($dg, length($dg) - $i + 1, 1) AS INT)"
-    val luhn =
-      s"""list_sum(list_transform(generate_series(1, length($dg)),
-         i -> CASE WHEN i % 2 = 0
-           THEN CASE WHEN ${digit("i")} * 2 > 9
-             THEN ${digit("i")} * 2 - 9 ELSE ${digit("i")} * 2 END
-           ELSE ${digit("i")} END))"""
-    val valid =
-      s"""list_filter(list_distinct(regexp_extract_all(t1,
-         '$cardPat')), x -> length($dg) BETWEEN 13 AND 19
-         AND $luhn % 10 = 0)"""
-    val carded =
-      s"""list_reduce(list_prepend(t1, $valid),
-         (acc, x) -> replace(acc, x, '<CARD>'))"""
-    val full = pats.tail.foldLeft(carded) { case (e, (p, tag)) =>
-      s"regexp_replace($e, '$p', '$tag', 'g')"
-    }
-    s"""SELECT doc_id, $full AS clean
-       FROM (SELECT doc_id, $t1 AS t1 FROM documents) z"""
-  }
-
-  /** Mirror of TextFunctions.redactIbans over the planted IBANs:
-    * the candidate regex comes from IbanCandidatePattern, the mod-97
-    * fold is replayed as an ENCODED list_reduce — each char maps to
-    * `multiplier·1000 + value` (digits → 10·1000+d, letters →
-    * 100·1000+(A=10…Z=35)) and the fold is
-    * `(acc · (x // 1000) + x % 1000) % 97` from a prepended 0, the
-    * exact per-step reduction the Column tree does.
-    */
-  private def redactIbanOracle: String = {
-    // DuckDB default strings are not backslash-escaped, so the Java/
-    // RE2-shared pattern embeds verbatim
-    val pat = graft.functions.TextFunctions.IbanCandidatePattern
-    val base =
-      """text ||
-        CASE WHEN doc_id % 4 = 0 THEN ' acct DE89370400440532013000 eom'
-             WHEN doc_id % 4 = 1
-               THEN ' acct GB29 NWBK 6016 1331 9268 19 REF7 eom'
-             WHEN doc_id % 4 = 2 THEN ' near DE89370400440532013001 eom'
-             ELSE ' wire FR1420041010050500013M02606 eom' END ||
-        ' ref AB12CDEF kept'"""
-    def compact(v: String)  = s"replace($v, ' ', '')"
-    def rr(v: String) =
-      s"(substr(${compact(v)}, 5) || substr(${compact(v)}, 1, 4))"
-    def chx(v: String) = s"ascii(substr(${rr(v)}, i, 1))"
-    def enc(v: String) =
-      s"""list_transform(generate_series(1, length(${rr(v)})),
-         i -> CASE WHEN ${chx(v)} BETWEEN 48 AND 57
-           THEN 10 * 1000 + (${chx(v)} - 48)
-           ELSE 100 * 1000 + (${chx(v)} - 55) END)"""
-    def residue(v: String) =
-      s"""list_reduce(list_prepend(CAST(0 AS BIGINT), ${enc(v)}),
-         (acc, e) -> (acc * (e // 1000) + e % 1000) % 97)"""
-    // space-boundary prefixes of a candidate x, longest valid one
-    // (DuckDB's l[-1] on an empty list is NULL, pruned below)
-    val prefixes =
-      s"""list_transform(generate_series(1,
-           len(string_split(x, ' '))),
-         k -> array_to_string(
-           list_slice(string_split(x, ' '), 1, k), ' '))"""
-    val validList =
-      s"""list_filter($prefixes,
-         p -> length(${compact("p")}) BETWEEN 15 AND 34
-           AND ${residue("p")} = 1)"""
-    val bests =
-      s"""list_distinct(list_filter(
-         list_transform(list_distinct(regexp_extract_all(b, '$pat')),
-           x -> ($validList)[-1]),
-         v -> v IS NOT NULL))"""
-    s"""SELECT doc_id,
-       list_reduce(list_prepend(b, $bests),
-         (acc, x) -> replace(acc, x, '<IBAN>')) AS clean
-       FROM (SELECT doc_id, $base AS b FROM documents) z"""
-  }
-
-  /** Mirror of TextFunctions.extractUrls → urlDomains over the planted
-    * URLs; the regex literals come from UrlPattern (single quotes
-    * SQL-escaped) so query and oracle cannot drift.
-    */
-  private def urlDomainsOracle: String = {
-    val pat = graft.functions.TextFunctions.UrlPattern
-      .replace("'", "''")
-    val psl = graft.functions.TextFunctions.MultiPartSuffixes
-      .map("'" + _ + "'").mkString(", ")
-    val psl3 = graft.functions.TextFunctions.ThreePartSuffixes
-      .map("'" + _ + "'").mkString(", ")
-    s"""WITH u AS (SELECT doc_id, regexp_extract_all(
-         text || ' see https://sub' || CAST(doc_id % 7 AS VARCHAR)
-           || '.site' || CAST(doc_id % 13 AS VARCHAR)
-           || '.org/page/' || CAST(doc_id AS VARCHAR)
-           || ' and http://ads' || CAST(doc_id % 3 AS VARCHAR)
-           || '.example.net/x'
-           || ' plus https://shop.brand' || CAST(doc_id % 5 AS VARCHAR)
-           || '.co.uk/p'
-           || ' or https://www.dist' || CAST(doc_id % 4 AS VARCHAR)
-           || '.k12.ca.us/home',
-         '$pat') AS urls FROM documents),
-       e AS (SELECT doc_id, UNNEST(list_transform(
-           generate_series(1, len(urls)),
-           i -> {'url_idx': CAST(i - 1 AS BIGINT), 'u': urls[i]}),
-         recursive := true) FROM u),
-       h AS (SELECT doc_id, url_idx,
-         regexp_replace(regexp_replace(lower(u), '^https?://', ''),
-           '[/:].*$$', '') AS host FROM e),
-       p AS (SELECT doc_id, url_idx, host,
-         string_split(host, '.') AS parts FROM h),
-       d AS (SELECT doc_id, url_idx,
-         CASE WHEN len(parts) <= 2 THEN host
-              WHEN array_to_string(parts[-3:], '.') IN ($psl3)
-                AND len(parts) >= 4
-                THEN array_to_string(parts[-4:], '.')
-              WHEN array_to_string(parts[-2:], '.') IN ($psl)
-                THEN array_to_string(parts[-3:], '.')
-              ELSE array_to_string(parts[-2:], '.')
-         END AS domain FROM p)
-       SELECT doc_id, url_idx, domain,
-         domain IN ('site3.org', 'site7.org') AS blocked
-       FROM d"""
-  }
-
-  private def repetitionOracle: String = {
-    val ts = tokensSql("text")
-    s"""WITH t0 AS (SELECT doc_id, text,
-         text || chr(10) ||
-           CASE WHEN doc_id % 2 = 0 THEN text ELSE 'tail' END AS doc,
-         $ts AS ts FROM documents),
-       t1 AS (SELECT doc_id, text, doc,
-         string_split(doc, chr(10)) AS ls,
-         ${bigramsSql("ts")} AS grams FROM t0)
-       SELECT doc_id,
-         ROUND((len(ls) - len(list_distinct(ls)))::DOUBLE
-           / greatest(len(ls), 1), 6) AS dup_line_frac,
-         ROUND(list_sum(list_transform(ls, l ->
-             CASE WHEN len(list_filter(ls, x -> x = l)) > 1
-               THEN length(l) ELSE 0 END))::DOUBLE
-           / greatest(length(doc), 1), 6) AS dup_char_frac,
-         ROUND((${topBigramBestSql("grams")})::DOUBLE
-           / greatest(length(text), 1), 6) AS top_bigram_frac
-       FROM t1"""
-  }
-
-  /** Mirrors TextFunctions.defaultQualityRules rule-for-rule; the rule
-    * names in the reasons string are the same literals in the same
-    * order.
-    */
-  /** Confusion counts at the pinned thresholds, over the replayed
-    * score and keep label; ratios as single divides with 0/0 → null.
-    */
-  private def thresholdMetricsOracle: String = {
-    val ts = Seq(0.2, 0.45, 0.7, 0.95)
-    val aggs = ts.zipWithIndex.flatMap { case (t, i) => Seq(
-      s"SUM(CASE WHEN s >= $t AND y = 1.0 THEN 1 ELSE 0 END) AS tp$i",
-      s"SUM(CASE WHEN s >= $t AND y = 0.0 THEN 1 ELSE 0 END) AS fp$i",
-      s"SUM(CASE WHEN s < $t AND y = 1.0 THEN 1 ELSE 0 END) AS fn$i",
-      s"SUM(CASE WHEN s < $t AND y = 0.0 THEN 1 ELSE 0 END) AS tn$i")
-    }.mkString(", ")
-    val rows = ts.zipWithIndex.map { case (t, i) =>
-      s"""SELECT $t::DOUBLE AS threshold,
-         CAST(tp$i AS BIGINT) AS tp, CAST(fp$i AS BIGINT) AS fp,
-         CAST(fn$i AS BIGINT) AS fn, CAST(tn$i AS BIGINT) AS tn,
-         CASE WHEN tp$i + fp$i > 0
-           THEN tp$i::DOUBLE / (tp$i + fp$i)::DOUBLE END AS precision,
-         CASE WHEN tp$i + fn$i > 0
-           THEN tp$i::DOUBLE / (tp$i + fn$i)::DOUBLE END AS recall
-         FROM a"""
-    }.mkString(" UNION ALL ")
-    s"""WITH sc AS ($qualityScoreOracle),
-       kp AS (SELECT doc_id, keep FROM ($qualityFilterOracle) z),
-       j AS (SELECT sc.quality AS s,
-           CASE WHEN keep THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END AS y
-         FROM sc JOIN kp USING (doc_id)
-         WHERE sc.quality IS NOT NULL AND keep IS NOT NULL),
-       a AS (SELECT $aggs FROM j)
-       $rows"""
-  }
-
-  private def qualityScoreOracle: String =
-    """SELECT doc_id,
-         (CASE WHEN length(text) BETWEEN 50 AND 5000 THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END) * 0.3::DOUBLE
-         + (CASE WHEN CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) < 0.1::DOUBLE THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END) * 0.2::DOUBLE
-         + (CASE WHEN CAST(len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               t -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','from','this','be'], t))) AS DOUBLE)
-              / GREATEST(len(regexp_split_to_array(trim(lower(text)), '\s+')), 1) > 0.05::DOUBLE
-            THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END) * 0.3::DOUBLE
-         + (CASE WHEN CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-              / GREATEST(len(regexp_split_to_array(trim(text), '\s+')), 1)
-              BETWEEN 2.0::DOUBLE AND 12.0::DOUBLE THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END) * 0.2::DOUBLE
-         AS quality
-         FROM documents"""
-
-  private def qualityFilterOracle: String =
-    qualityFilterOracleFrom("documents")
-
-  /** The quality-filter replay over any (doc_id, text) source —
-    * `src` may be a table name or an outer CTE name (DuckDB scopes
-    * outer CTEs into nested WITH subqueries).
-    */
-  private def qualityFilterOracleFrom(src: String): String = {
-    val ts = tokensSql("text")
-    s"""WITH t0 AS (SELECT doc_id, text, $ts AS ts,
-         ${tokensSql("lower(text)")} AS lts FROM $src),
-       t1 AS (SELECT doc_id, text, ts,
-         ${bigramsSql("ts")} AS grams,
-         len(list_filter(lts, t ->
-           list_contains($stopwordsArraySql, t))) AS stop_hits
-         FROM t0),
-       t2 AS (SELECT doc_id, text,
-         len(ts) BETWEEN 5 AND 100000 AS ok_wc,
-         CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
-           / greatest(len(ts), 1)
-           BETWEEN 2.0::DOUBLE AND 12.0::DOUBLE AS ok_mwl,
-         CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-           / greatest(length(text), 1) < 0.3::DOUBLE AS ok_digit,
-         CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
-           / greatest(length(text), 1) < 0.3::DOUBLE AS ok_upper,
-         stop_hits > 0 AS ok_stop,
-         (${topBigramBestSql("grams")})::DOUBLE
-           / greatest(length(text), 1) < 0.2::DOUBLE AS ok_rep
-         FROM t1)
-       SELECT doc_id,
-         ok_wc AND ok_mwl AND ok_digit AND ok_upper AND ok_stop
-           AND ok_rep AS keep,
-         CASE WHEN text IS NULL THEN NULL ELSE concat_ws(',',
-           CASE WHEN NOT ok_wc THEN 'word_count' END,
-           CASE WHEN NOT ok_mwl THEN 'mean_word_len' END,
-           CASE WHEN NOT ok_digit THEN 'digit_ratio' END,
-           CASE WHEN NOT ok_upper THEN 'upper_ratio' END,
-           CASE WHEN NOT ok_stop THEN 'stopword' END,
-           CASE WHEN NOT ok_rep THEN 'repetition' END) END AS reasons
-       FROM t2"""
-  }
-
-  private def stratifiedSampleOracle: String = {
-    val cuts = Map("en" -> 0.5, "es" -> 0.25, "zh" -> 0.75)
-      .toSeq.sortBy(_._1)
-      .map { case (s, f) => s"WHEN '$s' THEN $f::DOUBLE" }
-      .mkString(" ")
-    s"""WITH s AS (SELECT doc_id, lang,
-         ${hashScoreSql("doc_id")} AS sc FROM documents)
-       SELECT doc_id, lang FROM s
-       WHERE sc < CASE lang $cuts ELSE 1.0::DOUBLE END"""
-  }
-
-  /** Mirror of Chunking.chunkByTokens(maxTokens=64, overlap=16):
-    * stride 48, per-doc window list unnested recursively so the struct
-    * fields become columns.
-    */
-  private def chunkTokensOracle: String = {
-    val ts = tokensSql("text")
-    s"""WITH t0 AS (SELECT doc_id, $ts AS ts FROM documents
-         WHERE text IS NOT NULL),
-       t1 AS (SELECT doc_id, ts,
-         1 + CAST(ceil(GREATEST(len(ts) - 64, 0)::DOUBLE / 48) AS INT)
-           AS nc FROM t0)
-       SELECT doc_id, UNNEST(list_transform(generate_series(0, nc - 1),
-         i -> {'chunk_id': CAST(i AS BIGINT),
-               'chunk_text': array_to_string(
-                 list_slice(ts, i * 48 + 1, i * 48 + 64), ' '),
-               'chunk_tokens': CAST(len(
-                 list_slice(ts, i * 48 + 1, i * 48 + 64)) AS BIGINT)}),
-         recursive := true)
-       FROM t1"""
-  }
-
-  /** Mirror of CorpusScrub.removeRepeatedSegments(sep=" ",
-    * maxRepeats=1000): word-level segments, corpus-wide md5 counts,
-    * order-preserving reassembly, empty-doc survival via left join.
-    */
-  private def corpusScrubOracle: String =
-    """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ps
-         FROM documents),
-       segs AS (SELECT doc_id, UNNEST(list_transform(
-           generate_series(1, len(ps)),
-           i -> {'pos': i - 1, 'seg': ps[i]}), recursive := true)
-         FROM d),
-       freq AS (SELECT md5(seg) AS h, COUNT(*) AS n
-         FROM segs GROUP BY 1),
-       kept AS (SELECT s.doc_id, s.pos, s.seg
-         FROM segs s JOIN freq f ON md5(s.seg) = f.h
-         WHERE f.n <= 1000),
-       agg AS (SELECT doc_id,
-           string_agg(seg, ' ' ORDER BY pos) AS clean_text,
-           COUNT(*) AS n_kept
-         FROM kept GROUP BY doc_id)
-       SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-         COALESCE(a.n_kept, 0) AS n_kept,
-         len(d.ps) - COALESCE(a.n_kept, 0) AS n_removed
-       FROM d LEFT JOIN agg a USING (doc_id)"""
-
-  /** Mirror of chunkByTokens(32,0) | packChunks(budget=256, shards=8):
-    * same chunk windows, md5-hash shard, per-shard running sum,
-    * identical floor arithmetic.
-    */
-  private def packChunksOracle: String = {
-    val ts = tokensSql("text")
-    s"""WITH t0 AS (SELECT doc_id, $ts AS ts FROM documents
-         WHERE text IS NOT NULL),
-       t1 AS (SELECT doc_id, ts,
-         1 + CAST(ceil(GREATEST(len(ts) - 32, 0)::DOUBLE / 32) AS INT)
-           AS nc FROM t0),
-       ch AS (SELECT doc_id, UNNEST(list_transform(
-           generate_series(0, nc - 1),
-           i -> {'chunk_id': CAST(i AS BIGINT),
-                 'chunk_tokens': CAST(len(
-                   list_slice(ts, i * 32 + 1, i * 32 + 32)) AS BIGINT)}),
-         recursive := true) FROM t1),
-       sh AS (SELECT doc_id, chunk_id, chunk_tokens,
-         CAST((${hash60Sql("CAST(doc_id AS VARCHAR)")}) % 8 AS BIGINT)
-           AS shard
-         FROM ch),
-       cm AS (SELECT *, SUM(chunk_tokens) OVER (PARTITION BY shard
-         ORDER BY doc_id, chunk_id ROWS UNBOUNDED PRECEDING) AS cum
-         FROM sh)
-       SELECT doc_id, chunk_id, shard,
-         CAST(floor((cum - chunk_tokens)::DOUBLE / 256) AS BIGINT)
-           AS pack_id
-       FROM cm"""
-  }
-
-  private def simhashOracle: String = {
-    val shExpr =
-      "list_sum(list_transform(generate_series(0, 59), j -> " +
-      "CASE WHEN list_sum(list_transform(h, x -> " +
-      "CASE WHEN (x >> j) & 1 = 1 THEN 1 ELSE -1 END)) > 0 " +
-      "THEN (1::BIGINT << j) ELSE 0::BIGINT END))"
-    // blocking literals generated from the operator's own chunk table
-    // (maxDist = 3 -> 4 chunks) so query and oracle cannot drift
-    val chunkCond = Dedup.simhashChunks(4).map { case (off, w) =>
-      val mask = (1L << w) - 1
-      s"((a.sh >> $off) & $mask) = ((b.sh >> $off) & $mask)"
-    }.mkString(" OR ")
-    s"""WITH hashes AS (SELECT doc_id, $sqlTokenHashes AS h FROM documents),
-       sh AS (SELECT doc_id, $shExpr AS sh FROM hashes)
-       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
-       FROM sh a JOIN sh b ON a.doc_id < b.doc_id AND ($chunkCond)
-       WHERE bit_count(xor(a.sh, b.sh)) <= 3"""
-  }
-
-  private def ngramJaccardOracle: String =
-    """WITH toks AS (SELECT doc_id,
-         regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-       grams AS (SELECT doc_id, list_distinct(list_transform(
-         generate_series(1, greatest(len(tk) - 2, 1)),
-         i -> array_to_string(tk[i:i+2], ' '))) AS g FROM toks),
-       inv AS (SELECT doc_id, unnest(g) AS gram FROM grams),
-       freq AS (SELECT gram, count(*) AS df FROM inv GROUP BY gram),
-       kept AS (SELECT doc_id, gram FROM inv JOIN freq USING (gram)
-         WHERE df <= 1000),
-       cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM kept a JOIN kept b USING (gram) WHERE a.doc_id < b.doc_id
-         GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-       SELECT id_a, id_b, jaccard FROM (
-         SELECT id_a, id_b,
-           len(list_intersect(ga.g, gb.g))::DOUBLE /
-             (len(ga.g) + len(gb.g) - len(list_intersect(ga.g, gb.g)))
-             AS jaccard
-         FROM cand JOIN grams ga ON ga.doc_id = cand.id_a
-                   JOIN grams gb ON gb.doc_id = cand.id_b) v
-       WHERE jaccard >= 0.8"""
-
-  /** Same candidate construction as the Jaccard replay; containment
-    * normalizes by the smaller gram set and names the contained side
-    * (smaller set; ties to the lower id).
-    */
-  private def ngramContainmentOracle: String =
-    """WITH toks AS (SELECT doc_id,
-         regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-       grams AS (SELECT doc_id, list_distinct(list_transform(
-         generate_series(1, greatest(len(tk) - 2, 1)),
-         i -> array_to_string(tk[i:i+2], ' '))) AS g FROM toks),
-       inv AS (SELECT doc_id, unnest(g) AS gram FROM grams),
-       freq AS (SELECT gram, count(*) AS df FROM inv GROUP BY gram),
-       kept AS (SELECT doc_id, gram FROM inv JOIN freq USING (gram)
-         WHERE df <= 1000),
-       cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM kept a JOIN kept b USING (gram) WHERE a.doc_id < b.doc_id
-         GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-       SELECT id_a, id_b, containment,
-         CASE WHEN la < lb THEN id_a
-              WHEN lb < la THEN id_b ELSE id_a END AS contained_id
-       FROM (
-         SELECT id_a, id_b, len(ga.g) AS la, len(gb.g) AS lb,
-           len(list_intersect(ga.g, gb.g))::DOUBLE /
-             least(len(ga.g), len(gb.g))::DOUBLE AS containment
-         FROM cand JOIN grams ga ON ga.doc_id = cand.id_a
-                   JOIN grams gb ON gb.doc_id = cand.id_b) v
-       WHERE containment >= 0.8"""
-
-  private val QuantilePs = Seq(0.0, 0.25, 0.5, 0.75, 0.9, 1.0)
-
-  /** Mirror of ColumnStats.exactQuantiles: the SAME value-count →
-    * running-cum → rank-range-join → interpolation formula, operation
-    * for operation, so the doubles agree bit-wise. Parameterized per
-    * column so describe() reuses it as a scalar subquery.
-    */
-  private def quantilesSqlFor(table: String, column: String,
-      ps: Seq[Double], selectList: String): String = {
-    val pts = ps.map(p => s"($p::DOUBLE)").mkString(", ")
-    s"""WITH vals AS (SELECT $column::DOUBLE AS v
-         FROM $table WHERE $column IS NOT NULL),
-       counts AS (SELECT v, COUNT(*) AS c FROM vals GROUP BY v),
-       cumt AS (SELECT v, c, SUM(c) OVER (ORDER BY v
-         ROWS UNBOUNDED PRECEDING) AS cum FROM counts),
-       cc AS (SELECT v, cum - c AS lo_rank, cum FROM cumt),
-       nn AS (SELECT COUNT(*) AS n FROM vals),
-       pts AS (SELECT * FROM (VALUES $pts) AS t(p)),
-       ranked AS (SELECT p, n, p * (n - 1)::DOUBLE AS r,
-         CAST(floor(p * (n - 1)::DOUBLE) AS BIGINT) AS ri_lo,
-         CAST(ceil(p * (n - 1)::DOUBLE) AS BIGINT) AS ri_hi
-         FROM pts CROSS JOIN nn),
-       lov AS (SELECT p, n, r, ri_lo, ri_hi, v AS v_lo FROM ranked
-         JOIN cc ON lo_rank <= ri_lo AND ri_lo < cum)
-       SELECT $selectList
-       FROM lov JOIN cc ON cc.lo_rank <= ri_hi AND ri_hi < cc.cum"""
-  }
-
-  private def quantilesOracle: String =
-    quantilesSqlFor("lineitem", "l_extendedprice", QuantilePs,
-      "p, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE) AS quantile, n")
-
-  /** Group-partitioned variant of [[quantilesSqlFor]] — mirror of
-    * ColumnStats.groupedExactQuantiles.
-    */
-  private def groupedQuantilesSqlFor(table: String, groupCol: String,
-      column: String, ps: Seq[Double], selectList: String): String = {
-    val pts = ps.map(p => s"($p::DOUBLE)").mkString(", ")
-    s"""WITH vals AS (SELECT $groupCol AS g, $column::DOUBLE AS v
-         FROM $table
-         WHERE $groupCol IS NOT NULL AND $column IS NOT NULL),
-       counts AS (SELECT g, v, COUNT(*) AS c FROM vals GROUP BY g, v),
-       cumt AS (SELECT g, v, c, SUM(c) OVER (PARTITION BY g ORDER BY v
-         ROWS UNBOUNDED PRECEDING) AS cum FROM counts),
-       cc AS (SELECT g, v, cum - c AS lo_rank, cum FROM cumt),
-       nn AS (SELECT g, COUNT(*) AS n FROM vals GROUP BY g),
-       pts AS (SELECT * FROM (VALUES $pts) AS t(p)),
-       ranked AS (SELECT g, p, n, p * (n - 1)::DOUBLE AS r,
-         CAST(floor(p * (n - 1)::DOUBLE) AS BIGINT) AS ri_lo,
-         CAST(ceil(p * (n - 1)::DOUBLE) AS BIGINT) AS ri_hi
-         FROM nn CROSS JOIN pts),
-       lov AS (SELECT ranked.g, p, n, r, ri_lo, ri_hi, cc.v AS v_lo
-         FROM ranked JOIN cc ON ranked.g = cc.g
-           AND lo_rank <= ri_lo AND ri_lo < cum)
-       SELECT $selectList
-       FROM lov JOIN cc ON lov.g = cc.g
-         AND cc.lo_rank <= ri_hi AND ri_hi < cc.cum"""
-  }
-
-  /** Mirror of ColumnStats.groupedDescribe over l_returnflag. */
-  private def groupedDescribeOracle: String =
-    Seq("l_quantity", "l_discount").map { c =>
-      val med = groupedQuantilesSqlFor("lineitem", "l_returnflag", c,
-        Seq(0.5),
-        "lov.g AS g, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE)" +
-        " AS median_v")
-      s"""SELECT b.g AS flag, '$c' AS column_name, n_total, n_nonnull,
-           min_v, max_v, mean_v, m.median_v
-         FROM (SELECT l_returnflag AS g, COUNT(*) AS n_total,
-             COUNT($c) AS n_nonnull,
-             MIN($c)::DOUBLE AS min_v, MAX($c)::DOUBLE AS max_v,
-             SUM(CAST($c AS DECIMAL(28,6)))::DOUBLE / COUNT($c)
-               AS mean_v
-           FROM lineitem WHERE l_returnflag IS NOT NULL
-           GROUP BY 1) b
-         LEFT JOIN ($med) m ON b.g = m.g"""
-    }.mkString(" UNION ALL ")
-
-  /** Mirror of ColumnStats.describeNumeric: per column, the exact base
-    * aggregates plus the quantile CTE as a scalar median subquery.
-    */
-  private def describeOracle: String =
-    Seq("l_quantity", "l_extendedprice", "l_discount").map { c =>
-      val medianSub = quantilesSqlFor("lineitem", c, Seq(0.5),
-        "v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE)")
-      s"""SELECT '$c' AS column_name, COUNT(*) AS n_total,
-          COUNT($c) AS n_nonnull,
-          MIN($c)::DOUBLE AS min_v, MAX($c)::DOUBLE AS max_v,
-          SUM(CAST($c AS DECIMAL(28,6)))::DOUBLE / COUNT($c) AS mean_v,
-          ($medianSub) AS median_v
-        FROM lineitem"""
-    }.mkString(" UNION ALL ")
-
-  /** q_mojibake plants, explicit code points so the oracle replays
-    * byte-for-byte: (0) UTF-8-as-Latin-1 'é' ('Ã'+U+00A9), (1) a
-    * replacement char, (2) Latin-1 mis-decoded smart quotes
-    * ('â'+U+0080+U+0099/9C/9D), (3) CLEAN accents that must NOT
-    * count, (4) cp1252 mis-decoded ellipsis/left-quote —
-    * 'â'+U+20AC+U+00A6 and 'â'+U+20AC+U+0153 (bytes E2 80 A6 /
-    * E2 80 9C read as Windows-1252).
-    */
-  private val MojiPlants: Seq[String] = Seq(
-    " caf\u00c3\u00a9 r\u00c3\u00a9sum\u00c3\u00a9",
-    " bad\ufffdchar",
-    " it\u00e2\u0080\u0099s \u00e2\u0080\u009cquoted\u00e2\u0080\u009d",
-    " caf\u00e9 r\u00e9sum\u00e9 na\u00efve",
-    " wait\u00e2\u20ac\u00a6 \u00e2\u20ac\u0153ok")
-
-  /** q_fix_encoding probe: clean text covering 2-byte accents, smart
-    * punctuation (3-byte UTF-8), cp1252 2-byte ('š'), and the
-    * undefined-cp1252-byte digraph (right double quote, byte 0x9D).
-    * No ASCII quote characters — the string embeds verbatim in a SQL
-    * literal on the oracle side.
-    */
-  private val FixProbeClean: String =
-    " café naïve – it’s “quoted”" +
-      " wait… €9.99 škola"
-
-  /** The probe mis-decoded by the same byte mapping
-    * [[graft.functions.TextFunctions.MojibakeRepairs]] inverts, plus
-    * a DOUBLY-damaged 'é' pinning the one-pass nested-repair order.
-    */
-  private val FixProbeDamaged: String =
-    FixProbeClean.flatMap(ch =>
-      if (ch < 0x80) ch.toString else T.mojibakeOf(ch)) +
-      " " + T.mojibakeOf('é').flatMap(T.mojibakeOf)
-
-  /** What fixEncoding must produce from [[FixProbeDamaged]]. */
-  private val FixProbeFixed: String = FixProbeClean + " é"
-
-  /** (column, integer-grid scale) pairs for q_feature_corr: dollar
-    * grid for the big measure, percent grid for the small rates —
-    * chosen so every exact sum stays under 2^53 at sf0.1 and beyond.
-    */
-  private val corrCols: Seq[(String, Int)] = Seq(
-    "l_quantity" -> 1, "l_extendedprice" -> 1,
-    "l_discount" -> 100, "l_tax" -> 100)
-
-  /** Mirror of ColumnStats.correlationMatrix: same integer grid, the
-    * engine's exact HUGEINT sums converted to double once (values
-    * < 2^53, so conversion is value-exact), then the identical fixed
-    * shape of IEEE ops — bit-identical correlations.
-    */
-  private def featureCorrOracle: String = {
-    val names = corrCols.map(_._1)
-    val quant = corrCols.zipWithIndex.map { case ((c, sc), i) =>
-      s"CAST(round($c * $sc, 0) AS BIGINT) AS c$i"
-    }.mkString(", ")
-    val notNull = names.map(c => s"$c IS NOT NULL").mkString(" AND ")
-    val sums = names.indices.map(i =>
-      s"CAST(SUM(c$i) AS DOUBLE) AS s$i") ++
-      (for { i <- names.indices; j <- i until names.length }
-        yield s"CAST(SUM(c$i*c$j) AS DOUBLE) AS p${i}_$j")
-    val cells = for {
-      i <- names.indices; j <- (i + 1) until names.length
-    } yield {
-      val (num, da, db) = (s"(n*p${i}_$j - s$i*s$j)",
-        s"(n*p${i}_$i - s$i*s$i)", s"(n*p${j}_$j - s$j*s$j)")
-      s"""SELECT '${names(i)}' AS col_x, '${names(j)}' AS col_y,
-          CASE WHEN $da > 0 AND $db > 0
-            THEN $num / (sqrt($da) * sqrt($db)) END AS corr FROM s"""
-    }
-    s"""WITH f AS (SELECT $quant FROM lineitem WHERE $notNull),
-       s AS (SELECT COUNT(*)::DOUBLE AS n, ${sums.mkString(", ")}
-         FROM f)
-       ${cells.mkString(" UNION ALL ")}"""
-  }
-
-  /** [[featureCorrOracle]] keyed by l_returnflag — mirror of
-    * ColumnStats.groupedCorrelationMatrix.
-    */
-  private def groupedCorrOracle: String = {
-    val names = corrCols.map(_._1)
-    val quant = corrCols.zipWithIndex.map { case ((c, sc), i) =>
-      s"CAST(round($c * $sc, 0) AS BIGINT) AS c$i"
-    }.mkString(", ")
-    val notNull = names.map(c => s"$c IS NOT NULL").mkString(" AND ")
-    val sums = names.indices.map(i =>
-      s"CAST(SUM(c$i) AS DOUBLE) AS s$i") ++
-      (for { i <- names.indices; j <- i until names.length }
-        yield s"CAST(SUM(c$i*c$j) AS DOUBLE) AS p${i}_$j")
-    val cells = for {
-      i <- names.indices; j <- (i + 1) until names.length
-    } yield {
-      val (num, da, db) = (s"(n*p${i}_$j - s$i*s$j)",
-        s"(n*p${i}_$i - s$i*s$i)", s"(n*p${j}_$j - s$j*s$j)")
-      s"""SELECT l_returnflag, '${names(i)}' AS col_x,
-          '${names(j)}' AS col_y,
-          CASE WHEN $da > 0 AND $db > 0
-            THEN $num / (sqrt($da) * sqrt($db)) END AS corr FROM s"""
-    }
-    s"""WITH f AS (SELECT l_returnflag, $quant FROM lineitem
-         WHERE $notNull),
-       s AS (SELECT l_returnflag, COUNT(*)::DOUBLE AS n,
-           ${sums.mkString(", ")}
-         FROM f GROUP BY l_returnflag)
-       ${cells.mkString(" UNION ALL ")}"""
-  }
-
-  /** Composed replay for q_centroid_outliers: re-quantized per-label
-    * centroids (one double divide + HALF_UP round per component),
-    * exact int64 squared distances, grouped-quantile threshold.
-    */
-  private def centroidOutliersOracle: String = {
-    val distCtes =
-      s"""v AS (SELECT vec_id, label,
-           ${sqlQuantize("embedding")} AS qv FROM embeddings
-           WHERE label IS NOT NULL AND embedding IS NOT NULL),
-         pp AS (SELECT label, UNNEST(list_transform(
-             generate_series(1, len(qv)),
-             i -> {'pos': i, 'q': qv[i]}),
-           recursive := true) FROM v),
-         cs AS (SELECT label, pos,
-             CAST(round(SUM(q)::DOUBLE / COUNT(*), 0) AS BIGINT) AS qc
-           FROM pp GROUP BY label, pos),
-         d AS (SELECT v.vec_id, v.label,
-             CAST(SUM((qv[pos] - qc) * (qv[pos] - qc)) AS BIGINT)
-               AS dist2
-           FROM v JOIN cs ON v.label = cs.label
-           GROUP BY 1, 2)"""
-    val distTable =
-      s"(WITH $distCtes SELECT vec_id, label, dist2 FROM d) ddt"
-    val thSql = groupedQuantilesSqlFor(distTable, "label", "dist2",
-      Seq(0.95),
-      "lov.g AS g, v_lo + (cc.v - v_lo) * (r - ri_lo::DOUBLE)" +
-        " AS quantile")
-    s"""WITH $distCtes,
-       th AS (SELECT g, quantile FROM ($thSql) z)
-       SELECT d.vec_id, d.label, d.dist2,
-         d.dist2::DOUBLE > th.quantile AS is_outlier
-       FROM d JOIN th ON d.label = th.g"""
-  }
-
-  /** Mirror of VectorStats.groupCentroids: quantized int64 per-dim
-    * sums, exact-integer division only at the end.
-    */
-  private def groupCentroidsOracle: String =
-    s"""WITH v AS (SELECT label,
-         ${sqlQuantize("embedding")} AS qv FROM embeddings),
-       p AS (SELECT label, UNNEST(list_transform(
-           generate_series(1, len(qv)),
-           i -> {'pos': CAST(i - 1 AS BIGINT), 'q': qv[i]}),
-         recursive := true) FROM v)
-       SELECT label, pos,
-         SUM(q)::DOUBLE / (COUNT(*) * 1000) AS centroid,
-         COUNT(*) AS n_vectors
-       FROM p GROUP BY label, pos"""
-
-  /** Per-dimension exact sums of the parity-half snapshots, then the
-    * same int-sum → double mean arithmetic as the Spark side.
-    */
-  private def embeddingDriftOracle: String = {
-    def half(name: String, parity: Int) =
-      s"""$name AS (SELECT pos, SUM(q) AS sq, COUNT(*) AS n FROM (
-         SELECT UNNEST(list_transform(generate_series(1, len(qv)),
-           i -> {'pos': CAST(i - 1 AS BIGINT), 'q': qv[i]}),
-           recursive := true)
-         FROM (SELECT ${sqlQuantize("embedding")} AS qv
-           FROM embeddings WHERE vec_id % 2 = $parity) v) p
-         GROUP BY pos)"""
-    s"""WITH ${half("sa", 0)}, ${half("sb", 1)}
-       SELECT sa.pos, CAST(sa.n AS BIGINT) AS n_a,
-         CAST(sb.n AS BIGINT) AS n_b,
-         sa.sq::DOUBLE / (sa.n * 1000) AS mean_a,
-         sb.sq::DOUBLE / (sb.n * 1000) AS mean_b,
-         sa.sq::DOUBLE / (sa.n * 1000) -
-           sb.sq::DOUBLE / (sb.n * 1000) AS shift
-       FROM sa JOIN sb ON sa.pos = sb.pos"""
-  }
-
-  /** Quantize mirror: milli-unit int64 vector. */
-  private def sqlQuantize(v: String): String =
-    s"list_transform($v, x -> CAST(round(x::DOUBLE * 1000, 0) AS BIGINT))"
-
-  private def sqlDotQ(a: String, b: String, dim: Int): String =
-    s"list_sum(list_transform(generate_series(1, $dim), i -> $a[i] * $b[i]))"
-
-  /** Shared SQ8 grid CTEs: per-dimension exact milli-unit min/span
-    * rebuilt from scratch, then all-integer byte codes
-    * `((q_i − min_i) · 255) // span_i` (both engines' integer
-    * division truncates; operands are non-negative).
-    */
-  private def sq8GridCtes: String =
-    s"""qv AS (SELECT vec_id, ${sqlQuantize("embedding")} AS q
-         FROM embeddings),
-       dm AS (SELECT t.i AS i, MIN(q[t.i]) AS mn, MAX(q[t.i]) AS mx
-         FROM qv, LATERAL unnest(generate_series(1, 64)) AS t(i)
-         GROUP BY t.i),
-       g AS (SELECT list(mn ORDER BY i) AS mins,
-           list(mx - mn ORDER BY i) AS spans FROM dm),
-       codes AS (SELECT vec_id, q,
-           list_transform(generate_series(1, 64), i ->
-             CASE WHEN spans[i] = 0 THEN 0
-             ELSE ((q[i] - mins[i]) * 255) // spans[i] END) AS cc
-         FROM qv, g)"""
-
-  private def sq8EncodeOracle: String =
-    s"""WITH $sq8GridCtes
-       SELECT vec_id, CAST(t.i AS BIGINT) AS dim,
-         CAST(cc[t.i] AS BIGINT) AS code
-       FROM codes, LATERAL unnest(generate_series(1, 64)) AS t(i)"""
-
-  private def sq8TopKOracle: String = {
-    val cdot = sqlDotQ("qc", "c.cc", 64)
-    val dot = sqlDotQ("qv2", "cv", 64)
-    val naa = sqlDotQ("qv2", "qv2", 64)
-    val nbb = sqlDotQ("cv", "cv", 64)
-    s"""WITH $sq8GridCtes,
-       qq AS (SELECT vec_id AS query_id, cc AS qc, q AS qv2
-         FROM codes WHERE vec_id < 5),
-       coarse AS (SELECT query_id, c.vec_id AS neighbor_id,
-           CAST(($cdot) AS BIGINT) AS cdot, qv2, c.q AS cv
-         FROM qq JOIN codes c ON query_id <> c.vec_id),
-       cand AS (SELECT * FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY cdot DESC, neighbor_id) AS crank FROM coarse) z
-         WHERE crank <= 50),
-       rer AS (SELECT query_id, neighbor_id,
-           ($dot)::DOUBLE / sqrt(($naa)::DOUBLE * ($nbb)::DOUBLE)
-             AS cosine
-         FROM cand)
-       SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT)
-         AS rank
-       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         ORDER BY cosine DESC, neighbor_id) AS rank FROM rer) s
-       WHERE rank <= 10"""
-  }
-
-  /** Mirror of Similarity.bruteForceTopKL2: all-integer squared
-    * distances (list_sum's HUGEINT cast back to BIGINT).
-    */
-  private def l2TopKOracle: String = {
-    val dot = sqlDotQ("qv", "cv", 64)
-    val naa = sqlDotQ("qv", "qv", 64)
-    val nbb = sqlDotQ("cv", "cv", 64)
-    s"""WITH q AS (SELECT vec_id AS query_id,
-         ${sqlQuantize("embedding")} AS qv FROM embeddings
-         WHERE vec_id < 5),
-       c AS (SELECT vec_id, ${sqlQuantize("embedding")} AS cv
-         FROM embeddings),
-       scored AS (
-         SELECT query_id, vec_id AS neighbor_id,
-           CAST(($naa) + ($nbb) - 2 * ($dot) AS BIGINT) AS dist2_q
-         FROM q JOIN c ON query_id <> vec_id)
-       SELECT query_id, neighbor_id, dist2_q, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY dist2_q ASC, neighbor_id) AS rank FROM scored) s
-       WHERE rank <= 10"""
-  }
-
-  /** Pinned PQ codebook for the oracle rows: 4 subspaces × 16 dims ×
-    * 4 constant-valued centroids. Constants chosen so all four codes
-    * win on real subvectors (milli-unit components span roughly
-    * ±500, mean ≈ 0); constant vectors keep the replayed SQL to one
-    * `(x - c)²` lambda per centroid instead of 16 literals each.
-    * Fitted codebooks (ProductQuant.pqFit) are exercised by PqSpec —
-    * a fit replay would pin the k-means, which ivfTopKOracle already
-    * covers.
-    */
-  private val pinnedPqConsts = Seq(-80L, -25L, 25L, 80L)
-  private lazy val pinnedPq: ProductQuant.PqCodebook =
-    ProductQuant.PqCodebook(Seq.fill(4)(
-      pinnedPqConsts.map(c => Seq.fill(16)(c))))
-
-  /** CTE fragment assuming `q(vec_id, qv)` exists: per-(vector,
-    * subspace, centroid) exact int64 squared distance `d2` against
-    * the pinned constant centroids, plus the argmin `codes`.
-    */
-  private def pqCodeCtes: String = {
-    val cbVals = pinnedPqConsts.zipWithIndex
-      .map { case (c, j) => s"($j, $c)" }.mkString(", ")
-    s"""d AS (SELECT vec_id, s, j,
-         list_sum(list_transform(qv[(s-1)*16+1:s*16],
-           x -> (x - c)*(x - c))) AS d2
-         FROM q
-         CROSS JOIN generate_series(1, 4) ts(s)
-         CROSS JOIN (VALUES $cbVals) cb(j, c)),
-       codes AS (SELECT vec_id, s, j AS code FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-             ORDER BY d2, j) AS rn FROM d) z
-         WHERE rn = 1)"""
-  }
-
-  /** Shared CTE body: quantize + [[pqCodeCtes]]. */
-  private def pqDistCte: String =
-    s"""q AS (SELECT vec_id, ${sqlQuantize("embedding")} AS qv
-         FROM embeddings),
-       $pqCodeCtes"""
-
-  private def pqEncodeOracle: String =
-    s"""WITH $pqDistCte
-       SELECT vec_id, CAST(s AS BIGINT) AS subspace,
-         CAST(code AS BIGINT) AS code
-       FROM codes"""
-
-  private def pqTopKOracle: String =
-    s"""WITH $pqDistCte,
-       qd AS (SELECT vec_id AS query_id, s, j, d2 FROM d
-         WHERE vec_id < 5),
-       pair AS (SELECT qd.query_id, c.vec_id AS neighbor_id,
-           CAST(SUM(qd.d2) AS BIGINT) AS adist2
-         FROM codes c JOIN qd
-           ON qd.s = c.s AND qd.j = c.code AND qd.query_id <> c.vec_id
-         GROUP BY 1, 2)
-       SELECT query_id, neighbor_id, adist2, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY adist2 ASC, neighbor_id) AS rank FROM pair) z
-       WHERE rank <= 10"""
-
-  private def annTopKOracle: String = {
-    val dot = sqlDotQ("qv", "cv", 64)
-    val naa = sqlDotQ("qv", "qv", 64)
-    val nbb = sqlDotQ("cv", "cv", 64)
-    s"""WITH q AS (SELECT vec_id AS query_id,
-         ${sqlQuantize("embedding")} AS qv FROM embeddings WHERE vec_id < 5),
-       c AS (SELECT vec_id, ${sqlQuantize("embedding")} AS cv
-         FROM embeddings),
-       scored AS (
-         SELECT query_id, vec_id AS neighbor_id,
-           $dot::DOUBLE / sqrt($naa::DOUBLE * $nbb::DOUBLE) AS cosine
-         FROM q JOIN c ON query_id <> vec_id)
-       SELECT query_id, neighbor_id, cosine, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cosine DESC, neighbor_id) AS rank FROM scored) s
-       WHERE rank <= 10"""
-  }
-
-  /** Mirrors Similarity.ivfTopK at nCentroids=16, nProbe=4,
-    * kmeansIters=2 — including the deterministic sampled k-means:
-    * seeds are the 16 smallest (md5(vec_id), vec_id) vectors, each
-    * iteration assigns by argmax of dot(v,c)/sqrt(dot(c,c)) (exact
-    * int64 dots, lowest-ci tiebreak) and replaces centroids with
-    * floor'd component means; empty lists keep their centroid. The
-    * iterations are unrolled into chained CTEs.
-    */
-  // score of vector qv against centroid cv (zero-norm guard matches
-  // the engine's Double.MinValue sentinel)
-  private def kmeansScoreSql(qv: String, cv: String,
-      dim: Int): String =
-    s"CASE WHEN ${sqlDotQ(cv, cv, dim)} = 0 " +
-    s"THEN -1.7976931348623157E308 " +
-    s"ELSE ${sqlDotQ(qv, cv, dim)}::DOUBLE / " +
-    s"sqrt(${sqlDotQ(cv, cv, dim)}::DOUBLE) END"
-
-  /** CTE chain replaying Similarity.fitCentroidsKMeans at
-    * nCentroids=16, kmeansIters=2 plus the final assignment: yields
-    * `q` (vec_id, qv quantized), `cdots` (vec_id, ci, score vs the
-    * final centroids) and `assign` (vec_id → argmax ci, lowest-ci
-    * tiebreak). Shared by the IVF and SemDeDup oracles.
-    */
-  private def kmeansAssignCtes(dim: Int): String = {
-    // one k-means iteration: assign to cent$t, recompute as cent${t+1}
-    def iterCtes(t: Int): String =
-      s"""sc$t AS (SELECT q.vec_id, c.ci,
-           ${kmeansScoreSql("q.qv", "c.cv", dim)} AS s
-           FROM q CROSS JOIN cent$t c),
-         a$t AS (SELECT vec_id, ci FROM (
-           SELECT vec_id, ci, ROW_NUMBER() OVER (PARTITION BY vec_id
-             ORDER BY s DESC, ci) AS rn FROM sc$t) x WHERE rn = 1),
-         u$t AS (SELECT ci, list(cc ORDER BY idx) AS cv FROM (
-           SELECT a$t.ci, r.idx,
-             CAST(floor(SUM(q.qv[r.idx])::DOUBLE / COUNT(*)) AS BIGINT)
-               AS cc
-           FROM q JOIN a$t USING (vec_id)
-             CROSS JOIN range(1, ${dim + 1}) r(idx)
-           GROUP BY a$t.ci, r.idx) g GROUP BY ci),
-         cent${t + 1} AS (SELECT c.ci, COALESCE(u.cv, c.cv) AS cv
-           FROM cent$t c LEFT JOIN u$t u USING (ci)),"""
-    s"""q AS (SELECT vec_id, ${sqlQuantize("embedding")} AS qv
-         FROM embeddings),
-       seeds AS (SELECT vec_id, qv FROM q
-         ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-       cent0 AS (SELECT ROW_NUMBER() OVER
-           (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS ci,
-         qv AS cv FROM seeds),
-       ${iterCtes(0)}
-       ${iterCtes(1)}
-       cdots AS (SELECT q.vec_id, c.ci,
-         ${kmeansScoreSql("q.qv", "c.cv", dim)} AS s
-         FROM q CROSS JOIN cent2 c),
-       assign AS (SELECT vec_id, ci FROM (
-         SELECT vec_id, ci, ROW_NUMBER() OVER (PARTITION BY vec_id
-           ORDER BY s DESC, ci) AS rn FROM cdots) a WHERE rn = 1)"""
-  }
-
-  /** IVF-PQ: the coarse k-means replay's `assign`/`cdots` CTEs pick
-    * each query's 4 probe lists, the pinned-codebook `codes` CTE
-    * compresses the corpus, and the ranking sums the query's
-    * per-(subspace, code) distances over each probed neighbor's
-    * codes — exact int64 end to end.
-    */
-  private def ivfPqTopKOracle: String =
-    s"""WITH ${kmeansAssignCtes(64)},
-       $pqCodeCtes,
-       probes AS (SELECT vec_id, ci FROM (
-         SELECT vec_id, ci, ROW_NUMBER() OVER (PARTITION BY vec_id
-           ORDER BY s DESC, ci) AS rn FROM cdots) p
-         WHERE rn <= 4 AND vec_id < 5),
-       pair AS (SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
-           CAST(SUM(qd.d2) AS BIGINT) AS adist2
-         FROM probes p
-           JOIN assign a ON a.ci = p.ci AND a.vec_id <> p.vec_id
-           JOIN codes cs ON cs.vec_id = a.vec_id
-           JOIN d qd ON qd.vec_id = p.vec_id AND qd.s = cs.s
-             AND qd.j = cs.code
-         GROUP BY 1, 2)
-       SELECT query_id, neighbor_id, adist2, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY adist2 ASC, neighbor_id) AS rank FROM pair) z
-       WHERE rank <= 10"""
-
-  private def ivfTopKOracle: String = {
-    s"""WITH ${kmeansAssignCtes(64)},
-       probes AS (SELECT vec_id, ci FROM (
-         SELECT vec_id, ci, ROW_NUMBER() OVER (PARTITION BY vec_id
-           ORDER BY s DESC, ci) AS rn FROM cdots) p
-         WHERE rn <= 4 AND vec_id < 5),
-       scored AS (
-         SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
-           ${sqlDotQ("vq.qv", "vc.qv", 64)}::DOUBLE /
-             sqrt(${sqlDotQ("vq.qv", "vq.qv", 64)}::DOUBLE *
-                  ${sqlDotQ("vc.qv", "vc.qv", 64)}::DOUBLE) AS cosine
-         FROM probes p
-           JOIN assign a ON a.ci = p.ci AND a.vec_id <> p.vec_id
-           JOIN q vq ON vq.vec_id = p.vec_id
-           JOIN q vc ON vc.vec_id = a.vec_id)
-       SELECT query_id, neighbor_id, cosine, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cosine DESC, neighbor_id) AS rank FROM scored) s
-       WHERE rank <= 10"""
-  }
-
-  private def cosineDupOracle: String = {
-    // mirror of the query's bands = 8, planesPerBand = 4 configuration:
-    // band bi uses planes bi*4 .. bi*4+3; bucket = Σ sign-bit << k
-    val bandExprs = (0 until 8).map { bi =>
-      val bits = (0 until 4).map { k =>
-        val weights = (0 until 64)
-          .map(j => Similarity.planeComponent(bi * 4 + k, j))
-          .mkString("[", ", ", "]")
-        s"(CASE WHEN list_sum(list_transform(generate_series(1, 64), " +
-        s"i -> qv[i] * ($weights)[i])) >= 0 THEN ${1L << k} ELSE 0 END)"
-      }.mkString(" + ")
-      s"concat('$bi', ':', ($bits)::VARCHAR)"
-    }.mkString(",\n         ")
-    val dot = sqlDotQ("a.qv", "b.qv", 64)
-    val naa = sqlDotQ("a.qv", "a.qv", 64)
-    val nbb = sqlDotQ("b.qv", "b.qv", 64)
-    s"""WITH q AS (SELECT vec_id, ${sqlQuantize("embedding")} AS qv
-         FROM embeddings),
-       bucketed AS (SELECT vec_id, qv,
-         [$bandExprs] AS bkeys FROM q)
-       SELECT id_a, id_b, cosine FROM (
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           $dot::DOUBLE / sqrt($naa::DOUBLE * $nbb::DOUBLE) AS cosine
-         FROM bucketed a JOIN bucketed b
-           ON a.vec_id < b.vec_id AND list_has_any(a.bkeys, b.bkeys)) p
-       WHERE cosine >= 0.4"""
-  }
-
-  /** Mirrors SemanticDedup.semanticDupPairs (threshold 0.4,
-    * nCentroids=16, kmeansIters=2): the shared k-means replay, then
-    * exact quantized cosine over same-cluster pairs.
-    */
-  private def semanticPairsOracle: String =
-    s"""WITH ${kmeansAssignCtes(64)},
-       prs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ${sqlDotQ("va.qv", "vb.qv", 64)}::DOUBLE /
-             sqrt(${sqlDotQ("va.qv", "va.qv", 64)}::DOUBLE *
-                  ${sqlDotQ("vb.qv", "vb.qv", 64)}::DOUBLE) AS cosine
-         FROM assign a JOIN assign b
-           ON a.ci = b.ci AND a.vec_id < b.vec_id
-           JOIN q va ON va.vec_id = a.vec_id
-           JOIN q vb ON vb.vec_id = b.vec_id)
-       SELECT id_a, id_b, cosine FROM prs WHERE cosine >= 0.4"""
-
-  /** Mirrors Similarity.knnGraph at k=5, nCentroids=16, nProbe=2:
-    * the shared k-means replay, each vector in its 2 highest-scoring
-    * centroid lists, DISTINCT same-list candidate pairs (both
-    * directions), exact quantized cosine, rank ≤ 5 per query with the
-    * engine's (cosine DESC, neighbor_id) tie-break.
-    */
-  private def knnGraphOracle: String =
-    s"""WITH ${kmeansAssignCtes(64)},
-       probes AS (SELECT vec_id, ci FROM (
-         SELECT vec_id, ci, ROW_NUMBER() OVER (PARTITION BY vec_id
-           ORDER BY s DESC, ci) AS rn FROM cdots) p WHERE rn <= 2),
-       cand AS (SELECT DISTINCT a.vec_id AS query_id,
-           b.vec_id AS neighbor_id
-         FROM probes a JOIN probes b
-           ON a.ci = b.ci AND a.vec_id <> b.vec_id),
-       scored AS (SELECT query_id, neighbor_id,
-           ${sqlDotQ("va.qv", "vb.qv", 64)}::DOUBLE /
-             sqrt(${sqlDotQ("va.qv", "va.qv", 64)}::DOUBLE *
-                  ${sqlDotQ("vb.qv", "vb.qv", 64)}::DOUBLE) AS cosine
-         FROM cand
-           JOIN q va ON va.vec_id = query_id
-           JOIN q vb ON vb.vec_id = neighbor_id)
-       SELECT query_id, neighbor_id, cosine, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cosine DESC, neighbor_id) AS rank FROM scored) s
-       WHERE rank <= 5"""
-
-  /** Recursive-CTE replay of SemanticDedup.semanticDedup: kept ids =
-    * those whose smallest reachable id in the (symmetric) semantic
-    * pair graph is themselves.
-    */
-  private def semanticDedupOracle: String =
-    s"""WITH RECURSIVE pr AS (SELECT id_a, id_b FROM
-         ($semanticPairsOracle) sp),
-       e AS (SELECT id_a AS src, id_b AS dst FROM pr
-             UNION SELECT id_b, id_a FROM pr),
-       reach(id, lab) AS (
-         SELECT vec_id, vec_id FROM embeddings
-         UNION
-         SELECT e.dst, r.lab FROM reach r JOIN e ON e.src = r.id)
-       SELECT id AS vec_id FROM reach GROUP BY id HAVING MIN(lab) = id"""
-
-  /** From-scratch replay of Retrieval.bm25TopK at k1=1200, b=750,
-    * k=10 over the derived 6-token queries from docs 0-2: every
-    * fixed-point step rebuilt in DuckDB's `//` (floor division ==
-    * Spark's DIV on these non-negative operands), ranking replayed
-    * with the same (score DESC, doc_id ASC) tie-break.
-    */
-  private def bm25Oracle: String =
-    s"""WITH docs AS (SELECT doc_id,
-         regexp_split_to_array(trim(text), '\\s+') AS ts
-         FROM documents),
-       tot AS (SELECT COUNT(*)::BIGINT AS nd,
-         SUM(len(ts))::BIGINT AS tt FROM docs),
-       qterms AS (SELECT DISTINCT doc_id AS query_id,
-           UNNEST(ts[1:6]) AS term
-         FROM docs WHERE doc_id < 3),
-       qvocab AS (SELECT DISTINCT term FROM qterms),
-       tok AS (SELECT doc_id, len(ts)::BIGINT AS dl, UNNEST(ts) AS term
-         FROM docs),
-       tf AS (SELECT t.doc_id, t.term, COUNT(*)::BIGINT AS tf,
-           MAX(t.dl) AS dl
-         FROM tok t JOIN qvocab v ON v.term = t.term GROUP BY 1, 2),
-       dft AS (SELECT term, COUNT(*)::BIGINT AS df FROM tf GROUP BY 1),
-       sc AS (SELECT f.doc_id, f.term,
-           ((2 * (tot.nd - d.df) + 1) * 1000) // (2 * d.df + 1) AS idf,
-           (f.tf * 2200 * 1000) // (f.tf * 1000 +
-             (1200 * (250 + (750 * f.dl * tot.nd) // tot.tt)) // 1000)
-             AS tfw
-         FROM tf f JOIN dft d ON d.term = f.term CROSS JOIN tot),
-       per AS (SELECT q.query_id, s.doc_id,
-           CAST(SUM(s.idf * s.tfw) AS BIGINT) AS score_micro
-         FROM sc s JOIN qterms q ON q.term = s.term GROUP BY 1, 2)
-       SELECT query_id, doc_id, score_micro, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY score_micro DESC, doc_id) AS rank FROM per) z
-       WHERE rank <= 10"""
-
-  /** Shared snapshot sides for the content-diff oracles — mirrors the
-    * q_snapshot_diff query's derivation exactly.
-    */
-  private def snapshotDiffCtes: String =
-    s"""o AS (SELECT doc_id, text FROM documents
-         WHERE doc_id % 10 <> 3),
-       n AS (SELECT doc_id,
-           CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END
-             AS text
-         FROM documents WHERE doc_id % 10 <> 7)"""
-
-  /** Shared CTE body for the semantic-decontamination oracles: the
-    * derived eval set (every 50th id; every 100th swaps in its
-    * successor's embedding — a train member), the train side, and the
-    * brute-force exact quantized cosine scan, zero-norm sides
-    * excluded on both engines.
-    */
-  private def semanticDeconCtes: String = {
-    val dot = sqlDotQ("evn.qv", "trn.cv", 64)
-    s"""ev AS (SELECT e1.vec_id AS eval_id,
-         ${sqlQuantize("e2.embedding")} AS qv
-         FROM embeddings e1 JOIN embeddings e2
-           ON e2.vec_id = CASE WHEN e1.vec_id % 100 = 0
-             THEN e1.vec_id + 1 ELSE e1.vec_id END
-         WHERE e1.vec_id % 50 = 0),
-       evn AS (SELECT eval_id, qv,
-           ${sqlDotQ("qv", "qv", 64)} AS nn FROM ev),
-       tr AS (SELECT vec_id AS train_id,
-           ${sqlQuantize("embedding")} AS cv
-         FROM embeddings WHERE vec_id % 50 <> 0),
-       trn AS (SELECT train_id, cv,
-           ${sqlDotQ("cv", "cv", 64)} AS nn FROM tr),
-       scored AS (SELECT eval_id, train_id,
-           ($dot)::DOUBLE / sqrt(evn.nn::DOUBLE * trn.nn::DOUBLE)
-             AS cosine
-         FROM evn CROSS JOIN trn
-         WHERE evn.nn > 0 AND trn.nn > 0)"""
-  }
-
-  /** Mirrors Decontaminate.semanticOverlap at threshold 0.8 over the
-    * derived eval set: per-eval max cosine, argmax train id with the
-    * smallest-id tie-break, ≥-threshold flag.
-    */
-  private def semanticDeconOracle: String =
-    s"""WITH $semanticDeconCtes
-       SELECT eval_id, train_id, max_cosine, contaminated FROM (
-         SELECT eval_id, train_id, cosine AS max_cosine,
-           cosine >= 0.8 AS contaminated,
-           ROW_NUMBER() OVER (PARTITION BY eval_id
-             ORDER BY cosine DESC, train_id) AS rn
-         FROM scored) z WHERE rn = 1"""
-
-  /** Mirrors Decontaminate.semanticScrubTrain at threshold 0.8: train
-    * ids surviving the ≥-threshold delete.
-    */
-  private def semanticScrubOracle: String =
-    s"""WITH $semanticDeconCtes
-       SELECT t.vec_id FROM embeddings t
-       WHERE t.vec_id % 50 <> 0 AND NOT EXISTS (
-         SELECT 1 FROM scored s
-         WHERE s.train_id = t.vec_id AND s.cosine >= 0.8)"""
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.Io.jstr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,8 +9,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query names for a targeted
     // re-dump (the driver always runs the full set)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val selected =
+      if (args.length > 2) SparkEntry.select(SparkEntry.names(args(2)))
+      else SparkEntry.registry
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -20,36 +22,28 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      // the name goes first, so a warning in the log can be attributed
+      System.err.println(s"[verify] ${q.name}")
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        failed(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape covers ALL control chars (<0x20): a tab or CR
+    // in oracle SQL would otherwise make the compare's json.load fail
+    // and silently zero the round's correctness.
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // A query that throws must be VISIBLE in the round artifact, not a
     // silent absence: failed.json maps query name -> exception message
     // so the driver (or a human) can surface it as an err row.
     val failedJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v.take(500))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failed.json"), failedJson)
     spark.stop()

@@ -90,13 +90,13 @@ object Inference {
     */
   private def approxRawStats(df: DataFrame, fields: Seq[StructField])
       : Map[String, RawStats] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    val sc = df.sparkSession.sparkContext
     val aggs = count(lit(1)).cast("long").as("__total") +:
       fields.flatMap(statsExprs)
-    val mainF = Future(df.agg(aggs.head, aggs.tail: _*).collect()(0))
-    val distinctF = Future {
+    val step = "Inference.classify"
+    val mainF = DriverJobs.fork(sc, s"$step: counters")(
+      df.agg(aggs.head, aggs.tail: _*).collect()(0))
+    val distinctF = DriverJobs.fork(sc, s"$step: distinct counts") {
       distinctJobCount.incrementAndGet()
       val hlls = fields.map(f =>
         approx_count_distinct(col(f.name)).cast("long")
@@ -104,8 +104,8 @@ object Inference {
       val r = df.agg(hlls.head, hlls.tail: _*).collect()(0)
       fields.map(f => f.name -> r.getAs[Long](s"${f.name}__nd")).toMap
     }
-    val row: Row  = Await.result(mainF, Duration.Inf)
-    val distincts = Await.result(distinctF, Duration.Inf)
+    val row: Row  = DriverJobs.join(mainF)
+    val distincts = DriverJobs.join(distinctF)
     val total     = row.getAs[Long]("__total")
     fields.map { f =>
       f.name -> RawStats(

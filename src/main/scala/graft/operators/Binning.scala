@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverJobs
+
 /** Discretization operators (reference: src/trousse/feature_fix.py and
   * scripts/breed_specific_bin_splitting.py).
   */
@@ -197,14 +199,12 @@ final case class MultipleCombinations(columns: Seq[String])
     // run sequentially; now n, overlapped). The prefixes' combo ids
     // are pure arithmetic over those shared dictionaries, so the
     // output is bit-identical to folding CombineCategoricalColumns.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val dicts: Map[String, Map[String, Long]] = Await.result(
-      Future.sequence(columns.map(c => Future(c ->
+    val sc = df.sparkSession.sparkContext
+    val dicts: Map[String, Map[String, Long]] = columns.map(c =>
+      DriverJobs.fork(sc, s"MultipleCombinations: fit $c")(c ->
         DictionaryFit.sortedDistinct(df, col(c))
-          .zipWithIndex.map { case (v, i) => (v, i.toLong) }.toMap))),
-      Duration.Inf).toMap
+          .zipWithIndex.map { case (v, i) => (v, i.toLong) }.toMap))
+      .map(DriverJobs.join).toMap
     (2 to columns.size).foldLeft(df) { (d, k) =>
       val cs = columns.take(k)
       d.withColumn(cs.mkString("-") + "_enc",

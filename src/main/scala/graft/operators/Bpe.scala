@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * driver state, O(ranks × chars) per document — because no chain of
   * string `replace`s can express greedy pairing (a literal
   * replacement consumes the boundary its right neighbor needs, so
-  * alternating pairs go unmerged; the window-function oracle in
-  * SparkEntry re-derives greedy pairing independently via the
+  * alternating pairs go unmerged; the window-function oracle of the
+  * q_bpe_* queries re-derives greedy pairing independently via the
   * odd-position-within-candidate-run rule).
   *
   * 100 TB shape: encode scans each partition once. Training is

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverJobs
+
 /** Exact distributed order statistics. Built on the value-count shape:
   * one `groupBy(value).count()` pass (map-side combined — the shuffle
   * carries distinct values, not rows), then a range-partitioned
@@ -293,26 +295,25 @@ object ColumnStats {
   def groupedDescribe(df: DataFrame, groupCol: String,
       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "groupedDescribe needs at least one column")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    val sc = df.sparkSession.sparkContext
     val aggs = cols.flatMap(c => Seq(
       count(col(c)).as(s"__nn_$c"),
       min(col(c)).cast("double").as(s"__min_$c"),
       max(col(c)).cast("double").as(s"__max_$c"),
       (sum(col(c).cast("decimal(28,6)")).cast("double") /
         count(col(c))).as(s"__mean_$c")))
-    val baseF = Future(df
+    val step = "ColumnStats.groupedDescribe"
+    val baseF = DriverJobs.fork(sc, s"$step: base stats")(df
       .filter(col(groupCol).isNotNull)
       .groupBy(col(groupCol).cast("string").as("__g"))
       .agg(count(lit(1)).as("__n_total"), aggs: _*)
       .localCheckpoint())
-    val medsF = cols.map(c => Future(
+    val medsF = cols.map(c => DriverJobs.fork(sc, s"$step: median $c")(
       groupedExactQuantiles(df, groupCol, c, Seq(0.5))
         .select(col(groupCol).cast("string").as("__g"),
           col("quantile").as("median_v"))))
-    val base = Await.result(baseF, Duration.Inf)
-    val meds = medsF.map(f => Await.result(f, Duration.Inf))
+    val base = DriverJobs.join(baseF)
+    val meds = medsF.map(DriverJobs.join)
     cols.zip(meds).map { case (c, med) =>
       base.select(col("__g"), lit(c).as("column_name"),
           col("__n_total").as("n_total"),
@@ -343,25 +344,24 @@ object ColumnStats {
     */
   def describeNumeric(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "describeNumeric needs at least one column")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    val sc = df.sparkSession.sparkContext
     val aggs = cols.flatMap(c => Seq(
       count(col(c)).as(s"__nn_$c"),
       min(col(c)).cast("double").as(s"__min_$c"),
       max(col(c)).cast("double").as(s"__max_$c"),
       (sum(col(c).cast("decimal(28,6)")).cast("double") /
         count(col(c))).as(s"__mean_$c")))
-    val baseF = Future(df
+    val step = "ColumnStats.describeNumeric"
+    val baseF = DriverJobs.fork(sc, s"$step: base stats")(df
       .agg(count(lit(1)).as("__n_total"), aggs: _*)
       .localCheckpoint())
     // exactQuantiles materializes its cumulative frame eagerly, so
     // launching the calls from futures overlaps the k job chains
-    val medsF = cols.map(c => Future(
+    val medsF = cols.map(c => DriverJobs.fork(sc, s"$step: median $c")(
       exactQuantiles(df, c, Seq(0.5))
         .select(col("quantile").as("median_v"))))
-    val base = Await.result(baseF, Duration.Inf)
-    val meds = medsF.map(f => Await.result(f, Duration.Inf))
+    val base = DriverJobs.join(baseF)
+    val meds = medsF.map(DriverJobs.join)
     cols.zip(meds).map { case (c, med) =>
       base.select(lit(c).as("column_name"),
           col("__n_total").as("n_total"),

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.DriverJobs
 import graft.functions.{HashFunctions => H, TextFunctions => T}
 
 /** Shared candidate-pair machinery for LSH-style bucketed dedup.
@@ -512,10 +513,8 @@ object Dedup {
       idCol: String, pairs: DataFrame, maxIter: Int,
       driverBound: Long): DataFrame = {
     val sc = nodes.sparkSession.sparkContext
-    val descKey = "spark.job.description"
-    val callerDesc = sc.getLocalProperty(descKey)
-    def step(what: String): Unit =
-      sc.setJobDescription(s"Dedup.duplicateClusters: $what")
+    def step[T](what: String)(body: => T): T =
+      DriverJobs.described(sc, s"Dedup.duplicateClusters: $what")(body)
     // materialize `df` AND count its rows matching `hit` in the same
     // job: a pass-through map feeding an accumulator inside the
     // checkpointed plan. A task retry can only inflate a count.
@@ -528,92 +527,89 @@ object Dedup {
         .localCheckpoint() // eager: fires the job, fills the counter
       (out, n.value)
     }
-    try {
-      // canonical undirected edge set (a < b), self-loops dropped
-      step("edge set")
-      var (e, live) = checkpointCounted(pairs
-        .select(least(col("id_a"), col("id_b")).as("a"),
-          greatest(col("id_a"), col("id_b")).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct(), "graft_cc_edges", _ => true)
-      val idType = e.schema("a").dataType
-      val wire = driverKey(idType).filter(_ => driverBound > 0)
-      def fits = wire.isDefined && live <= driverBound
-      var iter = 0
-      var converged = false
-      while (!converged && !fits && iter < maxIter) {
-        val b = e.select(col("a").as("u"), col("b").as("v"))
-          .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-        // per-node neighborhood min + the fixpoint test, in ONE agg:
-        // the graph is a min-rooted star forest (= converged) iff no
-        // node has both a smaller and a larger neighbor (large-star is
-        // then the identity) and no node has two smaller neighbors
-        // (small-star is then the identity).
-        val statsPlan = b.groupBy("u").agg(
-          min("v").as("__mn"),
-          ((min(col("v")) < col("u") && max(col("v")) > col("u")) ||
-            count(when(col("v") < col("u"), 1)) >= 2).as("__bad"))
-        // convergence comes out of the SAME job that materializes the
-        // stats. Task retries can only inflate a NONZERO count (a
-        // retried stable partition re-adds 0), so `== 0` stays exact.
-        // (The r19 optimization round tried fusing this job into the
-        // edge-production job — one job per round — and measured it
-        // SLOWER: the materialized stats frame gives
-        // the rewiring join a size-known build side AQE broadcasts,
-        // where the fused plan recomputes the stats subtree inside a
-        // size-unknown join. Two small materialized jobs beat one deep
-        // one here; kept.)
-        step(s"round $iter stats")
-        val (stats, unstable) = checkpointCounted(statsPlan,
-          s"graft_cc_unstable_$iter", _.getBoolean(2))
-        if (unstable == 0L) converged = true
-        else {
-          // large-star: every edge to a LARGER neighbor of u rewires to
-          // u's neighborhood min m ≤ u < v (canonical order free).
-          val ls = b.join(stats, Seq("u"))
-            .filter(col("v") > col("u"))
-            .select(least(col("__mn"), col("u")).as("a"),
-              col("v").as("b"))
-          // small-star on the large-star output: every SMALLER
-          // neighbor of u (and u itself) rewires to the min of that set.
-          val b2 = ls.select(col("a").as("u"), col("b").as("v"))
-            .unionByName(ls.select(col("b").as("u"), col("a").as("v")))
-          val mins = b2.groupBy("u").agg(min("v").as("__mn"))
-          val ss = b2.join(mins, Seq("u"))
-            .filter(col("v") < col("u") && col("v") =!= col("__mn"))
-            .select(col("__mn").as("a"), col("v").as("b"))
-            .unionByName(mins.filter(col("__mn") < col("u"))
-              .select(col("__mn").as("a"), col("u").as("b")))
-          step(s"round $iter edges")
-          val (next, n) = checkpointCounted(ss.distinct(),
-            s"graft_cc_edges_$iter", _ => true)
-          e = next
-          live = n
-        }
-        iter += 1
+    // canonical undirected edge set (a < b), self-loops dropped
+    var (e, live) = step("edge set")(checkpointCounted(pairs
+      .select(least(col("id_a"), col("id_b")).as("a"),
+        greatest(col("id_a"), col("id_b")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct(), "graft_cc_edges", _ => true))
+    val idType = e.schema("a").dataType
+    val wire = driverKey(idType).filter(_ => driverBound > 0)
+    def fits = wire.isDefined && live <= driverBound
+    var iter = 0
+    var converged = false
+    while (!converged && !fits && iter < maxIter) {
+      val b = e.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+      // per-node neighborhood min + the fixpoint test, in ONE agg:
+      // the graph is a min-rooted star forest (= converged) iff no
+      // node has both a smaller and a larger neighbor (large-star is
+      // then the identity) and no node has two smaller neighbors
+      // (small-star is then the identity).
+      val statsPlan = b.groupBy("u").agg(
+        min("v").as("__mn"),
+        ((min(col("v")) < col("u") && max(col("v")) > col("u")) ||
+          count(when(col("v") < col("u"), 1)) >= 2).as("__bad"))
+      // convergence comes out of the SAME job that materializes the
+      // stats. Task retries can only inflate a NONZERO count (a
+      // retried stable partition re-adds 0), so `== 0` stays exact.
+      // (The r19 optimization round tried fusing this job into the
+      // edge-production job — one job per round — and measured it
+      // SLOWER: the materialized stats frame gives
+      // the rewiring join a size-known build side AQE broadcasts,
+      // where the fused plan recomputes the stats subtree inside a
+      // size-unknown join. Two small materialized jobs beat one deep
+      // one here; kept.)
+      val (stats, unstable) = step(s"round $iter stats")(
+        checkpointCounted(statsPlan, s"graft_cc_unstable_$iter",
+          _.getBoolean(2)))
+      if (unstable == 0L) converged = true
+      else {
+        // large-star: every edge to a LARGER neighbor of u rewires to
+        // u's neighborhood min m ≤ u < v (canonical order free).
+        val ls = b.join(stats, Seq("u"))
+          .filter(col("v") > col("u"))
+          .select(least(col("__mn"), col("u")).as("a"),
+            col("v").as("b"))
+        // small-star on the large-star output: every SMALLER
+        // neighbor of u (and u itself) rewires to the min of that set.
+        val b2 = ls.select(col("a").as("u"), col("b").as("v"))
+          .unionByName(ls.select(col("b").as("u"), col("a").as("v")))
+        val mins = b2.groupBy("u").agg(min("v").as("__mn"))
+        val ss = b2.join(mins, Seq("u"))
+          .filter(col("v") < col("u") && col("v") =!= col("__mn"))
+          .select(col("__mn").as("a"), col("v").as("b"))
+          .unionByName(mins.filter(col("__mn") < col("u"))
+            .select(col("__mn").as("a"), col("u").as("b")))
+        val (next, n) = step(s"round $iter edges")(
+          checkpointCounted(ss.distinct(), s"graft_cc_edges_$iter",
+            _ => true))
+        e = next
+        live = n
       }
-      val labels =
-        if (converged) {
-          // converged edge set IS the answer: stars (root=component
-          // min, leaf) in canonical (a=root, b=leaf) order
-          e.select(asNullable(col("b")).as("id"),
-              asNullable(col("a")).as("cluster_id"))
-            .unionByName(e.select(asNullable(col("a")).as("id"),
-              asNullable(col("a")).as("cluster_id")))
-            .distinct()
-        } else {
-          require(fits,
-            s"duplicateClusters did not converge in $maxIter rounds - " +
-            "graph is adversarially deep for large-star/small-star; " +
-            "raise maxIter")
-          step(s"driver finish with $live edges")
-          driverLabels(e, idType, wire.get)
-        }
-      val singletons = nodes.select(col(idCol).as("id"))
-        .join(labels.select("id"), Seq("id"), "left_anti")
-        .withColumn("cluster_id", col("id"))
-      labels.unionByName(singletons)
-    } finally sc.setLocalProperty(descKey, callerDesc)
+      iter += 1
+    }
+    val labels =
+      if (converged) {
+        // converged edge set IS the answer: stars (root=component
+        // min, leaf) in canonical (a=root, b=leaf) order
+        e.select(asNullable(col("b")).as("id"),
+            asNullable(col("a")).as("cluster_id"))
+          .unionByName(e.select(asNullable(col("a")).as("id"),
+            asNullable(col("a")).as("cluster_id")))
+          .distinct()
+      } else {
+        require(fits,
+          s"duplicateClusters did not converge in $maxIter rounds - " +
+          "graph is adversarially deep for large-star/small-star; " +
+          "raise maxIter")
+        step(s"driver finish with $live edges")(
+          driverLabels(e, idType, wire.get))
+      }
+    val singletons = nodes.select(col(idCol).as("id"))
+      .join(labels.select("id"), Seq("id"), "left_anti")
+      .withColumn("cluster_id", col("id"))
+    labels.unionByName(singletons)
   }
 
   // CASE WHEN without ELSE is always nullable: pins the output schema

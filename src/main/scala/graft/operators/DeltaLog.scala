@@ -453,13 +453,14 @@ object DeltaLog {
     * per version with the live file count and bytes after
     * replaying commits 0..v. Removes don't carry sizes in the log;
     * the real reader resolves them against the add records, so
-    * this does too (one join), then a single cumulative window
-    * over versions folds the per-version deltas.
+    * this does too (one join). The per-version deltas are collected
+    * — one row per commit file, files the Spark driver already lists —
+    * and folded into running sums there: a window ordered by version
+    * alone would move every row into one partition anyway.
     */
   def timeTravel(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     val acts = versionedActions(spark, dir)
     val adds = acts.where(col("kind") === "add")
       .select(col("version"), col("path"), col("size"))
@@ -487,11 +488,18 @@ object DeltaLog {
             sum(col("size")).as("b_rem")),
         Seq("version"), "left_outer")
       .na.fill(0L, Seq("n_add", "b_add", "n_rem", "b_rem"))
-    val w = Window.orderBy(col("version"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perV.select(col("version"),
-      sum(col("n_add") - col("n_rem")).over(w).as("n_live"),
-      sum(col("b_add") - col("b_rem")).over(w).as("live_bytes"))
+    var (nLive, liveBytes) = (0L, 0L)
+    val rows = perV.orderBy(col("version")).select(col("version"),
+        col("n_add") - col("n_rem"), col("b_add") - col("b_rem"))
+      .collect().map { r =>
+        nLive += r.getLong(1)
+        liveBytes += r.getLong(2)
+        Row(r.get(0), nLive, liveBytes)
+      }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(perV.schema("version"),
+        StructField("n_live", LongType),
+        StructField("live_bytes", LongType))))
   }
 
   /** VACUUM planning: remove tombstones older than the cutoff are

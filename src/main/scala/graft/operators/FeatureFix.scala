@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
-import graft.core.GraftDataset
+import graft.core.{DriverJobs, GraftDataset}
 
 /** Shared bounded-dictionary fit: the distinct values of an expression,
   * sorted, collected to the driver with a hard cardinality guard.
@@ -194,14 +194,11 @@ object FeatureFix {
     // projection, dominate q_encode_multi). The prefit op carries
     // categoriesOut, so the fold below applies without re-fitting and
     // records the exact op copy the sequential flow recorded.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val prefitted = Await.result(
-      Future.sequence(targets.map(c => Future(
+    val sc = ds.data.sparkSession.sparkContext
+    val prefitted = targets.map(c =>
+      DriverJobs.fork(sc, s"FeatureFix.encodeMultiCategorical: fit $c")(
         EncodeSingleCategorical(c, method, caseSensitive)
-          .prefit(ds.data)))),
-      Duration.Inf)
+          .prefit(ds.data))).map(DriverJobs.join)
     prefitted.foldLeft(ds)((d, op) => op(d))
   }
 }

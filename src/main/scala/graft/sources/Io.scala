@@ -84,7 +84,7 @@ object Io {
     readJson(spark, path).map(inferAndCast(_, metadataCols))
 
   /** Minimal JSON escaping for the lineage sidecar. */
-  private def jstr(s: String): String =
+  private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"'          => "\\\""
       case '\\'         => "\\\\"

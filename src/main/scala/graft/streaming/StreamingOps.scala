@@ -18,7 +18,7 @@ object StreamingOps {
     * watermark first ([[withLateDataBound]]); on a batch frame it is the
     * windowed groupBy alone. Window starts are epoch-aligned, so a
     * 1-hour window start equals `date_trunc('hour', ts)` — the oracle
-    * equivalence used in SparkEntry.
+    * equivalence q_events_window relies on.
     */
   def windowedEventStats(df: DataFrame, windowLen: String): DataFrame =
     df.groupBy(window(col("ts"), windowLen), col("event_type"))

@@ -54,7 +54,7 @@ class PlanShapeSpec extends SparkSpec {
   test("format-decode queries compile to shuffle-free plans " +
       "(modulo the guarded parameter fan-out)") {
     // r19 refinement: kernel-heavy decode queries may carry AT MOST
-    // one ROUND-ROBIN exchange — SparkEntry.tp()'s fan-out of an
+    // one ROUND-ROBIN exchange — queries.Tables.tp()'s fan-out of an
     // under-partitioned scan, which shuffles only the narrow
     // pre-synthesis parameter columns and is guarded to vanish when
     // the input is large enough to split (see the guard test below).

@@ -39,7 +39,7 @@ class SchemaDriftSpec extends SparkSpec {
 
   test("readEvents adapts to micros-timestamp and nanos-long ts") {
     assume(haveData, s"$sfDir missing")
-    val real = SparkEntry.readEvents(spark, sfDir)
+    val real = queries.Tables.readEvents(spark, sfDir)
     assert(real.schema("ts").dataType == TimestampType)
 
     // Re-encode the same rows under the other physical layout: ts as
@@ -51,7 +51,7 @@ class SchemaDriftSpec extends SparkSpec {
     new java.io.File(nanosDir).mkdirs()
     real.withColumn("ts", expr("unix_micros(ts) * 1000L"))
       .write.mode("overwrite").parquet(s"$nanosDir/events.parquet")
-    val viaNanos = SparkEntry.readEvents(spark, nanosDir)
+    val viaNanos = queries.Tables.readEvents(spark, nanosDir)
     assert(viaNanos.schema("ts").dataType == TimestampType)
 
     // Identical wall-clock through either path.
