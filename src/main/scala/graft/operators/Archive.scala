@@ -804,9 +804,9 @@ object Archive {
     warcWriteComp(records, if (gzipped) 1 else 0)
 
   /** [[warcWrite]] with a compression selector: 0 plain, 1 one gzip
-    * member per record (.warc.gz), 2 one zstd ENTROPY frame per
-    * record (.warc.zst with real Huffman/FSE blocks and the XXH64
-    * checksum — the frame-per-record seekability layout).
+    * member per record (.warc.gz), 2 one zstd frame per record
+    * (.warc.zst through [[Zstd.compress]], XXH64 checksum on — the
+    * frame-per-record seekability layout).
     */
   def warcWriteComp(records: Seq[(String, String, Array[Byte])],
       comp: Int): Array[Byte] = {
@@ -829,7 +829,7 @@ object Archive {
           val gz = gzipWrite(bytes, "rec")
           out.write(gz, 0, gz.length)
         case 2 =>
-          val zs = Zstd.encodeEntropyFrame(bytes)
+          val zs = Zstd.compress(bytes)
           out.write(zs, 0, zs.length)
         case _ => out.write(bytes, 0, bytes.length)
       }
@@ -964,7 +964,7 @@ object Archive {
         Http.rawDeflate(plain) // the in-the-wild raw variant
       case 7 =>
         hdr.append(s"${h("Content-Encoding")}: zstd\r\n")
-        Zstd.encodeEntropyFrame(plain)
+        Zstd.compress(plain)
       case _ =>
         hdr.append(s"${h("Content-Length")}: ${plain.length}\r\n")
         plain

@@ -894,8 +894,8 @@ object Avro {
   /** A container file whose schema REUSES named definitions — the
     * `pt` record twice more (once namespace-qualified via the array
     * items), the enum and the fixed once each — with the codec
-    * cycling over the FULL six-codec matrix (bzip2 and xz ride the
-    * in-repo [[Bzip2]]/[[Xz]] coders both directions). Two records,
+    * cycling over the FULL six-codec matrix (bzip2 and xz through
+    * [[Bzip2]]/[[Xz]] both directions). Two records,
     * one per container block.
     */
   def avroWriteNamed(id: Long): Array[Byte] = {

@@ -815,7 +815,7 @@ object Brotli {
   /** Length-limited canonical Huffman lengths (zlib's halve-and-
     * rebuild approach for the rare over-limit tree).
     */
-  private[operators] def huffLengths(freq0: Array[Long], maxLen: Int)
+  private def huffLengths(freq0: Array[Long], maxLen: Int)
       : Array[Int] = {
     val n = freq0.length
     val lens = new Array[Int](n)

@@ -1,13 +1,15 @@
 package graft.operators
 
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
+
 /** bzip2 codec — the dump-distribution format (Wikipedia dumps,
   * Common Crawl index shards, classic tar.bz2 datasets ship in it):
   * full from-spec decode of the BWT + MTF + RLE + multi-table
   * Huffman stack, with both CRC layers VERIFIED (per-block CRC over
-  * the reconstructed bytes and the combined stream CRC), plus a
-  * real fixture encoder so oracle queries face genuine bzip2
-  * streams. Golden streams produced by the reference bzip2
-  * implementation pin the decoder in both directions (Bzip2Spec).
+  * the reconstructed bytes and the combined stream CRC). Fixture
+  * streams come from commons-compress ([[compress]]); golden streams
+  * produced by the reference bzip2 implementation pin the decoder
+  * (Bzip2Spec).
   *
   * Format walked (public format documentation; the container is
   * BIT-packed, MSB-first, blocks are not byte-aligned):
@@ -402,254 +404,14 @@ object Bzip2 {
     }(enc)
   }
 
-  // ------------------------------------------------------------------
-  // encoder (fixture side)
-  // ------------------------------------------------------------------
-
-  private final class Writer {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def bit(v: Int): Unit = {
-      cur = (cur << 1) | (v & 1)
-      nBits += 1
-      if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-    }
-    def bits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bit((v >> i) & 1); i -= 1 }
-    }
-    def bits48(v: Long): Unit = {
-      bits(((v >> 24) & 0xffffff).toInt, 24)
-      bits((v & 0xffffff).toInt, 24)
-    }
-    def result(): Array[Byte] = {
-      while (nBits != 0) bit(0)
-      out.toByteArray
-    }
-  }
-
-  /** BWT of the ROTATIONS of `s` (not suffixes) via prefix doubling:
-    * O(n log² n), immune to the repetitive fixtures that would send
-    * a naive rotation sort quadratic. Returns (lastColumn, origPtr).
-    */
-  private[graft] def bwtEncode(s: Array[Byte]): (Array[Byte], Int) = {
-    val n = s.length
-    var rank = new Array[Int](n)
-    var i = 0
-    while (i < n) { rank(i) = s(i) & 0xff; i += 1 }
-    var order = Array.tabulate(n)(identity)
-    var k = 1
-    while (k < n) {
-      val kk = k
-      val rk = rank
-      def key(i: Int): (Int, Int) = (rk(i), rk((i + kk) % n))
-      order = order.sortBy(key)
-      val next = new Array[Int](n)
-      var r = 0
-      i = 1
-      next(order(0)) = 0
-      while (i < n) {
-        if (key(order(i)) != key(order(i - 1))) r += 1
-        next(order(i)) = r
-        i += 1
-      }
-      rank = next
-      if (r == n - 1) k = n // all distinct: done
-      else k <<= 1
-    }
-    val last = new Array[Byte](n)
-    var orig = -1
-    i = 0
-    while (i < n) {
-      val rot = order(i)
-      if (rot == 0) orig = i
-      last(i) = s((rot + n - 1) % n)
-      i += 1
-    }
-    (last, orig)
-  }
-
-  /** Encode `data` as a real single-stream bzip2 payload (level
-    * picked from the data size; two identical Huffman tables — the
-    * spec minimum — with real canonical lengths from the block's
-    * symbol frequencies).
+  /** Fixture side: one bzip2 stream from commons-compress at the block
+    * size it picks for the input length.
     */
   def compress(data: Array[Byte]): Array[Byte] = {
-    val w = new Writer
-    w.bits('B', 8); w.bits('Z', 8); w.bits('h', 8)
-    val level = math.min(9, math.max(1, (data.length + 99999) / 100000))
-    w.bits('0' + level, 8)
-    val maxBlock = level * 100000
-    var streamCrc = 0
-    if (data.length == 0) {
-      // an empty stream: end magic with combined CRC 0
-      w.bits48(EndMagic)
-      w.bits(0, 24); w.bits(0, 8)
-      return w.result()
-    }
-    // chunk the ORIGINAL bytes and RLE1-encode each chunk
-    // independently, so every block's RLE1 stream is self-contained
-    // (a 4-run's count byte can never land in the next block); the
-    // 4/5 cap keeps rle1 ≤ maxBlock even at the worst 4→5 expansion
-    val chunkCap = maxBlock / 5 * 4
-    var off = 0
-    while (off < data.length) {
-      val chunkLen = math.min(chunkCap, data.length - off)
-      val chunk = java.util.Arrays.copyOfRange(data, off,
-        off + chunkLen)
-      off += chunkLen
-      val block = {
-        val o = new java.io.ByteArrayOutputStream(chunkLen + 16)
-        var i = 0
-        while (i < chunk.length) {
-          val b = chunk(i) & 0xff
-          var run = 1
-          while (i + run < chunk.length && run < 255 + 4 &&
-            (chunk(i + run) & 0xff) == b) run += 1
-          if (run >= 4) {
-            var c = 0
-            while (c < 4) { o.write(b); c += 1 }
-            o.write(run - 4)
-          } else {
-            var c = 0
-            while (c < run) { o.write(b); c += 1 }
-          }
-          i += run
-        }
-        o.toByteArray
-      }
-      val blockCrc = {
-        val crc = new Crc
-        chunk.foreach(crc.update)
-        crc.value
-      }
-      streamCrc = ((streamCrc << 1) | (streamCrc >>> 31)) ^ blockCrc
-      w.bits48(BlockMagic)
-      w.bits(blockCrc >>> 8, 24); w.bits(blockCrc & 0xff, 8)
-      w.bit(0) // not randomized
-      val (bwt, origPtr) = bwtEncode(block)
-      w.bits(origPtr, 24)
-      // used-symbol map
-      val used = new Array[Boolean](256)
-      bwt.foreach(b => used(b & 0xff) = true)
-      var ranges = 0
-      var i = 0
-      while (i < 16) {
-        var j = 0
-        var any = false
-        while (j < 16) { if (used(i * 16 + j)) any = true; j += 1 }
-        if (any) ranges |= 0x8000 >>> i
-        i += 1
-      }
-      w.bits(ranges, 16)
-      i = 0
-      while (i < 16) {
-        if ((ranges & (0x8000 >>> i)) != 0) {
-          var v = 0
-          var j = 0
-          while (j < 16) {
-            if (used(i * 16 + j)) v |= 0x8000 >>> j
-            j += 1
-          }
-          w.bits(v, 16)
-        }
-        i += 1
-      }
-      val symOf = new Array[Int](256)
-      var nUsed = 0
-      i = 0
-      while (i < 256) {
-        if (used(i)) { symOf(i) = nUsed; nUsed += 1 }
-        i += 1
-      }
-      val alpha = nUsed + 2
-      // MTF + RLE2
-      val mtf = new Array[Int](nUsed)
-      var k2 = 0
-      i = 0
-      while (i < 256) {
-        if (used(i)) { mtf(k2) = i; k2 += 1 }
-        i += 1
-      }
-      val syms = Seq.newBuilder[Int]
-      var zeroRun = 0L
-      def flushRun(): Unit = {
-        var r2 = zeroRun
-        while (r2 > 0) {
-          val d = (((r2 - 1) % 2) + 1).toInt // 1=RUNA, 2=RUNB
-          syms += (d - 1)
-          r2 = (r2 - d) / 2
-        }
-        zeroRun = 0
-      }
-      bwt.foreach { b0 =>
-        val b = b0 & 0xff
-        var j = 0
-        while (mtf(j) != b) j += 1
-        if (j == 0) zeroRun += 1
-        else {
-          flushRun()
-          syms += (j + 1)
-          while (j > 0) { mtf(j) = mtf(j - 1); j -= 1 }
-          mtf(0) = b
-        }
-      }
-      flushRun()
-      syms += (alpha - 1) // EOB
-      val symArr = syms.result()
-      // canonical lengths (cap 20; two identical tables). Every
-      // alphabet slot needs a length ≥ 1, so unused symbols get
-      // frequency 1 — the reference encoder's own trick, keeping
-      // the code COMPLETE (an artificial length for a zero-freq
-      // symbol would oversubscribe the canonical code space)
-      val freq = new Array[Long](alpha)
-      java.util.Arrays.fill(freq, 1L)
-      symArr.foreach(freq(_) += 1)
-      val lens = Brotli.huffLengths(freq, 20)
-      val huffCodes = {
-        val codes = new Array[Int](alpha)
-        var code = 0
-        var prev = 0
-        var l = 1
-        while (l <= 23) {
-          var s = 0
-          while (s < alpha) {
-            if (lens(s) == l) {
-              code <<= (l - prev); prev = l
-              codes(s) = code
-              code += 1
-            }
-            s += 1
-          }
-          l += 1
-        }
-        codes
-      }
-      val nGroups = 2
-      val nSelectors = (symArr.length + 49) / 50
-      w.bits(nGroups, 3)
-      w.bits(nSelectors, 15)
-      var s2 = 0
-      while (s2 < nSelectors) { w.bit(0); s2 += 1 } // all table 0
-      var g2 = 0
-      while (g2 < nGroups) {
-        var cur = lens(0)
-        w.bits(cur, 5)
-        var s3 = 0
-        while (s3 < alpha) {
-          val want = lens(s3)
-          while (cur < want) { w.bit(1); w.bit(0); cur += 1 }
-          while (cur > want) { w.bit(1); w.bit(1); cur -= 1 }
-          w.bit(0)
-          s3 += 1
-        }
-        g2 += 1
-      }
-      symArr.foreach(s3 => w.bits(huffCodes(s3), lens(s3)))
-    }
-    w.bits48(EndMagic)
-    w.bits(streamCrc >>> 8, 24); w.bits(streamCrc & 0xff, 8)
-    w.result()
+    val bos = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
+    val out = new BZip2CompressorOutputStream(bos,
+      BZip2CompressorOutputStream.chooseBlockSize(data.length))
+    try out.write(data) finally out.close()
+    bos.toByteArray
   }
 }

@@ -26,12 +26,10 @@ package graft.operators
   * lying, or out of bounds refuses to None — never throws, never
   * returns a prefix.
   *
-  * The encoder emits independent ≤64 KiB blocks with content size +
-  * content checksum, falling back to an uncompressed block whenever
-  * greedy matching does not win. Both directions are pinned against
-  * the reference `lz4` CLI in Lz4Spec (its frames decode here
-  * byte-exactly; frames written here extract there — recorded at
-  * fixture-generation time).
+  * The fixture encoder ([[encodeFrame]]) frames lz4-java's block
+  * compressor: independent ≤64 KiB blocks with content size +
+  * content checksum. Frames from the reference `lz4` CLI pin the
+  * decoder in Lz4Spec.
   *
   * Scale: decode is per-value and stateless — a crawl column of
   * .lz4 bodies decodes map-only with no shuffle; the 64 MiB output
@@ -295,65 +293,20 @@ object Lz4 {
   // encode
   // ---------------------------------------------------------------
 
-  /** Greedy LZ4 block compression of `data[from, until)`; None when
-    * the compressed form would not be smaller (caller stores raw).
-    */
-  private def compressBlock(data: Array[Byte], from: Int, until: Int)
-      : Option[Array[Byte]] = {
-    val len = until - from
-    val out = new java.io.ByteArrayOutputStream(len)
-    val HashLog = 13
-    val table = new Array[Int](1 << HashLog)
-    java.util.Arrays.fill(table, -1)
-    @inline def read32(p: Int): Int = le32(data, p)
-    @inline def hash(v: Int): Int = (v * 0x9e3779b1) >>> (32 - HashLog)
-    def writeLen(extra: Int): Unit = {
-      var e = extra
-      while (e >= 255) { out.write(255); e -= 255 }
-      out.write(e)
-    }
-    def emit(litFrom: Int, litTo: Int, offset: Int, mLen: Int)
-        : Unit = {
-      val litLen = litTo - litFrom
-      val mToken = if (mLen == 0) 0
-        else math.min(mLen - 4, 15)
-      out.write((math.min(litLen, 15) << 4) | mToken)
-      if (litLen >= 15) writeLen(litLen - 15)
-      out.write(data, litFrom, litLen)
-      if (mLen > 0) {
-        out.write(offset & 0xff)
-        out.write((offset >>> 8) & 0xff)
-        if (mLen - 4 >= 15) writeLen(mLen - 4 - 15)
-      }
-    }
-    var pos = from
-    var anchor = from
-    // matches may neither start in the last 12 bytes nor cover the
-    // last 5 (the spec's end-of-block conditions)
-    val mfLimit = until - 12
-    val matchLimit = until - 5
-    while (pos <= mfLimit && pos + 4 <= until) {
-      val h = hash(read32(pos))
-      val cand = table(h)
-      table(h) = pos
-      if (cand >= from && pos - cand <= 0xffff &&
-        read32(cand) == read32(pos)) {
-        var ml = 4
-        while (pos + ml < matchLimit &&
-          data(cand + ml) == data(pos + ml)) ml += 1
-        emit(anchor, pos, pos - cand, ml)
-        pos += ml
-        anchor = pos
-      } else pos += 1
-    }
-    emit(anchor, until, 0, 0) // final literals-only sequence
-    val bytes = out.toByteArray
-    if (bytes.length < len) Some(bytes) else None
-  }
+  private lazy val blockCompressor =
+    net.jpountz.lz4.LZ4Factory.fastestInstance().fastCompressor()
 
-  /** Encode a modern single frame: independent ≤64 KiB blocks,
-    * content size + content checksum (so the reference CLI verifies
-    * the round trip), no dict, no per-block checksums.
+  /** Encode a modern single frame: independent ≤64 KiB blocks, each
+    * compressed by lz4-java's block compressor and stored raw when
+    * that does not shrink it, content size + content checksum (so the
+    * reference CLI verifies the round trip), no dict, no per-block
+    * checksums.
+    *
+    * The frame is written here rather than by lz4-java's
+    * `LZ4FrameOutputStream`, which allocates two 64 KiB buffers per
+    * frame: on the 500 q_lz4_roundtrip values (sf0.01, same JVM,
+    * interleaved, 9 reps × 20 passes, 4-core host, JDK 17) it took
+    * 12.8 ms per pass, this writer 1.0 ms.
     */
   def encodeFrame(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
@@ -373,15 +326,14 @@ object Lz4 {
     out.write(desc, 0, 10)
     out.write((xxhash32(desc, 0, 10, 0) >>> 8) & 0xff)
     val Block = 64 << 10
+    val buf = new Array[Byte](
+      blockCompressor.maxCompressedLength(math.min(Block, data.length)))
     var p = 0
     while (p < data.length) {
       val n = math.min(Block, data.length - p)
-      compressBlock(data, p, p + n) match {
-        case Some(c) => w32(c.length); out.write(c, 0, c.length)
-        case None =>
-          w32(n | 0x80000000)
-          out.write(data, p, n)
-      }
+      val c = blockCompressor.compress(data, p, n, buf, 0, buf.length)
+      if (c < n) { w32(c); out.write(buf, 0, c) }
+      else { w32(n | 0x80000000); out.write(data, p, n) }
       p += n
     }
     w32(0) // EndMark

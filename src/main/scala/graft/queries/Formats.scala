@@ -1525,11 +1525,12 @@ object Formats {
           Brotli.brotliTextSchema)(Brotli.decodeBrotliText)
         .select(col("doc_id"), col("brotli_text"))
     }),
-    // ----- xz container round-trip: the repo's own encoder (real
-    // xz container, uncompressed LZMA2 chunks — reference-verified
-    // at generation) through the full decoder with the CRC32 check
-    // verified; the LZMA entropy layer itself is pinned by the
-    // reference-liblzma goldens in XzSpec
+    // ----- xz container round-trip: the in-repo fixture writer (real
+    // xz container, uncompressed LZMA2 chunks; kept over xz-java's
+    // slower writer, A/B at `Xz.compress`) through the full decoder
+    // with the CRC32 check verified; the LZMA entropy layer itself is
+    // pinned by the reference-liblzma goldens in XzSpec and the
+    // xz-java cases in CodecFuzzSpec
     QuerySpec("q_xz_roundtrip",
       // xz container round-trip is lossless
       """SELECT doc_id, COALESCE(text, '') || ' xz ' ||
@@ -1546,11 +1547,11 @@ object Formats {
         .select(col("doc_id"), col("xz_text"))
     }),
     // ----- LZ4 frame codec (the fast-tier dump/cache format):
-    // padded doc text through the repo's greedy block encoder —
-    // whose frames the reference lz4 CLI extracted byte-exactly at
-    // fixture-generation time (Lz4Spec + Lz4PinGen) — and back
-    // through the from-spec frame decoder with the header HC and
-    // XXH32 content checksum verified
+    // padded doc text through lz4-java's block compressor in an
+    // in-repo frame (`Lz4.encodeFrame`) and back through the
+    // from-spec frame decoder with the header HC and XXH32 content
+    // checksum verified; reference-CLI frames pin the decoder in
+    // Lz4Spec
     QuerySpec("q_lz4_roundtrip",
       // the LZ4 frame round trip must be lossless
       """SELECT doc_id, COALESCE(text, '') || ' lz4 ' ||
@@ -1588,10 +1589,9 @@ object Formats {
         .select(col("doc_id"), col("z_text"))
     }),
     // ----- FULL bzip2 codec (the dump-distribution format): padded
-    // doc text through the repo's own BWT+MTF+RLE+Huffman encoder —
-    // whose output the reference bzip2 tool decoded bit-exactly at
-    // generation time (Bzip2Spec pins regeneration) — and back
-    // through the from-spec decoder with both CRC layers verified
+    // doc text through commons-compress's encoder and back through
+    // the from-spec decoder with both CRC layers verified;
+    // reference-tool goldens pin the decoder in Bzip2Spec
     QuerySpec("q_bzip2_roundtrip",
       // full bzip2 codec must be lossless: padded text (the z-run
       // exercises RLE1 escapes) through BWT+MTF+RLE+Huffman and back
@@ -1629,13 +1629,13 @@ object Formats {
     }),
     // ----- FULL zstd entropy decode (FSE + Huffman compressed
     // blocks, RFC 8878): each doc's text — padded with planted
-    // repetition so the LZ77 stage emits real sequences — goes
-    // through the entropy ENCODER (canonical Huffman literals +
-    // predefined-FSE-coded sequences) and must come back
-    // byte-identical through zstd-jni, XXH64 checksum verified.
-    // Layouts cycle block size, 1-/4-stream literals,
-    // single-segment headers and the checksum flag; the same decode
-    // path is pinned against reference-CLI frames in ZstdEntropySpec.
+    // repetition so the match finder emits real sequences — goes
+    // through zstd-jni's encoder and must come back byte-identical
+    // through the decode path. Layouts cycle the checksum flag and
+    // the content size: a frame without one decodes through the
+    // size-less path (output bounded by the block walk). The same
+    // decode path is pinned against reference-CLI frames in
+    // ZstdEntropySpec.
     QuerySpec("q_zstd_codec",
       // full entropy decode must be lossless: the padded text through
       // LZ77 + Huffman + FSE and back is the padded text
@@ -1649,9 +1649,8 @@ object Formats {
           substring(coalesce(col("text"), lit("")), 1, 64),
           repeat(lit("pad "), (col("doc_id") % 17).cast("int")))
           .as("__t"),
-        (col("doc_id") % 30).cast("int").as("__s"))
-      val z = Zstd.synthZstdEntropy(d, "doc_id", "__t", "__s",
-        "content")
+        (col("doc_id") % 4).cast("int").as("__s"))
+      val z = Zstd.synthZstdEntropy(d, "__t", "__s", "content")
       Multimodal.decodeBatches(z, "content",
           Zstd.zstdTextSchema)(Zstd.decodeZstdText)
         .select(col("doc_id"), col("zstd_text"))

@@ -195,17 +195,15 @@ class CodecFuzzSpec extends SparkSpec {
   }
 
   test("zstd entropy decoder is total under mutation") {
-    // FSE/Huffman-compressed blocks face the mutants too: the
-    // own-encoder frame (predefined sequences + direct-weight
-    // Huffman) and a reference-CLI frame (fse-compressed weights,
+    // FSE/Huffman-compressed blocks face the mutants too: a zstd-jni
+    // frame and a reference-CLI frame (fse-compressed weights,
     // 4-stream literals, repeat modes)
     val rnd2 = new scala.util.Random(0x25DFL)
     val words = Seq("fuzz", "entropy", "block", "the", "of", "zstd")
     val text = Seq.fill(3000)(words(rnd2.nextInt(words.length)))
       .mkString(" ").getBytes("UTF-8")
-    val own = graft.operators.Zstd.encodeEntropyFrame(text,
-      blockSize = 4096, fourStreams = true)
-    assertTotal("zstd/entropy-own", own,
+    val jar = graft.operators.Zstd.compress(text)
+    assertTotal("zstd/entropy-jar", jar,
       graft.operators.Zstd.decompress)
     val in = getClass.getResourceAsStream("/zstd/text_l19.zst")
     val golden = in.readAllBytes(); in.close()
@@ -445,8 +443,8 @@ class CodecFuzzSpec extends SparkSpec {
     assertTotal("bzip2",
       graft.operators.Bzip2.compress(text.getBytes("UTF-8")),
       graft.operators.Bzip2.decompress(_: Array[Byte]))
-    // a reference-encoder golden: multi-table Huffman and runs the
-    // own encoder never writes
+    // a reference-encoder golden: the bzip2 CLI's multi-table
+    // Huffman over long runs
     assertTotal("bzip2/golden", resource("/bzip2/runs_l9.bz2"),
       graft.operators.Bzip2.decompress(_: Array[Byte]))
   }
@@ -528,6 +526,64 @@ class CodecFuzzSpec extends SparkSpec {
       graft.operators.Lz4.decodeRawBlock(b, 0, b.length, plain.length))
   }
 
+  test("kept from-spec decoders read jar-encoded values byte-exactly " +
+      "and stay total") {
+    // bzip2, LZ4 frames and xz keep their from-spec decoders: each
+    // must read what the jars on the classpath write, byte-exactly
+    import net.jpountz.lz4.LZ4FrameOutputStream
+    import LZ4FrameOutputStream.{BLOCKSIZE, FLG}
+    import org.tukaani.xz.{LZMA2Options, XZ, XZOutputStream}
+    import graft.operators.{Bzip2, Lz4, Xz}
+    def written(data: Array[Byte])(
+        wrap: java.io.OutputStream => java.io.OutputStream): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = wrap(bos)
+      try out.write(data) finally out.close()
+      bos.toByteArray
+    }
+    val rnd2 = new scala.util.Random(0xC1055L)
+    val words = Seq("cross", "codec", "value", "the", "of", "é→Ω")
+    val text = Seq.fill(600)(words(rnd2.nextInt(words.length)))
+      .mkString(" ").getBytes("UTF-8")
+    val random = Array.fill[Byte](700)(rnd2.nextInt(256).toByte)
+    for ((name, data) <- Seq(("text", text), ("random", random),
+        ("empty", Array.emptyByteArray))) {
+      val cases = Seq[(String, Array[Byte], Array[Byte] => Option[Any])](
+        ("bzip2/commons-compress", written(data)(o =>
+          new org.apache.commons.compress.compressors.bzip2
+            .BZip2CompressorOutputStream(o)),
+          Bzip2.decompress(_: Array[Byte])),
+        ("lz4/frame-stream", written(data)(o =>
+          new LZ4FrameOutputStream(o, BLOCKSIZE.SIZE_64KB, data.length,
+            FLG.Bits.BLOCK_INDEPENDENCE, FLG.Bits.CONTENT_SIZE,
+            FLG.Bits.CONTENT_CHECKSUM)),
+          Lz4.decodeFrame(_: Array[Byte])),
+        ("lz4/frame-stream-block-checksum", written(data)(o =>
+          new LZ4FrameOutputStream(o, BLOCKSIZE.SIZE_64KB,
+            FLG.Bits.BLOCK_INDEPENDENCE, FLG.Bits.BLOCK_CHECKSUM)),
+          Lz4.decodeFrame(_: Array[Byte])),
+        ("xz/xz-java-preset0", written(data)(o =>
+          new XZOutputStream(o, new LZMA2Options(0))),
+          Xz.decompress(_: Array[Byte])),
+        ("xz/xz-java-preset6-crc32", written(data)(o =>
+          new XZOutputStream(o, new LZMA2Options(6), XZ.CHECK_CRC32)),
+          Xz.decompress(_: Array[Byte])))
+      for ((codec, enc, decode) <- cases) {
+        assert(decode(enc).exists {
+          case b: Array[Byte] => b.sameElements(data)
+          case _ => false
+        }, s"$codec/$name must decode byte-exactly")
+        assertTotal(s"$codec/$name", enc, decode)
+      }
+    }
+    // preset 0 writes compressed LZMA2 chunks (control byte ≥ 0x80
+    // after the 12-byte stream header and the block header), which
+    // the fixture writer never does
+    val p0 = written(text)(o => new XZOutputStream(o, new LZMA2Options(0)))
+    assert((p0(12 + ((p0(12) & 0xff) + 1) * 4) & 0x80) != 0,
+      "preset-0 stream holds a compressed chunk")
+  }
+
   /** `body`'s result and the heap bytes this thread allocated in it. */
   private def allocating[T](body: => T): (T, Long) = {
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
@@ -571,10 +627,13 @@ class CodecFuzzSpec extends SparkSpec {
       .exists(_.sameElements(plain)), "lzma dict")
     // zstd: a 2^27 window (descriptor byte 5) over a compressed block
     // decodes one-shot, no window allocated; a declared content size
-    // (bytes 6..9) of 4 GiB − 1, or of the cap itself, passes the
-    // block walk's bound and refuses before the buffer is made
+    // (bytes 6..9, spliced onto the jar frame) of 4 GiB − 1, or of the
+    // cap itself, passes the block walk's bound and refuses before
+    // the buffer is made
     val zText = ("window bound " * 200).getBytes("UTF-8")
-    val zs = graft.operators.Zstd.encodeEntropyFrame(zText)
+    val fcs4 = new Array[Byte](4)
+    le32(fcs4, 0, zText.length.toLong)
+    val zs = ZstdEntropySpec.spliced(zText, 2 << 6, fcs4)
     assert(graft.operators.Zstd.decompress(zs).isDefined)
     val wide = zs.clone()
     wide(5) = ((27 - 10) << 3).toByte

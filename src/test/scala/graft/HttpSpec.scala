@@ -77,7 +77,7 @@ class HttpSpec extends AnyFunSuite {
       ("x-gzip", Archive.gzipWrite(plain, "b")),
       ("deflate", Http.zlibDeflate(plain)),
       ("deflate", Http.rawDeflate(plain)), // in-the-wild raw variant
-      ("zstd", Zstd.encodeEntropyFrame(plain)),
+      ("zstd", Zstd.compress(plain)),
       ("bzip2", graft.operators.Bzip2.compress(plain)),
       ("xz", graft.operators.Xz.compress(plain)))
     for ((enc, bytes) <- cases) {

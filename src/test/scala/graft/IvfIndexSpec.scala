@@ -87,33 +87,36 @@ class IvfIndexSpec extends SparkSpec {
         nCentroids = 4, buckets = 4)
       val r = IvfIndex.reader(s, t)
       // count ACTIONS (query executions), not Spark jobs — AQE splits
-      // one action into a job per materialized stage
+      // one action into a job per materialized stage. Listener
+      // delivery is ASYNC, so an execution counts only when its id is
+      // newer than a marker taken just before the body (a late
+      // IvfIndex.build event is older), and the count is read once a
+      // sentinel action run after the body has been delivered: the
+      // body's events were posted before it on the same queue.
       def actionsDuring(body: => Unit): Int = {
-        val n = new java.util.concurrent.atomic.AtomicInteger(0)
+        val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+        val delivered = new java.util.concurrent.CountDownLatch(1)
+        @volatile var sentinel = Long.MaxValue
         val l = new org.apache.spark.sql.util.QueryExecutionListener {
           override def onSuccess(f: String,
               qe: org.apache.spark.sql.execution.QueryExecution,
-              d: Long): Unit = n.incrementAndGet()
+              d: Long): Unit =
+            if (qe.id == sentinel) delivered.countDown() else ids.add(qe.id)
           override def onFailure(f: String,
               qe: org.apache.spark.sql.execution.QueryExecution,
               e: Exception): Unit = ()
         }
-        // listener delivery is ASYNC: under full-suite contention
-        // an event can land seconds late, straddling a short
-        // stabilization window and leaking into the next
-        // measurement. Require the count to hold steady across
-        // three consecutive checks before trusting it.
         s.listenerManager.register(l)
         try {
+          val mark = s.range(1).queryExecution.id
           body
-          var seen = -1
-          var stable = 0
-          while (stable < 3) {
-            Thread.sleep(400)
-            if (n.get == seen) stable += 1
-            else { seen = n.get; stable = 0 }
-          }
-          seen
+          val end = s.range(1)
+          sentinel = end.queryExecution.id
+          end.collect()
+          assert(delivered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+            "the sentinel action was never delivered")
+          import scala.jdk.CollectionConverters._
+          ids.asScala.count(id => id > mark && id < sentinel)
         } finally s.listenerManager.unregister(l)
       }
       // building the batch plan runs exactly the probed-list action

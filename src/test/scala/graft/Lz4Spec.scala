@@ -6,9 +6,10 @@ import graft.operators.Lz4
 
 /** LZ4 frame codec: reference-CLI fixtures decode byte-exactly
   * (modern/linked/block-checksum/legacy/concatenated frames), the
-  * in-repo encoder round-trips and was extracted byte-exactly by
-  * the reference `lz4` CLI at fixture-generation time, xxHash32
-  * matches its published test vectors, damage refuses.
+  * fixture encoder (lz4-java blocks in the in-repo frame, whose
+  * layout the reference `lz4` CLI extracted byte-exactly at
+  * fixture-generation time) round-trips, xxHash32 matches its
+  * published test vectors, damage refuses.
   */
 class Lz4Spec extends AnyFunSuite {
 

@@ -15,10 +15,9 @@ import graft.operators.Zstd
   *     checksummed goldens also pin the XXH64 implementation
   *     end-to-end: a wrong hash fails every checksummed decode.
   *
-  *  2. Round-trips through the repo's own entropy ENCODER (LZ77 +
-  *     canonical Huffman literals + predefined-FSE sequences)
-  *     across block sizes, stream counts, header layouts, and
-  *     checksum settings.
+  *  2. Round-trips through zstd-jni's encoder ([[Zstd.compress]])
+  *     across payload classes, checksum settings and header layouts
+  *     (sized single-segment, size-less with a window descriptor).
   *
   * Plus the lying-checksum refusal and published XXH64 vectors.
   */
@@ -89,28 +88,30 @@ class ZstdEntropySpec extends SparkSpec {
       ("empty", Array.emptyByteArray))
   }
 
-  test("own-encoder entropy frames round-trip across layouts") {
+  test("jar-encoder frames round-trip across layouts") {
     for ((name, data) <- payloads;
-        blockSize <- Seq(4096, 65536);
-        four <- Seq(false, true);
+        sized <- Seq(false, true);
         check <- Seq(false, true)) {
-      val f = Zstd.encodeEntropyFrame(data, blockSize = blockSize,
-        fourStreams = four, withChecksum = check)
+      val f = Zstd.compress(data, checksum = check, contentSize = sized)
       val got = Zstd.decompress(f)
-      assert(got.isDefined,
-        s"$name bs=$blockSize four=$four check=$check refused")
+      assert(got.isDefined, s"$name sized=$sized check=$check refused")
       assert(java.util.Arrays.equals(got.get, data),
-        s"$name bs=$blockSize four=$four check=$check mismatch")
+        s"$name sized=$sized check=$check mismatch")
+      val m = Zstd.frameMeta(f).get.head
+      assert(m.hasChecksum == check, s"$name check=$check meta")
+      assert(m.contentSize == (if (sized) data.length else -1),
+        s"$name sized=$sized meta")
     }
-    // single-segment header variant
+    // single-segment header variant (descriptor bit 5: no window byte)
     val d = payloads.head._2
-    val ss = Zstd.encodeEntropyFrame(d, singleSegment = true)
+    val ss = Zstd.compress(d)
+    assert((ss(4) & 0x20) != 0, "sized frame is single-segment")
     assert(java.util.Arrays.equals(Zstd.decompress(ss).get, d))
   }
 
-  test("own-encoder compressible frames carry entropy blocks and win") {
+  test("jar-encoder compressible frames carry entropy blocks and win") {
     val data = payloads.head._2 // the repetitive text
-    val f = Zstd.encodeEntropyFrame(data)
+    val f = Zstd.compress(data)
     val m = Zstd.frameMeta(f).get.head
     assert(m.nCompressed > 0, "text should entropy-compress")
     assert(f.length < data.length / 2,
@@ -121,7 +122,7 @@ class ZstdEntropySpec extends SparkSpec {
   test("a lying stored checksum refuses decode but still walks") {
     val data = "checksummed payload with words words words repeated"
       .getBytes("UTF-8")
-    val f = Zstd.encodeEntropyFrame(data, withChecksum = true)
+    val f = Zstd.compress(data, checksum = true)
     val bad = f.clone()
     bad(bad.length - 2) = (bad(bad.length - 2) ^ 0x40).toByte
     assert(Zstd.decompress(f).isDefined)
@@ -158,14 +159,10 @@ class ZstdEntropySpec extends SparkSpec {
     // dict-flagged frame whose block is entropy-compressed: the
     // decoder cannot know the dictionary, so decode must classify
     val data = payloads.head._2
-    val f = Zstd.encodeEntropyFrame(data, withChecksum = false)
     // splice a 1-byte dict id AFTER the window descriptor (layout:
     // magic 4 + descriptor 1 + window 1, then dict id)
-    val patched = new Array[Byte](f.length + 1)
-    System.arraycopy(f, 0, patched, 0, 6)
-    patched(4) = (patched(4) | 1).toByte // dict flag = 1 byte
-    patched(6) = 42
-    System.arraycopy(f, 6, patched, 7, f.length - 6)
+    val patched = ZstdEntropySpec.spliced(data, 1, Array[Byte](42))
+    assert(Zstd.frameMeta(patched).get.head.nCompressed > 0)
     assert(Zstd.frameMeta(patched).get.head.dictId == 42L)
     assert(Zstd.decompress(patched).isEmpty)
   }
@@ -185,5 +182,22 @@ class ZstdEntropySpec extends SparkSpec {
       assert(meta.head.nCompressed > 0, s"$name holds no entropy block")
       assert(Zstd.decompress(zst).exists(_.sameElements(want)), name)
     }
+  }
+}
+
+object ZstdEntropySpec {
+
+  /** A zstd-jni frame of `data` with header fields spliced in for
+    * cases that patch fixed offsets: the frame is written without a
+    * content size (magic 4 + descriptor 1 + window 1, then blocks),
+    * `flags` are or-ed into the descriptor and `fields` (dictionary
+    * id, then content size, as the flags declare) go after the
+    * window byte.
+    */
+  def spliced(data: Array[Byte], flags: Int, fields: Array[Byte])
+      : Array[Byte] = {
+    val f = Zstd.compress(data, checksum = false, contentSize = false)
+    require((f(4) & 0xe3) == 0, "expected a size-less, dict-less frame")
+    f.take(4) ++ Array((f(4) | flags).toByte, f(5)) ++ fields ++ f.drop(6)
   }
 }
