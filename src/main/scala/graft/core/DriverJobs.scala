@@ -31,7 +31,7 @@ object DriverJobs {
 
   /** A Spark action blocks its pool thread until the job ends. Marked
     * `blocking`, each such thread makes the fork-join pool add one, so
-    * more concurrent fits than cores still overlap instead of queueing
+    * more concurrent jobs than cores still overlap instead of queueing
     * behind the first `availableProcessors` of them. */
   private[graft] def onPool[T](body: => T): Future[T] =
     Future(blocking(body))

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.DriverJobs
-
 /** Discretization operators (reference: src/trousse/feature_fix.py and
   * scripts/breed_specific_bin_splitting.py).
   */
@@ -143,10 +141,11 @@ final case class SplitIntoBins(
   * O(combos × rows) boolean-mask loop — or even a join — the id is pure
   * arithmetic: id = Σ ordinal_i(value_i) · stride_i, where stride_i is
   * the product of later columns' cardinalities. Per-column ordinals come
-  * from bounded `distinct().collect()` dictionaries turned into literal
-  * maps: zero shuffles, zero joins, one codegen'd projection. Rows with
-  * a null in any source column get a null id (null propagates through
-  * the sum), matching the reference's NaN-combo semantics.
+  * from one bounded [[DictionaryFit]] job over all source columns,
+  * turned into literal maps: zero shuffles, zero joins, one codegen'd
+  * projection. Rows with a null in any source column get a null id
+  * (null propagates through the sum), matching the reference's
+  * NaN-combo semantics.
   */
 final case class CombineCategoricalColumns(
     columns: Seq[String],
@@ -156,10 +155,8 @@ final case class CombineCategoricalColumns(
   def derivedColumns: Seq[String] = Seq(columns.mkString("-") + suffix)
 
   protected def transform(df: DataFrame): DataFrame = {
-    val dicts: Seq[Map[String, Long]] = columns.map { c =>
-      DictionaryFit.sortedDistinct(df, col(c))
-        .zipWithIndex.map { case (v, i) => (v, i.toLong) }.toMap
-    }
+    val dicts = DictionaryFit.fit(df, "CombineCategoricalColumns",
+      columns.map(c => c -> col(c))).map(DictionaryFit.ordinals)
     df.withColumn(derivedColumns.head,
       CombineCategoricalColumns.idColumn(columns, dicts))
   }
@@ -193,18 +190,13 @@ final case class MultipleCombinations(columns: Seq[String])
       .filter(_ => columns.size >= 2)
   protected def transform(df: DataFrame): DataFrame = {
     if (columns.size < 2) return df
-    // fit each SOURCE column's dictionary exactly once, concurrently —
-    // the per-prefix fold re-fit every shared column per prefix (k
-    // prefixes over n columns cost n(n+1)/2 − 1 distinct-collect jobs,
-    // run sequentially; now n, overlapped). The prefixes' combo ids
-    // are pure arithmetic over those shared dictionaries, so the
-    // output is bit-identical to folding CombineCategoricalColumns.
-    val sc = df.sparkSession.sparkContext
-    val dicts: Map[String, Map[String, Long]] = columns.map(c =>
-      DriverJobs.fork(sc, s"MultipleCombinations: fit $c")(c ->
-        DictionaryFit.sortedDistinct(df, col(c))
-          .zipWithIndex.map { case (v, i) => (v, i.toLong) }.toMap))
-      .map(DriverJobs.join).toMap
+    // fit each SOURCE column's dictionary once, all in one job — the
+    // per-prefix fold re-fit every shared column per prefix (k prefixes
+    // over n columns cost n(n+1)/2 − 1 fits). The prefixes' combo ids
+    // are pure arithmetic over those shared dictionaries, so the output
+    // is bit-identical to folding CombineCategoricalColumns.
+    val dicts = columns.zip(DictionaryFit.fit(df, "MultipleCombinations",
+      columns.map(c => c -> col(c))).map(DictionaryFit.ordinals)).toMap
     (2 to columns.size).foldLeft(df) { (d, k) =>
       val cs = columns.take(k)
       d.withColumn(cs.mkString("-") + "_enc",

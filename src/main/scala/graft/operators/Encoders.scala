@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.BooleanType
   * EVERY derived column (reference :637-656 — nullable boolean dtype).
   *
   * The category dictionary is data-dependent, so applying this op runs
-  * one bounded `distinct().collect()` action (SURVEY.md §7.4 risk 7);
+  * one bounded [[DictionaryFit]] job (SURVEY.md §7.4 risk 7);
   * cardinality is bounded by the categorical heuristic (≤ n/300).
   * The discovered derived columns are recorded on the applied op copy.
   */
@@ -27,7 +27,8 @@ final case class OneHotEncoder(
     categoriesOut.map(cat => s"${columns.head}_$cat$derivedColumnSuffix")
 
   private def fit(df: DataFrame): Seq[String] =
-    DictionaryFit.sortedDistinct(df, col(columns.head))
+    DictionaryFit.fit(df, "OneHotEncoder",
+      Seq(columns.head -> col(columns.head))).head
 
   protected def transform(df: DataFrame): DataFrame = {
     val src  = columns.head
@@ -63,7 +64,8 @@ final case class OrdinalEncoder(
   require(columns.size == 1, "OrdinalEncoder operates on one column")
 
   private def fit(df: DataFrame): Seq[(String, Long)] =
-    DictionaryFit.sortedDistinct(df, col(columns.head))
+    DictionaryFit.fit(df, "OrdinalEncoder",
+      Seq(columns.head -> col(columns.head))).head
       .zipWithIndex.map { case (v, i) => (v, i.toLong) }
 
   protected def transform(df: DataFrame): DataFrame = {

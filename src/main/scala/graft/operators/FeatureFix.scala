@@ -1,46 +1,107 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{DriverJobs, GraftDataset}
 
-/** Shared bounded-dictionary fit: the distinct values of an expression,
-  * sorted, collected to the driver with a hard cardinality guard.
+/** Shared bounded-dictionary fit: the sorted distinct non-null values
+  * of k expressions (cast to string), collected to the driver with a
+  * hard cardinality guard.
   *
   * Every encoder-style op needs a driver-side dictionary; on a genuinely
   * categorical column the size is bounded by the classification
-  * heuristic (≤ n/300), but nothing used to CHECK — one-hot on a
+  * heuristic (≤ n/300), but nothing else CHECKS — one-hot on a
   * high-cardinality key column would OOM the driver and emit a million
-  * columns. The guard costs nothing extra: the fit collects through
-  * `limit(max+1)` (TakeOrderedAndProject — a bounded per-partition
-  * top-k, never a full sort) and fails fast when the limit is hit.
+  * columns. The fit is ONE Spark job with no exchange, whatever k is
+  * (none when k = 0), named `"<step>: fit <names>"`:
+  *
+  *  - each task scans its partition once and keeps one hash set per
+  *    expression, copying a value only when it is unseen; a set stops
+  *    growing at `max + 1` values, so a task ships at most
+  *    k·(max + 1) values;
+  *  - the driver merges the task results as they arrive, again up to
+  *    `max + 1` per expression, and refuses (naming the column) when
+  *    one passes `max`. A column with ≤ `max` distinct values never
+  *    fills a task's set, so a merged set that does not overflow is
+  *    exact;
+  *  - the driver sorts each dictionary by [[UTF8String.binaryCompare]]:
+  *    the string cast drops any collation, so this is Spark's
+  *    `orderBy` on the cast column (Java `String` order is not: it puts
+  *    U+1F600 before U+FFFD).
+  *
+  * The job runs inside its own SQL execution, so query listeners see it
+  * like any action.
   */
 private[graft] object DictionaryFit {
   val DefaultMaxCategories = 10000
 
-  /** Monotonic fit counter — lets specs pin the single-fit contract
-    * (one distinct-collect per encoder application) without depending
-    * on AQE-sensitive Spark job counts.
+  /** Monotonic fit-call counter — lets specs pin the single-fit contract
+    * (one fit per encoder application, one for all columns of a
+    * multi-column op) without depending on Spark job counts.
     */
   private[graft] val fitCount = new java.util.concurrent.atomic.AtomicLong
 
-  def sortedDistinct(df: DataFrame, expr: Column,
-      max: Int = DefaultMaxCategories): Seq[String] = {
+  /** The dictionary of each `(column name, expression)`, in order. */
+  def fit(df: DataFrame, step: String, exprs: Seq[(String, Column)],
+      max: Int = DefaultMaxCategories): Seq[Seq[String]] = {
+    if (exprs.isEmpty) return Seq.empty
     fitCount.incrementAndGet()
-    val vals = df.select(expr.cast("string").as("__v"))
-      .filter(col("__v").isNotNull)
-      .distinct().orderBy(col("__v"))
-      .limit(max + 1)
-      .collect().map(_.getString(0)).toSeq
-    if (vals.size > max)
-      throw new IllegalArgumentException(
-        s"dictionary fit exceeded $max distinct values — the column is " +
-        "not categorical; refusing to collect an unbounded dictionary " +
-        "to the driver (reference only encodes categorical columns, " +
-        "dataset.py:493-535)")
-    vals
+    val k = exprs.size
+    val qe = df.select(exprs.zipWithIndex.map { case ((_, e), i) =>
+        e.cast("string").as(s"__v$i") }: _*)
+      .asInstanceOf[classic.Dataset[Row]].queryExecution
+    val merged = Array.fill(k)(new java.util.HashSet[UTF8String])
+    val sc = df.sparkSession.sparkContext
+    DriverJobs.described(sc,
+        s"$step: fit ${exprs.map(_._1).mkString(",")}") {
+      SQLExecution.withNewExecutionId(qe, Some("dictionary fit")) {
+        sc.runJob(qe.toRdd,
+          (rows: Iterator[InternalRow]) => distinctUpTo(rows, k, max),
+          (_: Int, sets: Array[Array[UTF8String]]) =>
+            for (i <- 0 until k; v <- sets(i) if merged(i).size <= max)
+              merged(i).add(v))
+      }
+    }
+    exprs.zip(merged).foreach { case ((name, _), set) =>
+      if (set.size > max)
+        throw new IllegalArgumentException(
+          s"dictionary fit of $name exceeded $max distinct values — the " +
+          "column is not categorical; refusing to collect an unbounded " +
+          "dictionary to the driver (reference only encodes categorical " +
+          "columns, dataset.py:493-535)")
+    }
+    merged.toSeq.map(_.asScala.toSeq.sortWith(_.binaryCompare(_) < 0)
+      .map(_.toString))
+  }
+
+  /** value → index in a fitted dictionary. */
+  def ordinals(dict: Seq[String]): Map[String, Long] =
+    dict.zipWithIndex.map { case (v, i) => (v, i.toLong) }.toMap
+
+  /** One task's distinct non-null values of each of the k string
+    * columns, at most `max + 1` each. */
+  private def distinctUpTo(rows: Iterator[InternalRow], k: Int,
+      max: Int): Array[Array[UTF8String]] = {
+    val seen = Array.fill(k)(new java.util.HashSet[UTF8String])
+    rows.foreach { r =>
+      var i = 0
+      while (i < k) {
+        if (!r.isNullAt(i) && seen(i).size <= max) {
+          val v = r.getUTF8String(i)
+          // the row's bytes are reused: copy only an unseen value
+          if (!seen(i).contains(v)) seen(i).add(v.copy())
+        }
+        i += 1
+      }
+    }
+    seen.map(_.toArray(Array.empty[UTF8String]))
   }
 }
 
@@ -94,7 +155,7 @@ final case class EncodeSingleCategorical(
   def encodedValuesMap: Map[Long, String] =
     categoriesOut.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toMap
 
-  private def normExpr: Column = {
+  private[operators] def normExpr: Column = {
     val base  = col(column).cast("string")
     val cased =
       if (caseSensitive) base
@@ -108,14 +169,15 @@ final case class EncodeSingleCategorical(
     * check misses the one-hot shape, feature_fix.py:286-298; we follow
     * the intended semantics, SURVEY §2.11.)
     */
-  private def shouldSkip(df: DataFrame): Boolean =
+  private[operators] def shouldSkip(df: DataFrame): Boolean =
     !force && (
       df.columns.exists(c =>
         c.startsWith(s"${column}_") && c.endsWith("_enc")) ||
       df.schema(column).dataType.isInstanceOf[NumericType])
 
   private def fit(df: DataFrame): Seq[String] =
-    DictionaryFit.sortedDistinct(df, normExpr)
+    DictionaryFit.fit(df, "EncodeSingleCategorical",
+      Seq(column -> normExpr)).head
 
   protected def transform(df: DataFrame): DataFrame = {
     if (shouldSkip(df)) return df
@@ -138,18 +200,6 @@ final case class EncodeSingleCategorical(
   }
 
   override protected def applied(df: DataFrame): FeatureOperation =
-    if (categoriesOut.nonEmpty || shouldSkip(df)) this
-    else copy(categoriesOut = fit(df))
-
-  /** The fit step alone, returning the op with its dictionary
-    * attached — lets [[FeatureFix.encodeMultiCategorical]] run the
-    * per-column distinct-collect jobs CONCURRENTLY (they are
-    * independent job chains the scheduler overlaps) instead of one
-    * per sequential apply. Applying the returned op reuses the
-    * dictionary (same [[applied]] copy the sequential path records),
-    * so history and output are bit-identical to the unprefit flow.
-    */
-  private[operators] def prefit(df: DataFrame): EncodeSingleCategorical =
     if (categoriesOut.nonEmpty || shouldSkip(df)) this
     else copy(categoriesOut = fit(df))
 
@@ -188,17 +238,15 @@ object FeatureFix {
           s"non-categorical columns requested: ${nonCateg.toSeq.sorted}")
         columns
       }
-    // Prefit every column's dictionary CONCURRENTLY: each fit is an
-    // independent distinct+collect chain, and the sequential foldLeft
-    // ran them back to back (measured: the fits, not the final
-    // projection, dominate q_encode_multi). The prefit op carries
-    // categoriesOut, so the fold below applies without re-fitting and
-    // records the exact op copy the sequential flow recorded.
-    val sc = ds.data.sparkSession.sparkContext
-    val prefitted = targets.map(c =>
-      DriverJobs.fork(sc, s"FeatureFix.encodeMultiCategorical: fit $c")(
-        EncodeSingleCategorical(c, method, caseSensitive)
-          .prefit(ds.data))).map(DriverJobs.join)
-    prefitted.foldLeft(ds)((d, op) => op(d))
+    // One fit job for every column that is not skipped (a skipped
+    // encode stays skipped, as the fold only adds columns); each op then
+    // carries its categoriesOut, so the fold applies without re-fitting
+    // and records the same op copy a one-by-one apply records.
+    val toFit = targets.map(EncodeSingleCategorical(_, method, caseSensitive))
+      .filterNot(_.shouldSkip(ds.data))
+    toFit.zip(DictionaryFit.fit(ds.data, "FeatureFix.encodeMultiCategorical",
+        toFit.map(op => op.column -> op.normExpr)))
+      .map { case (op, cats) => op.copy(categoriesOut = cats) }
+      .foldLeft(ds)((d, op) => op(d))
   }
 }

@@ -421,6 +421,14 @@ object Zstd {
     out.toByteArray
   }
 
+  /** Idle encoder contexts, reused like the decoders' (at most one per
+    * core): a fresh native context costs a third of a small frame's
+    * encode. Every call sets all three parameters, and each `compress`
+    * starts a new frame, so a reused context writes the bytes a fresh
+    * one writes. */
+  private val idleEncoders = new java.util.concurrent.ArrayBlockingQueue[
+    ZstdCompressCtx](Runtime.getRuntime.availableProcessors)
+
   /** One zstd-jni frame at level 3: entropy-coded blocks (raw when a
     * block does not shrink), the XXH64 checksum when `checksum`, the
     * content size when `contentSize` (a sized frame of one segment
@@ -428,10 +436,10 @@ object Zstd {
     */
   def compress(data: Array[Byte], checksum: Boolean = true,
       contentSize: Boolean = true): Array[Byte] = {
-    val ctx = new ZstdCompressCtx
+    val ctx = Option(idleEncoders.poll()).getOrElse(new ZstdCompressCtx)
     try ctx.setLevel(3).setChecksum(checksum).setContentSize(contentSize)
       .compress(data)
-    finally ctx.close()
+    finally if (!idleEncoders.offer(ctx)) ctx.close()
   }
 
   // ------------------------------------------------------------------

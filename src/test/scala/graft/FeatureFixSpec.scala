@@ -120,18 +120,18 @@ class FeatureFixSpec extends SparkSpec {
     assert(ds2.history.size == ds.history.size)
   }
 
-  test("encodeMultiCategorical concurrent prefit: one fit per column, " +
+  test("encodeMultiCategorical: one fit for all columns, " +
       "history and output identical to the sequential fold") {
-    // r19: the per-column dictionary fits run concurrently via
-    // prefit; this pins the fit count and bit-equality vs applying
-    // the encoders one by one
+    // every column's dictionary comes from one DictionaryFit call;
+    // this pins the fit count and bit-equality vs applying the
+    // encoders one by one
     val d = Seq(("a", "x", 1.0), ("B", "y", 2.0), ("a", null, 3.0),
       (null, "x", 4.0)).toDF("c1", "c2", "num")
     val before = DictionaryFit.fitCount.get()
     val out = FeatureFix.encodeMultiCategorical(GraftDataset(d),
       Seq("c1", "c2"))
     out.data.collect() // execution must not re-fit either
-    assert(DictionaryFit.fitCount.get() - before == 2L)
+    assert(DictionaryFit.fitCount.get() - before == 1L)
     val seq = EncodeSingleCategorical("c2")(
       EncodeSingleCategorical("c1")(GraftDataset(d)))
     assert(out.data.columns.toSeq == seq.data.columns.toSeq)

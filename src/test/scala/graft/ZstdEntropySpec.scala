@@ -183,6 +183,34 @@ class ZstdEntropySpec extends SparkSpec {
       assert(Zstd.decompress(zst).exists(_.sameElements(want)), name)
     }
   }
+
+  test("pooled encoder contexts write the frames a fresh context " +
+      "writes") {
+    import spark.implicits._
+    // q_zstd_codec's value shape through the function that writes its
+    // frames: padded texts, checksum and content size cycling by
+    // doc_id % 4, so each pooled context is reused across settings on
+    // four concurrent tasks
+    val text = new String(resource("text.bin"), "UTF-8")
+    val docs = (0 until 500).map { i =>
+      val t = text.substring(i * 13 % (text.length - 400)).take(i % 400)
+      (i, t + " " + t.take(64) + "pad " * (i % 17), i % 4)
+    }.toDF("doc_id", "__t", "__s").repartition(4)
+    val rows = Zstd.synthZstdEntropy(docs, "__t", "__s", "content")
+      .collect()
+    assert(rows.length == 500)
+    for (r <- rows) {
+      val sel = r.getInt(2)
+      val fresh = new com.github.luben.zstd.ZstdCompressCtx
+      val want =
+        try fresh.setLevel(3).setChecksum(sel % 2 == 1)
+          .setContentSize((sel >> 1) % 2 == 0)
+          .compress(r.getString(1).getBytes("UTF-8"))
+        finally fresh.close()
+      assert(r.getAs[Array[Byte]]("content").sameElements(want),
+        s"doc ${r.getInt(0)}")
+    }
+  }
 }
 
 object ZstdEntropySpec {
