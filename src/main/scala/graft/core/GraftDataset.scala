@@ -29,10 +29,25 @@ final class GraftDataset(
   def featureCols: Set[String] =
     data.columns.toSet -- metadataCols
 
-  @transient private lazy val _classification: ColumnClassification =
-    Inference.classify(data, exact = exactDistinct)
+  @transient @volatile private var classified = false
+  @transient private lazy val _classification: ColumnClassification = {
+    val c = Inference.classify(data, exact = exactDistinct)
+    classified = true
+    c
+  }
 
   def classification: ColumnClassification = _classification
+
+  /** The categorical columns among `cols`: the cached classification's
+    * answer once it is computed, else a classification of just those
+    * columns (per-column counters do not depend on the others). */
+  private[graft] def categoricalAmong(cols: Seq[String]): Set[String] = {
+    val present = cols.filter(data.columns.contains)
+    if (classified) classification.categoricalCols & present.toSet
+    else if (present.isEmpty) Set.empty
+    else Inference.classify(data, present, exact = exactDistinct)
+      .categoricalCols
+  }
 
   /** numerical ∪ bool − constant − metadata (reference dataset.py:358-360) */
   def medExamColList: Set[String] = {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-import graft.sources.MiniJson
+import graft.sources.{Io, MiniJson}
 
 /** Delta Lake commit-log census (C236) — lakehouse tables are the
   * thing a 100 TB corpus LIVES in, and the JSON commits under
@@ -581,7 +581,7 @@ object DeltaLog {
     val log = Paths.get(dir, "_delta_log")
     val classic = log.resolve(f"$v%020d.checkpoint.parquet")
     if (Files.exists(classic))
-      return spark.read.parquet(classic.toString)
+      return Io.readParquet(spark, classic.toString)
     // V2: <v>.checkpoint.<uuid>.parquet
     val rx = (f"$v%020d" + "\\.checkpoint\\.[0-9a-f-]+\\.parquet").r
     val top = scala.util.Using.resource(Files.list(log)) { s =>
@@ -590,7 +590,7 @@ object DeltaLog {
         .getOrElse(throw new IllegalStateException(
           s"no checkpoint at version $v"))
     }
-    val topDf = spark.read.parquet(top.toString)
+    val topDf = Io.readParquet(spark, top.toString)
     if (!topDf.columns.contains("sidecar")) return topDf
     // resolve sidecar file names under _delta_log/_sidecars/
     val sidecars = topDf.where(col("sidecar").isNotNull)

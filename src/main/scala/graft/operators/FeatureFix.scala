@@ -219,7 +219,9 @@ object EncodeSingleCategorical {
   * feature_fix.py:352-397): B7 looped over the given columns, or over
   * every string-categorical column per the classification when none
   * are given. Non-categorical requested columns are rejected (the
-  * reference only logs — we fail loudly, SURVEY.md §2.11 port decision).
+  * reference only logs — we fail loudly, SURVEY.md §2.11 port decision);
+  * given columns are classified alone, unless the dataset's whole
+  * classification is already computed.
   */
 object FeatureFix {
   def encodeMultiCategorical(
@@ -233,7 +235,7 @@ object FeatureFix {
         ds.classification.strCategoricalCols.toSeq.sorted
       else {
         val nonCateg =
-          columns.toSet -- ds.classification.categoricalCols
+          columns.toSet -- ds.categoricalAmong(columns)
         require(nonCateg.isEmpty,
           s"non-categorical columns requested: ${nonCateg.toSeq.sorted}")
         columns

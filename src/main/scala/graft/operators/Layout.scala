@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Io
+
 /** Data-layout control: Z-order (Morton-curve) clustered writes.
   *
   * At 100 TB the scan is the query plan's biggest line item, and the
@@ -174,7 +176,7 @@ object Layout {
       s"nothing to compact: no data files under $inPath")
     val parts = math.max(1L,
       (total + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(inPath)
+    val df = Io.readParquet(spark, inPath)
     val out =
       if (sortCols.isEmpty) df.repartition(parts)
       else df.repartitionByRange(parts, sortCols.map(col): _*)

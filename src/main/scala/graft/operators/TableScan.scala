@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.sources.MiniJson
+import graft.sources.{Io, MiniJson}
 
 /** END-TO-END lakehouse table READ (round 19) — the composition
   * every per-tier oracle could not see: one query walks
@@ -735,7 +735,7 @@ object TableScan {
       }
     val ckpt =
       if (ckptV < 0) Array.empty[(String, Long, String, String)]
-      else spark.read.parquet(
+      else Io.readParquet(spark,
           s"$dir/_delta_log/" + f"$ckptV%020d.checkpoint.parquet")
         .where(col("add").isNotNull)
         .select(col("add.path")).collect()

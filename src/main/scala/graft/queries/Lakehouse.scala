@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators._
+import graft.sources.Io
 import Tables.{t, tp}
 
 /** Table formats and their files: Delta, Iceberg and Hudi logs and
@@ -318,7 +319,7 @@ object Lakehouse {
       val path = s"${System.getProperty("java.io.tmpdir")}" +
         "/graft_q_compaction_apply"
       Maintenance.compactionApply(d, "part", "file_id", assign, path)
-      s.read.parquet(path)
+      Io.readParquet(s, path)
         .withColumn("__file", input_file_name())
         .groupBy(col("part"))
         .agg(count(lit(1)).cast("long").as("n_rows"),

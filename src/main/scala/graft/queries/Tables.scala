@@ -3,12 +3,18 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Io
+
 /** The table readers every query area shares. */
 object Tables {
 
+  /** Opens table `name` of a test-data directory through
+    * [[Io.readParquet]]: the schema comes from the table's footer, read
+    * on the driver, so the open runs no Spark job.
+    */
   private[queries] def t(s: SparkSession, dir: String,
       name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Io.readParquet(s, s"$dir/$name.parquet")
 
   /** [[t]] plus a fan-out for queries whose cost is a per-row KERNEL
     * (synth+decode, signatures, text scoring), not the scan itself.
@@ -52,7 +58,7 @@ object Tables {
     * stable type regardless of how the data was generated.
     */
   private[graft] def readEvents(s: SparkSession, dir: String): DataFrame = {
-    val df = graft.sources.Io.readNanosAsLong(s, s"$dir/events.parquet")
+    val df = Io.readNanosAsLong(s, s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{GraftDataset, Inference}
 import graft.operators._
+import graft.sources.Io
 import graft.streaming.StreamingOps
 import Tables.{readEvents, t, tp}
 
@@ -1201,7 +1202,7 @@ object Wrangling {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_q_zorder"
       Layout.zorderWrite(li, Seq("l_partkey", "l_suppkey"), path,
         outPartitions = 8)
-      s.read.parquet(path)
+      Io.readParquet(s, path)
     })
   )
 

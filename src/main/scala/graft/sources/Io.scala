@@ -1,12 +1,23 @@
 package graft.sources
 
 import scala.util.Try
+import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.ParquetFileWriter.{
+  PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.core.{ColumnKind, GraftDataset, Inference}
+import graft.core.{ColumnKind, DriverJobs, GraftDataset, Inference}
 
 /** Sources/sinks (reference: src/trousse/dataset.py:28-49,668-807 and
   * anonymize_database.py:196-204).
@@ -146,7 +157,9 @@ object Io {
     * payload; reference dataset.py:756-807 restores pickled objects the
     * same way). Sidecars written by other engines can omit `ops_jvm`,
     * in which case history is empty and only the readable descriptors
-    * remain.
+    * remain. The data opens through [[readParquet]], so a flat
+    * `data.parquet` directory is opened from its first footer with no
+    * Spark job; a `partitionBy` layout is inferred by Spark.
     *
     * Safety: the sidecar is parsed with a real JSON parser (malformed →
     * typed [[graft.core.MalformedSidecarException]]); `ops_jvm`
@@ -163,7 +176,7 @@ object Io {
     if (!java.nio.file.Files.exists(p))
       throw new graft.core.NotGraftDatasetException(
         s"$path is not a graft dataset (no lineage.json)")
-    val df   = spark.read.parquet(s"$path/data.parquet")
+    val df   = readParquet(spark, s"$path/data.parquet")
     val side = MiniJson.parseObject(java.nio.file.Files.readString(p))
     def strSet(field: String): Set[String] = side.get(field) match {
       case Some(v: Vector[_]) => v.collect { case s: String => s }.toSet
@@ -193,31 +206,90 @@ object Io {
       history)
   }
 
-  /** Read a parquet table containing TIMESTAMP(NANOS) columns, which
-    * Spark's reader rejects by default. The legacy `nanosAsLong` flag
-    * is set ONLY for the eager schema-inference read and restored
-    * immediately; the returned frame carries an explicit schema (nanos
-    * as BIGINT), so execution never depends on session conf — queries
-    * built on it cannot leak the flag to later reads in the session.
+  /** Opens a parquet table as `spark.read.parquet(path)` does, minus
+    * the Spark job its schema inference launches. That inference reads
+    * one footer: `_common_metadata`, else `_metadata`, else the first
+    * data file in path order. Here the same footer is read on the
+    * driver and converted by Spark's own `readSchemaFromFooter`, and
+    * the table is opened with that schema, so the open runs no job.
+    * Nothing is cached: a file rewritten a moment ago is read afresh.
     *
-    * The set/read/restore window mutates SHARED session conf, so it is
-    * guarded by a monitor on the session: concurrent `readNanosAsLong`
-    * calls on the same session serialize instead of leaking the legacy
-    * flag into each other's unrelated reads. Callers running OTHER
-    * readers concurrently on the same session during this call can
-    * still observe the flag — schedule nanos reads before fanning out,
-    * or use a separate session.
+    * Where that rule does not decide the schema, the read is Spark's
+    * own, with its errors, under a named job description:
+    * `spark.sql.parquet.mergeSchema` on, a glob or a Hadoop input path
+    * filter, a directory with subdirectories (a nested or partitioned
+    * layout), no data file, or any error on the way.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path,
+        spark.sessionState.conf.legacyParquetNanosAsLong)
+      .flatMap(s => Try(spark.read.schema(s).parquet(path)).toOption)
+      .getOrElse(DriverJobs.described(spark.sparkContext,
+        s"Io.readParquet: infer schema $path")(spark.read.parquet(path)))
+
+  /** The schema Spark's inference would give `path`, from the footer it
+    * would read, or None where that rule does not apply (see
+    * [[readParquet]]). The converter flags are the ones Spark's
+    * inference passes (`ParquetFileFormat.mergeSchemasInParallel`);
+    * `nanosAsLong` is a parameter so that a caller can set it without
+    * touching session conf.
+    */
+  private def footerSchema(spark: SparkSession, path: String,
+      nanosAsLong: Boolean): Option[StructType] = try {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    if (conf.isParquetSchemaMergingEnabled ||
+        path.exists("{}[]*?\\".contains(_)) ||
+        hadoopConf.get("mapreduce.input.pathFilter.class") != null) None
+    else {
+      val fs = root.getFileSystem(hadoopConf)
+      val st = fs.getFileStatus(root)
+      val leaves = (if (st.isDirectory) fs.listStatus(root) else Array(st))
+        .filterNot(f => Bridge.hiddenFromListing(f.getPath.getName))
+        .sortBy(_.getPath.toString)
+      def named(n: String): Option[FileStatus] =
+        leaves.find(_.getPath.getName == n)
+      val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+      if (leaves.exists(_.isDirectory)) None
+      else named(PARQUET_COMMON_METADATA_FILE)
+        .orElse(named(PARQUET_METADATA_FILE))
+        .orElse(leaves.find(f => !summaries(f.getPath.getName)))
+        .map { f =>
+          val footer = scala.util.Using.resource(ParquetFileReader.open(
+              HadoopInputFile.fromStatus(f, hadoopConf),
+              HadoopReadOptions.builder(hadoopConf).withMetadataFilter(
+                ParquetMetadataConverter.SKIP_ROW_GROUPS).build()))(
+            _.getFooter)
+          ParquetFileFormat.readSchemaFromFooter(
+            new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = conf.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+              nanosAsLong = nanosAsLong,
+              respectUnknownTypeAnnotation =
+                conf.parquetReaderRespectUnknownTypeAnnotation))
+        }
+    }
+  } catch { case NonFatal(_) => None }
+
+  /** Read a parquet table containing TIMESTAMP(NANOS) columns, which
+    * Spark's reader rejects by default, with those columns as BIGINT
+    * nanoseconds (Spark's legacy `nanosAsLong` reading). The flag goes
+    * to the footer conversion only; session conf is never touched, and
+    * the returned frame carries an explicit schema, so execution does
+    * not depend on the flag either. Where [[readParquet]]'s footer rule
+    * does not apply, Spark infers the schema on a clone of the session
+    * with the flag set.
     */
   def readNanosAsLong(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.synchronized {
-      val key  = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try spark.read.parquet(path).schema
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+    val schema = footerSchema(spark, path, nanosAsLong = true).getOrElse {
+      val clone = Bridge.cloneSession(spark)
+      clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      DriverJobs.described(spark.sparkContext,
+        s"Io.readNanosAsLong: infer schema $path")(
+        clone.read.parquet(path).schema)
     }
     spark.read.schema(schema).parquet(path)
   }

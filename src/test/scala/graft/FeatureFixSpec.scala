@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.GraftDataset
+import graft.core.{GraftDataset, Inference}
 import graft.operators._
 
 class FeatureFixSpec extends SparkSpec {
@@ -143,5 +143,35 @@ class FeatureFixSpec extends SparkSpec {
         .categoriesOut).toSet ==
       seq.history.ops.map(_.asInstanceOf[EncodeSingleCategorical]
         .categoriesOut).toSet)
+  }
+
+  test("encodeMultiCategorical with explicit columns classifies only " +
+      "those columns, or reuses a computed classification") {
+    // `other` counts its evaluations: a classification that aggregates
+    // it (the whole frame's) evaluates it on every row
+    val calls = spark.sparkContext.longAccumulator("other evaluations")
+    val probe = udf((x: Long) => { calls.add(1); x })
+    val d = spark.range(0, 40, 1, 2).select(
+      concat(lit("c"), (col("id") % 3).cast("string")).as("c1"),
+      concat(lit("d"), (col("id") % 2).cast("string")).as("c2"),
+      probe(col("id")).as("other"))
+    val classified = Inference.distinctJobCount.get()
+    val out = FeatureFix.encodeMultiCategorical(GraftDataset(d), Seq("c1"))
+    assert(Inference.distinctJobCount.get() - classified == 1L)
+    assert(calls.value == 0L)
+    assert(out.data.columns.toSeq == Seq("c1", "c2", "other", "c1_enc"))
+    val ds = GraftDataset(d)
+    ds.classification
+    val reused = Inference.distinctJobCount.get()
+    val again = FeatureFix.encodeMultiCategorical(ds, Seq("c1"))
+    assert(Inference.distinctJobCount.get() == reused)
+    assert(again.data.collect().toSeq == out.data.collect().toSeq)
+    assert(again.history.ops == out.history.ops)
+    // an unknown column is refused as non-categorical, as before
+    val e = intercept[IllegalArgumentException] {
+      FeatureFix.encodeMultiCategorical(GraftDataset(d), Seq("c1", "nope"))
+    }
+    assert(e.getMessage.contains("non-categorical columns requested: " +
+      "List(nope)"))
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.core.GraftDataset
 import graft.operators.FillNA
 import graft.sources.Io
@@ -84,6 +86,193 @@ class IoSpec extends SparkSpec {
     val parts = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".csv"))
     assert(parts.length == 1)
+  }
+
+  private val sfDir = "/root/testdata/sf0.01"
+
+  /** Writes `rows` of a parquet schema given in Parquet's message syntax
+    * with parquet-hadoop's example writer: a footer with no Spark schema
+    * in it, and physical types Spark cannot write (TIMESTAMP(NANOS),
+    * BINARY without a string annotation). */
+  private def writeRaw(file: String, message: String,
+      rows: Seq[Map[String, Any]]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    val schema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType(message)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file)).withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      r.foreach {
+        case (k, v: Long)   => g.append(k, v)
+        case (k, v: String) => g.append(k, Binary.fromString(v))
+        case (k, v)         => fail(s"unsupported value $v for $k")
+      }
+      w.write(g)
+    } finally w.close()
+  }
+
+  private def sameAsSpark(s: org.apache.spark.sql.SparkSession,
+      path: String): Unit =
+    assert(Io.readParquet(s, path).schema.json ==
+      s.read.parquet(path).schema.json, path)
+
+  test("readParquet opens every layout with Spark's inferred schema") {
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
+    val tables = new java.io.File(sfDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
+    assert(tables.nonEmpty)
+    tables.foreach(sameAsSpark(spark, _))
+    val tmp = Files.createTempDirectory("graft_open").toFile.getPath
+    // Spark-written multi-part directory: _SUCCESS and .crc files beside
+    // the parts, a Spark schema in each footer, non-null fields stored
+    // as required
+    val multi = s"$tmp/multi"
+    spark.range(0, 300, 1, 3)
+      .select(col("id"), lit(1).as("one"), (col("id") % 7).as("m"))
+      .write.parquet(multi)
+    val names = new java.io.File(multi).list().toSet
+    assert(names("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    sameAsSpark(spark, multi)
+    assert(Io.readParquet(spark, multi).collect().toSet ==
+      spark.read.parquet(multi).collect().toSet)
+    // one part file on its own
+    sameAsSpark(spark, new java.io.File(multi).listFiles()
+      .find(_.getName.startsWith("part-")).get.getPath)
+    // a partitioned dataset
+    val ds = s"$tmp/ds"
+    Io.writeDataset(GraftDataset(
+      Seq(("a", 1), ("b", 2), ("a", 3)).toDF("part", "v")), ds,
+      partitionBy = Seq("part"))
+    sameAsSpark(spark, s"$ds/data.parquet")
+    assert(Io.readDataset(spark, ds).data.schema.json ==
+      spark.read.parquet(s"$ds/data.parquet").schema.json)
+    // required fields in a footer without a Spark schema
+    val required = s"$tmp/required.parquet"
+    writeRaw(required, "message m { required int64 k; optional binary b; " +
+      "required binary s (STRING); }",
+      Seq(Map("k" -> 1L, "b" -> "x", "s" -> "y"), Map("k" -> 2L, "s" -> "z")))
+    sameAsSpark(spark, required)
+    // a session that reads unannotated BINARY as strings
+    val asString = spark.newSession()
+    asString.conf.set("spark.sql.parquet.binaryAsString", "true")
+    sameAsSpark(asString, required)
+    assert(Io.readParquet(asString, required).schema("b").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(Io.readParquet(spark, required).schema("b").dataType ==
+      org.apache.spark.sql.types.BinaryType)
+  }
+
+  test("readParquet throws Spark's exception for an empty directory " +
+      "and a corrupt footer") {
+    def sameFailure(path: String): Unit = {
+      val theirs = intercept[Throwable](spark.read.parquet(path))
+      val ours = intercept[Throwable](Io.readParquet(spark, path))
+      assert(ours.getClass == theirs.getClass, path)
+    }
+    val tmp = Files.createTempDirectory("graft_bad").toFile.getPath
+    val empty = s"$tmp/empty"
+    new java.io.File(empty).mkdirs()
+    sameFailure(empty)
+    val onlySuccess = s"$tmp/success"
+    new java.io.File(onlySuccess).mkdirs()
+    Files.writeString(java.nio.file.Paths.get(onlySuccess, "_SUCCESS"), "")
+    sameFailure(onlySuccess)
+    val corrupt = s"$tmp/corrupt"
+    new java.io.File(corrupt).mkdirs()
+    Files.write(java.nio.file.Paths.get(corrupt, "part-0.parquet"),
+      ("PAR1" + "x" * 64 + "PAR1").getBytes("UTF-8"))
+    sameFailure(corrupt)
+    sameFailure(s"$tmp/missing")
+  }
+
+  /** The descriptions ("" for none) of the Spark jobs `body` starts from
+    * this thread. Jobs are told apart by a job group set for the body
+    * only, and read once a sentinel job of that group, started after the
+    * body, has been delivered (one listener queue). */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-io-spec-${System.nanoTime}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          val desc = p.flatMap(x =>
+            Option(x.getProperty("spark.job.description"))).getOrElse("")
+          if (desc == sentinel) done.countDown() else seen.add(desc)
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, null)
+      try {
+        body
+        sc.setJobDescription(sentinel)
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readParquet opens a plain table with no Spark job, and names " +
+      "the inference job of a layout it leaves to Spark") {
+    val tmp = Files.createTempDirectory("graft_jobs").toFile.getPath
+    spark.range(0, 50, 1, 2).write.parquet(s"$tmp/flat")
+    Io.writeDataset(GraftDataset(
+      Seq(("a", 1), ("b", 2)).toDF("part", "v")), s"$tmp/ds",
+      partitionBy = Seq("part"))
+    assert(jobsOf(Io.readParquet(spark, s"$tmp/flat")).isEmpty)
+    assert(jobsOf(Io.readDataset(spark, s"$tmp/ds")) ==
+      Seq(s"Io.readParquet: infer schema $tmp/ds/data.parquet"))
+    // the same listener does see Spark's own inference job
+    assert(jobsOf(spark.read.parquet(s"$tmp/flat")) == Seq(""))
+  }
+
+  test("readNanosAsLong reads TIMESTAMP(NANOS) as longs and never " +
+      "touches the session's nanosAsLong entry") {
+    import org.apache.spark.sql.types.LongType
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val tmp = Files.createTempDirectory("graft_nanos").toFile.getPath
+    val message = "message m { required int64 id; " +
+      "required int64 ts (TIMESTAMP(NANOS,true)); }"
+    val rows = Seq(Map("id" -> 1L, "ts" -> 1500000000123456789L),
+      Map("id" -> 2L, "ts" -> 1500000001000000001L))
+    val flat = s"$tmp/events.parquet"
+    writeRaw(flat, message, rows)
+    // a partitioned layout is inferred by Spark, on a session clone
+    new java.io.File(s"$tmp/parted/p=1").mkdirs()
+    writeRaw(s"$tmp/parted/p=1/part-0.parquet", message, rows)
+    val before = spark.conf.getOption(key)
+    @volatile var reading = true
+    val seenSet = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() =>
+      while (reading)
+        if (spark.conf.getOption(key) != before) seenSet.set(true))
+    poller.start()
+    try (1 to 5).foreach { _ =>
+      val df = Io.readNanosAsLong(spark, flat)
+      assert(df.schema("ts").dataType == LongType)
+      assert(df.orderBy("id").select("ts").as[Long].collect().toSeq ==
+        rows.map(_("ts")))
+      val parted = Io.readNanosAsLong(spark, s"$tmp/parted")
+      assert(parted.schema.fieldNames.toSeq == Seq("id", "ts", "p"))
+      assert(parted.schema("ts").dataType == LongType)
+      assert(parted.select("ts").as[Long].collect().toSet ==
+        rows.map(_("ts")).toSet)
+    } finally { reading = false; poller.join() }
+    assert(!seenSet.get, s"$key was visible on the session during a read")
+    assert(spark.conf.getOption(key) == before)
   }
 }
 
