@@ -4,14 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** One-pass, distributed column classification.
+/** Distributed column classification with a job count that does not
+  * grow with the column count.
   *
   * The reference computes its classification with N independent full
   * scans per column (nunique, infer_dtype, unique — reference
-  * dataset.py:267,339-341,528). Here everything is fused into ONE
-  * aggregation job over the frame: ~7 aggregate expressions per column,
-  * all partially aggregated map-side, so the cost is a single scan
-  * regardless of column count.
+  * dataset.py:267,339-341,528). Here the default (approx) strategy runs
+  * two CONCURRENT aggregations over the frame, whatever the column
+  * count: the counters (~7 aggregate expressions per column, one
+  * codegen'd HashAggregate) and the HLL distinct counts, each partially
+  * aggregated map-side. Each is a map stage plus a final stage, so a
+  * listener sees 4 Spark jobs (`Inference.classify: counters` and
+  * `Inference.classify: distinct counts`). `exact = true` runs one
+  * narrow-pair aggregation instead.
   *
   * Scale note (100 TB): with `exact = false` (default) distinct counts
   * use HyperLogLog (`approx_count_distinct`) which keeps the plan free
@@ -81,11 +86,12 @@ object Inference {
   private case class RawStats(total: Long, nn: Long, nd: Long,
       hn: Boolean, cst: Boolean, cab: Long, zo: Boolean)
 
-  /** Approx strategy (default): two jobs, submitted CONCURRENTLY — the
+  /** Approx strategy (default): two aggregations, submitted
+    * CONCURRENTLY (each a map stage and a final stage) — the
     * fused codegen counter pass ([[statsExprs]]) and one HLL-only
     * aggregate for distinct counts (isolated because the HLL sketch is
     * a TypedImperativeAggregate that would knock the counters out of
-    * whole-stage codegen). Neither job shuffles data-scale rows: both
+    * whole-stage codegen). Neither shuffles data-scale rows: both
     * are map-side partial aggregates. This is the 100 TB path.
     */
   private def approxRawStats(df: DataFrame, fields: Seq[StructField])

@@ -50,6 +50,15 @@ private[graft] object BucketPairs {
     * only adds task overhead.
     */
   def bucketedPairs(df: DataFrame, key: Column, payload: Column,
+      maxBucket: Long, fanOut: Boolean = false): DataFrame =
+    buckets(df, key, payload, maxBucket, fanOut)
+      .select(explode(pairs(col("__ps"))).as("p"))
+
+  /** The capped buckets behind [[bucketedPairs]]: one row per bucket
+    * with 2 ≤ size ≤ `maxBucket`, its `payload` structs collected in
+    * column `__ps`, for callers that filter the in-bucket pairs before
+    * building them. */
+  def buckets(df: DataFrame, key: Column, payload: Column,
       maxBucket: Long, fanOut: Boolean = false): DataFrame = {
     val w = Window.partitionBy("__key")
     val keyed = df.select(key.as("__key"), payload.as("__p"))
@@ -63,7 +72,6 @@ private[graft] object BucketPairs {
       .withColumn("__bc", count(lit(1)).over(w))
       .filter(col("__bc") >= 2 && col("__bc") <= maxBucket)
       .groupBy("__key").agg(collect_list(col("__p")).as("__ps"))
-      .select(explode(pairs(col("__ps"))).as("p"))
   }
 }
 
@@ -707,34 +715,62 @@ object Dedup {
   /** Near-identical SHORT-FIELD pairs by edit distance — the entity-
     * resolution primitive (author names, domains, product codes with
     * typos) that token/shingle similarity can't see at field length:
-    * `(id_a, id_b, edit_dist)` for every pair with
+    * `(id_a, id_b, edit_dist)` for every pair of rows with
     * `levenshtein ≤ maxDist` (classic DP — identical integers on any
-    * engine).
+    * engine), ids ordered by `least`/`greatest`. The output is a bag:
+    * duplicate input rows give duplicate pairs, and a same-value pair
+    * needs two distinct non-null ids. Null fields never pair.
     *
-    * Candidates come from a df-capped CHARACTER-trigram inverted
-    * index over the DISTINCT field values — entity fields repeat
-    * heavily (many documents share one author spelling), so the
-    * quadratic blocking cost is |values|² per bucket, not |docs|²,
-    * and each Levenshtein DP runs once per VALUE pair. Doc pairs then
-    * come from two equi-joins back to the id table: same-value doc
-    * pairs at distance 0 plus value-pair expansion — output-sized
-    * work, no candidate blow-up. The pigeonhole bound makes blocking
-    * recall-complete below the cap: `maxDist` edits destroy at most
-    * `3·maxDist` of a string's `len−2` trigrams, so any pair within
-    * `maxDist` of a string longer than `3·maxDist + 2` still shares
-    * one INTACT trigram. Shorter fields (and value pairs whose every
-    * shared trigram is a capped hub — dfCap counts distinct VALUES
-    * now) are the same bounded-recall contract as the other df-capped
-    * candidate generators. Null fields never pair. The DP itself is
-    * the banded threshold form (`levenshtein(l, r, maxDist)`) —
-    * O(len·maxDist) per pair, same integers.
+    * Plan: three shuffles (value, gram, value pair) and no join.
+    *  - One exchange groups the rows by value: `value → its ids`,
+    *    duplicates and null ids kept. Entity fields repeat heavily
+    *    (many documents share one author spelling), so blocking costs
+    *    |values|² per bucket, not |docs|², and each Levenshtein DP runs
+    *    once per VALUE pair.
+    *  - Same-value doc pairs (distance 0) are every pair of each id
+    *    list.
+    *  - Candidates come from a df-capped CHARACTER-trigram inverted
+    *    index over the grouped values (`dfCap` counts distinct values
+    *    per gram); each value travels with its ids. Inside a bucket
+    *    the length gate and the banded DP (`levenshtein(l, r,
+    *    maxDist)`, O(len·maxDist)) filter every candidate pair before
+    *    any row is built, so a candidate never copies an id list — a
+    *    1000-value bucket would otherwise copy them into ~5·10^5 rows.
+    *  - A matched value pair leaves each shared gram's bucket with both
+    *    id lists: |ids_a| + |ids_b| ids, at most one more than its own
+    *    |ids_a|·|ids_b| output rows. One distinct drops the copies from
+    *    the other shared grams (a value's ids come from its one grouped
+    *    row, so the whole row is a function of (ta, tb)), and the doc
+    *    pairs are the cross product of the two lists.
+    *
+    * The pigeonhole bound makes blocking recall-complete below the
+    * cap: `maxDist` edits destroy at most `3·maxDist` of a string's
+    * `len−2` trigrams, so any pair within `maxDist` of a string longer
+    * than `3·maxDist + 2` still shares one INTACT trigram. Shorter
+    * fields (and value pairs whose every shared trigram is a capped
+    * hub) are the same bounded-recall contract as the other df-capped
+    * candidate generators.
     */
   def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 2, dfCap: Long = 1000L): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val s = df.select(col(idCol).as("id"), col(textCol).as("__t"))
+    // collect_list drops nulls: wrapping each id keeps a null id
+    val byVal = df.select(col(idCol).as("id"), col(textCol).as("__t"))
       .filter(col("__t").isNotNull)
-    val vals = s.select("__t").distinct()
+      .groupBy("__t")
+      .agg(flatten(collect_list(array(col("id")))).as("__ids"))
+    // doc pairs leave through explode, which is codegen'd (a lambda
+    // building the pairs would be interpreted)
+    def docPairs(a: Column, b: Column, d: Column) = Seq(
+      least(a, b).as("id_a"), greatest(a, b).as("id_b"), d.as("edit_dist"))
+    // every i < j pair of each id list
+    val sameVal = byVal
+      .select(posexplode(col("__ids")).as(Seq("__i", "__a")),
+        col("__ids"))
+      .select(col("__a"), explode(slice(col("__ids"), col("__i") + 2,
+        size(col("__ids")))).as("__b"))
+      .filter(col("__a") =!= col("__b"))
+      .select(docPairs(col("__a"), col("__b"), lit(0)): _*)
     // distinct char trigrams; guard the sequence — Spark's
     // sequence(1, 0) steps BACKWARD instead of being empty
     val grams = when(length(col("__t")) >= 3,
@@ -742,34 +778,29 @@ object Dedup {
         sequence(lit(1), length(col("__t")) - 2),
         i => col("__t").substr(i, lit(3)))))
       .otherwise(array().cast("array<string>"))
-    val inv = vals.select(col("__t"), explode(grams).as("gram"))
-    val valPairs = BucketPairs.bucketedPairs(inv, col("gram"),
-        col("__t"), dfCap)
-      .select(least(col("p.a"), col("p.b")).as("__ta"),
-        greatest(col("p.a"), col("p.b")).as("__tb"))
+    val inv = byVal.select(
+      struct(col("__t").as("t"), col("__ids").as("ids")).as("__v"),
+      explode(grams).as("gram"))
+    def dist(x: Column, y: Column) = levenshtein(x("t"), y("t"), maxDist)
+    def near(x: Column, y: Column) =
+      abs(length(x("t")) - length(y("t"))) <= maxDist && // cheap gate
+        dist(x, y).between(1, maxDist)
+    // values are distinct in a bucket: sorted, i < j means ta < tb
+    val vs = col("__vs")
+    val matched = BucketPairs.buckets(inv, col("gram"), col("__v"), dfCap)
+      .select(sort_array(col("__ps")).as("__vs"))
+      .select(explode(flatten(transform(vs, (x, i) =>
+        transform(filter(slice(vs, i + lit(2), size(vs)), y => near(x, y)),
+          y => struct(x("t").as("ta"), y("t").as("tb"),
+            x("ids").as("ia"), y("ids").as("ib"),
+            dist(x, y).as("edit_dist")))))).as("m"))
+      .select("m.*")
       .distinct() // a value pair may share several grams
-      .filter(abs(length(col("__ta")) - length(col("__tb")))
-        <= maxDist) // cheap length gate before the DP
-      .withColumn("edit_dist",
-        levenshtein(col("__ta"), col("__tb"), maxDist))
-      .filter(col("edit_dist") >= 1 && col("edit_dist") <= maxDist)
-    // same-value doc pairs: distance 0 by definition
-    val sameVal = s.select(col("id").as("id_a"), col("__t"))
-      .join(s.select(col("id").as("id_b"), col("__t")), Seq("__t"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0).as("edit_dist"))
-    // cross-value expansion: each doc pair has exactly one canonical
-    // (ta, tb) value pair, so no dedup is needed
-    val crossVal = valPairs
-      .join(s.select(col("id").as("__ia"), col("__t").as("__ta")),
-        Seq("__ta"))
-      .join(s.select(col("id").as("__ib"), col("__t").as("__tb")),
-        Seq("__tb"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        col("edit_dist"))
+    val crossVal = matched
+      .select(explode(col("ia")).as("__a"), col("ib"), col("edit_dist"))
+      .select(col("__a"), explode(col("ib")).as("__b"), col("edit_dist"))
+      .select(docPairs(col("__a"), col("__b"), col("edit_dist")): _*)
     sameVal.unionByName(crossVal)
-      .select("id_a", "id_b", "edit_dist")
   }
 
   /** Cross-group contamination matrix: for every pair of `groupCol`

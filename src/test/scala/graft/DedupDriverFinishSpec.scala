@@ -1,13 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 import graft.operators.Dedup
 
@@ -26,29 +19,9 @@ class DedupDriverFinishSpec extends SparkSpec {
   /** Runs `body`, returning its result and the distinct (in order)
     * duplicateClusters job descriptions seen while it ran. */
   private def withDescriptions[T](body: => T): (T, Seq[String]) = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val marker = s"graft-spec-end-${System.nanoTime}"
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      // a marked job after the body: once the listener sees it, every
-      // job start of the body has been delivered
-      val caller = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(caller)
-      eventually(timeout(30.seconds)) {
-        assert(seen.contains(marker))
-      }
-      (out, seen.asScala.toSeq.filter(_.startsWith(prefix)).distinct)
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs) = JobFence.during(spark.sparkContext)(body)
+    (out, jobs.flatMap(_.description).filter(_.startsWith(prefix))
+      .distinct)
   }
 
   private def rows(df: DataFrame): Set[Row] = df.collect().toSet

@@ -1,14 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, collate, concat, lit}
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 import graft.core.GraftDataset
 import graft.operators.{CombineCategoricalColumns, DictionaryFit,
@@ -87,39 +80,10 @@ class DictionaryFitSpec extends SparkSpec {
       max = 3).head == Seq("a0", "a1", "a2"))
   }
 
-  /** Runs `body` and returns the (description, stage count) of every job
-    * it started. Jobs are fenced by id between two sentinel jobs: a late
-    * event of an earlier job has a smaller id, and once the end sentinel
-    * is delivered every job of the body has been (one listener queue).
-    */
-  private def jobsDuring(body: => Unit): Seq[(String, Int)] = {
-    val seen = new ConcurrentLinkedQueue[(Int, String, Int)]()
-    val tag = s"graft-spec-sentinel-${System.nanoTime}"
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add((js.jobId, Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orNull, js.stageInfos.size))
-    }
-    val sc = spark.sparkContext
-    def sentinel(name: String): Int = {
-      val caller = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("spark.job.description", caller)
-      eventually(timeout(30.seconds)) {
-        seen.asScala.find(_._2 == name).get._1
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val start = sentinel(tag + "-start")
-      body
-      val end = sentinel(tag + "-end")
-      seen.asScala.toSeq.filter(j => j._1 > start && j._1 < end)
-        .sortBy(_._1).map(j => (j._2, j._3))
-    } finally sc.removeSparkListener(listener)
-  }
+  /** The (description, stage count) of every job `body` starts. */
+  private def jobsDuring(body: => Unit): Seq[(String, Int)] =
+    JobFence.during(spark.sparkContext)(body)._2
+      .map(j => (j.description.orNull, j.stages))
 
   test("one named single-stage job per fit call for k = 1, 2 and 3, " +
       "none for k = 0; the caller's description is restored") {

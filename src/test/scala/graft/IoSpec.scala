@@ -190,40 +190,10 @@ class IoSpec extends SparkSpec {
     sameFailure(s"$tmp/missing")
   }
 
-  /** The descriptions ("" for none) of the Spark jobs `body` starts from
-    * this thread. Jobs are told apart by a job group set for the body
-    * only, and read once a sentinel job of that group, started after the
-    * body, has been delivered (one listener queue). */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"graft-io-spec-${System.nanoTime}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val p = Option(js.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          val desc = p.flatMap(x =>
-            Option(x.getProperty("spark.job.description"))).getOrElse("")
-          if (desc == sentinel) done.countDown() else seen.add(desc)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, null)
-      try {
-        body
-        sc.setJobDescription(sentinel)
-        sc.parallelize(Seq(1), 1).count()
-      } finally sc.clearJobGroup()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq
-    } finally sc.removeSparkListener(listener)
-  }
+  /** The descriptions ("" for none) of the Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Seq[String] =
+    JobFence.during(spark.sparkContext)(body)._2
+      .map(_.description.getOrElse(""))
 
   test("readParquet opens a plain table with no Spark job, and names " +
       "the inference job of a layout it leaves to Spark") {
