@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.sources.Io
 import graft.sources.Io.jstr
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
@@ -333,27 +334,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // survive host load spikes as SLOW timings, not a dead
-      // SparkContext: the r16 driver sweep died to 10 s heartbeat
-      // RPC timeouts under oversubscription (executor and driver
-      // share one JVM here — a timeout can only ever be scheduler
-      // starvation, never a lost node)
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.rpc.askTimeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalRun.session(LocalRun.cpus("32"))
     // one untimed warmup pass: JVM/codegen/parquet-reader init would
     // otherwise land entirely on whichever query runs first
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .selectExpr("sum(l_quantity)", "count(distinct l_returnflag)")
-      .write.format("noop").mode("overwrite").save()
+    try LocalRun.noopSeconds(
+      Io.readParquet(spark, s"$sfDir/lineitem.parquet")
+        .selectExpr("sum(l_quantity)", "count(distinct l_returnflag)"))
     catch { case _: Throwable => () }
     // best-of-N per query (default 2): a single timing of a ~1 s query
     // under a 32-thread local scheduler swings several× on environment
@@ -374,11 +360,7 @@ object Bench {
       .map(o => SparkEntry.select(SparkEntry.names(o)))
       .getOrElse(SparkEntry.registry)
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+        : Double = LocalRun.noopSeconds(fn(spark, sfDir))
     // the artifact must survive log-tail truncation AND a mid-sweep
     // kill: rewrite the file after every completed query
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",

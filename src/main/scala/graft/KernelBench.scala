@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.sources.Io
 
 /** Measured comparison of the CodegenFallback scan kernels against
   * their expression-tree twins (diagnostic main, not part of the
@@ -15,37 +16,21 @@ import org.apache.spark.sql.functions._
   * artifact. README records the current table.
   *
   * Usage: `sbt "runMain graft.KernelBench"` (env SPARK_GRAFT_SF_DIR
-  * overrides the base dir; 10× replicas go under ./stress_data).
+  * overrides the base dir; 10× replicas go under
+  * `StressData.dirFor(SPARK_GRAFT_SF_DIR)`, reused once written).
   */
 object KernelBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalRun.session(LocalRun.cpus("32"))
     val T = graft.functions.TextFunctions
     val H = graft.functions.HashFunctions
 
-    // 10x replication with the ScaleStress alphabet rotation (distinct
+    // 10x replication with the StressData alphabet rotation (distinct
     // ids, bijectively remapped shingles)
-    val stressDir = "stress_data"
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val maxId = docs.agg(max("doc_id")).head().getLong(0) + 1L
-    val abc = "abcdefghijklmnopqrstuvwxyz"
-    (0 until 10).map { k =>
-      docs.withColumn("doc_id", col("doc_id") + lit(k * maxId))
-        .withColumn("text",
-          translate(col("text"), abc, abc.drop(k) + abc.take(k)))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite")
-      .parquet(s"$stressDir/documents.parquet")
+    val stressDir = StressData.write(spark, sfDir, "documents")
 
     val dim = 64
     // xor-fold + modular sum: order-insensitive, never overflows
@@ -84,7 +69,7 @@ object KernelBench {
     for ((name, native, tree, agg) <- kernels;
          (scale, dir) <- Seq(("1x", sfDir), ("10x", stressDir));
          (variant, expr) <- Seq(("native", native), ("tree", tree))) {
-      val d = spark.read.parquet(s"$dir/documents.parquet")
+      val d = Io.readParquet(spark, s"$dir/documents.parquet")
       def run(): (Double, Long) = {
         val t0 = System.nanoTime()
         val cs = d.select(agg(expr).cast("long")).head().getLong(0)

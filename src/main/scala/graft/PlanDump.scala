@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper: writes `explain("formatted")` of named
   * (or all) declared queries to one file per query under an output
   * directory — the `plans/rNN/<query>_{before,after}.txt` evidence the
@@ -40,12 +38,8 @@ object PlanDump {
     val selected = if (args.length > 3)
       SparkEntry.select(SparkEntry.names(args(3)))
     else SparkEntry.registry.sortBy(_.name)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 32 cores whatever the host: the plans depend on the partition count
+    val spark = LocalRun.session("32")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir))

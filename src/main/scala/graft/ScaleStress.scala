@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.sources.Io
 
 /** Scale-stress harness (diagnostic main, not part of the bench): runs
   * the heavy dedup pipelines on sf0.1 documents and on a 10×
@@ -11,89 +10,58 @@ import org.apache.spark.sql.functions._
   * evidence that no stage hides super-linear behavior that small-SF
   * correctness runs can't see.
   *
-  * The replicas get distinct ids AND a per-replica FULL-ALPHABET
-  * char rotation. A bijection on characters maps char-shingle sets
-  * bijectively, so every within-replica Jaccard is preserved EXACTLY
-  * — each replica contributes precisely the 1× pair structure. And a
-  * full rotation (k ≠ 0) fixes no letter, so cross-replica shingles
-  * coincide only by accident and the LSH verify kills those. The
-  * alternatives fail measurably: a whole-document marker leaves every
-  * doc with 10 near-copies (~100× pairs by construction); a rotation
-  * of only the 9 most frequent letters leaves 17 letters' shingles
-  * intact and variance pushes thousands of cross-replica pairs past
-  * the verify threshold (measured: 63× pairs for 10× docs); a
-  * per-word suffix UNIFORMLY inflates within-replica similarity and
-  * explodes the base pair count itself (measured: 920× shuffle). The
-  * harness prints the pair count per scale so a contaminated
-  * construction is visible in the artifact, not inferred from ratios.
+  * The 10× documents and embeddings are the [[StressData]]
+  * constructions, which preserve every within-replica Jaccard and dot
+  * product exactly. The harness prints the pair count per scale so a
+  * contaminated construction is visible in the artifact, not inferred
+  * from ratios.
   *
   * Usage: `sbt "runMain graft.ScaleStress"` (env SPARK_GRAFT_SF_DIR
   * overrides the base dir). Writes the 10× set under
-  * ./stress_data/ and prints one result line per (pipeline, scale).
+  * `StressData.dirFor(SPARK_GRAFT_SF_DIR)` (reused once written) and
+  * prints one result line per (pipeline, scale).
   */
 object ScaleStress {
 
   /** Stress pipelines: most are the declared queries verbatim;
-    * semantic dedup runs the operator's AUTO-K default instead of the
-    * oracle's pinned k=16 — a fixed k at growing n is quadratic by
-    * construction (the very thing this harness exists to catch), and
-    * the auto path is what a 100 TB run would use.
+    * semantic dedup and the kNN graph run as their AUTO-scaled
+    * variants, [[StressData.autoPipelines]] — a fixed k at growing n is
+    * quadratic by construction, the very thing this harness exists to
+    * catch.
     */
-  private val Pipelines: Seq[(String,
-      (org.apache.spark.sql.SparkSession, String)
-        => org.apache.spark.sql.DataFrame)] = Seq(
-    "q_dedup_clean" -> SparkEntry.queries("q_dedup_clean"),
-    "q_substring_scrub" -> SparkEntry.queries("q_substring_scrub"),
-    "q_leakage_safe_split" -> SparkEntry.queries("q_leakage_safe_split"),
-    "q_budget_sample" -> SparkEntry.queries("q_budget_sample"),
-    "q_boilerplate_scrub" -> SparkEntry.queries("q_boilerplate_scrub"),
-    "q_neardup_increment" -> SparkEntry.queries("q_neardup_increment"),
-    "semantic_dedup_auto" -> ((s, dir) =>
-      graft.operators.SemanticDedup.semanticDedup(
-        s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", threshold = 0.4,
-        targetClusterSize = 200L)),
-    // the kNN graph at its AUTO-K default (the oracle row pins k):
-    // the newest heavy operator, quadratic per probe list by design,
-    // kept linear by the auto-scaled centroid count
-    "knn_graph_auto" -> ((s, dir) =>
-      graft.operators.Similarity.knnGraph(
-        s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", k = 8,
-        targetListSize = 200L)),
+  private val Pipelines: Seq[(String, StressData.Build)] = Seq(
+    "q_dedup_clean", "q_substring_scrub", "q_leakage_safe_split",
+    "q_budget_sample", "q_boilerplate_scrub", "q_neardup_increment")
+    .map(q => q -> SparkEntry.queries(q)) ++
+    StressData.autoPipelines ++ Seq(
     // IVF-PQ search: fixed coarse k and probe count, so the probed
     // compressed scan must scale linearly with list size
-    "q_ivf_pq_topk" -> SparkEntry.queries("q_ivf_pq_topk"),
+    "q_ivf_pq_topk",
     // BM25 retrieval: the token explosion and the query-vocab hit
     // shuffle must both scale with the corpus while the query set
     // stays fixed — the map-side vocab prune is what keeps the
     // (doc, term) aggregation from growing past the hits
-    "q_bm25_topk" -> SparkEntry.queries("q_bm25_topk"),
+    "q_bm25_topk",
     // keep-best canonicalization rides the same minhash pair pipeline
     // as q_dedup_clean plus the member-scoped quality join — the join
     // side must stay member-sized, not corpus-sized
-    "q_dedup_keep_best" -> SparkEntry.queries("q_dedup_keep_best"),
+    "q_dedup_keep_best",
     // codec rows: the multimodal decode paths claim "map-only,
     // linear" — measure it like everything else. Each synthesizes
     // real containers per doc (JPEG encode+decode+hash, WAV
     // signature, GIF LZW decode) so 10x docs must cost ~10x wall
     // with ~no shuffle growth
-    "q_jpeg_phash" -> SparkEntry.queries("q_jpeg_phash"),
-    "q_audio_signature" -> SparkEntry.queries("q_audio_signature"),
-    "q_gif_phash" -> SparkEntry.queries("q_gif_phash"),
+    "q_jpeg_phash", "q_audio_signature", "q_gif_phash",
     // archive unwrap: same map-only contract as the codecs — the
     // explode output grows with docs, nothing shuffles
-    "q_warc_records" -> SparkEntry.queries("q_warc_records"),
-    "q_zip_entries" -> SparkEntry.queries("q_zip_entries"),
+    "q_warc_records", "q_zip_entries",
     // round-14 codec rows: per-row encode+decode through the new
     // from-spec stacks (brotli LZ77+Huffman, bzip2 BWT+MTF+Huffman,
     // xz container) — all map-only, so 10x docs must cost ~10x wall
-    "q_brotli_roundtrip" -> SparkEntry.queries("q_brotli_roundtrip"),
-    "q_bzip2_roundtrip" -> SparkEntry.queries("q_bzip2_roundtrip"),
-    "q_xz_roundtrip" -> SparkEntry.queries("q_xz_roundtrip"),
+    "q_brotli_roundtrip", "q_bzip2_roundtrip", "q_xz_roundtrip",
     // the crawl-politeness chain: WARC walk + framing decode (incl.
     // brotli) + RFC 9309 evaluation per document
-    "q_crawl_robots" -> SparkEntry.queries("q_crawl_robots"))
+    "q_crawl_robots").map(q => q -> SparkEntry.queries(q))
     // (q_edit_pairs is deliberately absent: stress replicas repeat
     // the 200 entity-name values, so its OUTPUT pair set grows
     // ~|group|² — a data artifact, not an operator pathology; the
@@ -103,50 +71,8 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val stressDir = "stress_data"
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val maxId = docs.agg(max("doc_id")).head().getLong(0) + 1L
-    val abc = "abcdefghijklmnopqrstuvwxyz"
-    (0 until 10).map { k =>
-      docs.withColumn("doc_id", col("doc_id") + lit(k * maxId))
-        .withColumn("text",
-          translate(col("text"), abc, abc.drop(k) + abc.take(k)))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite")
-      .parquet(s"$stressDir/documents.parquet")
-
-    // Embeddings replicate under a per-replica DIMENSION PERMUTATION +
-    // SIGN FLIP — an orthogonal transform, so every within-replica dot
-    // product (hence cosine, hence the quantized scoring) is preserved
-    // EXACTLY, while cross-replica cosines scramble toward 0 and die at
-    // the threshold. Replica 0 is the identity: the 1× pair structure
-    // is embedded verbatim.
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val maxVid = emb.agg(max("vec_id")).head().getLong(0) + 1L
-    (0 until 10).map { k =>
-      val rnd = new scala.util.Random(k)
-      val perm =
-        if (k == 0) (0 until dim).toArray
-        else rnd.shuffle((0 until dim).toVector).toArray
-      val sign = Array.fill(dim)(
-        if (k == 0) 1.0f else if (rnd.nextBoolean()) 1.0f else -1.0f)
-      val shuffled = array((0 until dim).map(j =>
-        element_at(col("embedding"), perm(j) + 1) * lit(sign(j))): _*)
-      emb.withColumn("vec_id", col("vec_id") + lit(k * maxVid))
-        .withColumn("embedding", shuffled)
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite")
-      .parquet(s"$stressDir/embeddings.parquet")
+    val spark = LocalRun.session(LocalRun.cpus("32"))
+    val stressDir = StressData.write(spark, sfDir, "documents", "embeddings")
 
     // The pair structure does NOT replicate cleanly even though the
     // bijection preserves every within-replica Jaccard EXACTLY: the
@@ -163,7 +89,7 @@ object ScaleStress {
     // S(10x) ≤ max(docs_ratio, pairs_ratio) · S(1x), while a
     // quadratic pair stage would show ~pairs_ratio² and still trip.
     val Seq(p1, p10) = Seq(sfDir, stressDir).map { dir =>
-      val d = spark.read.parquet(s"$dir/documents.parquet")
+      val d = Io.readParquet(spark, s"$dir/documents.parquet")
       val np = graft.operators.Dedup
         .minhashDupPairs(d, "doc_id", "text").count()
       println(s"$dir docs=${d.count()} minhash_pairs=$np")
@@ -172,7 +98,7 @@ object ScaleStress {
     // semantic pairs have their own (embedding-driven) inflation: the
     // k-means re-fits on the 10× mixture, so cluster scoping shifts
     val Seq(s1, s10) = Seq(sfDir, stressDir).map { dir =>
-      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val e = Io.readParquet(spark, s"$dir/embeddings.parquet")
       val np = graft.operators.SemanticDedup
         .semanticDupPairs(e, "vec_id", "embedding", 0.4,
           targetClusterSize = 200L).count()
@@ -240,20 +166,16 @@ object ScaleStress {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def measure(fn: (SparkSession, String)
-        => org.apache.spark.sql.DataFrame, dir: String)
-        : (Double, Long, Long) = {
+    def measure(fn: StressData.Build, dir: String): (Double, Long, Long) = {
       // warm the reader path so the first pipeline doesn't pay init
-      spark.read.parquet(s"$dir/documents.parquet").count()
+      Io.readParquet(spark, s"$dir/documents.parquet").count()
       // warm the pipeline itself at 1x: JIT + codegen cache, so the
       // measured 1x run isn't inflated relative to the 10x run that
       // always executes after it (first-run effects once measured a
       // 1x wall ABOVE the 10x wall)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      LocalRun.noopSeconds(fn(spark, sfDir))
       written.set(0); read.set(0)
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = LocalRun.noopSeconds(fn(spark, dir))
       // listener delivery is async: wait for the counters to go quiet
       var last = (-1L, -1L)
       while (last != ((written.get, read.get))) {
@@ -300,11 +222,11 @@ object ScaleStress {
     // verdict's standing gap: the flat fit pinned the build)
     if (only.forall(_.contains("ivfpq_auto_build"))) {
       val cb = graft.operators.ProductQuant.pqFit(
-        spark.read.parquet(s"$stressDir/embeddings.parquet"),
+        Io.readParquet(spark, s"$stressDir/embeddings.parquet"),
         "vec_id", "embedding", m = 8, ksub = 16, iters = 1)
       val t0 = System.nanoTime()
       graft.operators.IvfPqIndex.build(
-        spark.read.parquet(s"$stressDir/embeddings.parquet"),
+        Io.readParquet(spark, s"$stressDir/embeddings.parquet"),
         "vec_id", "embedding", "stress_ivfpq_auto", cb,
         nCentroids = 0, kmeansIters = 2, buckets = 64,
         targetListSize = 4L)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.sources.Io.jstr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -12,14 +11,7 @@ object Verify {
     val selected =
       if (args.length > 2) SparkEntry.select(SparkEntry.names(args(2)))
       else SparkEntry.registry
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalRun.session(LocalRun.cpus("4"))
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     selected.foreach { q =>

@@ -22,8 +22,7 @@ final class GraftDataset(
     val data: DataFrame,
     val metadataCols: Set[String] = Set.empty,
     val derivedCols: Set[String] = Set.empty,
-    val history: OperationsList = OperationsList(),
-    exactDistinct: Boolean = false
+    val history: OperationsList = OperationsList()
 ) extends Serializable {
 
   def featureCols: Set[String] =
@@ -31,7 +30,7 @@ final class GraftDataset(
 
   @transient @volatile private var classified = false
   @transient private lazy val _classification: ColumnClassification = {
-    val c = Inference.classify(data, exact = exactDistinct)
+    val c = Inference.classify(data)
     classified = true
     c
   }
@@ -45,8 +44,7 @@ final class GraftDataset(
     val present = cols.filter(data.columns.contains)
     if (classified) classification.categoricalCols & present.toSet
     else if (present.isEmpty) Set.empty
-    else Inference.classify(data, present, exact = exactDistinct)
-      .categoricalCols
+    else Inference.classify(data, present).categoricalCols
   }
 
   /** numerical ∪ bool − constant − metadata (reference dataset.py:358-360) */
@@ -92,8 +90,7 @@ final class GraftDataset(
     }.toSeq.sorted
 
   def withData(newData: DataFrame): GraftDataset =
-    new GraftDataset(newData, metadataCols, derivedCols, history,
-      exactDistinct)
+    new GraftDataset(newData, metadataCols, derivedCols, history)
 
   /** Record an applied op: append to history and propagate the
     * metadata-column label to derived columns when every source column
@@ -105,7 +102,7 @@ final class GraftDataset(
         metadataCols ++ op.derivedColumns
       else metadataCols
     new GraftDataset(newData, newMeta, derivedCols ++ op.derivedColumns,
-      history :+ op, exactDistinct)
+      history :+ op)
   }
 
   /** Re-wrap with a replaced frame, preserving lineage; the reference
@@ -115,7 +112,7 @@ final class GraftDataset(
   def replaceData(newData: DataFrame): (GraftDataset, Set[String]) = {
     val lost = data.columns.toSet -- newData.columns.toSet
     (new GraftDataset(newData, metadataCols -- lost, derivedCols -- lost,
-      history, exactDistinct), lost)
+      history), lost)
   }
 }
 
