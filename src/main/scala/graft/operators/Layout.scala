@@ -90,20 +90,32 @@ object Layout {
     */
   def zorderWrite(df: DataFrame, cols: Seq[String], path: String,
       outPartitions: Int, bits: Int = 6,
-      quantileErr: Double = 0.01): Unit = {
+      quantileErr: Double = 0.01): Unit =
+    zordered(df, cols, outPartitions, bits, quantileErr)
+      .write.mode("overwrite").parquet(path)
+
+  /** The frame [[zorderWrite]] writes. Each rank is bound once as a
+    * column before the z-value reads it `bits` times: Catalyst's
+    * `CollapseProject` does not re-inline a non-cheap expression used
+    * more than once, so the plan (serialized into every task) holds one
+    * `bucketRank` tree per column instead of `bits` copies of it. */
+  private[graft] def zordered(df: DataFrame, cols: Seq[String],
+      outPartitions: Int, bits: Int, quantileErr: Double): DataFrame = {
     require(cols.nonEmpty, "zorderWrite needs at least one column")
     val probes = (1 until (1 << bits))
       .map(_.toDouble / (1 << bits)).toArray
     val bounds = df.stat.approxQuantile(cols.toArray, probes,
       quantileErr)
-    val ranks = cols.zip(bounds).map { case (c, bnds) =>
-      bucketRank(col(c), bnds)
+    val names = cols.indices.map(j => s"__rank$j")
+    val ranks = cols.zip(bounds).zip(names).map { case ((c, bnds), n) =>
+      bucketRank(col(c), bnds).as(n)
     }
-    df.withColumn("__z", zValueColumn(ranks, bits))
+    df.select(col("*") +: ranks: _*)
+      .withColumn("__z", zValueColumn(names.map(col), bits))
+      .drop(names: _*)
       .repartitionByRange(outPartitions, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 
   /** Per-file layout listing of a parquet directory tree: `(file,

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.operators.Dedup
 
-/** Pins the driver finish of Dedup.duplicateClusters: once the live
-  * edge set fits the driver bound, one collect and a union-find replace
-  * the remaining large-star/small-star rounds. The labels and the
-  * schema must be exactly those of the all-distributed path (bound 0),
-  * on every shape and id type the finish accepts, and every eager job
-  * of the chain carries a job description naming its step.
+/** Pins the driver finish of Dedup.duplicateClusters: when the edges
+  * fit the driver bound, one collect and a union-find replace the
+  * large-star/small-star rounds; otherwise the rounds run to
+  * convergence from the same edge frame. The labels and the schema must
+  * be exactly those of the all-distributed path (bound 0), on every
+  * shape and id type the finish accepts, and every eager job of the
+  * chain carries a job description naming its step.
   */
 class DedupDriverFinishSpec extends SparkSpec {
   import spark.implicits._
@@ -27,8 +28,9 @@ class DedupDriverFinishSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[Row] = df.collect().toSet
 
   /** Forced-distributed (bound 0) vs the default bound: same schema,
-    * same labels; the default must have finished on the driver. Returns
-    * the labels. */
+    * same labels; the default must have finished on the driver (no
+    * round ran) and bound 0 must not have collected. Returns the
+    * labels. */
   private def sameBothWays(nodes: DataFrame, idCol: String,
       pairs: DataFrame): Set[Row] = {
     val ((dist, distSchema), distDesc) = withDescriptions {
@@ -40,8 +42,8 @@ class DedupDriverFinishSpec extends SparkSpec {
       val df = Dedup.duplicateClusters(nodes, idCol, pairs)
       (rows(df), df.schema)
     }
-    assert(!distDesc.exists(_.contains("driver finish")), distDesc)
-    assert(localDesc.exists(_.contains("driver finish")), localDesc)
+    assert(!distDesc.exists(_.contains("driver collect")), distDesc)
+    assert(!localDesc.exists(_.contains(" round ")), localDesc)
     assert(localSchema == distSchema)
     assert(local == dist)
     local
@@ -49,7 +51,10 @@ class DedupDriverFinishSpec extends SparkSpec {
 
   test("transitive chain: driver finish equals the distributed rounds") {
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("id")
-    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
+    // repeated, reversed and self pairs: the driver finish takes the
+    // edges without a distinct
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (2L, 1L), (5L, 4L),
+      (4L, 5L), (3L, 3L)).toDF("id_a", "id_b")
     val out = sameBothWays(nodes, "id", pairs)
     assert(out == Set(Row(1L, 1L), Row(2L, 1L), Row(3L, 1L),
       Row(4L, 4L), Row(5L, 4L), Row(9L, 9L)))
@@ -120,33 +125,44 @@ class DedupDriverFinishSpec extends SparkSpec {
     assert(out == Set(Row(1L, 1L), Row(null, null), Row(3L, 3L)))
   }
 
-  test("hand-off: distributed rounds shrink the edges, then the driver " +
-      "finishes") {
-    // a 30-clique (435 edges) contracts to a 29-edge star in one round;
-    // plus a 20-node path. A bound of 200 sits between the initial
-    // count and round 0's, so round 0 runs distributed and the driver
-    // finishes its output.
+  test("over the bound: no driver finish, the rounds run to " +
+      "convergence after the collect") {
+    // a 30-clique (435 edges) plus a 20-node path: 454 edges against a
+    // bound of 200
     val clique = for (i <- 0L until 30L; j <- i + 1 until 30L) yield (i, j)
     val path = (100L until 119L).map(i => (i, i + 1))
     val nodes = ((0L until 30L) ++ (100L to 119L) :+ 500L).toDF("id")
     val pairs = (clique ++ path).toDF("id_a", "id_b")
     val dist = Dedup.duplicateClustersBounded(nodes, "id", pairs,
       maxIter = 20, driverBound = 0L)
-    val (handed, desc) = withDescriptions {
+    val (over, desc) = withDescriptions {
       val df = Dedup.duplicateClustersBounded(nodes, "id", pairs,
         maxIter = 20, driverBound = 200L)
       (rows(df), df.schema)
     }
-    assert(desc.contains(prefix + "round 0 edges"), desc)
-    val finish = desc.filter(_.contains("driver finish"))
-    assert(finish.size == 1, desc)
-    val n = finish.head.stripPrefix(prefix + "driver finish with ")
-      .stripSuffix(" edges").toLong
-    assert(n <= 200L)
-    assert(handed._2 == dist.schema)
-    assert(handed._1 == rows(dist))
-    assert(handed._1.filter(_.getLong(1) == 0L).size == 30)
-    assert(handed._1.filter(_.getLong(1) == 100L).size == 20)
+    assert(desc.take(2) == Seq(prefix + "driver collect",
+      prefix + "edge set"), desc)
+    assert(desc.contains(prefix + "round 0 stats"), desc)
+    assert(over._2 == dist.schema)
+    assert(over._1 == rows(dist))
+    assert(over._1.filter(_.getLong(1) == 0L).size == 30)
+    assert(over._1.filter(_.getLong(1) == 100L).size == 20)
+  }
+
+  test("over the bound, candidate generation runs once") {
+    // `pairs` comes through a UDF that counts its calls: the driver
+    // collect and the rounds must both read the one edge frame
+    import org.apache.spark.sql.functions.{col, udf}
+    val calls = spark.sparkContext.longAccumulator("graft_cc_pair_calls")
+    val counted = udf { (id: Long) => calls.add(1L); id }
+      .asNondeterministic()
+    val n = 400L
+    val pairs = spark.range(0L, n - 1, 1L, 4)
+      .select(counted(col("id")).as("id_a"), (col("id") + 1).as("id_b"))
+    val out = rows(Dedup.duplicateClustersBounded((0L until n).toDF("id"),
+      "id", pairs, maxIter = 20, driverBound = 50L))
+    assert(calls.value == n - 1)
+    assert(out.size == n && out.forall(_.getLong(1) == 0L))
   }
 
   test("every eager step is named and the caller's description is " +
@@ -170,8 +186,7 @@ class DedupDriverFinishSpec extends SparkSpec {
       val (_, local) = withDescriptions {
         Dedup.duplicateClusters(nodes, "id", pairs)
       }
-      assert(local == Seq(prefix + "edge set",
-        prefix + "driver finish with 149 edges"))
+      assert(local == Seq(prefix + "driver collect"))
       assert(sc.getLocalProperty("spark.job.description") ==
         "caller step")
     } finally sc.setJobDescription(null)
@@ -198,7 +213,7 @@ class DedupDriverFinishSpec extends SparkSpec {
       Dedup.duplicateClustersBounded(nodes, "id", pairs, maxIter = 1,
         driverBound = 0L)
     }
-    // the same graph fits the driver before round 1: no failure
+    // the same graph fits the driver: no round runs, no failure
     assert(Dedup.duplicateClusters(nodes, "id", pairs, maxIter = 1)
       .count() == 6)
   }

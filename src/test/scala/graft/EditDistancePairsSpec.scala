@@ -122,8 +122,8 @@ class EditDistancePairsSpec extends SparkSpec
     assert(shuffles.map(_.canonicalized).distinct.size == 3, plan)
   }
 
-  test("q_entity_clusters builds with at most 5 edge-set jobs and one " +
-      "driver-finish job") {
+  test("q_entity_clusters builds with at most 3 edge-set jobs, one " +
+      "driver-collect job and no other job") {
     val dir = Files.createTempDirectory("graft_entity").toFile.getPath
     spark.range(0, 2000, 1, 2).select(col("id").as("doc_id"))
       .write.parquet(s"$dir/documents.parquet")
@@ -133,9 +133,8 @@ class EditDistancePairsSpec extends SparkSpec
     }
     val desc = jobs.map(_.description.getOrElse(""))
     val edgeSet = desc.count(_ == "Dedup.duplicateClusters: edge set")
-    val finish = desc.count(
-      _.startsWith("Dedup.duplicateClusters: driver finish"))
-    assert(edgeSet <= 5 && finish == 1 && desc.size == edgeSet + finish,
+    val driver = desc.count(_ == "Dedup.duplicateClusters: driver collect")
+    assert(edgeSet <= 3 && driver == 1 && desc.size == edgeSet + driver,
       desc)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, IsNull}
 import org.apache.spark.sql.functions._
 import graft.operators.Layout
 
@@ -155,5 +156,19 @@ class LayoutSpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(got == vals.map(refRank),
       s"got $got want ${vals.map(refRank)}")
+  }
+
+  test("z-order plan holds one rank tree per column, not one per bit") {
+    // nullable inputs keep each bucketRank's null branch, which marks
+    // the root of its tree; the z-value reads every rank `bits` times
+    val df = spark.range(2000).select(
+      when(col("id") % 50 =!= 0, col("id") % 37).as("x"),
+      when(col("id") % 70 =!= 0, col("id") / 37).as("y"))
+    val plan = Layout.zordered(df, Seq("x", "y"), outPartitions = 4,
+      bits = 6, quantileErr = 0.01).queryExecution.optimizedPlan
+    val trees = plan.flatMap(_.expressions).map(_.collect {
+      case CaseWhen(Seq((IsNull(_), _)), _) => 1
+    }.size).sum
+    assert(trees == 2, plan)
   }
 }
