@@ -451,24 +451,26 @@ object Dedup {
     * under-delete transitive duplicates (a~b, b~c must drop TWO of
     * {a,b,c}, not one per pair).
     *
-    * Algorithm: where the graph is labelled is decided once, before
-    * any checkpoint (the finish-locally-once-it-fits shape of
-    * "Approximation Algorithms for Large Scale Data Analysis",
-    * PODS'21). `pairs` becomes ONE lazily `localCheckpoint`ed frame of
-    * canonical edges (a < b, self-loops dropped, duplicates kept) that
-    * both paths read, so the candidate generation behind it runs once.
+    * Algorithm: a driver-side finish whenever the edges fit, else
+    * distributed contraction until they do (the sketch-then-finish-
+    * locally shape of "Approximation Algorithms for Large Scale Data
+    * Analysis", PODS'21). `pairs` becomes ONE lazily
+    * `localCheckpoint`ed frame of canonical edges (a < b, self-loops
+    * dropped, duplicates kept) that every later step reads, so the
+    * candidate generation behind it runs once.
     *
-    *  - Driver finish: one job collects every partition's edges up to
-    *    its share of the bound. If none is over its share, a min-label
-    *    union-find labels every node (duplicate edges are harmless to
-    *    it). The labels and the output schema are the distributed
-    *    path's — the component minimum is the root either way — and
-    *    the result is a local frame plus the same singleton anti-join.
+    *  - Up front: one job collects every partition's distinct edges up
+    *    to its share of the bound. If none is over its share, a
+    *    min-label union-find labels every node (edges repeated across
+    *    partitions are harmless to it) and no other job runs. The
+    *    labels and the output schema are the distributed path's — the
+    *    component minimum is the root either way — and the result is a
+    *    local frame plus the same singleton anti-join.
     *  - Distributed rounds, otherwise: the edges are made distinct,
     *    then alternating large-star / small-star contraction (the
     *    MapReduce connected-components construction of Kiveris et al.,
-    *    "Connected Components in MapReduce and Beyond", SoCC 2014) runs
-    *    to convergence — each round rewires every edge toward its
+    *    "Connected Components in MapReduce and Beyond", SoCC 2014) —
+    *    each round rewires every edge toward its
     *    neighborhood minimum, so components contract to min-rooted
     *    stars in O(log²) rounds REGARDLESS of diameter. One-hop
     *    min-label propagation (what this method used first) needs
@@ -479,6 +481,14 @@ object Dedup {
     *    giant star is agg/join skew that AQE splits, never an executor
     *    OOM. Every round's edge frame is `localCheckpoint`ed — iterative
     *    self-joins otherwise stack an exponentially growing lineage.
+    *  - Hand-off: the job that materializes the distinct edge set, and
+    *    each round's edge set, also counts its rows (a pass-through
+    *    accumulator, no extra job). Once that count is at most the
+    *    bound, the rounds stop: the edges are collected once and the
+    *    same union-find labels them. A graph whose distinct edges fit
+    *    but sit unevenly across partitions runs no round; a graph over
+    *    the bound keeps contracting until its residue fits (10× sf0.1
+    *    q_entity_clusters fits after one round).
     *  - The bound is derived from the driver heap
     *    (`Runtime.maxMemory` / 4096, ~5·10^5 edges at 2 GiB; see
     *    [[driverEdgeBound]]). No setting tunes it.
@@ -486,13 +496,15 @@ object Dedup {
     *    integral ids numerically, default-collation strings in UTF-8
     *    binary order (NOT `String.compareTo`: Spark orders U+FFFD
     *    before U+1F600, UTF-16 code units the other way). Any other id
-    *    type (binary, decimal, collated strings, ...) goes distributed.
+    *    type (binary, decimal, collated strings, ...) stays on the
+    *    distributed path to convergence.
     *
     * `maxIter` bounds the distributed rounds, and the method fails
     * loudly rather than return a half-merged labeling (2^20-diameter
     * graphs do not occur). Every eager job carries a Spark job
     * description naming its step (edge set, driver collect, round i
-    * stats / edges); the caller's description is restored on return.
+    * stats / edges, driver finish); the caller's description is
+    * restored on return.
     * Output columns `id` and `cluster_id` are always nullable.
     */
   def duplicateClusters(nodes: DataFrame, idCol: String,
@@ -520,35 +532,54 @@ object Dedup {
     val sc = nodes.sparkSession.sparkContext
     def step[T](what: String)(body: => T): T =
       DriverJobs.described(sc, s"Dedup.duplicateClusters: $what")(body)
+    // materialize `df` AND count its rows matching `hit` in the same
+    // job: a pass-through map feeding an accumulator inside the
+    // checkpointed plan. A task retry can only inflate a count.
+    def checkpointCounted(df: DataFrame, name: String,
+        hit: Row => Boolean): (DataFrame, Long) = {
+      val n = sc.longAccumulator(name)
+      val out = df.mapPartitions { it =>
+        it.map { r => if (hit(r)) n.add(1L); r }
+      }(Encoders.row(df.schema))
+        .localCheckpoint() // eager: fires the job, fills the counter
+      (out, n.value)
+    }
     val edges = step("edge set")(pairs
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .filter(col("a") =!= col("b"))
       .localCheckpoint(eager = false))
     val idType = edges.schema("a").dataType
-    // one job, at most `driverBound` rows on the driver; a partition
-    // over its share sends none. (A `limit(bound + 1)` scans one
-    // partition, then the rest, and the checkpoint adds a job for the
-    // partitions it skipped.)
-    val local = driverKey(idType).filter(_ => driverBound > 0).flatMap {
-      wire =>
-        val rdd = edges.select(col("a").cast(wire), col("b").cast(wire))
-          .rdd
-        val share = math.min(driverBound / rdd.partitions.length.max(1),
-          Int.MaxValue - 1L).toInt
-        val parts = step("driver collect")(sc.runJob(rdd,
-          (it: Iterator[Row]) => {
-            val rows = it.take(share + 1).toArray
-            Option.when(rows.length <= share)(rows)
-          }))
-        Option.when(parts.forall(_.isDefined))(driverLabels(
-          nodes.sparkSession, parts.flatMap(_.get), idType, wire))
+    val wire = driverKey(idType).filter(_ => driverBound > 0)
+    def wireRows(df: DataFrame) =
+      df.select(col("a").cast(wire.get), col("b").cast(wire.get)).rdd
+    // one job, at most `driverBound` rows on the driver: each
+    // partition's distinct edges up to its share; a partition over its
+    // share sends none. (A `limit(bound + 1)` scans one partition, then
+    // the rest, and the checkpoint adds a job for the partitions it
+    // skipped.)
+    val upFront = wire.flatMap { _ =>
+      val rdd = wireRows(edges)
+      val share = math.min(driverBound / rdd.partitions.length.max(1),
+        Int.MaxValue - 1L).toInt
+      val parts = step("driver collect")(sc.runJob(rdd,
+        (it: Iterator[Row]) => {
+          val seen = new java.util.HashSet[(Any, Any)]()
+          val rows = it.filter(r => seen.add(edgeKey(r)))
+            .take(share + 1).toArray
+          Option.when(rows.length <= share)(rows)
+        }))
+      Option.when(parts.forall(_.isDefined))(parts.flatMap(_.get))
     }
-    var e = if (local.isDefined) edges
-      else step("edge set")(edges.distinct().localCheckpoint())
+    // otherwise the distinct edge set, counted: duplicates across
+    // partitions, or one partition over its share, can still fit
+    var (e, live) = if (upFront.isDefined) (edges, 0L)
+      else step("edge set")(checkpointCounted(edges.distinct(),
+        "graft_cc_edges", _ => true))
+    def fits = wire.isDefined && live <= driverBound
     var iter = 0
     var converged = false
-    while (local.isEmpty && !converged && iter < maxIter) {
+    while (upFront.isEmpty && !converged && !fits && iter < maxIter) {
       val b = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v")))
       // per-node neighborhood min + the fixpoint test, in ONE agg:
@@ -561,22 +592,19 @@ object Dedup {
         ((min(col("v")) < col("u") && max(col("v")) > col("u")) ||
           count(when(col("v") < col("u"), 1)) >= 2).as("__bad"))
       // convergence comes out of the SAME job that materializes the
-      // stats: a pass-through map feeding an accumulator inside the
-      // checkpointed plan. Task retries can only inflate a NONZERO
-      // count (a retried stable partition re-adds 0), so `== 0` stays
-      // exact. (The r19 optimization round tried fusing this job into
-      // the edge-production job — one job per round — and measured it
+      // stats. Task retries can only inflate a NONZERO count (a
+      // retried stable partition re-adds 0), so `== 0` stays exact.
+      // (The r19 optimization round tried fusing this job into the
+      // edge-production job — one job per round — and measured it
       // SLOWER: the materialized stats frame gives
       // the rewiring join a size-known build side AQE broadcasts,
       // where the fused plan recomputes the stats subtree inside a
       // size-unknown join. Two small materialized jobs beat one deep
       // one here; kept.)
-      val unstable = sc.longAccumulator(s"graft_cc_unstable_$iter")
-      val stats = step(s"round $iter stats")(statsPlan.mapPartitions(
-          _.map { r => if (r.getBoolean(2)) unstable.add(1L); r })(
-          Encoders.row(statsPlan.schema))
-        .localCheckpoint()) // eager: fires the job, fills the counter
-      if (unstable.value == 0L) converged = true
+      val (stats, unstable) = step(s"round $iter stats")(
+        checkpointCounted(statsPlan, s"graft_cc_unstable_$iter",
+          _.getBoolean(2)))
+      if (unstable == 0L) converged = true
       else {
         // large-star: every edge to a LARGER neighbor of u rewires to
         // u's neighborhood min m ≤ u < v (canonical order free).
@@ -594,23 +622,33 @@ object Dedup {
           .select(col("__mn").as("a"), col("v").as("b"))
           .unionByName(mins.filter(col("__mn") < col("u"))
             .select(col("__mn").as("a"), col("u").as("b")))
-        e = step(s"round $iter edges")(ss.distinct().localCheckpoint())
+        val (next, n) = step(s"round $iter edges")(
+          checkpointCounted(ss.distinct(), s"graft_cc_edges_$iter",
+            _ => true))
+        e = next
+        live = n
       }
       iter += 1
     }
-    val labels = local.getOrElse {
-      require(converged,
-        s"duplicateClusters did not converge in $maxIter rounds - " +
-        "graph is adversarially deep for large-star/small-star; " +
-        "raise maxIter")
-      // converged edge set IS the answer: stars (root=component
-      // min, leaf) in canonical (a=root, b=leaf) order
-      e.select(asNullable(col("b")).as("id"),
-          asNullable(col("a")).as("cluster_id"))
-        .unionByName(e.select(asNullable(col("a")).as("id"),
-          asNullable(col("a")).as("cluster_id")))
-        .distinct()
-    }
+    val labels =
+      if (converged) {
+        // converged edge set IS the answer: stars (root=component
+        // min, leaf) in canonical (a=root, b=leaf) order
+        e.select(asNullable(col("b")).as("id"),
+            asNullable(col("a")).as("cluster_id"))
+          .unionByName(e.select(asNullable(col("a")).as("id"),
+            asNullable(col("a")).as("cluster_id")))
+          .distinct()
+      } else {
+        val rows = upFront.getOrElse {
+          require(fits,
+            s"duplicateClusters did not converge in $maxIter rounds - " +
+            "graph is adversarially deep for large-star/small-star; " +
+            "raise maxIter")
+          step(s"driver finish with $live edges")(wireRows(e).collect())
+        }
+        driverLabels(nodes.sparkSession, rows, idType, wire.get)
+      }
     val singletons = nodes.select(col(idCol).as("id"))
       .join(labels.select("id"), Seq("id"), "left_anti")
       .withColumn("cluster_id", col("id"))
@@ -632,6 +670,14 @@ object Dedup {
       case StringType => Some(BinaryType) // equal only at UTF8_BINARY
       case _ => None
     }
+
+  /** Content key of a collected `(a, b)` edge: a Row hashes an
+    * `Array[Byte]` id by identity. */
+  private def edgeKey(r: Row): (Any, Any) = (r.get(0), r.get(1)) match {
+    case (a: Array[Byte], b: Array[Byte]) =>
+      (UTF8String.fromBytes(a), UTF8String.fromBytes(b))
+    case ab => ab
+  }
 
   /** Driver finish: label every node of the collected `(a, b)` edges
     * (ids as `wire`, see [[driverKey]]) with its component minimum by
@@ -840,8 +886,8 @@ object Dedup {
     * engine-independent.
     *
     * Scale shape: only PAIR MEMBER ids flow through the clustering
-    * ([[duplicateClusters]]: the driver finish when the edges fit,
-    * else star contraction); the corpus
+    * ([[duplicateClusters]]: star contraction, then the driver
+    * finish once the edges fit); the corpus
     * contributes quality values through one join against that small
     * member set (AQE broadcasts it — the corpus never shuffles), and
     * the final delete is the same small-side anti join as

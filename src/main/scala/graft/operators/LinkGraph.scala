@@ -165,9 +165,10 @@ object LinkGraph {
     *
     * Rides [[Dedup.duplicateClusters]] unchanged, because an
     * undirected duplicate graph and a direction-ignored link graph are
-    * the same object: one collect and a union-find on the driver when
-    * the edges fit the driver-heap bound, else large-star/small-star
-    * rounds (only the edge list shuffles). Labels compare with the
+    * the same object: large-star/small-star rounds (only the edge list
+    * shuffles) while the live edge set is over the driver-heap bound,
+    * then one collect and a union-find on the driver — a graph that
+    * fits from the start runs no round at all. Labels compare with the
     * column type's own ordering on both paths (UTF-8 binary for
     * strings, as in the oracle). Isolated nodes only exist here if
     * self-linked rows were dropped upstream; every node appearing in

@@ -5,9 +5,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 import graft.operators.Dedup
 
 /** Pins the driver finish of Dedup.duplicateClusters: when the edges
-  * fit the driver bound, one collect and a union-find replace the
-  * large-star/small-star rounds; otherwise the rounds run to
-  * convergence from the same edge frame. The labels and the schema must
+  * fit the driver bound, up front or once the large-star/small-star
+  * rounds shrink them, one collect and a union-find replace the
+  * remaining rounds; otherwise the rounds run to convergence from the
+  * same edge frame. The labels and the schema must
   * be exactly those of the all-distributed path (bound 0), on every
   * shape and id type the finish accepts, and every eager job of the
   * chain carries a job description naming its step.
@@ -125,10 +126,69 @@ class DedupDriverFinishSpec extends SparkSpec {
     assert(out == Set(Row(1L, 1L), Row(null, null), Row(3L, 3L)))
   }
 
-  test("over the bound: no driver finish, the rounds run to " +
-      "convergence after the collect") {
-    // a 30-clique (435 edges) plus a 20-node path: 454 edges against a
-    // bound of 200
+  test("repeated and unevenly spread pairs that fit run no round") {
+    import org.apache.spark.sql.functions.{col, floor, lit}
+    val rowsOf = spark.range(0L, 20000L, 1L, 4)
+    def pairsOn(k: Long) = rowsOf.select((col("id") % k).as("id_a"),
+      (floor(col("id") / k) % k).as("id_b"))
+    def labelsOf(k: Long, pairs: DataFrame, bound: Long) = {
+      val nodes = (0L until k).toDF("id")
+      val dist = Dedup.duplicateClustersBounded(nodes, "id", pairs,
+        maxIter = 20, driverBound = 0L)
+      val ((out, schema), desc) = withDescriptions {
+        val df = Dedup.duplicateClustersBounded(nodes, "id", pairs,
+          maxIter = 20, driverBound = bound)
+        (rows(df), df.schema)
+      }
+      assert(schema == dist.schema)
+      assert(out == rows(dist) && out.forall(_.getLong(1) == 0L))
+      desc
+    }
+    // 20,000 rows, 45 distinct edges, at most 45 per partition: the
+    // collect dedupes inside each partition and fits a share of 50
+    assert(labelsOf(10L, pairsOn(10L), 200L) ==
+      Seq(prefix + "driver collect"))
+    // 780 distinct edges, all in one of 4 partitions: over that
+    // partition's share (250), so the counted distinct edge set decides
+    val skewed = pairsOn(40L).repartition(4, lit(0))
+    // (its repartition's map stage runs as an `edge set` job first)
+    assert(labelsOf(40L, skewed, 1000L).toSet == Set(prefix + "edge set",
+      prefix + "driver collect", prefix + "driver finish with 780 edges"))
+  }
+
+  test("hand-off: distributed rounds shrink the edges, then the driver " +
+      "finishes") {
+    // a 30-clique (435 edges) contracts to a 29-edge star in one round;
+    // plus a 20-node path. A bound of 200 sits between the initial
+    // count and round 0's, so round 0 runs distributed and the driver
+    // finishes its output.
+    val clique = for (i <- 0L until 30L; j <- i + 1 until 30L) yield (i, j)
+    val path = (100L until 119L).map(i => (i, i + 1))
+    val nodes = ((0L until 30L) ++ (100L to 119L) :+ 500L).toDF("id")
+    val pairs = (clique ++ path).toDF("id_a", "id_b")
+    val dist = Dedup.duplicateClustersBounded(nodes, "id", pairs,
+      maxIter = 20, driverBound = 0L)
+    val (handed, desc) = withDescriptions {
+      val df = Dedup.duplicateClustersBounded(nodes, "id", pairs,
+        maxIter = 20, driverBound = 200L)
+      (rows(df), df.schema)
+    }
+    assert(desc.contains(prefix + "round 0 edges"), desc)
+    val finish = desc.filter(_.contains("driver finish"))
+    assert(finish.size == 1, desc)
+    val n = finish.head.stripPrefix(prefix + "driver finish with ")
+      .stripSuffix(" edges").toLong
+    assert(n <= 200L)
+    assert(handed._2 == dist.schema)
+    assert(handed._1 == rows(dist))
+    assert(handed._1.filter(_.getLong(1) == 0L).size == 30)
+    assert(handed._1.filter(_.getLong(1) == 100L).size == 20)
+  }
+
+  test("far over the bound: the rounds run to convergence, no driver " +
+      "finish") {
+    // a 30-clique (435 edges) plus a 20-node path: its 48-edge star
+    // forest never fits a bound of 40
     val clique = for (i <- 0L until 30L; j <- i + 1 until 30L) yield (i, j)
     val path = (100L until 119L).map(i => (i, i + 1))
     val nodes = ((0L until 30L) ++ (100L to 119L) :+ 500L).toDF("id")
@@ -137,12 +197,13 @@ class DedupDriverFinishSpec extends SparkSpec {
       maxIter = 20, driverBound = 0L)
     val (over, desc) = withDescriptions {
       val df = Dedup.duplicateClustersBounded(nodes, "id", pairs,
-        maxIter = 20, driverBound = 200L)
+        maxIter = 20, driverBound = 40L)
       (rows(df), df.schema)
     }
     assert(desc.take(2) == Seq(prefix + "driver collect",
       prefix + "edge set"), desc)
     assert(desc.contains(prefix + "round 0 stats"), desc)
+    assert(!desc.exists(_.contains("driver finish")), desc)
     assert(over._2 == dist.schema)
     assert(over._1 == rows(dist))
     assert(over._1.filter(_.getLong(1) == 0L).size == 30)
