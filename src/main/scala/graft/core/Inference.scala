@@ -104,6 +104,11 @@ object Inference {
       df.agg(aggs.head, aggs.tail: _*).collect()(0))
     val distinctF = DriverJobs.fork(sc, s"$step: distinct counts") {
       distinctJobCount.incrementAndGet()
+      // An HLL++ buffer is 52 longs per column (relativeSD 0.05), so the
+      // partial aggregate outputs over 25 fields, and Spark's plan string
+      // for the SQL execution event logs its once-per-JVM "Truncated the
+      // string representation of a plan" warning. A one-field sketch
+      // (`hll_sketch_agg`) would drop it but change the estimates.
       val hlls = fields.map(f =>
         approx_count_distinct(col(f.name)).cast("long")
           .as(s"${f.name}__nd"))

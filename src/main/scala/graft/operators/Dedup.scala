@@ -459,18 +459,22 @@ object Dedup {
     * dropped, duplicates kept) that every later step reads, so the
     * candidate generation behind it runs once.
     *
-    *  - Up front: one job collects every partition's distinct edges up
-    *    to its share of the bound. If none is over its share, a
-    *    min-label union-find labels every node (edges repeated across
-    *    partitions are harmless to it) and no other job runs. The
-    *    labels and the output schema are the distributed path's — the
-    *    component minimum is the root either way — and the result is a
-    *    local frame plus the same singleton anti-join.
-    *  - Distributed rounds, otherwise: the edges are made distinct,
-    *    then alternating large-star / small-star contraction (the
-    *    MapReduce connected-components construction of Kiveris et al.,
-    *    "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    *    each round rewires every edge toward its
+    *  - The offer: the job that materializes an edge set — the
+    *    canonical edges up front, then each round's output — also
+    *    sends every partition's distinct edges, up to its share of the
+    *    bound, to the driver. If none is over its share, a min-label
+    *    union-find labels every node (edges repeated across partitions
+    *    are harmless to it) and no other job runs. The labels and the
+    *    output schema are the distributed path's — the component
+    *    minimum is the root either way — and the result is a local
+    *    frame plus the same singleton anti-join. A graph that fits up
+    *    front runs no round; 10× sf0.1 q_entity_clusters fits after
+    *    round 0.
+    *  - Distributed rounds, otherwise, on the edges as they are
+    *    (repeats included): alternating large-star / small-star
+    *    contraction (the MapReduce connected-components construction
+    *    of Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC 2014) — each round rewires every edge toward its
     *    neighborhood minimum, so components contract to min-rooted
     *    stars in O(log²) rounds REGARDLESS of diameter. One-hop
     *    min-label propagation (what this method used first) needs
@@ -479,16 +483,9 @@ object Dedup {
     *    >20-hop component at 10× sf0.1). Per round only (id, id) edges
     *    shuffle — no per-node neighbor lists are ever collected, so a
     *    giant star is agg/join skew that AQE splits, never an executor
-    *    OOM. Every round's edge frame is `localCheckpoint`ed — iterative
-    *    self-joins otherwise stack an exponentially growing lineage.
-    *  - Hand-off: the job that materializes the distinct edge set, and
-    *    each round's edge set, also counts its rows (a pass-through
-    *    accumulator, no extra job). Once that count is at most the
-    *    bound, the rounds stop: the edges are collected once and the
-    *    same union-find labels them. A graph whose distinct edges fit
-    *    but sit unevenly across partitions runs no round; a graph over
-    *    the bound keeps contracting until its residue fits (10× sf0.1
-    *    q_entity_clusters fits after one round).
+    *    OOM. Every round's distinct output is `localCheckpoint`ed —
+    *    iterative self-joins otherwise stack an exponentially growing
+    *    lineage.
     *  - The bound is derived from the driver heap
     *    (`Runtime.maxMemory` / 4096, ~5·10^5 edges at 2 GiB; see
     *    [[driverEdgeBound]]). No setting tunes it.
@@ -496,15 +493,14 @@ object Dedup {
     *    integral ids numerically, default-collation strings in UTF-8
     *    binary order (NOT `String.compareTo`: Spark orders U+FFFD
     *    before U+1F600, UTF-16 code units the other way). Any other id
-    *    type (binary, decimal, collated strings, ...) stays on the
-    *    distributed path to convergence.
+    *    type (binary, decimal, collated strings, ...) is never offered
+    *    and stays on the distributed path to convergence.
     *
     * `maxIter` bounds the distributed rounds, and the method fails
     * loudly rather than return a half-merged labeling (2^20-diameter
     * graphs do not occur). Every eager job carries a Spark job
     * description naming its step (edge set, driver collect, round i
-    * stats / edges, driver finish); the caller's description is
-    * restored on return.
+    * stats / edges); the caller's description is restored on return.
     * Output columns `id` and `cluster_id` are always nullable.
     */
   def duplicateClusters(nodes: DataFrame, idCol: String,
@@ -532,18 +528,6 @@ object Dedup {
     val sc = nodes.sparkSession.sparkContext
     def step[T](what: String)(body: => T): T =
       DriverJobs.described(sc, s"Dedup.duplicateClusters: $what")(body)
-    // materialize `df` AND count its rows matching `hit` in the same
-    // job: a pass-through map feeding an accumulator inside the
-    // checkpointed plan. A task retry can only inflate a count.
-    def checkpointCounted(df: DataFrame, name: String,
-        hit: Row => Boolean): (DataFrame, Long) = {
-      val n = sc.longAccumulator(name)
-      val out = df.mapPartitions { it =>
-        it.map { r => if (hit(r)) n.add(1L); r }
-      }(Encoders.row(df.schema))
-        .localCheckpoint() // eager: fires the job, fills the counter
-      (out, n.value)
-    }
     val edges = step("edge set")(pairs
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
@@ -551,60 +535,60 @@ object Dedup {
       .localCheckpoint(eager = false))
     val idType = edges.schema("a").dataType
     val wire = driverKey(idType).filter(_ => driverBound > 0)
-    def wireRows(df: DataFrame) =
-      df.select(col("a").cast(wire.get), col("b").cast(wire.get)).rdd
-    // one job, at most `driverBound` rows on the driver: each
-    // partition's distinct edges up to its share; a partition over its
-    // share sends none. (A `limit(bound + 1)` scans one partition, then
-    // the rest, and the checkpoint adds a job for the partitions it
-    // skipped.)
-    val upFront = wire.flatMap { _ =>
-      val rdd = wireRows(edges)
+    // the offer: ONE job materializes the lazily checkpointed `df` and
+    // sends at most `driverBound` rows to the driver, each partition's
+    // distinct edges up to its share; a partition over its share sends
+    // none. All fit: the edges, for the driver labels. Otherwise the
+    // job has cached `df` for the next round. (A `limit(bound + 1)`
+    // scans one partition, then the rest, and the checkpoint adds a
+    // job for the partitions it skipped.)
+    def offer(df: DataFrame): Option[Array[Row]] = wire.flatMap { w =>
+      val rdd = df.select(col("a").cast(w), col("b").cast(w)).rdd
       val share = math.min(driverBound / rdd.partitions.length.max(1),
         Int.MaxValue - 1L).toInt
-      val parts = step("driver collect")(sc.runJob(rdd,
-        (it: Iterator[Row]) => {
-          val seen = new java.util.HashSet[(Any, Any)]()
-          val rows = it.filter(r => seen.add(edgeKey(r)))
-            .take(share + 1).toArray
-          Option.when(rows.length <= share)(rows)
-        }))
+      val parts = sc.runJob(rdd, (it: Iterator[Row]) => {
+        val seen = new java.util.HashSet[(Any, Any)]()
+        val rows = it.filter(r => seen.add(edgeKey(r)))
+          .take(share + 1).toArray
+        Option.when(rows.length <= share)(rows)
+      })
       Option.when(parts.forall(_.isDefined))(parts.flatMap(_.get))
     }
-    // otherwise the distinct edge set, counted: duplicates across
-    // partitions, or one partition over its share, can still fit
-    var (e, live) = if (upFront.isDefined) (edges, 0L)
-      else step("edge set")(checkpointCounted(edges.distinct(),
-        "graft_cc_edges", _ => true))
-    def fits = wire.isDefined && live <= driverBound
+    var e = edges
+    var offered = step("driver collect")(offer(edges))
     var iter = 0
     var converged = false
-    while (upFront.isEmpty && !converged && !fits && iter < maxIter) {
+    while (offered.isEmpty && !converged && iter < maxIter) {
       val b = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v")))
       // per-node neighborhood min + the fixpoint test, in ONE agg:
       // the graph is a min-rooted star forest (= converged) iff no
       // node has both a smaller and a larger neighbor (large-star is
       // then the identity) and no node has two smaller neighbors
-      // (small-star is then the identity).
+      // (small-star is then the identity): its largest smaller
+      // neighbor is its min. Exact on repeated edges, which round 0
+      // reads.
       val statsPlan = b.groupBy("u").agg(
         min("v").as("__mn"),
         ((min(col("v")) < col("u") && max(col("v")) > col("u")) ||
-          count(when(col("v") < col("u"), 1)) >= 2).as("__bad"))
+          coalesce(max(when(col("v") < col("u"), col("v"))) >
+            min(col("v")), lit(false))).as("__bad"))
       // convergence comes out of the SAME job that materializes the
-      // stats. Task retries can only inflate a NONZERO count (a
-      // retried stable partition re-adds 0), so `== 0` stays exact.
-      // (The r19 optimization round tried fusing this job into the
-      // edge-production job — one job per round — and measured it
+      // stats: a pass-through map feeding an accumulator inside the
+      // checkpointed plan. Task retries can only inflate a NONZERO
+      // count (a retried stable partition re-adds 0), so `== 0` stays
+      // exact. (The r19 optimization round tried fusing this job into
+      // the edge-production job — one job per round — and measured it
       // SLOWER: the materialized stats frame gives
       // the rewiring join a size-known build side AQE broadcasts,
       // where the fused plan recomputes the stats subtree inside a
       // size-unknown join. Two small materialized jobs beat one deep
       // one here; kept.)
-      val (stats, unstable) = step(s"round $iter stats")(
-        checkpointCounted(statsPlan, s"graft_cc_unstable_$iter",
-          _.getBoolean(2)))
-      if (unstable == 0L) converged = true
+      val unstable = sc.longAccumulator(s"graft_cc_unstable_$iter")
+      val stats = step(s"round $iter stats")(statsPlan.mapPartitions {
+        it => it.map { r => if (r.getBoolean(2)) unstable.add(1L); r }
+      }(Encoders.row(statsPlan.schema)).localCheckpoint())
+      if (unstable.value == 0L) converged = true
       else {
         // large-star: every edge to a LARGER neighbor of u rewires to
         // u's neighborhood min m ≤ u < v (canonical order free).
@@ -622,11 +606,10 @@ object Dedup {
           .select(col("__mn").as("a"), col("v").as("b"))
           .unionByName(mins.filter(col("__mn") < col("u"))
             .select(col("__mn").as("a"), col("u").as("b")))
-        val (next, n) = step(s"round $iter edges")(
-          checkpointCounted(ss.distinct(), s"graft_cc_edges_$iter",
-            _ => true))
-        e = next
-        live = n
+        step(s"round $iter edges") {
+          e = ss.distinct().localCheckpoint(eager = false)
+          offered = offer(e)
+        }
       }
       iter += 1
     }
@@ -640,14 +623,11 @@ object Dedup {
             asNullable(col("a")).as("cluster_id")))
           .distinct()
       } else {
-        val rows = upFront.getOrElse {
-          require(fits,
-            s"duplicateClusters did not converge in $maxIter rounds - " +
-            "graph is adversarially deep for large-star/small-star; " +
-            "raise maxIter")
-          step(s"driver finish with $live edges")(wireRows(e).collect())
-        }
-        driverLabels(nodes.sparkSession, rows, idType, wire.get)
+        require(offered.isDefined,
+          s"duplicateClusters did not converge in $maxIter rounds - " +
+          "graph is adversarially deep for large-star/small-star; " +
+          "raise maxIter")
+        driverLabels(nodes.sparkSession, offered.get, idType, wire.get)
       }
     val singletons = nodes.select(col(idCol).as("id"))
       .join(labels.select("id"), Seq("id"), "left_anti")
@@ -660,7 +640,7 @@ object Dedup {
   // aggregate min, nullable; the input edge set may not be)
   private def asNullable(c: Column): Column = when(c.isNotNull, c)
 
-  /** The type the driver finish collects ids as, when it can order
+  /** The type the offer sends ids to the driver as, when it can order
     * them exactly like Spark: integral ids widen to long (numeric
     * order); default-collation strings travel as their UTF-8 bytes
     * (binary order, compared as [[UTF8String]]). */
@@ -886,10 +866,10 @@ object Dedup {
     * engine-independent.
     *
     * Scale shape: only PAIR MEMBER ids flow through the clustering
-    * ([[duplicateClusters]]: star contraction, then the driver
-    * finish once the edges fit); the corpus
-    * contributes quality values through one join against that small
-    * member set (AQE broadcasts it — the corpus never shuffles), and
+    * ([[duplicateClusters]]: driver labels from the first edge set
+    * that fits, up front or after a round); the corpus contributes
+    * quality values through one join against that small member set
+    * (AQE broadcasts it — the corpus never shuffles), and
     * the final delete is the same small-side anti join as
     * [[dedupCorpus]]. Per-cluster argmax is a partial-aggregated
     * |clusters|-sized exchange of the member table only.
@@ -897,15 +877,18 @@ object Dedup {
   def dedupCorpusKeepBest(df: DataFrame, idCol: String,
       qualityCol: String, pairs: DataFrame,
       maxIter: Int = 20): DataFrame = {
+    def step[T](what: String)(body: => T): T =
+      DriverJobs.described(df.sparkSession.sparkContext,
+        s"Dedup.dedupCorpusKeepBest: $what")(body)
     // pin the pair pipeline ONCE: members reads it twice (both union
     // branches) and the clustering once more — without the pin the
     // upstream signature pipeline (minhash/banding) re-executes for
     // each, which dominated this operator's wall
-    val p = pairs.select("id_a", "id_b").localCheckpoint()
-    val members = p.select(col("id_a").as("id"))
+    val p = step("pairs")(pairs.select("id_a", "id_b").localCheckpoint())
+    val members = step("members")(p.select(col("id_a").as("id"))
       .unionByName(p.select(col("id_b").as("id")))
       .distinct()
-      .localCheckpoint() // reused by the quality join AND the delete
+      .localCheckpoint()) // reused by the quality join AND the delete
     val labels = duplicateClusters(members, "id", p, maxIter)
     val qual = df
       .select(col(idCol).as("id"), col(qualityCol).as("__q"))
@@ -915,7 +898,8 @@ object Dedup {
     // silently drop every member) — per-cluster max quality, then the
     // smallest id among the (null-safe) quality ties. All frames here
     // are member-sized, so the extra join is small-side.
-    val scored = labels.join(qual, Seq("id")).localCheckpoint()
+    val scored = step("scored")(labels.join(qual, Seq("id"))
+      .localCheckpoint())
     val best = scored.groupBy("cluster_id")
       .agg(max(col("__q")).as("__mq"))
     val keep = scored.join(best, Seq("cluster_id"))

@@ -165,10 +165,11 @@ object LinkGraph {
     *
     * Rides [[Dedup.duplicateClusters]] unchanged, because an
     * undirected duplicate graph and a direction-ignored link graph are
-    * the same object: large-star/small-star rounds (only the edge list
-    * shuffles) while the live edge set is over the driver-heap bound,
-    * then one collect and a union-find on the driver — a graph that
-    * fits from the start runs no round at all. Labels compare with the
+    * the same object: the job that materializes each edge set, up front
+    * or a large-star/small-star round's output (only the edge list
+    * shuffles), offers it to the driver, and the first one that fits
+    * the driver-heap bound is labeled there by a union-find — a graph
+    * that fits from the start runs no round at all. Labels compare with the
     * column type's own ordering on both paths (UTF-8 binary for
     * strings, as in the oracle). Isolated nodes only exist here if
     * self-linked rows were dropped upstream; every node appearing in

@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.operators.Dedup
 
-/** Pins the driver finish of Dedup.duplicateClusters: when the edges
-  * fit the driver bound, up front or once the large-star/small-star
-  * rounds shrink them, one collect and a union-find replace the
-  * remaining rounds; otherwise the rounds run to convergence from the
-  * same edge frame. The labels and the schema must
+/** Pins the driver finish of Dedup.duplicateClusters: the job that
+  * materializes an edge set, up front or a large-star/small-star
+  * round's output, offers it to the driver, and when it fits the
+  * driver bound a union-find replaces the remaining rounds; otherwise
+  * the rounds run to convergence from the same edge frame, repeated
+  * edges included. The labels and the schema must
   * be exactly those of the all-distributed path (bound 0), on every
   * shape and id type the finish accepts, and every eager job of the
   * chain carries a job description naming its step.
@@ -126,7 +127,8 @@ class DedupDriverFinishSpec extends SparkSpec {
     assert(out == Set(Row(1L, 1L), Row(null, null), Row(3L, 3L)))
   }
 
-  test("repeated and unevenly spread pairs that fit run no round") {
+  test("repeated and unevenly spread pairs: those that fit run no " +
+      "round, a skewed set finishes on round 0's output") {
     import org.apache.spark.sql.functions.{col, floor, lit}
     val rowsOf = spark.range(0L, 20000L, 1L, 4)
     def pairsOn(k: Long) = rowsOf.select((col("id") % k).as("id_a"),
@@ -149,19 +151,40 @@ class DedupDriverFinishSpec extends SparkSpec {
     assert(labelsOf(10L, pairsOn(10L), 200L) ==
       Seq(prefix + "driver collect"))
     // 780 distinct edges, all in one of 4 partitions: over that
-    // partition's share (250), so the counted distinct edge set decides
+    // partition's share (250), so round 0 contracts the 40-clique to a
+    // 39-edge star, which its edges job offers and the driver labels
     val skewed = pairsOn(40L).repartition(4, lit(0))
     // (its repartition's map stage runs as an `edge set` job first)
-    assert(labelsOf(40L, skewed, 1000L).toSet == Set(prefix + "edge set",
-      prefix + "driver collect", prefix + "driver finish with 780 edges"))
+    assert(labelsOf(40L, skewed, 1000L) == Seq(prefix + "edge set",
+      prefix + "driver collect", prefix + "round 0 stats",
+      prefix + "round 0 edges"))
+  }
+
+  test("rounds read repeated edges: a star forest given three times " +
+      "in both orientations converges in round 0") {
+    // leaves of a star have one smaller neighbor, seen six times here
+    val stars = for (root <- Seq(0L, 10L, 20L); leaf <- 1L to 9L)
+      yield (root, root + leaf)
+    val nodes = (0L until 30L).toDF("id")
+    def run(pairs: Seq[(Long, Long)]) = withDescriptions {
+      val df = Dedup.duplicateClustersBounded(nodes, "id",
+        pairs.toDF("id_a", "id_b"), maxIter = 20, driverBound = 0L)
+      (rows(df), df.schema)
+    }
+    val (repeated, desc) = run(Seq.fill(3)(stars ++ stars.map(_.swap))
+      .flatten)
+    // one stats step, no edges step, no second round
+    assert(desc == Seq(prefix + "round 0 stats"), desc)
+    assert(repeated == run(stars)._1) // labels and schema
+    assert(repeated._1.forall(r => r.getLong(1) == r.getLong(0) / 10 * 10))
   }
 
   test("hand-off: distributed rounds shrink the edges, then the driver " +
       "finishes") {
     // a 30-clique (435 edges) contracts to a 29-edge star in one round;
     // plus a 20-node path. A bound of 200 sits between the initial
-    // count and round 0's, so round 0 runs distributed and the driver
-    // finishes its output.
+    // edge set and round 0's output, so round 0 runs distributed and
+    // the driver labels the output its edges job offers.
     val clique = for (i <- 0L until 30L; j <- i + 1 until 30L) yield (i, j)
     val path = (100L until 119L).map(i => (i, i + 1))
     val nodes = ((0L until 30L) ++ (100L to 119L) :+ 500L).toDF("id")
@@ -173,12 +196,8 @@ class DedupDriverFinishSpec extends SparkSpec {
         maxIter = 20, driverBound = 200L)
       (rows(df), df.schema)
     }
-    assert(desc.contains(prefix + "round 0 edges"), desc)
-    val finish = desc.filter(_.contains("driver finish"))
-    assert(finish.size == 1, desc)
-    val n = finish.head.stripPrefix(prefix + "driver finish with ")
-      .stripSuffix(" edges").toLong
-    assert(n <= 200L)
+    assert(desc == Seq(prefix + "driver collect", prefix + "round 0 stats",
+      prefix + "round 0 edges"), desc)
     assert(handed._2 == dist.schema)
     assert(handed._1 == rows(dist))
     assert(handed._1.filter(_.getLong(1) == 0L).size == 30)
@@ -201,9 +220,10 @@ class DedupDriverFinishSpec extends SparkSpec {
       (rows(df), df.schema)
     }
     assert(desc.take(2) == Seq(prefix + "driver collect",
-      prefix + "edge set"), desc)
-    assert(desc.contains(prefix + "round 0 stats"), desc)
-    assert(!desc.exists(_.contains("driver finish")), desc)
+      prefix + "round 0 stats"), desc)
+    assert(!desc.contains(prefix + "edge set"), desc)
+    // the last job is the stats job that found the star forest
+    assert(desc.last.matches(raw".*round \d+ stats"), desc)
     assert(over._2 == dist.schema)
     assert(over._1 == rows(dist))
     assert(over._1.filter(_.getLong(1) == 0L).size == 30)
@@ -239,11 +259,9 @@ class DedupDriverFinishSpec extends SparkSpec {
       }
       assert(sc.getLocalProperty("spark.job.description") ==
         "caller step")
-      assert(dist.head == prefix + "edge set")
-      assert(dist.contains(prefix + "round 0 stats"))
-      assert(dist.contains(prefix + "round 0 edges"))
-      assert(dist.forall(d => d == prefix + "edge set" ||
-        d.matches(raw".*round \d+ (stats|edges)")), dist)
+      assert(dist.take(2) == Seq(prefix + "round 0 stats",
+        prefix + "round 0 edges"), dist)
+      assert(dist.forall(_.matches(raw".*round \d+ (stats|edges)")), dist)
       val (_, local) = withDescriptions {
         Dedup.duplicateClusters(nodes, "id", pairs)
       }
@@ -263,7 +281,7 @@ class DedupDriverFinishSpec extends SparkSpec {
           col("id_a").cast("decimal(12,0)").as("id_a"),
           col("id_b").cast("decimal(12,0)").as("id_b"))))
     }
-    assert(!decDesc.exists(_.contains("driver finish")), decDesc)
+    assert(!decDesc.exists(_.contains("driver collect")), decDesc)
     assert(dec.map(_.getDecimal(1).longValue) == Set(1L))
   }
 

@@ -187,6 +187,21 @@ class DedupSpec extends SparkSpec {
     assert(kept == Set(1L, 6L, 8L))
   }
 
+  test("dedupCorpusKeepBest names every job it starts while building") {
+    val docs = Seq((1L, "jonathan-smith"), (2L, "jonathan-smyth"),
+      (3L, "jonathan-smit"), (4L, "margaret-jones"), (5L, "margaret-jone"))
+      .toDF("doc_id", "name").withColumn("quality", length(col("name")))
+    val pairs = Dedup.editDistancePairs(docs, "doc_id", "name")
+    val (kept, jobs) = JobFence.during(spark.sparkContext) {
+      Dedup.dedupCorpusKeepBest(docs, "doc_id", "quality", pairs)
+    }
+    val desc = jobs.map(_.description.getOrElse(""))
+    assert(desc.nonEmpty && desc.forall(_.startsWith("Dedup.")), desc)
+    assert(Seq("pairs", "members", "scored").forall(s =>
+      desc.contains(s"Dedup.dedupCorpusKeepBest: $s")), desc)
+    assert(kept.select("doc_id").as[Long].collect().toSet == Set(1L, 4L))
+  }
+
   test("editDistancePairs: typo classes pair, distinct fields don't, " +
       "equals brute force at an uncapped df") {
     val rows = Seq(
