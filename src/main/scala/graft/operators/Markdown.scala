@@ -229,7 +229,7 @@ object Markdown {
         nHeadings += 1 // setext underline promotes the line above
       } else if (isThematicBreak(t) && t.nonEmpty) {
         () // dropped
-      } else if (t.startsWith("[") && t.contains("]:")) {
+      } else if (isRefDefinition(t)) {
         () // reference-link definition line
       } else {
         // strip blockquote/list prefixes (repeatable); only LEADING
@@ -266,6 +266,25 @@ object Markdown {
     }
     MdDoc(out.mkString("\n"), nHeadings, nLinks, nCode,
       fm.toSeq)
+  }
+
+  /** `[label]:` opening a trimmed line: the label ends at the first
+    * UNESCAPED `]` and holds no unescaped `[` (CommonMark §4.7), so
+    * an escaped `\]:` inside link text is not a definition.
+    */
+  private def isRefDefinition(t: String): Boolean = {
+    if (!t.startsWith("[")) return false
+    var i = 1
+    while (i < t.length) {
+      t.charAt(i) match {
+        case '\\' => i += 2
+        case '[' => return false
+        case ']' => return i > 1 && i + 1 < t.length &&
+          t.charAt(i + 1) == ':'
+        case _ => i += 1
+      }
+    }
+    false
   }
 
   // ------------------------------------------------------------------

@@ -127,29 +127,43 @@ class DedupDriverFinishSpec extends SparkSpec {
     assert(out == Set(Row(1L, 1L), Row(null, null), Row(3L, 3L)))
   }
 
-  test("repeated and unevenly spread pairs: those that fit run no " +
-      "round, a skewed set finishes on round 0's output") {
-    import org.apache.spark.sql.functions.{col, floor, lit}
-    val rowsOf = spark.range(0L, 20000L, 1L, 4)
-    def pairsOn(k: Long) = rowsOf.select((col("id") % k).as("id_a"),
+  // 20,000 rows over 4 partitions, pairing id % k with (id / k) % k:
+  // every pair of 0 until k, each many times
+  private def pairsOn(k: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{col, floor}
+    spark.range(0L, 20000L, 1L, 4).select((col("id") % k).as("id_a"),
       (floor(col("id") / k) % k).as("id_b"))
-    def labelsOf(k: Long, pairs: DataFrame, bound: Long) = {
-      val nodes = (0L until k).toDF("id")
-      val dist = Dedup.duplicateClustersBounded(nodes, "id", pairs,
-        maxIter = 20, driverBound = 0L)
-      val ((out, schema), desc) = withDescriptions {
-        val df = Dedup.duplicateClustersBounded(nodes, "id", pairs,
-          maxIter = 20, driverBound = bound)
-        (rows(df), df.schema)
-      }
-      assert(schema == dist.schema)
-      assert(out == rows(dist) && out.forall(_.getLong(1) == 0L))
-      desc
+  }
+
+  /** The job descriptions of a bounded run on the k nodes of
+    * [[pairsOn]], after checking its labels (all 0) and schema
+    * against the all-distributed run.
+    */
+  private def labelsOf(k: Long, pairs: DataFrame, bound: Long)
+      : Seq[String] = {
+    val nodes = (0L until k).toDF("id")
+    val dist = Dedup.duplicateClustersBounded(nodes, "id", pairs,
+      maxIter = 20, driverBound = 0L)
+    val ((out, schema), desc) = withDescriptions {
+      val df = Dedup.duplicateClustersBounded(nodes, "id", pairs,
+        maxIter = 20, driverBound = bound)
+      (rows(df), df.schema)
     }
+    assert(schema == dist.schema)
+    assert(out == rows(dist) && out.forall(_.getLong(1) == 0L))
+    desc
+  }
+
+  test("repeated and unevenly spread pairs that fit run no round") {
     // 20,000 rows, 45 distinct edges, at most 45 per partition: the
     // collect dedupes inside each partition and fits a share of 50
     assert(labelsOf(10L, pairsOn(10L), 200L) ==
       Seq(prefix + "driver collect"))
+  }
+
+  test("skewed pairs over a partition's share finish on round 0's " +
+      "output") {
+    import org.apache.spark.sql.functions.lit
     // 780 distinct edges, all in one of 4 partitions: over that
     // partition's share (250), so round 0 contracts the 40-clique to a
     // 39-edge star, which its edges job offers and the driver labels

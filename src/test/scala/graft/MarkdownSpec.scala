@@ -61,6 +61,13 @@ Some **bold** and *italic* and `code span` text.
     assert(doc.text == "a\n\n\nb")
   }
 
+  test("an escaped `]:` inside link text is not a reference definition") {
+    val doc = Markdown.mdText(
+      "[a\\]:b](https://x)\n[x\\]y]: https://x\n[[n]]: c")
+    assert(doc.text == "a]:b\n[[n]]: c") // the definition line is dropped
+    assert(doc.nLinks == 1)
+  }
+
   test("yaml front matter extracts as metadata, never as text") {
     val md = """---
 title: "My Post"
