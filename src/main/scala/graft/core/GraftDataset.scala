@@ -37,15 +37,9 @@ final class GraftDataset(
 
   def classification: ColumnClassification = _classification
 
-  /** The categorical columns among `cols`: the cached classification's
-    * answer once it is computed, else a classification of just those
-    * columns (per-column counters do not depend on the others). */
-  private[graft] def categoricalAmong(cols: Seq[String]): Set[String] = {
-    val present = cols.filter(data.columns.contains)
-    if (classified) classification.categoricalCols & present.toSet
-    else if (present.isEmpty) Set.empty
-    else Inference.classify(data, present).categoricalCols
-  }
+  /** The classification, if it is already computed. */
+  private[graft] def computedClassification: Option[ColumnClassification] =
+    if (classified) Some(classification) else None
 
   /** numerical ∪ bool − constant − metadata (reference dataset.py:358-360) */
   def medExamColList: Set[String] = {

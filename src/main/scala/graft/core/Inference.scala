@@ -1,6 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+  RowOrdering, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,21 +14,20 @@ import org.apache.spark.sql.types._
   *
   * The reference computes its classification with N independent full
   * scans per column (nunique, infer_dtype, unique — reference
-  * dataset.py:267,339-341,528). Here the default (approx) strategy runs
-  * two CONCURRENT aggregations over the frame, whatever the column
-  * count: the counters (~7 aggregate expressions per column, one
-  * codegen'd HashAggregate) and the HLL distinct counts, each partially
-  * aggregated map-side. Each is a map stage plus a final stage, so a
-  * listener sees 4 Spark jobs (`Inference.classify: counters` and
-  * `Inference.classify: distinct counts`). `exact = true` runs one
+  * dataset.py:267,339-341,528). Here the default (approx) strategy is
+  * ONE Spark job with no exchange, whatever the column count: a
+  * codegen'd projection carries each column's value, its castability
+  * and its {0,1} flag ([[statsColumns]]), each task folds its rows into
+  * [[Counters]], and the driver merges the task results. The job is
+  * named `Inference.classify: <columns>`. `exact = true` runs one
   * narrow-pair aggregation instead.
   *
   * Scale note (100 TB): with `exact = false` (default) distinct counts
-  * use HyperLogLog (`approx_count_distinct`) which keeps the plan free
-  * of the `Expand`-based multi-count-distinct rewrite (that rewrite
-  * multiplies scan output by the number of distinct aggregates — fatal
-  * at scale). Constant detection never needs a distinct count: a column
-  * is constant-including-null iff (no nulls ∧ min == max) ∨ (all null).
+  * are Spark's own HyperLogLog++ sketch (`approx_count_distinct`'s
+  * aggregate, folded by hand), so no multi-count-distinct rewrite and
+  * no shuffle: a task ships a few counters and 52 longs per column.
+  * Constant detection never needs a distinct count: a column is
+  * constant-including-null iff (no nulls ∧ min == max) ∨ (all null).
   */
 object Inference {
 
@@ -32,103 +36,157 @@ object Inference {
     case _              => false
   }
 
-  /** Aggregate expressions for one column; must stay aligned with the
-    * unpacking in [[classify]].
-    *
-    * NO distinct count here — on purpose, twice over: N exact
-    * `countDistinct`s in one agg trigger Catalyst's Expand-based
-    * multi-distinct rewrite (scan output × N+1 — fatal at scale), and
-    * even the HLL sketch is a TypedImperativeAggregate, which forces
-    * the WHOLE operator onto ObjectHashAggregate and knocks every other
-    * counter out of whole-stage codegen. Distinct counts run as their
-    * own concurrent job(s) — see [[classify]] — keeping this pass a
-    * fully codegen'd HashAggregate.
+  /** The projection [[Counters]] folds: three columns per field, at
+    * ordinals 3i (the value), 3i + 1 (castable to double: strings
+    * through [[graft.functions.SafeCast]], every other type true) and
+    * 3i + 2 (the value is one of {0, 1} — as a number for numeric
+    * types, as its string otherwise; booleans always are).
     */
-  private def statsExprs(field: StructField): Seq[Column] = {
-    val c           = col(field.name)
-    val notNull     = count(c) // count(col) skips nulls
-    val hasNull = max(c.isNull.cast("int"))
-    // min==max on the column's NATIVE type — only the boolean survives
-    // into the row, so no uniform-type cast is needed, and no per-value
-    // double→string formatting (which dominated the pass at sf0.1).
-    val constNonNull = (min(c) <=> max(c)).cast("int")
-    val castable = field.dataType match {
-      case StringType =>
-        count(when(graft.functions.SafeCast.tryCastDouble(c).isNotNull, 1))
-      case _          => notNull
+  private[graft] def statsColumns(fields: Seq[StructField]): Seq[Column] =
+    fields.zipWithIndex.flatMap { case (field, i) =>
+      val c = col(field.name)
+      val castable = field.dataType match {
+        case StringType =>
+          graft.functions.SafeCast.tryCastDouble(c).isNotNull
+        case _          => lit(true)
+      }
+      val zeroOne = field.dataType match {
+        case BooleanType             => lit(true)
+        case dt if isNumericType(dt) => c === 0 || c === 1
+        case _ => c.cast("string")
+          .isin("0", "1", "0.0", "1.0", "true", "false")
+      }
+      Seq(c.as(s"__s$i"), castable.as(s"__c$i"), zeroOne.as(s"__z$i"))
     }
-    val zeroOne = field.dataType match {
-      case BooleanType => lit(1)
-      case dt if isNumericType(dt) =>
-        min(when(c.isNotNull, (c === 0 || c === 1).cast("int")))
-      case _ =>
-        min(when(c.isNotNull, c.cast("string")
-          .isin("0", "1", "0.0", "1.0", "true", "false").cast("int")))
+
+  /** The approx counters of k columns of the [[statsColumns]]
+    * projection: one task's rows ([[add]]), or every task's
+    * ([[merge]] on the driver).
+    *
+    *  - total, non-null, castable counts; has-null; all non-null
+    *    values in {0, 1};
+    *  - the first non-null value and whether every other one equals it
+    *    under the type's ordering — what `min(c) <=> max(c)` decides
+    *    (NaN equals NaN, -0.0 equals 0.0, collations compare by
+    *    collation);
+    *  - one buffer of Spark's `HyperLogLogPlusPlus` aggregate at the
+    *    default relative error, so the estimate is
+    *    `approx_count_distinct`'s, bit for bit.
+    */
+  private[graft] final class Counters(types: Array[DataType])
+      extends Serializable {
+    private val k = types.length
+    private var total = 0L
+    private val nn, cab = new Array[Long](k)
+    private val hn = new Array[Boolean](k)
+    private val zo, allEqual = Array.fill(k)(true)
+    private val first = new Array[Any](k)
+    @transient private lazy val hlls = types.indices.map { i =>
+      val h = new HyperLogLogPlusPlus(
+        BoundReference(3 * i, types(i), nullable = true))
+      h.withNewMutableAggBufferOffset(i * h.aggBufferAttributes.size)
+        .withNewInputAggBufferOffset(i * h.aggBufferAttributes.size)
     }
-    Seq(
-      notNull.cast("long").as(s"${field.name}__nn"),
-      hasNull.cast("int").as(s"${field.name}__hn"),
-      constNonNull.as(s"${field.name}__cst"),
-      castable.cast("long").as(s"${field.name}__cast"),
-      zeroOne.cast("int").as(s"${field.name}__zo")
-    )
+    // per column, on its second non-null value: a void column has none
+    @transient private lazy val orderings =
+      new Array[Ordering[Any]](k)
+    private def ordering(i: Int): Ordering[Any] = {
+      if (orderings(i) == null)
+        orderings(i) = TypeUtils.getInterpretedOrdering(types(i))
+      orderings(i)
+    }
+    private val sketches = new SpecificInternalRow(
+      hlls.flatMap(_.aggBufferAttributes.map(_.dataType)))
+    hlls.foreach(_.initialize(sketches))
+
+    def add(r: InternalRow): Unit = {
+      total += 1
+      var i = 0
+      while (i < k) {
+        val at = 3 * i
+        if (r.isNullAt(at)) hn(i) = true
+        else {
+          nn(i) += 1
+          if (r.getBoolean(at + 1)) cab(i) += 1
+          if (!r.getBoolean(at + 2)) zo(i) = false
+          hlls(i).update(sketches, r)
+          if (first(i) == null)
+            first(i) = InternalRow.copyValue(r.get(at, types(i)))
+          else if (allEqual(i) &&
+              ordering(i).compare(first(i), r.get(at, types(i))) != 0)
+            allEqual(i) = false
+        }
+        i += 1
+      }
+    }
+
+    def merge(o: Counters): Unit = {
+      total += o.total
+      for (i <- 0 until k) {
+        nn(i) += o.nn(i)
+        cab(i) += o.cab(i)
+        hn(i) ||= o.hn(i)
+        zo(i) &&= o.zo(i)
+        if (first(i) == null) {
+          first(i) = o.first(i)
+          allEqual(i) = o.allEqual(i)
+        } else if (o.first(i) != null)
+          allEqual(i) &&= o.allEqual(i) &&
+            ordering(i).compare(first(i), o.first(i)) == 0
+        hlls(i).merge(sketches, o.sketches)
+      }
+    }
+
+    private[core] def raw: Seq[RawStats] = (0 until k).map { i =>
+      RawStats(total, nn(i), hlls(i).eval(sketches).asInstanceOf[Long],
+        hn(i), allEqual(i), cab(i), zo(i) && nn(i) > 0)
+    }
   }
 
-  /** Monotonic counter of distinct-count JOBS submitted — lets specs
-    * pin the fused-exact contract (one distinct job per classify call,
-    * not one per column) without depending on AQE-sensitive Spark job
-    * counts.
+  /** Monotonic counter of classification scans that count distinct
+    * values — lets specs pin one per classify call (not one per
+    * column), and the reuse of a computed classification, without
+    * depending on AQE-sensitive Spark job counts.
     */
   private[graft] val distinctJobCount =
     new java.util.concurrent.atomic.AtomicLong
 
   /** Raw per-column counters, produced by either scan strategy. */
-  private case class RawStats(total: Long, nn: Long, nd: Long,
+  private[core] case class RawStats(total: Long, nn: Long, nd: Long,
       hn: Boolean, cst: Boolean, cab: Long, zo: Boolean)
 
-  /** Approx strategy (default): two aggregations, submitted
-    * CONCURRENTLY (each a map stage and a final stage) — the
-    * fused codegen counter pass ([[statsExprs]]) and one HLL-only
-    * aggregate for distinct counts (isolated because the HLL sketch is
-    * a TypedImperativeAggregate that would knock the counters out of
-    * whole-stage codegen). Neither shuffles data-scale rows: both
-    * are map-side partial aggregates. This is the 100 TB path.
+  /** The fields of `df` named in `cols` (every field when empty), for
+    * the approx counters: a type Spark cannot order (a map) is refused
+    * with the analysis error of the `min` that decides constancy. */
+  private[graft] def approxFields(df: DataFrame, cols: Seq[String])
+      : Seq[StructField] = {
+    val fields = fieldsOf(df, cols)
+    fields.filterNot(f => RowOrdering.isOrderable(f.dataType))
+      .foreach(f => df.select(min(col(f.name))))
+    fields
+  }
+
+  private def fieldsOf(df: DataFrame, cols: Seq[String])
+      : Seq[StructField] =
+    if (cols.isEmpty) df.schema.fields.toSeq
+    else df.schema.fields.toSeq.filter(f => cols.contains(f.name))
+
+  /** Approx strategy (default): the one-job fold of [[Counters]]. No
+    * exchange: the 100 TB path.
     */
   private def approxRawStats(df: DataFrame, fields: Seq[StructField])
-      : Map[String, RawStats] = {
-    val sc = df.sparkSession.sparkContext
-    val aggs = count(lit(1)).cast("long").as("__total") +:
-      fields.flatMap(statsExprs)
-    val step = "Inference.classify"
-    val mainF = DriverJobs.fork(sc, s"$step: counters")(
-      df.agg(aggs.head, aggs.tail: _*).collect()(0))
-    val distinctF = DriverJobs.fork(sc, s"$step: distinct counts") {
-      distinctJobCount.incrementAndGet()
-      // An HLL++ buffer is 52 longs per column (relativeSD 0.05), so the
-      // partial aggregate outputs over 25 fields, and Spark's plan string
-      // for the SQL execution event logs its once-per-JVM "Truncated the
-      // string representation of a plan" warning. A one-field sketch
-      // (`hll_sketch_agg`) would drop it but change the estimates.
-      val hlls = fields.map(f =>
-        approx_count_distinct(col(f.name)).cast("long")
-          .as(s"${f.name}__nd"))
-      val r = df.agg(hlls.head, hlls.tail: _*).collect()(0)
-      fields.map(f => f.name -> r.getAs[Long](s"${f.name}__nd")).toMap
-    }
-    val row: Row  = DriverJobs.join(mainF)
-    val distincts = DriverJobs.join(distinctF)
-    val total     = row.getAs[Long]("__total")
-    fields.map { f =>
-      f.name -> RawStats(
-        total = total,
-        nn  = row.getAs[Long](s"${f.name}__nn"),
-        nd  = distincts(f.name),
-        hn  = Option(row.getAs[Any](s"${f.name}__hn")).exists(_ == 1),
-        cst = Option(row.getAs[Any](s"${f.name}__cst")).exists(_ == 1),
-        cab = Option(row.getAs[Any](s"${f.name}__cast"))
-          .map(_.asInstanceOf[Long]).getOrElse(0L),
-        zo  = Option(row.getAs[Any](s"${f.name}__zo")).exists(_ == 1))
-    }.toMap
+      : Map[String, RawStats] = if (fields.isEmpty) Map.empty else {
+    val types = fields.map(_.dataType).toArray
+    val all = new Counters(types)
+    distinctJobCount.incrementAndGet()
+    DriverJobs.scan(df.select(statsColumns(fields): _*),
+        s"Inference.classify: ${fields.map(_.name).mkString(",")}",
+        "classification") { rows =>
+      val c = new Counters(types)
+      rows.foreach(c.add)
+      c
+    }(all.merge)
+    fields.map(_.name).zip(all.raw).toMap
   }
 
   /** Exact strategy: ONE job, one scan, regardless of column count.
@@ -218,7 +276,7 @@ object Inference {
             cst = r.getAs[Long]("nd") == 1L,
             // castability-to-numeric only means something for string
             // columns; others count every non-null as castable, the
-            // same contract as [[statsExprs]]
+            // same contract as [[statsColumns]]
             cab = f.dataType match {
               case StringType => r.getAs[Long]("cab")
               case _          => nn
@@ -230,24 +288,35 @@ object Inference {
 
   /** Classify every column of `df` (or `cols` if given).
     *
-    * `exact = false` (default) runs the two-concurrent-job approx
-    * strategy — shuffle-free, HLL distincts, the right shape at
-    * 100 TB. `exact = true` runs ONE narrow-pair job whose shuffle is
-    * the sum of per-column distinct counts — exact answers at the
-    * inherent exact price, but never N scans or N jobs for N columns.
+    * `exact = false` (default) runs the one-job approx strategy —
+    * shuffle-free, HLL distincts, the right shape at 100 TB (no job
+    * when no column is named). `exact = true` runs ONE narrow-pair job
+    * whose shuffle is the sum of per-column distinct counts — exact
+    * answers at the inherent exact price, but never N scans or N jobs
+    * for N columns.
     */
   def classify(
       df: DataFrame,
       cols: Seq[String] = Seq.empty,
       exact: Boolean = false
   ): ColumnClassification = {
-    val fields =
-      if (cols.isEmpty) df.schema.fields.toSeq
-      else df.schema.fields.toSeq.filter(f => cols.contains(f.name))
-    val raw =
-      if (exact) exactRawStats(df, fields)
-      else approxRawStats(df, fields)
+    if (exact) {
+      val fields = fieldsOf(df, cols)
+      classification(fields, exactRawStats(df, fields))
+    } else {
+      val fields = approxFields(df, cols)
+      classification(fields, approxRawStats(df, fields))
+    }
+  }
 
+  /** The classification of `fields` from counters a fused job gathered
+    * with [[statsColumns]] and [[Counters]]. */
+  private[graft] def classification(fields: Seq[StructField],
+      counters: Counters): ColumnClassification =
+    classification(fields, fields.map(_.name).zip(counters.raw).toMap)
+
+  private def classification(fields: Seq[StructField],
+      raw: Map[String, RawStats]): ColumnClassification = {
     val stats = fields.map { f =>
       val r = raw(f.name)
       val allNull  = r.nn == 0L

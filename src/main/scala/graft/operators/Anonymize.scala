@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark design: the nonce is generated on the DRIVER and baked in as a
   * literal, so digests are reproducible across executors and runs for a
-  * fixed seed (SURVEY.md §7.4 risk 6). The private-info dimension is the
-  * deduplicated projection — small by construction — so the join is an
-  * explicit broadcast hash join: no shuffle of the fact table.
+  * fixed seed (SURVEY.md §7.4 risk 6). The hashed columns are private
+  * columns, so a row's `ID_OWNER` depends only on its own values: the
+  * anonymized frame is one per-row projection, with no dimension to
+  * dedup and no join back (and so no exchange).
   */
 object Anonymize {
 
@@ -51,16 +52,26 @@ object Anonymize {
   }
 
   /** Full anonymization flow (anonymize_database.py:127-206):
-    * fill nulls in private cols → dedup dimension + hash → broadcast
-    * natural join → drop private cols. Returns (anonymized, privateInfo).
+    * fill nulls in private cols → hash each row's private values → drop
+    * private cols. Returns (anonymized, privateInfo); the private-info
+    * dimension stays a lazy frame, run only if the caller uses it.
+    *
+    * The reference's natural join back drops a row with a null private
+    * value, which only a non-string column (the fill is string-only)
+    * can still hold; the filter keeps that. One difference from a join:
+    * values the join matched but that differ as strings (-0.0 and 0.0)
+    * each hash their own string here, where the join hashed whichever
+    * of them the dedup kept.
     */
   def anonymize(df: DataFrame, privateCols: Seq[String],
       colsToHash: Seq[String], seed: Long = 42L)
       : (DataFrame, DataFrame) = {
-    val filled  = df.na.fill("----", privateCols)
-    val priv    = privateInfoDf(filled, privateCols, colsToHash, seed)
-    val anonym  = filled
-      .join(broadcast(priv), privateCols, "inner")
+    val filled = df.na.fill("----", privateCols)
+    val priv   = privateInfoDf(filled, privateCols, colsToHash, seed)
+    val (pre, suf) = nonce(seed)
+    val anonym = filled
+      .filter(privateCols.map(col(_).isNotNull).foldLeft(lit(true))(_ && _))
+      .withColumn("ID_OWNER", idOwnerExpr(colsToHash, pre, suf))
       .drop(privateCols: _*)
     (anonym, priv)
   }

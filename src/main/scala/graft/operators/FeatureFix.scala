@@ -2,14 +2,14 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, classic}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.NumericType
+import org.apache.spark.sql.types.{NumericType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{DriverJobs, GraftDataset}
+import graft.core.{ColumnClassification, DriverJobs, GraftDataset,
+  Inference}
 
 /** Shared bounded-dictionary fit: the sorted distinct non-null values
   * of k expressions (cast to string), collected to the driver with a
@@ -19,8 +19,9 @@ import graft.core.{DriverJobs, GraftDataset}
   * categorical column the size is bounded by the classification
   * heuristic (≤ n/300), but nothing else CHECKS — one-hot on a
   * high-cardinality key column would OOM the driver and emit a million
-  * columns. The fit is ONE Spark job with no exchange, whatever k is
-  * (none when k = 0), named `"<step>: fit <names>"`:
+  * columns. The fit is ONE Spark job with no exchange
+  * ([[DriverJobs.scan]]), whatever k is (none when k = 0), named
+  * `"<step>: fit <names>"`:
   *
   *  - each task scans its partition once and keeps one hash set per
   *    expression, copying a value only when it is unseen; a set stops
@@ -36,8 +37,8 @@ import graft.core.{DriverJobs, GraftDataset}
   *    `orderBy` on the cast column (Java `String` order is not: it puts
   *    U+1F600 before U+FFFD).
   *
-  * The job runs inside its own SQL execution, so query listeners see it
-  * like any action.
+  * [[classifyAndFit]] folds the approx classification of some columns
+  * ([[Inference.Counters]]) into the same scan.
   */
 private[graft] object DictionaryFit {
   val DefaultMaxCategories = 10000
@@ -50,58 +51,95 @@ private[graft] object DictionaryFit {
 
   /** The dictionary of each `(column name, expression)`, in order. */
   def fit(df: DataFrame, step: String, exprs: Seq[(String, Column)],
-      max: Int = DefaultMaxCategories): Seq[Seq[String]] = {
-    if (exprs.isEmpty) return Seq.empty
-    fitCount.incrementAndGet()
-    val k = exprs.size
-    val qe = df.select(exprs.zipWithIndex.map { case ((_, e), i) =>
-        e.cast("string").as(s"__v$i") }: _*)
-      .asInstanceOf[classic.Dataset[Row]].queryExecution
-    val merged = Array.fill(k)(new java.util.HashSet[UTF8String])
-    val sc = df.sparkSession.sparkContext
-    DriverJobs.described(sc,
-        s"$step: fit ${exprs.map(_._1).mkString(",")}") {
-      SQLExecution.withNewExecutionId(qe, Some("dictionary fit")) {
-        sc.runJob(qe.toRdd,
-          (rows: Iterator[InternalRow]) => distinctUpTo(rows, k, max),
-          (_: Int, sets: Array[Array[UTF8String]]) =>
-            for (i <- 0 until k; v <- sets(i) if merged(i).size <= max)
-              merged(i).add(v))
-      }
+      max: Int = DefaultMaxCategories): Seq[Seq[String]] =
+    if (exprs.isEmpty) Seq.empty
+    else scan(df, s"$step: fit ${names(exprs)}", Nil, exprs, max)._2
+      .dictionaries(exprs.map(_._1))
+
+  /** The approx classification of the columns `cols` names
+    * ([[Inference.classify]]'s) and a thunk for the dictionaries of
+    * `exprs` ([[fit]]'s), from one job named `"<step>: classify
+    * <cols>, fit <names>"`. The thunk refuses an overflowing
+    * dictionary, so a caller can refuse the classification first. */
+  def classifyAndFit(df: DataFrame, step: String, cols: Seq[String],
+      exprs: Seq[(String, Column)], max: Int = DefaultMaxCategories)
+      : (ColumnClassification, () => Seq[Seq[String]]) = {
+    val fields = Inference.approxFields(df, cols)
+    val fitted = if (exprs.isEmpty) "" else s", fit ${names(exprs)}"
+    Inference.distinctJobCount.incrementAndGet()
+    val (counters, sets) = scan(df,
+      s"$step: classify ${fields.map(_.name).mkString(",")}$fitted",
+      fields, exprs, max)
+    (Inference.classification(fields, counters),
+      () => sets.dictionaries(exprs.map(_._1)))
+  }
+
+  private def names(exprs: Seq[(String, Column)]): String =
+    exprs.map(_._1).mkString(",")
+
+  /** One job over `df`: the classification counters of `fields` and the
+    * distinct values of `exprs`, from one projection. */
+  private def scan(df: DataFrame, desc: String, fields: Seq[StructField],
+      exprs: Seq[(String, Column)], max: Int): (Inference.Counters, Sets) = {
+    if (exprs.nonEmpty) fitCount.incrementAndGet()
+    val types = fields.map(_.dataType).toArray
+    val (at, k) = (3 * fields.size, exprs.size)
+    val all = (new Inference.Counters(types), new Sets(at, k, max))
+    DriverJobs.scan(df.select(Inference.statsColumns(fields) ++
+        exprs.zipWithIndex.map { case ((_, e), i) =>
+          e.cast("string").as(s"__v$i") }: _*), desc,
+        if (exprs.isEmpty) "classification" else "dictionary fit") { rows =>
+      val (counters, sets) = (new Inference.Counters(types),
+        new Sets(at, k, max))
+      rows.foreach { r => counters.add(r); sets.add(r) }
+      (counters, sets)
+    } { case (counters, sets) =>
+      all._1.merge(counters)
+      all._2.merge(sets)
     }
-    exprs.zip(merged).foreach { case ((name, _), set) =>
-      if (set.size > max)
-        throw new IllegalArgumentException(
-          s"dictionary fit of $name exceeded $max distinct values — the " +
-          "column is not categorical; refusing to collect an unbounded " +
-          "dictionary to the driver (reference only encodes categorical " +
-          "columns, dataset.py:493-535)")
-    }
-    merged.toSeq.map(_.asScala.toSeq.sortWith(_.binaryCompare(_) < 0)
-      .map(_.toString))
+    all
   }
 
   /** value → index in a fitted dictionary. */
   def ordinals(dict: Seq[String]): Map[String, Long] =
     dict.zipWithIndex.map { case (v, i) => (v, i.toLong) }.toMap
 
-  /** One task's distinct non-null values of each of the k string
-    * columns, at most `max + 1` each. */
-  private def distinctUpTo(rows: Iterator[InternalRow], k: Int,
-      max: Int): Array[Array[UTF8String]] = {
-    val seen = Array.fill(k)(new java.util.HashSet[UTF8String])
-    rows.foreach { r =>
+  /** The distinct non-null values of the k string columns at ordinals
+    * `at` to `at + k - 1`, at most `max + 1` each: one task's rows
+    * ([[add]]) or every task's ([[merge]] on the driver). */
+  private final class Sets(at: Int, k: Int, max: Int) extends Serializable {
+    private val seen = Array.fill(k)(new java.util.HashSet[UTF8String])
+
+    def add(r: InternalRow): Unit = {
       var i = 0
       while (i < k) {
-        if (!r.isNullAt(i) && seen(i).size <= max) {
-          val v = r.getUTF8String(i)
+        if (!r.isNullAt(at + i) && seen(i).size <= max) {
+          val v = r.getUTF8String(at + i)
           // the row's bytes are reused: copy only an unseen value
           if (!seen(i).contains(v)) seen(i).add(v.copy())
         }
         i += 1
       }
     }
-    seen.map(_.toArray(Array.empty[UTF8String]))
+
+    def merge(o: Sets): Unit =
+      for (i <- 0 until k; v <- o.seen(i).asScala if seen(i).size <= max)
+        seen(i).add(v)
+
+    /** Each sorted dictionary, or the refusal of the first column that
+      * passed `max`. */
+    def dictionaries(names: Seq[String]): Seq[Seq[String]] = {
+      names.zip(seen).foreach { case (name, set) =>
+        if (set.size > max)
+          throw new IllegalArgumentException(
+            s"dictionary fit of $name exceeded $max distinct values — " +
+            "the column is not categorical; refusing to collect an " +
+            "unbounded dictionary to the driver (reference only encodes " +
+            "categorical columns, dataset.py:493-535)")
+      }
+      seen.toSeq.map(_.asScala.toSeq.sortWith(_.binaryCompare(_) < 0)
+        .map(_.toString))
+    }
   }
 }
 
@@ -220,7 +258,8 @@ object EncodeSingleCategorical {
   * every string-categorical column per the classification when none
   * are given. Non-categorical requested columns are rejected (the
   * reference only logs — we fail loudly, SURVEY.md §2.11 port decision);
-  * given columns are classified alone, unless the dataset's whole
+  * given columns are classified alone, in the fit's own job
+  * ([[DictionaryFit.classifyAndFit]]), unless the dataset's whole
   * classification is already computed.
   */
 object FeatureFix {
@@ -230,25 +269,42 @@ object FeatureFix {
       method: String = "ordinal",
       caseSensitive: Boolean = false
   ): GraftDataset = {
-    val targets =
-      if (columns.isEmpty)
-        ds.classification.strCategoricalCols.toSeq.sorted
-      else {
-        val nonCateg =
-          columns.toSet -- ds.categoricalAmong(columns)
-        require(nonCateg.isEmpty,
-          s"non-categorical columns requested: ${nonCateg.toSeq.sorted}")
-        columns
-      }
-    // One fit job for every column that is not skipped (a skipped
-    // encode stays skipped, as the fold only adds columns); each op then
+    val step = "FeatureFix.encodeMultiCategorical"
+    // One fit for every column that is not skipped (a skipped encode
+    // stays skipped, as the fold only adds columns); each op then
     // carries its categoriesOut, so the fold applies without re-fitting
     // and records the same op copy a one-by-one apply records.
-    val toFit = targets.map(EncodeSingleCategorical(_, method, caseSensitive))
-      .filterNot(_.shouldSkip(ds.data))
-    toFit.zip(DictionaryFit.fit(ds.data, "FeatureFix.encodeMultiCategorical",
-        toFit.map(op => op.column -> op.normExpr)))
-      .map { case (op, cats) => op.copy(categoriesOut = cats) }
+    def encoders(cols: Seq[String]) =
+      cols.map(EncodeSingleCategorical(_, method, caseSensitive))
+        .filterNot(_.shouldSkip(ds.data))
+    def exprs(ops: Seq[EncodeSingleCategorical]) =
+      ops.map(op => op.column -> op.normExpr)
+    def refuse(categorical: Set[String]): Unit = {
+      val nonCateg = columns.toSet -- categorical
+      require(nonCateg.isEmpty,
+        s"non-categorical columns requested: ${nonCateg.toSeq.sorted}")
+    }
+    val fitted = ds.computedClassification match {
+      case None if columns.nonEmpty =>
+        val present = columns.filter(ds.data.columns.contains)
+        if (present.isEmpty) refuse(Set.empty)
+        val ops = encoders(present)
+        val (cls, dicts) = DictionaryFit.classifyAndFit(ds.data, step,
+          present, exprs(ops))
+        refuse(cls.categoricalCols)
+        ops.zip(dicts())
+      case _ =>
+        val cls = ds.classification
+        val targets =
+          if (columns.isEmpty) cls.strCategoricalCols.toSeq.sorted
+          else {
+            refuse(cls.categoricalCols)
+            columns
+          }
+        val ops = encoders(targets)
+        ops.zip(DictionaryFit.fit(ds.data, step, exprs(ops)))
+    }
+    fitted.map { case (op, cats) => op.copy(categoriesOut = cats) }
       .foldLeft(ds)((d, op) => op(d))
   }
 }

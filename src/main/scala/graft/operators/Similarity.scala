@@ -356,13 +356,17 @@ object Similarity {
     // count of the same frame BEFORE the fit) and owns the unpersist.
     val cached = if (managePersist) cq.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else cq
+    val sc = cq.sparkSession.sparkContext
+    def step[T](what: String)(body: => T): T =
+      graft.core.DriverJobs.described(sc,
+        s"Similarity.fitCentroidsKMeans: $what")(body)
     try {
-      var cents: Array[Seq[Long]] = cached
+      var cents: Array[Seq[Long]] = step("seed")(cached
         .orderBy(md5(col(idCol).cast("string")), col(idCol))
         .limit(nCentroids)
-        .select(col(vecCol)).collect().map(_.getSeq[Long](0))
+        .select(col(vecCol)).collect().map(_.getSeq[Long](0)))
       require(cents.nonEmpty, "corpus is empty")
-      for (_ <- 0 until iters) {
+      for (i <- 0 until iters) {
         // ONE aggregation: partial (map-side) combine reduces every
         // partition to <= nCentroids rows of (count, component sums)
         // before the exchange — the corpus vectors themselves never
@@ -370,14 +374,14 @@ object Similarity {
         // composed dim × sum(element_at) form re-compiled a huge
         // codegen unit EVERY iteration (the centroid literals change),
         // ~1 s per iteration of pure janino at any data size.
-        val upd = cached
+        val upd = step(s"iteration $i")(cached
           .withColumn("__list",
             IvfCentroids.nearestList(col(vecCol), cents))
           .groupBy("__list")
           .agg(count(lit(1)).as("__cnt"),
             graft.functions.NativeHash.vecSumColumn(col(vecCol))
               .as("__sums"))
-          .collect()
+          .collect())
         val next = cents.clone()
         upd.foreach { r =>
           val li = r.getAs[Int]("__list")

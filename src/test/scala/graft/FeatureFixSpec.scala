@@ -174,4 +174,37 @@ class FeatureFixSpec extends SparkSpec {
     assert(e.getMessage.contains("non-categorical columns requested: " +
       "List(nope)"))
   }
+
+  test("encodeMultiCategorical on an unclassified dataset classifies " +
+      "and fits in one job") {
+    val d = spark.range(0, 300, 1, 3).select(
+      concat(lit("r"), (col("id") % 3).cast("string")).as("r"),
+      concat(lit("s"), (col("id") % 2).cast("string")).as("s"),
+      col("id"))
+    val fits = DictionaryFit.fitCount.get()
+    val classifies = Inference.distinctJobCount.get()
+    val (out, jobs) = JobFence.during(spark.sparkContext)(
+      FeatureFix.encodeMultiCategorical(GraftDataset(d), Seq("r", "s")))
+    assert(jobs.map(j => (j.description.orNull, j.stages)) == Seq(
+      ("FeatureFix.encodeMultiCategorical: classify r,s, fit r,s", 1)))
+    assert(DictionaryFit.fitCount.get() - fits == 1L)
+    assert(Inference.distinctJobCount.get() - classifies == 1L)
+    // the same dictionaries and output as the classified dataset's fit
+    val ds = GraftDataset(d)
+    ds.classification
+    val again = FeatureFix.encodeMultiCategorical(ds, Seq("r", "s"))
+    assert(again.history.ops == out.history.ops)
+    assert(again.data.collect().toSeq == out.data.collect().toSeq)
+  }
+
+  test("a requested column that is non-categorical AND over the " +
+      "dictionary bound is refused as non-categorical") {
+    val d = (1 to 20001).map(i => ("v" + i, "x")).toDF("big", "small")
+    val e = intercept[IllegalArgumentException] {
+      FeatureFix.encodeMultiCategorical(GraftDataset(d),
+        Seq("small", "big"))
+    }
+    assert(e.getMessage.contains(
+      "non-categorical columns requested: List(big)"), e.getMessage)
+  }
 }

@@ -1,9 +1,137 @@
 package graft
 
-import graft.core.{ColumnKind, Inference}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.core.{ColumnKind, ColumnStats, Inference}
 
 class InferenceSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The approx classification's ColumnStats as two aggregations
+    * computed them before the one-job fold: the counters with
+    * `min(c) <=> max(c)` for constancy, and `approx_count_distinct`
+    * for the distinct counts. */
+  private def twoAggregations(df: DataFrame): Map[String, ColumnStats] = {
+    val fields = df.schema.fields.toSeq
+    def counters(f: StructField): Seq[Column] = {
+      val c = col(f.name)
+      val castable = f.dataType match {
+        case StringType =>
+          count(when(graft.functions.SafeCast.tryCastDouble(c).isNotNull,
+            1))
+        case _ => count(c)
+      }
+      val zeroOne = f.dataType match {
+        case BooleanType => lit(1)
+        case _: NumericType =>
+          min(when(c.isNotNull, (c === 0 || c === 1).cast("int")))
+        case _ =>
+          min(when(c.isNotNull, c.cast("string")
+            .isin("0", "1", "0.0", "1.0", "true", "false").cast("int")))
+      }
+      Seq(count(c).cast("long"), max(c.isNull.cast("int")),
+        (min(c) <=> max(c)).cast("int"), castable.cast("long"),
+        zeroOne.cast("int"))
+    }
+    val aggs = count(lit(1)).cast("long") +: fields.flatMap(counters)
+    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val hlls = fields.map(f => approx_count_distinct(col(f.name)))
+    val d = df.agg(hlls.head, hlls.tail: _*).collect()(0)
+    def flag(i: Int) = !r.isNullAt(i) && r.getInt(i) == 1
+    fields.zipWithIndex.map { case (f, i) =>
+      val at = 1 + 5 * i
+      val nn = r.getLong(at)
+      f.name -> ColumnStats(f.name, f.dataType.sql, r.getLong(0), nn,
+        d.getLong(i), flag(at + 1),
+        nn == 0L || (!flag(at + 1) && flag(at + 2)),
+        if (r.isNullAt(at + 3)) 0L else r.getLong(at + 3),
+        flag(at + 4) && nn > 0)
+    }.toMap
+  }
+
+  /** A frame of every atomic and nested type classify reads, over five
+    * partitions: NaN, -0.0/0.0 and nulls in every numeric column,
+    * {0,1}-valued, all-null and constant columns (constant under the
+    * type's equality: -0.0 and 0.0, NaN, "a" and "A" under UTF8_LCASE).
+    */
+  private def everyType: DataFrame = {
+    val id = col("id")
+    def nullAt(m: Int, c: Column) = when(id % m === 0, lit(null))
+      .otherwise(c)
+    def special(c: Column) = when(id % 13 === 0, lit(Double.NaN))
+      .when(id % 17 === 0, lit(-0.0)).when(id % 19 === 0, lit(0.0))
+      .otherwise(c)
+    spark.range(0, 600, 1, 5).select(
+      nullAt(7, (id % 5).cast("int")).as("i"),
+      nullAt(11, id * 1000003L % 97).as("l"),
+      nullAt(23, special((id % 11).cast("double") / 4)).as("d"),
+      nullAt(29, special((id % 9).cast("double") / 2).cast("float"))
+        .as("f"),
+      nullAt(31, (id % 41).cast("decimal(10,2)") / 3).as("dec"),
+      nullAt(6, id % 2 === 0).as("b"),
+      nullAt(8, date_add(lit("2020-01-01").cast("date"),
+        (id % 9).cast("int"))).as("date"),
+      nullAt(9, timestamp_seconds(id % 13 * 3600)).as("ts"),
+      nullAt(10, when(id % 3 === 0, (id % 7).cast("string"))
+        .otherwise(concat(lit("v"), (id % 40).cast("string")))).as("s"),
+      nullAt(12, collate(concat(when(id % 2 === 0, lit("a"))
+        .otherwise(lit("A")), (id % 4).cast("string")), "UTF8_LCASE"))
+        .as("lc"),
+      nullAt(14, concat(lit("b"), (id % 6).cast("string")).cast("binary"))
+        .as("bin"),
+      nullAt(15, array(id % 3, id % 5)).as("arr"),
+      nullAt(16, struct((id % 3).as("x"), lit("y").as("y"))).as("st"),
+      lit(null).cast("string").as("allnull"),
+      lit(null).as("void"),
+      when(id % 2 === 0, lit(-0.0)).otherwise(lit(0.0)).as("zero"),
+      lit(Double.NaN).as("nan"),
+      collate(when(id % 2 === 0, lit("a")).otherwise(lit("A")),
+        "UTF8_LCASE").as("lcconst"),
+      lit(3L).as("const"),
+      nullAt(5, (id % 2).cast("int")).as("zo"),
+      when(id % 3 === 0, lit("true")).otherwise((id % 2).cast("string"))
+        .as("zos"))
+  }
+
+  test("the one-job approx classification equals the two " +
+      "aggregations it replaced, field by field") {
+    val df = everyType
+    val got = Inference.classify(df).stats
+    val want = twoAggregations(df)
+    df.columns.foreach(c => assert(got(c) == want(c), c))
+    // the frame reaches the corners it is built for
+    Seq("zero", "nan", "lcconst", "const", "allnull", "void").foreach(c =>
+      assert(got(c).isConstant, c))
+    Seq("d", "f", "lc", "arr", "st").foreach(c =>
+      assert(!got(c).isConstant, c))
+    assert(got("zo").onlyZeroOne && got("zos").onlyZeroOne)
+    val empty = df.filter(lit(false))
+    assert(Inference.classify(empty).stats == twoAggregations(empty))
+    val one = df.limit(1)
+    assert(Inference.classify(one).stats == twoAggregations(one))
+  }
+
+  test("a map column is refused by the approx classification, with " +
+      "the analysis error of min over a map") {
+    val df = Seq((1, Map("a" -> 1)), (2, Map("b" -> 2))).toDF("k", "m")
+    val e = intercept[AnalysisException](Inference.classify(df))
+    assert(e.getCondition == "DATATYPE_MISMATCH.INVALID_ORDERING_TYPE",
+      e.getMessage)
+    // a classification of the other columns does not read it
+    assert(Inference.classify(df, Seq("k")).stats("k").nDistinct == 2)
+  }
+
+  test("classify starts exactly one job, and names it") {
+    val df = everyType
+    val (_, jobs) = JobFence.during(spark.sparkContext)(
+      Inference.classify(df))
+    assert(jobs.size == 1, jobs)
+    assert(jobs.head.description.exists(_.startsWith("Inference.classify")),
+      jobs)
+    assert(jobs.head.stages == 1, jobs)
+  }
 
   test("kinds: numeric, bool, string, mixed, all-castable string") {
     val df = Seq(
@@ -61,7 +189,6 @@ class InferenceSpec extends SparkSpec {
   }
 
   test("exact=true: -0.0/0.0 collapse, binary and array columns") {
-    import org.apache.spark.sql.functions._
     val df = Seq(
       (-0.0, Array[Byte](1, 2), Seq(1, 2)),
       (0.0, Array[Byte](1, 2), Seq(1, 2)),
@@ -82,7 +209,6 @@ class InferenceSpec extends SparkSpec {
   }
 
   test("exact=true on a 200-column frame: one job, correct counts") {
-    import org.apache.spark.sql.functions._
     val wide = (0 until 200).foldLeft(
       spark.range(1000).toDF("id"))((d, i) =>
       d.withColumn(s"c$i", pmod(col("id") * (i + 1), lit(i + 2))))

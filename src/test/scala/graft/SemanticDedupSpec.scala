@@ -99,4 +99,21 @@ class SemanticDedupSpec extends SparkSpec {
     assert(got == all.filter { case (a, b, _) =>
       (a < 10 && b < 10) || (a >= 10 && b < 20) })
   }
+
+  test("every build job of q_semantic_dedup has a description") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_semantic")
+      .toFile.getPath
+    spark.range(0, 300, 1, 2).select(col("id").as("vec_id"),
+        transform(sequence(lit(1), lit(8)), i =>
+          (pmod(col("id") * i, lit(7)) - 3).cast("float")).as("embedding"),
+        (col("id") % 3).cast("int").as("label"))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val (_, jobs) = JobFence.during(spark.sparkContext) {
+      graft.SparkEntry.queries("q_semantic_dedup")(spark, dir)
+    }
+    val desc = jobs.map(_.description)
+    assert(desc.nonEmpty && desc.forall(_.nonEmpty), desc)
+    assert(desc.flatten.count(
+      _.startsWith("Similarity.fitCentroidsKMeans: ")) >= 3, desc)
+  }
 }
