@@ -36,15 +36,57 @@ object Inference {
     case _              => false
   }
 
+  /** One canonical string per value of a column of type `dt`, null for
+    * null: the exact strategy's distinct key, and the approx strategy's
+    * value for a type Spark cannot order ([[statsValue]]). */
+  private def canonicalKey(c: Column, dt: DataType): Column = dt match {
+    // string cast of raw bytes is lossy (invalid UTF-8 collapses to
+    // replacement chars); base64 is injective
+    case BinaryType => base64(c)
+    // +0.0 normalizes -0.0 (IEEE: -0.0 + 0.0 = +0.0) so the string key
+    // agrees with aggregate semantics, where NormalizeFloatingNumbers
+    // makes -0.0 == 0.0
+    case DoubleType => (c + lit(0d)).cast("string")
+    case FloatType  => (c + lit(0f)).cast("string")
+    // complex types: JSON per value
+    case _: ArrayType | _: StructType =>
+      when(c.isNull, lit(null)).otherwise(to_json(struct(c)))
+    // maps render entries in storage order, so logically-equal maps
+    // with different key order would count as distinct values;
+    // canonicalize by sorting entries on key first. (Maps nested
+    // INSIDE a struct/array keep storage order — same residual caveat
+    // as to_json itself.)
+    case _: MapType =>
+      val sorted = array_sort(map_entries(c), (l, r) =>
+        when(l("key") < r("key"), -1)
+          .when(l("key") > r("key"), 1).otherwise(0))
+      when(c.isNull, lit(null)).otherwise(to_json(struct(sorted)))
+    // atomic casts render one canonical string per value
+    case _ => c.cast("string")
+  }
+
+  /** The value [[Counters]] folds for `field`, and its type: the column
+    * itself, or [[canonicalKey]] when Spark cannot order the type (a
+    * map, or a struct or array holding one), so constancy and the
+    * distinct count read the key. */
+  private def statsValue(field: StructField): (Column, DataType) =
+    if (RowOrdering.isOrderable(field.dataType))
+      (col(field.name), field.dataType)
+    else (canonicalKey(col(field.name), field.dataType), StringType)
+
+  /** The [[Counters]] types of the [[statsColumns]] projection. */
+  private[graft] def statsTypes(fields: Seq[StructField]): Array[DataType] =
+    fields.map(statsValue(_)._2).toArray
+
   /** The projection [[Counters]] folds: three columns per field, at
-    * ordinals 3i (the value), 3i + 1 (castable to double: strings
-    * through [[graft.functions.SafeCast]], every other type true) and
-    * 3i + 2 (the value is one of {0, 1} — as a number for numeric
-    * types, as its string otherwise; booleans always are).
+    * ordinals 3i (the [[statsValue]]), 3i + 1 (castable to double:
+    * strings through [[graft.functions.SafeCast]], every other type
+    * true) and 3i + 2 (the value is one of {0, 1} — as a number for
+    * numeric types, as its string otherwise; booleans always are).
     */
   private[graft] def statsColumns(fields: Seq[StructField]): Seq[Column] =
     fields.zipWithIndex.flatMap { case (field, i) =>
-      val c = col(field.name)
+      val c = statsValue(field)._1
       val castable = field.dataType match {
         case StringType =>
           graft.functions.SafeCast.tryCastDouble(c).isNotNull
@@ -155,18 +197,8 @@ object Inference {
   private[core] case class RawStats(total: Long, nn: Long, nd: Long,
       hn: Boolean, cst: Boolean, cab: Long, zo: Boolean)
 
-  /** The fields of `df` named in `cols` (every field when empty), for
-    * the approx counters: a type Spark cannot order (a map) is refused
-    * with the analysis error of the `min` that decides constancy. */
-  private[graft] def approxFields(df: DataFrame, cols: Seq[String])
-      : Seq[StructField] = {
-    val fields = fieldsOf(df, cols)
-    fields.filterNot(f => RowOrdering.isOrderable(f.dataType))
-      .foreach(f => df.select(min(col(f.name))))
-    fields
-  }
-
-  private def fieldsOf(df: DataFrame, cols: Seq[String])
+  /** The fields of `df` named in `cols` (every field when empty). */
+  private[graft] def fieldsOf(df: DataFrame, cols: Seq[String])
       : Seq[StructField] =
     if (cols.isEmpty) df.schema.fields.toSeq
     else df.schema.fields.toSeq.filter(f => cols.contains(f.name))
@@ -176,7 +208,7 @@ object Inference {
     */
   private def approxRawStats(df: DataFrame, fields: Seq[StructField])
       : Map[String, RawStats] = if (fields.isEmpty) Map.empty else {
-    val types = fields.map(_.dataType).toArray
+    val types = statsTypes(fields)
     val all = new Counters(types)
     distinctJobCount.incrementAndGet()
     DriverJobs.scan(df.select(statsColumns(fields): _*),
@@ -206,35 +238,7 @@ object Inference {
   private def exactRawStats(df: DataFrame, fields: Seq[StructField])
       : Map[String, RawStats] = {
     distinctJobCount.incrementAndGet()
-    val keyed = fields.map { f =>
-      val c = col(f.name)
-      f.dataType match {
-        // string cast of raw bytes is lossy (invalid UTF-8 collapses
-        // to replacement chars); base64 is injective
-        case BinaryType => base64(c)
-        // +0.0 normalizes -0.0 (IEEE: -0.0 + 0.0 = +0.0) so the string
-        // key agrees with aggregate semantics, where
-        // NormalizeFloatingNumbers makes -0.0 == 0.0
-        case DoubleType => (c + lit(0d)).cast("string")
-        case FloatType  => (c + lit(0f)).cast("string")
-        // complex types: JSON per value (structs/arrays; maps are not
-        // group-able in Spark, matching countDistinct's own refusal)
-        case _: ArrayType | _: StructType =>
-          when(c.isNull, lit(null)).otherwise(to_json(struct(c)))
-        // maps render entries in storage order, so logically-equal
-        // maps with different key order would count as distinct values;
-        // canonicalize by sorting entries on key first. (Maps nested
-        // INSIDE a struct/array keep storage order — same residual
-        // caveat as to_json itself.)
-        case _: MapType =>
-          val sorted = array_sort(map_entries(c), (l, r) =>
-            when(l("key") < r("key"), -1)
-              .when(l("key") > r("key"), 1).otherwise(0))
-          when(c.isNull, lit(null)).otherwise(to_json(struct(sorted)))
-        // atomic casts render one canonical string per value
-        case _ => c.cast("string")
-      }
-    }
+    val keyed = fields.map(f => canonicalKey(col(f.name), f.dataType))
     val v = col("__v")
     val castableNum = graft.functions.SafeCast.tryCastDouble(v)
     val perCol = df
@@ -300,13 +304,9 @@ object Inference {
       cols: Seq[String] = Seq.empty,
       exact: Boolean = false
   ): ColumnClassification = {
-    if (exact) {
-      val fields = fieldsOf(df, cols)
-      classification(fields, exactRawStats(df, fields))
-    } else {
-      val fields = approxFields(df, cols)
-      classification(fields, approxRawStats(df, fields))
-    }
+    val fields = fieldsOf(df, cols)
+    classification(fields,
+      if (exact) exactRawStats(df, fields) else approxRawStats(df, fields))
   }
 
   /** The classification of `fields` from counters a fused job gathered

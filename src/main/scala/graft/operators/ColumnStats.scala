@@ -20,6 +20,13 @@ import graft.core.DriverJobs
   */
 object ColumnStats {
 
+  /** Runs `body`, naming the Spark jobs it starts
+    * `"ColumnStats.<op>: <what>"`. */
+  private def step[T](df: DataFrame, op: String, what: String)(
+      body: => T): T =
+    DriverJobs.described(df.sparkSession.sparkContext,
+      s"ColumnStats.$op: $what")(body)
+
   /** The value-count frame with exact global cumulative counts:
     * (`v`, `c`, `cum`, `lo_rank`), materialized (localCheckpoint) so
     * downstream rank joins don't re-run the scan. Returns the frame
@@ -33,8 +40,8 @@ object ColumnStats {
     * value in partition i sorts before partition i+1, so
     * global cum = partition offset + local running sum exactly.
     */
-  private def cumulativeCounts(df: DataFrame, valueCol: String)
-      : (DataFrame, Long) = {
+  private def cumulativeCounts(df: DataFrame, valueCol: String,
+      op: String): (DataFrame, Long) = {
     val vals = df.filter(col(valueCol).isNotNull)
       .select(col(valueCol).cast("double").as("v"))
     // A/B'd r19 and rejected: round-robin fanning `vals` before the
@@ -43,13 +50,13 @@ object ColumnStats {
     // 1.23→1.78, q_quantiles 1.24→1.53, q_describe 1.76→2.59) — the
     // extra exchange carries the same bytes the agg shuffle does, and
     // the map-side hash agg was not the bottleneck.
-    cumulativeFromCounts(vals.groupBy("v").agg(count(lit(1)).as("c")))
+    cumulativeFromCounts(vals.groupBy("v").agg(count(lit(1)).as("c")), op)
   }
 
   /** The range-partitioned cumulative over a PRE-AGGREGATED (`v`, `c`)
     * value-count frame — see [[cumulativeCounts]] for the shape.
     */
-  private def cumulativeFromCounts(counts: DataFrame)
+  private def cumulativeFromCounts(counts: DataFrame, op: String)
       : (DataFrame, Long) = {
     val spark = counts.sparkSession
     import spark.implicits._
@@ -63,7 +70,7 @@ object ColumnStats {
     // offsets cover every pid.
     val totalsAcc = spark.sparkContext
       .collectionAccumulator[(Int, Long)]("graft_part_totals")
-    val local = counts
+    val local = step(counts, op, "cumulative")(counts
       .repartitionByRange(parts, col("v"))
       .sortWithinPartitions("v")
       .as[(Double, Long)]
@@ -82,7 +89,7 @@ object ColumnStats {
           }
         }
       }.toDF("pid", "v", "c", "lcum")
-      .localCheckpoint() // materialize ONCE; all later passes are cheap
+      .localCheckpoint()) // materialize ONCE; all later passes are cheap
     // |partitions| pairs on the driver: a hard bound independent of
     // data volume (same bound as the groupBy+collect this replaces)
     val partTotals = {
@@ -120,7 +127,7 @@ object ColumnStats {
       ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       "quantile points must be in [0, 1]")
-    val (cum, totalN) = cumulativeCounts(df, valueCol)
+    val (cum, totalN) = cumulativeCounts(df, valueCol, "exactQuantiles")
     quantilesFromCumulative(cum, totalN, ps)
   }
 
@@ -178,15 +185,23 @@ object ColumnStats {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       "quantile points must be in [0, 1]")
     require(maxGroupDistinct > 0, "maxGroupDistinct must be positive")
+    groupedExact(df, groupCol, valueCol, ps, maxGroupDistinct,
+      "groupedExactQuantiles")
+  }
+
+  /** [[groupedExactQuantiles]] with its jobs named for `op`. */
+  private def groupedExact(df: DataFrame, groupCol: String,
+      valueCol: String, ps: Seq[Double], maxGroupDistinct: Long,
+      op: String): DataFrame = {
     val vals = df
       .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("double").as("v"))
     // materialized once: referenced by the giant-group probe, both
     // rank joins and any rerouted chains
-    val counts = vals.groupBy("g", "v").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    groupedQuantilesFromCounts(counts, groupCol, ps, maxGroupDistinct)
+    val counts = step(df, op, "value counts")(vals.groupBy("g", "v")
+      .agg(count(lit(1)).as("c")).localCheckpoint())
+    groupedQuantilesFromCounts(counts, groupCol, ps, maxGroupDistinct, op)
   }
 
   /** The per-group quantile machinery over a PRE-AGGREGATED,
@@ -199,17 +214,18 @@ object ColumnStats {
     */
   private def groupedQuantilesFromCounts(counts: DataFrame,
       groupCol: String, ps: Seq[Double],
-      maxGroupDistinct: Long): DataFrame = {
+      maxGroupDistinct: Long, op: String): DataFrame = {
     val spark = counts.sparkSession
     import spark.implicits._
-    val giants = counts.groupBy("g").agg(count(lit(1)).as("__nd"))
+    val giants = step(counts, op, "giant groups")(counts.groupBy("g")
+      .agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") > maxGroupDistinct)
-      .select("g").as[String].collect().toSeq
+      .select("g").as[String].collect().toSeq)
     val grouped = if (giants.isEmpty) counts
       else counts.filter(!col("g").isin(giants: _*))
     val rerouted = giants.map { gv =>
       val (cumG, nG) = cumulativeFromCounts(
-        counts.filter(col("g") === gv).select("v", "c"))
+        counts.filter(col("g") === gv).select("v", "c"), op)
       quantilesFromCumulative(cumG, nG, ps)
         .select(lit(gv).as(groupCol), col("p"), col("quantile"),
           col("n"))
@@ -229,9 +245,10 @@ object ColumnStats {
     val w = Window.partitionBy("g").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // pinned too: the window runs once, not once per rank join
-    val cum = grouped.withColumn("cum", sum("c").over(w))
+    val cum = step(counts, op, "window")(grouped
+      .withColumn("cum", sum("c").over(w))
       .withColumn("lo_rank", col("cum") - col("c"))
-      .localCheckpoint()
+      .localCheckpoint())
     val ns = cum.groupBy("g").agg(sum("c").as("n"))
     val ranked = ns.crossJoin(ps.toDF("p"))
       .withColumn("r", col("p") * (col("n") - lit(1L)).cast("double"))
@@ -272,11 +289,11 @@ object ColumnStats {
     require(accuracy > 0, s"accuracy must be positive, got $accuracy")
     val spark = df.sparkSession
     import spark.implicits._
-    val r = df.agg(
+    val r = step(df, "approxQuantiles", "sketch")(df.agg(
         percentile_approx(col(valueCol).cast("double"),
           array(ps.map(lit): _*), lit(accuracy)).as("qs"),
         count(col(valueCol)).as("n"))
-      .collect()(0)
+      .collect()(0))
     val qs = r.getSeq[Double](0)
     val n  = r.getLong(1)
     ps.zip(qs).map { case (p, q) => (p, q, n) }
@@ -286,11 +303,14 @@ object ColumnStats {
   /** describe() PER GROUP: one row per (group, column) with the same
     * engine-portable arithmetic as [[describeNumeric]] (exact counts
     * and min/max, decimal mean, [[groupedExactQuantiles]] median).
-    * ONE fused grouped scan computes every column's base stats; the
-    * per-column median passes run concurrently. Output: (groupCol,
-    * `column_name`, `n_total`, `n_nonnull`, `min_v`, `max_v`,
-    * `mean_v`, `median_v`). Groups whose column is all-null keep their
-    * base row with a null median.
+    * ONE fused grouped scan computes every column's base stats, and
+    * each column's median runs its own [[groupedExactQuantiles]]
+    * chain; the base stats and the chains run concurrently, for the
+    * reason [[describeNumeric]] gives. Output: (groupCol, `column_name`,
+    * `n_total`, `n_nonnull`, `min_v`, `max_v`, `mean_v`, `median_v`),
+    * the group as a string. Rows whose group is null are dropped;
+    * groups whose column is all-null keep their base row with a null
+    * median.
     */
   def groupedDescribe(df: DataFrame, groupCol: String,
       cols: Seq[String]): DataFrame = {
@@ -302,16 +322,16 @@ object ColumnStats {
       max(col(c)).cast("double").as(s"__max_$c"),
       (sum(col(c).cast("decimal(28,6)")).cast("double") /
         count(col(c))).as(s"__mean_$c")))
-    val step = "ColumnStats.groupedDescribe"
-    val baseF = DriverJobs.fork(sc, s"$step: base stats")(df
+    val op = "groupedDescribe"
+    val baseF = DriverJobs.fork(sc, s"ColumnStats.$op: base stats")(df
       .filter(col(groupCol).isNotNull)
       .groupBy(col(groupCol).cast("string").as("__g"))
       .agg(count(lit(1)).as("__n_total"), aggs: _*)
       .localCheckpoint())
-    val medsF = cols.map(c => DriverJobs.fork(sc, s"$step: median $c")(
-      groupedExactQuantiles(df, groupCol, c, Seq(0.5))
-        .select(col(groupCol).cast("string").as("__g"),
-          col("quantile").as("median_v"))))
+    val medsF = cols.map(c =>
+      DriverJobs.fork(sc, s"ColumnStats.$op: median $c")(
+        groupedExact(df, groupCol, c, Seq(0.5), 2000000L, op)
+          .select(col(groupCol).as("__g"), col("quantile").as("median_v"))))
     val base = DriverJobs.join(baseF)
     val meds = medsF.map(DriverJobs.join)
     cols.zip(meds).map { case (c, med) =>
@@ -334,13 +354,23 @@ object ColumnStats {
     * Shape: ONE fused aggregation scan computes every column's base
     * stats (column-pruned parquet reads each column once — a
     * stacked/long layout was measured slower: it trades the cheap
-    * pruned scans for an all-values shuffle), and the per-column
-    * quantile passes run CONCURRENTLY (each is an independent job
-    * chain; the scheduler overlaps their scans and shuffles the same
-    * way Inference.classify overlaps its distinct counts). The 1-row
-    * base frame is pinned so its k projections don't re-run the scan.
-    * All-null columns are absent from the output (no order statistics
-    * exist).
+    * pruned scans for an all-values shuffle), and each column's median
+    * runs its own range-partitioned [[exactQuantiles]] chain. The base
+    * stats and the k chains run CONCURRENTLY ([[DriverJobs.fork]]): the
+    * scheduler overlaps their scans and shuffles. The 1-row base frame
+    * is pinned so its k projections don't re-run the scan. All-null
+    * columns are absent from the output (no order statistics exist),
+    * so an empty input gives no rows.
+    *
+    * Measured and kept (same-JVM interleaved A/B on lineitem, local[4],
+    * 12 pairs at sf0.1; CHANGES.md lists every rep and the 10× point):
+    * both describes without driver concurrency lost q_describe by more
+    * than this form's IQR (0.34 s). One stacked value-count frame keyed
+    * by (column, group) through [[groupedQuantilesFromCounts]] read
+    * 1.73 → 4.14 s median: with no group each column is one window
+    * task. The same per-column chains one after another read 1.73 →
+    * 2.59 s: sf0.1 lineitem is one parquet row group, so every scan is
+    * one task and the concurrent chains are the only parallelism.
     */
   def describeNumeric(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "describeNumeric needs at least one column")
@@ -351,15 +381,18 @@ object ColumnStats {
       max(col(c)).cast("double").as(s"__max_$c"),
       (sum(col(c).cast("decimal(28,6)")).cast("double") /
         count(col(c))).as(s"__mean_$c")))
-    val step = "ColumnStats.describeNumeric"
-    val baseF = DriverJobs.fork(sc, s"$step: base stats")(df
+    val op = "describeNumeric"
+    val baseF = DriverJobs.fork(sc, s"ColumnStats.$op: base stats")(df
       .agg(count(lit(1)).as("__n_total"), aggs: _*)
       .localCheckpoint())
-    // exactQuantiles materializes its cumulative frame eagerly, so
-    // launching the calls from futures overlaps the k job chains
-    val medsF = cols.map(c => DriverJobs.fork(sc, s"$step: median $c")(
-      exactQuantiles(df, c, Seq(0.5))
-        .select(col("quantile").as("median_v"))))
+    // the cumulative frame materializes eagerly, so launching the
+    // chains from futures overlaps them
+    val medsF = cols.map(c =>
+      DriverJobs.fork(sc, s"ColumnStats.$op: median $c") {
+        val (cum, n) = cumulativeCounts(df, c, op)
+        quantilesFromCumulative(cum, n, Seq(0.5))
+          .select(col("quantile").as("median_v"))
+      })
     val base = DriverJobs.join(baseF)
     val meds = medsF.map(DriverJobs.join)
     cols.zip(meds).map { case (c, med) =>
@@ -528,19 +561,20 @@ object ColumnStats {
       .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("double").as("v"))
-    val counts = vals.groupBy("g", "v").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val op = "groupedRobustZScore"
+    val counts = step(df, op, "value counts")(vals.groupBy("g", "v")
+      .agg(count(lit(1)).as("c")).localCheckpoint())
     val med = groupedQuantilesFromCounts(counts, groupCol, Seq(0.5),
-        2000000L)
+        2000000L, op)
       .select(col(groupCol).cast("string").as("__g"),
         col("quantile").as("__med"))
-    val devCounts = counts
+    val devCounts = step(df, op, "deviation counts")(counts
       .join(broadcast(med), col("g") === col("__g"))
       .select(col("g"), abs(col("v") - col("__med")).as("v"), col("c"))
       .groupBy("g", "v").agg(sum(col("c")).as("c"))
-      .localCheckpoint()
+      .localCheckpoint())
     val mad = groupedQuantilesFromCounts(devCounts, groupCol, Seq(0.5),
-        2000000L)
+        2000000L, op)
       .select(col(groupCol).cast("string").as("__g2"),
         col("quantile").as("__mad"))
     val gKey = col(groupCol).cast("string")
@@ -563,8 +597,9 @@ object ColumnStats {
   def iqrOutliers(df: DataFrame, valueCol: String, k: Double = 1.5,
       outCol: String = "is_outlier"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val qs = exactQuantiles(df, valueCol, Seq(0.25, 0.75))
-      .orderBy("p").select("quantile").collect().map(_.getDouble(0))
+    val qs = step(df, "iqrOutliers", "quartiles")(
+      exactQuantiles(df, valueCol, Seq(0.25, 0.75))
+        .orderBy("p").select("quantile").collect().map(_.getDouble(0)))
     require(qs.length == 2,
       s"iqrOutliers: no non-null values in '$valueCol'")
     val (q1, q3) = (qs(0), qs(1))
@@ -667,7 +702,8 @@ object ColumnStats {
   def percentileRank(df: DataFrame, valueCol: String,
       outCol: String = "pct_rank",
       maxBroadcastDistinct: Long = 200000L): DataFrame = {
-    val (cum, totalN) = cumulativeCounts(df, valueCol)
+    val op = "percentileRank"
+    val (cum, totalN) = cumulativeCounts(df, valueCol, op)
     val ranks = cum.select(col("v").as("__v"),
       (col("cum").cast("double") / lit(totalN).cast("double"))
         .as(outCol))
@@ -682,7 +718,7 @@ object ColumnStats {
     // sort-merge it replaced, so past maxBroadcastDistinct the
     // shuffled join stays — it shuffles only (value, rank) + the fact
     // keys, never a payload, and spills gracefully at any scale.
-    val nDistinct = cum.count()
+    val nDistinct = step(df, op, "distinct values")(cum.count())
     val ranksSide =
       if (nDistinct <= maxBroadcastDistinct) broadcast(ranks) else ranks
     df.join(ranksSide, col(valueCol).cast("double") === col("__v"),
@@ -739,15 +775,18 @@ object ColumnStats {
     // collect() (one parallel job) instead of head(): executeTake's
     // partition-escalation re-ran the rank-join subtree up to 625
     // partition scans (measured 3.6 s of the old q_robust_z wall).
-    val (cum, totalN) = cumulativeCounts(df, valueCol)
-    val med = quantilesFromCumulative(cum, totalN, Seq(0.5))
-      .select("quantile").collect()(0).getDouble(0)
+    val op = "robustZScore"
+    val (cum, totalN) = cumulativeCounts(df, valueCol, op)
+    val med = step(df, op, "median")(
+      quantilesFromCumulative(cum, totalN, Seq(0.5))
+        .select("quantile").collect()(0).getDouble(0))
     val devCounts = cum
       .select(abs(col("v") - lit(med)).as("v"), col("c"))
       .groupBy("v").agg(sum(col("c")).as("c"))
-    val (dcum, devN) = cumulativeFromCounts(devCounts)
-    val mad = quantilesFromCumulative(dcum, devN, Seq(0.5))
-      .select("quantile").collect()(0).getDouble(0)
+    val (dcum, devN) = cumulativeFromCounts(devCounts, op)
+    val mad = step(df, op, "MAD")(
+      quantilesFromCumulative(dcum, devN, Seq(0.5))
+        .select("quantile").collect()(0).getDouble(0))
     df.withColumn(outCol,
       when(col(valueCol).isNotNull && lit(mad) > 0,
         (col(valueCol).cast("double") - lit(med)) / lit(mad)))
@@ -768,8 +807,9 @@ object ColumnStats {
       pHi: Double = 0.99): DataFrame = {
     require(pLo >= 0 && pHi <= 1 && pLo < pHi,
       s"need 0 <= pLo < pHi <= 1, got $pLo/$pHi")
-    val qs = exactQuantiles(df, valueCol, Seq(pLo, pHi))
-      .orderBy("p").select("quantile").collect().map(_.getDouble(0))
+    val qs = step(df, "winsorize", "thresholds")(
+      exactQuantiles(df, valueCol, Seq(pLo, pHi))
+        .orderBy("p").select("quantile").collect().map(_.getDouble(0)))
     require(qs.length == 2,
       s"winsorize: no non-null values in '$valueCol'")
     val (lo, hi) = (qs(0), qs(1))

@@ -64,7 +64,7 @@ private[graft] object DictionaryFit {
   def classifyAndFit(df: DataFrame, step: String, cols: Seq[String],
       exprs: Seq[(String, Column)], max: Int = DefaultMaxCategories)
       : (ColumnClassification, () => Seq[Seq[String]]) = {
-    val fields = Inference.approxFields(df, cols)
+    val fields = Inference.fieldsOf(df, cols)
     val fitted = if (exprs.isEmpty) "" else s", fit ${names(exprs)}"
     Inference.distinctJobCount.incrementAndGet()
     val (counters, sets) = scan(df,
@@ -82,7 +82,7 @@ private[graft] object DictionaryFit {
   private def scan(df: DataFrame, desc: String, fields: Seq[StructField],
       exprs: Seq[(String, Column)], max: Int): (Inference.Counters, Sets) = {
     if (exprs.nonEmpty) fitCount.incrementAndGet()
-    val types = fields.map(_.dataType).toArray
+    val types = Inference.statsTypes(fields)
     val (at, k) = (3 * fields.size, exprs.size)
     val all = (new Inference.Counters(types), new Sets(at, k, max))
     DriverJobs.scan(df.select(Inference.statsColumns(fields) ++

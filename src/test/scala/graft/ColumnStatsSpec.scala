@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.ColumnStats
 
@@ -50,6 +51,132 @@ class ColumnStatsSpec extends SparkSpec {
       .collect().map(r => r._1 -> r).toMap
     assert(out("a") == (("a", 3L, 3L, 1.0, 3.0, 2.0, 2.0)))
     assert(out("b") == (("b", 3L, 3L, 10.0, 60.0, 30.0, 20.0)))
+  }
+
+  /** Each describe's rows, keyed by (group, column) or by column. */
+  private def grouped(df: DataFrame, g: String, cols: Seq[String]) =
+    ColumnStats.groupedDescribe(df, g, cols).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
+  private def global(df: DataFrame, cols: Seq[String]) =
+    ColumnStats.describeNumeric(df, cols).collect()
+      .map(r => r.getString(0) -> r).toMap
+
+  test("describes: an all-null column is absent globally and keeps a " +
+      "null median per group; an empty frame gives no rows") {
+    val df = Seq[(String, java.lang.Double, java.lang.Double)](
+      ("a", 1.0, null), ("a", 3.0, null), ("b", 2.0, null)
+    ).toDF("g", "x", "nul")
+    val glob = global(df, Seq("x", "nul"))
+    assert(glob.keySet == Set("x"))
+    assert(glob("x").getDouble(6) == 2.0)
+    val grp = grouped(df, "g", Seq("x", "nul"))
+    assert(grp.size == 4)
+    for (g <- Seq("a", "b")) {
+      val r = grp((g, "nul"))
+      assert(r.getLong(3) == 0L && r.isNullAt(4) && r.isNullAt(6) &&
+        r.isNullAt(7), r)
+    }
+    assert(grp(("a", "nul")).getLong(2) == 2L)
+    assert(grp(("a", "x")).getDouble(7) == 2.0)
+    val empty = df.filter(lit(false))
+    assert(ColumnStats.describeNumeric(empty, Seq("x", "nul")).isEmpty)
+    assert(ColumnStats.groupedDescribe(empty, "g", Seq("x", "nul")).isEmpty)
+  }
+
+  test("groupedDescribe drops rows whose group is null") {
+    val df = Seq[(String, Double)](
+      ("a", 1.0), ("a", 2.0), (null, 100.0), (null, -5.0), ("b", 7.0)
+    ).toDF("g", "x")
+    val out = grouped(df, "g", Seq("x"))
+    assert(out.keySet == Set(("a", "x"), ("b", "x")))
+    val a = out(("a", "x"))
+    assert((a.getLong(2), a.getDouble(4), a.getDouble(5), a.getDouble(7))
+      == ((2L, 1.0, 2.0, 1.5)))
+  }
+
+  test("describes: int, decimal and double columns in one call") {
+    val df = Seq[(String, Int, java.math.BigDecimal, Double)](
+      ("a", 1, new java.math.BigDecimal("0.10"), 2.5),
+      ("a", 4, new java.math.BigDecimal("0.25"), -1.0),
+      ("a", 4, new java.math.BigDecimal("0.05"), 0.5),
+      ("b", 9, new java.math.BigDecimal("1.00"), 8.0)
+    ).toDF("g", "i", "dec", "d")
+      .withColumn("dec", col("dec").cast("decimal(10,2)"))
+    val cols = Seq("i", "dec", "d")
+    val want = Map(
+      "i" -> ((4L, 1.0, 9.0, 4.5, 4.0)),
+      "dec" -> ((4L, 0.05, 1.0, 0.35, 0.175)),
+      "d" -> ((4L, -1.0, 8.0, 2.5, 1.5)))
+    val glob = global(df, cols)
+    cols.foreach { c =>
+      val r = glob(c)
+      assert((r.getLong(2), r.getDouble(3), r.getDouble(4),
+        r.getDouble(5), r.getDouble(6)) == want(c), c)
+    }
+    val grp = grouped(df, "g", cols)
+    val a = grp(("a", "dec"))
+    assert((a.getLong(3), a.getDouble(4), a.getDouble(5), a.getDouble(7))
+      == ((3L, 0.05, 0.25, 0.1)))
+    val b = grp(("b", "i"))
+    assert((b.getLong(2), b.getDouble(4), b.getDouble(7)) ==
+      ((1L, 9.0, 9.0)))
+  }
+
+  test("describe medians equal exactQuantiles bit for bit on 20k rows " +
+      "with ties") {
+    val df = spark.range(0, 20000, 1, 6).select(
+        (col("id") % 5).cast("string").as("g"),
+        (col("id") * 7919 % 613 / 7.0).as("x"),
+        when(col("id") % 9 === 0, lit(null))
+          .otherwise((col("id") * 104729 % 97).cast("int")).as("y"),
+        (col("id") % 23 * 0.1).cast("decimal(8,3)").as("z"))
+    val cols = Seq("x", "y", "z")
+    def median(f: DataFrame, c: String): Double =
+      ColumnStats.exactQuantiles(f, c, Seq(0.5))
+        .select("quantile").as[Double].collect().head
+    val glob = global(df, cols)
+    cols.foreach(c => assert(glob(c).getDouble(6) == median(df, c), c))
+    val grp = grouped(df, "g", cols)
+    for (g <- 0 until 5; c <- cols)
+      assert(grp((g.toString, c)).getDouble(7) ==
+        median(df.filter(col("g") === g.toString), c), s"$g $c")
+  }
+
+  test("every build job of the quantile chains and the describes is " +
+      "named, and each describe's job count is pinned") {
+    val df = spark.range(0, 5000, 1, 4).select(
+      (col("id") % 3).cast("string").as("g"),
+      (col("id") * 7919 % 613 / 7.0).as("x"),
+      (col("id") % 41).cast("int").as("y"))
+    val sc = spark.sparkContext
+    def jobs(body: => DataFrame): Seq[SeenJob] =
+      JobFence.during(sc)(body)._2
+    val runs = Seq(
+      "describeNumeric" ->
+        jobs(ColumnStats.describeNumeric(df, Seq("x", "y"))),
+      "groupedDescribe" ->
+        jobs(ColumnStats.groupedDescribe(df, "g", Seq("x", "y"))),
+      "exactQuantiles" ->
+        jobs(ColumnStats.exactQuantiles(df, "x", Seq(0.5))),
+      "groupedExactQuantiles" ->
+        jobs(ColumnStats.groupedExactQuantiles(df, "g", "x", Seq(0.5))))
+    runs.foreach { case (op, js) =>
+      assert(js.nonEmpty, op)
+      assert(js.forall(_.description.exists(_.startsWith(
+        s"ColumnStats.$op: "))), s"$op: $js")
+    }
+    // the base stats and one chain per column, run concurrently: each
+    // eager step is a map-stage job plus a result job under AQE (the
+    // range-partitioned cumulative adds its sampling job)
+    def pinned(op: String, steps: Seq[String]) = {
+      val js = runs.toMap.apply(op)
+      assert(js.map(_.description.get).sorted ==
+        (steps ++ steps).map(w => s"ColumnStats.$op: $w").sorted, js)
+    }
+    pinned("describeNumeric", "base stats" +: Seq.fill(4)("cumulative"))
+    pinned("groupedDescribe", Seq("base stats", "value counts",
+      "value counts", "giant groups", "giant groups", "window",
+      "window"))
   }
 
   test("no job in the quantile chain moves data to a single partition") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -113,14 +113,23 @@ class InferenceSpec extends SparkSpec {
     assert(Inference.classify(one).stats == twoAggregations(one))
   }
 
-  test("a map column is refused by the approx classification, with " +
-      "the analysis error of min over a map") {
-    val df = Seq((1, Map("a" -> 1)), (2, Map("b" -> 2))).toDF("k", "m")
-    val e = intercept[AnalysisException](Inference.classify(df))
-    assert(e.getCondition == "DATATYPE_MISMATCH.INVALID_ORDERING_TYPE",
-      e.getMessage)
-    // a classification of the other columns does not read it
-    assert(Inference.classify(df, Seq("k")).stats("k").nDistinct == 2)
+  test("the approx classification keys a map by its sorted entries") {
+    // logically-equal maps with different key order are ONE value
+    val df = Seq(
+      (1, Map("a" -> 1, "b" -> 2)),
+      (2, Map("b" -> 2, "a" -> 1)),
+      (3, Map("c" -> 3))
+    ).toDF("k", "m")
+    val cls = Inference.classify(df)
+    assert(cls.kinds("m") == ColumnKind.Other)
+    assert(cls.stats("m").nDistinct == 2)
+    assert(!cls.stats("m").isConstant)
+    assert(cls.stats("k").nDistinct == 3)
+    assert(Inference.classify(df, exact = true).stats("m") ==
+      cls.stats("m"))
+    // equal maps in both key orders are constant
+    assert(Inference.classify(df.filter(col("k") < 3)).stats("m")
+      .isConstant)
   }
 
   test("classify starts exactly one job, and names it") {
